@@ -12,6 +12,12 @@ a sink node (or the caller) triggers an action. Binding errors — missing
 input table, unknown node — surface at build time (E9 analog; Catalyst's
 analyzer covers column-level checks).
 
+``NODE_REGISTRY`` is the one registry. It holds the built-in vocabulary
+below and the reference's node classes, which plans.reference_compat
+registers, so one graph may mix both. plans.reference_compat's
+``load_reference_graph`` validates a graph and ``run_reference_graph``
+builds it.
+
 This layer is deliberately thin: it does not schedule, chunk, or memoize
 (the reference's E7/E11 live in streaming.incremental) — Catalyst + AQE own
 physical execution.
@@ -57,31 +63,6 @@ class GraphContext:
 
     def put(self, key: str, df: DataFrame) -> None:
         self.tables[key] = df
-
-
-class Pipeline:
-    """Ordered node specs → composed lazy plan environment."""
-
-    def __init__(self, graph: list[dict[str, Any]]):
-        unknown = [spec["name"] for spec in graph if spec["name"] not in NODE_REGISTRY]
-        if unknown:
-            raise ValueError(f"unknown nodes: {unknown}; known: {sorted(NODE_REGISTRY)}")
-        self.graph = graph
-
-    def build(
-        self, spark: SparkSession, inputs: dict[str, DataFrame] | None = None
-    ) -> GraphContext:
-        ctx = GraphContext(spark, dict(inputs or {}))
-        for spec in self.graph:
-            NODE_REGISTRY[spec["name"]](ctx, spec.get("params", {}))
-        return ctx
-
-    def test_run(self, spark: SparkSession, inputs: dict[str, DataFrame] | None = None) -> None:
-        """E12 fail-fast smoke: force one row through every bound table
-        (the limit(1) analog of run.py's test_run)."""
-        ctx = self.build(spark, inputs)
-        for key, df in ctx.tables.items():
-            df.limit(1).collect()
 
 
 # --- Built-in node vocabulary ----------------------------------------------
@@ -259,31 +240,5 @@ def _salted_join(ctx: GraphContext, p: dict[str, Any]) -> None:
             p["on"],
             n_salts=p.get("n_salts", 8),
             how=p.get("how", "inner"),
-        ),
-    )
-
-
-@node("batched_inference")
-def _batched_inference(ctx: GraphContext, p: dict[str, Any]) -> None:
-    """Model-node shape (N6-N17): stub registry keys map to the deterministic
-    stand-ins; a real deployment registers its own factory + batch_fn."""
-    from talkinghead_datapipeline_spark.operators import models
-    from talkinghead_datapipeline_spark.operators.inference import batched_inference
-
-    factory = {
-        "wav2vec": models.Wav2vecStub,
-        "flame": models.FlameLbsDecoder,
-        "renderer": models.RendererStub,
-        "emoca": models.EmocaEncoderStub,
-    }[p["model"]]
-    batch_fn = p["batch_fn"]  # callable injected by the caller's code
-    ctx.put(
-        p["output"],
-        batched_inference(
-            ctx.get(p["input"]),
-            output_schema=p["schema"],
-            model_key=p["model"],
-            model_factory=factory,
-            batch_fn=batch_fn,
         ),
     )

@@ -2,8 +2,10 @@
 (e.g. /root/reference/configs/mead_a2en_vid2vid.json) on this engine.
 
 The reference declares a linear pipeline as ``[{name, params}, ...]`` with
-node CLASS names (dpl/processor/engine.py:81-92). This module maps each
-reference node onto the Spark-native implementation:
+node CLASS names (dpl/processor/engine.py:81-92). This module registers
+each reference node in plans.graph's one ``NODE_REGISTRY``, mapped onto the
+Spark-native implementation, and holds the one validator and builder for
+graphs of either vocabulary:
 
 - pure-math nodes (FixedBboxesNode, A2en feature assembly) run the REAL
   column-expression/window implementations;
@@ -33,69 +35,65 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from talkinghead_datapipeline_spark.plans.graph import GraphContext
+from talkinghead_datapipeline_spark.plans.graph import NODE_REGISTRY, GraphContext, node
 
 FRAME_BYTES = 256  # deterministic fake codec: one "frame" per 256 video bytes
 SAMPLE_RATE = 16000
 FEATURE_FPS = 50
 
-REFERENCE_NODES: dict[str, Any] = {}
-
-
-def ref_node(name: str):
-    def deco(fn):
-        REFERENCE_NODES[name] = fn
-        return fn
-
-    return deco
-
 
 def load_reference_graph(graph: str | list[dict[str, Any]]) -> list[dict[str, Any]]:
-    """Parse a reference graph (path or parsed list) and validate node names
-    (the registry-resolution step of engine.py:85-87)."""
+    """Parse a graph (path or parsed list) and validate its node names
+    against the one registry (the registry-resolution step of
+    engine.py:85-87)."""
     if isinstance(graph, str):
         with open(graph) as f:
             graph = json.load(f)
-    unknown = [s["name"] for s in graph if s["name"] not in REFERENCE_NODES]
+    unknown = [s["name"] for s in graph if s["name"] not in NODE_REGISTRY]
     if unknown:
-        raise ValueError(
-            f"unknown reference nodes: {unknown}; supported: {sorted(REFERENCE_NODES)}"
-        )
+        raise ValueError(f"unknown nodes: {unknown}; known: {sorted(NODE_REGISTRY)}")
     return graph
 
 
 def run_reference_graph(
     spark: SparkSession,
     graph: str | list[dict[str, Any]],
-    inputs: dict[str, DataFrame],
+    inputs: dict[str, DataFrame] | None = None,
 ) -> GraphContext:
-    """Execute a reference graph over the bound input tables (E5 binding +
-    §3.1 steps 2-4 — except the 'execution' is one lazy Catalyst plan)."""
-    specs = load_reference_graph(graph)
-    ctx = GraphContext(spark, dict(inputs))
-    for spec in specs:
-        REFERENCE_NODES[spec["name"]](ctx, spec.get("params", {}))
+    """Build a graph of either node vocabulary, or both, over the bound
+    input tables (E5 binding + §3.1 steps 2-4 — except the 'execution' is
+    one lazy Catalyst plan)."""
+    ctx = GraphContext(spark, dict(inputs or {}))
+    for spec in load_reference_graph(graph):
+        NODE_REGISTRY[spec["name"]](ctx, spec.get("params", {}))
     return ctx
 
 
-def _infer(ctx, input_key, schema, model_key, factory, batch_fn, output_key):
+def _bind(ctx: GraphContext, key: str, out: DataFrame) -> None:
+    """Split a node's output on its error column and bind the ok rows; the
+    quarantined rows are dropped here."""
     from talkinghead_datapipeline_spark.operators.inference import (
-        batched_inference,
         split_error_channel,
     )
 
+    ok, _err = split_error_channel(out)
+    ctx.put(key, ok)
+
+
+def _infer(ctx, df, schema, model_key, factory, batch_fn, output_key):
+    from talkinghead_datapipeline_spark.operators.inference import batched_inference
+
     out = batched_inference(
-        ctx.get(input_key),
+        df,
         output_schema=schema,
         model_key=model_key,
         model_factory=factory,
         batch_fn=batch_fn,
     )
-    ok, _err = split_error_channel(out)
-    ctx.put(output_key, ok)
+    _bind(ctx, output_key, out)
 
 
-@ref_node("VideoToImagesNode")
+@node("VideoToImagesNode")
 def _video_to_images(ctx: GraphContext, p: dict[str, Any]) -> None:
     """N2 demux: video binary → (clip_name, frame_idx, image) frame rows.
     With an ffmpeg binary (params ``ffmpeg_exe`` or PATH) this runs the
@@ -107,9 +105,6 @@ def _video_to_images(ctx: GraphContext, p: dict[str, Any]) -> None:
     video = ctx.get("video")
     exe = p.get("ffmpeg_exe") or _sh.which("ffmpeg")
     if exe is not None:
-        from talkinghead_datapipeline_spark.operators.inference import (
-            split_error_channel,
-        )
         from talkinghead_datapipeline_spark.sources.media import video_to_frames
 
         frames = video_to_frames(
@@ -117,14 +112,16 @@ def _video_to_images(ctx: GraphContext, p: dict[str, Any]) -> None:
             ext=p.get("ext", ".jpg"),
             ffmpeg_exe=exe,
         )
-        ctx.put("images", split_error_channel(frames)[0])
+        _bind(ctx, "images", frames)
         return
     n_frames = F.floor(F.length("video") / FRAME_BYTES).cast("int")
     frames = video.select(
         "clip_name",
         F.posexplode(
             F.transform(
-                F.sequence(F.lit(0), n_frames - 1),
+                # sequence(0, n) then its first n elements: sequence(0, -1)
+                # would count down and give a short clip two frames.
+                F.slice(F.sequence(F.lit(0), n_frames), 1, n_frames),
                 lambda i: F.substring(F.col("video"), i * FRAME_BYTES + 1, FRAME_BYTES),
             )
         ).alias("frame_idx", "image"),
@@ -132,7 +129,7 @@ def _video_to_images(ctx: GraphContext, p: dict[str, Any]) -> None:
     ctx.put("images", frames)
 
 
-@ref_node("VideoToWavNode")
+@node("VideoToWavNode")
 def _video_to_wav(ctx: GraphContext, p: dict[str, Any]) -> None:
     """N4 audio extract: video binary → waveform array (decode UDF shape;
     dpl/wav2vec/dataset.py:21-28's load-resample runs here in prod)."""
@@ -155,7 +152,7 @@ def _video_to_wav(ctx: GraphContext, p: dict[str, Any]) -> None:
 
     _infer(
         ctx,
-        "video",
+        ctx.get("video"),
         "clip_name string, wav array<double>, error string",
         "fake_audio_codec",
         lambda: None,
@@ -164,7 +161,7 @@ def _video_to_wav(ctx: GraphContext, p: dict[str, Any]) -> None:
     )
 
 
-@ref_node("Wav2vecNode")
+@node("Wav2vecNode")
 def _wav2vec(ctx: GraphContext, p: dict[str, Any]) -> None:
     """N6: waveform → wav2vec features @50 fps + volume envelope
     (length contract int(len/sr*fps - 0.25), wav2vec/inference.py:52)."""
@@ -194,7 +191,7 @@ def _wav2vec(ctx: GraphContext, p: dict[str, Any]) -> None:
 
     _infer(
         ctx,
-        "wav",
+        ctx.get("wav"),
         "clip_name string, wav2vec array<array<double>>, volume array<double>, error string",
         "wav2vec",
         factory,
@@ -203,7 +200,7 @@ def _wav2vec(ctx: GraphContext, p: dict[str, Any]) -> None:
     )
 
 
-@ref_node("FaceAlignmentNode")
+@node("FaceAlignmentNode")
 def _face_alignment(ctx: GraphContext, p: dict[str, Any]) -> None:
     """N8: frame image → 68×2 landmarks (+ box score filter param accepted).
     Stub landmarks are a deterministic function of the frame bytes."""
@@ -234,7 +231,7 @@ def _face_alignment(ctx: GraphContext, p: dict[str, Any]) -> None:
 
     _infer(
         ctx,
-        "images",
+        ctx.get("images"),
         "clip_name string, frame_idx int, landmarks array<array<double>>, error string",
         "face_alignment",
         lambda: None,
@@ -243,7 +240,7 @@ def _face_alignment(ctx: GraphContext, p: dict[str, Any]) -> None:
     )
 
 
-@ref_node("FixedBboxesNode")
+@node("FixedBboxesNode")
 def _fixed_bboxes(ctx: GraphContext, p: dict[str, Any]) -> None:
     """N11, REAL implementation (bboxes.py:45-81): whole-clip landmark
     extent → one square box (side = 1.1·scale·(w+h)/2, centered on the
@@ -287,7 +284,7 @@ def _fixed_bboxes(ctx: GraphContext, p: dict[str, Any]) -> None:
     )
 
 
-@ref_node("CropNode")
+@node("CropNode")
 def _crop(ctx: GraphContext, p: dict[str, Any]) -> None:
     """N13: equi-join images ⋈ bboxes on (clip, frame) — replacing the
     reference's positional zip (crop.py:72) — then decode-crop-resize UDF."""
@@ -311,22 +308,18 @@ def _crop(ctx: GraphContext, p: dict[str, Any]) -> None:
             )
         return pd.DataFrame(rows, columns=["clip_name", "frame_idx", "crop", "error"])
 
-    from talkinghead_datapipeline_spark.operators.inference import (
-        batched_inference,
-        split_error_channel,
-    )
-
-    out = batched_inference(
+    _infer(
+        ctx,
         joined,
-        output_schema="clip_name string, frame_idx int, crop binary, error string",
-        model_key="crop_resize",
-        model_factory=lambda: None,
-        batch_fn=crop_fn,
+        "clip_name string, frame_idx int, crop binary, error string",
+        "crop_resize",
+        lambda: None,
+        crop_fn,
+        "crops",
     )
-    ctx.put("crops", split_error_channel(out)[0])
 
 
-@ref_node("EmocaNode")
+@node("EmocaNode")
 def _emoca(ctx: GraphContext, p: dict[str, Any]) -> None:
     """N14: crop → 236-dim code split shape/tex/exp/pose/cam/light
     (dpl/emoca/inference.py:95-105 splits; stub preserves the split)."""
@@ -359,7 +352,7 @@ def _emoca(ctx: GraphContext, p: dict[str, Any]) -> None:
     )
     _infer(
         ctx,
-        "crops",
+        ctx.get("crops"),
         f"clip_name string, frame_idx int, {arr_cols}, error string",
         "emoca",
         factory,
@@ -368,7 +361,7 @@ def _emoca(ctx: GraphContext, p: dict[str, Any]) -> None:
     )
 
 
-@ref_node("FlameNode")
+@node("FlameNode")
 def _flame(ctx: GraphContext, p: dict[str, Any]) -> None:
     """N16: (shape, exp, pose) → verts + landmarks3d via the REAL LBS
     pipeline (FlameLbsDecoder — blend shapes, Rodrigues, kinematic chain,
@@ -411,7 +404,7 @@ def _flame(ctx: GraphContext, p: dict[str, Any]) -> None:
 
     _infer(
         ctx,
-        "emoca_codes",
+        ctx.get("emoca_codes"),
         "clip_name string, frame_idx int, verts array<array<double>>, "
         "landmarks3d array<array<double>>, error string",
         "flame",
@@ -421,7 +414,7 @@ def _flame(ctx: GraphContext, p: dict[str, Any]) -> None:
     )
 
 
-@ref_node("RenderingNode")
+@node("RenderingNode")
 def _rendering(ctx: GraphContext, p: dict[str, Any]) -> None:
     """N17: verts + cam → render_normal/render_uv/render_mask binaries
     (three sinks of rendering.py:53-143) — each channel a REAL rasterizer
@@ -475,25 +468,19 @@ def _rendering(ctx: GraphContext, p: dict[str, Any]) -> None:
             faces=FlameLbsDecoder().faces,
         )
 
-    from talkinghead_datapipeline_spark.operators.inference import (
-        batched_inference,
-        split_error_channel,
-    )
-
-    out = batched_inference(
+    _infer(
+        ctx,
         joined,
-        output_schema=(
-            "clip_name string, frame_idx int, render_normal binary, "
-            "render_uv binary, render_mask binary, error string"
-        ),
-        model_key="renderer",
-        model_factory=factory,
-        batch_fn=infer,
+        "clip_name string, frame_idx int, render_normal binary, "
+        "render_uv binary, render_mask binary, error string",
+        "renderer",
+        factory,
+        infer,
+        "renders",
     )
-    ctx.put("renders", split_error_channel(out)[0])
 
 
-@ref_node("A2enDatasetNode")
+@node("A2enDatasetNode")
 def _a2en(ctx: GraphContext, p: dict[str, Any]) -> None:
     """N18, REAL assembly (a2en.py:13-45): join the per-clip audio features
     with the frame-grain emoca/flame outputs, resample 50 fps features to
@@ -565,29 +552,23 @@ def _a2en(ctx: GraphContext, p: dict[str, Any]) -> None:
             ],
         )
 
-    from talkinghead_datapipeline_spark.operators.inference import (
-        batched_inference,
-        split_error_channel,
-    )
-
-    out = batched_inference(
+    _infer(
+        ctx,
         joined,
-        output_schema=(
-            "clip_name string, n_frames bigint, "
-            "wav2vec_resampled array<array<double>>, "
-            "volume_resampled array<double>, exp array<array<double>>, "
-            "jaw array<double>, left_blink array<double>, "
-            "right_blink array<double>, average_blink array<double>, "
-            "error string"
-        ),
-        model_key="a2en_pack",
-        model_factory=lambda: None,
-        batch_fn=pack,
+        "clip_name string, n_frames bigint, "
+        "wav2vec_resampled array<array<double>>, "
+        "volume_resampled array<double>, exp array<array<double>>, "
+        "jaw array<double>, left_blink array<double>, "
+        "right_blink array<double>, average_blink array<double>, "
+        "error string",
+        "a2en_pack",
+        lambda: None,
+        pack,
+        "a2en",
     )
-    ctx.put("a2en", split_error_channel(out)[0])
 
 
-@ref_node("Vid2vidDatasetNode")
+@node("Vid2vidDatasetNode")
 def _vid2vid(ctx: GraphContext, p: dict[str, Any]) -> None:
     """N20: crops ⋈ render_uv ⋈ render_normal per frame — the packed
     training-row table (parquet-native instead of one h5 per clip)."""

@@ -11,10 +11,10 @@ Same surface, same flags::
 
 Differences by design (Spark owns physical execution):
 
-- ``--graph`` accepts BOTH the reference's node vocabulary (VideoToImagesNode,
-  Wav2vecNode, … via plans.reference_compat) and this engine's built-in node
-  vocabulary (source_parquet, join, minhash_dedup, … via plans.graph); the
-  dialect is auto-detected from the first node name.
+- ``--graph`` may use the reference's node vocabulary (VideoToImagesNode,
+  Wav2vecNode, … from plans.reference_compat), this engine's built-in one
+  (source_parquet, join, aggregate, … from plans.graph) or both: the two
+  share one registry and one builder.
 - ``--inputs`` is the same ``{key: path}`` JSON. A path ending in
   ``.parquet`` (file or directory) binds as a parquet table; any other
   directory binds as a recursive binary-file scan (E1) with the derived
@@ -57,19 +57,6 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
     return parser.parse_args(argv)
 
 
-def _load_graph(path: str) -> list[dict[str, Any]]:
-    with open(path) as f:
-        return json.load(f)
-
-
-def _is_reference_dialect(graph: list[dict[str, Any]]) -> bool:
-    """Reference node names are CamelCase *Node classes (registry.py:4-19);
-    the built-in vocabulary is snake_case. Detect from the first spec."""
-    from talkinghead_datapipeline_spark.plans.reference_compat import REFERENCE_NODES
-
-    return bool(graph) and graph[0]["name"] in REFERENCE_NODES
-
-
 def bind_input(spark: SparkSession, key: str, path: str) -> DataFrame:
     """E5 path binding for one input: parquet table or binary dir scan."""
     if path.rstrip("/").endswith(".parquet") or (
@@ -96,19 +83,12 @@ def run(
     verbose: bool = False,
 ) -> list[dict[str, Any]]:
     """Programmatic entry — returns the report (list of per-table dicts)."""
-    graph = _load_graph(graph_path)
+    from talkinghead_datapipeline_spark.plans.reference_compat import (
+        run_reference_graph,
+    )
+
     bound = {k: bind_input(spark, k, p) for k, p in inputs.items()}
-
-    if _is_reference_dialect(graph):
-        from talkinghead_datapipeline_spark.plans.reference_compat import (
-            run_reference_graph,
-        )
-
-        ctx = run_reference_graph(spark, graph, bound)
-    else:
-        from talkinghead_datapipeline_spark.plans.graph import Pipeline
-
-        ctx = Pipeline(graph).build(spark, bound)
+    ctx = run_reference_graph(spark, graph_path, bound)
 
     os.makedirs(output_dir, exist_ok=True)
     report: list[dict[str, Any]] = []

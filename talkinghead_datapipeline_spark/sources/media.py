@@ -23,7 +23,11 @@ exercise the full subprocess path against a stub executable.
 
 from __future__ import annotations
 
+import os
+import re
 import shutil
+import subprocess
+import tempfile
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -106,6 +110,54 @@ def image_frames_from_dir(spark: SparkSession, root: str, glob: str = "*.jpg") -
     )
 
 
+def _run_ffmpeg(exe, files, src, out_args, tgt, read):
+    """One per-clip ffmpeg call in a fresh temp dir, as the reference's
+    argument vector ``exe BASE -i <src> OUT_ARGS <tgt> -y``.
+
+    ``files`` yields ``(path, bytes)`` to write first; ``src`` and ``tgt``
+    are paths in the temp dir; ``read(tgt path)`` collects the output.
+    Returns ``(read's result, None)``, or ``(None, error text)`` when any
+    step fails — E8 containment: the reference's sp.run ignores failures
+    silently, and the checked returncode is a deliberate upgrade routed to
+    the error channel, not an abort. Runs on executors, so every caller
+    ships the package first."""
+    try:
+        with tempfile.TemporaryDirectory() as td:
+            for rel, blob in files:
+                path = os.path.join(td, rel)
+                os.makedirs(os.path.dirname(path), exist_ok=True)
+                with open(path, "wb") as fh:
+                    fh.write(bytes(blob))
+            target = os.path.join(td, tgt)
+            os.makedirs(os.path.dirname(target), exist_ok=True)
+            subprocess.run(
+                [exe, *_FFMPEG_BASE_ARGS, "-i", os.path.join(td, src), *out_args, target, "-y"],
+                stdin=subprocess.DEVNULL,
+                stdout=subprocess.DEVNULL,
+                stderr=subprocess.STDOUT,
+                check=True,
+            )
+            return read(target), None
+    except Exception as exc:  # noqa: BLE001 — E8 containment
+        return None, f"{type(exc).__name__}: {exc}"
+
+
+def _read_bytes(path: str) -> bytes:
+    with open(path, "rb") as fh:
+        return fh.read()
+
+
+def _read_frames(target: str) -> list[tuple[int, bytes]]:
+    """(frame_idx, bytes) of every numbered file next to ``target``."""
+    frames = []
+    frame_dir = os.path.dirname(target)
+    for fn in sorted(os.listdir(frame_dir)):
+        m = re.match(r"\s*(\d+)", fn)
+        if m:
+            frames.append((int(m.group(1)), _read_bytes(os.path.join(frame_dir, fn))))
+    return frames
+
+
 def video_to_frames(
     df: DataFrame,
     video_col: str = "content",
@@ -122,63 +174,26 @@ def video_to_frames(
     a task-local temp file, runs the same command, and yields the produced
     frame files as rows. Each clip demuxes inside its own generator step,
     so one giant video never holds a whole batch's frames in memory.
-    A failed clip yields one error row (E8 containment; the reference's
-    sp.run ignores failures silently — checked returncode is a deliberate
-    upgrade routed to the error channel, not an abort)."""
+    A failed clip yields one error row (see ``_run_ffmpeg``)."""
     exe = _resolve_ffmpeg(ffmpeg_exe)
+    from talkinghead_datapipeline_spark.shipping import ensure_package_shipped
+
+    ensure_package_shipped(df.sparkSession)
     cols = [key_col, "frame_idx", "image", "error"]
     out_schema = f"{key_col} string, frame_idx bigint, image binary, error string"
 
     def demux(batches):
-        import os
-        import re
-        import subprocess
-        import tempfile
-
         for pdf in batches:
             for name, blob in zip(pdf[key_col], pdf[video_col]):
-                rows = []
-                try:
-                    with tempfile.TemporaryDirectory() as td:
-                        src = os.path.join(td, "in.video")
-                        with open(src, "wb") as fh:
-                            fh.write(bytes(blob))
-                        tgt = os.path.join(td, "frames")
-                        os.makedirs(tgt)
-                        cmd = [
-                            exe, *_FFMPEG_BASE_ARGS, "-i", src,
-                            *_FFMPEG_TO_IMG_ARGS,
-                            os.path.join(tgt, f"%06d{ext}"), "-y",
-                        ]
-                        subprocess.run(
-                            cmd,
-                            stdin=subprocess.DEVNULL,
-                            stdout=subprocess.DEVNULL,
-                            stderr=subprocess.STDOUT,
-                            check=True,
-                        )
-                        for fn in sorted(os.listdir(tgt)):
-                            m = re.match(r"\s*(\d+)", fn)
-                            if not m:
-                                continue
-                            with open(os.path.join(tgt, fn), "rb") as fh:
-                                rows.append(
-                                    {
-                                        key_col: name,
-                                        "frame_idx": int(m.group(1)),
-                                        "image": fh.read(),
-                                        "error": None,
-                                    }
-                                )
-                except Exception as exc:  # noqa: BLE001 — E8 containment
-                    rows = [
-                        {
-                            key_col: name,
-                            "frame_idx": None,
-                            "image": None,
-                            "error": f"{type(exc).__name__}: {exc}",
-                        }
-                    ]
+                frames, err = _run_ffmpeg(
+                    exe, [("in.video", blob)], "in.video",
+                    _FFMPEG_TO_IMG_ARGS, f"frames/%06d{ext}", _read_frames,
+                )
+                rows = (
+                    [(name, idx, image, None) for idx, image in frames]
+                    if err is None
+                    else [(name, None, None, err)]
+                )
                 yield pd.DataFrame(rows, columns=cols)
 
     return df.mapInPandas(demux, schema=out_schema)
@@ -212,51 +227,19 @@ def frames_to_video(
     out_schema = f"{key_col} string, video binary, n_frames bigint, error string"
 
     def mux(pdf: pd.DataFrame) -> pd.DataFrame:
-        import os
-        import subprocess
-        import tempfile
+        def frame_files():
+            # Zero-padded frame names, matching the reference's
+            # f"{index:06d}.jpg" writer (dpl/processor/nodes/ffmpeg.py:18-21)
+            # and ffmpeg's image2 demuxer, which reads %6d as zero-padded
+            # (av_get_frame_filename expands it to %06d).
+            for n, blob in enumerate(pdf.sort_values(idx_col)[image_col]):
+                yield "frames/%06d%s" % (n, ext), blob
 
-        name = pdf[key_col].iloc[0]
-        try:
-            ordered = pdf.sort_values(idx_col)
-            with tempfile.TemporaryDirectory() as td:
-                src = os.path.join(td, "frames")
-                os.makedirs(src)
-                # Zero-padded frame names, matching the reference's
-                # f"{index:06d}.jpg" writer (dpl/processor/nodes/ffmpeg.py:18-21)
-                # and ffmpeg's image2 demuxer, which reads %6d as zero-padded
-                # (av_get_frame_filename expands it to %06d).
-                for n, blob in enumerate(ordered[image_col]):
-                    with open(os.path.join(src, "%06d%s" % (n, ext)), "wb") as fh:
-                        fh.write(bytes(blob))
-                tgt = os.path.join(td, f"out{target_suffix}")
-                cmd = [
-                    exe, *_FFMPEG_BASE_ARGS,
-                    "-i", os.path.join(src, f"%06d{ext}"),
-                    *_FFMPEG_TO_IMG_ARGS, tgt, "-y",
-                ]
-                subprocess.run(
-                    cmd,
-                    stdin=subprocess.DEVNULL,
-                    stdout=subprocess.DEVNULL,
-                    stderr=subprocess.STDOUT,
-                    check=True,
-                )
-                with open(tgt, "rb") as fh:
-                    row = {
-                        key_col: name,
-                        "video": fh.read(),
-                        "n_frames": len(ordered),
-                        "error": None,
-                    }
-        except Exception as exc:  # noqa: BLE001 — E8 containment
-            row = {
-                key_col: name,
-                "video": None,
-                "n_frames": len(pdf),
-                "error": f"{type(exc).__name__}: {exc}",
-            }
-        return pd.DataFrame([row], columns=cols)
+        video, err = _run_ffmpeg(
+            exe, frame_files(), f"frames/%06d{ext}",
+            _FFMPEG_TO_IMG_ARGS, f"out{target_suffix}", _read_bytes,
+        )
+        return pd.DataFrame([(pdf[key_col].iloc[0], video, len(pdf), err)], columns=cols)
 
     return df.groupBy(key_col).applyInPandas(mux, schema=out_schema)
 
@@ -277,38 +260,19 @@ def transcode_media(
     exactly as the reference's target path does). Same mapInPandas shape
     and error containment as ``video_to_frames``."""
     exe = _resolve_ffmpeg(ffmpeg_exe)
+    from talkinghead_datapipeline_spark.shipping import ensure_package_shipped
+
+    ensure_package_shipped(df.sparkSession)
     cols = [key_col, out_col, "error"]
     out_schema = f"{key_col} string, {out_col} binary, error string"
 
     def convert(batches):
-        import os
-        import subprocess
-        import tempfile
-
         for pdf in batches:
             for name, blob in zip(pdf[key_col], pdf[content_col]):
-                try:
-                    with tempfile.TemporaryDirectory() as td:
-                        src = os.path.join(td, "in.media")
-                        with open(src, "wb") as fh:
-                            fh.write(bytes(blob))
-                        tgt = os.path.join(td, f"out{target_suffix}")
-                        cmd = [exe, *_FFMPEG_BASE_ARGS, "-i", src, tgt, "-y"]
-                        subprocess.run(
-                            cmd,
-                            stdin=subprocess.DEVNULL,
-                            stdout=subprocess.DEVNULL,
-                            stderr=subprocess.STDOUT,
-                            check=True,
-                        )
-                        with open(tgt, "rb") as fh:
-                            row = {key_col: name, out_col: fh.read(), "error": None}
-                except Exception as exc:  # noqa: BLE001 — E8 containment
-                    row = {
-                        key_col: name,
-                        out_col: None,
-                        "error": f"{type(exc).__name__}: {exc}",
-                    }
-                yield pd.DataFrame([row], columns=cols)
+                media, err = _run_ffmpeg(
+                    exe, [("in.media", blob)], "in.media",
+                    (), f"out{target_suffix}", _read_bytes,
+                )
+                yield pd.DataFrame([(name, media, err)], columns=cols)
 
     return df.mapInPandas(convert, schema=out_schema)

@@ -10,6 +10,7 @@ FAIL here too).
 from __future__ import annotations
 
 import math
+import os
 from dataclasses import dataclass, field
 from decimal import Decimal
 from typing import Any
@@ -24,9 +25,10 @@ from talkinghead_datapipeline_spark.catalog import TPCH_TABLES, table_path
 def duckdb_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
     con = duckdb.connect()
     for t in TPCH_TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{table_path(sf_dir, t)}')"
-        )
+        path = table_path(sf_dir, t)
+        if os.path.isdir(path):  # Spark writes a table as a directory of part files
+            path = os.path.join(path, "*.parquet")
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
     return con
 
 

@@ -1,5 +1,6 @@
 """End-to-end CLI parity: the reference's run.py surface (SURVEY §3.1)
-executed via talkinghead_datapipeline_spark.run on both graph dialects."""
+executed via talkinghead_datapipeline_spark.run on both node vocabularies,
+alone and mixed in one graph."""
 
 from __future__ import annotations
 
@@ -120,3 +121,37 @@ def test_cli_builtin_dialect(spark, tmp_path, sf_dir):
     by_name = {r["name"]: r for r in report}
     assert by_name["by_status"]["total"] >= 1
     assert os.path.exists(os.path.join(out, "by_status.parquet"))
+
+
+def test_cli_mixed_vocabulary_graph(spark, tmp_path):
+    # Reference nodes and a built-in node in one graph, through one builder.
+    graph = [
+        {"name": "VideoToImagesNode", "params": {"ext": ".jpg"}},
+        {"name": "FaceAlignmentNode", "params": {}},
+        {"name": "FixedBboxesNode", "params": {"scale": 1.25}},
+        {
+            "name": "aggregate",
+            "params": {
+                "input": "bboxes",
+                "keys": ["clip_name"],
+                "aggs": ["count(*) AS n_frames", "count(DISTINCT x1, y1, x2, y2) AS n_boxes"],
+                "output": "boxes_per_clip",
+            },
+        },
+    ]
+    gp = str(tmp_path / "graph.json")
+    with open(gp, "w") as f:
+        json.dump(graph, f)
+    media = str(tmp_path / "media")
+    _write_clips(media, n_clips=1, n_frames=2)
+    out = str(tmp_path / "out")
+    report = run(spark, gp, {"video": media}, out)
+    assert {r["name"]: (r["status"], r["total"]) for r in report} == {
+        "video": ("input", -1),
+        "images": ("written", 2),
+        "landmarks": ("written", 2),
+        "bboxes": ("written", 2),
+        "boxes_per_clip": ("written", 1),
+    }
+    row = spark.read.parquet(os.path.join(out, "boxes_per_clip.parquet")).first()
+    assert (row.clip_name, row.n_frames, row.n_boxes) == ("actor00_clip000", 2, 1)

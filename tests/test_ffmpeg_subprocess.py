@@ -113,6 +113,49 @@ def test_failed_clip_routes_to_error_channel(spark, failing_ffmpeg):
     assert all(r.image is None and "CalledProcessError" in r.error for r in out)
 
 
+def test_failed_mux_and_transcode_route_to_error_channel(spark, failing_ffmpeg):
+    frames = spark.createDataFrame(
+        pd.DataFrame({"clip_name": ["a", "a", "b"], "frame_idx": [0, 1, 0], "image": [b"x", b"y", b"z"]})
+    )
+    muxed = frames_to_video(frames, ffmpeg_exe=failing_ffmpeg).collect()
+    assert sorted((r.clip_name, r.video, r.n_frames) for r in muxed) == [("a", None, 2), ("b", None, 1)]
+    assert all("CalledProcessError" in r.error for r in muxed)
+    converted = transcode_media(_clips(spark), ffmpeg_exe=failing_ffmpeg).collect()
+    assert sorted((r.clip_name, r.media) for r in converted) == [("a", None), ("b", None)]
+    assert all("CalledProcessError" in r.error for r in converted)
+
+
+def test_ffmpeg_argument_vectors(spark, stub_ffmpeg, tmp_path):
+    # The reference's command templates (dpl/processor/nodes/ffmpeg.py:13-26)
+    # as argument vectors; a recording wrapper logs each call's argv.
+    log = tmp_path / "argv"
+    log.mkdir()
+    rec = tmp_path / "ffmpeg-rec"
+    rec.write_text(f'#!/bin/bash\nprintf "%s\\n" "$@" > "{log}/$$.args"\nexec {stub_ffmpeg} "$@"\n')
+    rec.chmod(0o755)
+
+    def calls():
+        import re
+
+        got = sorted(
+            tuple(re.sub(r"^.*/(in\.\w+|out\.\w+|frames/.*)$", r"\1", a) for a in f.read_text().splitlines())
+            for f in log.iterdir()
+        )
+        for f in log.iterdir():
+            f.unlink()
+        return got
+
+    base = ("-hide_banner", "-loglevel", "panic", "-nostats", "-i")
+    to_img = ("-start_number", "0", "-qscale:v", "3")
+    clip = spark.createDataFrame(pd.DataFrame({"clip_name": ["a"], "content": [b"AAA"]}))
+    frames = video_to_frames(clip, ffmpeg_exe=str(rec)).drop("error").collect()
+    assert calls() == [(*base, "in.video", *to_img, "frames/%06d.jpg", "-y")]
+    frames_to_video(spark.createDataFrame(frames), ffmpeg_exe=str(rec)).collect()
+    assert calls() == [(*base, "frames/%06d.jpg", *to_img, "out.mp4", "-y")]
+    transcode_media(clip, ffmpeg_exe=str(rec)).collect()
+    assert calls() == [(*base, "in.media", "out.wav", "-y")]
+
+
 def test_graph_node_uses_real_demux(spark, stub_ffmpeg):
     # VideoToImagesNode with ffmpeg_exe runs the subprocess path, not the
     # byte-chunk stand-in: 3 stub frames, not len(video)/FRAME_BYTES.

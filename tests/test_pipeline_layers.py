@@ -3,6 +3,8 @@ incremental layer, and media sources (SURVEY §5 items 3-4)."""
 
 from __future__ import annotations
 
+import json
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -21,7 +23,12 @@ from talkinghead_datapipeline_spark.operators.models import (
     fake_decode_image,
     view_transform,
 )
-from talkinghead_datapipeline_spark.plans.graph import NODE_REGISTRY, Pipeline
+from talkinghead_datapipeline_spark.plans.graph import NODE_REGISTRY
+from talkinghead_datapipeline_spark.plans.reference_compat import (
+    load_reference_graph,
+    run_reference_graph,
+)
+from talkinghead_datapipeline_spark.run import run
 from talkinghead_datapipeline_spark.sources.media import scan_binary_dir
 from talkinghead_datapipeline_spark.streaming.incremental import (
     incremental_append,
@@ -50,24 +57,24 @@ def test_pipeline_end_to_end(spark, sf_dir, tmp_path):
         },
         {"name": "sink_parquet", "params": {"input": "summary", "path": str(tmp_path / "summary"), "output": "summary_out"}},
     ]
-    ctx = Pipeline(graph).build(spark)
+    ctx = run_reference_graph(spark, graph)
     out = ctx.get("summary_out").toPandas()
     assert set(out["o_orderstatus"]) == {"O", "F", "P"}
     assert (out["n"] > 0).all()
 
 
 def test_pipeline_unknown_node_rejected():
-    with pytest.raises(ValueError, match="unknown nodes"):
-        Pipeline([{"name": "no_such_node"}])
+    with pytest.raises(ValueError, match=r"unknown nodes: \['no_such_node'\]; known: \[.*'VideoToImagesNode'.*'source_parquet'"):
+        load_reference_graph([{"name": "no_such_node"}])
 
 
 def test_pipeline_missing_input_rejected(spark):
     graph = [{"name": "filter", "params": {"input": "nope", "predicate": "1=1", "output": "x"}}]
     with pytest.raises(KeyError, match="missing input table 'nope'"):
-        Pipeline(graph).build(spark)
+        run_reference_graph(spark, graph)
 
 
-def test_pipeline_test_run_smoke(spark, sf_dir):
+def test_pipeline_test_run_smoke(spark, sf_dir, tmp_path):
     graph = [
         {"name": "source_parquet", "params": {"sf_dir": sf_dir, "table": "events", "output": "events"}},
         {
@@ -75,11 +82,40 @@ def test_pipeline_test_run_smoke(spark, sf_dir):
             "params": {"input": "events", "exprs": ["avg(value) OVER (PARTITION BY user_id ORDER BY event_id ROWS BETWEEN 2 PRECEDING AND 2 FOLLOWING) AS win_avg"], "output": "smoothed"},
         },
     ]
-    Pipeline(graph).test_run(spark)  # must not raise
+    graph_path = tmp_path / "graph.json"
+    graph_path.write_text(json.dumps(graph))
+    out = tmp_path / "out"
+    report = run(spark, str(graph_path), {}, str(out), test_run=True)
+    assert [(r["name"], r["status"], r["total"]) for r in report] == [
+        ("events", "test_run", 1),
+        ("smoothed", "test_run", 1),
+    ]
+    assert not (out / "smoothed.parquet").exists()
 
 
 def test_registry_has_core_vocabulary():
     assert {"source_parquet", "filter", "select", "join", "aggregate", "window", "resample", "savgol_smooth", "dedup_exact", "sink_parquet"} <= set(NODE_REGISTRY)
+
+
+def test_fake_codec_short_clips_give_no_frames(spark):
+    """A clip shorter than one fake-codec frame, an empty one included,
+    demuxes to zero frames; a whole-frame clip keeps its frames."""
+    import shutil
+
+    from talkinghead_datapipeline_spark.plans.reference_compat import FRAME_BYTES
+
+    if shutil.which("ffmpeg") is not None:
+        pytest.skip("real ffmpeg present; VideoToImagesNode demuxes with it")
+    video = spark.createDataFrame(
+        [("empty", bytearray()), ("short", bytearray(100)), ("two", bytearray(2 * FRAME_BYTES))],
+        "clip_name string, video binary",
+    )
+    ctx = run_reference_graph(spark, [{"name": "VideoToImagesNode", "params": {}}], {"video": video})
+    rows = ctx.get("images").collect()
+    assert sorted((r.clip_name, r.frame_idx, len(r.image)) for r in rows) == [
+        ("two", 0, FRAME_BYTES),
+        ("two", 1, FRAME_BYTES),
+    ]
 
 
 # ---------------------------------------------------------------------------
@@ -263,8 +299,6 @@ def test_scan_binary_dir_key_derivation(spark, tmp_path):
 def test_graph_components_and_range_join_nodes(spark, sf_dir):
     """Round-2 graph vocabulary: component-based canonicalization and the
     binned range join, declared as a JSON-style graph."""
-    from talkinghead_datapipeline_spark.plans.graph import Pipeline
-
     graph = [
         {
             "name": "source_parquet",
@@ -318,7 +352,7 @@ def test_graph_components_and_range_join_nodes(spark, sf_dir):
             },
         },
     ]
-    ctx = Pipeline(graph).build(spark)
+    ctx = run_reference_graph(spark, graph)
     docs_n = ctx.get("docs").count()
     canon_n = ctx.get("docs_canon").count()
     assert 0 < canon_n <= docs_n
@@ -329,8 +363,6 @@ def test_graph_components_and_range_join_nodes(spark, sf_dir):
 def test_graph_dedup_and_salted_join_nodes(spark, sf_dir):
     """North-star graph vocabulary: minhash pair node → canonical dedup →
     salted join, declared as a JSON-style graph."""
-    from talkinghead_datapipeline_spark.plans.graph import Pipeline
-
     graph = [
         {
             "name": "source_parquet",
@@ -378,7 +410,7 @@ def test_graph_dedup_and_salted_join_nodes(spark, sf_dir):
             },
         },
     ]
-    ctx = Pipeline(graph).build(spark)
+    ctx = run_reference_graph(spark, graph)
     docs_n = ctx.get("docs").count()
     pairs_n = ctx.get("pairs").count()
     dedup_n = ctx.get("docs_dedup").count()

@@ -223,3 +223,33 @@ def test_compare_is_numeric_type_sensitive():
         pd.DataFrame({"x": pd.array([40024.0], dtype="float64")}),
     )
     assert same.ok
+
+
+def test_duckdb_connection_reads_part_file_directories(sf_dir, tmp_path):
+    """A table stored as a directory of part files (how Spark writes one)
+    reads the same rows as its single-file form."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from talkinghead_datapipeline_spark.catalog import TPCH_TABLES, table_path
+    from tests.oracle_harness import duckdb_connection
+
+    for t in TPCH_TABLES:
+        if t != "nation":
+            os.symlink(table_path(sf_dir, t), table_path(str(tmp_path), t))
+    nation = pq.read_table(table_path(sf_dir, "nation"))
+    part_dir = table_path(str(tmp_path), "nation")
+    os.makedirs(part_dir)
+    half = nation.num_rows // 2
+    pq.write_table(nation.slice(0, half), os.path.join(part_dir, "part-00000.parquet"))
+    pq.write_table(nation.slice(half), os.path.join(part_dir, "part-00001.parquet"))
+
+    sql = "SELECT * FROM nation ORDER BY n_nationkey"
+    single, split = duckdb_connection(sf_dir), duckdb_connection(str(tmp_path))
+    try:
+        assert split.execute(sql).fetchall() == single.execute(sql).fetchall()
+        assert len(single.execute(sql).fetchall()) == nation.num_rows > 0
+    finally:
+        single.close()
+        split.close()

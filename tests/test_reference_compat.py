@@ -47,7 +47,7 @@ def test_reference_config_parses():
 
 
 def test_unknown_node_rejected():
-    with pytest.raises(ValueError, match="unknown reference nodes"):
+    with pytest.raises(ValueError, match=r"unknown nodes: \['NoSuchNode'\]; known: \[.*'VideoToImagesNode'.*'source_parquet'"):
         load_reference_graph([{"name": "NoSuchNode", "params": {}}])
 
 

@@ -30,7 +30,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from talkinghead_datapipeline_spark.session import get_spark
-from tests import oracle_harness
 from tests.oracle_harness import run_compare
 
 SF_DIRS = [
@@ -62,22 +61,6 @@ def main(argv: list[str]) -> int:
         build_tables(spark, XN_SRC, d, replicas=n)
         xn_dirs.append(d)
 
-    # Spark writes x4 tables as DIRECTORIES of part files; the harness's
-    # duckdb_connection expects a single-file path. Patch its view builder
-    # to glob directories (same shim as tools/x4_differential.py).
-    import duckdb
-
-    def duckdb_connection(sf_dir: str):
-        con = duckdb.connect()
-        for t in oracle_harness.TPCH_TABLES:
-            p = os.path.join(sf_dir, f"{t}.parquet")
-            pat = p + "/*.parquet" if os.path.isdir(p) else p
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{pat}')"
-            )
-        return con
-
-    oracle_harness.duckdb_connection = duckdb_connection
     failures = 0
     for spec in specs:
         mod_name, fn_name, oracle_name = spec.split(":")

@@ -110,20 +110,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     build_tables(spark, sf_dir, out_dir, replicas)
 
-    import duckdb
-
-    from tests.oracle_harness import compare_frames
-
-    def duck_con():
-        # Spark writes each table as a DIRECTORY of part files — glob it
-        con = duckdb.connect()
-        for t in TPCH_TABLES:
-            p = os.path.join(out_dir, f"{t}.parquet")
-            pat = p + "/*.parquet" if os.path.isdir(p) else p
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{pat}')"
-            )
-        return con
+    from tests.oracle_harness import compare_frames, duckdb_connection
 
     specs = {n: s for n, s in all_queries().items() if n.startswith(prefix)}
     bad, rows_only, errs = [], [], []
@@ -138,7 +125,7 @@ def main() -> None:
                       f"({len(spark_pdf)} rows, {time.time()-t0:.1f}s)",
                       flush=True)
                 continue
-            con = duck_con()
+            con = duckdb_connection(out_dir)
             try:
                 oracle_pdf = con.execute(spec.oracle).fetchdf()
             finally:
