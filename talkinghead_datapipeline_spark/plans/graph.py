@@ -18,9 +18,11 @@ registers, so one graph may mix both. plans.reference_compat's
 ``load_reference_graph`` validates a graph and ``run_reference_graph``
 builds it.
 
-This layer is deliberately thin: it does not schedule, chunk, or memoize
-(the reference's E7/E11 live in streaming.incremental) — Catalyst + AQE own
-physical execution.
+This layer is deliberately thin: it builds, and does not schedule, chunk,
+or write. ``run.run`` builds one node at a time with it, writes the node's
+tables to parquet and rebinds them to the written files, so each node
+executes once per run; per-clip memoization (the reference's E7/E11) lives
+in streaming.incremental, and Catalyst + AQE own physical execution.
 """
 
 from __future__ import annotations
@@ -29,7 +31,7 @@ from collections.abc import Callable
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 NodeBuilder = Callable[["GraphContext", dict[str, Any]], None]
@@ -53,6 +55,8 @@ def node(name: str) -> Callable[[NodeBuilder], NodeBuilder]:
 class GraphContext:
     spark: SparkSession
     tables: dict[str, DataFrame] = field(default_factory=dict)
+    # per-key quarantine metrics, filled by the write of the table's ok rows
+    observations: dict[str, Observation] = field(default_factory=dict)
 
     def get(self, key: str) -> DataFrame:
         if key not in self.tables:

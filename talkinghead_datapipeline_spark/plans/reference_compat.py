@@ -71,13 +71,27 @@ def run_reference_graph(
 
 def _bind(ctx: GraphContext, key: str, out: DataFrame) -> None:
     """Split a node's output on its error column and bind the ok rows; the
-    quarantined rows are dropped here."""
+    quarantined rows are dropped here. Their count and one sample error are
+    observed on the unsplit output, so the job that writes the ok rows
+    fills ``ctx.observations[key]`` without a job of its own."""
+    from pyspark.sql import Observation
+
     from talkinghead_datapipeline_spark.operators.inference import (
         split_error_channel,
     )
 
+    # Named per key: a whole-graph build stacks several keys' observations
+    # in one plan (renders reads flame_out and emoca_codes), and Spark
+    # rejects one name on two observed DataFrames.
+    obs = Observation(f"quarantine_{key}")
+    out = out.observe(
+        obs,
+        F.count("error").alias("quarantined"),
+        F.first("error", ignorenulls=True).alias("sample_error"),
+    )
     ok, _err = split_error_channel(out)
     ctx.put(key, ok)
+    ctx.observations[key] = obs
 
 
 def _infer(ctx, df, schema, model_key, factory, batch_fn, output_key):
@@ -425,11 +439,24 @@ def _rendering(ctx: GraphContext, p: dict[str, Any]) -> None:
         ["clip_name", "frame_idx"],
     )
 
-    def infer(model, pdf: pd.DataFrame) -> pd.DataFrame:
+    size = int(p.get("image_size", 16))
+
+    def infer(renderers, pdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np
 
-        from talkinghead_datapipeline_spark.operators.models import view_transform
+        from talkinghead_datapipeline_spark.operators.models import (
+            FlameLbsDecoder,
+            ShapeRenderer,
+            view_transform,
+        )
 
+        # The cached "renderer" resource outlives this graph in a reused
+        # worker, so it keeps one renderer per image size.
+        model = renderers.get(size)
+        if model is None:
+            model = renderers[size] = ShapeRenderer(
+                size_hw=(size, size), faces=FlameLbsDecoder().faces
+            )
         rows = []
         for name, idx, verts, cam in zip(
             pdf["clip_name"], pdf["frame_idx"], pdf["verts"], pdf["cam"]
@@ -457,24 +484,13 @@ def _rendering(ctx: GraphContext, p: dict[str, Any]) -> None:
             ],
         )
 
-    def factory():
-        from talkinghead_datapipeline_spark.operators.models import (
-            FlameLbsDecoder,
-            ShapeRenderer,
-        )
-
-        return ShapeRenderer(
-            size_hw=(int(p.get("image_size", 16)),) * 2,
-            faces=FlameLbsDecoder().faces,
-        )
-
     _infer(
         ctx,
         joined,
         "clip_name string, frame_idx int, render_normal binary, "
         "render_uv binary, render_mask binary, error string",
         "renderer",
-        factory,
+        dict,
         infer,
         "renders",
     )

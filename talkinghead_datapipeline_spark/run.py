@@ -25,10 +25,22 @@ Differences by design (Spark owns physical execution):
   (run.py:24, engine.py:55-74); Spark's task scheduler owns batching.
 - ``--test_run`` forces one row through every bound table (E12) instead of
   materializing outputs — same fail-fast intent as the reference's flag.
-- Every table the graph produces is persisted to
+- The graph runs one node at a time, like the reference's
+  materialize-every-intermediate engine (SURVEY §3.1 step 5): build the
+  node, write every table it bound or re-bound to
   ``{output_dir}/{key}.parquet`` (the catalog-layout analog of the
-  reference's per-DataType file tree), and the report carries per-table
-  row counts instead of per-node index ranges.
+  reference's per-DataType file tree), then rebind the table to the
+  written parquet. Later nodes read committed parquet, not lineage, so
+  each model node runs once per run and every consumer sees one version
+  of its inputs.
+- A table is written to a sibling temp directory and committed by
+  renaming it over ``{key}.parquet`` once all of the node's tables are
+  written, so a node may re-bind a key it reads (a ``filter`` whose
+  output is its input).
+- The report carries one entry per table, in the order the tables were
+  first bound: row counts instead of per-node index ranges, and for each
+  written table the rows its node quarantined with one sample error
+  (E8; 0 and null for tables with no error channel).
 """
 
 from __future__ import annotations
@@ -36,10 +48,16 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import shutil
 import time
+import uuid
+from collections.abc import Iterator
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
+
+from talkinghead_datapipeline_spark.plans.graph import GraphContext
 
 DEFAULT_OUTPUT_DIR = "./datasets/dpl_cache"
 DEFAULT_REPORT_NAME = "report.json"
@@ -64,12 +82,42 @@ def bind_input(spark: SparkSession, key: str, path: str) -> DataFrame:
         and any(n.endswith(".parquet") for n in os.listdir(path))
     ):
         return spark.read.parquet(path)
-    from pyspark.sql import functions as F
-
     from talkinghead_datapipeline_spark.sources.media import scan_binary_dir
 
     scan = scan_binary_dir(spark, path)
     return scan.select("clip_name", F.col("content").alias(key))
+
+
+def _write_node(ctx: GraphContext, keys: list[str], output_dir: str) -> Iterator[tuple]:
+    """Write the tables ``keys`` of one built node and rebind each in
+    ``ctx`` to its written parquet. Every table goes to a sibling temp
+    directory first and is renamed over ``{key}.parquet`` only after all
+    of them are written, since the node's lineage may read the old file.
+    Yields ``(key, built df, report fields)`` per table."""
+    staged = []
+    for key in keys:
+        t0 = time.perf_counter()
+        df = ctx.tables[key]
+        tmp = os.path.join(output_dir, f"{key}.parquet.tmp-{uuid.uuid4().hex}")
+        # the row count rides the write job as an observed metric: no
+        # second read-back scan per table.
+        rows = Observation(f"rows_{key}")
+        df.observe(rows, F.count(F.lit(1)).alias("n")).write.parquet(tmp)
+        staged.append((key, df, tmp, rows, time.perf_counter() - t0))
+    for key, df, tmp, rows, sec in staged:
+        t0 = time.perf_counter()
+        path = os.path.join(output_dir, f"{key}.parquet")
+        if os.path.isdir(path):
+            shutil.rmtree(path)
+        os.replace(tmp, path)
+        # passing the schema spares one schema-inference job per table
+        ctx.put(key, ctx.spark.read.schema(df.schema).parquet(path))
+        quarantine = ctx.observations.get(key)
+        yield key, df, {
+            "total": rows.get["n"],
+            "sec": sec + time.perf_counter() - t0,
+            **(quarantine.get if quarantine else {"quarantined": 0, "sample_error": None}),
+        }
 
 
 def run(
@@ -83,48 +131,47 @@ def run(
     verbose: bool = False,
 ) -> list[dict[str, Any]]:
     """Programmatic entry — returns the report (list of per-table dicts)."""
-    from talkinghead_datapipeline_spark.plans.reference_compat import (
-        run_reference_graph,
-    )
+    # run_reference_graph is looked up on its module at each call, so a
+    # wrapper installed there (a tracer's span) sees every node's build
+    from talkinghead_datapipeline_spark.plans import reference_compat
 
-    bound = {k: bind_input(spark, k, p) for k, p in inputs.items()}
-    ctx = run_reference_graph(spark, graph_path, bound)
-
+    tables = {k: bind_input(spark, k, p) for k, p in inputs.items()}
     os.makedirs(output_dir, exist_ok=True)
-    report: list[dict[str, Any]] = []
-    for key, df in ctx.tables.items():
-        t0 = time.perf_counter()
-        if test_run:
-            n = len(df.limit(1).collect())  # E12 fail-fast smoke
-            status = "test_run"
-        elif key in bound:
-            n, status = -1, "input"  # inputs are not re-materialized
-        else:
-            from pyspark.sql import Observation
-            from pyspark.sql import functions as F
+    # one entry per key; a re-bound key keeps the place of its first binding
+    entries: dict[str, dict[str, Any]] = {}
 
-            out_path = os.path.join(output_dir, f"{key}.parquet")
-            # row count rides the write job as an observed metric — no
-            # second read-back scan per table (the report stays one job
-            # per output, like the reference's single pass).
-            obs = Observation(f"rows_{key}")
-            df.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
-                "overwrite"
-            ).parquet(out_path)
-            n = obs.get["n"]
-            status = "written"
-        entry = {
+    def record(key: str, df: DataFrame, status: str, total: int, sec: float, **extra: Any) -> None:
+        entries[key] = {
             "name": key,
-            "total": n,
+            "total": total,
             "status": status,
             "columns": df.columns,
-            "sec": round(time.perf_counter() - t0, 3),
+            "sec": round(sec, 3),
             "chunk_size": chunk_size,  # recorded; Spark owns batching
+            **extra,
         }
-        report.append(entry)
         if verbose:
-            print(json.dumps(entry))
+            print(json.dumps(entries[key]))
 
+    if test_run:
+        ctx = reference_compat.run_reference_graph(spark, graph_path, tables)
+        for key, df in ctx.tables.items():
+            t0 = time.perf_counter()
+            n = len(df.limit(1).collect())  # E12 fail-fast smoke
+            record(key, df, "test_run", n, time.perf_counter() - t0)
+    else:
+        for key, df in tables.items():
+            record(key, df, "input", -1, 0.0)  # inputs are not re-materialized
+        for spec in reference_compat.load_reference_graph(graph_path):
+            ctx = reference_compat.run_reference_graph(spark, [spec], tables)
+            bound = [
+                k for k, df in ctx.tables.items() if k not in inputs and tables.get(k) is not df
+            ]
+            for key, df, fields in _write_node(ctx, bound, output_dir):
+                record(key, df, "written", **fields)
+            tables = ctx.tables
+
+    report = list(entries.values())
     with open(os.path.join(output_dir, report_name), "w") as f:
         json.dump(report, f, indent=2)
     return report

@@ -155,3 +155,107 @@ def test_cli_mixed_vocabulary_graph(spark, tmp_path):
     }
     row = spark.read.parquet(os.path.join(out, "boxes_per_clip.parquet")).first()
     assert (row.clip_name, row.n_frames, row.n_boxes) == ("actor00_clip000", 2, 1)
+
+
+def _digest(df) -> list[int]:
+    """Order-insensitive content digest: the sorted per-row xxhash64."""
+    from pyspark.sql import functions as F
+
+    return sorted(r.h for r in df.select(F.xxhash64(*sorted(df.columns)).alias("h")).collect())
+
+
+# model key of each model node → the table its ok rows are written to
+_MODEL_TABLES = {
+    "fake_audio_codec": "wav",
+    "wav2vec": "wav2vec_volume",
+    "face_alignment": "landmarks",
+    "crop_resize": "crops",
+    "emoca": "emoca_codes",
+    "flame": "flame_out",
+    "renderer": "renders",
+    "a2en_pack": "a2en",
+}
+
+
+def test_run_feeds_each_model_node_once(spark, tmp_path, monkeypatch):
+    # Each node's tables are written before the next node is built, so a
+    # model node's batch_fn sees every row exactly once per run, and the
+    # written tables equal those of one lazy whole-graph build.
+    from talkinghead_datapipeline_spark.operators import inference
+    from talkinghead_datapipeline_spark.plans.reference_compat import run_reference_graph
+    from talkinghead_datapipeline_spark.run import bind_input
+
+    graph = [
+        {"name": "VideoToImagesNode", "params": {}},
+        {"name": "VideoToWavNode", "params": {}},
+        {"name": "Wav2vecNode", "params": {}},
+        {"name": "FaceAlignmentNode", "params": {}},
+        {"name": "FixedBboxesNode", "params": {"scale": 1.25}},
+        {"name": "CropNode", "params": {"size_hw": [320, 320]}},
+        {"name": "EmocaNode", "params": {}},
+        {"name": "FlameNode", "params": {"n_shape": 100, "n_exp": 50}},
+        {"name": "RenderingNode", "params": {"image_size": 32}},
+        {"name": "A2enDatasetNode", "params": {}},
+        {"name": "Vid2vidDatasetNode", "params": {}},
+    ]
+    gp = str(tmp_path / "graph.json")
+    with open(gp, "w") as f:
+        json.dump(graph, f)
+    media = str(tmp_path / "media")
+    _write_clips(media, n_clips=2, n_frames=3)
+
+    real = inference.batched_inference
+    fed = {}
+
+    def counting(df, output_schema, model_key, model_factory, batch_fn, **kw):
+        rows = fed.setdefault(model_key, spark.sparkContext.accumulator(0))
+
+        def counted(model, pdf):
+            rows.add(len(pdf))
+            return batch_fn(model, pdf)
+
+        return real(df, output_schema, model_key, model_factory, counted, **kw)
+
+    monkeypatch.setattr(inference, "batched_inference", counting)
+    out = str(tmp_path / "out")
+    report = run(spark, gp, {"video": media}, out)
+    monkeypatch.setattr(inference, "batched_inference", real)
+
+    totals = {r["name"]: r["total"] for r in report}
+    assert {k: acc.value for k, acc in fed.items()} == {
+        k: totals[t] for k, t in _MODEL_TABLES.items()
+    }
+    assert totals["landmarks"] == 6 and totals["a2en"] == 2
+    written = [r for r in report if r["status"] == "written"]
+    assert {(r["quarantined"], r["sample_error"]) for r in written} == {(0, None)}
+
+    lazy = run_reference_graph(spark, gp, {"video": bind_input(spark, "video", media)})
+    assert len(written) == 11
+    for key in (r["name"] for r in written):
+        written = spark.read.parquet(os.path.join(out, f"{key}.parquet"))
+        assert written.count() == totals[key], key
+        assert _digest(written) == _digest(lazy.get(key)), key
+
+
+def test_run_rebinds_a_key_it_reads(spark, tmp_path, sf_dir):
+    # filter and sink_parquet both re-bind "orders", the key they read: the
+    # report keeps one entry for it, and orders.parquet is the filtered table.
+    from talkinghead_datapipeline_spark.catalog import load_table
+
+    predicate = "o_totalprice > 100000"
+    graph = [
+        {"name": "source_parquet", "params": {"sf_dir": sf_dir, "table": "orders", "output": "orders"}},
+        {"name": "filter", "params": {"input": "orders", "predicate": predicate, "output": "orders"}},
+        {"name": "sink_parquet", "params": {"input": "orders", "path": str(tmp_path / "sink")}},
+    ]
+    gp = str(tmp_path / "graph.json")
+    with open(gp, "w") as f:
+        json.dump(graph, f)
+    out = str(tmp_path / "out")
+    report = run(spark, gp, {}, out)
+    expected = load_table(spark, sf_dir, "orders").filter(predicate)
+    n = expected.count()
+    assert 0 < n < load_table(spark, sf_dir, "orders").count()
+    assert [(r["name"], r["status"], r["total"]) for r in report] == [("orders", "written", n)]
+    assert _digest(spark.read.parquet(os.path.join(out, "orders.parquet"))) == _digest(expected)
+    assert sorted(os.listdir(out)) == ["orders.parquet", "report.json"]

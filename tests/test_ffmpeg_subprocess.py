@@ -185,3 +185,22 @@ def test_gate_raises_without_binary(spark):
         pytest.skip("real ffmpeg present; gate not reachable")
     with pytest.raises(NotImplementedError, match="ffmpeg not available"):
         video_to_frames(_clips(spark))
+
+
+def test_run_reports_quarantined_clips(spark, failing_ffmpeg, tmp_path):
+    # Every clip fails to demux: no frame is written, and the report counts
+    # the quarantined clips with one of their errors.
+    import json
+
+    from talkinghead_datapipeline_spark.run import run
+
+    media = tmp_path / "media"
+    media.mkdir()
+    for name in ("a.mp4", "b.mp4", "c.mp4"):
+        (media / name).write_bytes(b"not a video")
+    graph = tmp_path / "graph.json"
+    graph.write_text(json.dumps([{"name": "VideoToImagesNode", "params": {"ffmpeg_exe": failing_ffmpeg}}]))
+    report = run(spark, str(graph), {"video": str(media)}, str(tmp_path / "out"))
+    images = {r["name"]: r for r in report}["images"]
+    assert (images["status"], images["total"], images["quarantined"]) == ("written", 0, 3)
+    assert "CalledProcessError" in images["sample_error"]

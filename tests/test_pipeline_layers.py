@@ -497,3 +497,33 @@ def test_broadcast_weights_factory(spark):
     got = {r.id: r.y for r in ok.collect()}
     assert got[3] == 28.0 * 3  # sum(0..7)=28
     assert len(got) == 100
+
+
+
+def test_rendering_node_follows_image_size(spark, monkeypatch):
+    # A reused Python worker hands every graph's batch_fn the resource it
+    # cached under the model key for the first graph it ran.
+    from talkinghead_datapipeline_spark.operators import inference
+    from talkinghead_datapipeline_spark.plans.reference_compat import synthetic_clips
+
+    real = inference.batched_inference
+    renderers = []
+
+    def capture(df, output_schema, model_key, model_factory, batch_fn, **kw):
+        if model_key == "renderer":
+            renderers.append((model_factory, batch_fn))
+        return real(df, output_schema, model_key, model_factory, batch_fn, **kw)
+
+    monkeypatch.setattr(inference, "batched_inference", capture)
+    video = synthetic_clips(spark, n_clips=1, n_frames=2)
+    upstream = [
+        {"name": name, "params": {}}
+        for name in ("VideoToImagesNode", "FaceAlignmentNode", "FixedBboxesNode", "CropNode", "EmocaNode", "FlameNode")
+    ]
+    for size in (12, 20):
+        ctx = run_reference_graph(spark, [*upstream, {"name": "RenderingNode", "params": {"image_size": size}}], {"video": video})
+    pdf = ctx.get("flame_out").join(ctx.get("emoca_codes").select("clip_name", "frame_idx", "cam"), ["clip_name", "frame_idx"]).toPandas()
+    (factory, render12), (_, render20) = renderers
+    cached = factory()
+    assert {len(b) for b in render12(cached, pdf)["render_uv"]} == {144}
+    assert {len(b) for b in render20(cached, pdf)["render_uv"]} == {400}
