@@ -90,48 +90,6 @@ _MODULES = (
 # registered query eventually receives a driver row (policy pinned by
 # tests/test_queries_oracle.py::test_driver_priority_rotation_policy).
 #
-# r15 staging tranche (staged in the r13 continuation session; the r14
-# window is full, so these register in r15 after its drain tail):
-# pareto_skyline_parts (relational.py — dominance/skyline class: 2-D
-# per-brand skyline via the running-max window identity vs a NOT EXISTS
-# dominance oracle), cusum_drift_daily (timeseries.py — sequential
-# process-control: two-sided Page CUSUM via the reflected-prefix closed
-# form vs the textbook recursive recurrence), oof_target_encoding_segment
-# (mlstats.py — leakage-free feature engineering: out-of-fold target
-# encoding vs literal self-exclusion subqueries),
-# hits_hubs_authorities (graph.py — Kleinberg HITS, exact-integer
-# max-normalized sweeps, unrolled-CTE oracle), bfs_hops_trade_network
-# (graph.py — multi-source BFS hop layers, frontier/anti-join iteration
-# vs (node, dist) set recursion), spearman_rank_corr_lang
-# (stats_tests.py — rank-correlation class: tie-corrected Spearman via
-# the exact-BIGINT doubled-rank identity), ndcg_mrr_retrieval_eval
-# (similarity.py — retrieval-evaluation class: NDCG@10 + MRR vs the
-# brute-force ground truth with BUILD-time-quantized integer discount
-# literals, composed from the registered top-k pair),
-# decision_stump_split_scores (mlstats.py — tree-learner split scoring:
-# Gini gain over decile thresholds, exact BIGINT quantize-first
-# impurities, no IEEE op anywhere), holt_linear_forecast_daily
-# (timeseries.py — trend-aware forecaster: Holt smoothing over integer
-# micro-dollar state, trunc-div agreement measured for the negative
-# trend tier), kmv_distinct_intersection (sketches.py — the sketch
-# family's set-operation gap: KMV union/Jaccard/intersection estimates,
-# all BIGINT, true counts alongside as the accuracy certificate),
-# degree_assortativity_trade (graph.py — Newman degree mixing; the
-# symmetric edge list makes the estimator exactly rational),
-# diff_in_diff_order_value (behavior.py — the causal-inference trio's
-# two-period member; quantize-first integer cells),
-# seq_pattern_maxgap_support (behavior.py — GSP-style followed-by
-# support over per-user range self-joins, strict-order gap semantics),
-# readability_fk_per_lang (textops.py — Flesch-Kincaid over exact
-# integer counts, pinned-expression scores), modularity_nation_partition
-# (graph.py — Newman-Girvan Q, exactly rational via the single-
-# denominator form). All
-# 3-SF + x4 verified at staging time (tools/verify_staged.py) AND
-# re-verified on a x16 replication; dedicated staged tests throughout;
-# whitelist entries pre-added for the seven that plan 1-row/tiny
-# crossJoins or bounded non-equi probes (cusum, hits, ndcg, stump, kmv,
-# modularity, diff-in-diff — ADVICE r13: the staging record must list
-# every _NESTED_LOOP_OK entry the tranche actually added).
 # ROUND-15 WINDOW (optimization round 2/2 — no registrations; registry
 # stays 244). VERDICT r14 #1: the r14 optimization batches rewrote ~26
 # query plans AFTER the r14 window froze, so only 4 got a driver row —
@@ -156,9 +114,6 @@ _MODULES = (
 #  2. r10-era drain, oldest-first alphabetical (5 seats this round; the
 #     r10 tier entered r15 with 48 keys, 44 after the canaries above —
 #     the remainder drains in r16+ after this round's canary spike).
-# The fifteen r13-staged r15-tranche queries stay UNREGISTERED: this is
-# an optimization round (no new features); they queue for the next build
-# round exactly as staged.
 _DRIVER_PRIORITY = (
     # --- 1a. r14-rewritten canaries (VERDICT r14 #1) ---
     "bootstrap_ci_order_value",
@@ -221,13 +176,6 @@ _DRIVER_PRIORITY = (
 # exactly the queries whose code moved this round even when the full
 # replica is gated behind SPARK_GRAFT_SLOW.
 R15_CANARIES = _DRIVER_PRIORITY[:45]
-
-# Overflow queue: never-driver-certified queries registered after the
-# current window filled its 50 seats. EMPTY for round 14 — the eight r14
-# registrations all hold seats in the window above (section 1), so every
-# never-certified query is inside the driver prefix (policy test asserts
-# len(never_certified) <= 50).
-_NEXT_ROUND_QUEUE: tuple[str, ...] = ()
 
 
 @dataclass

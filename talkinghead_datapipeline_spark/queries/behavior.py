@@ -1905,219 +1905,3 @@ def logrank_segment_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
             " END"
         ).alias("chi2_micro"),
     )
-
-
-# ---------------------------------------------------------------------------
-# STAGED for r15 registration — diff_in_diff_order_value (r13
-# continuation: completes the causal-inference trio — ab_test_lift is
-# the single-period two-group comparison and cuped_adjusted_lift the
-# covariate-adjusted one; DIFFERENCE-IN-DIFFERENCES is the two-period
-# two-group design, the workhorse estimator for before/after rollouts
-# with a control group).
-#
-# Treatment group = BUILDING-segment customers (vs all other segments as
-# control); periods split at the deterministic span midpoint
-# d_mid = d0 + (d1 − d0) div 2 (exact integer day arithmetic; period 1 =
-# orders with day > d_mid). Outcome = order value cents. The estimator
-# over the four (group, period) cells:
-#   m_gp (micro-dollars) = (s_gp · 10^4) div n_gp      [quantize-first]
-#   did_micro = (m_11 − m_10) − (m_01 − m_00)
-# — integer end-to-end; the four raw (n, s) pairs are certified raw next
-# to the quantized means, so the driver row pins both the data and the
-# estimator. NULL did when any cell is empty (degenerate corpora;
-# engines agree via explicit guards).
-#
-# Overflow: s·10^4 — the oof_target_encoding bound (3.8e16 at sf0.1, ×16
-# → 6e17, 15× inside int64; asserted in the staged test).
-#
-# Scale shape: one broadcast-dim join (orders ⋈ customer), ONE
-# map-side-combinable aggregation to 4 cells, a 1-row span aggregate
-# crossJoined broadcast for the midpoint — whitelist entry pre-added.
-# The oracle shares the construction (grouping is the spec);
-# independence comes from the staged test's direct-filter Python
-# recompute and a parallel-trends crafted corpus with a hand-known
-# effect.
-# ---------------------------------------------------------------------------
-
-DIFF_IN_DIFF_ORACLE = """
-WITH span AS (
-  SELECT min(CAST(o_orderdate AS DATE)) AS d0,
-         max(CAST(o_orderdate AS DATE)) AS d1
-  FROM orders
-),
-mid AS (
-  SELECT d0 + CAST((d1 - d0) // 2 AS INTEGER) AS d_mid FROM span
-),
-base AS (
-  SELECT CASE WHEN c.c_mktsegment = 'BUILDING' THEN 1 ELSE 0 END AS grp,
-         CASE WHEN CAST(o.o_orderdate AS DATE) > m.d_mid THEN 1 ELSE 0 END
-           AS period,
-         CAST(round(o.o_totalprice * 100) AS BIGINT) AS cents
-  FROM orders o
-  JOIN customer c ON c.c_custkey = o.o_custkey
-  CROSS JOIN mid m
-),
-cells AS (
-  SELECT grp, period,
-         CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(cents) AS BIGINT) AS s
-  FROM base GROUP BY grp, period
-),
-wide AS (
-  SELECT
-    max(CASE WHEN grp = 0 AND period = 0 THEN n END) AS n00,
-    max(CASE WHEN grp = 0 AND period = 0 THEN s END) AS s00,
-    max(CASE WHEN grp = 0 AND period = 1 THEN n END) AS n01,
-    max(CASE WHEN grp = 0 AND period = 1 THEN s END) AS s01,
-    max(CASE WHEN grp = 1 AND period = 0 THEN n END) AS n10,
-    max(CASE WHEN grp = 1 AND period = 0 THEN s END) AS s10,
-    max(CASE WHEN grp = 1 AND period = 1 THEN n END) AS n11,
-    max(CASE WHEN grp = 1 AND period = 1 THEN s END) AS s11
-  FROM cells
-)
-SELECT n00, s00, n01, s01, n10, s10, n11, s11,
-       CASE WHEN n00 > 0 AND n01 > 0 AND n10 > 0 AND n11 > 0 THEN
-         ((s11 * 10000) // n11 - (s10 * 10000) // n10)
-         - ((s01 * 10000) // n01 - (s00 * 10000) // n00)
-       END AS did_micro
-FROM wide
-"""
-
-
-def diff_in_diff_order_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Difference-in-differences of order value: BUILDING-segment
-    customers (treated) vs the rest, periods split at the exact integer
-    span midpoint — four certified (n, Σcents) cells and the estimator
-    over quantize-first floor-micro means, NULL when any cell is empty.
-    Integer end-to-end. See the staging comment for the bound. STAGED
-    r13 -> registers r15 (the r14 window is full)."""
-    orders = load_table(spark, sf_dir, "orders")
-    cust = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_mktsegment"
-    )
-    span = orders.agg(
-        F.min(F.col("o_orderdate").cast("date")).alias("d0"),
-        F.max(F.col("o_orderdate").cast("date")).alias("d1"),
-    ).select(
-        F.expr("date_add(d0, CAST(datediff(d1, d0) div 2 AS INT))").alias(
-            "d_mid"
-        )
-    )
-    base = (
-        orders.join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .crossJoin(F.broadcast(span))
-        .select(
-            (F.col("c_mktsegment") == "BUILDING").cast("int").alias("grp"),
-            (F.col("o_orderdate").cast("date") > F.col("d_mid"))
-            .cast("int")
-            .alias("period"),
-            F.round(F.col("o_totalprice") * 100).cast("bigint").alias(
-                "cents"
-            ),
-        )
-    )
-    cells = base.groupBy("grp", "period").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum("cents").cast("bigint").alias("s"),
-    )
-    wide = cells.agg(
-        *[
-            F.max(
-                F.when(
-                    (F.col("grp") == g) & (F.col("period") == p),
-                    F.col(c),
-                )
-            ).alias(f"{c}{g}{p}")
-            for g in (0, 1)
-            for p in (0, 1)
-            for c in ("n", "s")
-        ]
-    )
-    return wide.select(
-        "n00", "s00", "n01", "s01", "n10", "s10", "n11", "s11",
-        F.expr(
-            "CASE WHEN n00 > 0 AND n01 > 0 AND n10 > 0 AND n11 > 0 THEN"
-            " ((s11 * 10000) div n11 - (s10 * 10000) div n10)"
-            " - ((s01 * 10000) div n01 - (s00 * 10000) div n00)"
-            " END"
-        ).alias("did_micro"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# STAGED for r15 registration — seq_pattern_maxgap_support (r13
-# continuation: the sequential-pattern-mining class —
-# event_transition_matrix counts ADJACENT transitions (lead(1)) and
-# session_funnel_conversion a fixed ordered funnel; the GSP/SPADE-style
-# "a followed by b within a max gap, intermediate events allowed"
-# support count is the general sequence-mining primitive neither
-# covers).
-#
-# For every ordered event-type pair (a, b): the number of (a-event,
-# b-event) occurrence pairs per user where b fires STRICTLY after a and
-# within 1 hour (gap ≤ 3600s — boundary INCLUSIVE, equal timestamps
-# excluded: under the ×4/×16 duplicate-timestamp replication regime an
-# equal-ts pair has no defined order, so strict inequality is the only
-# deterministic choice), plus the distinct-user support. Pure integer
-# counting on epoch-micros arithmetic — no float op anywhere.
-#
-# Scale shape: ONE self-equi-join on user_id with the micros range
-# predicate — per-user work bounded by (events per user per hour)², the
-# range_interval_join shape, never |events|²; one combinable aggregation
-# to ≤|types|² rows. The oracle shares the join (the pair definition IS
-# the spec); independence comes from the staged test's dict-loop Python
-# recompute and the gap-boundary crafted corpus.
-# ---------------------------------------------------------------------------
-
-_SEQ_GAP_US = 3_600_000_000
-
-SEQ_PATTERN_ORACLE = f"""
-WITH ev AS (
-  SELECT user_id, event_type, epoch_us(ts) AS us FROM events
-)
-SELECT a.event_type AS etype_a, b.event_type AS etype_b,
-       CAST(count(*) AS BIGINT) AS n_pairs,
-       CAST(count(DISTINCT a.user_id) AS BIGINT) AS n_users
-FROM ev a
-JOIN ev b
-  ON b.user_id = a.user_id
- AND b.us > a.us
- AND b.us - a.us <= {_SEQ_GAP_US}
-GROUP BY 1, 2
-ORDER BY etype_a, etype_b
-"""
-
-
-def seq_pattern_maxgap_support(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GSP-style "a followed by b within 1 hour" pattern support over
-    user event sequences (intermediate events allowed, strict order,
-    inclusive gap boundary): exact pair and distinct-user counts per
-    ordered type pair. One per-user range self-join, integer micros
-    arithmetic end-to-end. See the staging comment. STAGED r13 ->
-    registers r15 (the r14 window is full)."""
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id",
-        "event_type",
-        F.unix_micros("ts").alias("us"),
-    )
-    a = ev.alias("a")
-    b = ev.alias("b")
-    pairs = a.join(
-        b,
-        (F.col("b.user_id") == F.col("a.user_id"))
-        & (F.col("b.us") > F.col("a.us"))
-        & (F.col("b.us") - F.col("a.us") <= F.lit(_SEQ_GAP_US)),
-    )
-    return (
-        pairs.groupBy(
-            F.col("a.event_type").alias("etype_a"),
-            F.col("b.event_type").alias("etype_b"),
-        )
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_pairs"),
-            F.countDistinct(F.col("a.user_id")).cast("bigint").alias(
-                "n_users"
-            ),
-        )
-        .orderBy("etype_a", "etype_b")
-    )

@@ -578,667 +578,3 @@ def triangle_count_brand_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("clustering_ppm"),
         )
     )
-
-
-# ---------------------------------------------------------------------------
-# STAGED for r15 registration — hits_hubs_authorities (r13 continuation:
-# completes the link-analysis pair — pagerank_trade_network certifies the
-# random-surfer ranking, but nothing in the registry computes Kleinberg's
-# mutually-recursive hub/authority scores, the other canonical
-# link-analysis fixpoint).
-#
-# HITS on the bipartite customer (hub) ↔ part-brand (authority) purchase
-# graph: edges are DISTINCT (custkey, brand) pairs from orders ⋈
-# lineitem ⋈ part. Two full hub/authority sweeps from a0 ≡ 1e6, with
-# MAX-normalization after every half-step — HITS is normalization-
-# agnostic up to scale (Kleinberg §3: any per-step rescaling converges to
-# the same ray); dividing by the step maximum keeps every intermediate an
-# exact BIGINT:
-#   h_i = (Σ_adj a_{i-1} · 10^6) div max_c(Σ_adj a_{i-1})   ∈ [0, 10^6]
-#   a_i = (Σ_adj h_i     · 10^6) div max_b(Σ_adj h_i)       ∈ [0, 10^6]
-# Integer end-to-end — adjacency sums of ≤1e6 scores over ≤|customers|
-# neighbors (bound: |customers|·1e6·1e6 — 1.5e16 at sf0.1, ×4 → 6e16,
-# 150× inside int64, asserted in the staged test), floor divs of
-# non-negative BIGINTs. No float op anywhere.
-#
-# Output: all brand authority scores + the top-20 hub customers, ranked
-# with deterministic (score DESC, key ASC) tiebreaks.
-#
-# Scale shape: the Pregel shape pagerank certifies — per-iteration
-# adjacency groupBys on the edge list (2 sweeps = 4 bounded shuffles),
-# the edge frame persisted once and reused; the per-step max is a 1-row
-# broadcast crossJoin (whitelist entry pre-added at staging time). The
-# DuckDB oracle unrolls the identical two sweeps as CTEs (the pagerank
-# precedent: for an iterative fixpoint the unrolled recurrence IS the
-# spec).
-# ---------------------------------------------------------------------------
-
-HITS_ORACLE = """
-WITH edges AS (
-  SELECT DISTINCT o.o_custkey AS cust, p.p_brand AS brand
-  FROM orders o
-  JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-  JOIN part p ON p.p_partkey = l.l_partkey
-),
-h1raw AS (
-  SELECT cust, CAST(count(*) AS BIGINT) * 1000000 AS raw
-  FROM edges GROUP BY cust
-),
-h1 AS (
-  SELECT cust, (raw * 1000000) // (SELECT max(raw) FROM h1raw) AS h
-  FROM h1raw
-),
-a1raw AS (
-  SELECT e.brand, CAST(sum(h.h) AS BIGINT) AS raw
-  FROM edges e JOIN h1 h ON h.cust = e.cust GROUP BY e.brand
-),
-a1 AS (
-  SELECT brand, (raw * 1000000) // (SELECT max(raw) FROM a1raw) AS a
-  FROM a1raw
-),
-h2raw AS (
-  SELECT e.cust, CAST(sum(a.a) AS BIGINT) AS raw
-  FROM edges e JOIN a1 a ON a.brand = e.brand GROUP BY e.cust
-),
-h2 AS (
-  SELECT cust, (raw * 1000000) // (SELECT max(raw) FROM h2raw) AS h
-  FROM h2raw
-),
-a2raw AS (
-  SELECT e.brand, CAST(sum(h.h) AS BIGINT) AS raw
-  FROM edges e JOIN h2 h ON h.cust = e.cust GROUP BY e.brand
-),
-a2 AS (
-  SELECT brand, (raw * 1000000) // (SELECT max(raw) FROM a2raw) AS a
-  FROM a2raw
-),
-auth AS (
-  SELECT 'authority' AS role, brand AS node, a AS score_ppm,
-         CAST(row_number() OVER (ORDER BY a DESC, brand ASC) AS BIGINT)
-           AS rnk
-  FROM a2
-),
-hubs AS (
-  SELECT 'hub' AS role, CAST(cust AS VARCHAR) AS node, h AS score_ppm,
-         CAST(row_number() OVER (ORDER BY h DESC, cust ASC) AS BIGINT)
-           AS rnk
-  FROM h2
-)
-SELECT role, node, score_ppm, rnk FROM auth
-UNION ALL
-SELECT role, node, score_ppm, rnk FROM hubs WHERE rnk <= 20
-ORDER BY role, rnk
-"""
-
-
-def _max_normalize(df: DataFrame, key: str, out: str) -> DataFrame:
-    """(raw · 10^6) div max(raw) — the exact-integer HITS half-step."""
-    mx = df.agg(F.max("raw").alias("mx"))
-    return df.crossJoin(F.broadcast(mx)).select(
-        key, F.expr("(raw * 1000000) div mx").alias(out)
-    )
-
-
-def hits_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Kleinberg HITS (2 sweeps, max-normalized exact-integer half-steps)
-    on the customer↔brand purchase bipartite graph: every brand authority
-    score + the top-20 hub customers, deterministically tie-broken. The
-    oracle unrolls the identical recurrence (the pagerank precedent).
-    Integer end-to-end; see the staging comment for the bound. STAGED
-    r13 -> registers r15 (the r14 window is full)."""
-    from pyspark.sql.window import Window as W
-
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey"
-    )
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey"
-    )
-    part = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    edges = persist_once(
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .join(F.broadcast(part), li.l_partkey == part.p_partkey)
-        .select(F.col("o_custkey").alias("cust"), F.col("p_brand").alias("brand"))
-        .distinct()
-    )
-    h1raw = edges.groupBy("cust").agg(
-        (F.count(F.lit(1)) * 1_000_000).cast("bigint").alias("raw")
-    )
-    h1 = _max_normalize(h1raw, "cust", "h")
-    a1raw = edges.join(h1, "cust").groupBy("brand").agg(
-        F.sum("h").cast("bigint").alias("raw")
-    )
-    a1 = _max_normalize(a1raw, "brand", "a")
-    # the brand side is dim-bounded — broadcast it back onto the edges
-    h2raw = edges.join(F.broadcast(a1), "brand").groupBy("cust").agg(
-        F.sum("a").cast("bigint").alias("raw")
-    )
-    h2 = persist_once(_max_normalize(h2raw, "cust", "h"))
-    a2raw = edges.join(h2, "cust").groupBy("brand").agg(
-        F.sum("h").cast("bigint").alias("raw")
-    )
-    a2 = _max_normalize(a2raw, "brand", "a")
-    auth = a2.select(
-        F.lit("authority").alias("role"),
-        F.col("brand").alias("node"),
-        F.col("a").alias("score_ppm"),
-        F.row_number()
-        .over(W.orderBy(F.desc("a"), F.asc("brand")))
-        .cast("bigint")
-        .alias("rnk"),
-    )
-    # top-20 FIRST via distributed TakeOrderedAndProject, THEN the rank
-    # window over the 20-row result — a global row_number over every
-    # customer would funnel the full hub frame through one partition
-    top_hubs = h2.orderBy(F.desc("h"), F.asc("cust")).limit(20)
-    hubs = top_hubs.select(
-        F.lit("hub").alias("role"),
-        F.col("cust").cast("string").alias("node"),
-        F.col("h").alias("score_ppm"),
-        F.row_number()
-        .over(W.orderBy(F.desc("h"), F.asc("cust")))
-        .cast("bigint")
-        .alias("rnk"),
-    )
-    return auth.unionByName(hubs).orderBy("role", "rnk")
-
-
-# ---------------------------------------------------------------------------
-# STAGED for r15 registration — bfs_hops_trade_network (r13 continuation:
-# the graph-traversal class — pagerank/HITS rank nodes and the CC family
-# labels components, but nothing in the registry computes multi-source
-# SHORTEST-PATH layers, the frontier-expansion primitive behind
-# reachability, influence radius, and graph-distance features).
-#
-# Multi-source BFS on the pagerank trade network (the customer↔supplier
-# bipartite graph, both edge directions, supplier ids offset by 1e10):
-# seeds are the suppliers of region ASIA's nations; four frontier
-# expansions assign each node min(#hops from any seed) ∈ {0..4}; output
-# is the per-(distance, node-kind) histogram with the unreached remainder
-# (distance −1 sentinel) counted against the FULL customer/supplier node
-# universe — isolated nodes (customers with no orders) are unreached by
-# definition, not silently dropped.
-#
-# Determinism: pure integer set algebra — frontier joins, anti-join
-# against the visited set, counts. No arithmetic at all beyond counting.
-#
-# Spark formulation (the 100 TB shape): textbook Pregel-style frontier
-# iteration — per hop, ONE equi-join of the (persisted) frontier against
-# the edge list and ONE anti-join against the accumulated visited frame,
-# both hash-partitioned on node id; the visited/frontier frames are
-# persisted per level so the union tree never recomputes. Work per level
-# is O(edges incident to the frontier), the BFS optimum. The DuckDB
-# oracle walks the same graph with a recursive CTE in (node, dist) space
-# (UNION-dedup bounds it at nodes × 5 levels) and takes min(dist) per
-# node — a set-recursive formulation with no frontier/anti-join
-# machinery, independently arriving at the same layers.
-# ---------------------------------------------------------------------------
-
-_BFS_MAX_HOPS = 4
-_BFS_SEED_REGION = "ASIA"
-
-BFS_HOPS_ORACLE = f"""
-WITH RECURSIVE pairs AS (
-  SELECT DISTINCT o.o_custkey AS cust, l.l_suppkey AS supp
-  FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-),
-edges AS (
-  SELECT CAST(cust AS BIGINT) AS src,
-         CAST(supp + {_SUPP_OFFSET} AS BIGINT) AS dst FROM pairs
-  UNION ALL
-  SELECT CAST(supp + {_SUPP_OFFSET} AS BIGINT) AS src,
-         CAST(cust AS BIGINT) AS dst FROM pairs
-),
-seeds AS (
-  SELECT CAST(s.s_suppkey + {_SUPP_OFFSET} AS BIGINT) AS node
-  FROM supplier s
-  JOIN nation n ON n.n_nationkey = s.s_nationkey
-  JOIN region r ON r.r_regionkey = n.n_regionkey
-  WHERE r.r_name = '{_BFS_SEED_REGION}'
-),
-walk(node, dist) AS (
-  SELECT node, 0 FROM seeds
-  UNION
-  SELECT e.dst, w.dist + 1
-  FROM walk w JOIN edges e ON e.src = w.node
-  WHERE w.dist < {_BFS_MAX_HOPS}
-),
-reached AS (
-  SELECT node, CAST(min(dist) AS BIGINT) AS dist FROM walk GROUP BY node
-),
-universe AS (
-  SELECT CAST(c_custkey AS BIGINT) AS node, 'customer' AS node_kind
-  FROM customer
-  UNION ALL
-  SELECT CAST(s_suppkey + {_SUPP_OFFSET} AS BIGINT) AS node,
-         'supplier' AS node_kind
-  FROM supplier
-)
-SELECT COALESCE(r.dist, -1) AS dist, u.node_kind,
-       CAST(count(*) AS BIGINT) AS n_nodes
-FROM universe u LEFT JOIN reached r ON r.node = u.node
-GROUP BY 1, 2
-ORDER BY dist, node_kind
-"""
-
-
-def bfs_hops_trade_network(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-source BFS layers on the customer↔supplier trade network
-    (seeds: region-ASIA suppliers, _BFS_MAX_HOPS = 4 frontier expansions):
-    histogram of min-hop distance per node kind over the FULL node
-    universe, unreached nodes at distance −1. Pregel-shaped frontier
-    joins + visited anti-joins; the oracle recurses in (node, dist) space
-    and min-reduces — an independent formulation. STAGED r13 ->
-    registers r15 (the r14 window is full)."""
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey"
-    )
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey"
-    )
-    pairs = (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .select("o_custkey", "l_suppkey")
-        .distinct()
-    )
-    edges = persist_once(
-        pairs.select(
-            F.col("o_custkey").cast("bigint").alias("src"),
-            (F.col("l_suppkey") + F.lit(_SUPP_OFFSET)).cast("bigint").alias(
-                "dst"
-            ),
-        ).unionByName(
-            pairs.select(
-                (F.col("l_suppkey") + F.lit(_SUPP_OFFSET))
-                .cast("bigint")
-                .alias("src"),
-                F.col("o_custkey").cast("bigint").alias("dst"),
-            )
-        )
-    )
-    supp = load_table(spark, sf_dir, "supplier").select(
-        "s_suppkey", "s_nationkey"
-    )
-    nat = load_table(spark, sf_dir, "nation")
-    reg = load_table(spark, sf_dir, "region").filter(
-        F.col("r_name") == _BFS_SEED_REGION
-    )
-    seeds = (
-        supp.join(
-            F.broadcast(nat), supp.s_nationkey == nat.n_nationkey
-        )
-        .join(F.broadcast(reg), nat.n_regionkey == reg.r_regionkey)
-        .select(
-            (F.col("s_suppkey") + F.lit(_SUPP_OFFSET))
-            .cast("bigint")
-            .alias("node")
-        )
-    )
-    visited = persist_once(
-        seeds.withColumn("dist", F.lit(0).cast("bigint"))
-    )
-    frontier = visited.select("node")
-    for k in range(1, _BFS_MAX_HOPS + 1):
-        nxt = persist_once(
-            frontier.join(edges, frontier.node == edges.src)
-            .select(F.col("dst").alias("node"))
-            .distinct()
-            .join(visited.select("node"), "node", "left_anti")
-            .withColumn("dist", F.lit(k).cast("bigint"))
-        )
-        visited = persist_once(visited.unionByName(nxt))
-        frontier = nxt.select("node")
-    cust_nodes = load_table(spark, sf_dir, "customer").select(
-        F.col("c_custkey").cast("bigint").alias("node"),
-        F.lit("customer").alias("node_kind"),
-    )
-    supp_nodes = supp.select(
-        (F.col("s_suppkey") + F.lit(_SUPP_OFFSET)).cast("bigint").alias(
-            "node"
-        ),
-        F.lit("supplier").alias("node_kind"),
-    )
-    universe = cust_nodes.unionByName(supp_nodes)
-    return (
-        universe.join(visited, "node", "left")
-        .select(
-            F.coalesce(F.col("dist"), F.lit(-1).cast("bigint")).alias("dist"),
-            "node_kind",
-        )
-        .groupBy("dist", "node_kind")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_nodes"))
-        .orderBy("dist", "node_kind")
-    )
-
-
-# ---------------------------------------------------------------------------
-# STAGED for r15 registration — degree_assortativity_trade (r13
-# continuation: completes the network-statistics shelf — pagerank/HITS
-# rank, triangles/clustering count motifs, BFS measures distance, CC
-# labels components; degree ASSORTATIVITY (Newman 2002) is the canonical
-# remaining global statistic: do high-degree nodes attach to high-degree
-# nodes?).
-#
-# Pearson correlation of (deg(src), deg(dst)) over the DIRECTED edge
-# list of the undirected customer↔supplier trade network (both
-# directions present — the pagerank edge construction). The symmetry of
-# that edge list is the exactness win: Σdeg_src = Σdeg_dst and
-# Σdeg_src² = Σdeg_dst², so the usual sqrt(d_x)·sqrt(d_y) denominator
-# collapses to the single integer d = m·Σx² − (Σx)² and
-#     r = (m·Σxy − (Σx)²) / d
-# is EXACTLY RATIONAL — no square root in the estimator at all. The
-# certified columns are the exact BIGINT m, Σx, Σx², Σxy, num, d; the
-# displayed r_ppm is one pinned-order IEEE division over them (the
-# acf/spearman precedent: correctly-rounded int64→double casts stay
-# deterministic past 2^53), NULL for a degree-regular graph (d = 0).
-#
-# Overflow documented in the staged test from measured fixture maxima
-# (m·Σxy is the big term; ~2.4e14 at sf0.1, 2^63 leaves ~5 orders of
-# magnitude).
-#
-# Scale shape: degrees via one groupBy on the edge list; two equi-joins
-# to attach deg(src)/deg(dst); one combinable moment aggregation to a
-# single row. No windows, no all-pairs, no nested loop of its own (the
-# final 1-row frame may broadcast under AQE — whitelist entry pre-added
-# defensively, the logrank precedent).
-# ---------------------------------------------------------------------------
-
-ASSORTATIVITY_ORACLE = f"""
-WITH pairs AS (
-  SELECT DISTINCT o.o_custkey AS cust, l.l_suppkey AS supp
-  FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-),
-edges AS (
-  SELECT CAST(cust AS BIGINT) AS src,
-         CAST(supp + {_SUPP_OFFSET} AS BIGINT) AS dst FROM pairs
-  UNION ALL
-  SELECT CAST(supp + {_SUPP_OFFSET} AS BIGINT) AS src,
-         CAST(cust AS BIGINT) AS dst FROM pairs
-),
-deg AS (
-  SELECT src AS node, CAST(count(*) AS BIGINT) AS d FROM edges GROUP BY src
-),
-joined AS (
-  SELECT ds.d AS dx, dd.d AS dy
-  FROM edges e
-  JOIN deg ds ON ds.node = e.src
-  JOIN deg dd ON dd.node = e.dst
-),
-mom AS (
-  SELECT CAST(count(*) AS BIGINT) AS m,
-         CAST(sum(dx) AS BIGINT) AS sx,
-         CAST(sum(dx * dx) AS BIGINT) AS sxx,
-         CAST(sum(dx * dy) AS BIGINT) AS sxy
-  FROM joined
-)
-SELECT m, sx, sxx, sxy,
-       m * sxy - sx * sx AS num,
-       m * sxx - sx * sx AS den,
-       CASE WHEN m * sxx - sx * sx > 0 THEN
-         CAST(floor((CAST(m * sxy - sx * sx AS DOUBLE)
-                     / CAST(m * sxx - sx * sx AS DOUBLE))
-                    * 1000000.0) AS BIGINT)
-       END AS r_ppm
-FROM mom
-"""
-
-
-def degree_assortativity_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Newman degree assortativity of the trade network — exactly
-    rational on the symmetric directed edge list (no sqrt: the two
-    standard deviations coincide), exact BIGINT moments certified raw,
-    r_ppm one pinned-order IEEE division, NULL on degree-regular graphs.
-    See the staging comment. STAGED r13 -> registers r15 (the r14 window
-    is full)."""
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey"
-    )
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey"
-    )
-    pairs = (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .select("o_custkey", "l_suppkey")
-        .distinct()
-    )
-    edges = persist_once(
-        pairs.select(
-            F.col("o_custkey").cast("bigint").alias("src"),
-            (F.col("l_suppkey") + F.lit(_SUPP_OFFSET)).cast("bigint").alias(
-                "dst"
-            ),
-        ).unionByName(
-            pairs.select(
-                (F.col("l_suppkey") + F.lit(_SUPP_OFFSET))
-                .cast("bigint")
-                .alias("src"),
-                F.col("o_custkey").cast("bigint").alias("dst"),
-            )
-        )
-    )
-    deg = edges.groupBy("src").agg(
-        F.count(F.lit(1)).cast("bigint").alias("d")
-    ).withColumnRenamed("src", "node")
-    joined = (
-        edges.join(deg.withColumnRenamed("d", "dx"), edges.src == deg.node)
-        .drop("node")
-        .join(
-            deg.withColumnRenamed("d", "dy").withColumnRenamed(
-                "node", "node2"
-            ),
-            edges.dst == F.col("node2"),
-        )
-        .select("dx", "dy")
-    )
-    mom = joined.agg(
-        F.count(F.lit(1)).cast("bigint").alias("m"),
-        F.sum("dx").cast("bigint").alias("sx"),
-        F.sum(F.expr("dx * dx")).cast("bigint").alias("sxx"),
-        F.sum(F.expr("dx * dy")).cast("bigint").alias("sxy"),
-    )
-    return mom.select(
-        "m",
-        "sx",
-        "sxx",
-        "sxy",
-        F.expr("m * sxy - sx * sx").alias("num"),
-        F.expr("m * sxx - sx * sx").alias("den"),
-        F.expr(
-            "CASE WHEN m * sxx - sx * sx > 0 THEN"
-            " CAST(floor((CAST(m * sxy - sx * sx AS DOUBLE)"
-            " / CAST(m * sxx - sx * sx AS DOUBLE)) * 1000000.0) AS BIGINT)"
-            " END"
-        ).alias("r_ppm"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# STAGED for r15 registration — modularity_nation_partition (r13
-# continuation: the community-QUALITY class — dedup_cluster_assignments
-# labels components and triangle/assortativity measure local/global
-# structure, but nothing scores a PARTITION of the graph; Newman-Girvan
-# modularity is the canonical objective every community-detection
-# pipeline optimizes and audits).
-#
-# Modularity Q of the nation partition of the trade network (customers
-# and suppliers both carry a nationkey — the natural given partition).
-# On the DIRECTED edge list of M = 2·|undirected| entries,
-#     Q = Σ_c [ A_c/M − (K_c/M)² ]
-# with A_c = directed edges inside community c and K_c = Σ degrees of
-# c's nodes — so
-#     Q · M² = Σ_c (M·A_c − K_c²)
-# is an EXACT BIGINT (the assortativity trick again: pick the algebraic
-# form whose denominator is one integer). Output: one row per community
-# with the exact (n_nodes, a_inner, k_degree, contribution numerator)
-# plus the partition total q_ppm = (Σ_c(M·A_c − K_c²)·10⁶) div M² — a
-# single integer division of exact integers (truncating toward zero in
-# BOTH engines, the measured trunc-div agreement — Q is legitimately
-# negative for anti-community partitions); no float op anywhere.
-#
-# Overflow: Σ_c K_c² ≤ M² — ~8.5e9 at sf0.1 (M ≈ 92k), ×10⁶ = 8.5e15;
-# ×16 → M ≈ 1.5e6, M²·… 2.2e18 — inside int64, asserted in the staged
-# test.
-#
-# Scale shape: degrees and community labels via one groupBy + two
-# broadcast-dim joins (nation is 25 rows; the node→nation map is
-# entity-bounded); A_c via an equi-join of the edge list to the two
-# endpoint labels; ONE combinable aggregation to |nations| rows and a
-# 1-row M crossJoin (whitelist entry pre-added).
-# ---------------------------------------------------------------------------
-
-MODULARITY_ORACLE = f"""
-WITH pairs AS (
-  SELECT DISTINCT o.o_custkey AS cust, l.l_suppkey AS supp
-  FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-),
-edges AS (
-  SELECT CAST(cust AS BIGINT) AS src,
-         CAST(supp + {_SUPP_OFFSET} AS BIGINT) AS dst FROM pairs
-  UNION ALL
-  SELECT CAST(supp + {_SUPP_OFFSET} AS BIGINT) AS src,
-         CAST(cust AS BIGINT) AS dst FROM pairs
-),
-labels AS (
-  SELECT CAST(c_custkey AS BIGINT) AS node,
-         CAST(c_nationkey AS BIGINT) AS community
-  FROM customer
-  UNION ALL
-  SELECT CAST(s_suppkey + {_SUPP_OFFSET} AS BIGINT) AS node,
-         CAST(s_nationkey AS BIGINT) AS community
-  FROM supplier
-),
-lab_edges AS (
-  SELECT ls.community AS c_src, ld.community AS c_dst
-  FROM edges e
-  JOIN labels ls ON ls.node = e.src
-  JOIN labels ld ON ld.node = e.dst
-),
-m AS (SELECT CAST(count(*) AS BIGINT) AS m_dir FROM lab_edges),
-per_c AS (
-  SELECT c_src AS community,
-         CAST(count(*) AS BIGINT) AS k_degree,
-         CAST(sum(CASE WHEN c_dst = c_src THEN 1 ELSE 0 END) AS BIGINT)
-           AS a_inner
-  FROM lab_edges GROUP BY c_src
-),
-nodes_per AS (
-  SELECT l.community, CAST(count(*) AS BIGINT) AS n_nodes
-  FROM labels l
-  WHERE l.node IN (SELECT src FROM edges)
-  GROUP BY l.community
-),
-contrib AS (
-  SELECT p.community, n.n_nodes, p.a_inner, p.k_degree,
-         m.m_dir * p.a_inner - p.k_degree * p.k_degree AS q_num
-  FROM per_c p JOIN nodes_per n ON n.community = p.community
-  CROSS JOIN m
-)
-SELECT community, n_nodes, a_inner, k_degree, q_num,
-       (CAST((SELECT sum(q_num) FROM contrib) AS BIGINT) * 1000000)
-         // ((SELECT m_dir FROM m) * (SELECT m_dir FROM m)) AS q_ppm
-FROM contrib
-ORDER BY community
-"""
-
-
-def modularity_nation_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Newman-Girvan modularity of the nation partition of the trade
-    network — exactly rational via Q·M² = Σ_c(M·A_c − K_c²) on the
-    directed edge list: per-community exact BIGINT (nodes, inner edges,
-    degree mass, contribution numerator) and the partition q_ppm as one
-    truncating integer division (negative Q legal). No float op anywhere. See the staging comment for
-    the bound. STAGED r13 -> registers r15 (the r14 window is full)."""
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey"
-    )
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey"
-    )
-    pairs = (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .select("o_custkey", "l_suppkey")
-        .distinct()
-    )
-    edges = pairs.select(
-        F.col("o_custkey").cast("bigint").alias("src"),
-        (F.col("l_suppkey") + F.lit(_SUPP_OFFSET)).cast("bigint").alias(
-            "dst"
-        ),
-    ).unionByName(
-        pairs.select(
-            (F.col("l_suppkey") + F.lit(_SUPP_OFFSET))
-            .cast("bigint")
-            .alias("src"),
-            F.col("o_custkey").cast("bigint").alias("dst"),
-        )
-    )
-    cust_lab = load_table(spark, sf_dir, "customer").select(
-        F.col("c_custkey").cast("bigint").alias("node"),
-        F.col("c_nationkey").cast("bigint").alias("community"),
-    )
-    supp_lab = load_table(spark, sf_dir, "supplier").select(
-        (F.col("s_suppkey") + F.lit(_SUPP_OFFSET)).cast("bigint").alias(
-            "node"
-        ),
-        F.col("s_nationkey").cast("bigint").alias("community"),
-    )
-    labels = cust_lab.unionByName(supp_lab)
-    lab_edges = persist_once(
-        edges.join(
-            labels.withColumnRenamed("community", "c_src"),
-            edges.src == labels.node,
-        )
-        .drop("node")
-        .join(
-            labels.withColumnRenamed("community", "c_dst").withColumnRenamed(
-                "node", "node2"
-            ),
-            edges.dst == F.col("node2"),
-        )
-        .select("src", "c_src", "c_dst")
-    )
-    m = lab_edges.agg(F.count(F.lit(1)).cast("bigint").alias("m_dir"))
-    per_c = lab_edges.groupBy(F.col("c_src").alias("community")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("k_degree"),
-        F.sum(
-            F.when(F.col("c_dst") == F.col("c_src"), 1).otherwise(0)
-        ).cast("bigint").alias("a_inner"),
-    )
-    nodes_per = (
-        lab_edges.select(F.col("src").alias("node"), F.col("c_src").alias("community"))
-        .distinct()
-        .groupBy("community")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_nodes"))
-    )
-    contrib = persist_once(
-        per_c.join(nodes_per, "community")
-        .crossJoin(F.broadcast(m))
-        .select(
-            "community",
-            "n_nodes",
-            "a_inner",
-            "k_degree",
-            (
-                F.col("m_dir") * F.col("a_inner")
-                - F.col("k_degree") * F.col("k_degree")
-            ).alias("q_num"),
-            "m_dir",
-        )
-    )
-    total = contrib.agg(
-        F.sum("q_num").cast("bigint").alias("q_total"),
-        F.max("m_dir").alias("m_dir"),
-    )
-    return (
-        contrib.drop("m_dir")
-        .crossJoin(F.broadcast(total))
-        .select(
-            "community",
-            "n_nodes",
-            "a_inner",
-            "k_degree",
-            "q_num",
-            F.expr("(q_total * 1000000) div (m_dir * m_dir)").alias("q_ppm"),
-        )
-        .orderBy("community")
-    )

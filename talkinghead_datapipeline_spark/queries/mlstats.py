@@ -1573,314 +1573,3 @@ def conformal_coverage_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("lang")
     )
-
-
-# ---------------------------------------------------------------------------
-# STAGED for r15 registration — oof_target_encoding_segment (r13
-# continuation: the leakage-free feature-engineering class —
-# group_split_no_leakage certifies the SPLIT and kfold_linreg_cv the
-# cross-validated FIT, but nothing in the registry computes a
-# leakage-free derived FEATURE; out-of-fold target encoding is the
-# canonical one: encode a categorical by the target mean computed on
-# every fold EXCEPT the row's own).
-#
-# Orders are joined to their customer's market segment (broadcast dim
-# equi-join), folds assigned by the kfold family's portable 32-bit md5
-# hash ('te' || o_orderkey, mod 5 — non-negative in both engines). For
-# each (segment, fold) cell the encoding is trained on the OTHER four
-# folds of that segment:
-#   oof_mean_micro     = (s_tr · 10^4) div n_tr          [micro-dollars]
-#   prior_micro        = leakage-free global mean, same fold excluded
-#   oof_smoothed_micro = (s_tr·10^4 + M·prior_micro) div (n_tr + M), M=20
-# where s/n are exact BIGINT cent sums/counts and train-side stats are
-# segment-total-minus-cell via windows over the 25-row cell frame (the
-# kfold total-minus-fold pattern). Integer end-to-end: the only
-# divisions are floor divs of non-negative BIGINTs — deterministic
-# cross-engine, no rounding-boundary argument.
-#
-# Overflow bound (asserted in the staged test): max cent sum · 10^4 —
-# 3.76e12 · 10^4 = 3.8e16 at sf0.1 and rows-linear in replication (×4 →
-# 1.5e17), 61× inside int64.
-#
-# Scale shape: ONE data-sized aggregation (orders ⋈ broadcast customer →
-# 25 (segment, fold) cells with map-side partial aggregation); the
-# exclusion windows live on the 25-row frame. The DuckDB oracle
-# evaluates the leave-fold-out definition LITERALLY — correlated
-# self-exclusion subqueries per cell — a genuinely independent
-# formulation of "trained on everything except this fold".
-# ---------------------------------------------------------------------------
-
-OOF_TARGET_ENCODING_ORACLE = """
-WITH base AS (
-  SELECT c.c_mktsegment AS segment,
-         ('0x' || substr(md5('te' || CAST(o.o_orderkey AS VARCHAR)), 1, 8))
-           ::BIGINT % 5 AS fold,
-         CAST(round(o.o_totalprice * 100) AS BIGINT) AS cents
-  FROM orders o JOIN customer c ON c.c_custkey = o.o_custkey
-),
-cells AS (
-  SELECT DISTINCT segment, fold FROM base
-)
-SELECT a.segment, CAST(a.fold AS BIGINT) AS fold,
-       (SELECT CAST(count(*) AS BIGINT) FROM base b
-         WHERE b.segment = a.segment AND b.fold <> a.fold) AS n_train,
-       -- NULL when the training side is empty (degenerate crafted corpus:
-       -- a segment living in a single fold) — matches Spark's div-by-zero
-       (SELECT CASE WHEN count(*) > 0 THEN
-                 (CAST(sum(b.cents) AS BIGINT) * 10000)
-                 // CAST(count(*) AS BIGINT) END FROM base b
-         WHERE b.segment = a.segment AND b.fold <> a.fold) AS oof_mean_micro,
-       (SELECT (CAST(COALESCE(sum(b.cents), 0) AS BIGINT) * 10000
-                + 20 * ((SELECT (CAST(sum(g.cents) AS BIGINT) * 10000)
-                                // CAST(count(*) AS BIGINT) FROM base g
-                          WHERE g.fold <> a.fold))
-               ) // (CAST(count(*) AS BIGINT) + 20) FROM base b
-         WHERE b.segment = a.segment AND b.fold <> a.fold)
-         AS oof_smoothed_micro
-FROM cells a
-ORDER BY a.segment, a.fold
-"""
-
-
-def oof_target_encoding_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Leakage-free out-of-fold target encoding of customer market segment
-    against order value: per (segment, fold) cell, the mean and the
-    M=20-smoothed mean of cents over the OTHER four folds, in exact
-    floor-micro-dollar integers — train-side stats are total-minus-cell
-    windows over the 25-row cell frame; the oracle evaluates the
-    leave-fold-out definition literally via correlated self-exclusion
-    subqueries. See the staging comment for the overflow bound. STAGED
-    r13 -> registers r15 (the r14 window is full)."""
-    from talkinghead_datapipeline_spark.operators.dedup import portable_hash32
-
-    orders = load_table(spark, sf_dir, "orders")
-    cust = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", F.col("c_mktsegment").alias("segment")
-    )
-    base = orders.join(
-        F.broadcast(cust), orders.o_custkey == cust.c_custkey
-    ).select(
-        "segment",
-        (
-            portable_hash32(
-                F.concat(F.lit("te"), F.col("o_orderkey").cast("string"))
-            )
-            % 5
-        ).alias("fold"),
-        F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
-    )
-    per = base.groupBy("segment", "fold").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_sf"),
-        F.sum("cents").cast("bigint").alias("s_sf"),
-    )
-    w_seg = W.partitionBy("segment")
-    w_fold = W.partitionBy("fold")
-    w_all = W.partitionBy()
-    cells = per.select(
-        "segment",
-        "fold",
-        (F.sum("n_sf").over(w_seg) - F.col("n_sf")).alias("n_tr"),
-        (F.sum("s_sf").over(w_seg) - F.col("s_sf")).alias("s_tr"),
-        (F.sum("n_sf").over(w_all) - F.sum("n_sf").over(w_fold)).alias(
-            "n_gtr"
-        ),
-        (F.sum("s_sf").over(w_all) - F.sum("s_sf").over(w_fold)).alias(
-            "s_gtr"
-        ),
-    )
-    return cells.select(
-        "segment",
-        F.col("fold").cast("bigint").alias("fold"),
-        F.col("n_tr").alias("n_train"),
-        # CASE guards: ANSI div raises on zero; NULL mean when the
-        # training side is empty (degenerate single-fold segment), NULL
-        # smoothing only when the whole prior side is empty too
-        F.expr(
-            "CASE WHEN n_tr > 0 THEN (s_tr * 10000) div n_tr END"
-        ).alias("oof_mean_micro"),
-        F.expr(
-            "CASE WHEN n_gtr > 0 THEN"
-            " (s_tr * 10000 + 20 * ((s_gtr * 10000) div n_gtr))"
-            " div (n_tr + 20) END"
-        ).alias("oof_smoothed_micro"),
-    ).orderBy("segment", "fold")
-
-
-# ---------------------------------------------------------------------------
-# STAGED for r15 registration — decision_stump_split_scores (r13
-# continuation: the tree-learner split-scoring class — the registry fits
-# linear models (OLS/IRLS/kfold) and calibrates scores (isotonic,
-# reliability), but nothing evaluates CANDIDATE FEATURE SPLITS, the
-# greedy primitive inside every decision-tree/GBDT learner and every
-# feature-selection pass).
-#
-# Scores the 9 interior decile thresholds of n_chars as binary splits
-# predicting lang = 'en', by GINI impurity gain — chosen over entropy
-# precisely because Gini is RATIONAL: with per-side counts (n_g, pos_g),
-#     imp_g = (n_g² − pos_g² − neg_g²) / n_g²
-# and every quantity below is exact BIGINT via the quantize-first
-# pattern (the nelson_aalen precedent):
-#     parent_imp_ppb     = ((n² − pos² − neg²)·10⁹) div n²
-#     child_g (weighted) = ((n_g² − pos_g² − neg_g²)·10⁹) div (n_g·n)
-#     gain_ppb           = parent_imp_ppb − child_l − child_r
-# No IEEE op anywhere. Thresholds are data-derived deterministically:
-# t_i = min x with cum_cnt ≥ ceil(i·n/10) on the cumulative distinct-x
-# frame (ties collapse duplicated thresholds; degenerate all-one-side
-# splits are emitted with gain NULL via the n_g > 0 guards).
-#
-# Overflow bound (asserted in the staged test): n²·10⁹ — 2.5e16 at
-# sf0.1's 5k docs, 6.4e18 at ×16 (inside int64; a larger corpus drops
-# the quantum to ppm, one constant).
-#
-# Scale shape: ONE aggregation to the distinct-x frame (cardinality-
-# bounded by the value domain, not rows), cumulative windows on it, a
-# ≤9-row threshold frame joined back by a single range probe each, and a
-# 1-row totals crossJoin — whitelist entry pre-added. The oracle shares
-# the formulation (the cumulative frame IS the spec); independence comes
-# from the staged test's direct-filter Python recompute and the
-# Fraction-exactness envelope fuzz.
-# ---------------------------------------------------------------------------
-
-DECISION_STUMP_ORACLE = """
-WITH base AS (
-  SELECT CAST(n_chars AS BIGINT) AS x,
-         CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS pos
-  FROM documents
-),
-totals AS (
-  SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(pos) AS BIGINT) AS p
-  FROM base
-),
-per_x AS (
-  SELECT x, CAST(count(*) AS BIGINT) AS cnt, CAST(sum(pos) AS BIGINT) AS ppos
-  FROM base GROUP BY x
-),
-cum AS (
-  SELECT x,
-         CAST(sum(cnt) OVER w AS BIGINT) AS cum_cnt,
-         CAST(sum(ppos) OVER w AS BIGINT) AS cum_pos
-  FROM per_x WINDOW w AS (ORDER BY x ROWS BETWEEN UNBOUNDED PRECEDING
-                          AND CURRENT ROW)
-),
-thresholds AS (
-  SELECT DISTINCT
-         (SELECT min(c.x) FROM cum c
-           WHERE c.cum_cnt >= ((i.i * t.n + 9) // 10)) AS t
-  FROM (VALUES (1),(2),(3),(4),(5),(6),(7),(8),(9)) i(i)
-  CROSS JOIN totals t
-),
-split AS (
-  SELECT th.t,
-         (SELECT c.cum_cnt FROM cum c WHERE c.x = th.t) AS n_l,
-         (SELECT c.cum_pos FROM cum c WHERE c.x = th.t) AS pos_l,
-         tt.n, tt.p
-  FROM thresholds th CROSS JOIN totals tt
-),
-scored AS (
-  SELECT t, n_l, pos_l, n - n_l AS n_r, p - pos_l AS pos_r, n, p,
-         ((n * n - p * p - (n - p) * (n - p)) * 1000000000)
-           // (n * n) AS parent_imp_ppb,
-         CASE WHEN n_l > 0 AND n - n_l > 0 THEN
-           ((n * n - p * p - (n - p) * (n - p)) * 1000000000) // (n * n)
-           - ((n_l * n_l - pos_l * pos_l
-               - (n_l - pos_l) * (n_l - pos_l)) * 1000000000)
-             // (n_l * n)
-           - (((n - n_l) * (n - n_l) - (p - pos_l) * (p - pos_l)
-               - ((n - n_l) - (p - pos_l)) * ((n - n_l) - (p - pos_l)))
-              * 1000000000) // ((n - n_l) * n)
-         END AS gain_ppb
-  FROM split
-)
-SELECT t AS threshold, n_l, pos_l, n_r, pos_r, parent_imp_ppb, gain_ppb,
-       CAST(row_number() OVER (ORDER BY gain_ppb DESC NULLS LAST, t ASC)
-            = 1 AS BIGINT) AS is_best
-FROM scored ORDER BY threshold
-"""
-
-
-def decision_stump_split_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gini-gain scores for the 9 interior decile splits of n_chars
-    predicting lang = 'en' — exact BIGINT rational impurities via the
-    quantize-first ppb pattern, data-derived deterministic thresholds on
-    the cumulative distinct-x frame, NULL gain on degenerate one-sided
-    splits, is_best by (gain DESC, threshold ASC). No IEEE op anywhere.
-    See the staging comment for the bound. STAGED r13 -> registers r15
-    (the r14 window is full)."""
-    docs = load_table(spark, sf_dir, "documents")
-    base = docs.select(
-        F.col("n_chars").cast("bigint").alias("x"),
-        (F.col("lang") == "en").cast("bigint").alias("pos"),
-    )
-    totals = base.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum("pos").cast("bigint").alias("p"),
-    )
-    per_x = base.groupBy("x").agg(
-        F.count(F.lit(1)).cast("bigint").alias("cnt"),
-        F.sum("pos").cast("bigint").alias("ppos"),
-    )
-    w_cum = W.orderBy("x").rowsBetween(W.unboundedPreceding, W.currentRow)
-    cum = persist_once(
-        per_x.select(
-            "x",
-            F.sum("cnt").over(w_cum).cast("bigint").alias("cum_cnt"),
-            F.sum("ppos").over(w_cum).cast("bigint").alias("cum_pos"),
-        )
-    )
-    ranks = totals.select(
-        "n",
-        "p",
-        F.explode(
-            F.array(*[
-                F.expr(f"({i} * n + 9) div 10") for i in range(1, 10)
-            ])
-        ).alias("r_need"),
-    )
-    # threshold per decile rank: min x whose cumulative count reaches it
-    thresholds = (
-        cum.join(F.broadcast(ranks), cum.cum_cnt >= ranks.r_need)
-        .groupBy("r_need", "n", "p")
-        .agg(F.min("x").alias("t"))
-        .select("t", "n", "p")
-        .distinct()
-    )
-    split = thresholds.join(
-        cum.select(
-            F.col("x").alias("t"),
-            F.col("cum_cnt").alias("n_l"),
-            F.col("cum_pos").alias("pos_l"),
-        ),
-        "t",
-    )
-    scored = split.select(
-        "t",
-        "n_l",
-        "pos_l",
-        F.expr("n - n_l").alias("n_r"),
-        F.expr("p - pos_l").alias("pos_r"),
-        F.expr(
-            "((n * n - p * p - (n - p) * (n - p)) * 1000000000) div (n * n)"
-        ).alias("parent_imp_ppb"),
-        F.expr(
-            "CASE WHEN n_l > 0 AND n - n_l > 0 THEN"
-            " ((n * n - p * p - (n - p) * (n - p)) * 1000000000) div (n * n)"
-            " - ((n_l * n_l - pos_l * pos_l"
-            "     - (n_l - pos_l) * (n_l - pos_l)) * 1000000000)"
-            "   div (n_l * n)"
-            " - (((n - n_l) * (n - n_l) - (p - pos_l) * (p - pos_l)"
-            "     - ((n - n_l) - (p - pos_l)) * ((n - n_l) - (p - pos_l)))"
-            "    * 1000000000) div ((n - n_l) * n)"
-            " END"
-        ).alias("gain_ppb"),
-    )
-    w_best = W.orderBy(F.desc_nulls_last("gain_ppb"), F.asc("t"))
-    return scored.select(
-        F.col("t").alias("threshold"),
-        "n_l",
-        "pos_l",
-        "n_r",
-        "pos_r",
-        "parent_imp_ppb",
-        "gain_ppb",
-        (F.row_number().over(w_best) == 1).cast("bigint").alias("is_best"),
-    ).orderBy("threshold")

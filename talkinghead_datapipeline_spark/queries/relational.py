@@ -909,100 +909,3 @@ def bloom_filter_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(n_probe))
         .select("n_probe", "n_candidates", "n_true", "n_false_pos", "fp_rate")
     )
-
-
-# ---------------------------------------------------------------------------
-# STAGED for r15 registration — pareto_skyline_parts (r13: the dominance /
-# skyline operator class — nothing in the registry answers "which rows are
-# not dominated under a multi-objective preference", the classic catalog /
-# candidate-pruning primitive; pairs with topk_per_group (single-objective
-# ranking) and kcenter_coreset_selection (coverage-style pruning)).
-#
-# Per-brand 2-D Pareto skyline of parts under "cheaper AND bigger is
-# better": part B dominates part A iff price(B) <= price(A) AND
-# size(B) >= size(A) with at least one strict — the textbook dominance
-# relation. Exact ties on BOTH axes dominate in neither direction, so
-# duplicated (price, size) points all survive (standard skyline
-# semantics, pinned by a crafted corpus in the staged test).
-#
-# Determinism: integer end-to-end — price is the established
-# CAST(round(p_retailprice*100) AS BIGINT) cents construct (the q1 cents
-# pairing, cross-engine-adjudicated since r1), size is already integral;
-# dominance is pure integer comparison. No float op anywhere.
-#
-# Spark formulation (the 100 TB shape): the O(n²) dominance test
-# collapses to TWO window functions per brand partition —
-#   m_cheaper = max(size) OVER (PARTITION BY brand ORDER BY price_cents
-#                               RANGE UNBOUNDED PRECEDING .. 1 PRECEDING)
-#   m_same    = max(size) OVER (PARTITION BY brand, price_cents)
-# A point survives iff (m_cheaper IS NULL OR m_cheaper < size) — no
-# strictly-cheaper point matches its size — AND size = m_same — nothing
-# at its exact price is strictly bigger. One shuffle on brand, zero
-# joins, never all-pairs: the identity is that in 2-D, dominance by a
-# strictly-cheaper point reduces to the running max of the other axis,
-# and dominance at equal price reduces to the per-price max. The DuckDB
-# oracle deliberately evaluates the O(n²) NOT EXISTS dominance predicate
-# VERBATIM — a genuinely independent formulation of the same relation
-# (the spec, not the plan), cheap at oracle SFs.
-#
-# Scale shape: window-only over the part table (the smallest fact); at
-# 100 TB the brand partitioning is the only shuffle and skyline output
-# is O(expected ln n) per brand for continuous-ish axes.
-# ---------------------------------------------------------------------------
-
-PARETO_SKYLINE_ORACLE = """
-WITH p AS (
-  SELECT p_brand, p_partkey,
-         CAST(p_size AS BIGINT) AS size,
-         CAST(round(p_retailprice * 100) AS BIGINT) AS price_cents
-  FROM part
-)
-SELECT a.p_brand, a.p_partkey, a.size, a.price_cents
-FROM p a
-WHERE NOT EXISTS (
-  SELECT 1 FROM p b
-  WHERE b.p_brand = a.p_brand
-    AND b.price_cents <= a.price_cents
-    AND b.size >= a.size
-    AND (b.price_cents < a.price_cents OR b.size > a.size)
-)
-ORDER BY a.p_brand, a.price_cents, a.p_partkey
-"""
-
-
-def pareto_skyline_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-brand 2-D Pareto skyline (minimize price, maximize size) via
-    the running-max window identity — two windows, one shuffle on brand,
-    never all-pairs; the oracle evaluates the textbook O(n²) NOT EXISTS
-    dominance predicate as an independent formulation. Integer
-    end-to-end. STAGED r13 -> registers r15 (the r14 window is full)."""
-    part = load_table(spark, sf_dir, "part").select(
-        "p_brand",
-        "p_partkey",
-        F.col("p_size").cast("bigint").alias("size"),
-        F.expr("CAST(round(p_retailprice * 100) AS BIGINT)").alias(
-            "price_cents"
-        ),
-    )
-    w_cheaper = (
-        W.partitionBy("p_brand")
-        .orderBy("price_cents")
-        .rangeBetween(W.unboundedPreceding, -1)
-    )
-    w_same_price = W.partitionBy("p_brand", "price_cents")
-    flagged = part.select(
-        "p_brand",
-        "p_partkey",
-        "size",
-        "price_cents",
-        F.max("size").over(w_cheaper).alias("m_cheaper"),
-        F.max("size").over(w_same_price).alias("m_same"),
-    )
-    return (
-        flagged.filter(
-            (F.col("m_cheaper").isNull() | (F.col("m_cheaper") < F.col("size")))
-            & (F.col("size") == F.col("m_same"))
-        )
-        .select("p_brand", "p_partkey", "size", "price_cents")
-        .orderBy("p_brand", "price_cents", "p_partkey")
-    )

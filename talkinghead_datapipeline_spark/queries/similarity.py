@@ -1559,146 +1559,3 @@ def dbscan_grid_roles(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("role"),
         )
     )
-
-
-# ---------------------------------------------------------------------------
-# STAGED for r15 registration — ndcg_mrr_retrieval_eval (r13 continuation:
-# the retrieval-evaluation class — sim_lsh_recall_certified certifies set
-# overlap (recall@10) but nothing in the registry scores the RANKING a
-# retrieval tier returns; NDCG@k and MRR are the pair every search/RAG
-# evaluation harness reports next to recall).
-#
-# NDCG@10 + MRR of the LSH-bucketed ranker against the brute-force cosine
-# top-10 ground truth — composed from the same two REGISTERED queries
-# (and, oracle-side, their oracle strings verbatim) that users actually
-# run, the sim_lsh_recall_certified pattern.
-#
-# Exactness design: binary relevance (in/out of the exact top-10), and
-# the rank discounts 1/log2(i+1) are pre-quantized IN PYTHON at module
-# build to floor-ppm integer literals that BOTH engines share — no libm
-# log2 at query time anywhere, so DCG/IDCG are plain BIGINT sums of
-# shared constants and the whole metric is integer end-to-end:
-#   dcg_ppm  = Σ_{hits} disc_ppm[rank_in_ann]
-#   idcg_ppm = Σ_{i=1..n_exact} disc_ppm[i]      (a pinned cumsum literal)
-#   ndcg_ppm = (dcg_ppm · 10^6) div idcg_ppm
-#   rr_ppm   = 10^6 div first_hit_rank           (NULL when no hit)
-# Ranks come from row_number over (cos_sim DESC, vec_id ASC) — the same
-# deterministic order the registered top-k queries certify.
-#
-# Scale shape: everything downstream of the two composed queries runs on
-# ≤10-row frames; the data-sized work is exactly the registered queries'
-# (map-only scan + bucket probe). Like the recall query, the 10-row
-# ann×exact join may plan as a broadcast nested loop — whitelist entry
-# pre-added at staging time.
-# ---------------------------------------------------------------------------
-
-_NDCG_K = 10
-# floor(1e6 / log2(i+1)) for ann rank i = 1..10 — pinned at build time so
-# no engine evaluates log2 at query time
-_DISC_PPM = tuple(
-    int(1_000_000 // __import__("math").log2(i + 1))
-    if i > 1 else 1_000_000
-    for i in range(1, _NDCG_K + 1)
-)
-_CUM_DISC_PPM = tuple(
-    sum(_DISC_PPM[: i + 1]) for i in range(_NDCG_K)
-)
-
-
-def _ndcg_oracle() -> str:
-    from talkinghead_datapipeline_spark.queries import _REGISTRY
-
-    exact = _REGISTRY["sim_brute_cosine_topk"].oracle
-    ann = _REGISTRY["sim_lsh_bucket_topk"].oracle
-    disc_case = " ".join(
-        f"WHEN {i + 1} THEN {d}" for i, d in enumerate(_DISC_PPM)
-    )
-    cum_case = " ".join(
-        f"WHEN {i + 1} THEN {c}" for i, c in enumerate(_CUM_DISC_PPM)
-    )
-    return f"""
-    WITH exact_tk AS ({exact}),
-    ann_tk AS ({ann}),
-    a AS (
-      SELECT vec_id,
-             row_number() OVER (ORDER BY cos_sim DESC, vec_id ASC) AS ra
-      FROM ann_tk
-    ),
-    hits AS (
-      SELECT a.ra FROM a JOIN exact_tk e ON e.vec_id = a.vec_id
-    ),
-    h AS (
-      SELECT CAST(count(*) AS BIGINT) AS n_hits,
-             CAST(min(ra) AS BIGINT) AS first_hit_rank,
-             CAST(COALESCE(sum(CASE ra {disc_case} END), 0) AS BIGINT)
-               AS dcg_ppm
-      FROM hits
-    ),
-    meta AS (
-      SELECT CAST((SELECT count(*) FROM exact_tk) AS BIGINT) AS n_exact,
-             CAST((SELECT count(*) FROM ann_tk) AS BIGINT) AS n_ann
-    )
-    SELECT m.n_exact, m.n_ann, h.n_hits, h.dcg_ppm,
-           CAST(CASE m.n_exact {cum_case} END AS BIGINT) AS idcg_ppm,
-           CASE WHEN m.n_exact > 0 THEN
-             (h.dcg_ppm * 1000000) // (CASE m.n_exact {cum_case} END)
-           END AS ndcg_ppm,
-           h.first_hit_rank,
-           CASE WHEN h.first_hit_rank IS NOT NULL
-                THEN 1000000 // h.first_hit_rank END AS rr_ppm
-    FROM meta m CROSS JOIN h
-    """
-
-
-NDCG_MRR_ORACLE = _ndcg_oracle()
-
-
-def ndcg_mrr_retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NDCG@10 + MRR of the LSH ranker vs the brute-force cosine ground
-    truth, composed from the two registered top-k queries; rank discounts
-    are build-time floor-ppm integer literals shared by both engines, so
-    the whole metric is exact BIGINT arithmetic. See the staging comment.
-    STAGED r13 -> registers r15 (the r14 window is full)."""
-    exact = sim_brute_cosine_topk(spark, sf_dir).select("vec_id")
-    ann = sim_lsh_bucket_topk(spark, sf_dir).select("vec_id", "cos_sim")
-    w = W.orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-    a = ann.select(
-        "vec_id", F.row_number().over(w).cast("bigint").alias("ra")
-    )
-    disc_case = " ".join(
-        f"WHEN {i + 1} THEN {d}" for i, d in enumerate(_DISC_PPM)
-    )
-    cum_case = " ".join(
-        f"WHEN {i + 1} THEN {c}" for i, c in enumerate(_CUM_DISC_PPM)
-    )
-    hits = a.join(exact, "vec_id")
-    h = hits.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_hits"),
-        F.min("ra").cast("bigint").alias("first_hit_rank"),
-        F.coalesce(
-            F.sum(F.expr(f"CASE ra {disc_case} END")), F.lit(0)
-        ).cast("bigint").alias("dcg_ppm"),
-    )
-    meta = exact.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_exact")
-    ).crossJoin(
-        ann.agg(F.count(F.lit(1)).cast("bigint").alias("n_ann"))
-    )
-    return meta.crossJoin(F.broadcast(h)).select(
-        "n_exact",
-        "n_ann",
-        "n_hits",
-        "dcg_ppm",
-        F.expr(f"CAST(CASE n_exact {cum_case} END AS BIGINT)").alias(
-            "idcg_ppm"
-        ),
-        F.expr(
-            f"CASE WHEN n_exact > 0 THEN"
-            f" (dcg_ppm * 1000000) div (CASE n_exact {cum_case} END) END"
-        ).alias("ndcg_ppm"),
-        "first_hit_rank",
-        F.expr(
-            "CASE WHEN first_hit_rank IS NOT NULL"
-            " THEN 1000000 div first_hit_rank END"
-        ).alias("rr_ppm"),
-    )

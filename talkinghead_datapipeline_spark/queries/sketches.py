@@ -18,7 +18,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window as W
 
 from talkinghead_datapipeline_spark.catalog import load_table
 from talkinghead_datapipeline_spark.queries import register
@@ -166,480 +165,4 @@ def hll_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("rel_err"),
         )
         .orderBy("event_type")
-    )
-
-
-# ---------------------------------------------------------------------------
-# STAGED for r15 registration — kmv_distinct_intersection (r13
-# continuation: completes the sketch family's SET-OPERATION gap — HLL
-# certifies per-set distinct counts and CMS heavy hitters, but neither
-# sketch supports INTERSECTION estimates; KMV (k-minimum-values,
-# Bar-Yossef et al. 2002 / Beyer et al. 2007) is the classical sketch
-# whose union is the k smallest of the merged samples and whose
-# intersection estimate is the Jaccard-scaled union — the primitive
-# behind audience-overlap and join-size estimation).
-#
-# KMV sketches (k = 256) of the distinct VIEW users and distinct
-# PURCHASE users from events, in the portable 32-bit md5 hash domain
-# ('kmv|' || user_id — engine-portable, non-negative, the kfold hash
-# family). Everything is exact BIGINT:
-#   est(S)          = ((k−1) · 2^32) div kth_min(S)        [k-th order
-#                     statistic estimator; (k−1)·2^32 ≈ 1.1e12 — no
-#                     overflow anywhere near int64]
-#   union sketch    = k smallest of the merged value sets (dedup first:
-#                     KMV is a DISTINCT-value sketch)
-#   jaccard_ppm     = (|union_sketch ∩ A ∩ B| · 10^6) div k
-#   est_intersection = (n_common · est(A∪B)) div k
-# The certified columns are the raw integer kth-minima, the exact
-# counts, and the floor-div estimates — plus the TRUE distinct counts
-# and true intersection from an exact pass, so the driver row also
-# certifies the sketch's accuracy envelope on this corpus (the
-# hll/minhash_estimate_error precedent).
-#
-# Scale shape: the sketch build is a distinct + global top-k ascending
-# (TakeOrderedAndProject — distributed partial top-k per partition, no
-# single-partition window); set ops run on ≤k-row broadcast frames. The
-# oracle recomputes the same order statistics relationally. Whitelist
-# entry pre-added (1-row/k-row crossJoins).
-# ---------------------------------------------------------------------------
-
-_KMV_K = 256
-
-KMV_ORACLE = f"""
-WITH viewers AS (
-  SELECT DISTINCT user_id FROM events WHERE event_type = 'view'
-),
-buyers AS (
-  SELECT DISTINCT user_id FROM events WHERE event_type = 'purchase'
-),
-hv AS (
-  -- DISTINCT in the HASH domain: KMV is a distinct-VALUE sketch, and a
-  -- 32-bit collision would otherwise leave duplicate h rows that
-  -- Spark's membership JOIN multiplies where SQL IN does not
-  SELECT DISTINCT ('0x' || substr(md5('kmv|' || CAST(user_id AS VARCHAR)),
-                   1, 8))::BIGINT AS h
-  FROM viewers
-),
-hb AS (
-  SELECT DISTINCT ('0x' || substr(md5('kmv|' || CAST(user_id AS VARCHAR)),
-                   1, 8))::BIGINT AS h
-  FROM buyers
-),
-ska AS (SELECT h FROM hv ORDER BY h LIMIT {_KMV_K}),
-skb AS (SELECT h FROM hb ORDER BY h LIMIT {_KMV_K}),
-sku AS (
-  SELECT h FROM (SELECT h FROM ska UNION SELECT h FROM skb)
-  ORDER BY h LIMIT {_KMV_K}
-),
-kth AS (
-  SELECT (SELECT max(h) FROM ska) AS kth_a,
-         (SELECT max(h) FROM skb) AS kth_b,
-         (SELECT max(h) FROM sku) AS kth_u,
-         (SELECT CAST(count(*) AS BIGINT) FROM ska) AS n_a,
-         (SELECT CAST(count(*) AS BIGINT) FROM skb) AS n_b,
-         (SELECT CAST(count(*) AS BIGINT) FROM sku) AS n_u,
-         (SELECT CAST(count(*) AS BIGINT) FROM sku
-           WHERE h IN (SELECT h FROM ska) AND h IN (SELECT h FROM skb))
-           AS n_common,
-         (SELECT CAST(count(*) AS BIGINT) FROM viewers) AS true_a,
-         (SELECT CAST(count(*) AS BIGINT) FROM buyers) AS true_b,
-         (SELECT CAST(count(*) AS BIGINT) FROM viewers
-           WHERE user_id IN (SELECT user_id FROM buyers)) AS true_common
-)
-SELECT kth_a, kth_b, kth_u, n_common, true_a, true_b, true_common,
-       CASE WHEN n_a = {_KMV_K} THEN
-         (({_KMV_K} - 1) * 4294967296) // kth_a ELSE n_a END AS est_a,
-       CASE WHEN n_b = {_KMV_K} THEN
-         (({_KMV_K} - 1) * 4294967296) // kth_b ELSE n_b END AS est_b,
-       CASE WHEN n_u = {_KMV_K} THEN
-         (({_KMV_K} - 1) * 4294967296) // kth_u ELSE n_u END AS est_union,
-       CASE WHEN n_u > 0 THEN (n_common * 1000000) // n_u END
-         AS jaccard_ppm,
-       CASE WHEN n_u > 0 THEN
-         (n_common * (CASE WHEN n_u = {_KMV_K} THEN
-            (({_KMV_K} - 1) * 4294967296) // kth_u ELSE n_u END)) // n_u
-       END AS est_intersection
-FROM kth
-"""
-
-
-def kmv_distinct_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """KMV (k=256) distinct sketches of view vs purchase users with the
-    union/Jaccard/intersection estimators — exact BIGINT throughout (the
-    32-bit portable hash domain keeps (k−1)·2^32 tiny next to int64),
-    true counts emitted alongside so the driver row certifies the
-    accuracy envelope. Sketch build = distinct + distributed ascending
-    top-k; set ops on ≤k-row frames. See the staging comment. STAGED
-    r13 -> registers r15 (the r14 window is full)."""
-    from talkinghead_datapipeline_spark.operators.dedup import portable_hash32
-
-    ev = load_table(spark, sf_dir, "events")
-
-    def hashes(event_type: str) -> DataFrame:
-        return (
-            ev.filter(F.col("event_type") == event_type)
-            .select("user_id")
-            .distinct()
-            .select(
-                portable_hash32(
-                    F.concat(F.lit("kmv|"), F.col("user_id").cast("string"))
-                ).alias("h")
-            )
-            # distinct in the HASH domain (collision guard — see oracle)
-            .distinct()
-        )
-
-    hv, hb = hashes("view"), hashes("purchase")
-    ska = hv.orderBy("h").limit(_KMV_K)
-    skb = hb.orderBy("h").limit(_KMV_K)
-    sku = ska.unionByName(skb).distinct().orderBy("h").limit(_KMV_K)
-    common = (
-        sku.join(ska.withColumnRenamed("h", "ha"), sku.h == F.col("ha"))
-        .join(skb.withColumnRenamed("h", "hb"), sku.h == F.col("hb"))
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_common"))
-    )
-    viewers = ev.filter(F.col("event_type") == "view").select(
-        "user_id"
-    ).distinct()
-    buyers = ev.filter(F.col("event_type") == "purchase").select(
-        "user_id"
-    ).distinct()
-    truth = (
-        viewers.agg(F.count(F.lit(1)).cast("bigint").alias("true_a"))
-        .crossJoin(
-            buyers.agg(F.count(F.lit(1)).cast("bigint").alias("true_b"))
-        )
-        .crossJoin(
-            viewers.join(buyers, "user_id")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("true_common"))
-        )
-    )
-    k = _KMV_K
-    stats = (
-        ska.agg(
-            F.max("h").alias("kth_a"),
-            F.count(F.lit(1)).cast("bigint").alias("n_a"),
-        )
-        .crossJoin(
-            skb.agg(
-                F.max("h").alias("kth_b"),
-                F.count(F.lit(1)).cast("bigint").alias("n_b"),
-            )
-        )
-        .crossJoin(
-            sku.agg(
-                F.max("h").alias("kth_u"),
-                F.count(F.lit(1)).cast("bigint").alias("n_u"),
-            )
-        )
-        .crossJoin(F.broadcast(common))
-        .crossJoin(F.broadcast(truth))
-    )
-    est = (
-        f"CASE WHEN n_{{s}} = {k} THEN"
-        f" (({k} - 1) * 4294967296) div kth_{{s}} ELSE n_{{s}} END"
-    )
-    return stats.select(
-        "kth_a",
-        "kth_b",
-        "kth_u",
-        "n_common",
-        "true_a",
-        "true_b",
-        "true_common",
-        F.expr(est.format(s="a")).alias("est_a"),
-        F.expr(est.format(s="b")).alias("est_b"),
-        F.expr(est.format(s="u")).alias("est_union"),
-        # ANSI-mode guard (ADVICE r13): on a fully degenerate corpus (no
-        # views and no purchases) n_u = 0 and a bare div raises
-        # DIVIDE_BY_ZERO under Spark 4's default ANSI mode where the
-        # DuckDB oracle returns NULL — the CASE yields NULL on both
-        # sides, matching the oof_target_encoding_segment pattern.
-        F.expr(
-            "CASE WHEN n_u > 0 THEN (n_common * 1000000) div n_u END"
-        ).alias("jaccard_ppm"),
-        F.expr(
-            f"CASE WHEN n_u > 0 THEN"
-            f" (n_common * ({est.format(s='u')})) div n_u END"
-        ).alias("est_intersection"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# STAGED for r16 registration — qdigest_rank_certified (r14: the sketch
-# family's MERGEABLE-RANK gap, VERDICT r13 #6a. CMS certifies counts, HLL
-# distincts, KMV set operations; quantiles so far ride GK via
-# percentile_approx with a rank-verified contract
-# (approx_quantiles_certified) — but GK's register state is engine-private,
-# so nothing in the registry certifies a rank SKETCH register-for-register
-# the way hll_distinct_users certifies its register table. The q-digest
-# (Shrivastava, Buragohain, Agrawal, Suri 2004 — the classical
-# sensor-network quantile summary) closes that: built from a value
-# HISTOGRAM over a fixed integer universe it is a pure function of the
-# data MULTISET — no order-, partition- or merge-schedule dependence —
-# so both engines construct the IDENTICAL register set and the driver
-# hash certifies every register.)
-#
-# Construction (the leaf-histogram variant, deterministic by spec):
-#   universe  = 2^16 buckets of o_totalprice at 1024-cent (~$10.24) grain
-#               (TPC-H o_totalprice tops out ~$555k = bucket 54248,
-#               SF-independent; the staged test asserts max bucket <
-#               65536 — the row-replication ladders multiply ROWS, never
-#               prices, so the domain bound survives xN)
-#   leaves    = heap ids 2^16 + bucket, count = histogram count
-#   compress  = for depth d = 16 .. 1: group current masses by parent
-#               (id div 2); a pair whose mass sum cs is <= T = n div K
-#               flows up (parent := cs), else BOTH children FREEZE as
-#               registers (internal nodes start massless, so the
-#               canonical count(v)+count(sib)+count(parent) <= T test
-#               degenerates to cs <= T exactly). Root keeps whatever
-#               arrives. K = 64.
-#   registers = frozen nodes + root: <= O(K) per level (a frozen pair
-#               needs cs > T, so <= 2*ceil(n/T) ~ 2K nodes per level),
-#               i.e. O(K log U) rows INDEPENDENT OF n — the sketch
-#               contract.
-# Every frozen INTERNAL register carries mass <= T (its own child-pair
-# flowed, cs <= T, before its parent-pair froze it); only LEAF registers
-# can exceed T (an irreducibly heavy bucket). At most one register per
-# level strictly contains a query point x (same-level nodes are
-# disjoint) and a leaf cannot (lo = hi), so the rank estimate
-# est_rank(x) = sum of counts of registers with hi <= x under-counts by
-# at most 16*T: the certified per-register contract is
-#   0 <= true_rank(hi) - est_rank(hi) <= 16*T
-# emitted as rank_err / bound_ok columns next to the exact cumulative
-# rank from the full histogram (fixture-scale certification, exactly the
-# hll/kmv pattern: at 100 TB the exact branch is dropped and the digest
-# IS the answer).
-#
-# Mergeability (the property that makes this THE distributed rank
-# sketch): two digests over disjoint corpora merge by summing register
-# counts node-wise and re-running the same 16-level compression with the
-# union threshold — the staged test fuzzes that the merged digest still
-# satisfies the rank-error contract against the union corpus.
-#
-# Determinism: EVERYTHING is exact BIGINT on both sides (bucket floor-div,
-# integer pair sums, integer threshold, bit-length depth via the
-# length(bin(id)) idiom the HLL oracle pinned cross-engine); there is no
-# float op anywhere in the query.
-#
-# Scale shape: ONE data-sized aggregation (orders -> 65536-max-row bucket
-# histogram, map-side combinable); the 16 compression levels run on
-# universe-bounded frames (<= distinct buckets, halving upward); the
-# 65536-row rank spine and its single-partition cumulative window are
-# universe constants, not data; the 1-row (n, t) threshold frame rides
-# broadcast crossJoins (whitelist entry pre-added at staging time). At
-# 100 TB only the histogram pass touches data.
-# ---------------------------------------------------------------------------
-
-_QD_K = 64
-_QD_DEPTH = 16
-_QD_LEAF_BASE = 1 << _QD_DEPTH
-_QD_QUANTUM = 1024  # cents per leaf bucket
-
-
-def _qdigest_oracle() -> str:
-    """Unrolled 16-level q-digest compression as DuckDB CTEs — the
-    pagerank/render-mask oracle pattern (programmatic unroll, identical
-    spec both engines)."""
-    lvls = []
-    frozen = []
-    for d in range(_QD_DEPTH, 0, -1):
-        lvls.append(f"""
-p{d} AS (
-  SELECT id // 2 AS pid, CAST(sum(c) AS BIGINT) AS cs
-  FROM m{d} GROUP BY 1
-),
-f{d} AS (
-  SELECT m.id, m.c FROM m{d} m
-  JOIN p{d} p ON p.pid = m.id // 2
-  WHERE p.cs > (SELECT t FROM tot)
-),
-m{d - 1} AS (
-  SELECT pid AS id, cs AS c FROM p{d} WHERE cs <= (SELECT t FROM tot)
-)""")
-        frozen.append(f"SELECT id, c FROM f{d}")
-    frozen.append("SELECT id, c FROM m0")
-    frozen_union = "\n  UNION ALL\n  ".join(frozen)
-    return f"""
-WITH hist AS (
-  SELECT CAST(round(o_totalprice * 100) AS BIGINT) // {_QD_QUANTUM} AS b,
-         CAST(count(*) AS BIGINT) AS c
-  FROM orders GROUP BY 1
-),
-tot AS (
-  SELECT CAST(sum(c) AS BIGINT) AS n,
-         CAST(sum(c) AS BIGINT) // {_QD_K} AS t
-  FROM hist
-),
-m{_QD_DEPTH} AS (SELECT b + {_QD_LEAF_BASE} AS id, c FROM hist),
-{','.join(lvls)},
-regs AS (
-  {frozen_union}
-),
-geo AS (
-  SELECT id, c, CAST(length(bin(id)) - 1 AS BIGINT) AS depth_level
-  FROM regs
-),
-geo2 AS (
-  SELECT id, c, depth_level,
-         {_QD_LEAF_BASE} // (CAST(1 AS BIGINT) << depth_level) AS width,
-         (id - (CAST(1 AS BIGINT) << depth_level))
-           * ({_QD_LEAF_BASE} // (CAST(1 AS BIGINT) << depth_level))
-           AS lo_bucket
-  FROM geo
-),
-geo3 AS (
-  SELECT id, c, depth_level, lo_bucket,
-         lo_bucket + width - 1 AS hi_bucket
-  FROM geo2
-),
-ranked AS (
-  SELECT g.*,
-         CAST(sum(c) OVER (ORDER BY hi_bucket
-              RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-           AS est_rank_hi
-  FROM geo3 g
-),
-cumh AS (
-  SELECT s.sb,
-         CAST(sum(COALESCE(h.c, 0)) OVER (ORDER BY s.sb
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-           AS cum
-  FROM range(0, {_QD_LEAF_BASE}) s(sb)
-  LEFT JOIN hist h ON h.b = s.sb
-)
-SELECT r.id AS node_id, r.depth_level, r.lo_bucket, r.hi_bucket,
-       r.c AS cnt,
-       (SELECT t FROM tot) AS qd_threshold,
-       r.est_rank_hi,
-       ch.cum AS true_rank_hi,
-       ch.cum - r.est_rank_hi AS rank_err,
-       CAST(CASE WHEN ch.cum - r.est_rank_hi >= 0
-                  AND ch.cum - r.est_rank_hi
-                      <= {_QD_DEPTH} * (SELECT t FROM tot)
-             THEN 1 ELSE 0 END AS BIGINT) AS bound_ok
-FROM ranked r JOIN cumh ch ON ch.sb = r.hi_bucket
-ORDER BY node_id
-"""
-
-
-QDIGEST_ORACLE = _qdigest_oracle()
-
-
-def qdigest_rank_certified(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q-digest (K=64) over o_totalprice on a 2^16 integer-bucket
-    universe: the mergeable rank sketch certified REGISTER-FOR-REGISTER
-    (node id, range, count) plus the per-register rank-error contract
-    0 <= true_rank(hi) - est_rank(hi) <= 16*T against the exact
-    cumulative histogram. All BIGINT, no float op anywhere; built from a
-    value histogram so the register set is a pure function of the data
-    multiset (order/partition/merge-schedule independent). See the
-    staging comment for the spec, bounds, and scale shape. STAGED r14 ->
-    registers r16 (the r15 window is spoken for by the r13 tranche)."""
-    from talkinghead_datapipeline_spark.catalog import persist_once
-
-    orders = load_table(spark, sf_dir, "orders")
-    hist = persist_once(
-        orders.select(
-            F.expr(
-                f"CAST(round(o_totalprice * 100) AS BIGINT)"
-                f" div {_QD_QUANTUM}"
-            ).alias("b")
-        )
-        .groupBy("b")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-    )
-    tot = persist_once(
-        hist.agg(
-            F.sum("c").cast("bigint").alias("n"),
-            F.expr(f"CAST(sum(c) AS BIGINT) div {_QD_K}").alias("t"),
-        )
-    )
-    m = hist.select(
-        (F.col("b") + F.lit(_QD_LEAF_BASE)).cast("bigint").alias("id"), "c"
-    )
-    frozen_parts = []
-    # Static 16-level unroll (universe constant, not data-dependent);
-    # each level's mass and pair frames feed TWO consumers (the freeze
-    # branch and the next level), so lineage is CUT per level with
-    # localCheckpoint (the components.py pointer-jumping pattern) — a
-    # merely-persisted chain keeps the full logical plan, and Spark 4's
-    # AQE re-renders the whole plan string on every update
-    # (explainString in onUpdatePlan), which goes quadratic on a
-    # 16-level nesting (measured: >400s at sf0.001 with persists vs
-    # seconds with checkpoints). The frames are universe-bounded
-    # (<= distinct buckets, halving per level), so the checkpoint cost
-    # is constant, not data-sized.
-    for _ in range(_QD_DEPTH, 0, -1):
-        m = m.localCheckpoint(eager=True)
-        pairs = (
-            m.groupBy(F.expr("id div 2").alias("pid"))
-            .agg(F.sum("c").cast("bigint").alias("cs"))
-            .crossJoin(F.broadcast(tot))
-        ).localCheckpoint(eager=True)
-        over = pairs.filter(F.col("cs") > F.col("t")).select("pid")
-        frozen_parts.append(
-            m.join(
-                F.broadcast(over),
-                F.expr("id div 2") == F.col("pid"),
-                "left_semi",
-            )
-        )
-        m = pairs.filter(F.col("cs") <= F.col("t")).select(
-            F.col("pid").alias("id"), F.col("cs").alias("c")
-        )
-    frozen_parts.append(m)  # root-level survivor (id 1), if any
-    regs = frozen_parts[0]
-    for part in frozen_parts[1:]:
-        regs = regs.unionByName(part)
-
-    geo = regs.withColumn(
-        "depth_level", F.expr("CAST(length(bin(id)) - 1 AS BIGINT)")
-    )
-    width = F.expr(
-        f"CAST({_QD_LEAF_BASE} AS BIGINT)"
-        " div shiftleft(CAST(1 AS BIGINT), CAST(depth_level AS INT))"
-    )
-    geo = geo.withColumn("width", width).withColumn(
-        "lo_bucket",
-        (
-            F.col("id")
-            - F.expr("shiftleft(CAST(1 AS BIGINT), CAST(depth_level AS INT))")
-        )
-        * F.col("width"),
-    ).withColumn("hi_bucket", F.col("lo_bucket") + F.col("width") - 1)
-    w_rank = W.orderBy("hi_bucket").rangeBetween(W.unboundedPreceding, 0)
-    ranked = geo.withColumn(
-        "est_rank_hi", F.sum("c").over(w_rank).cast("bigint")
-    )
-    spine = spark.range(0, _QD_LEAF_BASE).select(
-        F.col("id").cast("bigint").alias("sb")
-    )
-    w_cum = W.orderBy("sb").rowsBetween(W.unboundedPreceding, 0)
-    cumh = (
-        spine.join(hist, spine.sb == hist.b, "left")
-        .select("sb", F.coalesce("c", F.lit(0)).alias("hc"))
-        .withColumn("cum", F.sum("hc").over(w_cum).cast("bigint"))
-    )
-    err = F.col("cum") - F.col("est_rank_hi")
-    return (
-        ranked.join(cumh, ranked.hi_bucket == cumh.sb)
-        .crossJoin(F.broadcast(tot))
-        .select(
-            F.col("id").alias("node_id"),
-            "depth_level",
-            "lo_bucket",
-            "hi_bucket",
-            F.col("c").alias("cnt"),
-            F.col("t").alias("qd_threshold"),
-            "est_rank_hi",
-            F.col("cum").alias("true_rank_hi"),
-            err.alias("rank_err"),
-            F.expr(
-                f"CAST(CASE WHEN cum - est_rank_hi >= 0"
-                f" AND cum - est_rank_hi <= {_QD_DEPTH} * t"
-                f" THEN 1 ELSE 0 END AS BIGINT)"
-            ).alias("bound_ok"),
-        )
-        .orderBy("node_id")
     )

@@ -795,129 +795,3 @@ def bh_fdr_lang_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         "bh_threshold_ppb",
         (F.col("p_rank") <= kstar).alias("rejected"),
     )
-
-
-# ---------------------------------------------------------------------------
-# STAGED for r15 registration — spearman_rank_corr_lang (r13 continuation:
-# the rank-correlation class — lineitem_measure_correlations certifies
-# PEARSON moments and mann_kendall the trend SIGN statistic, but nothing
-# in the registry measures monotone association between two columns, the
-# robust screening statistic every profiling stack pairs with Pearson).
-#
-# Tie-corrected Spearman rho per language between document length
-# (n_chars) and whitespace token count (the kfold feature pair).
-# Exactness design: Spearman = Pearson on AVERAGE ranks, and average
-# ranks are half-integers — so the engine works in DOUBLED ranks, which
-# are exact BIGINTs via the min-rank identity
-#     u = 2·avg_rank = 2·rank() + (tie-group size) − 1
-# (a tied group starting at min-rank r with c members has avg rank
-# r + (c−1)/2). Per lang, one aggregation of six exact BIGINT moment
-# sums (n, Σu, Σv, Σu², Σv², Σuv); the certified columns are the exact
-# integer numerator num = n·Σuv − Σu·Σv and denominators d1/d2
-# (n·Σu² − (Σu)², n·Σv² − (Σv)²); rho_ppm is ONE pinned-order IEEE
-# expression over them (correctly-rounded int64→double casts, two
-# correctly-rounded sqrts, one multiply, one divide — shared VERBATIM
-# between engines, the pca/mann-kendall precedent), NULL when either
-# column is constant (d = 0).
-#
-# Overflow bound (asserted in the staged test): n·Σu² ≤ 4n⁴ — at the
-# sf0.1 maximum (en: 2059 docs) ~7.2e13, and ×16 replication (n≈33k)
-# stays at 4.7e18 < 2^63; a larger corpus shards the rank space per
-# lang before this bound binds.
-#
-# Scale shape: two rank windows partitioned by lang (one shuffle), one
-# map-side-combinable aggregation to |langs| rows. The oracle shares the
-# formulation (rank windows are the spec); independence comes from the
-# staged test's pandas average-rank recompute and the hypothesis fuzz of
-# the doubled-rank identity itself.
-# ---------------------------------------------------------------------------
-
-_SPEARMAN_RHO_EXPR = (
-    "CASE WHEN d1 > 0 AND d2 > 0 THEN "
-    "CAST(floor((CAST(num AS DOUBLE)"
-    " / (sqrt(CAST(d1 AS DOUBLE)) * sqrt(CAST(d2 AS DOUBLE))))"
-    " * 1000000.0) AS BIGINT) END"
-)
-
-SPEARMAN_ORACLE = f"""
-WITH base AS (
-  SELECT lang,
-         CAST(n_chars AS BIGINT) AS x,
-         CAST(len(string_split_regex(text, '\\s+')) AS BIGINT) AS y
-  FROM documents WHERE length(text) > 0
-),
-ranked AS (
-  SELECT lang,
-         2 * rank() OVER (PARTITION BY lang ORDER BY x)
-           + count(*) OVER (PARTITION BY lang, x) - 1 AS u,
-         2 * rank() OVER (PARTITION BY lang ORDER BY y)
-           + count(*) OVER (PARTITION BY lang, y) - 1 AS v
-  FROM base
-),
-mom AS (
-  SELECT lang,
-         CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(u) AS BIGINT) AS su,
-         CAST(sum(v) AS BIGINT) AS sv,
-         CAST(sum(u * u) AS BIGINT) AS suu,
-         CAST(sum(v * v) AS BIGINT) AS svv,
-         CAST(sum(u * v) AS BIGINT) AS suv
-  FROM ranked GROUP BY lang
-),
-stats AS (
-  SELECT lang, n,
-         n * suv - su * sv AS num,
-         n * suu - su * su AS d1,
-         n * svv - sv * sv AS d2
-  FROM mom
-)
-SELECT lang, n, num, d1, d2, {_SPEARMAN_RHO_EXPR} AS rho_ppm
-FROM stats ORDER BY lang
-"""
-
-
-def spearman_rank_corr_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tie-corrected Spearman rank correlation per lang between doc
-    length and token count — exact BIGINT doubled-rank moments (the
-    2·rank() + ties − 1 identity), integer numerator/denominators
-    certified raw, rho as one pinned-order IEEE expression shared
-    verbatim with the oracle. See the staging comment for the bound.
-    STAGED r13 -> registers r15 (the r14 window is full)."""
-    docs = load_table(spark, sf_dir, "documents").filter(F.length("text") > 0)
-    base = docs.select(
-        "lang",
-        F.col("n_chars").cast("bigint").alias("x"),
-        F.size(F.split(F.col("text"), r"\s+")).cast("bigint").alias("y"),
-    )
-    ranked = base.select(
-        "lang",
-        (
-            2 * F.rank().over(W.partitionBy("lang").orderBy("x"))
-            + F.count(F.lit(1)).over(W.partitionBy("lang", "x"))
-            - 1
-        ).cast("bigint").alias("u"),
-        (
-            2 * F.rank().over(W.partitionBy("lang").orderBy("y"))
-            + F.count(F.lit(1)).over(W.partitionBy("lang", "y"))
-            - 1
-        ).cast("bigint").alias("v"),
-    )
-    mom = ranked.groupBy("lang").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum("u").cast("bigint").alias("su"),
-        F.sum("v").cast("bigint").alias("sv"),
-        F.sum(F.expr("u * u")).cast("bigint").alias("suu"),
-        F.sum(F.expr("v * v")).cast("bigint").alias("svv"),
-        F.sum(F.expr("u * v")).cast("bigint").alias("suv"),
-    )
-    stats = mom.select(
-        "lang",
-        "n",
-        F.expr("n * suv - su * sv").alias("num"),
-        F.expr("n * suu - su * su").alias("d1"),
-        F.expr("n * svv - sv * sv").alias("d2"),
-    )
-    return stats.select(
-        "lang", "n", "num", "d1", "d2",
-        F.expr(_SPEARMAN_RHO_EXPR).alias("rho_ppm"),
-    ).orderBy("lang")

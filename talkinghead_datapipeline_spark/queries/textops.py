@@ -1827,111 +1827,3 @@ def doc_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
             chunk.alias("chunk_text"),
         )
     )
-
-
-# ---------------------------------------------------------------------------
-# STAGED for r15 registration — readability_fk_per_lang (r13
-# continuation: the readability class — the curation family scores
-# quality (Gopher), repetition, entropy, and Zipf fit, but no READABILITY
-# grade, the other staple text-difficulty signal every corpus card
-# reports).
-#
-# Flesch-Kincaid grade and Flesch reading-ease per language, over exact
-# integer corpus counts:
-#   words     = whitespace tokens (the house token convention)
-#   sentences = max(1, count of [.!?]+ runs) per doc
-#   syllables = count of [aeiouy]+ vowel-group runs in the lowercased
-#               text — the standard dictionary-free heuristic, NOTED as
-#               a heuristic: no min-1-per-word clamp (a vowel group
-#               cannot span a word boundary, so the corpus sum equals
-#               the per-word sum), and non-Latin scripts (zh) simply
-#               read near-zero syllables — the signal is honest per
-#               script family, which is why the output is per-lang.
-# The certified columns are the exact BIGINT count sums; the two scores
-# are ONE pinned-order IEEE expression each over those integers (the
-# classical FK constants 0.39/11.8/15.59 and 206.835/1.015/84.6), shared
-# VERBATIM between engines, floor-milli quantized.
-#
-# Cross-engine note: the regex class [aeiouy]+ / [.!?]+ behaves
-# identically under Java regex (Spark) and RE2 (DuckDB) — no
-# lookaround, no Unicode classes; the staged test pins a hand-counted
-# corpus on both engines.
-#
-# Scale shape: map-only per-doc expressions + ONE combinable aggregation
-# to |langs| rows. No joins, no windows, no crossJoin.
-# ---------------------------------------------------------------------------
-
-_FK_GRADE_EXPR = (
-    "CAST(floor((0.39 * (CAST(sum_words AS DOUBLE) / CAST(sum_sentences AS DOUBLE))"
-    " + 11.8 * (CAST(sum_syllables AS DOUBLE) / CAST(sum_words AS DOUBLE))"
-    " - 15.59) * 1000.0) AS BIGINT)"
-)
-_FK_EASE_EXPR = (
-    "CAST(floor((206.835"
-    " - 1.015 * (CAST(sum_words AS DOUBLE) / CAST(sum_sentences AS DOUBLE))"
-    " - 84.6 * (CAST(sum_syllables AS DOUBLE) / CAST(sum_words AS DOUBLE)))"
-    " * 1000.0) AS BIGINT)"
-)
-
-READABILITY_ORACLE = f"""
-WITH per_doc AS (
-  SELECT lang,
-         CAST(len(string_split_regex(text, '\\s+')) AS BIGINT) AS w,
-         greatest(CAST(1 AS BIGINT),
-                  CAST(len(regexp_extract_all(text, '[.!?]+')) AS BIGINT))
-           AS s,
-         CAST(len(regexp_extract_all(lower(text), '[aeiouy]+')) AS BIGINT)
-           AS y
-  FROM documents WHERE length(text) > 0
-),
-agg AS (
-  SELECT lang,
-         CAST(count(*) AS BIGINT) AS n_docs,
-         CAST(sum(w) AS BIGINT) AS sum_words,
-         CAST(sum(s) AS BIGINT) AS sum_sentences,
-         CAST(sum(y) AS BIGINT) AS sum_syllables
-  FROM per_doc GROUP BY lang
-)
-SELECT lang, n_docs, sum_words, sum_sentences, sum_syllables,
-       {_FK_GRADE_EXPR} AS fk_grade_milli,
-       {_FK_EASE_EXPR} AS flesch_ease_milli
-FROM agg ORDER BY lang
-"""
-
-
-def readability_fk_per_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Flesch-Kincaid grade + Flesch reading-ease per language over exact
-    integer word/sentence/vowel-group counts (certified raw); the scores
-    are pinned-order IEEE expressions over those integers, floor-milli.
-    Map-only + one aggregation. See the staging comment for the
-    heuristic's honesty notes. STAGED r13 -> registers r15 (the r14
-    window is full)."""
-    docs = load_table(spark, sf_dir, "documents").filter(F.length("text") > 0)
-    per_doc = docs.select(
-        "lang",
-        F.size(F.split(F.col("text"), r"\s+")).cast("bigint").alias("w"),
-        F.greatest(
-            F.lit(1).cast("bigint"),
-            F.expr("size(regexp_extract_all(text, '[.!?]+', 0))").cast(
-                "bigint"
-            ),
-        ).alias("s"),
-        F.expr("size(regexp_extract_all(lower(text), '[aeiouy]+', 0))")
-        .cast("bigint")
-        .alias("y"),
-    )
-    agg = per_doc.groupBy("lang").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-        F.sum("w").cast("bigint").alias("sum_words"),
-        F.sum("s").cast("bigint").alias("sum_sentences"),
-        F.sum("y").cast("bigint").alias("sum_syllables"),
-    )
-    return agg.select(
-        "lang",
-        "n_docs",
-        "sum_words",
-        "sum_sentences",
-        "sum_syllables",
-        F.expr(_FK_GRADE_EXPR).alias("fk_grade_milli"),
-        F.expr(_FK_EASE_EXPR).alias("flesch_ease_milli"),
-    ).orderBy("lang")

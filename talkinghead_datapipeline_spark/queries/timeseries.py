@@ -1966,322 +1966,3 @@ def acf_ljung_box_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
             * F.sum("t_pico").over(w_cum).cast("bigint"),
         ).alias("lb_q_scaled"),
     ).orderBy("lag")
-
-
-# ---------------------------------------------------------------------------
-# STAGED for r15 registration — cusum_drift_daily (r13 continuation: the
-# sequential process-control class — changepoint_daily_revenue finds the
-# single best retrospective split and trailing_zscore_anomalies flags
-# pointwise outliers, but nothing in the registry runs a SEQUENTIAL
-# drift detector with reset semantics, the Page CUSUM chart every
-# monitoring stack ships).
-#
-# Two-sided Page CUSUM over daily order revenue on the COMPLETE
-# zero-filled calendar grid (the acf/seasonal construction): with
-# m = floored mean daily dollars, slack = m div 20 (5% allowance) and
-# alarm threshold h = m (one mean day of cumulated drift),
-#   S⁺_t = max(0, S⁺_{t−1} + (x_t − (m + slack)))      upward drift
-#   S⁻_t = max(0, S⁻_{t−1} + ((m − slack) − x_t))      downward drift
-# with alarms S > h. Integer end-to-end: dollars = cents div 100, every
-# recurrence step a BIGINT add/max — no float op anywhere.
-#
-# Spark formulation (the 100 TB shape): the sequential recurrence is NOT
-# evaluated sequentially — it collapses to the closed form
-#   S_t = P_t − min(0, min_{i≤t} P_i),   P_t = Σ_{i≤t} d_i
-# (the reflected-prefix identity: max over reset points j of the suffix
-# sum is the prefix sum minus the running minimum). Two prefix-sum
-# windows + two running-min windows on the calendar-bounded grid, all
-# single-partition by construction (~2.4k rows at every SF — the only
-# data-sized stage is the orders → daily-cents aggregation). The DuckDB
-# oracle deliberately evaluates the TEXTBOOK recurrence as a recursive
-# CTE walking the days in order — a genuinely independent formulation,
-# so the differential proves the identity, not just the arithmetic.
-#
-# Overflow: |P_t| ≤ Σ|d_t| ≤ n·(max daily dollars + m) — ~1.5e11 at
-# sf0.1 (n≈2400, ~6e7 $/day) and rows-linear in the replication factor;
-# 7 orders of magnitude of int64 headroom, asserted in the staged test.
-# ---------------------------------------------------------------------------
-
-CUSUM_DRIFT_ORACLE = """
-WITH RECURSIVE daily AS (
-  SELECT CAST(o_orderdate AS DATE) AS day,
-         CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-           AS cents
-  FROM orders GROUP BY 1
-),
-span AS (SELECT min(day) AS d0, max(day) AS d1 FROM daily),
-grid AS (
-  SELECT (SELECT d0 FROM span) AS day
-  UNION ALL
-  SELECT day + 1 FROM grid WHERE day < (SELECT d1 FROM span)
-),
-series AS MATERIALIZED (
-  -- MATERIALIZED is load-bearing: the recursive walk below references
-  -- this chain every step; inlined, DuckDB re-evaluates the recursive
-  -- grid per step (O(n²) grid recursions — measured minutes at 2.4k
-  -- days), materialized it is a 2.4k-row hash probe per step
-  SELECT g.day, COALESCE(d.cents, 0) // 100 AS dollars
-  FROM grid g LEFT JOIN daily d USING (day)
-),
-stats AS (
-  SELECT CAST(sum(dollars) AS BIGINT) // CAST(count(*) AS BIGINT) AS m
-  FROM series
-),
-params AS MATERIALIZED (
-  SELECT m, m // 20 AS slack, m AS h FROM stats
-),
-ordered AS MATERIALIZED (
-  SELECT day, dollars, row_number() OVER (ORDER BY day) AS rn
-  FROM series
-),
-walk AS (
-  SELECT o.rn, o.day, o.dollars,
-         greatest(CAST(0 AS BIGINT),
-                  o.dollars - (p.m + p.slack)) AS s_up,
-         greatest(CAST(0 AS BIGINT),
-                  (p.m - p.slack) - o.dollars) AS s_dn
-  FROM ordered o CROSS JOIN params p WHERE o.rn = 1
-  UNION ALL
-  SELECT o.rn, o.day, o.dollars,
-         greatest(CAST(0 AS BIGINT),
-                  w.s_up + (o.dollars - (p.m + p.slack))),
-         greatest(CAST(0 AS BIGINT),
-                  w.s_dn + ((p.m - p.slack) - o.dollars))
-  FROM walk w
-  JOIN ordered o ON o.rn = w.rn + 1
-  CROSS JOIN params p
-)
-SELECT strftime(w.day, '%Y-%m-%d') AS day, w.dollars,
-       w.s_up AS s_up_dollars,
-       w.s_dn AS s_dn_dollars,
-       CAST(w.s_up > p.h AS BIGINT) AS alarm_up,
-       CAST(w.s_dn > p.h AS BIGINT) AS alarm_dn
-FROM walk w CROSS JOIN params p
-ORDER BY day
-"""
-
-
-def cusum_drift_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-sided Page CUSUM drift chart over zero-filled daily revenue:
-    the sequential max(0, ·) recurrence evaluated via the closed-form
-    prefix-sum-minus-running-min identity (two windows per side, never a
-    sequential fold); the oracle walks the textbook recurrence with a
-    recursive CTE — an independent formulation. Integer end-to-end. See
-    the staging comment for the identity and the overflow bound. STAGED
-    r13 -> registers r15 (the r14 window is full)."""
-    orders = load_table(spark, sf_dir, "orders")
-    daily = orders.groupBy(
-        F.col("o_orderdate").cast("date").alias("day")
-    ).agg(
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
-        .cast("bigint")
-        .alias("cents")
-    )
-    span = daily.agg(F.min("day").alias("d0"), F.max("day").alias("d1"))
-    grid = span.select(
-        F.explode(F.expr("sequence(d0, d1, interval 1 day)")).alias("day")
-    )
-    series = grid.join(daily, "day", "left").select(
-        "day", F.expr("COALESCE(cents, 0) div 100").alias("dollars")
-    )
-    stats = series.agg(
-        F.expr("CAST(sum(dollars) AS BIGINT) div count(*)").alias("m")
-    ).select(
-        "m",
-        F.expr("m div 20").alias("slack"),
-        F.col("m").alias("h"),
-    )
-    dev = series.crossJoin(F.broadcast(stats)).select(
-        "day",
-        "dollars",
-        "h",
-        (F.col("dollars") - (F.col("m") + F.col("slack"))).alias("d_up"),
-        ((F.col("m") - F.col("slack")) - F.col("dollars")).alias("d_dn"),
-    )
-    w_cum = W.orderBy("day").rowsBetween(W.unboundedPreceding, W.currentRow)
-    pref = dev.select(
-        "day",
-        "dollars",
-        "h",
-        F.sum("d_up").over(w_cum).alias("p_up"),
-        F.sum("d_dn").over(w_cum).alias("p_dn"),
-    )
-    runmin = pref.select(
-        "day",
-        "dollars",
-        "h",
-        (
-            F.col("p_up")
-            - F.least(F.lit(0).cast("bigint"), F.min("p_up").over(w_cum))
-        ).alias("s_up_dollars"),
-        (
-            F.col("p_dn")
-            - F.least(F.lit(0).cast("bigint"), F.min("p_dn").over(w_cum))
-        ).alias("s_dn_dollars"),
-    )
-    return runmin.select(
-        # string-formatted day: the house cross-engine date key (DuckDB
-        # DATE arrives in pandas as a midnight Timestamp and would
-        # type-tag-mismatch Spark's date in the driver's value hash)
-        F.date_format("day", "yyyy-MM-dd").alias("day"),
-        "dollars",
-        "s_up_dollars",
-        "s_dn_dollars",
-        (F.col("s_up_dollars") > F.col("h")).cast("bigint").alias("alarm_up"),
-        (F.col("s_dn_dollars") > F.col("h")).cast("bigint").alias("alarm_dn"),
-    ).orderBy("day")
-
-
-# ---------------------------------------------------------------------------
-# STAGED for r15 registration — holt_linear_forecast_daily (r13
-# continuation: the exponential-smoothing forecaster class —
-# seasonal_dow_backtest scores a seasonal-NAIVE forecaster and
-# ewma_user_values certifies single smoothing per user, but nothing in
-# the registry runs a trend-aware forecaster, the Holt half of the
-# Holt-Winters family every monitoring/forecast stack ships).
-#
-# Holt's linear (double-exponential) smoothing over the zero-filled
-# daily-dollars grid, α = 0.2, β = 0.1, made bit-exact by running the
-# classical recurrence over INTEGER micro-dollar state with per-step
-# truncating division by 1000 (the quantization IS the definition):
-#   l_1 = 10^6·x_1,  b_1 = 0
-#   l_t = (200·10^6·x_t + 800·(l_{t−1} + b_{t−1})) div 1000
-#   b_t = (100·(l_t − l_{t−1}) + 900·b_{t−1}) div 1000
-# with the one-step-ahead forecast f_t = l_{t−1} + b_{t−1} and residual
-# e_t = 10^6·x_t − f_t. The trend state b_t (and the residual) go
-# NEGATIVE on downswings — safe cross-engine because Spark's `div` and
-# DuckDB's `//` were MEASURED to agree on truncation toward zero for
-# BIGINTs (−7 div 2 = −3 in both; SCALING.md note), and the staged
-# test's Python fold uses an explicit trunc-div (Python `//` floors,
-# the one engine-local pitfall).
-#
-# Spark formulation: a sequential recurrence with a division per step
-# has no prefix-reducible closed form (contrast cusum) and no broadcast-
-# array identity worth O(n²) HOF steps at 2.4k days (contrast KM's 75) —
-# so the engine runs the fold as ONE applyInPandas over the calendar-
-# bounded grid grouped to a single key (exact Python ints, no float
-# anywhere), the rolling.py kernel pattern; everything upstream (the
-# only data-sized stage: orders → daily cents) is the shared grid
-# construction. The DuckDB oracle walks the identical recurrence as a
-# recursive CTE over MATERIALIZED inputs (the cusum lesson).
-#
-# Overflow bound (asserted in the staged test): state ≈ 10^6·(max daily
-# dollars) — ~6e13 at sf0.1; 200·10^6·x_t ≤ 1.2e16, ×16 → 1.9e17, 48×
-# inside int64.
-# ---------------------------------------------------------------------------
-
-HOLT_FORECAST_ORACLE = """
-WITH RECURSIVE daily AS (
-  SELECT CAST(o_orderdate AS DATE) AS day,
-         CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-           AS cents
-  FROM orders GROUP BY 1
-),
-span AS (SELECT min(day) AS d0, max(day) AS d1 FROM daily),
-grid AS (
-  SELECT (SELECT d0 FROM span) AS day
-  UNION ALL
-  SELECT day + 1 FROM grid WHERE day < (SELECT d1 FROM span)
-),
-ordered AS MATERIALIZED (
-  -- MATERIALIZED is load-bearing (the cusum lesson): the recursive walk
-  -- below probes this frame every step; inlined, DuckDB re-runs the
-  -- recursive grid per step
-  SELECT g.day, COALESCE(d.cents, 0) // 100 AS dollars,
-         row_number() OVER (ORDER BY g.day) AS rn
-  FROM grid g LEFT JOIN daily d USING (day)
-),
-walk AS (
-  SELECT rn, day, dollars,
-         1000000 * dollars AS l,
-         CAST(0 AS BIGINT) AS b,
-         CAST(NULL AS BIGINT) AS f
-  FROM ordered WHERE rn = 1
-  UNION ALL
-  SELECT o.rn, o.day, o.dollars,
-         (200 * 1000000 * o.dollars + 800 * (w.l + w.b)) // 1000,
-         (100 * ((200 * 1000000 * o.dollars + 800 * (w.l + w.b)) // 1000
-                 - w.l)
-          + 900 * w.b) // 1000,
-         w.l + w.b
-  FROM walk w JOIN ordered o ON o.rn = w.rn + 1
-)
-SELECT strftime(day, '%Y-%m-%d') AS day, dollars,
-       l AS level_micro, b AS trend_micro, f AS forecast_micro,
-       CASE WHEN f IS NOT NULL THEN 1000000 * dollars - f END
-         AS err_micro
-FROM walk ORDER BY day
-"""
-
-
-def holt_linear_forecast_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Holt linear-trend smoothing of zero-filled daily revenue (α=0.2,
-    β=0.1) over exact integer micro-dollar state with per-step truncating
-    division — the quantization is the definition, measured identical
-    between Spark `div` and DuckDB `//` including negative trend state.
-    The fold runs as one applyInPandas over the calendar-bounded grid;
-    the oracle walks the identical recurrence recursively. See the
-    staging comment. STAGED r13 -> registers r15 (the r14 window is
-    full)."""
-    import pandas as pd
-
-    orders = load_table(spark, sf_dir, "orders")
-    daily = orders.groupBy(
-        F.col("o_orderdate").cast("date").alias("day")
-    ).agg(
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
-        .cast("bigint")
-        .alias("cents")
-    )
-    span = daily.agg(F.min("day").alias("d0"), F.max("day").alias("d1"))
-    grid = span.select(
-        F.explode(F.expr("sequence(d0, d1, interval 1 day)")).alias("day")
-    )
-    series = grid.join(daily, "day", "left").select(
-        F.date_format("day", "yyyy-MM-dd").alias("day"),
-        F.expr("COALESCE(cents, 0) div 100").alias("dollars"),
-        F.lit(1).alias("g"),
-    )
-
-    def _trunc_div(a: int, b: int) -> int:
-        # Spark div / DuckDB // truncate toward zero; Python // floors
-        q = abs(a) // b
-        return q if a >= 0 else -q
-
-    def _fold(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        pdf = pdf.sort_values("day").reset_index(drop=True)
-        out_l, out_b, out_f, out_e = [], [], [], []
-        l = b = None
-        for x in pdf.dollars.astype(object):  # exact Python ints
-            x = int(x)
-            if l is None:
-                l, b, f = 1_000_000 * x, 0, None
-            else:
-                f = l + b
-                l_new = _trunc_div(200 * 1_000_000 * x + 800 * (l + b), 1000)
-                b = _trunc_div(100 * (l_new - l) + 900 * b, 1000)
-                l = l_new
-            out_l.append(l)
-            out_b.append(b)
-            out_f.append(f)
-            out_e.append(None if f is None else 1_000_000 * x - f)
-        return pd.DataFrame(
-            {
-                "day": pdf.day,
-                "dollars": pdf.dollars,
-                "level_micro": pd.array(out_l, dtype="Int64"),
-                "trend_micro": pd.array(out_b, dtype="Int64"),
-                "forecast_micro": pd.array(out_f, dtype="Int64"),
-                "err_micro": pd.array(out_e, dtype="Int64"),
-            }
-        )
-
-    out_schema = (
-        "day string, dollars bigint, level_micro bigint, trend_micro bigint,"
-        " forecast_micro bigint, err_micro bigint"
-    )
-    return (
-        series.groupBy("g")
-        .applyInPandas(_fold, schema=out_schema)
-        .orderBy("day")
-    )

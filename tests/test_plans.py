@@ -40,9 +40,6 @@ _NESTED_LOOP_OK = {
     # non-equi, cardinality-bounded by score cardinality not data size
     "k_anonymity_audit",  # 1-row broadcast grand-total crossJoin onto the
     # <=|quasi-identifier classes| ladder frame
-    # --- pre-added for the r13 registrations (entries are inert until the
-    # --- query name joins the registry; added at STAGING time so the r12
-    # --- isotonic/k-anon miss cannot repeat) ---
     "mann_kendall_daily_trend",  # calendar-bounded d1<d2 daily pair join
     # (~2.9M pairs at EVERY SF) + 1-row stat crossJoins
     "theil_sen_daily_slope",  # same calendar-bounded pair join
@@ -52,8 +49,6 @@ _NESTED_LOOP_OK = {
     # brand-pair frame (<= C(|brands|, 2) rows)
     "gini_revenue_concentration",  # 1-row (n, s0, s1) stats crossJoin onto
     # the 10-row decile frame
-    # --- pre-added for the r14 registrations (staged r13; inert until the
-    # --- name joins the registry, per the staging-time whitelist rule) ---
     "kaplan_meier_survival",  # 1-row broadcast sorted-steps-array crossJoin
     # onto the calendar-bounded event-step frame
     "bh_fdr_lang_source",  # 1-row broadcast (nt, kt) totals crossJoin onto
@@ -67,28 +62,6 @@ _NESTED_LOOP_OK = {
     # final-row aggregate can plan as a broadcast nested loop under AQE
     "acf_ljung_box_daily",  # 1-row span/stats broadcast crossJoins onto
     # the calendar-bounded day grid
-    # --- pre-added for the r15 registrations (staged r13 continuation;
-    # --- inert until the name joins the registry) ---
-    "cusum_drift_daily",  # 1-row (m, slack, h) params crossJoin onto the
-    # calendar-bounded day grid
-    "hits_hubs_authorities",  # 1-row per-half-step max crossJoins (the
-    # exact-integer max-normalization); adjacency joins are equi-joins
-    "ndcg_mrr_retrieval_eval",  # <=10-row ann/exact frames composed from
-    # the two registered top-k queries (the recall-certified pattern):
-    # 1-row aggregate crossJoins + the 10x10 hit join
-    "modularity_nation_partition",  # 1-row M / (q_total, m_dir) totals
-    # crossJoins onto the |nations|-row community frame
-    "diff_in_diff_order_value",  # 1-row span-midpoint broadcast
-    # crossJoin onto the orders scan + the single-row wide-cell frame
-    "kmv_distinct_intersection",  # <=k-row sketch frames: 1-row kth/count
-    # aggregate crossJoins + the k-row union-membership joins
-    "decision_stump_split_scores",  # 9-row broadcast decile-rank probe
-    # (cum_cnt >= r_need) against the cardinality-bounded cumulative
-    # distinct-x frame — deliberately non-equi, bounded by the 9 ranks
-    # --- pre-added for the r16 registrations (staged r14; inert until
-    # --- the name joins the registry) ---
-    "qdigest_rank_certified",  # 1-row (n, t) threshold broadcast
-    # crossJoins onto the universe-bounded level/register frames
     "pmi_top_collocations",  # 1-row broadcast (n_bg, n_tok) totals crossJoin
     "source_mixture_manifest",  # 1-row broadcast token-budget crossJoin
     "sim_ivf_probe_topk",
@@ -125,6 +98,11 @@ _NESTED_LOOP_OK = {
     "churn_flags_by_cohort",  # 1-row corpus-clock crossJoin
     "diurnal_activity_profile",  # 1-row hourly-total crossJoin
 }
+
+
+def test_nested_loop_whitelist_names_registered_queries():
+    """Every exemption names a query the plan gate actually runs."""
+    assert _NESTED_LOOP_OK <= set(_SPECS), sorted(_NESTED_LOOP_OK - set(_SPECS))
 
 
 @pytest.mark.parametrize("name", sorted(_SPECS))

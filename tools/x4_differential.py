@@ -110,7 +110,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     build_tables(spark, sf_dir, out_dir, replicas)
 
-    from tests.oracle_harness import compare_frames, duckdb_connection
+    from tests.oracle_harness import run_compare
 
     specs = {n: s for n, s in all_queries().items() if n.startswith(prefix)}
     bad, rows_only, errs = [], [], []
@@ -118,19 +118,14 @@ def main() -> None:
     for i, (name, spec) in enumerate(specs.items(), 1):
         t0 = time.time()
         try:
-            spark_pdf = spec.spark(spark, out_dir).toPandas()
             if spec.oracle is None:
+                n_rows = len(spec.spark(spark, out_dir).toPandas())
                 rows_only.append(name)
                 print(f"[{i}/{len(specs)}] {name} ROWS-ONLY "
-                      f"({len(spark_pdf)} rows, {time.time()-t0:.1f}s)",
+                      f"({n_rows} rows, {time.time()-t0:.1f}s)",
                       flush=True)
                 continue
-            con = duckdb_connection(out_dir)
-            try:
-                oracle_pdf = con.execute(spec.oracle).fetchdf()
-            finally:
-                con.close()
-            res = compare_frames(name, spark_pdf, oracle_pdf)
+            res = run_compare(spark, out_dir, name, spec.spark, spec.oracle)
             tag = "OK" if res.ok else "MISMATCH"
             if not res.ok:
                 bad.append((name, str(res.mismatches)[:200]))
