@@ -320,10 +320,14 @@ class ShapeRenderer:
     out of scope is the licensed FLAME uv/albedo assets (synthetic seeded
     stand-ins) and pytorch3d bit-parity.
 
-    ``render(vertices, trans_verts, cam, channel)`` mirrors
-    ``SRenderY.forward(vertices, transformed_vertices, ...)``: world-space
-    verts drive the normals/shading, view-space (post ``view_transform``)
-    verts drive the rasterization. Channels — all real rasterizer outputs:
+    ``render_batch(vertices, trans_verts, channels)`` is the entry point.
+    It mirrors ``SRenderY.forward(vertices, transformed_vertices, ...)``:
+    world-space verts drive the normals/shading, view-space (post
+    ``view_transform``) verts drive the rasterization, and like the
+    reference it rasterizes each mesh once and reads every requested
+    channel from that one pass. ``render(vertices, trans_verts, cam,
+    channel)`` is the one-mesh, one-channel wrapper. Channels
+    (``CHANNELS``) — all real rasterizer outputs:
     ``shade`` (SH-lit gray, the default), ``mask`` (coverage 0/255),
     ``normal`` (winner-interpolated normal z, [-1,1] → [0,255]), ``bary``
     (winner's first barycentric weight — the uv interpolant), ``texture``
@@ -385,19 +389,53 @@ class ShapeRenderer:
             self.albedo = _seeded_rng("albedo_map").random((3, 64, 64))
         return self._uv
 
+    CHANNELS = ("shade", "mask", "normal", "bary", "texture", "pos_mask")
+
     def render_batch(
         self,
         vertices: np.ndarray,
         trans_verts: np.ndarray,
-        cam: np.ndarray | None = None,
-        channel: str = "shade",
-    ) -> list[bytes]:
+        channels: tuple[str, ...],
+    ) -> dict[str, list[bytes]]:
         """Render a batch of meshes of one topology: (B, V, 3) world verts +
-        (B, V, 3) view verts → B payloads. One vectorized rasterize sweep
-        (chunked inside rasterize_batch) instead of per-mesh Python overhead
-        — the per-row form measured 7.9x slower on flame_render_pipeline."""
+        (B, V, 3) view verts → ``{channel: B payloads}``. Each mesh is
+        rasterized once for all requested channels. The meshes are walked in
+        chunks of ``rasterize.meshes_per_chunk``, and each chunk becomes
+        bytes before the next is rasterized, so a large batch at a large
+        image size never holds more than one chunk's per-pixel arrays."""
+        from talkinghead_datapipeline_spark.operators.rasterize import (
+            meshes_per_chunk,
+        )
+
+        unknown = set(channels) - set(self.CHANNELS)
+        if unknown:
+            raise ValueError(f"unknown channels {sorted(unknown)}; known: {self.CHANNELS}")
+        verts = np.asarray(vertices, dtype=np.float64)
+        tv = np.asarray(trans_verts, dtype=np.float64)
+        faces = self._faces_for(verts.shape[1])
+        step = meshes_per_chunk(len(faces), self.size_hw[0])
+        out: dict[str, list[bytes]] = {ch: [] for ch in channels}
+        for i in range(0, len(verts), step):
+            imgs = self._render_chunk(verts[i : i + step], tv[i : i + step], faces, channels)
+            for ch, img in imgs.items():
+                px = np.clip(np.round(img), 0, 255).astype(np.uint8)
+                out[ch].extend(row.tobytes() for row in px)
+        return out
+
+    def _render_chunk(
+        self,
+        verts: np.ndarray,
+        tv: np.ndarray,
+        faces: np.ndarray,
+        channels: tuple[str, ...],
+    ) -> dict[str, np.ndarray]:
+        """One rasterization of a chunk → float (B, H, W) image per channel.
+        Winner corners, barycentric interpolation and the world-space vertex
+        normals are each computed at most once, for the channels that need
+        them."""
         from talkinghead_datapipeline_spark.operators.rasterize import (
             corner_incidence,
+            grid_sample_bilinear,
             quantize_verts,
             rasterize_batch,
             screen_transform,
@@ -405,73 +443,62 @@ class ShapeRenderer:
             vertex_normals_batch,
         )
 
-        verts = np.asarray(vertices, dtype=np.float64)
-        faces = self._faces_for(verts.shape[1])
         size = self.size_hw[0]
         # divisible by size; admitted up to ~341 px — bit-exact float64
         # tier through ~33 px, exact-int64 z tier above (rasterize.py)
         scale = 256 * size
-        ras = rasterize_batch(
-            quantize_verts(screen_transform(trans_verts), scale), faces, size, scale
-        )
-        mask, bary, p2f = ras["mask"], ras["bary"], ras["pix_to_face"]
-        if channel == "mask":
-            img = np.where(mask, 255.0, 0.0)
-        elif channel == "bary":
-            img = bary[..., 0] * 255.0
-        else:
-            key = (id(self.faces), verts.shape[1])
-            if getattr(self, "_inc_key", None) != key:
-                self._incidence = corner_incidence(faces, verts.shape[1])
-                self._inc_key = key
-            corners = faces[np.where(mask, p2f, 0)]  # (B, H, W, 3) vert ids
-            bidx = np.arange(verts.shape[0])[:, None, None, None]
+        ras = rasterize_batch(quantize_verts(screen_transform(tv), scale), faces, size, scale)
+        mask, bary = ras["mask"], ras["bary"]
+        imgs = {}
+        if "mask" in channels:
+            imgs["mask"] = np.where(mask, 255.0, 0.0)
+        if "bary" in channels:
+            imgs["bary"] = bary[..., 0] * 255.0
+        interpolated = set(channels) - {"mask", "bary"}
+        if not interpolated:
+            return imgs
 
-            def interp(per_vert):  # (B, V, D) -> (B, H, W, D) via winner bary
-                return np.einsum("bhwf,bhwfd->bhwd", bary, per_vert[bidx, corners])
+        key = (id(self.faces), verts.shape[1])
+        if getattr(self, "_inc_key", None) != key:
+            self._incidence = corner_incidence(faces, verts.shape[1])
+            self._inc_key = key
+        corners = faces[np.where(mask, ras["pix_to_face"], 0)]  # (B, H, W, 3)
+        bidx = np.arange(verts.shape[0])[:, None, None, None]
 
-            if channel == "pos_mask":
-                # visibility mask for pixels whose VIEW-SPACE normal faces
-                # the camera (renderer.py:193-194: transformed normal z
-                # < -0.05; translation-invariant, so pre/post z-shift agree)
-                tn = vertex_normals_batch(
-                    np.asarray(trans_verts, dtype=np.float64), faces,
-                    self._incidence,
-                )
-                tz = interp(tn)[..., 2]
-                img = np.where((tz < -0.05) & mask, 255.0, 0.0)
-            else:
-                n_img = interp(vertex_normals_batch(verts, faces, self._incidence))
-                if channel == "normal":
-                    img = (n_img[..., 2] * 0.5 + 0.5) * 255.0 * mask
-                elif channel == "texture":
-                    # full textured forward (renderer.py:186-218): uv grid
-                    # from barycentric uv interpolation (uv*2-1, y flipped,
-                    # renderer.py:95-99) -> bilinear albedo sample -> x SH
-                    # shading x alpha; gray payload = RGB mean
-                    from talkinghead_datapipeline_spark.operators.rasterize import (
-                        grid_sample_bilinear,
-                    )
+        def interp(per_vert):  # (B, V, D) -> (B, H, W, D) via winner bary
+            return np.einsum("bhwf,bhwfd->bhwd", bary, per_vert[bidx, corners])
 
-                    uv = self._uv_for(verts.shape[1])  # (V, 2) in [0, 1]
-                    uv_ndc = uv * 2.0 - 1.0
-                    uv_ndc[:, 1] = -uv_ndc[:, 1]
-                    grid = interp(np.broadcast_to(
-                        uv_ndc[None], (verts.shape[0],) + uv_ndc.shape
-                    ))
-                    shading = sh_irradiance(n_img, self.sh_coeff)
-                    imgs = []
-                    for bi in range(verts.shape[0]):
-                        alb = grid_sample_bilinear(self.albedo, grid[bi])
-                        rgb = alb.transpose(1, 2, 0) * shading[bi]
-                        imgs.append(rgb.mean(axis=-1))
-                    img = np.clip(np.stack(imgs), 0.0, 1.0) * 255.0 * mask
-                else:  # shade — SH-lit gray shape overlay
-                    shading = sh_irradiance(n_img, self.sh_coeff)
-                    gray = shading.mean(axis=-1) * self._ALBEDO
-                    img = np.clip(gray, 0.0, 1.0) * 255.0 * mask
-        out = np.clip(np.round(img), 0, 255).astype(np.uint8)
-        return [row.tobytes() for row in out]
+        if "pos_mask" in interpolated:
+            # visibility mask for pixels whose VIEW-SPACE normal faces
+            # the camera (renderer.py:193-194: transformed normal z
+            # < -0.05; translation-invariant, so pre/post z-shift agree)
+            tz = interp(vertex_normals_batch(tv, faces, self._incidence))[..., 2]
+            imgs["pos_mask"] = np.where((tz < -0.05) & mask, 255.0, 0.0)
+        if not interpolated - {"pos_mask"}:
+            return imgs
+
+        n_img = interp(vertex_normals_batch(verts, faces, self._incidence))
+        if "normal" in interpolated:
+            imgs["normal"] = (n_img[..., 2] * 0.5 + 0.5) * 255.0 * mask
+        if not interpolated & {"shade", "texture"}:
+            return imgs
+        shading = sh_irradiance(n_img, self.sh_coeff)
+        if "shade" in interpolated:  # SH-lit gray shape overlay
+            gray = shading.mean(axis=-1) * self._ALBEDO
+            imgs["shade"] = np.clip(gray, 0.0, 1.0) * 255.0 * mask
+        if "texture" in interpolated:
+            # full textured forward (renderer.py:186-218): uv grid from
+            # barycentric uv interpolation (uv*2-1, y flipped,
+            # renderer.py:95-99) -> bilinear albedo sample -> x SH shading
+            # x alpha; gray payload = RGB mean
+            uv = self._uv_for(verts.shape[1])  # (V, 2) in [0, 1]
+            uv_ndc = uv * 2.0 - 1.0
+            uv_ndc[:, 1] = -uv_ndc[:, 1]
+            grid = interp(np.broadcast_to(uv_ndc[None], (verts.shape[0],) + uv_ndc.shape))
+            alb = grid_sample_bilinear(self.albedo, grid)  # (C, B, H, W)
+            rgb = np.moveaxis(alb, 0, -1) * shading
+            imgs["texture"] = np.clip(rgb.mean(axis=-1), 0.0, 1.0) * 255.0 * mask
+        return imgs
 
     def render(
         self,
@@ -480,9 +507,11 @@ class ShapeRenderer:
         cam: np.ndarray | None = None,
         channel: str = "shade",
     ) -> bytes:
-        verts = np.asarray(vertices, dtype=np.float64)
-        tv = np.asarray(trans_verts, dtype=np.float64)
-        return self.render_batch(verts[None], tv[None], cam, channel)[0]
+        """One mesh, one channel: ``render_batch`` on a batch of one."""
+        batch = self.render_batch(
+            np.asarray(vertices)[None], np.asarray(trans_verts)[None], (channel,)
+        )
+        return batch[channel][0]
 
 
 # The md5-tiled stub shrank to this alias when the rasterizer tier became

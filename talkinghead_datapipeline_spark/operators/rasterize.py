@@ -79,6 +79,9 @@ COORD_CLAMP_UNITS = 8  # |x|,|y| ≤ 8 NDC units after clamp
 Z_CLAMP_UNITS = 16  # z ∈ [0, 16] NDC units after the +10 shift
 COORD_CLAMP = COORD_CLAMP_UNITS * SCALE  # at the default scale (oracle)
 Z_CLAMP = Z_CLAMP_UNITS * SCALE
+# Element budget of one rasterizer sweep's (chunk, F, size, size) arrays,
+# shared by rasterize_batch and ShapeRenderer.render_batch's mesh walk.
+CHUNK_ELEMS = 8_000_000
 
 # SH constant factors — renderer.py:118-131 (public Ramamoorthi-Hanrahan
 # irradiance constants as the reference writes them).
@@ -222,19 +225,24 @@ def _rasterize_chunk(
     return {"mask": mask, "pix_to_face": pix_to_face, "zbuf": zbuf, "bary": bary}
 
 
+def meshes_per_chunk(n_faces: int, size: int) -> int:
+    """How many meshes one rasterizer sweep takes: as many as keep the
+    (chunk, F, size, size) intermediates under ``CHUNK_ELEMS`` elements,
+    and at least one."""
+    return max(1, CHUNK_ELEMS // max(1, n_faces * size * size))
+
+
 def rasterize_batch(
     q_verts: np.ndarray,
     faces: np.ndarray,
     size: int,
     scale: int = SCALE,
-    max_chunk_elems: int = 8_000_000,
 ) -> dict[str, np.ndarray]:
     """Batched exact-integer rasterization: ``q_verts`` is (B, V, 3) int64,
-    outputs carry a leading batch axis. Chunks the batch so the (chunk, F,
-    size, size) int64 intermediates stay under ``max_chunk_elems`` elements
-    — one vectorized sweep per chunk instead of per-mesh Python overhead
-    (measured 7.9x on flame_render_pipeline at sf0.1 when this was
-    per-row).
+    outputs carry a leading batch axis. Chunks the batch by
+    ``meshes_per_chunk`` — one vectorized sweep per chunk instead of
+    per-mesh Python overhead (measured 7.9x on flame_render_pipeline at
+    sf0.1 when this was per-row).
 
     Arithmetic tier (module docstring, ADVICE r12): scales with
     13824·scale³ < 2^53 run the all-float64 bit-exact path; larger scales
@@ -247,8 +255,7 @@ def rasterize_batch(
     q = np.asarray(q_verts, dtype=np.int64)
     f = np.asarray(faces, dtype=np.int64)
     B = q.shape[0]
-    per_mesh = max(1, len(f) * size * size)
-    chunk = max(1, max_chunk_elems // per_mesh)
+    chunk = meshes_per_chunk(len(f), size)
     parts = [
         _rasterize_chunk(q[i : i + chunk], f, size, scale, exact53)
         for i in range(0, B, chunk)
@@ -306,10 +313,11 @@ def grid_sample_bilinear(image: np.ndarray, grid: np.ndarray) -> np.ndarray:
     lookup of the reference's texture tier (renderer.py:188
     ``F.grid_sample(albedos, grid, align_corners=False)``).
 
-    ``image`` is (C, H, W); ``grid`` is (h, w, 2) with grid[..., 0] = x
-    (width axis) and grid[..., 1] = y in [-1, 1]. align_corners=False maps
-    x → ((x + 1)·W − 1)/2 so the corners of the [-1,1] square hit pixel
-    EDGES, not centers; out-of-range taps read zero. Returns (C, h, w).
+    ``image`` is (C, H, W); ``grid`` is (..., h, w, 2) with grid[..., 0] =
+    x (width axis) and grid[..., 1] = y in [-1, 1]; leading axes (a batch)
+    broadcast. align_corners=False maps x → ((x + 1)·W − 1)/2 so the
+    corners of the [-1,1] square hit pixel EDGES, not centers; out-of-range
+    taps read zero. Returns (C, ..., h, w).
     """
     img = np.asarray(image, dtype=np.float64)
     g = np.asarray(grid, dtype=np.float64)

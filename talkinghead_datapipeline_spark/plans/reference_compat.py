@@ -433,13 +433,18 @@ def _rendering(ctx: GraphContext, p: dict[str, Any]) -> None:
     """N17: verts + cam → render_normal/render_uv/render_mask binaries
     (three sinks of rendering.py:53-143) — each channel a REAL rasterizer
     output (operators.rasterize): interpolated normal-z, barycentric
-    uv-interpolant, and z-buffered coverage mask."""
+    uv-interpolant, and z-buffered coverage mask. Like ``SRenderY.forward``
+    it rasterizes once for all three: each pandas batch is stacked and goes
+    through one ``ShapeRenderer.render_batch`` call."""
     joined = ctx.get("flame_out").join(
         ctx.get("emoca_codes").select("clip_name", "frame_idx", "cam"),
         ["clip_name", "frame_idx"],
     )
 
     size = int(p.get("image_size", 16))
+    columns = [
+        "clip_name", "frame_idx", "render_normal", "render_uv", "render_mask", "error",
+    ]
 
     def infer(renderers, pdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np
@@ -450,6 +455,8 @@ def _rendering(ctx: GraphContext, p: dict[str, Any]) -> None:
             view_transform,
         )
 
+        if len(pdf) == 0:
+            return pd.DataFrame(columns=columns)
         # The cached "renderer" resource outlives this graph in a reused
         # worker, so it keeps one renderer per image size.
         model = renderers.get(size)
@@ -457,31 +464,23 @@ def _rendering(ctx: GraphContext, p: dict[str, Any]) -> None:
             model = renderers[size] = ShapeRenderer(
                 size_hw=(size, size), faces=FlameLbsDecoder().faces
             )
-        rows = []
-        for name, idx, verts, cam in zip(
-            pdf["clip_name"], pdf["frame_idx"], pdf["verts"], pdf["cam"]
-        ):
-            # Arrow hands nested arrays over as object arrays of arrays;
-            # stack row-wise (asarray on the object array is ragged-unsafe).
-            v = np.stack([np.asarray(r, dtype=np.float64) for r in verts])
-            c = np.asarray(cam, dtype=np.float64)
-            tv = view_transform(v, c)
-            rows.append(
-                {
-                    "clip_name": name,
-                    "frame_idx": idx,
-                    "render_normal": model.render(v, tv, c, channel="normal"),
-                    "render_uv": model.render(v, tv, c, channel="bary"),
-                    "render_mask": model.render(v, tv, c, channel="mask"),
-                    "error": None,
-                }
-            )
+        # Arrow hands nested arrays over as object arrays of arrays;
+        # stack row-wise (asarray on the object array is ragged-unsafe).
+        verts = np.stack(
+            [np.stack([np.asarray(r, dtype=np.float64) for r in v]) for v in pdf["verts"]]
+        )
+        cams = np.stack([np.asarray(c, dtype=np.float64) for c in pdf["cam"]])
+        out = model.render_batch(verts, view_transform(verts, cams), ("normal", "bary", "mask"))
         return pd.DataFrame(
-            rows,
-            columns=[
-                "clip_name", "frame_idx",
-                "render_normal", "render_uv", "render_mask", "error",
-            ],
+            {
+                "clip_name": pdf["clip_name"].to_numpy(),
+                "frame_idx": pdf["frame_idx"].to_numpy(),
+                "render_normal": out["normal"],
+                "render_uv": out["bary"],
+                "render_mask": out["mask"],
+                "error": None,
+            },
+            columns=columns,
         )
 
     _infer(

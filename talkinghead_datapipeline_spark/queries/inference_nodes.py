@@ -345,7 +345,7 @@ def flame_render_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         # decode + projection + rasterize/SH run as ONE vectorized batch —
         # the per-row form measured 7.9x slower at sf0.1
         verts, _ = flame.decode_batch(sh, ex, po)
-        frames = renderer.render_batch(verts, view_transform(verts, cams), cams)
+        frames = renderer.render_batch(verts, view_transform(verts, cams), ("shade",))["shade"]
         rows = []
         for i, (vec_id, cam) in enumerate(zip(pdf["vec_id"], cams)):
             # fixed probe pose drives the oracle-checked landmark; kept as

@@ -500,9 +500,10 @@ def test_broadcast_weights_factory(spark):
 
 
 
-def test_rendering_node_follows_image_size(spark, monkeypatch):
-    # A reused Python worker hands every graph's batch_fn the resource it
-    # cached under the model key for the first graph it ran.
+def _render_batch_fns(spark, monkeypatch, sizes):
+    """Build the graph up to RenderingNode once per image size; return the
+    renderer's model factory, the (size-ordered) batch_fns it was built
+    with, and the joined input frame they read."""
     from talkinghead_datapipeline_spark.operators import inference
     from talkinghead_datapipeline_spark.plans.reference_compat import synthetic_clips
 
@@ -520,10 +521,29 @@ def test_rendering_node_follows_image_size(spark, monkeypatch):
         {"name": name, "params": {}}
         for name in ("VideoToImagesNode", "FaceAlignmentNode", "FixedBboxesNode", "CropNode", "EmocaNode", "FlameNode")
     ]
-    for size in (12, 20):
+    for size in sizes:
         ctx = run_reference_graph(spark, [*upstream, {"name": "RenderingNode", "params": {"image_size": size}}], {"video": video})
-    pdf = ctx.get("flame_out").join(ctx.get("emoca_codes").select("clip_name", "frame_idx", "cam"), ["clip_name", "frame_idx"]).toPandas()
-    (factory, render12), (_, render20) = renderers
+    joined = ctx.get("flame_out").join(ctx.get("emoca_codes").select("clip_name", "frame_idx", "cam"), ["clip_name", "frame_idx"])
+    return renderers[0][0], [fn for _, fn in renderers], joined
+
+
+def test_rendering_node_follows_image_size(spark, monkeypatch):
+    # A reused Python worker hands every graph's batch_fn the resource it
+    # cached under the model key for the first graph it ran.
+    factory, (render12, render20), joined = _render_batch_fns(spark, monkeypatch, (12, 20))
+    pdf = joined.toPandas()
     cached = factory()
     assert {len(b) for b in render12(cached, pdf)["render_uv"]} == {144}
     assert {len(b) for b in render20(cached, pdf)["render_uv"]} == {400}
+
+
+def test_rendering_node_empty_batch(spark, monkeypatch):
+    # An empty pandas batch has nothing to stack: the batch_fn must return
+    # an empty frame with the node's six columns.
+    factory, (render,), _ = _render_batch_fns(spark, monkeypatch, (12,))
+    empty = pd.DataFrame(columns=["clip_name", "frame_idx", "verts", "cam"])
+    out = render(factory(), empty)
+    assert len(out) == 0
+    assert list(out.columns) == [
+        "clip_name", "frame_idx", "render_normal", "render_uv", "render_mask", "error",
+    ]

@@ -45,6 +45,15 @@ def test_canary_queries_match_oracle(spark, sf_dir):
     assert not failures, "\n".join(failures)
 
 
+def test_flame_render_pipeline_matches_oracle(spark, sf_dir):
+    """Default-tier oracle compare of the one registered query that renders
+    through ``ShapeRenderer.render_batch``; the n17 rasterizer queries have
+    theirs in tests/test_render_*_staged.py."""
+    spec = _SPECS["flame_render_pipeline"]
+    result = run_compare(spark, sf_dir, "flame_render_pipeline", spec.spark, spec.oracle)
+    assert result.ok, str(result)
+
+
 def test_rows_only_queries_run(spark, sf_dir):
     """Queries without an oracle (currently none — all registered queries
     are oracled; see test_all_queries_oracled) still get a rows-and-schema

@@ -10,6 +10,7 @@ config), utils.py:80-132 (vertex_normals), renderer.py:232-262 (SH)."""
 
 from __future__ import annotations
 
+import hashlib
 from fractions import Fraction
 
 import numpy as np
@@ -413,3 +414,68 @@ def test_scale_guard_rejects_int64_overflow():
     q = np.zeros((1, 3, 3), dtype=np.int64)
     with pytest.raises(ValueError, match="overflows"):
         rasterize_batch(q, np.array([[0, 1, 2]]), 8, scale)
+
+
+# --- one rasterization per batch (ShapeRenderer.render_batch) ---------------
+
+# md5 of each channel's three payloads, concatenated in batch order, as the
+# per-row path wrote them before render_batch took a tuple of channels: one
+# ``render(v, view_transform(v, c), c, channel)`` call per mesh and channel.
+_PER_ROW_MD5 = {
+    (16, "shade"): "64b52b50fe0eecca9fae0750691f0951",
+    (16, "mask"): "d4b62df02191f2f37d8ffba4b877ab29",
+    (16, "normal"): "896f26ee9dbb5369156dcf53fa82e542",
+    (16, "bary"): "beefd9ca64bb2f32bcb824590cc39b83",
+    (16, "texture"): "840af1da78cccbd86b4dc425756a73e3",
+    (16, "pos_mask"): "4dd322946dea92a332b366b167a2e56a",
+    (320, "shade"): "7815121ce2af15799eb25b534796b0ac",
+    (320, "mask"): "9c2aed210bcd36a58dd3e9593af80aa2",
+    (320, "normal"): "56a8e2bf273cf0c7912377fa04b11075",
+    (320, "bary"): "6371a7a4639c63d11d0e1f670728ced4",
+    (320, "texture"): "caa13dc72496a7f17c1a6843c325051f",
+    (320, "pos_mask"): "623d4667d63e06c2229e2f9977106c88",
+}
+
+
+@pytest.mark.parametrize("size", [16, 320])
+def test_render_batch_bit_identical_to_per_mesh_render(size, monkeypatch):
+    """One rasterization for all six channels of a 3-mesh batch gives the
+    bytes of one ``render`` call per mesh and channel, whatever the chunking
+    of the mesh walk, and the bytes the per-row path wrote."""
+    from talkinghead_datapipeline_spark.operators import rasterize
+    from talkinghead_datapipeline_spark.operators.models import (
+        FlameLbsDecoder,
+        ShapeRenderer,
+        view_transform,
+    )
+
+    brng = np.random.default_rng(20261017)
+    m = FlameLbsDecoder()
+    verts, _ = m.decode_batch(
+        brng.normal(size=(3, 8)), brng.normal(size=(3, 8)), brng.normal(size=(3, 6)) * 0.2
+    )
+    cams = np.column_stack([brng.uniform(0.4, 0.6, 3), brng.normal(size=(3, 2)) * 0.1])
+    channels = ShapeRenderer.CHANNELS
+    r = ShapeRenderer((size, size), faces=m.faces)
+    batched = r.render_batch(verts, view_transform(verts, cams), channels)
+
+    per_mesh = {
+        ch: [r.render(v, view_transform(v, c), c, channel=ch) for v, c in zip(verts, cams)]
+        for ch in channels
+    }
+    assert batched == per_mesh
+    for ch in channels:
+        assert hashlib.md5(b"".join(batched[ch])).hexdigest() == _PER_ROW_MD5[(size, ch)], ch
+
+    # two meshes per sweep at 16 px, one at 320 px: an uneven walk
+    monkeypatch.setattr(rasterize, "CHUNK_ELEMS", 2 * len(m.faces) * 16 * 16)
+    assert rasterize.meshes_per_chunk(len(m.faces), size) < len(verts)
+    assert r.render_batch(verts, view_transform(verts, cams), channels) == batched
+
+
+def test_render_batch_rejects_unknown_channel():
+    from talkinghead_datapipeline_spark.operators.models import ShapeRenderer
+
+    tv = rng.normal(size=(1, 5, 3)) * 0.5
+    with pytest.raises(ValueError, match="unknown channels"):
+        ShapeRenderer((4, 4)).render_batch(tv, tv, ("mask", "depth"))
