@@ -26,6 +26,8 @@ from typing import Any
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from talkinghead_datapipeline_spark.shipping import ensure_package_shipped, release_zip_finders
+
 # Per-python-worker resource cache (one model instance per executor process,
 # exactly the BaseResource lifetime re-expressed for Spark workers).
 _RESOURCE_CACHE: dict[str, Any] = {}
@@ -72,10 +74,12 @@ def batched_inference(
     model outputs and the exception text in ``error_col`` — the pipeline
     continues, mirroring run_sequence's RuntimeError containment
     (dpl/processor/nodes/base.py:137-142) at batch grain (audio.py:65-70).
+
+    When the task's batches are done, the worker's zipimport finders are
+    released (``shipping.release_zip_finders``), so the next task on the
+    reused worker does not re-read ``pyspark.zip`` and the Spark jar.
     """
     from pyspark.sql.types import StructType
-
-    from talkinghead_datapipeline_spark.shipping import ensure_package_shipped
 
     ensure_package_shipped(df.sparkSession)
     # Parse the DDL properly (driver-side, once): naive comma-splitting
@@ -83,22 +87,25 @@ def batched_inference(
     out_cols = StructType.fromDDL(output_schema).fieldNames()
 
     def _infer(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        model = get_executor_resource(model_key, model_factory)
-        for pdf in batches:
-            try:
-                out = batch_fn(model, pdf)
-                if error_col not in out.columns:
-                    out[error_col] = None
-                yield out
-            except Exception as exc:  # noqa: BLE001 — quarantine, don't abort
-                # missing model-output columns become object-dtype None
-                # (NOT float NaN — Arrow nulls them cleanly for any type).
-                none_col = pd.Series([None] * len(pdf), dtype=object, index=pdf.index)
-                quarantined = pd.DataFrame(
-                    {c: pdf[c] if c in pdf.columns else none_col for c in out_cols}
-                )
-                quarantined[error_col] = f"{type(exc).__name__}: {exc}"
-                yield quarantined
+        try:
+            model = get_executor_resource(model_key, model_factory)
+            for pdf in batches:
+                try:
+                    out = batch_fn(model, pdf)
+                    if error_col not in out.columns:
+                        out[error_col] = None
+                    yield out
+                except Exception as exc:  # noqa: BLE001 — quarantine, don't abort
+                    # missing model-output columns become object-dtype None
+                    # (NOT float NaN — Arrow nulls them cleanly for any type).
+                    none_col = pd.Series([None] * len(pdf), dtype=object, index=pdf.index)
+                    quarantined = pd.DataFrame(
+                        {c: pdf[c] if c in pdf.columns else none_col for c in out_cols}
+                    )
+                    quarantined[error_col] = f"{type(exc).__name__}: {exc}"
+                    yield quarantined
+        finally:
+            release_zip_finders()
 
     return df.mapInPandas(_infer, schema=output_schema)
 

@@ -44,6 +44,8 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # The per-worker model cache and the zip-finder release both need reused workers.
+        .config("spark.python.worker.reuse", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
         # Fixture parquet stores TIMESTAMP(NANOS) (events.ts) which Spark
         # cannot map to TimestampType; read as long and convert in catalog.

@@ -33,6 +33,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from talkinghead_datapipeline_spark.shipping import ensure_package_shipped, release_zip_finders
+
 FFMPEG = shutil.which("ffmpeg")
 
 # Reference command templates (dpl/processor/nodes/ffmpeg.py:13-26), as arg
@@ -176,25 +178,26 @@ def video_to_frames(
     so one giant video never holds a whole batch's frames in memory.
     A failed clip yields one error row (see ``_run_ffmpeg``)."""
     exe = _resolve_ffmpeg(ffmpeg_exe)
-    from talkinghead_datapipeline_spark.shipping import ensure_package_shipped
-
     ensure_package_shipped(df.sparkSession)
     cols = [key_col, "frame_idx", "image", "error"]
     out_schema = f"{key_col} string, frame_idx bigint, image binary, error string"
 
     def demux(batches):
-        for pdf in batches:
-            for name, blob in zip(pdf[key_col], pdf[video_col]):
-                frames, err = _run_ffmpeg(
-                    exe, [("in.video", blob)], "in.video",
-                    _FFMPEG_TO_IMG_ARGS, f"frames/%06d{ext}", _read_frames,
-                )
-                rows = (
-                    [(name, idx, image, None) for idx, image in frames]
-                    if err is None
-                    else [(name, None, None, err)]
-                )
-                yield pd.DataFrame(rows, columns=cols)
+        try:
+            for pdf in batches:
+                for name, blob in zip(pdf[key_col], pdf[video_col]):
+                    frames, err = _run_ffmpeg(
+                        exe, [("in.video", blob)], "in.video",
+                        _FFMPEG_TO_IMG_ARGS, f"frames/%06d{ext}", _read_frames,
+                    )
+                    rows = (
+                        [(name, idx, image, None) for idx, image in frames]
+                        if err is None
+                        else [(name, None, None, err)]
+                    )
+                    yield pd.DataFrame(rows, columns=cols)
+        finally:
+            release_zip_finders()
 
     return df.mapInPandas(demux, schema=out_schema)
 
@@ -220,8 +223,6 @@ def frames_to_video(
     returned as one row. One shuffle on the clip key — the same partitioning
     every frame-grain operator uses, so Exchange reuse applies."""
     exe = _resolve_ffmpeg(ffmpeg_exe)
-    from talkinghead_datapipeline_spark.shipping import ensure_package_shipped
-
     ensure_package_shipped(df.sparkSession)
     cols = [key_col, "video", "n_frames", "error"]
     out_schema = f"{key_col} string, video binary, n_frames bigint, error string"
@@ -260,19 +261,20 @@ def transcode_media(
     exactly as the reference's target path does). Same mapInPandas shape
     and error containment as ``video_to_frames``."""
     exe = _resolve_ffmpeg(ffmpeg_exe)
-    from talkinghead_datapipeline_spark.shipping import ensure_package_shipped
-
     ensure_package_shipped(df.sparkSession)
     cols = [key_col, out_col, "error"]
     out_schema = f"{key_col} string, {out_col} binary, error string"
 
     def convert(batches):
-        for pdf in batches:
-            for name, blob in zip(pdf[key_col], pdf[content_col]):
-                media, err = _run_ffmpeg(
-                    exe, [("in.media", blob)], "in.media",
-                    (), f"out{target_suffix}", _read_bytes,
-                )
-                yield pd.DataFrame([(name, media, err)], columns=cols)
+        try:
+            for pdf in batches:
+                for name, blob in zip(pdf[key_col], pdf[content_col]):
+                    media, err = _run_ffmpeg(
+                        exe, [("in.media", blob)], "in.media",
+                        (), f"out{target_suffix}", _read_bytes,
+                    )
+                    yield pd.DataFrame([(name, media, err)], columns=cols)
+        finally:
+            release_zip_finders()
 
     return df.mapInPandas(convert, schema=out_schema)

@@ -150,6 +150,48 @@ def test_batched_inference_with_error_channel(spark):
     assert (ok_pdf["score"] == ok_pdf["text"].str.len() * 2.0).all()
 
 
+def test_batched_inference_releases_zip_finders(spark):
+    # A reused worker starts each task with importlib.invalidate_caches(),
+    # which re-reads the archive of every zipimporter in the importer cache.
+    # After a task of batched_inference, a reused worker's next task must
+    # see at most one finder per archive, not one per imported sub-package.
+    def probe(worker_marker, pdf):
+        import sys
+        import zipimport
+
+        finders = [
+            [f.archive, f.prefix]
+            for f in list(sys.path_importer_cache.values())
+            if isinstance(f, zipimport.zipimporter)
+        ]
+        return pd.DataFrame(
+            {"id": pdf["id"], "worker": worker_marker, "finders": json.dumps(finders)}
+        )
+
+    def new_marker():
+        import uuid
+
+        return uuid.uuid4().hex
+
+    df = spark.range(1).coalesce(1)
+    seen, reused = set(), []
+    for _ in range(6):
+        row = batched_inference(
+            df,
+            output_schema="id long, worker string, finders string, error string",
+            model_key="zip_finder_probe",
+            model_factory=new_marker,
+            batch_fn=probe,
+        ).collect()[0]
+        assert row.error is None, row.error
+        if row.worker in seen:
+            reused.append(json.loads(row.finders))
+        seen.add(row.worker)
+    assert reused, "no task ran in a reused Python worker"
+    archives = [archive for archive, _prefix in reused[-1]]
+    assert len(archives) == len(set(archives)), reused[-1]
+
+
 def test_model_stubs_contracts():
     w2v = Wav2vecStub(dim=4)
     wav = np.sin(np.linspace(0, 100, 16000))  # 1 s @ 16 kHz

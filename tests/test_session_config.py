@@ -7,7 +7,8 @@ drift question can rule it out by reading one green row instead of
 re-running a two-worktree A/B. Every key here is load-bearing: AQE and
 skew-join for runtime re-planning at 100 TB, UTC for oracle timestamp
 parity, Arrow for the pandas hops, pushdown + 128 MB splits for the scan
-tier, nanosAsLong for the events fixture."""
+tier, nanosAsLong for the events fixture, reused Python workers for the
+per-worker model cache and the zip-finder release."""
 
 from __future__ import annotations
 
@@ -18,6 +19,7 @@ _CONTRACT = {
     "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.python.worker.reuse": "true",
     "spark.sql.parquet.filterPushdown": "true",
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     "spark.sql.files.maxPartitionBytes": "134217728",
