@@ -197,20 +197,6 @@ def rebalance_for_compute(
     return df
 
 
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TPCH_TABLES
-) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in names}
-
-
-def register_views(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TPCH_TABLES
-) -> None:
-    """Register every catalog table as a temp view for the SQL surface."""
-    for name in names:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
 def persist_once(df: "DataFrame") -> "DataFrame":
     """persist() unless this logical plan is already in the cache.
 

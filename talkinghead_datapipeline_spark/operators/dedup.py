@@ -164,12 +164,6 @@ def minhash_sig_array(shingles: Column) -> Column:
     return minhash_sig_from_hashes(F.transform(shingles, portable_hash32))
 
 
-def minhash_signature(shingles: Column) -> list[Column]:
-    """K permutation-minimum columns over the shingle set (mh0..mhK-1)."""
-    sig = minhash_sig_array(shingles)
-    return [F.element_at(sig, k + 1).alias(f"mh{k}") for k in range(N_PERM)]
-
-
 def band_key(band: int) -> Column:
     """LSH band key = concatenated signature slice."""
     lo = band * BAND_WIDTH

@@ -40,12 +40,6 @@ def get_executor_resource(key: str, factory: Callable[[], Any]) -> Any:
     return _RESOURCE_CACHE[key]
 
 
-def clear_executor_resources() -> None:
-    """Free cached resources (the reference's context-manager unload,
-    base.py:130) — call from a barrier/cleanup stage when switching models."""
-    _RESOURCE_CACHE.clear()
-
-
 def broadcast_weights_factory(df: DataFrame, weights: Any, build: Callable[[Any], Any]):
     """Torrent-broadcast big model weights once per EXECUTOR (not per task,
     not via task-closure serialization): ship ``weights`` with
@@ -64,16 +58,22 @@ def batched_inference(
     model_key: str,
     model_factory: Callable[[], Any],
     batch_fn: Callable[[Any, pd.DataFrame], pd.DataFrame],
-    error_col: str = "error",
 ) -> DataFrame:
     """Run ``batch_fn(model, batch)`` over Arrow batches with a lazy
     per-executor model and whole-batch error quarantine.
 
-    ``output_schema`` must include ``error_col`` (string, null on success).
-    On a batch failure every row of that batch is emitted with nulls for the
-    model outputs and the exception text in ``error_col`` — the pipeline
-    continues, mirroring run_sequence's RuntimeError containment
-    (dpl/processor/nodes/base.py:137-142) at batch grain (audio.py:65-70).
+    The contract: ``output_schema`` (a DDL string) lists only the model's
+    output columns, and ``batch_fn`` returns a frame of those columns for a
+    non-empty batch. The harness owns the rest:
+
+    - it appends an ``error string`` column, null on success;
+    - it never calls ``batch_fn`` on an empty batch;
+    - when ``batch_fn`` raises, every row of that batch is emitted with the
+      input's values for the output columns it shares, nulls for the rest,
+      and the exception text in ``error`` — the pipeline continues,
+      mirroring run_sequence's RuntimeError containment
+      (dpl/processor/nodes/base.py:137-142) at batch grain
+      (audio.py:65-70). ``split_error_channel`` splits the result.
 
     When the task's batches are done, the worker's zipimport finders are
     released (``shipping.release_zip_finders``), so the next task on the
@@ -90,28 +90,27 @@ def batched_inference(
         try:
             model = get_executor_resource(model_key, model_factory)
             for pdf in batches:
+                if len(pdf) == 0:
+                    continue
                 try:
                     out = batch_fn(model, pdf)
-                    if error_col not in out.columns:
-                        out[error_col] = None
-                    yield out
+                    out["error"] = None
                 except Exception as exc:  # noqa: BLE001 — quarantine, don't abort
                     # missing model-output columns become object-dtype None
                     # (NOT float NaN — Arrow nulls them cleanly for any type).
                     none_col = pd.Series([None] * len(pdf), dtype=object, index=pdf.index)
-                    quarantined = pd.DataFrame(
+                    out = pd.DataFrame(
                         {c: pdf[c] if c in pdf.columns else none_col for c in out_cols}
                     )
-                    quarantined[error_col] = f"{type(exc).__name__}: {exc}"
-                    yield quarantined
+                    out["error"] = f"{type(exc).__name__}: {exc}"
+                yield out
         finally:
             release_zip_finders()
 
-    return df.mapInPandas(_infer, schema=output_schema)
+    return df.mapInPandas(_infer, schema=f"{output_schema}, error string")
 
 
-def split_error_channel(df: DataFrame, error_col: str = "error") -> tuple[DataFrame, DataFrame]:
-    """(ok_rows, quarantined_rows) — the E8 report.json analog as data."""
-    return df.filter(df[error_col].isNull()).drop(error_col), df.filter(
-        df[error_col].isNotNull()
-    )
+def split_error_channel(df: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(ok_rows, quarantined_rows) of a ``batched_inference`` output — the
+    E8 report.json analog as data."""
+    return df.filter(df["error"].isNull()).drop("error"), df.filter(df["error"].isNotNull())

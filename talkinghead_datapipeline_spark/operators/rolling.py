@@ -20,7 +20,6 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from talkinghead_datapipeline_spark.functions.windows import savgol_coefficients
 
@@ -80,54 +79,3 @@ def savgol_smooth(
         return pdf
 
     return df.groupBy(key).applyInPandas(_smooth, schema=out_schema)
-
-
-def rolling_extent_bboxes(
-    df: DataFrame,
-    key: str,
-    order_col: str,
-    value: str,
-    window: int = 5,
-    smooth_window: int | None = 25,
-    equalize_q: float | None = 0.75,
-) -> DataFrame:
-    """EMOCA-like rolling bbox pipeline (dpl/processor/nodes/bboxes.py:84-195)
-    re-cast for a scalar series: rolling min/max extent over ``window``
-    neighbor frames (O(N) window frame vs the reference's O(N·w) loop,
-    bboxes.py:128 TODO), optional exact-savgol center smoothing, optional
-    per-key quantile size equalization (np.quantile-parity percentile).
-
-    Returns (key, order_col, lo, hi, center, size[, size_eq]).
-    """
-    from pyspark.sql.window import Window as W
-
-    half_lo = -(window // 2)
-    half_hi = window - window // 2 - 1
-    w = W.partitionBy(key).orderBy(order_col).rowsBetween(half_lo, half_hi)
-    out = df.select(
-        key,
-        order_col,
-        F.min(value).over(w).alias("lo"),
-        F.max(value).over(w).alias("hi"),
-    ).withColumns(
-        {
-            "center": (F.col("lo") + F.col("hi")) / 2,
-            "size": F.col("hi") - F.col("lo"),
-        }
-    )
-    if smooth_window:
-        out = savgol_smooth(out, key, order_col, ["center"], smooth_window)
-    if equalize_q is not None:
-        # quantile-equalize: every frame gets the per-key q-quantile size,
-        # with exact make_equal_size parity (bboxes.py:180-194):
-        # size = quantile.astype(int) — truncation, and sizes >= 0 so
-        # floor == int() — then `size += size % 2` even-parity bump.
-        eq = out.groupBy(key).agg(
-            F.percentile("size", F.lit(equalize_q)).alias("_q_size")
-        )
-        tr = F.floor(F.col("_q_size")).cast("bigint")
-        out = out.join(eq, key).withColumn(
-            # cast keeps the column double as before (consumers round it).
-            "size_eq", (tr + tr % 2).cast("double")
-        ).drop("_q_size")
-    return out

@@ -160,14 +160,13 @@ def _video_to_wav(ctx: GraphContext, p: dict[str, Any]) -> None:
             {
                 "clip_name": pdf["clip_name"],
                 "wav": [w.tolist() for w in wavs],
-                "error": None,
             }
         )
 
     _infer(
         ctx,
         ctx.get("video"),
-        "clip_name string, wav array<double>, error string",
+        "clip_name string, wav array<double>",
         "fake_audio_codec",
         lambda: None,
         decode,
@@ -191,12 +190,9 @@ def _wav2vec(ctx: GraphContext, p: dict[str, Any]) -> None:
                     "clip_name": name,
                     "wav2vec": model.features(w).tolist(),
                     "volume": model.volume(w).tolist(),
-                    "error": None,
                 }
             )
-        return pd.DataFrame(
-            rows, columns=["clip_name", "wav2vec", "volume", "error"]
-        )
+        return pd.DataFrame(rows)
 
     def factory():
         from talkinghead_datapipeline_spark.operators.models import Wav2vecStub
@@ -206,7 +202,7 @@ def _wav2vec(ctx: GraphContext, p: dict[str, Any]) -> None:
     _infer(
         ctx,
         ctx.get("wav"),
-        "clip_name string, wav2vec array<array<double>>, volume array<double>, error string",
+        "clip_name string, wav2vec array<array<double>>, volume array<double>",
         "wav2vec",
         factory,
         infer,
@@ -236,17 +232,14 @@ def _face_alignment(ctx: GraphContext, p: dict[str, Any]) -> None:
                     "clip_name": name,
                     "frame_idx": idx,
                     "landmarks": lmk.tolist(),
-                    "error": None,
                 }
             )
-        return pd.DataFrame(
-            rows, columns=["clip_name", "frame_idx", "landmarks", "error"]
-        )
+        return pd.DataFrame(rows)
 
     _infer(
         ctx,
         ctx.get("images"),
-        "clip_name string, frame_idx int, landmarks array<array<double>>, error string",
+        "clip_name string, frame_idx int, landmarks array<array<double>>",
         "face_alignment",
         lambda: None,
         infer,
@@ -317,15 +310,14 @@ def _crop(ctx: GraphContext, p: dict[str, Any]) -> None:
                     "clip_name": name,
                     "frame_idx": idx,
                     "crop": crop.tobytes(),
-                    "error": None,
                 }
             )
-        return pd.DataFrame(rows, columns=["clip_name", "frame_idx", "crop", "error"])
+        return pd.DataFrame(rows)
 
     _infer(
         ctx,
         joined,
-        "clip_name string, frame_idx int, crop binary, error string",
+        "clip_name string, frame_idx int, crop binary",
         "crop_resize",
         lambda: None,
         crop_fn,
@@ -347,13 +339,9 @@ def _emoca(ctx: GraphContext, p: dict[str, Any]) -> None:
                     "clip_name": name,
                     "frame_idx": idx,
                     **{k: v.tolist() for k, v in code.items()},
-                    "error": None,
                 }
             )
-        return pd.DataFrame(
-            rows,
-            columns=["clip_name", "frame_idx", *model.SPLITS, "error"],
-        )
+        return pd.DataFrame(rows)
 
     def factory():
         from talkinghead_datapipeline_spark.operators.models import EmocaEncoderStub
@@ -367,7 +355,7 @@ def _emoca(ctx: GraphContext, p: dict[str, Any]) -> None:
     _infer(
         ctx,
         ctx.get("crops"),
-        f"clip_name string, frame_idx int, {arr_cols}, error string",
+        f"clip_name string, frame_idx int, {arr_cols}",
         "emoca",
         factory,
         infer,
@@ -404,12 +392,9 @@ def _flame(ctx: GraphContext, p: dict[str, Any]) -> None:
                     "frame_idx": idx,
                     "verts": verts.tolist(),
                     "landmarks3d": lmk.tolist(),
-                    "error": None,
                 }
             )
-        return pd.DataFrame(
-            rows, columns=["clip_name", "frame_idx", "verts", "landmarks3d", "error"]
-        )
+        return pd.DataFrame(rows)
 
     def factory():
         from talkinghead_datapipeline_spark.operators.models import FlameLbsDecoder
@@ -420,7 +405,7 @@ def _flame(ctx: GraphContext, p: dict[str, Any]) -> None:
         ctx,
         ctx.get("emoca_codes"),
         "clip_name string, frame_idx int, verts array<array<double>>, "
-        "landmarks3d array<array<double>>, error string",
+        "landmarks3d array<array<double>>",
         "flame",
         factory,
         infer,
@@ -442,9 +427,6 @@ def _rendering(ctx: GraphContext, p: dict[str, Any]) -> None:
     )
 
     size = int(p.get("image_size", 16))
-    columns = [
-        "clip_name", "frame_idx", "render_normal", "render_uv", "render_mask", "error",
-    ]
 
     def infer(renderers, pdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np
@@ -455,8 +437,6 @@ def _rendering(ctx: GraphContext, p: dict[str, Any]) -> None:
             view_transform,
         )
 
-        if len(pdf) == 0:
-            return pd.DataFrame(columns=columns)
         # The cached "renderer" resource outlives this graph in a reused
         # worker, so it keeps one renderer per image size.
         model = renderers.get(size)
@@ -478,16 +458,14 @@ def _rendering(ctx: GraphContext, p: dict[str, Any]) -> None:
                 "render_normal": out["normal"],
                 "render_uv": out["bary"],
                 "render_mask": out["mask"],
-                "error": None,
-            },
-            columns=columns,
+            }
         )
 
     _infer(
         ctx,
         joined,
         "clip_name string, frame_idx int, render_normal binary, "
-        "render_uv binary, render_mask binary, error string",
+        "render_uv binary, render_mask binary",
         "renderer",
         dict,
         infer,
@@ -555,17 +533,9 @@ def _a2en(ctx: GraphContext, p: dict[str, Any]) -> None:
                     "left_blink": lb,
                     "right_blink": rb,
                     "average_blink": [(a + b) / 2 for a, b in zip(lb, rb)],
-                    "error": None,
                 }
             )
-        return pd.DataFrame(
-            rows,
-            columns=[
-                "clip_name", "n_frames", "wav2vec_resampled",
-                "volume_resampled", "exp", "jaw",
-                "left_blink", "right_blink", "average_blink", "error",
-            ],
-        )
+        return pd.DataFrame(rows)
 
     _infer(
         ctx,
@@ -574,8 +544,7 @@ def _a2en(ctx: GraphContext, p: dict[str, Any]) -> None:
         "wav2vec_resampled array<array<double>>, "
         "volume_resampled array<double>, exp array<array<double>>, "
         "jaw array<double>, left_blink array<double>, "
-        "right_blink array<double>, average_blink array<double>, "
-        "error string",
+        "right_blink array<double>, average_blink array<double>",
         "a2en_pack",
         lambda: None,
         pack,

@@ -66,7 +66,10 @@ def wav2vec_features_stub(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the reference's DataLoader + CUDA loop (audio.py:83-92). The oracle
     checks the UDF output against the stub's closed form — a real
     end-to-end check of the Arrow/mapInPandas path, not a rows-only pass."""
-    from talkinghead_datapipeline_spark.operators.inference import batched_inference
+    from talkinghead_datapipeline_spark.operators.inference import (
+        batched_inference,
+        split_error_channel,
+    )
 
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
 
@@ -83,12 +86,9 @@ def wav2vec_features_stub(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "n_frames": feats.shape[0],
                     "feat_dim": feats.shape[1],
                     "feat_norm": round(float(np.linalg.norm(feats)), 6),
-                    "error": None,
                 }
             )
-        return pd.DataFrame(
-            rows, columns=["vec_id", "n_frames", "feat_dim", "feat_norm", "error"]
-        )
+        return pd.DataFrame(rows)
 
     def factory():
         from talkinghead_datapipeline_spark.operators.models import Wav2vecStub
@@ -97,12 +97,24 @@ def wav2vec_features_stub(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     out = batched_inference(
         emb,
-        output_schema="vec_id bigint, n_frames bigint, feat_dim bigint, feat_norm double, error string",
+        output_schema="vec_id bigint, n_frames bigint, feat_dim bigint, feat_norm double",
         model_key="wav2vec_stub",
         model_factory=factory,
         batch_fn=infer,
     )
-    return out.filter(F.col("error").isNull()).drop("error")
+    return split_error_channel(out)[0]
+
+
+def _affine_sql(base, coefs, c: int) -> str:
+    """SQL text of landmark component ``c`` of an affine-in-betas map:
+    ``base[c] + Σ_k coefs[c, k] · embedding[k + 1]``, folded left to right
+    with each constant as its exact ``repr`` literal."""
+    terms = [repr(float(base[c]))]
+    terms += [
+        f"({float(coefs[c, k])!r} * CAST(embedding[{k + 1}] AS DOUBLE))"
+        for k in range(coefs.shape[1])
+    ]
+    return " + ".join(terms)
 
 
 def _flame_oracle() -> str:
@@ -118,20 +130,12 @@ def _flame_oracle() -> str:
     m = FlameLbsDecoder()
     base, coefs = m.rest_landmark_affine(0)
 
-    def comp(c: int) -> str:
-        terms = [repr(float(base[c]))]
-        terms += [
-            f"({float(coefs[c, k])!r} * CAST(embedding[{k + 1}] AS DOUBLE))"
-            for k in range(coefs.shape[1])
-        ]
-        return " + ".join(terms)
-
     return f"""
     SELECT vec_id,
            CAST(64 AS BIGINT) AS n_verts,
            CAST(12 AS BIGINT) AS n_landmarks,
-           round({comp(0)}, 6) AS lmk0_x,
-           round({comp(1)}, 6) AS lmk0_y
+           round({_affine_sql(base, coefs, 0)}, 6) AS lmk0_x,
+           round({_affine_sql(base, coefs, 1)}, 6) AS lmk0_y
     FROM embeddings
     """
 
@@ -153,7 +157,10 @@ def flame_decode_landmarks(spark: SparkSession, sf_dir: str) -> DataFrame:
     what the oracle recomputes, value-checking every LBS stage end-to-end
     (the pose path is exercised by flame_render_pipeline and pinned against
     hand-computed rotations in tests)."""
-    from talkinghead_datapipeline_spark.operators.inference import batched_inference
+    from talkinghead_datapipeline_spark.operators.inference import (
+        batched_inference,
+        split_error_channel,
+    )
 
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id",
@@ -176,13 +183,9 @@ def flame_decode_landmarks(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "n_landmarks": lmks.shape[0],
                     "lmk0_x": round(float(lmks[0, 0]), 6),
                     "lmk0_y": round(float(lmks[0, 1]), 6),
-                    "error": None,
                 }
             )
-        return pd.DataFrame(
-            rows,
-            columns=["vec_id", "n_verts", "n_landmarks", "lmk0_x", "lmk0_y", "error"],
-        )
+        return pd.DataFrame(rows)
 
     def factory():
         from talkinghead_datapipeline_spark.operators.models import FlameLbsDecoder
@@ -193,13 +196,13 @@ def flame_decode_landmarks(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb,
         output_schema=(
             "vec_id bigint, n_verts bigint, n_landmarks bigint, "
-            "lmk0_x double, lmk0_y double, error string"
+            "lmk0_x double, lmk0_y double"
         ),
         model_key="flame_stub",
         model_factory=factory,
         batch_fn=infer,
     )
-    return out.filter(F.col("error").isNull()).drop("error")
+    return split_error_channel(out)[0]
 
 
 # Fixed probe pose for the oracle-checked posed-landmark column: nonzero
@@ -232,14 +235,6 @@ def _flame_render_oracle() -> str:
     m = FlameLbsDecoder()
     base, coefs = m.posed_landmark_affine(0, np.asarray(_PROBE_POSE))
 
-    def comp(c: int) -> str:
-        terms = [repr(float(base[c]))]
-        terms += [
-            f"({float(coefs[c, k])!r} * CAST(embedding[{k + 1}] AS DOUBLE))"
-            for k in range(coefs.shape[1])
-        ]
-        return " + ".join(terms)
-
     cam_sq = " + ".join(
         f"CAST(embedding[{i}] AS DOUBLE) * CAST(embedding[{i}] AS DOUBLE)"
         for i in (23, 24, 25)
@@ -250,9 +245,9 @@ def _flame_render_oracle() -> str:
     return f"""
     WITH base AS (
       SELECT vec_id,
-             round({comp(0)}, 6) AS posed_lmk_x,
-             round({comp(1)}, 6) AS posed_lmk_y,
-             round({comp(2)}, 6) AS posed_lmk_z,
+             round({_affine_sql(base, coefs, 0)}, 6) AS posed_lmk_x,
+             round({_affine_sql(base, coefs, 1)}, 6) AS posed_lmk_y,
+             round({_affine_sql(base, coefs, 2)}, 6) AS posed_lmk_z,
              CAST(embedding[23] AS DOUBLE) AS cam_s,
              CAST(embedding[24] AS DOUBLE) AS cam_tx,
              CAST(embedding[25] AS DOUBLE) AS cam_ty,
@@ -300,7 +295,10 @@ def flame_render_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-oracled cross-engine by the staged n17_render_mask_zbuffer."""
     from talkinghead_datapipeline_spark.catalog import rebalance_for_compute
     from talkinghead_datapipeline_spark.functions.geometry import orth_project
-    from talkinghead_datapipeline_spark.operators.inference import batched_inference
+    from talkinghead_datapipeline_spark.operators.inference import (
+        batched_inference,
+        split_error_channel,
+    )
 
     # compute-dense per-row work (LBS decode + rasterize + SH): spread the
     # single-file local input across cores before the mapInPandas stage
@@ -329,14 +327,6 @@ def flame_render_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         probe_base, probe_coefs = flame.posed_landmark_affine(
             0, np.asarray(_PROBE_POSE, dtype=np.float64)
         )
-        if len(pdf) == 0:
-            return pd.DataFrame(
-                columns=[
-                    "vec_id", "n_bytes", "cam_norm", "posed_lmk_x",
-                    "posed_lmk_y", "posed_lmk_z", "cam_s", "cam_tx",
-                    "cam_ty", "error",
-                ]
-            )
         sh = np.stack([np.asarray(x, dtype=np.float64) for x in pdf["shape_code"]])
         ex = np.stack([np.asarray(x, dtype=np.float64) for x in pdf["exp_code"]])
         po = np.stack([np.asarray(x, dtype=np.float64) for x in pdf["pose_code"]])
@@ -363,16 +353,9 @@ def flame_render_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "cam_s": float(cam[0]),
                     "cam_tx": float(cam[1]),
                     "cam_ty": float(cam[2]),
-                    "error": None,
                 }
             )
-        return pd.DataFrame(
-            rows,
-            columns=[
-                "vec_id", "n_bytes", "cam_norm", "posed_lmk_x", "posed_lmk_y",
-                "posed_lmk_z", "cam_s", "cam_tx", "cam_ty", "error",
-            ],
-        )
+        return pd.DataFrame(rows)
 
     def factory():
         from talkinghead_datapipeline_spark.operators.models import (
@@ -388,7 +371,7 @@ def flame_render_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         output_schema=(
             "vec_id bigint, n_bytes bigint, cam_norm double, "
             "posed_lmk_x double, posed_lmk_y double, posed_lmk_z double, "
-            "cam_s double, cam_tx double, cam_ty double, error string"
+            "cam_s double, cam_tx double, cam_ty double"
         ),
         model_key="flame_render_stub",
         model_factory=factory,
@@ -399,7 +382,7 @@ def flame_render_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("cam_s"), F.col("cam_tx"), F.col("cam_ty"),
     )
     return (
-        out.filter(F.col("error").isNull())
+        split_error_channel(out)[0]
         .select(
             "vec_id",
             "n_bytes",
@@ -637,7 +620,10 @@ def n17_render_mask_zbuffer(spark: SparkSession, sf_dir: str) -> DataFrame:
     pixel count, winning-face-id sum, and floor-micro z extrema. See the
     staging block above for the determinism and scale contract."""
     from talkinghead_datapipeline_spark.catalog import rebalance_for_compute
-    from talkinghead_datapipeline_spark.operators.inference import batched_inference
+    from talkinghead_datapipeline_spark.operators.inference import (
+        batched_inference,
+        split_error_channel,
+    )
 
     # compute-dense per-row rasterization: spread the single-file local
     # input across cores before the mapInPandas stage
@@ -686,16 +672,9 @@ def n17_render_mask_zbuffer(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "winner_face_sum": fsum,
                     "zmin_micro": zmin,
                     "zmax_micro": zmax,
-                    "error": None,
                 }
             )
-        return pd.DataFrame(
-            rows,
-            columns=[
-                "vec_id", "mask_pixels", "winner_face_sum",
-                "zmin_micro", "zmax_micro", "error",
-            ],
-        )
+        return pd.DataFrame(rows)
 
     def factory():
         import numpy as np
@@ -714,13 +693,13 @@ def n17_render_mask_zbuffer(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb,
         output_schema=(
             "vec_id bigint, mask_pixels bigint, winner_face_sum bigint, "
-            "zmin_micro bigint, zmax_micro bigint, error string"
+            "zmin_micro bigint, zmax_micro bigint"
         ),
         model_key="n17_rasterizer",
         model_factory=factory,
         batch_fn=infer,
     )
-    return out.filter(F.col("error").isNull()).drop("error")
+    return split_error_channel(out)[0]
 
 
 # ---------------------------------------------------------------------------
@@ -973,7 +952,10 @@ def n17_render_shaded_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-engine bit-exactness argument (only correctly-rounded IEEE ops in
     a pinned association order). STAGED r13, REGISTERED r14."""
     from talkinghead_datapipeline_spark.catalog import rebalance_for_compute
-    from talkinghead_datapipeline_spark.operators.inference import batched_inference
+    from talkinghead_datapipeline_spark.operators.inference import (
+        batched_inference,
+        split_error_channel,
+    )
 
     emb = rebalance_for_compute(load_table(spark, sf_dir, "embeddings")).select(
         "vec_id",
@@ -996,13 +978,6 @@ def n17_render_shaded_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
         aff, faces, w, alb = (
             model["aff"], model["faces"], model["weights"], model["albedo"],
         )
-        if not len(pdf):
-            return pd.DataFrame(
-                columns=[
-                    "vec_id", "covered_pixels", "shade_sum_micro",
-                    "shade_min_micro", "shade_max_micro", "error",
-                ]
-            )
         e = np.stack([np.asarray(b, dtype=np.float64) for b in pdf["betas"]])
         cam = np.stack(
             [np.asarray(c, dtype=np.float64) for c in pdf["cam_code"]]
@@ -1038,15 +1013,14 @@ def n17_render_shaded_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
             n_cov = int(m.sum())
             if n_cov:
                 pm = micro[bi][m].astype(np.int64)
-                rows.append((vec_id, n_cov, int(pm.sum()),
-                             int(pm.min()), int(pm.max()), None))
+                rows.append((vec_id, n_cov, int(pm.sum()), int(pm.min()), int(pm.max())))
             else:
-                rows.append((vec_id, 0, 0, None, None, None))
+                rows.append((vec_id, 0, 0, None, None))
         return pd.DataFrame(
             rows,
             columns=[
                 "vec_id", "covered_pixels", "shade_sum_micro",
-                "shade_min_micro", "shade_max_micro", "error",
+                "shade_min_micro", "shade_max_micro",
             ],
         )
 
@@ -1070,13 +1044,13 @@ def n17_render_shaded_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb,
         output_schema=(
             "vec_id bigint, covered_pixels bigint, shade_sum_micro bigint, "
-            "shade_min_micro bigint, shade_max_micro bigint, error string"
+            "shade_min_micro bigint, shade_max_micro bigint"
         ),
         model_key="n17_shaded_rasterizer",
         model_factory=factory,
         batch_fn=infer,
     )
-    return out.filter(F.col("error").isNull()).drop("error")
+    return split_error_channel(out)[0]
 
 
 # ---------------------------------------------------------------------------
@@ -1263,7 +1237,10 @@ def n17_render_texture_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     block above for the exactness argument and asset provenance. STAGED
     r13, REGISTERED r14."""
     from talkinghead_datapipeline_spark.catalog import rebalance_for_compute
-    from talkinghead_datapipeline_spark.operators.inference import batched_inference
+    from talkinghead_datapipeline_spark.operators.inference import (
+        batched_inference,
+        split_error_channel,
+    )
 
     emb = rebalance_for_compute(load_table(spark, sf_dir, "embeddings")).select(
         "vec_id",
@@ -1285,12 +1262,6 @@ def n17_render_texture_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         aff, faces = model["aff"], model["faces"]
         uv_ndc, albedo, w = model["uv_ndc"], model["albedo"], model["weights"]
-        cols = [
-            "vec_id", "covered_pixels", "tex_sum_micro",
-            "tex_min_micro", "tex_max_micro", "error",
-        ]
-        if not len(pdf):
-            return pd.DataFrame(columns=cols)
         e = np.stack([np.asarray(b, dtype=np.float64) for b in pdf["betas"]])
         cam = np.stack(
             [np.asarray(c, dtype=np.float64) for c in pdf["cam_code"]]
@@ -1360,11 +1331,13 @@ def n17_render_texture_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
             n_cov = int(m.sum())
             if n_cov:
                 pm = micro[bi][m].astype(np.int64)
-                rows.append((vec_id, n_cov, int(pm.sum()),
-                             int(pm.min()), int(pm.max()), None))
+                rows.append((vec_id, n_cov, int(pm.sum()), int(pm.min()), int(pm.max())))
             else:
-                rows.append((vec_id, 0, 0, None, None, None))
-        return pd.DataFrame(rows, columns=cols)
+                rows.append((vec_id, 0, 0, None, None))
+        return pd.DataFrame(
+            rows,
+            columns=["vec_id", "covered_pixels", "tex_sum_micro", "tex_min_micro", "tex_max_micro"],
+        )
 
     def factory():
         import numpy as np
@@ -1382,10 +1355,10 @@ def n17_render_texture_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb,
         output_schema=(
             "vec_id bigint, covered_pixels bigint, tex_sum_micro bigint, "
-            "tex_min_micro bigint, tex_max_micro bigint, error string"
+            "tex_min_micro bigint, tex_max_micro bigint"
         ),
         model_key="n17_texture_rasterizer",
         model_factory=factory,
         batch_fn=infer,
     )
-    return out.filter(F.col("error").isNull()).drop("error")
+    return split_error_channel(out)[0]

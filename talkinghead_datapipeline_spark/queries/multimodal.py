@@ -53,7 +53,10 @@ def multimodal_binary_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     BinaryType column → mapInPandas (Arrow batches, per-executor "codec") →
     typed features + error channel. At 100 TB the payload column is read
     lazily per row group and only for rows passing pushed-down filters."""
-    from talkinghead_datapipeline_spark.operators.inference import batched_inference
+    from talkinghead_datapipeline_spark.operators.inference import (
+        batched_inference,
+        split_error_channel,
+    )
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.encode("text", "UTF-8").alias("payload"), "lang"
@@ -69,18 +72,17 @@ def multimodal_binary_features(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "n_bytes": payloads.map(len).astype("int64"),
                 "digest": payloads.map(lambda b: hashlib.md5(bytes(b)).hexdigest()),
                 "lang": pdf["lang"],
-                "error": None,
             }
         )
 
     out = batched_inference(
         docs,
-        output_schema="doc_id bigint, n_bytes bigint, digest string, lang string, error string",
+        output_schema="doc_id bigint, n_bytes bigint, digest string, lang string",
         model_key="noop_codec",
         model_factory=lambda: None,
         batch_fn=extract,
     )
-    return out.filter(F.col("error").isNull() & (F.col("n_bytes") > 0)).drop("error")
+    return split_error_channel(out)[0].filter(F.col("n_bytes") > 0)
 
 
 @register(
@@ -100,7 +102,10 @@ def multimodal_image_channel_means(spark: SparkSession, sf_dir: str) -> DataFram
     → decode to 8×8×3 uint8 → per-channel mean. The UDF path (Arrow batch
     shapes, numpy decode, per-executor cache) is exactly what a real codec
     uses; the oracle validates the decode arithmetic, not a stub hash."""
-    from talkinghead_datapipeline_spark.operators.inference import batched_inference
+    from talkinghead_datapipeline_spark.operators.inference import (
+        batched_inference,
+        split_error_channel,
+    )
 
     docs = (
         load_table(spark, sf_dir, "documents")
@@ -121,21 +126,18 @@ def multimodal_image_channel_means(spark: SparkSession, sf_dir: str) -> DataFram
                     "mean_r": round(float(means[0]), 6),
                     "mean_g": round(float(means[1]), 6),
                     "mean_b": round(float(means[2]), 6),
-                    "error": None,
                 }
             )
-        return pd.DataFrame(
-            rows, columns=["doc_id", "mean_r", "mean_g", "mean_b", "error"]
-        )
+        return pd.DataFrame(rows)
 
     out = batched_inference(
         docs,
-        output_schema="doc_id bigint, mean_r double, mean_g double, mean_b double, error string",
+        output_schema="doc_id bigint, mean_r double, mean_g double, mean_b double",
         model_key="fake_image_decoder",
         model_factory=lambda: None,
         batch_fn=channel_means,
     )
-    return out.filter(F.col("error").isNull()).drop("error")
+    return split_error_channel(out)[0]
 
 
 @register(

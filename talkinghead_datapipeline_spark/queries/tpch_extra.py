@@ -24,17 +24,14 @@ from pyspark.sql import functions as F
 from talkinghead_datapipeline_spark.catalog import load_table
 from talkinghead_datapipeline_spark.queries import register
 
-def _rev():
-    return F.col("l_extendedprice") * (1 - F.col("l_discount"))
-
 
 def _rev_units():
-    """Revenue in exact BIGINT 10^-4-dollar units (round-8 money
-    convention, flagship_segment_leaders template): price and discount are
-    2-decimal by construction, so cents x (100 - discount-cents) is an
-    exact associative integer — divide by 10000.0 once after the sum.
-    Kept separate from _rev() so each consumer migrates WITH its own
-    driver re-seat (changed-code rule) rather than all at once."""
+    """Revenue in exact BIGINT 1e-4-dollar units (money convention,
+    flagship_segment_leaders template): price and discount are 2-decimal
+    by construction, so cents x (100 - discount-cents) is an exact
+    associative integer — convert to display dollars once after the sum
+    (floor-to-cents, never round(sum4/10000.0, 2): sum4 % 2500 == 1250 is
+    an exactly-representable cross-engine .5 tie — ADVICE r8)."""
     return F.round(F.col("l_extendedprice") * 100).cast("bigint") * (
         100 - F.round(F.col("l_discount") * 100).cast("bigint")
     )

@@ -31,22 +31,7 @@ from pyspark.sql import functions as F
 
 from talkinghead_datapipeline_spark.catalog import load_table, persist_once
 from talkinghead_datapipeline_spark.queries import register
-
-
-def _rev():
-    return F.col("l_extendedprice") * (1 - F.col("l_discount"))
-
-
-def _rev_units():
-    """Revenue in exact BIGINT 1e-4-dollar units (money convention,
-    flagship template): price and discount are 2-decimal by construction,
-    so cents x (100 - discount-cents) is an exact associative integer —
-    convert to display dollars once after the sum (floor-to-cents, never
-    round(sum4/10000.0, 2): sum4 % 2500 == 1250 is an exactly-
-    representable cross-engine .5 tie — ADVICE r8)."""
-    return F.round(F.col("l_extendedprice") * 100).cast("bigint") * (
-        100 - F.round(F.col("l_discount") * 100).cast("bigint")
-    )
+from talkinghead_datapipeline_spark.queries.tpch_extra import _rev_units
 
 
 @register(

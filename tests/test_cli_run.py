@@ -207,14 +207,14 @@ def test_run_feeds_each_model_node_once(spark, tmp_path, monkeypatch):
     real = inference.batched_inference
     fed = {}
 
-    def counting(df, output_schema, model_key, model_factory, batch_fn, **kw):
+    def counting(df, output_schema, model_key, model_factory, batch_fn):
         rows = fed.setdefault(model_key, spark.sparkContext.accumulator(0))
 
         def counted(model, pdf):
             rows.add(len(pdf))
             return batch_fn(model, pdf)
 
-        return real(df, output_schema, model_key, model_factory, counted, **kw)
+        return real(df, output_schema, model_key, model_factory, counted)
 
     monkeypatch.setattr(inference, "batched_inference", counting)
     out = str(tmp_path / "out")

@@ -9,6 +9,7 @@ import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from talkinghead_datapipeline_spark.catalog import normalize_events_ts
 from talkinghead_datapipeline_spark.operators.inference import (
@@ -137,11 +138,13 @@ def test_batched_inference_with_error_channel(spark):
 
     out = batched_inference(
         df.repartition(4, "doc_id"),
-        output_schema="doc_id long, text string, score double, error string",
+        output_schema="doc_id long, text string, score double",
         model_key="test_model",
         model_factory=lambda: {"scale": 2.0},
         batch_fn=batch_fn,
     )
+    # the harness appends the error column to the model's DDL
+    assert out.schema == StructType.fromDDL("doc_id long, text string, score double, error string")
     ok, bad = split_error_channel(out)
     ok_pdf = ok.toPandas().sort_values("doc_id")
     bad_pdf = bad.toPandas()
@@ -178,7 +181,7 @@ def test_batched_inference_releases_zip_finders(spark):
     for _ in range(6):
         row = batched_inference(
             df,
-            output_schema="id long, worker string, finders string, error string",
+            output_schema="id long, worker string, finders string",
             model_key="zip_finder_probe",
             model_factory=new_marker,
             batch_fn=probe,
@@ -239,12 +242,12 @@ def test_inference_pipeline_wav2vec_shape(spark):
         for _, r in pdf.iterrows():
             feats = model.features(np.asarray(r["wav"]))
             for t, f_row in enumerate(feats):
-                rows.append({"name": r["name"], "frame_idx": t, "feat": f_row.tolist(), "error": None})
-        return pd.DataFrame(rows, columns=["name", "frame_idx", "feat", "error"])
+                rows.append({"name": r["name"], "frame_idx": t, "feat": f_row.tolist()})
+        return pd.DataFrame(rows, columns=["name", "frame_idx", "feat"])
 
     out = batched_inference(
         df,
-        output_schema="name string, frame_idx long, feat array<double>, error string",
+        output_schema="name string, frame_idx long, feat array<double>",
         model_key="wav2vec_stub",
         model_factory=lambda: Wav2vecStub(dim=4),
         batch_fn=batch_fn,
@@ -527,14 +530,9 @@ def test_broadcast_weights_factory(spark):
     factory = broadcast_weights_factory(df, weights, Linear)
 
     def fn(model, pdf: pd.DataFrame) -> pd.DataFrame:
-        out = pdf.copy()
-        out["y"] = [model.apply(v) for v in pdf["x"]]
-        out["error"] = None
-        return out[["id", "y", "error"]]
+        return pd.DataFrame({"id": pdf["id"], "y": [model.apply(v) for v in pdf["x"]]})
 
-    res = batched_inference(
-        df, "id long, y double, error string", "bc_linear", factory, fn
-    )
+    res = batched_inference(df, "id long, y double", "bc_linear", factory, fn)
     ok, _ = split_error_channel(res)
     got = {r.id: r.y for r in ok.collect()}
     assert got[3] == 28.0 * 3  # sum(0..7)=28
@@ -552,10 +550,10 @@ def _render_batch_fns(spark, monkeypatch, sizes):
     real = inference.batched_inference
     renderers = []
 
-    def capture(df, output_schema, model_key, model_factory, batch_fn, **kw):
+    def capture(df, output_schema, model_key, model_factory, batch_fn):
         if model_key == "renderer":
             renderers.append((model_factory, batch_fn))
-        return real(df, output_schema, model_key, model_factory, batch_fn, **kw)
+        return real(df, output_schema, model_key, model_factory, batch_fn)
 
     monkeypatch.setattr(inference, "batched_inference", capture)
     video = synthetic_clips(spark, n_clips=1, n_frames=2)
@@ -579,13 +577,20 @@ def test_rendering_node_follows_image_size(spark, monkeypatch):
     assert {len(b) for b in render20(cached, pdf)["render_uv"]} == {400}
 
 
-def test_rendering_node_empty_batch(spark, monkeypatch):
-    # An empty pandas batch has nothing to stack: the batch_fn must return
-    # an empty frame with the node's six columns.
-    factory, (render,), _ = _render_batch_fns(spark, monkeypatch, (12,))
-    empty = pd.DataFrame(columns=["clip_name", "frame_idx", "verts", "cam"])
-    out = render(factory(), empty)
-    assert len(out) == 0
-    assert list(out.columns) == [
-        "clip_name", "frame_idx", "render_normal", "render_uv", "render_mask", "error",
-    ]
+def test_batched_inference_skips_empty_batches(spark, monkeypatch):
+    # The harness, not each batch_fn, handles an empty Arrow batch: it
+    # never reaches batch_fn and yields no rows.
+    df = spark.range(1).withColumnRenamed("id", "x")
+    captured = []
+    monkeypatch.setattr(type(df), "mapInPandas", lambda self, fn, schema: captured.append(fn))
+    seen = []
+
+    def batch_fn(_model, pdf):
+        seen.append(len(pdf))
+        return pd.DataFrame({"x": pdf["x"], "y": pdf["x"] * 2})
+
+    batched_inference(df, "x long, y long", "empty_batch_probe", lambda: None, batch_fn)
+    empty = pd.DataFrame({"x": pd.Series([], dtype="int64")})
+    out = list(captured[0](iter([empty, pd.DataFrame({"x": [3]})])))
+    assert seen == [1]
+    assert [o.to_dict("records") for o in out] == [[{"x": 3, "y": 6, "error": None}]]
