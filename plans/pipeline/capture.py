@@ -10,9 +10,11 @@ Builds, in one fresh Spark session and without running a job:
   tables in SF_DIR;
 
 and writes each table's analyzed plan with expression IDs stripped (the
-``plans/r15`` method) and the scratch directory replaced by ``<work>``, one
-file per table. Two checkouts build byte-equal plans when ``diff -r`` of
-their OUT_DIRs is empty.
+``plans/r15`` method), the scratch directory replaced by ``<work>``, and
+the session-wide counters of ``catalog.pushdown_barrier`` masked: the
+``<n>`` of its ``_pdbar_<tag>_<n>`` metrics and the DataFrame id that ends
+a ``CollectMetrics`` line. One file per table. Two checkouts build
+byte-equal plans when ``diff -r`` of their OUT_DIRs is empty.
 """
 
 import os
@@ -58,6 +60,8 @@ def main(repo: str, out: str, sf_dir: str) -> None:
                 continue
             plan = df._jdf.queryExecution().analyzed().toString()
             plan = re.sub(r"#\d+L?", "#", plan.replace(work, "<work>"))
+            plan = re.sub(r"(_pdbar_\w+)_\d+\b", r"\1_<n>", plan)
+            plan = re.sub(r"(CollectMetrics .*), \d+$", r"\1, <id>", plan, flags=re.M)
             with open(os.path.join(out, f"{prefix}_{key}.txt"), "w") as f:
                 f.write(plan + "\n")
 

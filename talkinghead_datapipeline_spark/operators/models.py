@@ -402,7 +402,10 @@ class ShapeRenderer:
         rasterized once for all requested channels. The meshes are walked in
         chunks of ``rasterize.meshes_per_chunk``, and each chunk becomes
         bytes before the next is rasterized, so a large batch at a large
-        image size never holds more than one chunk's per-pixel arrays."""
+        image size never holds more than one chunk's per-pixel arrays. The
+        rasterizer sweeps each chunk in row tiles within the same
+        ``rasterize.TILE_ELEMS`` budget, each tile against only the faces
+        whose y-extent meets it."""
         from talkinghead_datapipeline_spark.operators.rasterize import (
             meshes_per_chunk,
         )

@@ -61,6 +61,21 @@ size with scale = 256·size stays exact):
     exact.
   * 13824·scale³ ≥ 2^63: rejected (int64 would overflow).
 
+Row tiles and face culling
+--------------------------
+A dense sweep of every face against every pixel is bound by memory
+bandwidth, not arithmetic, once its (meshes, faces, rows, width) arrays
+outgrow the cache. So ``rasterize_batch`` sweeps the image in tiles of
+pixel rows within the one ``TILE_ELEMS`` element budget, like pytorch3d's
+binned rasterizer, and hands each tile only the faces whose closed,
+quantized y-extent meets the tile's pixel-centre rows, in ascending face
+id. The output is bit-identical to the dense sweep: a covered pixel
+centre (all E ≥ 0 or all E ≤ 0, den ≠ 0) lies in the closed face, hence
+inside its bounding box, so a culled face covers no pixel of its tile;
+the per-pixel arithmetic is unchanged; and ascending ids keep argmin's
+lowest-id rule on exact ties once the winner is mapped back through the
+kept ids.
+
 Screen-space convention (documented, matching the reference composition):
 ``view_transform`` (models.py) already applied batch_orth_proj and the
 y/z flip of dpl/processor/nodes/rendering.py:101-106; ``SRenderY.forward``
@@ -79,9 +94,11 @@ COORD_CLAMP_UNITS = 8  # |x|,|y| ≤ 8 NDC units after clamp
 Z_CLAMP_UNITS = 16  # z ∈ [0, 16] NDC units after the +10 shift
 COORD_CLAMP = COORD_CLAMP_UNITS * SCALE  # at the default scale (oracle)
 Z_CLAMP = Z_CLAMP_UNITS * SCALE
-# Element budget of one rasterizer sweep's (chunk, F, size, size) arrays,
-# shared by rasterize_batch and ShapeRenderer.render_batch's mesh walk.
-CHUNK_ELEMS = 8_000_000
+# Element budget of one rasterizer sweep's (meshes, faces, rows, width)
+# arrays: small enough that a sweep's dozen passes over them stay in cache.
+# It also sizes the mesh chunks of rasterize_batch and of
+# ShapeRenderer.render_batch's walk (meshes_per_chunk).
+TILE_ELEMS = 262_144
 
 # SH constant factors — renderer.py:118-131 (public Ramamoorthi-Hanrahan
 # irradiance constants as the reference writes them).
@@ -144,26 +161,31 @@ def pixel_centers(size: int, scale: int = SCALE) -> tuple[np.ndarray, np.ndarray
     return c.copy(), c.copy()  # (x per column j, y per row i)
 
 
-def _rasterize_chunk(
-    q: np.ndarray, f: np.ndarray, size: int, scale: int, exact53: bool
-) -> dict:
-    """Batched core: q is (B, V, 3) int64; returns (B, size, size[, ·]).
+def _sweep(
+    v0: np.ndarray,
+    v1: np.ndarray,
+    v2: np.ndarray,
+    X: np.ndarray,
+    Y: np.ndarray,
+    exact53: bool,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """One tile: every face of ``v0, v1, v2`` (B, F, 3 corners as float64
+    integers) against every pixel centre of columns ``X`` × rows ``Y`` →
+    (mask, winner, zbuf, bary) over (B, rows, cols); ``winner`` indexes the
+    F faces given.
 
-    ``exact53`` is ``13824·scale³ < 2^53`` (computed once by the caller).
-    When True, arithmetic runs in float64 throughout: every intermediate is
-    an integer under 2^53, so double ops on them are EXACT — identical to
-    int64 — while skipping the astype passes and using the faster SIMD
-    float pipeline (the int64 form measured ~1.5x slower on the flame
-    batch). When False (scale > 8663, admitted up to the int64 bound), only
-    the z numerator leaves the exact-double range, so it alone is
-    accumulated in exact int64 and rounded once at the division — the
-    deterministic-but-rounded tier the module docstring documents."""
-    qf = q.astype(np.float64)  # exact: |q| ≤ 16·scale ≪ 2^53
-    v0, v1, v2 = qf[:, f[:, 0]], qf[:, f[:, 1]], qf[:, f[:, 2]]  # (B, F, 3)
-    px, py = pixel_centers(size, scale)
+    ``exact53`` is ``13824·scale³ < 2^53``. When True, arithmetic runs in
+    float64 throughout: every intermediate is an integer under 2^53, so
+    double ops on them are EXACT — identical to int64 — while skipping the
+    astype passes and using the faster SIMD float pipeline (the int64 form
+    measured ~1.5x slower on the flame batch). When False (scale > 8663,
+    admitted up to the int64 bound), only the z numerator leaves the
+    exact-double range, so it alone is accumulated in exact int64 and
+    rounded once at the division — the deterministic-but-rounded tier the
+    module docstring documents."""
     # broadcast axes: batch, faces, pixel rows (y), pixel cols (x)
-    X = px.astype(np.float64)[None, None, None, :]
-    Y = py.astype(np.float64)[None, None, :, None]
+    X = X[None, None, None, :]
+    Y = Y[None, None, :, None]
 
     def edge(a, b):
         # E = cross(b - a, p - a): integer-valued, exact in double
@@ -175,9 +197,9 @@ def _rasterize_chunk(
     den = (
         (v1[..., 0] - v0[..., 0]) * (v2[..., 1] - v0[..., 1])
         - (v1[..., 1] - v0[..., 1]) * (v2[..., 0] - v0[..., 0])
-    )[..., None, None]  # signed 2·area == e0+e1+e2 (exact identity)
+    )  # signed 2·area == e0+e1+e2 (exact identity)
 
-    covered = (den != 0) & (
+    covered = (den != 0)[..., None, None] & (
         ((e0 >= 0) & (e1 >= 0) & (e2 >= 0)) | ((e0 <= 0) & (e1 <= 0) & (e2 <= 0))
     )
     if exact53:
@@ -191,45 +213,73 @@ def _rasterize_chunk(
         # astype), each product ≤ 4608·scale³ and the sum ≤ 13824·scale³ <
         # 2^63 (guarded in rasterize_batch) — no overflow. One rounding at
         # the astype back to float64, then the correctly-rounded division.
-        z_i64 = q[..., 2]  # (B, V) int64
         num = (
-            e0.astype(np.int64) * z_i64[:, f[:, 0], None, None]
-            + e1.astype(np.int64) * z_i64[:, f[:, 1], None, None]
-            + e2.astype(np.int64) * z_i64[:, f[:, 2], None, None]
+            e0.astype(np.int64) * v0[..., 2].astype(np.int64)[..., None, None]
+            + e1.astype(np.int64) * v1[..., 2].astype(np.int64)[..., None, None]
+            + e2.astype(np.int64) * v2[..., 2].astype(np.int64)[..., None, None]
         ).astype(np.float64)
     with np.errstate(divide="ignore", invalid="ignore"):
-        zpx = num / den
+        zpx = num / den[..., None, None]
     z_masked = np.where(covered, zpx, np.inf)
 
-    mask = covered.any(axis=1)
     # argmin returns the FIRST minimum → lowest face id on exact-double ties,
     # matching the SQL twin's ORDER BY zpx, fid.
     winner = np.argmin(z_masked, axis=1)
-    pix_to_face = np.where(mask, winner, -1)
-    zbuf = np.take_along_axis(z_masked, winner[:, None], axis=1)[:, 0]
-    zbuf = np.where(mask, zbuf, np.inf)
-
     w_idx = winner[:, None]
-    den_w = np.take_along_axis(
-        np.broadcast_to(den, z_masked.shape), w_idx, axis=1
-    )[:, 0]
+    zbuf = np.take_along_axis(z_masked, w_idx, axis=1)[:, 0]
+    mask = zbuf < np.inf  # a covered face's z is finite (den != 0)
+    den_w = np.take_along_axis(den[..., None, None], w_idx, axis=1)[:, 0]
     with np.errstate(divide="ignore", invalid="ignore"):
         bary = np.stack(
-            [
-                np.take_along_axis(e, w_idx, axis=1)[:, 0] / den_w
-                for e in (e0, e1, e2)
-            ],
+            [np.take_along_axis(e, w_idx, axis=1)[:, 0] / den_w for e in (e0, e1, e2)],
             axis=-1,
         )
-    bary = np.where(mask[..., None], bary, 0.0)
+    return mask, winner, zbuf, np.where(mask[..., None], bary, 0.0)
+
+
+def _rasterize_chunk(
+    q: np.ndarray, f: np.ndarray, size: int, scale: int, exact53: bool
+) -> dict:
+    """Batched core: q is (B, V, 3) int64; returns (B, size, size[, ·]).
+
+    Sweeps the image in tiles of pixel rows, as many as keep one tile's
+    (B, faces, rows, size) arrays within ``TILE_ELEMS`` elements, each tile
+    against the faces whose closed y-extent, in some mesh of the chunk,
+    meets its pixel-centre rows (module docstring: row tiles and face
+    culling)."""
+    B = q.shape[0]
+    qf = q.astype(np.float64)  # exact: |q| ≤ 16·scale ≪ 2^53
+    v0, v1, v2 = qf[:, f[:, 0]], qf[:, f[:, 1]], qf[:, f[:, 2]]  # (B, F, 3)
+    fy = qf[..., 1][:, f]  # (B, F, 3) corner y
+    ymin, ymax = fy.min(axis=-1), fy.max(axis=-1)
+    px, py = pixel_centers(size, scale)
+    X, Y = px.astype(np.float64), py.astype(np.float64)
+
+    mask = np.zeros((B, size, size), dtype=bool)
+    pix_to_face = np.full((B, size, size), -1, dtype=np.int64)
+    zbuf = np.full((B, size, size), np.inf)
+    bary = np.zeros((B, size, size, 3))
+    rows = max(1, TILE_ELEMS // max(1, B * len(f) * size))
+    for r0 in range(0, size, rows):
+        r1 = min(size, r0 + rows)
+        # pixel-centre y falls with the row index: the tile spans
+        # [Y[r1 - 1], Y[r0]]
+        kept = np.flatnonzero(((ymin <= Y[r0]) & (ymax >= Y[r1 - 1])).any(axis=0))
+        if kept.size == 0:
+            continue
+        m, w, z, b = _sweep(v0[:, kept], v1[:, kept], v2[:, kept], X, Y[r0:r1], exact53)
+        mask[:, r0:r1] = m
+        pix_to_face[:, r0:r1] = np.where(m, kept[w], -1)
+        zbuf[:, r0:r1] = z
+        bary[:, r0:r1] = b
     return {"mask": mask, "pix_to_face": pix_to_face, "zbuf": zbuf, "bary": bary}
 
 
 def meshes_per_chunk(n_faces: int, size: int) -> int:
-    """How many meshes one rasterizer sweep takes: as many as keep the
-    (chunk, F, size, size) intermediates under ``CHUNK_ELEMS`` elements,
-    and at least one."""
-    return max(1, CHUNK_ELEMS // max(1, n_faces * size * size))
+    """How many meshes one rasterizer chunk takes: as many as keep both one
+    pixel row of all faces and the whole image's per-pixel arrays within
+    ``TILE_ELEMS`` elements, and at least one."""
+    return max(1, TILE_ELEMS // (size * max(n_faces, size)))
 
 
 def rasterize_batch(
@@ -240,9 +290,11 @@ def rasterize_batch(
 ) -> dict[str, np.ndarray]:
     """Batched exact-integer rasterization: ``q_verts`` is (B, V, 3) int64,
     outputs carry a leading batch axis. Chunks the batch by
-    ``meshes_per_chunk`` — one vectorized sweep per chunk instead of
-    per-mesh Python overhead (measured 7.9x on flame_render_pipeline at
-    sf0.1 when this was per-row).
+    ``meshes_per_chunk``; each chunk is swept in tiles of pixel rows within
+    the ``TILE_ELEMS`` budget, each tile against only the faces whose
+    closed y-extent meets its rows (``_rasterize_chunk``). Culling cannot
+    change a pixel: a face covers only pixel centres inside its bounding
+    box, and the kept faces stay in ascending id order.
 
     Arithmetic tier (module docstring, ADVICE r12): scales with
     13824·scale³ < 2^53 run the all-float64 bit-exact path; larger scales

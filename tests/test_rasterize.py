@@ -467,8 +467,8 @@ def test_render_batch_bit_identical_to_per_mesh_render(size, monkeypatch):
     for ch in channels:
         assert hashlib.md5(b"".join(batched[ch])).hexdigest() == _PER_ROW_MD5[(size, ch)], ch
 
-    # two meshes per sweep at 16 px, one at 320 px: an uneven walk
-    monkeypatch.setattr(rasterize, "CHUNK_ELEMS", 2 * len(m.faces) * 16 * 16)
+    # two meshes per chunk at 16 px, one at 320 px: an uneven walk
+    monkeypatch.setattr(rasterize, "TILE_ELEMS", 2 * 16 * max(len(m.faces), 16))
     assert rasterize.meshes_per_chunk(len(m.faces), size) < len(verts)
     assert r.render_batch(verts, view_transform(verts, cams), channels) == batched
 
@@ -479,3 +479,143 @@ def test_render_batch_rejects_unknown_channel():
     tv = rng.normal(size=(1, 5, 3)) * 0.5
     with pytest.raises(ValueError, match="unknown channels"):
         ShapeRenderer((4, 4)).render_batch(tv, tv, ("mask", "depth"))
+
+
+# --- row tiles and y-extent face culling (rasterize._rasterize_chunk) --------
+
+
+def _record_sweeps(monkeypatch):
+    """Wrap ``rasterize._sweep`` to record (meshes, faces, rows, cols) of
+    every tile it is handed."""
+    from talkinghead_datapipeline_spark.operators import rasterize as ras_mod
+
+    shapes = []
+    sweep = ras_mod._sweep
+
+    def recording(v0, v1, v2, X, Y, exact53):
+        shapes.append((v0.shape[0], v0.shape[1], len(Y), len(X)))
+        return sweep(v0, v1, v2, X, Y, exact53)
+
+    monkeypatch.setattr(ras_mod, "_sweep", recording)
+    return shapes
+
+
+def test_face_outside_a_tile_is_culled_and_winners_map_back(monkeypatch):
+    """One pixel row per tile: face 0 lies wholly in the top row band, so
+    the lower tiles sweep faces 1 and 2 only, yet their winners still read
+    as global ids and every pixel equals the exact reference."""
+    from talkinghead_datapipeline_spark.operators import rasterize as ras_mod
+
+    monkeypatch.setattr(ras_mod, "TILE_ELEMS", 1)
+    shapes = _record_sweeps(monkeypatch)
+    q = np.array(
+        [
+            [-4000, 3500, 100],  # face 0: y in [2500, 3500], row 0 only
+            [4000, 3500, 100],
+            [0, 2500, 100],
+            [-4000, -4000, 900],  # faces 1, 2: a square over the whole
+            [4000, -4000, 900],  # image, farther
+            [-4000, 4000, 900],
+            [4000, 4000, 900],
+        ],
+        dtype=np.int64,
+    )
+    faces = np.array([[0, 1, 2], [3, 4, 5], [5, 4, 6]])
+    out = rasterize(q, faces, 4)
+    m, p, z = _fraction_rasterize(q, faces, 4)
+    np.testing.assert_array_equal(out["mask"], m)
+    np.testing.assert_array_equal(out["pix_to_face"], p)
+    np.testing.assert_array_equal(out["zbuf"], z)
+    assert [s[1] for s in shapes] == [3, 2, 2, 2]
+    assert set(out["pix_to_face"][1:].ravel()) == {1, 2}
+    assert (out["pix_to_face"][0, 1:3] == 0).all()
+
+
+def test_off_screen_mesh_is_empty_beside_a_visible_one(monkeypatch):
+    """A mesh above the image culls nothing from its batch neighbour and
+    comes out empty: mask False, pix_to_face -1, zbuf inf, bary 0."""
+    from talkinghead_datapipeline_spark.operators import rasterize as ras_mod
+    from talkinghead_datapipeline_spark.operators.rasterize import rasterize_batch
+
+    monkeypatch.setattr(ras_mod, "TILE_ELEMS", 1)
+    on = np.array([[-4000, -4000, 500], [4000, -4000, 500], [0, 4000, 700]], dtype=np.int64)
+    off = on + np.array([0, 9000, 0])  # y in [5000, 13000], above y = 4096
+    faces = np.array([[0, 1, 2]])
+    both = rasterize_batch(np.stack([on, off]), faces, 4)
+    alone = rasterize(on, faces, 4)
+    for k in alone:
+        np.testing.assert_array_equal(both[k][0], alone[k])
+    assert alone["mask"].any()
+    assert not both["mask"][1].any()
+    assert (both["pix_to_face"][1] == -1).all()
+    assert np.isposinf(both["zbuf"][1]).all()
+    assert (both["bary"][1] == 0.0).all()
+
+    shapes = _record_sweeps(monkeypatch)
+    empty = rasterize(off, faces, 4)
+    assert shapes == []  # every tile culled the one face
+    assert not empty["mask"].any() and (empty["pix_to_face"] == -1).all()
+    assert np.isposinf(empty["zbuf"]).all() and (empty["bary"] == 0.0).all()
+
+
+def test_z_tie_across_a_tile_seam_takes_the_lowest_id(monkeypatch):
+    """Faces 1 and 2 lie in one z = 600 plane and both cover the two rows
+    either side of the seam between two-row tiles; face 0 is in the top
+    tile only, so the tiles keep different id lists. The tie goes to id 1
+    on both sides of the seam."""
+    from talkinghead_datapipeline_spark.operators import rasterize as ras_mod
+
+    monkeypatch.setattr(ras_mod, "TILE_ELEMS", 2 * 3 * 4)  # 2 rows at 4 px
+    shapes = _record_sweeps(monkeypatch)
+    q = np.array(
+        [
+            [-8000, 3500, 100],  # face 0: row 0 only, nearest
+            [8000, 3500, 100],
+            [0, 2500, 100],
+            [-8000, -2000, 600],  # face 1: rows 1-2
+            [8000, -2000, 600],
+            [0, 2000, 600],
+            [8000, 2000, 600],  # face 2: rows 1-2, same plane, overlaps 1
+            [-8000, 2000, 600],
+            [0, -2000, 600],
+        ],
+        dtype=np.int64,
+    )
+    faces = np.array([[0, 1, 2], [3, 4, 5], [6, 7, 8]])
+    out = rasterize(q, faces, 4)
+    m, p, z = _fraction_rasterize(q, faces, 4)
+    np.testing.assert_array_equal(out["pix_to_face"], p)
+    np.testing.assert_array_equal(out["zbuf"], z)
+    assert [s[1:3] for s in shapes] == [(3, 2), (2, 2)]
+    assert (out["pix_to_face"][1:3, 1:3] == 1).all()
+    assert (out["zbuf"][1:3, 1:3] == 600.0).all()
+
+
+def test_sweeps_stay_within_the_tile_budget_at_320px(monkeypatch):
+    """No whole-image sweep: at 320 px every tile of a FLAME render fits
+    the element budget, the tiles cover the image rows once, and some tile
+    sweeps fewer than all faces."""
+    from talkinghead_datapipeline_spark.operators import rasterize as ras_mod
+    from talkinghead_datapipeline_spark.operators.models import (
+        FlameLbsDecoder,
+        ShapeRenderer,
+        view_transform,
+    )
+
+    shapes = _record_sweeps(monkeypatch)
+    brng = np.random.default_rng(20261017)
+    m = FlameLbsDecoder()
+    verts, _ = m.decode_batch(
+        brng.normal(size=(2, 8)), brng.normal(size=(2, 8)), brng.normal(size=(2, 6)) * 0.2
+    )
+    cams = np.column_stack([brng.uniform(0.4, 0.6, 2), brng.normal(size=(2, 2)) * 0.1])
+    out = ShapeRenderer((320, 320), faces=m.faces).render_batch(
+        verts, view_transform(verts, cams), ("mask",)
+    )
+    assert any(b"\xff" in payload for payload in out["mask"])
+    assert shapes
+    for b, f, r, w in shapes:
+        assert w == 320
+        assert b * f * r * w <= ras_mod.TILE_ELEMS
+    assert sum(r for _, _, r, _ in shapes) <= 320
+    assert min(f for _, f, _, _ in shapes) < len(m.faces)

@@ -4,7 +4,9 @@ Property targets (the same exactness claims the n17_render_mask_zbuffer
 oracle rides):
 - the vectorized float64 rasterizer agrees with an exact-Fraction
   rasterizer on arbitrary integer meshes, INCLUDING adversarial geometry:
-  pixel centers exactly on edges/vertices, degenerate faces, z ties;
+  pixel centers exactly on edges/vertices, degenerate faces, z ties —
+  both in the default tiles and one pixel row per tile, where every tile
+  seam and the y-extent face culling meet that geometry;
 - every covered pixel's barycentric weights reconstruct the edge-function
   identity; zbuf equals the exact rational;
 - grid_sample_bilinear is exact against a Fraction bilinear interpolator
@@ -16,9 +18,11 @@ from __future__ import annotations
 from fractions import Fraction
 
 import numpy as np
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from talkinghead_datapipeline_spark.operators import rasterize as rasterize_module
 from talkinghead_datapipeline_spark.operators.rasterize import (
     grid_sample_bilinear,
     pixel_centers,
@@ -36,18 +40,15 @@ zval = st.integers(min_value=0, max_value=65536)
 vert = st.tuples(coord, coord, zval)
 
 
-@settings(max_examples=60, deadline=None)
-@given(
-    verts=st.lists(vert, min_size=3, max_size=8),
-    face_idx=st.lists(
-        st.tuples(
-            st.integers(0, 7), st.integers(0, 7), st.integers(0, 7)
-        ),
-        min_size=1,
-        max_size=6,
-    ),
+vert_lists = st.lists(vert, min_size=3, max_size=8)
+face_lists = st.lists(
+    st.tuples(st.integers(0, 7), st.integers(0, 7), st.integers(0, 7)),
+    min_size=1,
+    max_size=6,
 )
-def test_rasterize_matches_fraction_reference(verts, face_idx):
+
+
+def _assert_matches_fraction(verts, face_idx):
     q = np.array(verts, dtype=np.int64)
     faces = np.array(
         [(a % len(q), b % len(q), c % len(q)) for a, b, c in face_idx],
@@ -62,6 +63,24 @@ def test_rasterize_matches_fraction_reference(verts, face_idx):
     # reconstruct z exactly as (sum w_i z_i)
     bary = ras["bary"][m]
     np.testing.assert_allclose(bary.sum(axis=-1), 1.0, rtol=0, atol=1e-12)
+    assert (ras["bary"][~m] == 0.0).all()
+
+
+@settings(max_examples=60, deadline=None)
+@given(verts=vert_lists, face_idx=face_lists)
+def test_rasterize_matches_fraction_reference(verts, face_idx):
+    _assert_matches_fraction(verts, face_idx)
+
+
+@settings(max_examples=60, deadline=None)
+@given(verts=vert_lists, face_idx=face_lists)
+def test_one_row_tiles_match_fraction_reference(verts, face_idx):
+    """The same lattice geometry swept one pixel row per tile, so the
+    y-extent culling and every tile seam meet edge-on-pixel centres,
+    degenerate faces and z ties."""
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(rasterize_module, "TILE_ELEMS", 1)
+        _assert_matches_fraction(verts, face_idx)
 
 
 @settings(max_examples=60, deadline=None)
