@@ -13,8 +13,12 @@ and writes each table's analyzed plan with expression IDs stripped (the
 ``plans/r15`` method), the scratch directory replaced by ``<work>``, and
 the session-wide counters of ``catalog.pushdown_barrier`` masked: the
 ``<n>`` of its ``_pdbar_<tag>_<n>`` metrics and the DataFrame id that ends
-a ``CollectMetrics`` line. One file per table. Two checkouts build
-byte-equal plans when ``diff -r`` of their OUT_DIRs is empty.
+a ``CollectMetrics`` line. Lambda variables named from the session-wide
+counter (``lambda x_7#``) are renumbered by order of first appearance in
+each plan (``lambda x_<1>#``), so they stay distinct within a plan but do
+not depend on what the session built before. One file per table. Two
+checkouts build byte-equal plans when ``diff -r`` of their OUT_DIRs is
+empty.
 """
 
 import os
@@ -42,6 +46,20 @@ def builtin_graph(sf_dir: str, work: str) -> list[dict]:
     ]
 
 
+def normalize(plan: str, work: str) -> str:
+    """The analyzed plan ``plan`` with every session-dependent name masked."""
+    plan = re.sub(r"#\d+L?", "#", plan.replace(work, "<work>"))
+    plan = re.sub(r"(_pdbar_\w+)_\d+\b", r"\1_<n>", plan)
+    plan = re.sub(r"(CollectMetrics .*), \d+$", r"\1, <id>", plan, flags=re.M)
+    seen: dict[str, int] = {}
+
+    def renumber(m: re.Match) -> str:
+        k = seen.setdefault(m.group(0), len(seen) + 1)
+        return f"lambda {m.group(1)}_<{k}>#"
+
+    return re.sub(r"lambda (\w+?)_\d+#", renumber, plan)
+
+
 def main(repo: str, out: str, sf_dir: str) -> None:
     sys.path[:0] = [repo, os.path.join(repo, "perfbench")]
     from talkinghead_datapipeline_spark import run as run_mod
@@ -58,10 +76,7 @@ def main(repo: str, out: str, sf_dir: str) -> None:
         for key, df in tables.items():
             if key in skip:
                 continue
-            plan = df._jdf.queryExecution().analyzed().toString()
-            plan = re.sub(r"#\d+L?", "#", plan.replace(work, "<work>"))
-            plan = re.sub(r"(_pdbar_\w+)_\d+\b", r"\1_<n>", plan)
-            plan = re.sub(r"(CollectMetrics .*), \d+$", r"\1, <id>", plan, flags=re.M)
+            plan = normalize(df._jdf.queryExecution().analyzed().toString(), work)
             with open(os.path.join(out, f"{prefix}_{key}.txt"), "w") as f:
                 f.write(plan + "\n")
 

@@ -176,9 +176,13 @@ def test_batched_inference_releases_zip_finders(spark):
 
         return uuid.uuid4().hex
 
+    # Spark hands each task its longest-idle Python worker, so a worker comes
+    # round again only after every idle one has taken a task. Earlier tests
+    # can leave more idle workers than there are cores (the pool empties
+    # only after a minute without Python tasks): try until one repeats.
     df = spark.range(1).coalesce(1)
     seen, reused = set(), []
-    for _ in range(6):
+    for _ in range(32):
         row = batched_inference(
             df,
             output_schema="id long, worker string, finders string",
@@ -189,6 +193,7 @@ def test_batched_inference_releases_zip_finders(spark):
         assert row.error is None, row.error
         if row.worker in seen:
             reused.append(json.loads(row.finders))
+            break
         seen.add(row.worker)
     assert reused, "no task ran in a reused Python worker"
     archives = [archive for archive, _prefix in reused[-1]]

@@ -8,7 +8,8 @@ re-running a two-worktree A/B. Every key here is load-bearing: AQE and
 skew-join for runtime re-planning at 100 TB, UTC for oracle timestamp
 parity, Arrow for the pandas hops, pushdown + 128 MB splits for the scan
 tier, nanosAsLong for the events fixture, reused Python workers for the
-per-worker model cache and the zip-finder release."""
+per-worker model cache and the zip-finder release, and a codegen cache
+that holds a whole pass of generated classes."""
 
 from __future__ import annotations
 
@@ -23,7 +24,24 @@ _CONTRACT = {
     "spark.sql.parquet.filterPushdown": "true",
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     "spark.sql.files.maxPartitionBytes": "134217728",
+    "spark.sql.codegen.cache.maxEntries": "4096",
 }
+
+# R1 queries whose pass generates about 170 distinct classes in a fresh
+# session: more than Spark's default codegen cache holds (100), at about a
+# third of the whole R1 pass's cost.
+_CODEGEN_KEYS = (
+    "flagship_segment_leaders",
+    "q5_join_chain_revenue",
+    "q3_top_revenue_orders",
+    "n7_argmax_per_group",
+    "s8_savgol_fir",
+    "sim_lsh_bucket_topk",
+    "sessionize_users",
+    "simhash_hamming_near_dups",
+    "pack_token_budget",
+    "stratified_sample_by_lang",
+)
 
 
 def test_engine_session_carries_the_scale_contract(spark):
@@ -35,6 +53,30 @@ def test_shuffle_partitions_track_core_count(spark):
     from talkinghead_datapipeline_spark.session import DEFAULT_CPUS
 
     assert int(spark.conf.get("spark.sql.shuffle.partitions")) == DEFAULT_CPUS
+
+
+def test_warm_pass_recompiles_no_generated_class(spark, sf_dir):
+    """The second of two same-order passes finds every whole-stage-codegen
+    class in Spark's cache. Compiled classes are kept in an LRU keyed by
+    code text; when one pass generates more classes than the cache holds,
+    every lookup of the next pass misses and the pass recompiles them all."""
+    import bench
+
+    from talkinghead_datapipeline_spark.queries import all_queries
+
+    assert set(_CODEGEN_KEYS) <= set(bench.R1_KEYS)
+    specs = all_queries()
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    def one_pass() -> int:
+        before = compiles.getCount()
+        for name in _CODEGEN_KEYS:
+            specs[name].spark(spark, sf_dir).write.format("noop").mode("overwrite").save()
+            spark.catalog.clearCache()
+        return compiles.getCount() - before
+
+    one_pass()
+    assert one_pass() == 0
 
 
 def test_bench_headline_keys_all_registered():
