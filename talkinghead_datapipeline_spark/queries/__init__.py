@@ -171,13 +171,6 @@ _DRIVER_PRIORITY = (
     "cms_heavy_hitters",
 )
 
-# r15 changed-code canaries (window section 1 above) — exported so the
-# default-tier oracle smoke (tests/test_queries_oracle.py) always runs
-# exactly the queries whose code moved this round even when the full
-# replica is gated behind SPARK_GRAFT_SLOW.
-R15_CANARIES = _DRIVER_PRIORITY[:45]
-
-
 @dataclass
 class QuerySpec:
     name: str

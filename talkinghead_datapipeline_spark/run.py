@@ -93,17 +93,24 @@ def _write_node(ctx: GraphContext, keys: list[str], output_dir: str) -> Iterator
     ``ctx`` to its written parquet. Every table goes to a sibling temp
     directory first and is renamed over ``{key}.parquet`` only after all
     of them are written, since the node's lineage may read the old file.
-    Yields ``(key, built df, report fields)`` per table."""
+    If a write fails, every temp directory of the node is removed before
+    the error propagates; tables committed by earlier nodes stay as they
+    are. Yields ``(key, built df, report fields)`` per table."""
+    tmps = [os.path.join(output_dir, f"{key}.parquet.tmp-{uuid.uuid4().hex}") for key in keys]
     staged = []
-    for key in keys:
-        t0 = time.perf_counter()
-        df = ctx.tables[key]
-        tmp = os.path.join(output_dir, f"{key}.parquet.tmp-{uuid.uuid4().hex}")
-        # the row count rides the write job as an observed metric: no
-        # second read-back scan per table.
-        rows = Observation(f"rows_{key}")
-        df.observe(rows, F.count(F.lit(1)).alias("n")).write.parquet(tmp)
-        staged.append((key, df, tmp, rows, time.perf_counter() - t0))
+    try:
+        for key, tmp in zip(keys, tmps):
+            t0 = time.perf_counter()
+            df = ctx.tables[key]
+            # the row count rides the write job as an observed metric: no
+            # second read-back scan per table.
+            rows = Observation(f"rows_{key}")
+            df.observe(rows, F.count(F.lit(1)).alias("n")).write.parquet(tmp)
+            staged.append((key, df, tmp, rows, time.perf_counter() - t0))
+    except BaseException:
+        for tmp in tmps:
+            shutil.rmtree(tmp, ignore_errors=True)
+        raise
     for key, df, tmp, rows, sec in staged:
         t0 = time.perf_counter()
         path = os.path.join(output_dir, f"{key}.parquet")

@@ -1,36 +1,23 @@
 """ACF + Ljung-Box over daily revenue (STAGED for r14).
 
-Oracle differential, an independent Python recompute of the whole integer
-chain from raw orders (grid fill, floored mean, exact moment sums, the
-one correctly-rounded division, pico-term quantization, prefix sum),
-crafted corpora pinning a strong weekly periodicity (lag-7 dominates) and
-the constant-series zero-variance NULL guard on both engines, the
-documented overflow bound, and the three-axis invariance contract.
+Oracle differential (tests/test_queries_oracle.py), an independent Python
+recompute of the whole integer chain from raw orders (grid fill, floored
+mean, exact moment sums, the one correctly-rounded division, pico-term
+quantization, prefix sum), crafted corpora pinning a strong weekly
+periodicity (lag-7 dominates) and the constant-series zero-variance NULL
+guard on both engines, the documented overflow bound, and the three-axis
+invariance contract (tests/test_split_invariance.py).
 """
 
 from __future__ import annotations
 
-import pytest
-
 import datetime as dt
 import math
-
-import numpy as np
 
 from talkinghead_datapipeline_spark.queries.timeseries import (
     ACF_LJUNG_BOX_ORACLE,
     acf_ljung_box_daily,
 )
-from tests.oracle_harness import run_compare
-
-
-@pytest.mark.slow  # heavy tier (see conftest; VERDICT r14 #3)
-def test_staged_oracle_matches(spark, sf_dir):
-    res = run_compare(
-        spark, sf_dir, "acf_ljung_box_daily", acf_ljung_box_daily,
-        ACF_LJUNG_BOX_ORACLE,
-    )
-    assert res.ok, res.mismatches
 
 
 def _python_acf(daily_cents: dict) -> list[tuple]:
@@ -133,17 +120,3 @@ def test_crafted_constant_series_null_guard(spark, tmp_path):
     odf = con.execute(ACF_LJUNG_BOX_ORACLE).fetchdf()
     con.close()
     assert odf.r_ppm.isna().all() and odf.lb_q_scaled.isna().all()
-
-
-def test_split_invariance_bit_exact(spark, sf_dir, tmp_path):
-    from tests.oracle_harness import assert_split_invariance
-
-    assert_split_invariance(
-        spark, sf_dir, tmp_path, acf_ljung_box_daily, "orders"
-    )
-
-
-def test_conf_axis_invariance_bit_exact(spark, sf_dir):
-    from tests.oracle_harness import assert_conf_axis_invariance
-
-    assert_conf_axis_invariance(spark, sf_dir, acf_ljung_box_daily)

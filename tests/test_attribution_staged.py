@@ -1,9 +1,10 @@
 """Sessionized first/last-touch attribution (STAGED for r12).
 
-Oracle differential plus a hand-built micro-corpus that pins every
-semantic branch (first vs last touch, direct, session boundary resets the
-touch carry), a conservation identity on the fixture data, and the
-three-axis invariance contract.
+Oracle differential (tests/test_queries_oracle.py) plus a hand-built
+micro-corpus that pins every semantic branch (first vs last touch, direct,
+session boundary resets the touch carry), a conservation identity on the
+fixture data, and the three-axis invariance contract
+(tests/test_split_invariance.py).
 """
 
 from __future__ import annotations
@@ -13,21 +14,8 @@ import datetime as dt
 from pyspark.sql import functions as F
 
 from talkinghead_datapipeline_spark.queries.behavior import (
-    ATTRIBUTION_ORACLE,
     attribution_first_last_touch,
 )
-from tests.oracle_harness import run_compare
-
-
-def test_staged_oracle_matches(spark, sf_dir):
-    res = run_compare(
-        spark,
-        sf_dir,
-        "attribution_first_last_touch",
-        attribution_first_last_touch,
-        ATTRIBUTION_ORACLE,
-    )
-    assert res.ok, res.mismatches
 
 
 def _write_events(spark, tmp_path, rows):
@@ -104,17 +92,3 @@ def test_conservation_at_sf(spark, sf_dir):
     assert sum(r["last_touch_cents"] for r in out) == want["c"]
     assert sum(r["n_first_touch"] for r in out) == want["n"]
     assert sum(r["n_last_touch"] for r in out) == want["n"]
-
-
-def test_split_invariance_bit_exact(spark, sf_dir, tmp_path):
-    from tests.oracle_harness import assert_split_invariance
-
-    assert_split_invariance(
-        spark, sf_dir, tmp_path, attribution_first_last_touch, "events"
-    )
-
-
-def test_conf_axis_invariance_bit_exact(spark, sf_dir):
-    from tests.oracle_harness import assert_conf_axis_invariance
-
-    assert_conf_axis_invariance(spark, sf_dir, attribution_first_last_touch)

@@ -1,32 +1,17 @@
 """Exact Mann-Whitney AUC (STAGED for r11).
 
-Oracle differential plus a brute-force pin: the tie-corrected rank
-identity must equal the O(P*N) pairwise definition
+Oracle differential (tests/test_queries_oracle.py) plus a brute-force pin:
+the tie-corrected rank identity must equal the O(P*N) pairwise definition
 AUC = (#{pos > neg} + 0.5 * #{pos == neg}) / (P*N) computed directly in
-numpy, and a 4-split re-layout must reproduce the exact integer
-statistic bit-for-bit.
+numpy, and a 4-split re-layout (tests/test_split_invariance.py) must
+reproduce the exact integer statistic bit-for-bit.
 """
 
 from __future__ import annotations
 
-import numpy as np
-
 from talkinghead_datapipeline_spark.queries.mlstats import (
-    AUC_MANN_WHITNEY_ORACLE,
     auc_mann_whitney_lang,
 )
-from tests.oracle_harness import run_compare
-
-
-def test_staged_oracle_matches(spark, sf_dir):
-    res = run_compare(
-        spark,
-        sf_dir,
-        "auc_mann_whitney_lang",
-        auc_mann_whitney_lang,
-        AUC_MANN_WHITNEY_ORACLE,
-    )
-    assert res.ok, res.mismatches
 
 
 def test_matches_pairwise_definition(spark, sf_dir):
@@ -65,17 +50,3 @@ def test_degenerate_single_class_yields_null(spark, tmp_path):
     )
     row = auc_mann_whitney_lang(spark, str(tmp_path)).first()
     assert row.n_neg == 0 and row.auc_ppm is None
-
-
-def test_split_invariance_bit_exact(spark, sf_dir, tmp_path):
-    from tests.oracle_harness import assert_split_invariance
-
-    assert_split_invariance(spark, sf_dir, tmp_path, auc_mann_whitney_lang, "documents")
-
-
-def test_conf_axis_invariance_bit_exact(spark, sf_dir):
-    """Shuffle-partition and AQE axes via the shared three-axis helper —
-    partial-merge order cannot move an exact-integer pipeline."""
-    from tests.oracle_harness import assert_conf_axis_invariance
-
-    assert_conf_axis_invariance(spark, sf_dir, auc_mann_whitney_lang)

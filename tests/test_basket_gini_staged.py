@@ -1,12 +1,14 @@
 """Market-basket association rules + Gini/Lorenz concentration (STAGED r13).
 
-Oracle differentials, independent pandas/python recomputations from raw
-rows (pair counting via set intersections; Gini via the sorted closed
-form AND the O(n^2) mean-absolute-difference definition), crafted corpora
-pinning the support gate, the lift floor division, the decile boundary
-under tied values (custkey tiebreak), and Gini's 0 / (n-1)/n extremes,
-plus the three-axis invariance contract (the basket split fixture writes
-BOTH its tables — lineitem re-split, part as-is)."""
+Oracle differentials (tests/test_queries_oracle.py), independent
+pandas/python recomputations from raw rows (pair counting via set
+intersections; Gini via the sorted closed form AND the O(n^2)
+mean-absolute-difference definition), crafted corpora pinning the support
+gate, the lift floor division, the decile boundary under tied values
+(custkey tiebreak), and Gini's 0 / (n-1)/n extremes, plus the three-axis
+invariance contract (the basket split case here, since its fixture writes
+BOTH its tables — lineitem re-split, part as-is; the rest in
+tests/test_split_invariance.py)."""
 
 from __future__ import annotations
 
@@ -15,28 +17,9 @@ from itertools import combinations
 import numpy as np
 
 from talkinghead_datapipeline_spark.queries.behavior import (
-    BASKET_RULES_ORACLE,
-    GINI_CONCENTRATION_ORACLE,
     basket_association_rules,
     gini_revenue_concentration,
 )
-from tests.oracle_harness import run_compare
-
-
-def test_basket_staged_oracle_matches(spark, sf_dir):
-    res = run_compare(
-        spark, sf_dir, "basket_association_rules", basket_association_rules,
-        BASKET_RULES_ORACLE,
-    )
-    assert res.ok, res.mismatches
-
-
-def test_gini_staged_oracle_matches(spark, sf_dir):
-    res = run_compare(
-        spark, sf_dir, "gini_revenue_concentration",
-        gini_revenue_concentration, GINI_CONCENTRATION_ORACLE,
-    )
-    assert res.ok, res.mismatches
 
 
 def test_basket_matches_python_recompute(spark, sf_dir):
@@ -188,14 +171,6 @@ def test_basket_crafted_rules_exact(spark, tmp_path):
     ]
 
 
-def test_gini_split_invariance_bit_exact(spark, sf_dir, tmp_path):
-    from tests.oracle_harness import assert_split_invariance
-
-    assert_split_invariance(
-        spark, sf_dir, tmp_path, gini_revenue_concentration, "orders"
-    )
-
-
 def test_basket_split_invariance_bit_exact(spark, sf_dir, tmp_path):
     from talkinghead_datapipeline_spark.catalog import load_table
     from tests.oracle_harness import _canon_frame
@@ -212,10 +187,3 @@ def test_basket_split_invariance_bit_exact(spark, sf_dir, tmp_path):
         basket_association_rules(spark, str(tmp_path)).toPandas()
     )
     assert base.equals(split)
-
-
-def test_conf_axis_invariance_bit_exact(spark, sf_dir):
-    from tests.oracle_harness import assert_conf_axis_invariance
-
-    assert_conf_axis_invariance(spark, sf_dir, basket_association_rules)
-    assert_conf_axis_invariance(spark, sf_dir, gini_revenue_concentration)

@@ -1,10 +1,11 @@
 """Benjamini-Hochberg FDR battery (STAGED for r14).
 
-Oracle differential, an independent Python recompute of the z / A&S-p /
-step-up chain from the raw fixture, the floor-boundary tie audit for the
-one libm-divergent op (exp) against the 1e-9 display quantum, a crafted
-corpus with one overwhelming cell pinning a guaranteed rejection on both
-engines, the BH step-up contract, and the three-axis invariance contract.
+Oracle differential (tests/test_queries_oracle.py), an independent Python
+recompute of the z / A&S-p / step-up chain from the raw fixture, the
+floor-boundary tie audit for the one libm-divergent op (exp) against the
+1e-9 display quantum, a crafted corpus with one overwhelming cell pinning
+a guaranteed rejection on both engines, the BH step-up contract, and the
+three-axis invariance contract (tests/test_split_invariance.py).
 """
 
 from __future__ import annotations
@@ -15,14 +16,6 @@ from talkinghead_datapipeline_spark.queries.stats_tests import (
     BH_FDR_ORACLE,
     bh_fdr_lang_source,
 )
-from tests.oracle_harness import run_compare
-
-
-def test_staged_oracle_matches(spark, sf_dir):
-    res = run_compare(
-        spark, sf_dir, "bh_fdr_lang_source", bh_fdr_lang_source, BH_FDR_ORACLE,
-    )
-    assert res.ok, res.mismatches
 
 
 def _python_battery(spark, sf_dir):
@@ -135,17 +128,3 @@ def test_step_up_contract(spark, sf_dir):
     kstar = max(passing) if passing else 0
     for r in rows:
         assert r["rejected"] == (r["p_rank"] <= kstar)
-
-
-def test_split_invariance_bit_exact(spark, sf_dir, tmp_path):
-    from tests.oracle_harness import assert_split_invariance
-
-    assert_split_invariance(
-        spark, sf_dir, tmp_path, bh_fdr_lang_source, "documents"
-    )
-
-
-def test_conf_axis_invariance_bit_exact(spark, sf_dir):
-    from tests.oracle_harness import assert_conf_axis_invariance
-
-    assert_conf_axis_invariance(spark, sf_dir, bh_fdr_lang_source)

@@ -7,22 +7,9 @@ from pyspark.sql import functions as F
 
 from talkinghead_datapipeline_spark.queries.mlstats import (
     _BOOT_B,
-    BOOTSTRAP_CI_ORACLE,
     bootstrap_ci_order_value,
     poisson_bootstrap_weight,
 )
-from tests.oracle_harness import run_compare
-
-
-def test_staged_oracle_matches(spark, sf_dir):
-    res = run_compare(
-        spark,
-        sf_dir,
-        "bootstrap_ci_order_value",
-        bootstrap_ci_order_value,
-        BOOTSTRAP_CI_ORACLE,
-    )
-    assert res.ok, res.mismatches
 
 
 def test_ci_brackets_mean_and_is_ordered(spark, sf_dir):

@@ -1,9 +1,10 @@
 """Binary-segmentation changepoint over daily revenue (STAGED for r11).
 
-Oracle differential plus the pins that make the argmax trustworthy: a
-brute-force recomputation of the best split from the raw daily sums (the
-SSE identity), a synthetic step-change series whose break the query must
-find exactly, and the three invariance axes bit-exact.
+Oracle differential (tests/test_queries_oracle.py) plus the pins that make
+the argmax trustworthy: a brute-force recomputation of the best split from
+the raw daily sums (the SSE identity), a synthetic step-change series
+whose break the query must find exactly, and the three invariance axes
+bit-exact (tests/test_split_invariance.py).
 """
 
 from __future__ import annotations
@@ -11,21 +12,8 @@ from __future__ import annotations
 import pandas as pd
 
 from talkinghead_datapipeline_spark.queries.timeseries import (
-    CHANGEPOINT_ORACLE,
     changepoint_daily_revenue,
 )
-from tests.oracle_harness import run_compare
-
-
-def test_staged_oracle_matches(spark, sf_dir):
-    res = run_compare(
-        spark,
-        sf_dir,
-        "changepoint_daily_revenue",
-        changepoint_daily_revenue,
-        CHANGEPOINT_ORACLE,
-    )
-    assert res.ok, res.mismatches
 
 
 def test_matches_bruteforce_argmax(spark, sf_dir):
@@ -92,17 +80,3 @@ def test_finds_synthetic_step_change(spark, tmp_path):
     assert row.n_left == 180 and row.n_right == 120
     assert row.mean_left_micro == 100_000_000
     assert row.mean_right_micro == 1_000_000_000
-
-
-def test_split_invariance_bit_exact(spark, sf_dir, tmp_path):
-    from tests.oracle_harness import assert_split_invariance
-
-    assert_split_invariance(
-        spark, sf_dir, tmp_path, changepoint_daily_revenue, "orders"
-    )
-
-
-def test_conf_axis_invariance_bit_exact(spark, sf_dir):
-    from tests.oracle_harness import assert_conf_axis_invariance
-
-    assert_conf_axis_invariance(spark, sf_dir, changepoint_daily_revenue)

@@ -5,18 +5,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from talkinghead_datapipeline_spark.queries.textops import (
-    DOC_CHUNK_ORACLE,
-    doc_chunk_overlap,
-)
-from tests.oracle_harness import run_compare
-
-
-def test_staged_oracle_matches(spark, sf_dir):
-    res = run_compare(
-        spark, sf_dir, "doc_chunk_overlap", doc_chunk_overlap, DOC_CHUNK_ORACLE
-    )
-    assert res.ok, res.mismatches
+from talkinghead_datapipeline_spark.queries.textops import doc_chunk_overlap
 
 
 def test_grid_properties(spark, sf_dir):

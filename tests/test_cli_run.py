@@ -259,3 +259,23 @@ def test_run_rebinds_a_key_it_reads(spark, tmp_path, sf_dir):
     assert [(r["name"], r["status"], r["total"]) for r in report] == [("orders", "written", n)]
     assert _digest(spark.read.parquet(os.path.join(out, "orders.parquet"))) == _digest(expected)
     assert sorted(os.listdir(out)) == ["orders.parquet", "report.json"]
+
+
+def test_failed_node_write_leaves_no_temp_directory(spark, tmp_path, sf_dir):
+    # the second node's write fails: its staged temp directory goes, and the
+    # first node's committed table stays as written
+    from talkinghead_datapipeline_spark.catalog import load_table
+
+    graph = [
+        {"name": "source_parquet", "params": {"sf_dir": sf_dir, "table": "nation", "output": "ok_tbl"}},
+        {"name": "select", "params": {"input": "ok_tbl", "exprs": ["raise_error('boom') AS x"], "output": "bad_tbl"}},
+    ]
+    gp = str(tmp_path / "graph.json")
+    with open(gp, "w") as f:
+        json.dump(graph, f)
+    out = str(tmp_path / "out")
+    with pytest.raises(Exception, match="boom"):
+        run(spark, gp, {}, out)
+    assert os.listdir(out) == ["ok_tbl.parquet"]
+    nation = load_table(spark, sf_dir, "nation")
+    assert _digest(spark.read.parquet(os.path.join(out, "ok_tbl.parquet"))) == _digest(nation)

@@ -1,10 +1,11 @@
 """Split-conformal interval calibration (STAGED for r13).
 
-Oracle differential, a numpy recomputation of the exact conformal
-quantile and test-half coverage per lang, a crafted corpus that pins the
-k-rank boundary (n_cal = 19 admitted, n_cal = 18 excluded) and a
-hand-derivable q-hat, the order-statistic minimality property, and the
-three-axis invariance contract (fully integer pipeline).
+Oracle differential (tests/test_queries_oracle.py), a numpy recomputation
+of the exact conformal quantile and test-half coverage per lang, a crafted
+corpus that pins the k-rank boundary (n_cal = 19 admitted, n_cal = 18
+excluded) and a hand-derivable q-hat, the order-statistic minimality
+property, and the three-axis invariance contract
+(tests/test_split_invariance.py; fully integer pipeline).
 """
 
 from __future__ import annotations
@@ -14,18 +15,8 @@ import math
 import numpy as np
 
 from talkinghead_datapipeline_spark.queries.mlstats import (
-    CONFORMAL_ORACLE,
     conformal_coverage_lang,
 )
-from tests.oracle_harness import run_compare
-
-
-def test_staged_oracle_matches(spark, sf_dir):
-    res = run_compare(
-        spark, sf_dir, "conformal_coverage_lang", conformal_coverage_lang,
-        CONFORMAL_ORACLE,
-    )
-    assert res.ok, res.mismatches
 
 
 def test_matches_numpy_recompute(spark, sf_dir):
@@ -100,17 +91,3 @@ def test_k_rank_integer_formula_is_ceil():
     # on every admissible n (exact rational ceil, no float drift)
     for n in range(19, 5000):
         assert (9 * (n + 1) + 9) // 10 == math.ceil((9 * (n + 1)) / 10) == -((-9 * (n + 1)) // 10)
-
-
-def test_split_invariance_bit_exact(spark, sf_dir, tmp_path):
-    from tests.oracle_harness import assert_split_invariance
-
-    assert_split_invariance(
-        spark, sf_dir, tmp_path, conformal_coverage_lang, "documents"
-    )
-
-
-def test_conf_axis_invariance_bit_exact(spark, sf_dir):
-    from tests.oracle_harness import assert_conf_axis_invariance
-
-    assert_conf_axis_invariance(spark, sf_dir, conformal_coverage_lang)

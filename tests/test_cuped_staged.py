@@ -1,10 +1,11 @@
 """CUPED variance-reduced A/B lift (STAGED for r13).
 
-Oracle differential, a Fraction-exact recomputation of theta / lifts /
-rho^2 from the per-user covariate frame, a hand-built micro-corpus that
-pins the pre/post split and the zero-activity user, and the three-axis
-invariance contract (every float is a single-row IEEE expression over
-exact BIGINT sums, so all axes must be bit-exact).
+Oracle differential (tests/test_queries_oracle.py), a Fraction-exact
+recomputation of theta / lifts / rho^2 from the per-user covariate frame,
+a hand-built micro-corpus that pins the pre/post split and the
+zero-activity user, and the three-axis invariance contract
+(tests/test_split_invariance.py; every float is a single-row IEEE
+expression over exact BIGINT sums, so all axes must be bit-exact).
 """
 
 from __future__ import annotations
@@ -15,18 +16,9 @@ from fractions import Fraction
 from pyspark.sql import functions as F
 
 from talkinghead_datapipeline_spark.queries.behavior import (
-    CUPED_ORACLE,
     _CUPED_CUT,
     cuped_adjusted_lift,
 )
-from tests.oracle_harness import run_compare
-
-
-def test_staged_oracle_matches(spark, sf_dir):
-    res = run_compare(
-        spark, sf_dir, "cuped_adjusted_lift", cuped_adjusted_lift, CUPED_ORACLE
-    )
-    assert res.ok, res.mismatches
 
 
 def _exact_cuped(xy):
@@ -135,15 +127,3 @@ def test_micro_corpus_semantics(spark, tmp_path):
     got2 = cuped_adjusted_lift(spark, str(tmp_path)).collect()[0]
     _assert_close(got2["diff_raw"], want2["diff_raw"])
     _assert_close(got2["theta"], want2["theta"])
-
-
-def test_split_invariance_bit_exact(spark, sf_dir, tmp_path):
-    from tests.oracle_harness import assert_split_invariance
-
-    assert_split_invariance(spark, sf_dir, tmp_path, cuped_adjusted_lift, "events")
-
-
-def test_conf_axis_invariance_bit_exact(spark, sf_dir):
-    from tests.oracle_harness import assert_conf_axis_invariance
-
-    assert_conf_axis_invariance(spark, sf_dir, cuped_adjusted_lift)

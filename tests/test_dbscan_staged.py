@@ -1,12 +1,13 @@
 """DBSCAN-style grid-density roles (STAGED for r14).
 
-Oracle differential, an independent brute-force O(n²) recompute in numpy
-(no cell bucketing — proves the 3×3 adjacency enumeration is COMPLETE:
-every eps-ball fits in the neighborhood because cell size == eps), a
-crafted corpus pinning an isolated-noise / dense-core geometry on both
-engines, the role-mix non-degeneracy contract, and the three-axis
-invariance contract (everything downstream of the projection floor is
-exact integer relational algebra).
+Oracle differential (tests/test_queries_oracle.py), an independent
+brute-force O(n²) recompute in numpy (no cell bucketing — proves the 3×3
+adjacency enumeration is COMPLETE: every eps-ball fits in the neighborhood
+because cell size == eps), a crafted corpus pinning an isolated-noise /
+dense-core geometry on both engines, the role-mix non-degeneracy contract,
+and the three-axis invariance contract (tests/test_split_invariance.py;
+everything downstream of the projection floor is exact integer relational
+algebra).
 """
 
 from __future__ import annotations
@@ -21,15 +22,6 @@ from talkinghead_datapipeline_spark.queries.similarity import (
     _dbscan_proj_weights,
     dbscan_grid_roles,
 )
-from tests.oracle_harness import run_compare
-
-
-def test_staged_oracle_matches(spark, sf_dir):
-    res = run_compare(
-        spark, sf_dir, "dbscan_grid_roles", dbscan_grid_roles,
-        DBSCAN_GRID_ORACLE,
-    )
-    assert res.ok, res.mismatches
 
 
 def test_matches_brute_force_all_pairs(spark, sf_dir):
@@ -127,17 +119,3 @@ def test_crafted_geometry(spark, tmp_path):
     for vid, r in out.items():
         assert odf.loc[vid, "role"] == r["role"]
         assert int(odf.loc[vid, "n_neighbors"]) == r["n_neighbors"]
-
-
-def test_split_invariance_bit_exact(spark, sf_dir, tmp_path):
-    from tests.oracle_harness import assert_split_invariance
-
-    assert_split_invariance(
-        spark, sf_dir, tmp_path, dbscan_grid_roles, "embeddings"
-    )
-
-
-def test_conf_axis_invariance_bit_exact(spark, sf_dir):
-    from tests.oracle_harness import assert_conf_axis_invariance
-
-    assert_conf_axis_invariance(spark, sf_dir, dbscan_grid_roles)

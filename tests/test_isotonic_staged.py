@@ -1,12 +1,12 @@
 """Isotonic (PAV) calibration curve via the minimax identity (STAGED for
 r12).
 
-The central claim — iso(i) = max_{j<=i} min_{k>=i} avg(y over scores
-j..k) equals the sequential pool-adjacent-violators fit — is proven
-against an exact Fraction-arithmetic PAV on the real fixture AND on
-crafted violation patterns; monotonicity and the pooled-average property
-are asserted; the oracle differential and three-axis invariance close the
-cross-engine contract.
+The central claim — iso(i) = max_{j<=i} min_{k>=i} avg(y over scores j..k)
+equals the sequential pool-adjacent-violators fit — is proven against an
+exact Fraction-arithmetic PAV on the real fixture AND on crafted violation
+patterns; monotonicity and the pooled-average property are asserted; the
+oracle differential (tests/test_queries_oracle.py) and three-axis
+invariance close the cross-engine contract.
 """
 
 from __future__ import annotations
@@ -14,13 +14,10 @@ from __future__ import annotations
 from fractions import Fraction
 
 import pytest
-from pyspark.sql import functions as F
 
 from talkinghead_datapipeline_spark.queries.mlstats import (
-    ISOTONIC_CALIBRATION_ORACLE,
     isotonic_calibration_lang,
 )
-from tests.oracle_harness import run_compare
 
 
 def _pav(ns: list[int], ps: list[int]) -> list[Fraction]:
@@ -47,14 +44,6 @@ def _pav(ns: list[int], ps: list[int]) -> list[Fraction]:
             i += 1
     assert i == len(ns)
     return out
-
-
-def test_staged_oracle_matches(spark, sf_dir):
-    res = run_compare(
-        spark, sf_dir, "isotonic_calibration_lang", isotonic_calibration_lang,
-        ISOTONIC_CALIBRATION_ORACLE,
-    )
-    assert res.ok, res.mismatches
 
 
 def test_matches_exact_pav(spark, sf_dir):
@@ -100,17 +89,3 @@ def test_crafted_violation_patterns(spark, tmp_path, pattern):
     # pooled-average conservation: sum(n_i * iso_i) == total positives
     total = sum(Fraction(n) * f for n, f in zip(ns, fits))
     assert total == sum(ps)
-
-
-def test_split_invariance_bit_exact(spark, sf_dir, tmp_path):
-    from tests.oracle_harness import assert_split_invariance
-
-    assert_split_invariance(
-        spark, sf_dir, tmp_path, isotonic_calibration_lang, "documents"
-    )
-
-
-def test_conf_axis_invariance_bit_exact(spark, sf_dir):
-    from tests.oracle_harness import assert_conf_axis_invariance
-
-    assert_conf_axis_invariance(spark, sf_dir, isotonic_calibration_lang)

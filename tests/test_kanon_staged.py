@@ -1,26 +1,16 @@
 """k-anonymity audit (STAGED for r12).
 
-Oracle differential, a pandas recomputation of the full ladder from raw
-class sizes, a crafted corpus with hand-countable equivalence classes,
-and the three-axis invariance contract (exact-integer pipeline).
+Oracle differential (tests/test_queries_oracle.py), a pandas recomputation
+of the full ladder from raw class sizes, a crafted corpus with
+hand-countable equivalence classes, and the three-axis invariance contract
+(tests/test_split_invariance.py; exact-integer pipeline).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from talkinghead_datapipeline_spark.queries.dataops import (
-    K_ANONYMITY_ORACLE,
-    k_anonymity_audit,
-)
-from tests.oracle_harness import run_compare
-
-
-def test_staged_oracle_matches(spark, sf_dir):
-    res = run_compare(
-        spark, sf_dir, "k_anonymity_audit", k_anonymity_audit, K_ANONYMITY_ORACLE
-    )
-    assert res.ok, res.mismatches
+from talkinghead_datapipeline_spark.queries.dataops import k_anonymity_audit
 
 
 def test_matches_pandas_recount(spark, sf_dir):
@@ -65,15 +55,3 @@ def test_crafted_corpus_exact(spark, tmp_path):
     assert out[10]["classes_below"] == 3 and out[10]["rows_below"] == 11
     assert out[25]["rows_below_ppm"] == 1_000_000  # everything below k=25
     assert out[2]["min_class_size"] == 1 and out[2]["total_classes"] == 3
-
-
-def test_split_invariance_bit_exact(spark, sf_dir, tmp_path):
-    from tests.oracle_harness import assert_split_invariance
-
-    assert_split_invariance(spark, sf_dir, tmp_path, k_anonymity_audit, "documents")
-
-
-def test_conf_axis_invariance_bit_exact(spark, sf_dir):
-    from tests.oracle_harness import assert_conf_axis_invariance
-
-    assert_conf_axis_invariance(spark, sf_dir, k_anonymity_audit)

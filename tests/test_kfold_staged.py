@@ -1,30 +1,20 @@
 """k-fold cross-validated linear regression (STAGED for r11 registration).
 
-Oracle differential plus the analytic pins that make the query
-trustworthy beyond "two engines agree": the per-fold coefficients must
-match an independent numpy least-squares fit on the same train split, the
-expanded-quadratic held-out MSE must match a direct residual computation,
-and the result must be invariant to the input file layout (the
-fixed-association exactness claim is only real if a 4-split re-layout
-reproduces every micro unit bit-for-bit).
+Oracle differential (tests/test_queries_oracle.py) plus the analytic pins
+that make the query trustworthy beyond "two engines agree": the per-fold
+coefficients must match an independent numpy least-squares fit on the same
+train split, the expanded-quadratic held-out MSE must match a direct
+residual computation, and the result must be invariant to the input file
+layout (tests/test_split_invariance.py; the fixed-association exactness
+claim is only real if a 4-split re-layout reproduces every micro unit
+bit-for-bit).
 """
 
 from __future__ import annotations
 
 import numpy as np
 
-from talkinghead_datapipeline_spark.queries.mlstats import (
-    KFOLD_LINREG_ORACLE,
-    kfold_linreg_cv,
-)
-from tests.oracle_harness import run_compare
-
-
-def test_staged_oracle_matches(spark, sf_dir):
-    res = run_compare(
-        spark, sf_dir, "kfold_linreg_cv", kfold_linreg_cv, KFOLD_LINREG_ORACLE
-    )
-    assert res.ok, res.mismatches
+from talkinghead_datapipeline_spark.queries.mlstats import kfold_linreg_cv
 
 
 def _folds_numpy(spark, sf_dir):
@@ -69,17 +59,3 @@ def test_matches_independent_numpy_fit(spark, sf_dir):
         assert abs(r.beta0_micro - b0 * 1e6) < 10, (k, r.beta0_micro, b0)
         assert abs(r.beta1_micro - b1 * 1e6) < 10, (k, r.beta1_micro, b1)
         assert abs(r.val_mse_micro - mse * 1e6) < 10, (k, r.val_mse_micro, mse)
-
-
-def test_split_invariance_bit_exact(spark, sf_dir, tmp_path):
-    from tests.oracle_harness import assert_split_invariance
-
-    assert_split_invariance(spark, sf_dir, tmp_path, kfold_linreg_cv, "documents")
-
-
-def test_conf_axis_invariance_bit_exact(spark, sf_dir):
-    """Shuffle-partition and AQE axes via the shared three-axis helper —
-    partial-merge order cannot move an exact-integer pipeline."""
-    from tests.oracle_harness import assert_conf_axis_invariance
-
-    assert_conf_axis_invariance(spark, sf_dir, kfold_linreg_cv)

@@ -1,11 +1,12 @@
 """Kaplan-Meier product-limit survival (STAGED for r14).
 
-Oracle differential, an independent Python recompute of the exact integer
-recurrence from the raw fixture (a different code path than both engines'
-folds), crafted corpora pinning the everyone-converts-at-0 (S=0 first
-step) and nobody-converts (empty curve) boundaries on both engines, the
-monotonicity + range contract, and the three-axis invariance contract
-(integer end-to-end: no float op anywhere).
+Oracle differential (tests/test_queries_oracle.py), an independent Python
+recompute of the exact integer recurrence from the raw fixture (a
+different code path than both engines' folds), crafted corpora pinning the
+everyone-converts-at-0 (S=0 first step) and nobody-converts (empty curve)
+boundaries on both engines, the monotonicity + range contract, and the
+three-axis invariance contract (tests/test_split_invariance.py; integer
+end-to-end: no float op anywhere).
 """
 
 from __future__ import annotations
@@ -16,15 +17,6 @@ from talkinghead_datapipeline_spark.queries.behavior import (
     KAPLAN_MEIER_ORACLE,
     kaplan_meier_survival,
 )
-from tests.oracle_harness import run_compare
-
-
-def test_staged_oracle_matches(spark, sf_dir):
-    res = run_compare(
-        spark, sf_dir, "kaplan_meier_survival", kaplan_meier_survival,
-        KAPLAN_MEIER_ORACLE,
-    )
-    assert res.ok, res.mismatches
 
 
 def test_matches_independent_python_fold(spark, sf_dir):
@@ -134,17 +126,3 @@ def test_curve_contract(spark, sf_dir):
         assert 0 <= s <= prev
         assert s == (prev * (r["n_at_risk"] - r["d_events"])) // r["n_at_risk"]
         prev = s
-
-
-def test_split_invariance_bit_exact(spark, sf_dir, tmp_path):
-    from tests.oracle_harness import assert_split_invariance
-
-    assert_split_invariance(
-        spark, sf_dir, tmp_path, kaplan_meier_survival, "events"
-    )
-
-
-def test_conf_axis_invariance_bit_exact(spark, sf_dir):
-    from tests.oracle_harness import assert_conf_axis_invariance
-
-    assert_conf_axis_invariance(spark, sf_dir, kaplan_meier_survival)

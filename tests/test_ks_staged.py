@@ -1,8 +1,9 @@
 """Exact two-sample Kolmogorov-Smirnov statistic (STAGED for r12).
 
-Oracle differential plus a numpy brute-force pin of the sup-distance and
-its witness, a crafted shift corpus with a known exact D, and the
-three-axis invariance contract (exact-integer pipeline).
+Oracle differential (tests/test_queries_oracle.py) plus a numpy
+brute-force pin of the sup-distance and its witness, a crafted shift
+corpus with a known exact D, and the three-axis invariance contract
+(tests/test_split_invariance.py; exact-integer pipeline).
 """
 
 from __future__ import annotations
@@ -11,18 +12,8 @@ import numpy as np
 from pyspark.sql import functions as F
 
 from talkinghead_datapipeline_spark.queries.stats_tests import (
-    KS_TWO_SAMPLE_ORACLE,
     ks_two_sample_chars,
 )
-from tests.oracle_harness import run_compare
-
-
-def test_staged_oracle_matches(spark, sf_dir):
-    res = run_compare(
-        spark, sf_dir, "ks_two_sample_chars", ks_two_sample_chars,
-        KS_TWO_SAMPLE_ORACLE,
-    )
-    assert res.ok, res.mismatches
 
 
 def test_matches_numpy_definition(spark, sf_dir):
@@ -60,15 +51,3 @@ def test_known_shift_corpus(spark, tmp_path):
     assert (row.n1, row.n2) == (5, 5)
     assert row.d_num == 25 and row.d_ppm == 1_000_000  # D = 1
     assert row.at_score == 14  # smallest score achieving the max
-
-
-def test_split_invariance_bit_exact(spark, sf_dir, tmp_path):
-    from tests.oracle_harness import assert_split_invariance
-
-    assert_split_invariance(spark, sf_dir, tmp_path, ks_two_sample_chars, "documents")
-
-
-def test_conf_axis_invariance_bit_exact(spark, sf_dir):
-    from tests.oracle_harness import assert_conf_axis_invariance
-
-    assert_conf_axis_invariance(spark, sf_dir, ks_two_sample_chars)

@@ -1,11 +1,12 @@
 """Log-rank two-sample survival test (STAGED for r14).
 
-Oracle differential, an independent Python recompute of the pooled-step
-risk sets + floor-ppm expectation/variance quantization + chi-square from
-the raw fixture, crafted corpora pinning a maximal-separation battery
-(one cohort converts instantly, the other never) and the degenerate
-one-cohort NULL-chi2 guard on both engines, and the three-axis invariance
-contract.
+Oracle differential (tests/test_queries_oracle.py), an independent Python
+recompute of the pooled-step risk sets + floor-ppm expectation/variance
+quantization + chi-square from the raw fixture, crafted corpora pinning a
+maximal-separation battery (one cohort converts instantly, the other
+never) and the degenerate one-cohort NULL-chi2 guard on both engines, and
+the three-axis invariance contract (the split axis here, the conf axes in
+tests/test_split_invariance.py).
 """
 
 from __future__ import annotations
@@ -18,15 +19,6 @@ from talkinghead_datapipeline_spark.queries.behavior import (
     LOGRANK_ORACLE,
     logrank_segment_survival,
 )
-from tests.oracle_harness import run_compare
-
-
-def test_staged_oracle_matches(spark, sf_dir):
-    res = run_compare(
-        spark, sf_dir, "logrank_segment_survival", logrank_segment_survival,
-        LOGRANK_ORACLE,
-    )
-    assert res.ok, res.mismatches
 
 
 def test_matches_independent_python_recompute(spark, sf_dir):
@@ -179,9 +171,3 @@ def test_split_invariance_bit_exact(spark, sf_dir, tmp_path):
     assert_split_invariance(
         spark, sf_dir, tmp_path, logrank_segment_survival, "events"
     )
-
-
-def test_conf_axis_invariance_bit_exact(spark, sf_dir):
-    from tests.oracle_harness import assert_conf_axis_invariance
-
-    assert_conf_axis_invariance(spark, sf_dir, logrank_segment_survival)

@@ -1,8 +1,9 @@
 """Newton/IRLS logistic regression (STAGED for r9 registration).
 
-Oracle differential plus the analytic pins that make the 3-step Newton
-trustworthy beyond "two engines agree": on a synthetic corpus with a known
-closed-form optimum the fitted coefficients must land on it.
+Oracle differential (tests/test_queries_oracle.py) plus the analytic pins
+that make the 3-step Newton trustworthy beyond "two engines agree": on a
+synthetic corpus with a known closed-form optimum the fitted coefficients
+must land on it.
 """
 
 from __future__ import annotations
@@ -15,14 +16,6 @@ from talkinghead_datapipeline_spark.queries.mlstats import (
     LOGREG_NEWTON_ORACLE,
     logreg_newton_lang,
 )
-from tests.oracle_harness import run_compare
-
-
-def test_staged_oracle_matches(spark, sf_dir):
-    res = run_compare(
-        spark, sf_dir, "logreg_newton_lang", logreg_newton_lang, LOGREG_NEWTON_ORACLE
-    )
-    assert res.ok, res.mismatches
 
 
 def test_intercept_only_closed_form(spark, tmp_path):

@@ -1,41 +1,21 @@
 """Mann-Kendall trend test + Theil-Sen slope (STAGED for r13).
 
-Oracle differentials, an independent numpy recompute of both statistics
-from the raw daily frame (full pairwise loops, no shared SQL), a crafted
-orders corpus with hand-computed S / tie-corrected variance / z and a
-hand-checkable median slope, and the three-axis invariance contract (exact
+Oracle differentials (tests/test_queries_oracle.py), an independent numpy
+recompute of both statistics from the raw daily frame (full pairwise
+loops, no shared SQL), a crafted orders corpus with hand-computed S /
+tie-corrected variance / z and a hand-checkable median slope, and the
+three-axis invariance contract (tests/test_split_invariance.py; exact
 integers + one portable IEEE chain: sqrt is correctly rounded by IEEE-754,
 division operands stay under 2^53)."""
 
 from __future__ import annotations
 
-import pytest
-
 import numpy as np
 
 from talkinghead_datapipeline_spark.queries.timeseries import (
-    MANN_KENDALL_ORACLE,
-    THEIL_SEN_ORACLE,
     mann_kendall_daily_trend,
     theil_sen_daily_slope,
 )
-from tests.oracle_harness import run_compare
-
-
-def test_mk_staged_oracle_matches(spark, sf_dir):
-    res = run_compare(
-        spark, sf_dir, "mann_kendall_daily_trend", mann_kendall_daily_trend,
-        MANN_KENDALL_ORACLE,
-    )
-    assert res.ok, res.mismatches
-
-
-def test_ts_staged_oracle_matches(spark, sf_dir):
-    res = run_compare(
-        spark, sf_dir, "theil_sen_daily_slope", theil_sen_daily_slope,
-        THEIL_SEN_ORACLE,
-    )
-    assert res.ok, res.mismatches
 
 
 def _daily_cents(spark, sf_dir):
@@ -147,27 +127,3 @@ def test_ts_degenerate_single_pair_band_not_null(spark, tmp_path):
     assert trow["slope_micro_per_day"] == 200_000_000
     assert trow["slope_lo_micro"] == 200_000_000
     assert trow["slope_hi_micro"] == 200_000_000
-
-
-def test_mk_split_invariance_bit_exact(spark, sf_dir, tmp_path):
-    from tests.oracle_harness import assert_split_invariance
-
-    assert_split_invariance(
-        spark, sf_dir, tmp_path, mann_kendall_daily_trend, "orders"
-    )
-
-
-def test_ts_split_invariance_bit_exact(spark, sf_dir, tmp_path):
-    from tests.oracle_harness import assert_split_invariance
-
-    assert_split_invariance(
-        spark, sf_dir, tmp_path, theil_sen_daily_slope, "orders"
-    )
-
-
-@pytest.mark.slow  # heavy tier (see conftest; VERDICT r14 #3)
-def test_conf_axis_invariance_bit_exact(spark, sf_dir):
-    from tests.oracle_harness import assert_conf_axis_invariance
-
-    assert_conf_axis_invariance(spark, sf_dir, mann_kendall_daily_trend)
-    assert_conf_axis_invariance(spark, sf_dir, theil_sen_daily_slope)

@@ -1,11 +1,12 @@
 """Power-iteration PCA over document features (STAGED for r11).
 
-Oracle differential plus the analytic pins behind the staging comment's
-claims: the 3-step iterate must align with numpy's exact top eigenvector
-(the eigengap-dominance claim), the eigengap itself must stay large
-enough on the fixtures for that claim to keep holding, the sign anchor
-must sit far from its boundary, and a 4-split re-layout must reproduce
-every micro unit exactly (the shared-expression bit-identity claim).
+Oracle differential (tests/test_queries_oracle.py) plus the analytic pins
+behind the staging comment's claims: the 3-step iterate must align with
+numpy's exact top eigenvector (the eigengap-dominance claim), the eigengap
+itself must stay large enough on the fixtures for that claim to keep
+holding, the sign anchor must sit far from its boundary, and a 4-split
+re-layout (tests/test_split_invariance.py) must reproduce every micro unit
+exactly (the shared-expression bit-identity claim).
 """
 
 from __future__ import annotations
@@ -13,21 +14,8 @@ from __future__ import annotations
 import numpy as np
 
 from talkinghead_datapipeline_spark.queries.mlstats import (
-    PCA_POWER_ORACLE,
     pca_power_doc_features,
 )
-from tests.oracle_harness import run_compare
-
-
-def test_staged_oracle_matches(spark, sf_dir):
-    res = run_compare(
-        spark,
-        sf_dir,
-        "pca_power_doc_features",
-        pca_power_doc_features,
-        PCA_POWER_ORACLE,
-    )
-    assert res.ok, res.mismatches
 
 
 def _features_numpy(spark, sf_dir):
@@ -84,20 +72,6 @@ def test_sign_anchor_far_from_boundary(spark, sf_dir):
     zero (measured ~0.76 on every fixture SF)."""
     row = pca_power_doc_features(spark, sf_dir).first()
     assert row.loading1_micro > 500_000
-
-
-def test_split_invariance_bit_exact(spark, sf_dir, tmp_path):
-    from tests.oracle_harness import assert_split_invariance
-
-    assert_split_invariance(spark, sf_dir, tmp_path, pca_power_doc_features, "documents")
-
-
-def test_conf_axis_invariance_bit_exact(spark, sf_dir):
-    """Shuffle-partition and AQE axes via the shared three-axis helper —
-    partial-merge order cannot move an exact-integer pipeline."""
-    from tests.oracle_harness import assert_conf_axis_invariance
-
-    assert_conf_axis_invariance(spark, sf_dir, pca_power_doc_features)
 
 
 def test_plan_is_one_reduce_plus_scalar_dag(spark, sf_dir):

@@ -1,13 +1,23 @@
-"""Differential tests: every registered query vs its DuckDB oracle.
+"""The oracle gate: every registered query against its DuckDB oracle.
 
-This is the local replica of the driver's t2 correctness gate
-(sf0.001 by default; set SPARK_GRAFT_TEST_SF_DIR=/root/testdata/sf0.01 for
-the driver-scale run).
+This is the local replica of the external correctness check (the contract
+in ``__spark_entry__.py``), and the only test that diffs a registered query
+on the shared fixture. Each case builds its query once, checks that every
+top-level output column is scalar, then compares row count, column names
+and values with the oracle SQL run on the same parquet tables. sf0.001 by
+default; point SPARK_GRAFT_TEST_SF_DIR at the sf0.01 fixture for the
+certification scale. Other tests compare against DuckDB only on crafted
+inputs (``test_no_test_repeats_a_registry_compare`` keeps it that way).
 """
 
 from __future__ import annotations
 
+import ast
+import inspect
+from pathlib import Path
+
 import pytest
+from pyspark.sql.types import ArrayType, MapType, StructType
 
 from talkinghead_datapipeline_spark.queries import all_queries
 from tests.oracle_harness import run_compare
@@ -17,52 +27,42 @@ _WITH_ORACLE = sorted(name for name, s in _SPECS.items() if s.oracle is not None
 _ROWS_ONLY = sorted(name for name, s in _SPECS.items() if s.oracle is None)
 
 
-@pytest.mark.slow  # heavy tier (see conftest; VERDICT r14 #3)
+def _assert_scalar_columns(name, df):
+    """The external harness canonicalizes results with pandas
+    ``sort_values`` over all output columns, which raises ``TypeError:
+    unhashable type`` on list or dict cells, so an array/map/struct
+    top-level output column can never be certified. Complex types are fine
+    as intermediates. The schema comes from the analyzed plan: nothing
+    executes here."""
+    nested = [
+        f.name
+        for f in df.schema.fields
+        if isinstance(f.dataType, (ArrayType, MapType, StructType))
+    ]
+    assert not nested, (
+        f"{name}: array/map/struct top-level output columns break the "
+        f"pandas-sort canonicalizer: {nested}"
+    )
+
+
 @pytest.mark.parametrize("name", _WITH_ORACLE)
 def test_query_matches_oracle(spark, sf_dir, name):
     spec = _SPECS[name]
-    result = run_compare(spark, sf_dir, name, spec.spark, spec.oracle)
-    assert result.ok, str(result)
-
-
-def test_canary_queries_match_oracle(spark, sf_dir):
-    """Default-tier oracle smoke over THIS round's changed-code canaries
-    (the full 243-query replica above is slow-gated per VERDICT r14 #3):
-    the queries whose code moved are exactly the ones a fast verify run
-    must still diff against DuckDB. One loop, one session."""
-    from talkinghead_datapipeline_spark.queries import R15_CANARIES
-
-    failures = []
-    for name in R15_CANARIES:
-        spec = _SPECS[name]
-        if spec.oracle is None:  # the pinned rows-only prod twin
-            assert spec.spark(spark, sf_dir).count() > 0
-            continue
-        result = run_compare(spark, sf_dir, name, spec.spark, spec.oracle)
-        if not result.ok:
-            failures.append(str(result))
-        spark.catalog.clearCache()
-    assert not failures, "\n".join(failures)
-
-
-def test_flame_render_pipeline_matches_oracle(spark, sf_dir):
-    """Default-tier oracle compare of the one registered query that renders
-    through ``ShapeRenderer.render_batch``; the n17 rasterizer queries have
-    theirs in tests/test_render_*_staged.py."""
-    spec = _SPECS["flame_render_pipeline"]
-    result = run_compare(spark, sf_dir, "flame_render_pipeline", spec.spark, spec.oracle)
+    df = spec.spark(spark, sf_dir)
+    _assert_scalar_columns(name, df)
+    result = run_compare(spark, sf_dir, name, lambda *_: df, spec.oracle)
     assert result.ok, str(result)
 
 
 def test_rows_only_queries_run(spark, sf_dir):
-    """Queries without an oracle (currently none — all registered queries
-    are oracled; see test_all_queries_oracled) still get a rows-and-schema
-    smoke; a plain loop so an empty list is a trivial pass, not a
+    """The query without an oracle (the one pinned exception of
+    test_all_queries_oracled) must still return rows with a scalar-only
+    schema; a plain loop, so an empty list is a trivial pass, not a
     parametrize skip."""
     for name in _ROWS_ONLY:
         df = _SPECS[name].spark(spark, sf_dir)
-        assert df.count() >= 0
-        assert len(df.schema.fields) > 0
+        _assert_scalar_columns(name, df)
+        assert df.count() > 0, name
 
 
 def test_all_queries_oracled():
@@ -76,33 +76,6 @@ def test_all_queries_oracled():
     weight-moment pins in tests/test_bootstrap_staged.py)."""
     assert _ROWS_ONLY == ["bootstrap_ci_order_value_prod"], (
         f"rows-only queries outside the pinned exception: {_ROWS_ONLY}"
-    )
-
-
-@pytest.mark.slow  # heavy tier (see conftest; VERDICT r14 #3)
-def test_output_schemas_are_scalar_only(spark, sf_dir):
-    """Driver-canonicalizer guard (VERDICT r5 #2): the external comparison
-    harness canonicalizes results with pandas ``sort_values`` over ALL
-    output columns, which raises ``TypeError: unhashable type`` on list or
-    dict cells — so an array/map/struct-typed TOP-LEVEL output column can
-    never be driver-certified (r5's `emb_label_centroids` red row). Complex
-    types are fine as intermediates; final projections must be scalar.
-    Schema comes from the analyzed (lazy) plan — nothing executes here."""
-    from pyspark.sql.types import ArrayType, MapType, StructType
-
-    offenders: dict[str, list[str]] = {}
-    for name, spec in _SPECS.items():
-        df = spec.spark(spark, sf_dir)
-        bad = [
-            f.name
-            for f in df.schema.fields
-            if isinstance(f.dataType, (ArrayType, MapType, StructType))
-        ]
-        if bad:
-            offenders[name] = bad
-    assert not offenders, (
-        "array/map/struct top-level output columns break the driver's "
-        f"pandas-sort canonicalizer: {offenders}"
     )
 
 
@@ -121,8 +94,7 @@ def test_driver_priority_rotation_policy():
     window, so cumulative driver coverage reaches every registered query
     (len(_SPECS), all oracled); (2) every family
     keeps evidence — either a past driver-green row or a seat in the current
-    prefix; (3) every query whose code changed in the current round holds a
-    canary seat."""
+    prefix."""
     import json
     from pathlib import Path
 
@@ -186,18 +158,6 @@ def test_driver_priority_rotation_policy():
     }
     assert not uncovered, f"families with no driver evidence at all: {uncovered}"
 
-    # round-15 canaries (VERDICT r14 #1: changed-code beats stale, applied
-    # to BOTH optimization rounds' rewrites): every query whose plan the
-    # r14 batches rewrote plus every query the r15 optimization touched
-    # (directly or through a shared helper — the minhash/bm25/cosine SQL
-    # twins, the exact-percentile rank, the NB trainer fold) holds a seat.
-    # The canonical list lives next to the window itself.
-    from talkinghead_datapipeline_spark.queries import R15_CANARIES
-
-    assert len(R15_CANARIES) == 45
-    assert set(R15_CANARIES) <= prefix, (
-        f"missing canaries: {sorted(set(R15_CANARIES) - prefix)}"
-    )
     # Staleness floor: the remaining seats drain the r10 tier oldest-first
     # (alphabetical); after r15 the oldest uncertified-in-5-rounds keys are
     # exactly the r10 remainder the canary spike displaced.
@@ -207,7 +167,6 @@ def test_driver_priority_rotation_policy():
         "cms_heavy_hitters",
     }
     assert r10_head <= prefix, f"unseated r10-head keys: {sorted(r10_head - prefix)}"
-
 
 
 def test_compare_is_numeric_type_sensitive():
@@ -258,3 +217,57 @@ def test_duckdb_connection_reads_part_file_directories(sf_dir, tmp_path):
     finally:
         single.close()
         split.close()
+
+
+def _imported_names(statements) -> dict:
+    """The names that the import statements among ``statements`` bind
+    (skipping a module that a test builds at run time)."""
+    ns: dict = {}
+    for node in statements:
+        if isinstance(node, ast.Import) or (
+            isinstance(node, ast.ImportFrom) and node.module != "__future__"
+        ):
+            code = compile(ast.Module(body=[node], type_ignores=[]), "<scan>", "exec")
+            try:
+                exec(code, ns)
+            except ImportError:
+                continue
+    return ns
+
+
+def test_no_test_repeats_a_registry_compare():
+    """test_query_matches_oracle is the one diff of a registered query on
+    the shared fixture. A ``run_compare`` call elsewhere repeats it (a
+    second build and run for no new evidence) when its fixture argument is
+    ``sf_dir``, its function is the registered one and its oracle is
+    the registered SQL. A test that needs its own compare makes it on a
+    crafted fixture (``tmp_path``)."""
+    params = list(inspect.signature(run_compare).parameters)
+    registered = {id(s.spark): s.oracle for s in _SPECS.values()}
+    repeats = set()
+    for path in sorted(Path(__file__).parent.glob("test_*.py")):
+        tree = ast.parse(path.read_text())
+        module_ns = _imported_names(tree.body)
+        for fn in ast.walk(tree):
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            calls = [
+                node
+                for node in ast.walk(fn)
+                if isinstance(node, ast.Call)
+                and "run_compare" in (getattr(node.func, "id", None), getattr(node.func, "attr", None))
+            ]
+            ns = {**module_ns, **_imported_names(ast.walk(fn))} if calls else {}
+            for call in calls:
+                args = dict(zip(params, call.args))
+                args.update((k.arg, k.value) for k in call.keywords)
+                if ast.unparse(args["sf_dir"]) != "sf_dir":
+                    continue
+                try:
+                    spark_fn = eval(ast.unparse(args["spark_fn"]), dict(ns))
+                    oracle = eval(ast.unparse(args["oracle"]), dict(ns))
+                except (NameError, AttributeError):  # a local value: not the registry's
+                    continue
+                if id(spark_fn) in registered and registered[id(spark_fn)] == oracle:
+                    repeats.add(f"{path.name}:{call.lineno} {fn.name}")
+    assert not repeats, f"repeats of test_query_matches_oracle: {sorted(repeats)}"

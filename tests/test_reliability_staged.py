@@ -1,9 +1,10 @@
 """Reliability / calibration bins (STAGED for r12).
 
-Oracle differential plus a numpy cross-check of every ppm column from the
-raw (b, y) pairs, the Murphy-decomposition identity the rel/brier terms
-feed, and the three-axis invariance contract (exact-integer pipeline —
-bit-for-bit under re-layout, shuffle partitions, AQE).
+Oracle differential (tests/test_queries_oracle.py) plus a numpy
+cross-check of every ppm column from the raw (b, y) pairs, the
+Murphy-decomposition identity the rel/brier terms feed, and the three-axis
+invariance contract (tests/test_split_invariance.py; exact-integer
+pipeline — bit-for-bit under re-layout, shuffle partitions, AQE).
 """
 
 from __future__ import annotations
@@ -12,21 +13,8 @@ import numpy as np
 from pyspark.sql import functions as F
 
 from talkinghead_datapipeline_spark.queries.mlstats import (
-    RELIABILITY_BINS_ORACLE,
     reliability_bins_lang,
 )
-from tests.oracle_harness import run_compare
-
-
-def test_staged_oracle_matches(spark, sf_dir):
-    res = run_compare(
-        spark,
-        sf_dir,
-        "reliability_bins_lang",
-        reliability_bins_lang,
-        RELIABILITY_BINS_ORACLE,
-    )
-    assert res.ok, res.mismatches
 
 
 def test_matches_numpy_definition(spark, sf_dir):
@@ -75,17 +63,3 @@ def test_degenerate_empty_bin_handling(spark, tmp_path):
     out = reliability_bins_lang(spark, str(tmp_path)).collect()
     assert len(out) == 1 and out[0]["bin"] == 0  # b = n_chars % 100 in 0..9
     assert out[0]["emp_rate_ppm"] == 1000000  # all positive
-
-
-def test_split_invariance_bit_exact(spark, sf_dir, tmp_path):
-    from tests.oracle_harness import assert_split_invariance
-
-    assert_split_invariance(
-        spark, sf_dir, tmp_path, reliability_bins_lang, "documents"
-    )
-
-
-def test_conf_axis_invariance_bit_exact(spark, sf_dir):
-    from tests.oracle_harness import assert_conf_axis_invariance
-
-    assert_conf_axis_invariance(spark, sf_dir, reliability_bins_lang)

@@ -1,14 +1,15 @@
 """N17 rasterizer query n17_render_mask_zbuffer (STAGED for r13).
 
-Oracle differential, the affine-eval ≡ full-LBS-decode identity at the probe
-pose, an independent numpy recompute through the module composition path
-(decode → view_transform → screen_transform → quantize → rasterize — a
-different code path than the query's left-to-right affine eval, so a floor
-flip between the two vertex pipelines would surface here), a crafted
-embeddings corpus pinning the zero-beta template mesh and the s=0
-all-degenerate empty-mask path on both engines, and the three-axis
-invariance contract (exact integer rasterization; the one division is an
-IEEE op on <2^53 int64 operands)."""
+Oracle differential (tests/test_queries_oracle.py), the affine-eval ≡
+full-LBS-decode identity at the probe pose, an independent numpy recompute
+through the module composition path (decode → view_transform →
+screen_transform → quantize → rasterize — a different code path than the
+query's left-to-right affine eval, so a floor flip between the two vertex
+pipelines would surface here), a crafted embeddings corpus pinning the
+zero-beta template mesh and the s=0 all-degenerate empty-mask path on both
+engines, and the three-axis invariance contract
+(tests/test_split_invariance.py; exact integer rasterization; the one
+division is an IEEE op on <2^53 int64 operands)."""
 
 from __future__ import annotations
 
@@ -20,15 +21,6 @@ from talkinghead_datapipeline_spark.queries.inference_nodes import (
     N17_RENDER_MASK_ORACLE,
     n17_render_mask_zbuffer,
 )
-from tests.oracle_harness import run_compare
-
-
-def test_staged_oracle_matches(spark, sf_dir):
-    res = run_compare(
-        spark, sf_dir, "n17_render_mask_zbuffer", n17_render_mask_zbuffer,
-        N17_RENDER_MASK_ORACLE,
-    )
-    assert res.ok, res.mismatches
 
 
 def test_affine_matches_decode_at_probe_pose():
@@ -139,17 +131,3 @@ def test_crafted_corpus_template_and_degenerate(spark, tmp_path):
                 assert np.isnan(o[col])
             else:
                 assert row[col] == int(o[col])
-
-
-def test_split_invariance_bit_exact(spark, sf_dir, tmp_path):
-    from tests.oracle_harness import assert_split_invariance
-
-    assert_split_invariance(
-        spark, sf_dir, tmp_path, n17_render_mask_zbuffer, "embeddings"
-    )
-
-
-def test_conf_axis_invariance_bit_exact(spark, sf_dir):
-    from tests.oracle_harness import assert_conf_axis_invariance
-
-    assert_conf_axis_invariance(spark, sf_dir, n17_render_mask_zbuffer)

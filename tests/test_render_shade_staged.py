@@ -1,12 +1,13 @@
 """N17 shaded-channel query n17_render_shaded_checksum (STAGED for r14).
 
-Oracle differential, a hypothesis fuzz of the pinned-order normalize + SH
-gray chain against DuckDB evaluating the identical expression text on
-random integer normals and barycentric weights (the cross-engine-exactness
-core of this tier), the quantized-normal ≡ float-normal identity (the int
-accumulation is exact float arithmetic too, so the two paths agree to
-ulps), a crafted corpus pinning the s=0 all-degenerate empty-coverage path
-on both engines, and the three-axis invariance contract.
+Oracle differential (tests/test_queries_oracle.py), a hypothesis fuzz of
+the pinned-order normalize + SH gray chain against DuckDB evaluating the
+identical expression text on random integer normals and barycentric
+weights (the cross-engine-exactness core of this tier), the
+quantized-normal ≡ float-normal identity (the int accumulation is exact
+float arithmetic too, so the two paths agree to ulps), a crafted corpus
+pinning the s=0 all-degenerate empty-coverage path on both engines, and
+the three-axis invariance contract (tests/test_split_invariance.py).
 """
 
 from __future__ import annotations
@@ -18,15 +19,6 @@ from talkinghead_datapipeline_spark.queries.inference_nodes import (
     N17_RENDER_SHADE_ORACLE,
     n17_render_shaded_checksum,
 )
-from tests.oracle_harness import run_compare
-
-
-def test_staged_oracle_matches(spark, sf_dir):
-    res = run_compare(
-        spark, sf_dir, "n17_render_shaded_checksum", n17_render_shaded_checksum,
-        N17_RENDER_SHADE_ORACLE,
-    )
-    assert res.ok, res.mismatches
 
 
 def test_sh_chain_matches_duckdb_fuzz():
@@ -213,17 +205,3 @@ def test_shade_close_to_float_normal_semantics(spark, sf_dir):
         assert abs(got_mean - float_mean) < 2e-3, (vec_id, got_mean, float_mean)
         checked += 1
     assert checked >= 10
-
-
-def test_split_invariance_bit_exact(spark, sf_dir, tmp_path):
-    from tests.oracle_harness import assert_split_invariance
-
-    assert_split_invariance(
-        spark, sf_dir, tmp_path, n17_render_shaded_checksum, "embeddings"
-    )
-
-
-def test_conf_axis_invariance_bit_exact(spark, sf_dir):
-    from tests.oracle_harness import assert_conf_axis_invariance
-
-    assert_conf_axis_invariance(spark, sf_dir, n17_render_shaded_checksum)

@@ -1,12 +1,13 @@
 """N17 texture-channel query n17_render_texture_checksum (STAGED for r14).
 
-Oracle differential, the inline-chain ≡ grid_sample_bilinear operator
-identity (the query's pinned 4-tap accumulation must be bit-identical to
-the real operator function on random grids — connecting the certified
-statistic to the production code path), the per-channel-chain ≡
-sh_irradiance closeness, a crafted corpus pinning the s=0 empty-coverage
-path and an out-of-range uv zero-padding case on both engines, and the
-three-axis invariance contract.
+Oracle differential (tests/test_queries_oracle.py), the inline-chain ≡
+grid_sample_bilinear operator identity (the query's pinned 4-tap
+accumulation must be bit-identical to the real operator function on random
+grids — connecting the certified statistic to the production code path),
+the per-channel-chain ≡ sh_irradiance closeness, a crafted corpus pinning
+the s=0 empty-coverage path and an out-of-range uv zero-padding case on
+both engines, and the three-axis invariance contract
+(tests/test_split_invariance.py).
 """
 
 from __future__ import annotations
@@ -18,15 +19,6 @@ from talkinghead_datapipeline_spark.queries.inference_nodes import (
     N17_RENDER_TEXTURE_ORACLE,
     n17_render_texture_checksum,
 )
-from tests.oracle_harness import run_compare
-
-
-def test_staged_oracle_matches(spark, sf_dir):
-    res = run_compare(
-        spark, sf_dir, "n17_render_texture_checksum",
-        n17_render_texture_checksum, N17_RENDER_TEXTURE_ORACLE,
-    )
-    assert res.ok, res.mismatches
 
 
 def test_inline_chain_matches_grid_sample_operator():
@@ -137,17 +129,3 @@ def test_assets_match_shape_renderer_recipe():
     expect[:, 1] = -expect[:, 1]
     assert np.array_equal(a["uv_ndc"], expect)
     assert np.array_equal(a["albedo"], r.albedo)
-
-
-def test_split_invariance_bit_exact(spark, sf_dir, tmp_path):
-    from tests.oracle_harness import assert_split_invariance
-
-    assert_split_invariance(
-        spark, sf_dir, tmp_path, n17_render_texture_checksum, "embeddings"
-    )
-
-
-def test_conf_axis_invariance_bit_exact(spark, sf_dir):
-    from tests.oracle_harness import assert_conf_axis_invariance
-
-    assert_conf_axis_invariance(spark, sf_dir, n17_render_texture_checksum)

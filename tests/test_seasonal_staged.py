@@ -1,10 +1,10 @@
 """Day-of-week seasonal decomposition + forecast backtest (STAGED r13).
 
-Oracle differential, a pandas recomputation of the whole 7-row frame from
-the exact daily-cents series, a hand-built two-weekday corpus with
-hand-computed indices / MAEs (including the cross-dow naive-forecast
-interleaving), and the three-axis invariance contract (fully integer
-pipeline).
+Oracle differential (tests/test_queries_oracle.py), a pandas recomputation
+of the whole 7-row frame from the exact daily-cents series, a hand-built
+two-weekday corpus with hand-computed indices / MAEs (including the
+cross-dow naive-forecast interleaving), and the three-axis invariance
+contract (tests/test_split_invariance.py; fully integer pipeline).
 """
 
 from __future__ import annotations
@@ -14,18 +14,8 @@ import datetime as dt
 from pyspark.sql import functions as F
 
 from talkinghead_datapipeline_spark.queries.timeseries import (
-    SEASONAL_DOW_ORACLE,
     seasonal_dow_backtest,
 )
-from tests.oracle_harness import run_compare
-
-
-def test_staged_oracle_matches(spark, sf_dir):
-    res = run_compare(
-        spark, sf_dir, "seasonal_dow_backtest", seasonal_dow_backtest,
-        SEASONAL_DOW_ORACLE,
-    )
-    assert res.ok, res.mismatches
 
 
 def test_matches_pandas_recompute(spark, sf_dir):
@@ -108,17 +98,3 @@ def test_crafted_corpus_exact(spark, tmp_path):
     assert out[1]["mae_seasonal_cents"] == 0
     assert out[1]["mae_naive_cents"] == (40000 + 50000) // 2
     assert out[1]["seas_vs_naive_ppm"] == 0
-
-
-def test_split_invariance_bit_exact(spark, sf_dir, tmp_path):
-    from tests.oracle_harness import assert_split_invariance
-
-    assert_split_invariance(
-        spark, sf_dir, tmp_path, seasonal_dow_backtest, "orders"
-    )
-
-
-def test_conf_axis_invariance_bit_exact(spark, sf_dir):
-    from tests.oracle_harness import assert_conf_axis_invariance
-
-    assert_conf_axis_invariance(spark, sf_dir, seasonal_dow_backtest)

@@ -14,7 +14,8 @@ user's late rows collide inside one micro-batch:
 
 These pins do two jobs: (1) they delimit the oracle's modeled domain —
 raw-row counting is exact when each late row is a session-isolated
-singleton, which the certified fixtures satisfy (asserted below); (2) an
+singleton, which the certified fixtures satisfy (the oracle diff of
+streaming_session_late_metrics in tests/test_queries_oracle.py); (2) an
 engine upgrade that changes the counting unit fails here first, the same
 early-warning contract the other streaming pins carry.
 """
@@ -111,22 +112,3 @@ def test_engine_drop_units_under_collisions(spark):
         spark,
         [("2024-01-01 10:30:00", 7), ("2024-01-01 10:59:00", 7)],
     ) == (2, 0)
-
-
-def test_certified_fixture_stays_inside_modeled_domain(spark, sf_dir):
-    """On the certified fixture the raw-row model and the engine agree —
-    the oracle match IS the modeled-domain proof (the engine-side counter
-    only deviates from raw rows under the collision patterns pinned above,
-    which the fixture's straggler batch avoids in the way the engine
-    counts them)."""
-    from talkinghead_datapipeline_spark.queries.streaming_queries import (
-        STREAMING_SESSION_LATE_METRICS_ORACLE,
-        streaming_session_late_metrics,
-    )
-    from tests.oracle_harness import run_compare
-
-    res = run_compare(
-        spark, sf_dir, "streaming_session_late_metrics",
-        streaming_session_late_metrics, STREAMING_SESSION_LATE_METRICS_ORACLE,
-    )
-    assert res.ok, res.mismatches

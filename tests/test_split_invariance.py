@@ -11,7 +11,12 @@ asserting a representative query per operator family returns the
 IDENTICAL frame (values after the convention rounding, not just rows).
 
 A failure here means a query's output depends on partial-agg order —
-driver-green today on one file, red on the real cluster layout."""
+driver-green today on one file, red on the real cluster layout.
+
+The representative sweeps are the heavy tier. The per-query tables below
+(``_SPLIT_CASES``, ``_CONF_CASES``) run by default: each re-lays out one
+input table, or re-runs under a second shuffle-partition count and the
+other AQE setting, and needs the frame bit-for-bit."""
 
 from __future__ import annotations
 
@@ -19,11 +24,69 @@ import pytest
 
 from talkinghead_datapipeline_spark.catalog import TPCH_TABLES, load_table
 from talkinghead_datapipeline_spark.queries import all_queries
-
-# Heavy tier: skipped unless SPARK_GRAFT_SLOW=1 (see conftest; VERDICT r14 #3)
-pytestmark = pytest.mark.slow
+from tests.oracle_harness import (
+    _canon_frame,
+    assert_conf_axis_invariance,
+    assert_split_invariance,
+)
 
 _SPECS = all_queries()
+
+# (query, the one input table that is re-laid out as 4 files)
+_SPLIT_CASES = (
+    ("acf_ljung_box_daily", "orders"),
+    ("attribution_first_last_touch", "events"),
+    ("auc_mann_whitney_lang", "documents"),
+    ("gini_revenue_concentration", "orders"),
+    ("bh_fdr_lang_source", "documents"),
+    ("changepoint_daily_revenue", "orders"),
+    ("conformal_coverage_lang", "documents"),
+    ("cuped_adjusted_lift", "events"),
+    ("dbscan_grid_roles", "embeddings"),
+    ("isotonic_calibration_lang", "documents"),
+    ("k_anonymity_audit", "documents"),
+    ("kfold_linreg_cv", "documents"),
+    ("kaplan_meier_survival", "events"),
+    ("ks_two_sample_chars", "documents"),
+    ("mann_kendall_daily_trend", "orders"),
+    ("theil_sen_daily_slope", "orders"),
+    ("pca_power_doc_features", "documents"),
+    ("reliability_bins_lang", "documents"),
+    ("n17_render_mask_zbuffer", "embeddings"),
+    ("n17_render_shaded_checksum", "embeddings"),
+    ("n17_render_texture_checksum", "embeddings"),
+    ("seasonal_dow_backtest", "orders"),
+    ("nelson_aalen_conversion_hazard", "events"),
+)
+
+_CONF_CASES = (
+    "acf_ljung_box_daily",
+    "attribution_first_last_touch",
+    "auc_mann_whitney_lang",
+    "basket_association_rules",
+    "gini_revenue_concentration",
+    "bh_fdr_lang_source",
+    "changepoint_daily_revenue",
+    "conformal_coverage_lang",
+    "cuped_adjusted_lift",
+    "dbscan_grid_roles",
+    "isotonic_calibration_lang",
+    "k_anonymity_audit",
+    "kfold_linreg_cv",
+    "kaplan_meier_survival",
+    "ks_two_sample_chars",
+    "logrank_segment_survival",
+    pytest.param("mann_kendall_daily_trend", marks=pytest.mark.slow),
+    pytest.param("theil_sen_daily_slope", marks=pytest.mark.slow),
+    "pca_power_doc_features",
+    "reliability_bins_lang",
+    "n17_render_mask_zbuffer",
+    "n17_render_shaded_checksum",
+    "n17_render_texture_checksum",
+    "seasonal_dow_backtest",
+    "nelson_aalen_conversion_hazard",
+    "triangle_count_brand_graph",
+)
 
 # One representative per family, leaning on the shapes most exposed to
 # accumulation order: float aggregation, window + rolling stats, dedup
@@ -107,6 +170,16 @@ _REPRESENTATIVES = (
 )
 
 
+@pytest.mark.parametrize("name, table", _SPLIT_CASES)
+def test_query_split_invariance(spark, sf_dir, tmp_path, name, table):
+    assert_split_invariance(spark, sf_dir, tmp_path, _SPECS[name].spark, table)
+
+
+@pytest.mark.parametrize("name", _CONF_CASES)
+def test_query_conf_axis_invariance(spark, sf_dir, name):
+    assert_conf_axis_invariance(spark, sf_dir, _SPECS[name].spark)
+
+
 @pytest.fixture(scope="module")
 def split_sf_dir(spark, sf_dir, tmp_path_factory):
     out = tmp_path_factory.mktemp("sf_split")
@@ -118,19 +191,25 @@ def split_sf_dir(spark, sf_dir, tmp_path_factory):
     return str(out)
 
 
+@pytest.mark.slow  # heavy tier (see conftest)
 @pytest.mark.parametrize("name", _REPRESENTATIVES)
 def test_result_is_invariant_to_input_splits(spark, sf_dir, split_sf_dir, name):
-    base = _SPECS[name].spark(spark, sf_dir).toPandas()
-    split = _SPECS[name].spark(spark, split_sf_dir).toPandas()
-    cols = sorted(base.columns)
-    base = base[cols].sort_values(cols).reset_index(drop=True)
-    split = split[cols].sort_values(cols).reset_index(drop=True)
+    base = _canon_frame(_SPECS[name].spark(spark, sf_dir).toPandas())
+    split = _canon_frame(_SPECS[name].spark(spark, split_sf_dir).toPandas())
     assert base.equals(split), (
         f"{name}: output depends on input file layout\n"
         f"single-file rows={len(base)} 4-split rows={len(split)}"
     )
 
 
+def _run_representatives(spark, sf_dir):
+    return {
+        name: _canon_frame(_SPECS[name].spark(spark, sf_dir).toPandas())
+        for name in _REPRESENTATIVES
+    }
+
+
+@pytest.mark.slow  # heavy tier (see conftest)
 def test_result_is_invariant_to_shuffle_partition_count(spark, sf_dir):
     """The partner axis: AQE re-plans shuffle partition counts at runtime,
     so partial-aggregate MERGE order varies run to run on a cluster even
@@ -138,25 +217,18 @@ def test_result_is_invariant_to_shuffle_partition_count(spark, sf_dir):
     spark.sql.shuffle.partitions=7 (vs the session's core-count default)
     must reproduce every frame exactly. Restores the conf even on failure
     — a leaked setting would skew every later test in the shared session."""
-    def run_all():
-        out = {}
-        for name in _REPRESENTATIVES:
-            pdf = _SPECS[name].spark(spark, sf_dir).toPandas()
-            cols = sorted(pdf.columns)
-            out[name] = pdf[cols].sort_values(cols).reset_index(drop=True)
-        return out
-
     default = spark.conf.get("spark.sql.shuffle.partitions")
-    base = run_all()
+    base = _run_representatives(spark, sf_dir)
     spark.conf.set("spark.sql.shuffle.partitions", "7")
     try:
-        alt = run_all()
+        alt = _run_representatives(spark, sf_dir)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", default)
     diverged = [n for n in _REPRESENTATIVES if not base[n].equals(alt[n])]
     assert not diverged, f"shuffle-count-dependent results: {diverged}"
 
 
+@pytest.mark.slow  # heavy tier (see conftest)
 def test_result_is_invariant_to_aqe_toggle(spark, sf_dir):
     """Third axis (round 8): AQE itself — runtime coalescing, skew-join
     splitting, and broadcast demotion all change partial-merge order and
@@ -164,20 +236,12 @@ def test_result_is_invariant_to_aqe_toggle(spark, sf_dir):
     run. Toggling spark.sql.adaptive.enabled must reproduce every
     representative frame exactly (probed clean over the full pinned set
     before pinning). Restores the conf even on failure."""
-    def run_all():
-        out = {}
-        for name in _REPRESENTATIVES:
-            pdf = _SPECS[name].spark(spark, sf_dir).toPandas()
-            cols = sorted(pdf.columns)
-            out[name] = pdf[cols].sort_values(cols).reset_index(drop=True)
-        return out
-
     default = spark.conf.get("spark.sql.adaptive.enabled")
     flipped = "false" if default == "true" else "true"
-    base = run_all()
+    base = _run_representatives(spark, sf_dir)
     spark.conf.set("spark.sql.adaptive.enabled", flipped)
     try:
-        alt = run_all()
+        alt = _run_representatives(spark, sf_dir)
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", default)
     diverged = [n for n in _REPRESENTATIVES if not base[n].equals(alt[n])]

@@ -16,15 +16,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from talkinghead_datapipeline_spark.queries.streaming_queries import (
-    STREAMING_SESSION_LATE_METRICS_ORACLE,
-    STREAMING_SESSION_LATE_SINK_ORACLE,
     streaming_session_late_metrics,
     streaming_session_late_sink,
 )
 from talkinghead_datapipeline_spark.streaming.incremental import (
     run_available_now_with_metrics,
 )
-from tests.oracle_harness import run_compare
 
 # Heavy tier: skipped unless SPARK_GRAFT_SLOW=1 (see conftest; VERDICT r14 #3)
 pytestmark = pytest.mark.slow
@@ -154,29 +151,7 @@ def test_contract4_overlap_reemission_after_eviction(spark):
     assert sink == [("10:00", "10:30", 1), ("10:20", "10:50", 1)]
 
 
-# --- oracle + invariance over the real fixture ------------------------------
-
-
-def test_staged_metrics_oracle_matches(spark, sf_dir):
-    res = run_compare(
-        spark,
-        sf_dir,
-        "streaming_session_late_metrics",
-        streaming_session_late_metrics,
-        STREAMING_SESSION_LATE_METRICS_ORACLE,
-    )
-    assert res.ok, res.mismatches
-
-
-def test_staged_sink_oracle_matches(spark, sf_dir):
-    res = run_compare(
-        spark,
-        sf_dir,
-        "streaming_session_late_sink",
-        streaming_session_late_sink,
-        STREAMING_SESSION_LATE_SINK_ORACLE,
-    )
-    assert res.ok, res.mismatches
+# --- the real fixture: late drops happen, layout invariance ----------------
 
 
 def test_fixture_exercises_real_drops(spark, sf_dir):
@@ -196,18 +171,14 @@ def test_split_invariance(spark, sf_dir, tmp_path):
     and the landing-dir staging coalesces per batch, so neither the
     metrics nor the emitted session set may move."""
     from talkinghead_datapipeline_spark.catalog import load_table
+    from tests.oracle_harness import _canon_frame
 
     load_table(spark, sf_dir, "events").repartition(4).write.parquet(
         str(tmp_path / "events.parquet")
     )
-    canon = lambda pdf: (
-        pdf[sorted(pdf.columns)]
-        .sort_values(sorted(pdf.columns))
-        .reset_index(drop=True)
-    )
     for fn in (streaming_session_late_metrics, streaming_session_late_sink):
-        base = canon(fn(spark, sf_dir).toPandas())
-        split = canon(fn(spark, str(tmp_path)).toPandas())
+        base = _canon_frame(fn(spark, sf_dir).toPandas())
+        split = _canon_frame(fn(spark, str(tmp_path)).toPandas())
         assert base.equals(split), fn.__name__
 
 

@@ -1,31 +1,18 @@
 """Nelson-Aalen time-to-purchase hazard (STAGED for r11).
 
-Oracle differential plus the pins that make the risk-set estimator
-trustworthy beyond "two engines agree": a brute-force recomputation of
-every risk set from the raw per-user data, a synthetic censoring case
-(a user who never purchases must appear in risk sets up to their
-observed time but never as an event), and the three invariance axes
-bit-exact.
+Oracle differential (tests/test_queries_oracle.py) plus the pins that make
+the risk-set estimator trustworthy beyond "two engines agree": a
+brute-force recomputation of every risk set from the raw per-user data, a
+synthetic censoring case (a user who never purchases must appear in risk
+sets up to their observed time but never as an event), and the three
+invariance axes bit-exact (tests/test_split_invariance.py).
 """
 
 from __future__ import annotations
 
 from talkinghead_datapipeline_spark.queries.behavior import (
-    NELSON_AALEN_ORACLE,
     nelson_aalen_conversion_hazard,
 )
-from tests.oracle_harness import run_compare
-
-
-def test_staged_oracle_matches(spark, sf_dir):
-    res = run_compare(
-        spark,
-        sf_dir,
-        "nelson_aalen_conversion_hazard",
-        nelson_aalen_conversion_hazard,
-        NELSON_AALEN_ORACLE,
-    )
-    assert res.ok, res.mismatches
 
 
 def test_matches_bruteforce_risk_sets(spark, sf_dir):
@@ -95,17 +82,3 @@ def test_censored_user_in_risk_set_not_events(spark, tmp_path):
     assert out[1].hazard_ppm == 333_333
     assert out[3].hazard_ppm == 1_000_000
     assert out[3].cum_hazard_ppm == 1_333_333
-
-
-def test_split_invariance_bit_exact(spark, sf_dir, tmp_path):
-    from tests.oracle_harness import assert_split_invariance
-
-    assert_split_invariance(spark, sf_dir, tmp_path, nelson_aalen_conversion_hazard, "events")
-
-
-def test_conf_axis_invariance_bit_exact(spark, sf_dir):
-    """Shuffle-partition and AQE axes via the shared three-axis helper —
-    partial-merge order cannot move an exact-integer pipeline."""
-    from tests.oracle_harness import assert_conf_axis_invariance
-
-    assert_conf_axis_invariance(spark, sf_dir, nelson_aalen_conversion_hazard)

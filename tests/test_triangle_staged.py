@@ -1,10 +1,12 @@
 """Triangle count / clustering coefficient (STAGED for r14).
 
-Oracle differential, an independent Python recompute (sets + explicit
-triple loop — no join machinery), a crafted corpus with a hand-countable
-topology (one triangle + one pendant edge) pinning the a<b<c single-count
-rule and the wedge formula on both engines, the zero-wedge NULL guard,
-and the three-axis invariance contract (exact integers end-to-end).
+Oracle differential (tests/test_queries_oracle.py), an independent Python
+recompute (sets + explicit triple loop — no join machinery), a crafted
+corpus with a hand-countable topology (one triangle + one pendant edge)
+pinning the a<b<c single-count rule and the wedge formula on both engines,
+the zero-wedge NULL guard, and the three-axis invariance contract (the
+split axis here, the conf axes in tests/test_split_invariance.py; exact
+integers end-to-end).
 """
 
 from __future__ import annotations
@@ -15,15 +17,6 @@ from talkinghead_datapipeline_spark.queries.graph import (
     TRIANGLE_ORACLE,
     triangle_count_brand_graph,
 )
-from tests.oracle_harness import run_compare
-
-
-def test_staged_oracle_matches(spark, sf_dir):
-    res = run_compare(
-        spark, sf_dir, "triangle_count_brand_graph",
-        triangle_count_brand_graph, TRIANGLE_ORACLE,
-    )
-    assert res.ok, res.mismatches
 
 
 def test_matches_independent_python_recompute(spark, sf_dir):
@@ -146,9 +139,3 @@ def test_split_invariance_bit_exact(spark, sf_dir, tmp_path):
     assert_split_invariance(
         spark, sf_dir, tmp_path, triangle_count_brand_graph, "lineitem"
     )
-
-
-def test_conf_axis_invariance_bit_exact(spark, sf_dir):
-    from tests.oracle_harness import assert_conf_axis_invariance
-
-    assert_conf_axis_invariance(spark, sf_dir, triangle_count_brand_graph)

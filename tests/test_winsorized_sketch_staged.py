@@ -7,21 +7,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from talkinghead_datapipeline_spark.queries.dataprep import (
-    WINSORIZED_SKETCH_ORACLE,
     winsorized_bounds_sketch_certified,
 )
-from tests.oracle_harness import run_compare
-
-
-def test_staged_oracle_matches(spark, sf_dir):
-    res = run_compare(
-        spark,
-        sf_dir,
-        "winsorized_bounds_sketch_certified",
-        winsorized_bounds_sketch_certified,
-        WINSORIZED_SKETCH_ORACLE,
-    )
-    assert res.ok, res.mismatches
 
 
 def test_contract_check_can_fail(spark, sf_dir):

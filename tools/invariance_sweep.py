@@ -35,11 +35,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from talkinghead_datapipeline_spark.catalog import TPCH_TABLES, load_table
 from talkinghead_datapipeline_spark.queries import all_queries
 from talkinghead_datapipeline_spark.session import get_spark
-
-
-def canon(pdf):
-    cols = sorted(pdf.columns)
-    return pdf[cols].sort_values(cols).reset_index(drop=True)
+from tests.oracle_harness import _canon_frame as canon
 
 
 def main() -> None:
