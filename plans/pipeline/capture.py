@@ -1,6 +1,6 @@
-"""Capture the normalized analyzed plans of the pipeline graphs.
+"""Capture the normalized analyzed plans of the pipeline graphs or the registry.
 
-Usage: python plans/pipeline/capture.py REPO_DIR OUT_DIR SF_DIR
+Usage: python plans/pipeline/capture.py REPO_DIR OUT_DIR SF_DIR [--registry]
 
 Builds, in one fresh Spark session and without running a job:
 
@@ -9,15 +9,23 @@ Builds, in one fresh Spark session and without running a job:
 - the tables of the built-in graph of ``test_pipeline_end_to_end`` over the
   tables in SF_DIR;
 
-and writes each table's analyzed plan with expression IDs stripped (the
-``plans/r15`` method), the scratch directory replaced by ``<work>``, and
-the session-wide counters of ``catalog.pushdown_barrier`` masked: the
-``<n>`` of its ``_pdbar_<tag>_<n>`` metrics and the DataFrame id that ends
-a ``CollectMetrics`` line. Lambda variables named from the session-wide
-counter (``lambda x_7#``) are renumbered by order of first appearance in
-each plan (``lambda x_<1>#``), so they stay distinct within a plan but do
-not depend on what the session built before. One file per table. Two
-checkouts build byte-equal plans when ``diff -r`` of their OUT_DIRs is
+or, with ``--registry``, every registered query over the tables in SF_DIR,
+in registry order (a query whose builder iterates on the driver runs those
+jobs). One file per table or query. Each holds its analyzed plan with the
+scratch directory replaced by ``<work>`` and every session-dependent name
+masked:
+
+- lambda variables are renumbered by the first appearance of their
+  expression id (``lambda x_7#12`` and ``lambda x#40`` both become
+  ``lambda <k>#``), so a Column-API lambda (named from a session-wide
+  counter) and the same lambda parsed from SQL text (named ``x``/``acc``)
+  print alike;
+- expression IDs are stripped (the ``plans/r15`` method);
+- the session-wide counters of ``catalog.pushdown_barrier`` are masked:
+  the ``<n>`` of its ``_pdbar_<tag>_<n>`` metrics and the DataFrame id that
+  ends a ``CollectMetrics`` line.
+
+Two checkouts build byte-equal plans when ``diff -r`` of their OUT_DIRs is
 empty.
 """
 
@@ -48,25 +56,20 @@ def builtin_graph(sf_dir: str, work: str) -> list[dict]:
 
 def normalize(plan: str, work: str) -> str:
     """The analyzed plan ``plan`` with every session-dependent name masked."""
-    plan = re.sub(r"#\d+L?", "#", plan.replace(work, "<work>"))
-    plan = re.sub(r"(_pdbar_\w+)_\d+\b", r"\1_<n>", plan)
-    plan = re.sub(r"(CollectMetrics .*), \d+$", r"\1, <id>", plan, flags=re.M)
     seen: dict[str, int] = {}
 
     def renumber(m: re.Match) -> str:
-        k = seen.setdefault(m.group(0), len(seen) + 1)
-        return f"lambda {m.group(1)}_<{k}>#"
+        return f"lambda <{seen.setdefault(m.group(1), len(seen) + 1)}>#"
 
-    return re.sub(r"lambda (\w+?)_\d+#", renumber, plan)
+    plan = re.sub(r"lambda \w+#(\d+)", renumber, plan.replace(work, "<work>"))
+    plan = re.sub(r"#\d+L?", "#", plan)
+    plan = re.sub(r"(_pdbar_\w+)_\d+\b", r"\1_<n>", plan)
+    return re.sub(r"(CollectMetrics .*), \d+$", r"\1, <id>", plan, flags=re.M)
 
 
-def main(repo: str, out: str, sf_dir: str) -> None:
+def main(repo: str, out: str, sf_dir: str, registry: bool = False) -> None:
     sys.path[:0] = [repo, os.path.join(repo, "perfbench")]
-    from talkinghead_datapipeline_spark import run as run_mod
-    from talkinghead_datapipeline_spark.plans import graph as graph_mod
-    from talkinghead_datapipeline_spark.plans import reference_compat
     from talkinghead_datapipeline_spark.session import get_spark
-    from workloads import make_clips
 
     os.makedirs(out, exist_ok=True)
     work = tempfile.mkdtemp(prefix="plan-capture-")
@@ -81,6 +84,18 @@ def main(repo: str, out: str, sf_dir: str) -> None:
                 f.write(plan + "\n")
 
     try:
+        if registry:
+            from talkinghead_datapipeline_spark.queries import all_queries
+
+            for name, spec in all_queries().items():
+                write("registry", {name: spec.spark(spark, sf_dir)})
+            return
+
+        from talkinghead_datapipeline_spark import run as run_mod
+        from talkinghead_datapipeline_spark.plans import graph as graph_mod
+        from talkinghead_datapipeline_spark.plans import reference_compat
+        from workloads import make_clips
+
         clips = os.path.join(work, "clips")
         make_clips(clips, 0, 1, 2)
         bound = {"video": run_mod.bind_input(spark, "video", clips)}
@@ -99,4 +114,5 @@ def main(repo: str, out: str, sf_dir: str) -> None:
 
 
 if __name__ == "__main__":
-    main(*(os.path.abspath(a) for a in sys.argv[1:4]))
+    paths = [os.path.abspath(a) for a in sys.argv[1:4]]
+    main(*paths, registry="--registry" in sys.argv[4:])

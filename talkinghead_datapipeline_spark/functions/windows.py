@@ -32,11 +32,6 @@ def centered_frame_bounds(window: int) -> tuple[int, int]:
     return (-(window // 2), window - window // 2 - 1)
 
 
-# Back-compat alias used by query modules: the canonical reference frame is
-# the centered-neighbor one (N12's rolling extent).
-reference_frame_bounds = centered_frame_bounds
-
-
 @lru_cache(maxsize=None)
 def savgol_coefficients(window: int, order: int) -> tuple[float, ...]:
     """Savitzky–Golay smoothing coefficients (deriv=0) for an odd window.

@@ -14,10 +14,11 @@ designed for 100 TB:
   near-dup = small Hamming distance (bucket by fingerprint prefix at scale).
 - **n-gram Jaccard**: exact character-shingle similarity inside cheap blocks.
 
-Hashing is engine-portable by construction: ``int(hex(md5(x)[:8]))`` —
-identical in Spark (``conv``), DuckDB (``('0x'||…)::BIGINT``), or any engine
-with md5 — so the DuckDB oracle reproduces signatures bit-for-bit. Engine-
-native hash() functions are never used (they differ per engine/seed).
+Hashing is the engine-portable md5-prefix hash of ``functions/portable.py``
+(``int(hex(md5(x)[:8]))``), so the DuckDB oracle reproduces signatures
+bit-for-bit. The Column forms here are the executable spec that the
+``*_sql`` twins are pinned against (tests/test_minhash_sql_parity.py,
+tests/test_simhash_sql_parity.py).
 
 Permutation constants are fixed draws from numpy ``default_rng(42)``;
 ``a·h + b mod P`` stays under 2^63 because a,b < 10^6 and h < 2^32.
@@ -28,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from talkinghead_datapipeline_spark.functions.portable import md5_hash, md5_hash_expr
+
 # Fixed permutation parameters (numpy default_rng(42), materialized).
 MINHASH_A = (89251, 773955, 654571, 438878, 433015, 858597, 85946, 697367)
 MINHASH_B = (201469, 94177, 526478, 975621, 735751, 761138, 717476, 786063)
@@ -35,11 +38,6 @@ MINHASH_P = 4294967311  # smallest prime > 2^32
 N_PERM = len(MINHASH_A)
 BAND_WIDTH = 4  # 8 perms → 2 bands of 4: P(candidate) ≈ 1-(1-j^4)^2
 SIMHASH_BITS = 32
-
-
-def portable_hash32(col: Column) -> Column:
-    """First 8 hex chars of md5 as a bigint in [0, 2^32) — engine-portable."""
-    return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("bigint")
 
 
 def word_tokens(text: Column) -> Column:
@@ -85,7 +83,7 @@ def hashed_shingles(text: Column, n: int = 3) -> Column:
     shingle here, and both the signature fold and the exact-Jaccard verify
     reuse the same bigint array. Hash collisions merge identically in every
     engine (same md5 prefix), so Jaccard-over-hashes stays oracle-exact."""
-    return F.array_distinct(F.transform(word_shingles(text, n), portable_hash32))
+    return F.array_distinct(F.transform(word_shingles(text, n), lambda t: md5_hash(t, 8)))
 
 
 def minhash_sig_from_hashes(hashes: Column) -> Column:
@@ -113,9 +111,6 @@ def minhash_sig_from_hashes(hashes: Column) -> Column:
     return F.aggregate(hashes, init, merge)
 
 
-HASH32_SQL = "CAST(conv(substring(md5({x}), 1, 8), 16, 10) AS BIGINT)"
-
-
 def word_shingles_sql(text_sql: str = "text", n: int = 3) -> str:
     """SQL-string twin of :func:`word_shingles` — the IDENTICAL expression
     tree, parsed JVM-side in one py4j round-trip (guide §4; the simhash32
@@ -140,7 +135,7 @@ def hashed_shingles_sql(text_sql: str = "text", n: int = 3) -> str:
     :func:`word_shingles_sql`)."""
     return (
         f"array_distinct(transform({word_shingles_sql(text_sql, n)}, "
-        f"V_s -> {HASH32_SQL.format(x='V_s')}))"
+        f"V_s -> {md5_hash_expr('V_s', 8)}))"
     )
 
 
@@ -161,7 +156,7 @@ def minhash_sig_from_hashes_sql(hashes_sql: str) -> str:
 
 def minhash_sig_array(shingles: Column) -> Column:
     """MinHash signature from string shingles (hashes then folds)."""
-    return minhash_sig_from_hashes(F.transform(shingles, portable_hash32))
+    return minhash_sig_from_hashes(F.transform(shingles, lambda t: md5_hash(t, 8)))
 
 
 def band_key(band: int) -> Column:
@@ -197,7 +192,7 @@ def simhash32(text: Column) -> Column:
             ).otherwise(F.lit(0).cast("bigint"))
         return acc
 
-    return bind_once(F.transform(word_tokens(text), portable_hash32), build)
+    return bind_once(F.transform(word_tokens(text), lambda t: md5_hash(t, 8)), build)
 
 
 def simhash32_sql(text_sql: str = "text") -> str:
@@ -209,7 +204,7 @@ def simhash32_sql(text_sql: str = "text") -> str:
     :func:`simhash32` stays as the executable spec;
     tests/test_simhash_sql_parity.py pins the resolved trees equal modulo
     auto-generated lambda-variable names and the results bit-equal."""
-    h = "CAST(conv(substring(md5(t), 1, 8), 16, 10) AS BIGINT)"
+    h = md5_hash_expr("t", 8)
     votes = " + ".join(
         # aggregate(...) * 2, not 2 * aggregate(...): Column.__rmul__ swaps
         # the operands, and the twin must resolve to the IDENTICAL tree.

@@ -14,9 +14,9 @@ landmarks in numpy — over synthetic seeded bases (the licensed MPG weights
 file is the only thing stubbed; its npz drops in field-for-field).
 
 Media decode (image/audio/video) is NOT implemented here — the codec
-libraries are not in the runtime. ``decode_image``/``decode_audio`` raise
-NotImplementedError behind a feature gate; the surrounding Spark plumbing
-(binary columns + typed metadata structs) is real and tested.
+libraries are not in the runtime. ``fake_decode_image`` stands in for the
+image codec; the surrounding Spark plumbing (binary columns + typed
+metadata structs) is real and tested.
 """
 
 from __future__ import annotations
@@ -515,23 +515,6 @@ class ShapeRenderer:
             np.asarray(vertices)[None], np.asarray(trans_verts)[None], (channel,)
         )
         return batch[channel][0]
-
-
-# The md5-tiled stub shrank to this alias when the rasterizer tier became
-# real math — the registry vocabulary keeps the old name.
-RendererStub = ShapeRenderer
-
-
-# Media decode feature gates ------------------------------------------------
-
-def decode_image(data: bytes) -> np.ndarray:
-    """Decode an image binary column to HWC uint8 (S14 analog).
-
-    STUB: no codec library (PIL/cv2) in this runtime. The Spark-side
-    contract (BinaryType column in, array shape out) is exercised in tests
-    via ``fake_decode_image``.
-    """
-    raise NotImplementedError("image codecs not available in this runtime")
 
 
 def fake_decode_image(data: bytes, size_hw: tuple[int, int] = (8, 8)) -> np.ndarray:

@@ -18,8 +18,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from talkinghead_datapipeline_spark.catalog import load_table, persist_once
+from talkinghead_datapipeline_spark.functions.portable import cosine_sql, dot_expr
 from talkinghead_datapipeline_spark.queries import register
-from talkinghead_datapipeline_spark.queries.similarity import _dot, _dot_sql, _norm
 
 # ---------------------------------------------------------------------------
 # RFM segmentation — the classic customer-value grid: quintile each user's
@@ -234,7 +234,7 @@ def ab_test_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     saturates to 100% and zeroes the pooled variance); emits both
     cohorts' sizes, conversion rates, and the pooled z statistic. The
     deterministic-assignment A/B readout (a real system hashes a salt +
-    user id — `_salted_hash` in dataprep is that primitive).
+    user id — `functions.portable.md5_hash` is that primitive).
 
     Determinism: all inputs to the float math are exact BIGINT counts, so
     the z expression is a single-row computation both engines evaluate
@@ -294,10 +294,7 @@ _KNN_K = 5
 _KNN_ORACLE = f"""
     WITH pairs AS (
       SELECT a.label AS label, a.vec_id AS src, b.vec_id AS dst,
-             round({_dot_sql('a.embedding', 'b.embedding')}
-                   / (sqrt({_dot_sql('a.embedding', 'a.embedding')})
-                      * sqrt({_dot_sql('b.embedding', 'b.embedding')})), 6)
-               AS cos_sim
+             round({cosine_sql('a.embedding', 'b.embedding')}, 6) AS cos_sim
       FROM embeddings a JOIN embeddings b
         ON a.label = b.label AND a.vec_id < b.vec_id
     ),
@@ -343,7 +340,10 @@ def knn_mutual_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     k·|V| rows, not |V|²."""
     emb = load_table(spark, sf_dir, "embeddings")
     normed = emb.select(
-        "label", "vec_id", "embedding", _norm(F.col("embedding")).alias("nrm")
+        "label",
+        "vec_id",
+        "embedding",
+        F.expr(f"sqrt({dot_expr('embedding', 'embedding')})").alias("nrm"),
     )
     a = normed.select(
         "label",
@@ -373,9 +373,7 @@ def knn_mutual_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
             "label",
             "src",
             "dst",
-            F.round(
-                _dot(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb")), 6
-            ).alias("cos_sim"),
+            F.expr(f"round({dot_expr('ea', 'eb')} / (na * nb), 6)").alias("cos_sim"),
         )
     )
     both = pairs.unionAll(

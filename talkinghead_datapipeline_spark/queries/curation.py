@@ -26,9 +26,14 @@ from talkinghead_datapipeline_spark.catalog import (
     pushdown_barrier,
     rebalance_for_compute,
 )
-from talkinghead_datapipeline_spark.operators.dedup import portable_hash32
+from talkinghead_datapipeline_spark.functions.portable import (
+    cosine_expr,
+    cosine_sql,
+    dot_expr,
+    md5_hash,
+    md5_hash_sql,
+)
 from talkinghead_datapipeline_spark.queries import register
-from talkinghead_datapipeline_spark.queries.similarity import cosine
 
 
 # ---------------------------------------------------------------------------
@@ -41,19 +46,6 @@ from talkinghead_datapipeline_spark.queries.similarity import cosine
 
 _SEM_TAU = 0.2
 
-_DOT_SQL = (
-    "list_sum(list_transform(list_zip({a}, {b}),"
-    " p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))"
-)
-
-
-def _cos_sql(a: str, b: str) -> str:
-    return (
-        f"({_DOT_SQL.format(a=a, b=b)}"
-        f" / (sqrt({_DOT_SQL.format(a=a, b=a)})"
-        f" * sqrt({_DOT_SQL.format(a=b, b=b)})))"
-    )
-
 
 @register(
     "semdedup_prune_stats",
@@ -62,7 +54,7 @@ def _cos_sql(a: str, b: str) -> str:
       SELECT DISTINCT b.label AS label, b.vec_id AS vec_id
       FROM embeddings a JOIN embeddings b
         ON a.label = b.label AND a.vec_id < b.vec_id
-      WHERE {_cos_sql('a.embedding', 'b.embedding')} >= {_SEM_TAU}
+      WHERE {cosine_sql('a.embedding', 'b.embedding')} >= {_SEM_TAU}
     )
     SELECT e.label,
            CAST(count(*) AS BIGINT) AS n_vecs,
@@ -88,11 +80,9 @@ def semdedup_prune_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle keys the self-join on the cluster id, the pruned-id distinct
     folds band hits per vector, and the final rollup is a cluster-keyed
     agg. No driver-side collection at any size."""
-    from talkinghead_datapipeline_spark.queries.similarity import _dot, _norm
-
     emb = load_table(spark, sf_dir, "embeddings")
     # Norms are precomputed per VECTOR before the pair join: inline
-    # cosine(ea, eb) evaluates three 64-dim folds per PAIR (dot + both
+    # cosine_expr(ea, eb) evaluates three 64-dim folds per PAIR (dot + both
     # norms) where one suffices. Controlled A/B at sf0.1 (one session,
     # variants interleaved, median of 5): 1.89s inline -> 1.13s
     # precomputed (1.67x) — less than the naive 3x because the
@@ -100,7 +90,7 @@ def semdedup_prune_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (Fresh-session single runs scatter 1.2-1.5s; the interleaved A/B is
     # the attributable number.) The
     # per-pair dot still folds sequentially in DOUBLE and each norm is
-    # the same fold it always was, so the division reproduces cosine()
+    # the same fold it always was, so the division reproduces cosine_expr
     # bit-for-bit and the oracle (which inlines the norms per pair)
     # stays hash-identical.
     # pushdown_barrier: the cosine threshold's inferred isnotnull(nrm)
@@ -108,7 +98,10 @@ def semdedup_prune_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the 64-dim norm fold per row (catalog.pushdown_barrier docstring).
     normed = pushdown_barrier(
         emb.select(
-            "label", "vec_id", "embedding", _norm(F.col("embedding")).alias("nrm")
+            "label",
+            "vec_id",
+            "embedding",
+            F.expr(f"sqrt({dot_expr('embedding', 'embedding')})").alias("nrm"),
         ),
         "semdedup",
     )
@@ -128,10 +121,7 @@ def semdedup_prune_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         rebalance_for_compute(a, "label")
         .join(b, "label")
         .filter(F.col("id_a") < F.col("id_b"))
-        .filter(
-            F.try_divide(_dot(F.col("ea"), F.col("eb")), F.col("na") * F.col("nb"))
-            >= _SEM_TAU
-        )
+        .filter(F.expr(f"try_divide({dot_expr('ea', 'eb')}, na * nb) >= {_SEM_TAU}D"))
         .select("label", F.col("id_b").alias("vec_id"))
         .distinct()
         .withColumn("is_pruned", F.lit(1))
@@ -256,7 +246,7 @@ def rrf_hybrid_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _DSIR_B = 64
-_DSIR_HASH_SQL = f"(('0x' || substr(md5(tok), 1, 8))::BIGINT % {_DSIR_B})"
+_DSIR_HASH_SQL = f"({md5_hash_sql('tok', 8)} % {_DSIR_B})"
 
 
 @register(
@@ -326,7 +316,7 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.explode(F.split(F.lower("text"), r"\s+")).alias("tok"),
         )
         .select(
-            "doc_id", "lang", (portable_hash32(F.col("tok")) % _DSIR_B).alias("bucket")
+            "doc_id", "lang", (md5_hash(F.col("tok"), 8) % _DSIR_B).alias("bucket")
         )
     )
     raw_counts = feats.groupBy("bucket").agg(
@@ -618,7 +608,7 @@ _HARDNEG_K = 5
     ),
     scored AS (
       SELECT a.anchor_label, a.anchor_id, b.vec_id, b.label,
-             round({_cos_sql('a.avec', 'b.embedding')}, 6) AS cos_sim
+             round({cosine_sql('a.avec', 'b.embedding')}, 6) AS cos_sim
       FROM anchors a JOIN embeddings b ON b.label <> a.anchor_label
     ),
     ranked AS (
@@ -667,7 +657,7 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
             "anchor_id",
             "vec_id",
             "label",
-            F.round(cosine(F.col("avec"), F.col("embedding")), 6).alias("cos_sim"),
+            F.expr(f"round({cosine_expr('avec', 'embedding')}, 6)").alias("cos_sim"),
         )
     )
     w = W.partitionBy("anchor_label").orderBy(F.desc("cos_sim"), F.asc("vec_id"))
@@ -933,7 +923,7 @@ def llm_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.explode(F.split(F.lower("rtext"), r"\s+")).alias("tok"),
         )
         .select(
-            "doc_id", "lang", (portable_hash32(F.col("tok")) % _DSIR_B).alias("bucket")
+            "doc_id", "lang", (md5_hash(F.col("tok"), 8) % _DSIR_B).alias("bucket")
         )
     )
     raw_counts = feats.groupBy("bucket").agg(

@@ -29,36 +29,27 @@ from talkinghead_datapipeline_spark.catalog import (
     persist_once,
     rebalance_for_compute,
 )
-from talkinghead_datapipeline_spark.operators.dedup import portable_hash32
+from talkinghead_datapipeline_spark.functions.portable import md5_hash, md5_hash_sql
 from talkinghead_datapipeline_spark.operators.percentiles import (
     exact_percentiles_by_rank,
 )
 from talkinghead_datapipeline_spark.queries import register
-
-# Portable uniform hash: md5-prefix of a salted key, as bigint in [0, 2^32).
-_H32_SQL = "('0x' || substr(md5({x}), 1, 8))::BIGINT"
-
-
-def _salted_hash(salt: str, key: F.Column) -> F.Column:
-    return portable_hash32(F.concat(F.lit(salt), key.cast("string")))
-
-
-def _salted_hash_sql(salt: str, key: str) -> str:
-    return _H32_SQL.format(x=f"'{salt}' || CAST({key} AS VARCHAR)")
-
 
 # ---------------------------------------------------------------------------
 # Deterministic train/val/test split (80/10/10 by hash bucket)
 # ---------------------------------------------------------------------------
 
 
+_SPLIT_H_SQL = md5_hash_sql("'split|' || CAST(doc_id AS VARCHAR)", 8)
+
+
 @register(
     "split_train_val_test",
     oracle=f"""
     SELECT doc_id,
-           {_salted_hash_sql('split|', 'doc_id')} % 100 AS bucket,
-           CASE WHEN {_salted_hash_sql('split|', 'doc_id')} % 100 < 80 THEN 'train'
-                WHEN {_salted_hash_sql('split|', 'doc_id')} % 100 < 90 THEN 'val'
+           {_SPLIT_H_SQL} % 100 AS bucket,
+           CASE WHEN {_SPLIT_H_SQL} % 100 < 80 THEN 'train'
+                WHEN {_SPLIT_H_SQL} % 100 < 90 THEN 'val'
                 ELSE 'test' END AS split
     FROM documents
     """,
@@ -72,7 +63,8 @@ def split_train_val_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     a zero-shuffle pass, and the split column becomes a partition column
     on write so each split prunes to its own files."""
     docs = load_table(spark, sf_dir, "documents")
-    bucket = _salted_hash("split|", F.col("doc_id")) % 100
+    key = F.concat(F.lit("split|"), F.col("doc_id").cast("string"))
+    bucket = md5_hash(key, 8) % 100
     return docs.select(
         "doc_id",
         bucket.alias("bucket"),
@@ -87,17 +79,18 @@ def split_train_val_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Exact stratified sample: 10% per language, hash-ranked
 # ---------------------------------------------------------------------------
 
+_STRAT_H_SQL = md5_hash_sql("'strat|' || CAST(doc_id AS VARCHAR)", 8)
 _STRAT_ORACLE = f"""
     WITH ranked AS (
       SELECT doc_id, lang,
              row_number() OVER (
                PARTITION BY lang
-               ORDER BY {{h}}, doc_id) AS rn,
+               ORDER BY {_STRAT_H_SQL}, doc_id) AS rn,
              count(*) OVER (PARTITION BY lang) AS n_lang
       FROM documents
     )
     SELECT doc_id, lang FROM ranked WHERE rn <= ceil(0.1 * n_lang)
-""".format(h=_salted_hash_sql("strat|", "doc_id"))
+"""
 
 
 @register(
@@ -107,7 +100,7 @@ _STRAT_ORACLE = f"""
       SELECT doc_id, lang,
              row_number() OVER (
                PARTITION BY lang
-               ORDER BY {_salted_hash_sql('strat|', 'doc_id')}, doc_id) AS rn,
+               ORDER BY {_STRAT_H_SQL}, doc_id) AS rn,
              count(*) OVER (PARTITION BY lang) AS n_lang
       FROM documents
     )
@@ -124,9 +117,8 @@ def stratified_sample_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     the skew-free alternatives when exact per-stratum counts aren't
     required."""
     docs = load_table(spark, sf_dir, "documents")
-    w = W.partitionBy("lang").orderBy(
-        _salted_hash("strat|", F.col("doc_id")), "doc_id"
-    )
+    key = F.concat(F.lit("strat|"), F.col("doc_id").cast("string"))
+    w = W.partitionBy("lang").orderBy(md5_hash(key, 8), "doc_id")
     ranked = docs.select(
         "doc_id",
         "lang",
@@ -161,7 +153,7 @@ def stratified_sample_scale_path(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs,
         "lang",
         "doc_id",
-        _salted_hash("strat|", F.col("doc_id")),
+        md5_hash(F.concat(F.lit("strat|"), F.col("doc_id").cast("string")), 8),
         0.1,
     )
     return out.select("doc_id", "lang")
@@ -177,7 +169,7 @@ _BALANCE_ORACLE = f"""
       SELECT vec_id, label,
              row_number() OVER (
                PARTITION BY label
-               ORDER BY {_salted_hash_sql('bal|', 'vec_id')}, vec_id) AS rn
+               ORDER BY {md5_hash_sql("'bal|' || CAST(vec_id AS VARCHAR)", 8)}, vec_id) AS rn
       FROM embeddings
     ),
     cap AS (
@@ -205,7 +197,7 @@ def class_balanced_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.min("_n").alias("_cap"))
     )
     w = W.partitionBy("label").orderBy(
-        _salted_hash("bal|", F.col("vec_id")), "vec_id"
+        md5_hash(F.concat(F.lit("bal|"), F.col("vec_id").cast("string")), 8), "vec_id"
     )
     ranked = emb.select("vec_id", "label", F.row_number().over(w).alias("_rn"))
     return (
@@ -238,7 +230,7 @@ def class_balanced_scale_path(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb,
         "label",
         "vec_id",
-        _salted_hash("bal|", F.col("vec_id")),
+        md5_hash(F.concat(F.lit("bal|"), F.col("vec_id").cast("string")), 8),
         k_expr=F.min("_total").over(_W.partitionBy()),
     )
     return out.select("vec_id", "label")
@@ -254,7 +246,7 @@ def class_balanced_scale_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT doc_id, n_chars
     FROM documents
-    WHERE CAST({_salted_hash_sql('w|', 'doc_id')} AS DOUBLE) / 4294967296.0
+    WHERE CAST({md5_hash_sql("'w|' || CAST(doc_id AS VARCHAR)", 8)} AS DOUBLE) / 4294967296.0
           < CAST(n_chars AS DOUBLE)
             / (SELECT max(n_chars) FROM documents)
     """,
@@ -268,7 +260,8 @@ def weighted_sample_by_length(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side — the shape for importance-weighted corpus mixing at 100 TB."""
     docs = load_table(spark, sf_dir, "documents")
     mx = docs.agg(F.max("n_chars").alias("_mx"))
-    u = _salted_hash("w|", F.col("doc_id")).cast("double") / F.lit(4294967296.0)
+    h = md5_hash(F.concat(F.lit("w|"), F.col("doc_id").cast("string")), 8)
+    u = h.cast("double") / F.lit(4294967296.0)
     return (
         docs.join(F.broadcast(mx))
         .filter(u < F.col("n_chars").cast("double") / F.col("_mx").cast("double"))
@@ -283,7 +276,7 @@ def weighted_sample_by_length(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PACK_BUDGET = 512
 _N_SHARDS = 8
 
-_PACK_RANK_SQL = _salted_hash_sql("pack|", "doc_id")
+_PACK_RANK_SQL = md5_hash_sql("'pack|' || CAST(doc_id AS VARCHAR)", 8)
 
 
 @register(
@@ -319,7 +312,7 @@ def pack_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster, not the data). One shuffle total; the running sum shares the
     rank's sort."""
     docs = load_table(spark, sf_dir, "documents").filter(F.length("text") > 0)
-    rank = _salted_hash("pack|", F.col("doc_id"))
+    rank = md5_hash(F.concat(F.lit("pack|"), F.col("doc_id").cast("string")), 8)
     t = docs.select(
         "doc_id",
         "source",
@@ -437,7 +430,7 @@ _CK = {
 
 def _ck_concat_sql(cols: tuple[str, ...]) -> str:
     joined = " || '|' || ".join(f"CAST({c} AS VARCHAR)" for c in cols)
-    return f"('0x' || substr(md5({joined}), 1, 15))::BIGINT"
+    return md5_hash_sql(joined, 15)
 
 
 _CHECKSUM_ORACLE = "\nUNION ALL\n".join(
@@ -474,15 +467,7 @@ def table_integrity_checksums(spark: SparkSession, sf_dir: str) -> DataFrame:
         t = rebalance_for_compute(
             load_table(spark, sf_dir, tbl).select(*cols)
         )
-        h = F.conv(
-            F.substring(
-                F.md5(F.concat_ws("|", *[F.col(c).cast("string") for c in cols])),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("bigint")
+        h = md5_hash(F.concat_ws("|", *[F.col(c).cast("string") for c in cols]), 15)
         parts.append(
             t.agg(
                 F.lit(tbl).alias("tbl"),
@@ -547,12 +532,11 @@ def equi_depth_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "weighted_topk_sample_es",
-    oracle="""
+    oracle=f"""
     WITH keyed AS (
       SELECT doc_id, lang, n_chars,
-             ln((('0x' || substr(md5('es|' || CAST(doc_id AS VARCHAR)), 1, 8))
-                 ::BIGINT + 1.0) / 4294967297.0)
-               / n_chars AS es_key
+             ln(({md5_hash_sql("'es|' || CAST(doc_id AS VARCHAR)", 8)} + 1.0)
+                / 4294967297.0) / n_chars AS es_key
       FROM documents WHERE n_chars > 0
     )
     SELECT doc_id, lang, CAST(n_chars AS BIGINT) AS n_chars,
@@ -578,16 +562,8 @@ def weighted_topk_sample_es(spark: SparkSession, sf_dir: str) -> DataFrame:
     u makes the 'random' draw a pure function of doc_id, so both engines
     select the identical sample."""
     docs = load_table(spark, sf_dir, "documents").filter(F.col("n_chars") > 0)
-    u_plus = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("es|"), F.col("doc_id").cast("string"))), 1, 8
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        + 1.0
-    ) / 4294967297.0
+    key = F.concat(F.lit("es|"), F.col("doc_id").cast("string"))
+    u_plus = (md5_hash(key, 8) + 1.0) / 4294967297.0
     es_key = F.log(u_plus) / F.col("n_chars")
     return (
         docs.select(
@@ -617,8 +593,7 @@ _MIX_W_SQL = (
     + " ELSE 0.0 END"
 )
 _MIX_U_SQL = (
-    "(('0x' || substr(md5('mix|' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT"
-    " / 4294967296.0)"
+    "(" + md5_hash_sql("'mix|' || CAST(doc_id AS VARCHAR)", 8) + " / 4294967296.0)"
 )
 
 _MIX_ORACLE = f"""
@@ -674,16 +649,8 @@ def source_mixture_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     contributes everything it has (visible as selected < target in the
     manifest), the standard upsampling-free mixture semantics."""
     docs = load_table(spark, sf_dir, "documents").filter(F.length("text") > 0)
-    u = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("mix|"), F.col("doc_id").cast("string"))), 1, 8
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        / F.lit(4294967296.0)
-    )
+    key = F.concat(F.lit("mix|"), F.col("doc_id").cast("string"))
+    u = md5_hash(key, 8) / F.lit(4294967296.0)
     w = F.lit(0.0)
     for k, v in _MIX_WEIGHTS.items():
         w = F.when(F.col("lang") == k, F.lit(v)).otherwise(w)
@@ -981,14 +948,17 @@ def approx_quantiles_certified(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+_GSPLIT_H_SQL = md5_hash_sql("'gsplit|' || CAST(source AS VARCHAR)", 8)
+
+
 @register(
     "group_split_no_leakage",
     oracle=f"""
     WITH assigned AS (
       SELECT doc_id, source,
              CAST(len(string_split_regex(text, '\\s+')) AS BIGINT) AS n_tok,
-             CASE WHEN {_salted_hash_sql('gsplit|', 'source')} % 100 < 80 THEN 'train'
-                  WHEN {_salted_hash_sql('gsplit|', 'source')} % 100 < 90 THEN 'val'
+             CASE WHEN {_GSPLIT_H_SQL} % 100 < 80 THEN 'train'
+                  WHEN {_GSPLIT_H_SQL} % 100 < 90 THEN 'val'
                   ELSE 'test' END AS split
       FROM documents
     )
@@ -1020,7 +990,8 @@ def group_split_no_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     source-keyed distinct for the certification column. The split column
     partitions the write at 100 TB exactly like split_train_val_test."""
     docs = load_table(spark, sf_dir, "documents")
-    bucket = _salted_hash("gsplit|", F.col("source")) % 100
+    key = F.concat(F.lit("gsplit|"), F.col("source").cast("string"))
+    bucket = md5_hash(key, 8) % 100
     # persist_once: three consumers (total, leak count, main rollup) —
     # unpersisted each re-scans documents and recomputes the assignment.
     assigned = persist_once(

@@ -17,13 +17,18 @@ from talkinghead_datapipeline_spark.catalog import (
     pushdown_barrier,
     rebalance_for_compute,
 )
+from talkinghead_datapipeline_spark.functions.portable import (
+    cosine_expr,
+    cosine_sql,
+    dot_expr,
+    dot_sql,
+    md5_hash,
+    md5_hash_sql,
+)
 from talkinghead_datapipeline_spark.operators import dedup as D
 from talkinghead_datapipeline_spark.queries import register
-from talkinghead_datapipeline_spark.queries.similarity import cosine
 
 # Shared SQL fragments -------------------------------------------------------
-
-_HASH32_SQL = "('0x' || substr(md5({x}), 1, 8))::BIGINT"
 
 _SHINGLES_CTE = f"""
     toks AS (
@@ -35,7 +40,7 @@ _SHINGLES_CTE = f"""
              list_distinct(list_transform(
                list_distinct(list_transform(range(1, len(t) - 1),
                  i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])),
-               s -> {_HASH32_SQL.format(x='s')})) AS grams
+               s -> {md5_hash_sql('s', 8)})) AS grams
       FROM toks WHERE len(t) >= 3
     )
 """
@@ -280,7 +285,7 @@ _SIMHASH_ORACLE = f"""
     WITH h AS (
       SELECT doc_id,
              list_transform(string_split_regex(lower(text), '\\s+'),
-                            t -> {_HASH32_SQL.format(x='t')}) AS hashes
+                            t -> {md5_hash_sql('t', 8)}) AS hashes
       FROM documents WHERE length(text) > 0
     )
     SELECT doc_id, CAST({_SIMHASH_TERMS} AS BIGINT) AS simhash,
@@ -320,7 +325,7 @@ _SIMHASH_PAIRS_ORACLE = f"""
     WITH h AS (
       SELECT doc_id,
              list_transform(string_split_regex(lower(text), '\\s+'),
-                            t -> {_HASH32_SQL.format(x='t')}) AS hashes
+                            t -> {md5_hash_sql('t', 8)}) AS hashes
       FROM documents WHERE length(text) > 0
     ),
     f AS (
@@ -450,7 +455,7 @@ _NGRAM_ORACLE = f"""
              list_distinct(list_transform(
                list_distinct(list_transform(range(1, length(lower(text)) - 1),
                              i -> substr(lower(text), i, 3))),
-               s -> {_HASH32_SQL.format(x='s')})) AS grams
+               s -> {md5_hash_sql('s', 8)})) AS grams
       FROM documents WHERE length(text) >= 3
     ),
     sigs AS (SELECT doc_id, lang, blk, grams, {_NGRAM_SIG_SQL} FROM g),
@@ -508,7 +513,7 @@ def ngram_jaccard_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
         # |a|+|b|−|a∩b| union size assumes distinct elements, which a 32-bit
         # within-doc hash collision would otherwise break at corpus scale
         F.array_distinct(
-            F.transform(D.char_ngrams(F.col("text")), D.portable_hash32)
+            F.transform(D.char_ngrams(F.col("text")), lambda g: md5_hash(g, 8))
         ).alias("grams"),
     )
     sig = F.expr(D.minhash_sig_from_hashes_sql("grams"))
@@ -588,7 +593,7 @@ _NGRAM_EXACT_ORACLE = f"""
              list_sort(list_distinct(list_transform(
                list_distinct(list_transform(range(1, length(lower(text)) - 1),
                              i -> substr(lower(text), i, 3))),
-               s -> {_HASH32_SQL.format(x='s')}))) AS grams
+               s -> {md5_hash_sql('s', 8)}))) AS grams
       FROM documents WHERE length(text) >= 3
     ),
     scored AS (
@@ -685,7 +690,7 @@ def ngram_jaccard_exact_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.floor(F.col("n_chars") / 25).cast("bigint").alias("blk"),
                 F.array_sort(
                     F.array_distinct(
-                        F.transform(D.char_ngrams(F.col("text")), D.portable_hash32)
+                        F.transform(D.char_ngrams(F.col("text")), lambda g: md5_hash(g, 8))
                     )
                 ).alias("grams"),
             ),
@@ -784,18 +789,8 @@ def ngram_jaccard_exact_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Embedding-cosine near-dup pairs (blocked exact baseline)
 # ---------------------------------------------------------------------------
 
-_DOT = (
-    "list_sum(list_transform(list_zip({a}, {b}),"
-    " p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))"
-)
-_COS = (
-    f"({_DOT.format(a='a.embedding', b='b.embedding')}"
-    f" / (sqrt({_DOT.format(a='a.embedding', b='a.embedding')})"
-    f" * sqrt({_DOT.format(a='b.embedding', b='b.embedding')})))"
-)
-
 _EMB_BIT_SQL = [
-    f"(CASE WHEN {_DOT.format(a='embedding', b=f'hps[{k + 1}]')} >= 0"
+    f"(CASE WHEN {dot_sql('embedding', f'hps[{k + 1}]')} >= 0"
     f" THEN 1 ELSE 0 END)"
     for k in range(4)
 ]
@@ -825,7 +820,7 @@ _EMB_NEAR_DUP_ORACLE = f"""
     ),
     scored AS (
       SELECT key_a, key_b, label,
-             round({_COS.replace('a.embedding', 'ea').replace('b.embedding', 'eb')}, 6) AS cos_sim
+             round({cosine_sql('ea', 'eb')}, 6) AS cos_sim
       FROM cand
     )
     SELECT key_a, key_b, label, cos_sim FROM scored WHERE cos_sim >= 0.4
@@ -855,18 +850,15 @@ def emb_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     brute per-label pair join (O(label²) — use only where labels are
     small); scale consumers treat this listing as the recall-documented
     standard, per the registry tag ``lsh-recall``."""
-    from talkinghead_datapipeline_spark.queries.similarity import (
-        _anchors,
-        _dot,
-    )
+    from talkinghead_datapipeline_spark.queries.similarity import _anchors
 
     emb = load_table(spark, sf_dir, "embeddings")
     hp = _anchors(emb, (11, 42, 97, 123))
     bits = [
-        F.when(
-            _dot(F.col("embedding"), F.element_at(F.col("anchors"), k + 1)) >= 0,
-            F.lit(1),
-        ).otherwise(F.lit(0))
+        F.expr(
+            f"CASE WHEN {dot_expr('embedding', f'element_at(anchors, {k + 1})')} >= 0"
+            " THEN 1 ELSE 0 END"
+        )
         for k in range(4)
     ]
     g = (
@@ -915,7 +907,7 @@ def emb_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             "key_a",
             "key_b",
             "label",
-            F.round(cosine(F.col("_ea"), F.col("_eb")), 6).alias("cos_sim"),
+            F.expr(f"round({cosine_expr('_ea', '_eb')}, 6)").alias("cos_sim"),
         )
         .filter(F.col("cos_sim") >= 0.4)
     )
@@ -973,7 +965,7 @@ _DECON_ORACLE = f"""
                list_distinct(list_transform(
                  range(1, len(string_split_regex(lower(text), '\\s+')) - {_DECON_N - 2}),
                  i -> array_to_string(string_split_regex(lower(text), '\\s+')[i:i+{_DECON_N - 1}], ' '))),
-               s -> {_HASH32_SQL.format(x='s')})) AS g
+               s -> {md5_hash_sql('s', 8)})) AS g
       FROM documents
       WHERE len(string_split_regex(text, '\\s+')) >= {_DECON_N}
     ),
@@ -1042,7 +1034,7 @@ _QUALITY_SQL = f"""0.5 * least(CAST(length(text) AS DOUBLE) / 500, 1.0)
        + 0.5 * (1.0 - CAST(len(list_filter(string_split_regex(lower(text), '\\s+'),
                             w -> w IN ({_SW_SQL}))) AS DOUBLE)
                     / len(string_split_regex(text, '\\s+')))"""
-_SPLIT_H_SQL = "('0x' || substr(md5('split|' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT"
+_SPLIT_H_SQL = md5_hash_sql("'split|' || CAST(doc_id AS VARCHAR)", 8)
 
 _CLEAN_ORACLE = f"""
     WITH RECURSIVE kept AS (
@@ -1059,7 +1051,7 @@ _CLEAN_ORACLE = f"""
              list_distinct(list_transform(
                list_distinct(list_transform(range(1, len(t) - 1),
                  i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])),
-               s -> {_HASH32_SQL.format(x='s')})) AS grams
+               s -> {md5_hash_sql('s', 8)})) AS grams
       FROM toks WHERE len(t) >= 3
     ),
     sigs AS (SELECT doc_id, {_SIG_COLS_SQL} FROM sh WHERE len(grams) >= 1),
@@ -1122,7 +1114,6 @@ def corpus_clean_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         canonical_per_component,
         connected_components,
     )
-    from talkinghead_datapipeline_spark.queries.dataprep import _salted_hash
 
     docs = load_table(spark, sf_dir, "documents").filter(F.length("text") > 0)
     tokens = F.split(F.col("text"), r"\s+")
@@ -1138,7 +1129,7 @@ def corpus_clean_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = D.dedup_edge_graph(kept, "doc_id", "text", jaccard_min=0.2)
     comps = connected_components(edges)
     canon = canonical_per_component(kept, comps, "doc_id")
-    bucket = _salted_hash("split|", F.col("doc_id")) % 100
+    bucket = md5_hash(F.concat(F.lit("split|"), F.col("doc_id").cast("string")), 8) % 100
     return canon.select(
         "doc_id",
         "lang",
@@ -1304,7 +1295,7 @@ _CONT_SHINGLES_SQL = f"""
                list_distinct(list_transform(
                  range(1, len(string_split_regex(lower(text), '\\s+')) - {_CONT_N - 2}),
                  i -> array_to_string(string_split_regex(lower(text), '\\s+')[i:i+{_CONT_N - 1}], ' '))),
-               s -> {_HASH32_SQL.format(x='s')}))) AS sh
+               s -> {md5_hash_sql('s', 8)}))) AS sh
       FROM documents
       WHERE len(string_split_regex(text, '\\s+')) >= {_CONT_N}
 """

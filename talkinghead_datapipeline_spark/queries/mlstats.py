@@ -18,6 +18,7 @@ from talkinghead_datapipeline_spark.catalog import (
     persist_once,
     rebalance_for_compute,
 )
+from talkinghead_datapipeline_spark.functions.portable import md5_hash, md5_hash_sql
 from talkinghead_datapipeline_spark.queries import register
 
 # ---------------------------------------------------------------------------
@@ -514,16 +515,10 @@ def poisson_bootstrap_weight(b_col, key_col, source: str = "md5"):
       100 TB.
     """
     if source == "md5":
-        from talkinghead_datapipeline_spark.operators.dedup import portable_hash32
-
-        u = portable_hash32(
-            F.concat(
-                F.lit("boot|"),
-                b_col.cast("string"),
-                F.lit("|"),
-                key_col.cast("string"),
-            )
-        ) / F.lit(4294967296.0)
+        key = F.concat(
+            F.lit("boot|"), b_col.cast("string"), F.lit("|"), key_col.cast("string")
+        )
+        u = md5_hash(key, 8) / F.lit(4294967296.0)
     elif source == "xxhash64":
         # fold the signed 64-bit hash onto [0, 2^32) then scale — pmod
         # keeps it non-negative; the low 32 bits of xxhash64 are uniform
@@ -546,6 +541,7 @@ _POIS_CASE_SQL = (
     + " ELSE 6 END"
 )
 
+_BOOT_KEY_SQL = "'boot|' || CAST(b AS VARCHAR) || '|' || CAST(o_orderkey AS VARCHAR)"
 BOOTSTRAP_CI_ORACLE = f"""
 WITH o AS (
   SELECT o_orderpriority, o_orderkey,
@@ -560,8 +556,7 @@ w AS (
   SELECT o_orderpriority, b, cents, {_POIS_CASE_SQL} AS wgt
   FROM (
     SELECT *,
-           ('0x' || substr(md5('boot|' || CAST(b AS VARCHAR) || '|'
-                               || CAST(o_orderkey AS VARCHAR)), 1, 8))::BIGINT
+           {md5_hash_sql(_BOOT_KEY_SQL, 8)}
              / 4294967296.0 AS u
     FROM rep
   )
@@ -722,9 +717,9 @@ def _bootstrap_ci_plan(
 # an r11 seat per the house registration rule.
 # ---------------------------------------------------------------------------
 
-KFOLD_LINREG_ORACLE = """
+KFOLD_LINREG_ORACLE = f"""
 WITH d AS (
-  SELECT ('0x' || substr(md5('kf' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
+  SELECT {md5_hash_sql("'kf' || CAST(doc_id AS VARCHAR)", 8)}
            % 5 AS fold,
          n_chars AS x,
          CAST(len(string_split_regex(text, '\\s+')) AS BIGINT) AS y
@@ -797,16 +792,10 @@ def kfold_linreg_cv(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identical cross-engine — and the display is floor-to-micro
     (floor, not div: b0 can be negative, and floor rounds toward -inf
     identically in both engines while integer div/`//` diverge)."""
-    from talkinghead_datapipeline_spark.operators.dedup import portable_hash32
-
     docs = load_table(spark, sf_dir, "documents").filter(F.length("text") > 0)
+    key = F.concat(F.lit("kf"), F.col("doc_id").cast("string"))
     base = docs.select(
-        (
-            portable_hash32(
-                F.concat(F.lit("kf"), F.col("doc_id").cast("string"))
-            )
-            % 5
-        ).alias("fold"),
+        (md5_hash(key, 8) % 5).alias("fold"),
         F.col("n_chars").cast("bigint").alias("x"),
         F.size(F.split(F.col("text"), r"\s+")).cast("bigint").alias("y"),
     )

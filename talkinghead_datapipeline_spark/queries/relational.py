@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from talkinghead_datapipeline_spark.catalog import load_table
+from talkinghead_datapipeline_spark.functions.portable import md5_hash, md5_hash_sql
 from talkinghead_datapipeline_spark.queries import register
 
 # ---------------------------------------------------------------------------
@@ -803,10 +804,7 @@ _BLOOM_K = 3  # hash functions
 
 
 def _bloom_bucket_sql(i: int, key: str) -> str:
-    return (
-        f"('0x' || substr(md5('bf{i}|' || CAST({key} AS VARCHAR)), 1, 8))"
-        f"::BIGINT % {_BLOOM_M}"
-    )
+    return md5_hash_sql(f"'bf{i}|' || CAST({key} AS VARCHAR)", 8) + f" % {_BLOOM_M}"
 
 
 _BLOOM_ORACLE = f"""
@@ -834,16 +832,7 @@ _BLOOM_ORACLE = f"""
 
 
 def _bloom_bucket(i: int, key: Column) -> Column:
-    return (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit(f"bf{i}|"), key.cast("string"))), 1, 8
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % _BLOOM_M
-    )
+    return md5_hash(F.concat(F.lit(f"bf{i}|"), key.cast("string")), 8) % _BLOOM_M
 
 
 @register("bloom_filter_semi_join", oracle=_BLOOM_ORACLE, tags=("join", "bloom", "scale"))

@@ -1,9 +1,9 @@
 """Similarity search over the `embeddings` table (north-star extensions).
 
 Brute-force cosine top-k is the correctness baseline; the LSH-bucketed
-variant (operators.similarity) is the 100 TB scale path. Dot products are
+variant (sim_lsh_bucket_topk) is the 100 TB scale path. Dot products are
 computed position-sequentially in DOUBLE on both engines so the fold order
-— and therefore the float result — is identical.
+— and therefore the float result — is identical (functions/portable.py).
 """
 
 from __future__ import annotations
@@ -18,6 +18,14 @@ from talkinghead_datapipeline_spark.catalog import (
     pushdown_barrier,
     rebalance_for_compute,
 )
+from talkinghead_datapipeline_spark.functions.portable import (
+    cosine_expr,
+    cosine_sql,
+    dist2_expr,
+    dist2_sql,
+    dot_expr,
+    dot_sql,
+)
 from talkinghead_datapipeline_spark.queries import register
 
 
@@ -25,83 +33,14 @@ _EMB_DIM = 64  # every vector column in the fixture schema (embeddings,
 # anchors, centroids, qvec, rhat/qhat) is 64-dim.
 
 
-def _dot(a: Column, b: Column) -> Column:
-    """Sequential left-fold dot product in double precision.
-
-    Deliberately the zip_with+aggregate HOF, not an element_at chain: for
-    two ARRAY COLUMNS the HOF's native array iteration beats a 64-term
-    extraction chain (A/B at sf0.1: brute cosine 0.34s vs 0.40s, centroid
-    assign 0.65s vs 0.79s, JL projection 0.34s vs 0.70s fresh and 1.6s
-    vs 5.7s inside the 77-query bench session) even though HOF lambdas
-    are CodegenFallback: native array iteration beats per-element
-    extraction, and the chain's giant generated methods degrade further
-    once a long session pressures the JVM code cache. Measured both ways
-    so the tradeoff isn't relitigated blind."""
-    prods = F.zip_with(
-        F.transform(a, lambda x: x.cast("double")),
-        F.transform(b, lambda x: x.cast("double")),
-        lambda x, y: x * y,
-    )
-    return F.aggregate(prods, F.lit(0.0), lambda acc, x: acc + x)
-
-
-def _norm(a: Column) -> Column:
-    return F.sqrt(_dot(a, a))
-
-
-def cosine(a: Column, b: Column) -> Column:
-    # try_divide: a zero-norm vector yields NULL (filterable) instead of an
-    # ANSI DIVIDE_BY_ZERO that would abort the stage at scale.
-    return F.try_divide(_dot(a, b), _norm(a) * _norm(b))
-
-
-_DOT_SQL = (
-    "list_sum(list_transform(list_zip({a}, {b}),"
-    " p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))"
-)
-
-
-def _dot_sql(a: str, b: str) -> str:
-    return _DOT_SQL.format(a=a, b=b)
-
-
-def _cosine_sql(a: str, b: str) -> str:
-    return (
-        f"({_dot_sql(a, b)} / (sqrt({_dot_sql(a, a)}) * sqrt({_dot_sql(b, b)})))"
-    )
-
-
-# Spark-SQL string replicas of _dot/cosine (r14, the random_projection_jl
-# precedent): the Column-API lambdas cost hundreds of py4j round-trips per
-# build and the bench pays the build per rep. These strings parse JVM-side
-# in one round-trip and resolve to the IDENTICAL expression tree (same
-# transform-cast / zip_with / aggregate fold, same 0.0D init, same
-# try_divide), so every output bit is unchanged — only where the plan is
-# assembled moved. NOT the DuckDB `_dot_sql` above: that one is the
-# oracle's dialect.
-def _dot_expr(a: str, b: str) -> str:
-    return (
-        f"aggregate(zip_with(transform({a}, x -> CAST(x AS DOUBLE)),"
-        f" transform({b}, x -> CAST(x AS DOUBLE)),"
-        f" (x, y) -> x * y), 0.0D, (acc, x) -> acc + x)"
-    )
-
-
-def _cosine_expr(a: str, b: str) -> str:
-    return (
-        f"try_divide({_dot_expr(a, b)},"
-        f" sqrt({_dot_expr(a, a)}) * sqrt({_dot_expr(b, b)}))"
-    )
-
-
 @register(
     "emb_norms_per_label",
     oracle=f"""
     SELECT label,
            count(*) AS n_vecs,
-           round(avg(sqrt({_dot_sql('embedding', 'embedding')})), 6) AS avg_norm,
-           round(min(sqrt({_dot_sql('embedding', 'embedding')})), 6) AS min_norm,
-           round(max(sqrt({_dot_sql('embedding', 'embedding')})), 6) AS max_norm
+           round(avg(sqrt({dot_sql('embedding', 'embedding')})), 6) AS avg_norm,
+           round(min(sqrt({dot_sql('embedding', 'embedding')})), 6) AS min_norm,
+           round(max(sqrt({dot_sql('embedding', 'embedding')})), 6) AS max_norm
     FROM embeddings
     GROUP BY label
     """,
@@ -110,11 +49,13 @@ def _cosine_expr(a: str, b: str) -> str:
 def emb_norms_per_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L2-norm statistics per label — array fold + hash agg, no UDF."""
     emb = load_table(spark, sf_dir, "embeddings")
+    norm = f"sqrt({dot_expr('embedding', 'embedding')})"
     return emb.groupBy("label").agg(
         F.count(F.lit(1)).alias("n_vecs"),
-        F.round(F.avg(_norm(F.col("embedding"))), 6).alias("avg_norm"),
-        F.round(F.min(_norm(F.col("embedding"))), 6).alias("min_norm"),
-        F.round(F.max(_norm(F.col("embedding"))), 6).alias("max_norm"),
+        *[
+            F.expr(f"round({agg}({norm}), 6)").alias(f"{agg}_norm")
+            for agg in ("avg", "min", "max")
+        ],
     )
 
 
@@ -164,7 +105,7 @@ def emb_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH q AS (SELECT embedding AS qvec FROM embeddings WHERE vec_id = 0)
     SELECT vec_id, label,
-           round({_cosine_sql('embedding', 'qvec')}, 6) AS cos_sim
+           round({cosine_sql('embedding', 'qvec')}, 6) AS cos_sim
     FROM embeddings, q
     WHERE vec_id <> 0
     ORDER BY cos_sim DESC, vec_id ASC
@@ -184,7 +125,7 @@ def sim_brute_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_id",
             "label",
-            F.expr(f"round({_cosine_expr('embedding', 'qvec')}, 6)").alias("cos_sim"),
+            F.expr(f"round({cosine_expr('embedding', 'qvec')}, 6)").alias("cos_sim"),
         )
         .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
         .limit(10)
@@ -218,24 +159,21 @@ def _anchors(emb: DataFrame, seeds: tuple[int, ...]) -> DataFrame:
     )
 
 
-def _lsh_bucket(vec: Column, anchors: Column) -> Column:
+def _lsh_bucket_expr(vec: str, anchors: str) -> str:
     """Bucket id = Σ_k [dot(vec, anchors[k]) ≥ 0] · 2^k  — map-only, no
     shuffle: the anchors ride along as a broadcast 1-row cross join."""
-    nbits = len(_LSH_SEEDS)
-    return F.aggregate(
-        F.sequence(F.lit(1), F.lit(nbits)),
-        F.lit(0).cast("bigint"),
-        lambda acc, k: acc
-        + F.when(
-            _dot(vec, F.element_at(anchors, k)) >= 0,
-            F.pow(F.lit(2.0), (k - 1).cast("double")).cast("bigint"),
-        ).otherwise(F.lit(0).cast("bigint")),
+    return (
+        f"aggregate(sequence(1, {len(_LSH_SEEDS)}), CAST(0 AS BIGINT),"
+        f" (bucket, k) -> bucket"
+        f" + CASE WHEN {dot_expr(vec, f'element_at({anchors}, k)')} >= 0"
+        f" THEN CAST(power(2.0D, CAST(k - 1 AS DOUBLE)) AS BIGINT)"
+        f" ELSE CAST(0 AS BIGINT) END)"
     )
 
 
 def _lsh_bucket_sql(vec: str) -> str:
     terms = " + ".join(
-        f"(CASE WHEN {_dot_sql(vec, f'hps[{k + 1}]')} >= 0"
+        f"(CASE WHEN {dot_sql(vec, f'hps[{k + 1}]')} >= 0"
         f" THEN CAST({1 << k} AS BIGINT) ELSE 0 END)"
         for k in range(len(_LSH_SEEDS))
     )
@@ -259,7 +197,7 @@ def _lsh_bucket_sql(vec: str) -> str:
       FROM bucketed WHERE vec_id = 0
     )
     SELECT b.vec_id, b.label, b.bucket,
-           round({_cosine_sql('b.embedding', 'q.qvec')}, 6) AS cos_sim
+           round({cosine_sql('b.embedding', 'q.qvec')}, 6) AS cos_sim
     FROM bucketed b, q
     WHERE b.vec_id <> 0 AND b.bucket = q.qbucket
     ORDER BY cos_sim DESC, b.vec_id ASC
@@ -284,7 +222,7 @@ def sim_lsh_bucket_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         "label",
         "embedding",
-        _lsh_bucket(F.col("embedding"), F.col("anchors")).alias("bucket"),
+        F.expr(_lsh_bucket_expr("embedding", "anchors")).alias("bucket"),
     )
     q = bucketed.filter(F.col("vec_id") == 0).select(
         F.col("embedding").alias("qvec"), F.col("bucket").alias("qbucket")
@@ -296,7 +234,7 @@ def sim_lsh_bucket_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id",
             "label",
             "bucket",
-            F.expr(f"round({_cosine_expr('embedding', 'qvec')}, 6)").alias("cos_sim"),
+            F.expr(f"round({cosine_expr('embedding', 'qvec')}, 6)").alias("cos_sim"),
         )
         .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
         .limit(10)
@@ -316,7 +254,7 @@ def sim_lsh_bucket_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM (
         SELECT vec_id, label, embedding,
                list_transform(cents,
-                 c -> round({_cosine_sql('embedding', 'c')}, 9)) AS sims
+                 c -> round({cosine_sql('embedding', 'c')}, 9)) AS sims
         FROM embeddings, cent
       )
     ),
@@ -325,7 +263,7 @@ def sim_lsh_bucket_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM assigned WHERE vec_id = 0
     )
     SELECT a.vec_id, a.label, CAST(a.cluster AS BIGINT) AS cluster,
-           round({_cosine_sql('a.embedding', 'q.qvec')}, 6) AS cos_sim
+           round({cosine_sql('a.embedding', 'q.qvec')}, 6) AS cos_sim
     FROM assigned a, q
     WHERE a.vec_id <> 0 AND a.cluster = q.qcluster
     ORDER BY cos_sim DESC, a.vec_id ASC
@@ -340,9 +278,7 @@ def sim_ivf_probe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the partition key — probes become partition-pruned scans."""
     emb = load_table(spark, sf_dir, "embeddings")
     cent = _anchors(emb, _IVF_SEEDS).withColumnRenamed("anchors", "cents")
-    sims = F.transform(
-        F.col("cents"), lambda c: F.round(cosine(F.col("embedding"), c), 9)
-    )
+    sims = F.expr(f"transform(cents, c -> round({cosine_expr('embedding', 'c')}, 9))")
     # rebalance: 8 interpreted cosine folds per row on a single-file scan
     assigned = (
         rebalance_for_compute(emb)
@@ -367,7 +303,7 @@ def sim_ivf_probe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id",
             "label",
             F.col("cluster").cast("bigint").alias("cluster"),
-            F.expr(f"round({_cosine_expr('embedding', 'qvec')}, 6)").alias("cos_sim"),
+            F.expr(f"round({cosine_expr('embedding', 'qvec')}, 6)").alias("cos_sim"),
         )
         .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
         .limit(10)
@@ -380,8 +316,8 @@ def _ivf_assign(emb: DataFrame, cent: DataFrame) -> DataFrame:
     centroid vectors. Cosines round to 9 decimals before the argmax so the
     DuckDB twin picks identical cells. Assembled via selectExpr strings
     (r14): identical tree to the Column form, parsed JVM-side in two
-    round-trips instead of ~hundreds (see _dot_expr)."""
-    sims = f"transform(cents, c -> round({_cosine_expr('embedding', 'c')}, 9))"
+    round-trips instead of ~hundreds (see functions/portable.py)."""
+    sims = f"transform(cents, c -> round({cosine_expr('embedding', 'c')}, 9))"
     return (
         emb.crossJoin(F.broadcast(cent))
         .selectExpr("vec_id", "label", "embedding", f"{sims} AS sims")
@@ -463,7 +399,7 @@ def _ivf_train_sql_ctes() -> str:
           SELECT vec_id, embedding, list_position(sims, list_max(sims)) AS cluster
           FROM (
             SELECT vec_id, embedding,
-                   list_transform(cents, c -> round({_cosine_sql('embedding', 'c')}, 9)) AS sims
+                   list_transform(cents, c -> round({cosine_sql('embedding', 'c')}, 9)) AS sims
             FROM embeddings, cent{p}
           )
         ),
@@ -505,7 +441,7 @@ def _ivf_train_sql_ctes() -> str:
              list_position(sims, list_max(sims)) AS cluster
       FROM (
         SELECT vec_id, label, embedding,
-               list_transform(cents, c -> round({_cosine_sql('embedding', 'c')}, 9)) AS sims
+               list_transform(cents, c -> round({cosine_sql('embedding', 'c')}, 9)) AS sims
         FROM embeddings, cent2
       )
     ),
@@ -519,7 +455,7 @@ def _ivf_train_sql_ctes() -> str:
       FROM assigned WHERE vec_id = 0
     )
     SELECT a.vec_id, a.label, CAST(a.cluster AS BIGINT) AS cluster,
-           round({_cosine_sql('a.embedding', 'q.qvec')}, 6) AS cos_sim
+           round({cosine_sql('a.embedding', 'q.qvec')}, 6) AS cos_sim
     FROM assigned a, q
     WHERE a.vec_id <> 0 AND list_contains(q.qcells, a.cluster)
     ORDER BY cos_sim DESC, a.vec_id ASC
@@ -602,7 +538,7 @@ def sim_ivf_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id",
             "label",
             F.col("cluster").cast("bigint").alias("cluster"),
-            F.expr(f"round({_cosine_expr('embedding', 'qvec')}, 6)").alias("cos_sim"),
+            F.expr(f"round({cosine_expr('embedding', 'qvec')}, 6)").alias("cos_sim"),
         )
         .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
         .limit(10)
@@ -622,52 +558,12 @@ _PQ_M = 4  # subspaces
 _PQ_DSUB = 16  # dims per subspace (embeddings are 64-dim)
 
 
-def _pq_sub(vec: Column, m: int) -> Column:
-    return F.slice(vec, m * _PQ_DSUB + 1, _PQ_DSUB)
-
-
-def _dist2(a: Column, b: Column) -> Column:
-    """Sequential-fold squared L2 distance in double precision (the PQ
-    metric; fold order fixed so both engines produce identical floats)."""
-    diffs = F.zip_with(
-        a, b, lambda x, y: x.cast("double") - y.cast("double")
-    )
-    return F.aggregate(diffs, F.lit(0.0), lambda acc, d: acc + d * d)
-
-
-def _pq_code(vec: Column, anchors: Column, m: int) -> Column:
-    """1-based index of the nearest codeword in subspace ``m`` (distances
-    rounded to 9 before the argmin so ties resolve identically cross-engine;
-    first-minimum wins on both)."""
-    dists = F.transform(
-        anchors, lambda a: F.round(_dist2(_pq_sub(vec, m), _pq_sub(a, m)), 9)
-    )
-    return F.array_position(dists, F.array_min(dists))
-
-
-_D2_SQL = (
-    "list_sum(list_transform(list_zip({a}, {b}),"
-    " p -> (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))"
-    " * (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))))"
-)
-
-
-# Spark-SQL string replicas of _dist2/_pq_sub/_pq_code (r14; see _dot_expr
-# for the contract — identical trees, parsed JVM-side in one round-trip).
-def _dist2_expr(a: str, b: str) -> str:
-    return (
-        f"aggregate(zip_with({a}, {b},"
-        f" (x, y) -> CAST(x AS DOUBLE) - CAST(y AS DOUBLE)),"
-        f" 0.0D, (acc, d) -> acc + d * d)"
-    )
-
-
 def _pq_sub_expr(vec: str, m: int) -> str:
     return f"slice({vec}, {m * _PQ_DSUB + 1}, {_PQ_DSUB})"
 
 
 def _pq_code_expr(vec: str, anchors: str, m: int) -> str:
-    d = f"round({_dist2_expr(_pq_sub_expr(vec, m), _pq_sub_expr('a', m))}, 9)"
+    d = f"round({dist2_expr(_pq_sub_expr(vec, m), _pq_sub_expr('a', m))}, 9)"
     dl = f"transform({anchors}, a -> {d})"
     return f"array_position({dl}, array_min({dl}))"
 
@@ -676,7 +572,7 @@ def _adc_expr(qvec: str, anchors: str) -> str:
     """ADC distance: Σ_m round(dist2(sub_m(q), sub_m(anchors[c_m])), 9) —
     the exact fold order of the Column loop it replaces."""
     return " + ".join(
-        f"round({_dist2_expr(_pq_sub_expr(qvec, m), _pq_sub_expr(f'element_at({anchors}, CAST(c{m} AS INT))', m))}, 9)"
+        f"round({dist2_expr(_pq_sub_expr(qvec, m), _pq_sub_expr(f'element_at({anchors}, CAST(c{m} AS INT))', m))}, 9)"
         for m in range(_PQ_M)
     )
 
@@ -686,9 +582,7 @@ def _pq_sub_sql(vec: str, m: int) -> str:
 
 
 def _pq_code_sql(vec: str, m: int) -> str:
-    d = _D2_SQL.format(
-        a=_pq_sub_sql(vec, m), b=_pq_sub_sql("a", m)
-    )
+    d = dist2_sql(_pq_sub_sql(vec, m), _pq_sub_sql("a", m))
     dl = f"list_transform(anchors, a -> round({d}, 9))"
     return f"list_position({dl}, list_min({dl}))"
 
@@ -709,9 +603,9 @@ def _pq_code_sql(vec: str, m: int) -> str:
     SELECT e.vec_id, e.label,
            concat_ws('-', {", ".join(f"CAST(e.c{m} AS VARCHAR)" for m in range(_PQ_M))}) AS pq_code,
            round({" + ".join(
-               "round(" + _D2_SQL.format(
-                   a=_pq_sub_sql("q.qvec", m),
-                   b=_pq_sub_sql(f"cb.anchors[CAST(e.c{m} AS INT)]", m),
+               "round(" + dist2_sql(
+                   _pq_sub_sql("q.qvec", m),
+                   _pq_sub_sql(f"cb.anchors[CAST(e.c{m} AS INT)]", m),
                ) + ", 9)"
                for m in range(_PQ_M))}, 6) AS adc_dist
     FROM enc e, q, cb
@@ -742,7 +636,7 @@ def sim_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # HOF math — spread the single-file scan before it (measured 2.5× on
     # the IVF-PQ twin; a no-op on many-split production inputs)
     # selectExpr strings throughout (r14): identical trees to the Column
-    # loop they replace, parsed JVM-side — see _dot_expr for the contract.
+    # loop they replace, parsed JVM-side — see functions/portable.py.
     enc = rebalance_for_compute(emb).crossJoin(F.broadcast(cb)).selectExpr(
         "vec_id",
         "label",
@@ -782,7 +676,7 @@ def sim_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM (
         SELECT vec_id, label, embedding, anchors,
                list_transform(anchors,
-                 c -> round({_cosine_sql('embedding', 'c')}, 9)) AS sims
+                 c -> round({cosine_sql('embedding', 'c')}, 9)) AS sims
         FROM embeddings, cb
       )
     ),
@@ -796,16 +690,16 @@ def sim_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM (
         SELECT embedding,
                list_transform(anchors,
-                 c -> round({_cosine_sql('embedding', 'c')}, 9)) AS sims
+                 c -> round({cosine_sql('embedding', 'c')}, 9)) AS sims
         FROM embeddings, cb WHERE vec_id = 0
       )
     )
     SELECT e.vec_id, e.label, CAST(e.cluster AS BIGINT) AS cluster,
            concat_ws('-', {", ".join(f"CAST(e.c{m} AS VARCHAR)" for m in range(_PQ_M))}) AS pq_code,
            round({" + ".join(
-               "round(" + _D2_SQL.format(
-                   a=_pq_sub_sql("q.qvec", m),
-                   b=_pq_sub_sql(f"cb.anchors[CAST(e.c{m} AS INT)]", m),
+               "round(" + dist2_sql(
+                   _pq_sub_sql("q.qvec", m),
+                   _pq_sub_sql(f"cb.anchors[CAST(e.c{m} AS INT)]", m),
                ) + ", 9)"
                for m in range(_PQ_M))}, 6) AS adc_dist
     FROM enc e, q, cb
@@ -832,8 +726,8 @@ def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rebalance ahead of the cell-assign + codeword folds (measured
     # 2.53s → 1.02s at sf0.1; no-op on many-split production inputs).
     # selectExpr strings throughout (r14): identical trees to the Column
-    # form they replace, parsed JVM-side — see _dot_expr for the contract.
-    sims = f"transform(anchors, c -> round({_cosine_expr('embedding', 'c')}, 9))"
+    # form they replace, parsed JVM-side — see functions/portable.py.
+    sims = f"transform(anchors, c -> round({cosine_expr('embedding', 'c')}, 9))"
     enc = (
         rebalance_for_compute(emb).crossJoin(F.broadcast(cb))
         .selectExpr("*", f"{sims} AS sims")
@@ -879,7 +773,7 @@ def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH q AS (SELECT embedding AS qvec FROM embeddings WHERE vec_id = 0),
          scored AS (
            SELECT vec_id, label,
-                  round({_cosine_sql('embedding', 'qvec')}, 6) AS cos_sim
+                  round({cosine_sql('embedding', 'qvec')}, 6) AS cos_sim
            FROM embeddings, q
            WHERE vec_id <> 0
          )
@@ -904,7 +798,7 @@ def sim_cosine_topk_per_label(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_id",
             "label",
-            F.expr(f"round({_cosine_expr('embedding', 'qvec')}, 6)").alias("cos_sim"),
+            F.expr(f"round({cosine_expr('embedding', 'qvec')}, 6)").alias("cos_sim"),
         )
     )
     w = W.partitionBy("label").orderBy(F.desc("cos_sim"), F.asc("vec_id"))
@@ -959,11 +853,11 @@ _SQ8_ORACLE = f"""
     exact10 AS (
       SELECT vec_id FROM embeddings, qexact
       WHERE vec_id <> 0
-      ORDER BY round({_cosine_sql('embedding', 'qvec')}, 6) DESC, vec_id ASC
+      ORDER BY round({cosine_sql('embedding', 'qvec')}, 6) DESC, vec_id ASC
       LIMIT 10
     )
     SELECT r.vec_id, r.label,
-           round({_cosine_sql('r.rhat', 'qhat')}, 6) AS sq_cos,
+           round({cosine_sql('r.rhat', 'qhat')}, 6) AS sq_cos,
            CAST(CASE WHEN e.vec_id IS NULL THEN 0 ELSE 1 END AS BIGINT)
              AS in_exact_top10
     FROM recon r
@@ -1049,7 +943,7 @@ def sim_sq8_quant_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(qexact))
         .select(
             "vec_id",
-            F.expr(f"round({_cosine_expr('embedding', 'qvec')}, 6)").alias("xc"),
+            F.expr(f"round({cosine_expr('embedding', 'qvec')}, 6)").alias("xc"),
         )
         .orderBy(F.desc("xc"), F.asc("vec_id"))
         .limit(10)
@@ -1062,7 +956,7 @@ def sim_sq8_quant_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_id",
             "label",
-            F.expr(f"round({_cosine_expr('rhat', 'qhat')}, 6)").alias("sq_cos"),
+            F.expr(f"round({cosine_expr('rhat', 'qhat')}, 6)").alias("sq_cos"),
             F.coalesce(F.col("_hit"), F.lit(0)).cast("bigint").alias(
                 "in_exact_top10"
             ),
@@ -1098,7 +992,7 @@ def _jl_signs(j: int) -> list[float]:
 def _jl_oracle() -> str:
     k = float(_JL_OUT_DIM)
     ys = ",\n             ".join(
-        f"{_dot_sql('embedding', '[' + ', '.join(str(s) for s in _jl_signs(j)) + ']')}"
+        f"{dot_sql('embedding', '[' + ', '.join(str(s) for s in _jl_signs(j)) + ']')}"
         f" / sqrt({k}) AS y{j}"
         for j in range(_JL_OUT_DIM)
     )
@@ -1107,7 +1001,7 @@ def _jl_oracle() -> str:
     return f"""
     WITH proj AS (
       SELECT vec_id, label,
-             {_dot_sql('embedding', 'embedding')} AS nx2,
+             {dot_sql('embedding', 'embedding')} AS nx2,
              {ys}
       FROM embeddings
     )
@@ -1129,8 +1023,8 @@ def random_projection_jl(spark: SparkSession, sf_dir: str) -> DataFrame:
     the matrix, so the oracle certifies every cell, not just the law).
 
     Scale shape: map-only — 16 literal-vector dot products per row via the
-    _dot fold; nothing is broadcast, shuffled, or iterated, and at a real
-    corpus k grows as O(log n / eps^2) with the matrix staying literal.
+    portable dot fold; nothing is broadcast, shuffled, or iterated, and at a
+    real corpus k grows as O(log n / eps^2) with the matrix staying literal.
     Expression-form A/B (bit-identical outputs, both measured at sf0.1):
     the HOF fold beats an explicit 16x64-term element_at chain in BOTH
     contexts — 0.34s vs 0.70s in a fresh session, 1.6s vs 5.7s inside
@@ -1155,24 +1049,15 @@ def random_projection_jl(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = rebalance_for_compute(load_table(spark, sf_dir, "embeddings"))
     k = float(_JL_OUT_DIM)
 
-    def dot_sql(a: str, b: str) -> str:
-        # exact SQL replica of _dot: cast-transform both sides, zip_with
-        # product, left-fold from a double 0.0
-        return (
-            f"aggregate(zip_with(transform({a}, x -> CAST(x AS DOUBLE)),"
-            f" transform({b}, x -> CAST(x AS DOUBLE)),"
-            f" (x, y) -> x * y), 0.0D, (acc, x) -> acc + x)"
-        )
-
     def arr_sql(j: int) -> str:
         return "array(" + ", ".join(f"{s}D" for s in _jl_signs(j)) + ")"
 
     proj = emb.selectExpr(
         "vec_id",
         "CAST(label AS BIGINT) AS label",
-        f"{dot_sql('embedding', 'embedding')} AS nx2",
+        f"{dot_expr('embedding', 'embedding')} AS nx2",
         *[
-            f"{dot_sql('embedding', arr_sql(j))} / sqrt({k}D) AS y{j}"
+            f"{dot_expr('embedding', arr_sql(j))} / sqrt({k}D) AS y{j}"
             for j in range(_JL_OUT_DIM)
         ],
     )
@@ -1280,7 +1165,7 @@ def _kcenter_oracle() -> str:
     for i in range(1, _KC_K):
         prev_d = "base" if i == 1 else f"d{i - 1}"
         prev_c = f"c{i - 1}"
-        dist = f"round(1 - {_cosine_sql(f'{prev_d}.embedding', f'{prev_c}.embedding')}, 6)"
+        dist = f"round(1 - {cosine_sql(f'{prev_d}.embedding', f'{prev_c}.embedding')}, 6)"
         d_expr = dist if i == 1 else f"least({prev_d}.d, {dist})"
         steps.append(
             f"""
@@ -1329,17 +1214,19 @@ def kcenter_coreset_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     textbook k-center bound."""
     emb = persist_once(
         load_table(spark, sf_dir, "embeddings").select(
-            "vec_id", "embedding", _norm(F.col("embedding")).alias("nrm")
+            "vec_id",
+            "embedding",
+            F.expr(f"sqrt({dot_expr('embedding', 'embedding')})").alias("nrm"),
         )
     )
     seed = emb.orderBy("vec_id").limit(1).collect()[0]
     centers = [(0, seed.vec_id, [float(x) for x in seed.embedding], 0.0)]
 
     def dist_to(center_vec: list[float]) -> Column:
-        lit = F.array(*[F.lit(v) for v in center_vec])
-        return F.round(
-            F.lit(1.0) - _dot(F.col("embedding"), lit) / (F.col("nrm") * _norm(lit)),
-            6,
+        lit = "array(" + ", ".join(f"{v!r}D" for v in center_vec) + ")"
+        return F.expr(
+            f"round(1.0D - {dot_expr('embedding', lit)}"
+            f" / (nrm * sqrt({dot_expr(lit, lit)})), 6)"
         )
 
     # The running min-dist column MATERIALIZES each round (persist +

@@ -2,7 +2,7 @@
 
 Companions to ``cms_heavy_hitters`` (textops.py): each sketch is built with
 an engine-portable deterministic hash (the md5-prefix construction from
-``operators/dedup.py:portable_hash32``) so the DuckDB oracle constructs the
+``functions/portable.py``) so the DuckDB oracle constructs the
 IDENTICAL sketch and the driver's value-hash check certifies both the
 sketch registers and the exact-vs-estimate error, not just "some estimate".
 
@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from talkinghead_datapipeline_spark.catalog import load_table
+from talkinghead_datapipeline_spark.functions.portable import md5_hash, md5_hash_sql
 from talkinghead_datapipeline_spark.queries import register
 
 # p = 9 → m = 512 registers: standard error 1.04/sqrt(512) ≈ 4.6%, and the
@@ -35,7 +36,7 @@ _HLL_REST_BITS = 60 - _HLL_P
 # DuckDB side of the identical construction. bin() is unpadded in BOTH
 # engines (verified: DuckDB bin(5)='101', Spark bin(5)='101'), so
 # bit_length(x) = length(bin(x)) for x > 0 and rank = rest_bits+1-bit_length.
-_HLL_H_SQL = "('0x' || substr(md5('hll|' || CAST(user_id AS VARCHAR)), 1, 15))::BIGINT"
+_HLL_H_SQL = md5_hash_sql("'hll|' || CAST(user_id AS VARCHAR)", 15)
 _HLL_ALPHA_SQL = f"(0.7213 / (1.0 + 1.079 / {_HLL_M}))"
 
 _HLL_ORACLE = f"""
@@ -92,11 +93,7 @@ def _hll_registers(df: DataFrame, group: str, key_col: str) -> DataFrame:
     sketch over ``key_col``. The only shuffle is the register groupBy,
     which partial-aggregates map-side to ≤ m rows per group per task —
     the cardinality path that replaces count(DISTINCT) at 100 TB."""
-    h = F.conv(
-        F.substring(F.md5(F.concat(F.lit("hll|"), F.col(key_col).cast("string"))), 1, 15),
-        16,
-        10,
-    ).cast("bigint")
+    h = md5_hash(F.concat(F.lit("hll|"), F.col(key_col).cast("string")), 15)
     bucket = (h % _HLL_M).alias("bucket")
     rest = F.shiftright(h, _HLL_P)
     rank = F.when(

@@ -17,6 +17,7 @@ from talkinghead_datapipeline_spark.catalog import (
     persist_once,
     rebalance_for_compute,
 )
+from talkinghead_datapipeline_spark.functions.portable import md5_hash, md5_hash_sql
 from talkinghead_datapipeline_spark.queries import register
 
 # ---------------------------------------------------------------------------
@@ -173,10 +174,9 @@ def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "doc_fingerprint",
-    oracle="""
+    oracle=f"""
     SELECT doc_id,
-           CAST(CAST(('0x' || substr(md5(text), 1, 15)) AS BIGINT) AS BIGINT)
-             AS fingerprint,
+           {md5_hash_sql('text', 15)} AS fingerprint,
            substr(md5(text), 1, 8) AS fp_hex
     FROM documents
     """,
@@ -189,9 +189,7 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
-        F.conv(F.substring(F.md5("text"), 1, 15), 16, 10)
-        .cast("bigint")
-        .alias("fingerprint"),
+        md5_hash(F.col("text"), 15).alias("fingerprint"),
         F.substring(F.md5("text"), 1, 8).alias("fp_hex"),
     )
 
@@ -432,21 +430,11 @@ _CMS_W = 64  # buckets per row
 
 
 def _cms_bucket(token, j: int):
-    return (
-        F.conv(
-            F.substring(
-                F.md5(F.concat_ws("|", F.lit(str(j)), token)), 1, 8
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % _CMS_W
-    )
+    return md5_hash(F.concat_ws("|", F.lit(str(j)), token), 8) % _CMS_W
 
 
 _CMS_BUCKET_SQL = (
-    "(('0x' || substr(md5(CAST({j} AS VARCHAR) || '|' || {t}), 1, 8))::BIGINT"
-    f" % {_CMS_W})"
+    "(" + md5_hash_sql("CAST({j} AS VARCHAR) || '|' || {t}", 8) + f" % {_CMS_W})"
 )
 
 
@@ -1567,11 +1555,11 @@ def bm25_scored(docs: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _SUBSTR_K = 8
-_SUBSTR_H = "('0x' || substr(md5(gram), 1, 8))::BIGINT"
 
 
 def _substr_dup_oracle() -> str:
     k = _SUBSTR_K
+    gram = f"list_aggregate(toks[CAST(i AS INT):CAST(i + {k} - 1 AS INT)], 'string_agg', ' ')"
     return f"""
     WITH base AS (
       SELECT doc_id, string_split_regex(lower(text), '\\s+') AS toks
@@ -1579,8 +1567,7 @@ def _substr_dup_oracle() -> str:
     ),
     grams AS (
       SELECT doc_id, i,
-             ('0x' || substr(md5(list_aggregate(toks[CAST(i AS INT):CAST(i + {k} - 1 AS INT)],
-                                                'string_agg', ' ')), 1, 8))::BIGINT AS gh
+             {md5_hash_sql(gram, 8)} AS gh
       FROM (SELECT doc_id, toks,
                    CAST(unnest(range(1, len(toks) - {k} + 2)) AS BIGINT) AS i
             FROM base
@@ -1637,19 +1624,7 @@ def substring_dup_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sequence(F.lit(1), F.size("toks") - (k - 1)),
                 lambda i: F.struct(
                     i.cast("bigint").alias("i"),
-                    F.conv(
-                        F.substring(
-                            F.md5(
-                                F.concat_ws(" ", F.slice("toks", i, k))
-                            ),
-                            1,
-                            8,
-                        ),
-                        16,
-                        10,
-                    )
-                    .cast("bigint")
-                    .alias("gh"),
+                    md5_hash(F.concat_ws(" ", F.slice("toks", i, k)), 8).alias("gh"),
                 ),
             )
         ).alias("g"),

@@ -13,6 +13,7 @@ from talkinghead_datapipeline_spark.operators.resample import (
     resample_linear,
     with_frame_index,
 )
+from talkinghead_datapipeline_spark.functions.portable import md5_hash, md5_hash_sql
 from talkinghead_datapipeline_spark.queries import register
 
 # ---------------------------------------------------------------------------
@@ -599,7 +600,7 @@ def merge_upsert_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
 # snapshots.
 # ---------------------------------------------------------------------------
 
-_SNAP_H = "('0x' || substr(md5('snap|' || CAST(o_orderkey AS VARCHAR)), 1, 8))::BIGINT % 20"
+_SNAP_H = md5_hash_sql("'snap|' || CAST(o_orderkey AS VARCHAR)", 8) + " % 20"
 
 
 def snap_hash20(key) -> "F.Column":
@@ -607,16 +608,7 @@ def snap_hash20(key) -> "F.Column":
     deriving the v2 orders snapshot (snapshot_diff_summary,
     psi_snapshot_drift, fk_integrity_audit) must call this one helper so
     "v2" cannot silently diverge between them."""
-    return (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("snap|"), F.col(key).cast("string"))), 1, 8
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 20
-    )
+    return md5_hash(F.concat(F.lit("snap|"), F.col(key).cast("string")), 8) % 20
 
 
 @register(

@@ -118,7 +118,6 @@ def _sg_dot_dynamic(hrow, arr_col, b, w: int):
 
 
 _SG_H = _sg_hat(_SG_W, _SG_O)
-_SG_HALF = _SG_W // 2
 
 
 # ---------------------------------------------------------------------------

@@ -35,8 +35,6 @@ from pyspark.sql import functions as F
 
 from talkinghead_datapipeline_spark.shipping import ensure_package_shipped, release_zip_finders
 
-FFMPEG = shutil.which("ffmpeg")
-
 # Reference command templates (dpl/processor/nodes/ffmpeg.py:13-26), as arg
 # vectors: same flags, no shell. `< /dev/null` becomes stdin=DEVNULL;
 # stdout/stderr are swallowed exactly like the reference's sp.run call.

@@ -23,16 +23,13 @@ def _folds_numpy(spark, sf_dir):
     import pyspark.sql.functions as F
 
     from talkinghead_datapipeline_spark.catalog import load_table
-    from talkinghead_datapipeline_spark.operators.dedup import portable_hash32
+    from talkinghead_datapipeline_spark.functions.portable import md5_hash
 
     docs = load_table(spark, sf_dir, "documents").filter(F.length("text") > 0)
     pdf = docs.select(
-        (
-            portable_hash32(
-                F.concat(F.lit("kf"), F.col("doc_id").cast("string"))
-            )
-            % 5
-        ).alias("fold"),
+        (md5_hash(F.concat(F.lit("kf"), F.col("doc_id").cast("string")), 8) % 5).alias(
+            "fold"
+        ),
         F.col("n_chars").cast("double").alias("x"),
         F.size(F.split(F.col("text"), r"\s+")).cast("double").alias("y"),
     ).toPandas()

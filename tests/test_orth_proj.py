@@ -17,7 +17,7 @@ from talkinghead_datapipeline_spark.functions.geometry import (
     orth_project_sql,
 )
 from talkinghead_datapipeline_spark.operators.models import (
-    RendererStub,
+    ShapeRenderer,
     batch_orth_proj,
     view_transform,
 )
@@ -61,7 +61,7 @@ def test_renderer_consumes_projection():
     # the frame must respond to the camera through the projection: same
     # verts, different cam → different view tensor → different coverage
     X = rng.normal(size=(16, 3))
-    r = RendererStub((4, 4))
+    r = ShapeRenderer((4, 4))
     cam_a, cam_b = np.array([1.0, 0.0, 0.0]), np.array([2.0, 0.0, 0.0])
     fa = r.render(X, view_transform(X, cam_a), cam_a)
     fb = r.render(X, view_transform(X, cam_b), cam_b)

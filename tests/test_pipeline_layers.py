@@ -19,7 +19,7 @@ from talkinghead_datapipeline_spark.operators.inference import (
 from talkinghead_datapipeline_spark.operators.models import (
     EmocaEncoderStub,
     FlameDecoderStub,
-    RendererStub,
+    ShapeRenderer,
     Wav2vecStub,
     fake_decode_image,
     view_transform,
@@ -223,7 +223,7 @@ def test_model_stubs_contracts():
     np.testing.assert_allclose(v0, flame.template)
 
     cam = np.array([1.0, 0.0, 0.0])
-    img = RendererStub((4, 4), faces=flame.faces).render(
+    img = ShapeRenderer((4, 4), faces=flame.faces).render(
         verts, view_transform(verts, cam), cam
     )
     assert len(img) == 16

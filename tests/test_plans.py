@@ -274,7 +274,7 @@ def test_stratified_exact_sample_matches_window_rank(spark):
 
     from pyspark.sql import functions as F
 
-    from talkinghead_datapipeline_spark.operators.dedup import portable_hash32
+    from talkinghead_datapipeline_spark.functions.portable import md5_hash
     from talkinghead_datapipeline_spark.operators.sampling import (
         stratified_exact_sample,
     )
@@ -288,7 +288,7 @@ def test_stratified_exact_sample_matches_window_rank(spark):
         }
     )
     df = spark.createDataFrame(pdf)
-    h = portable_hash32(F.concat(F.lit("t|"), F.col("k").cast("string")))
+    h = md5_hash(F.concat(F.lit("t|"), F.col("k").cast("string")), 8)
 
     import hashlib
 

@@ -1,6 +1,6 @@
 """Machine-check the cross-engine quantile-interpolation boundary.
 
-Found by the r12 full-registry x4 differential (tools/x4_differential.py),
+Found by the r12 full-registry x4 differential (tools/differential.py),
 root-caused this round: on a TIE PLATEAU (both interpolation endpoints
 equal to the same value v), Spark's ``percentile`` computes
 ``lo + g*(hi - lo)`` = v EXACTLY, while DuckDB's ``quantile_cont`` computes

@@ -1,7 +1,7 @@
 """Adjudication of the ×16-regime window_rank_suite divergence (round 13).
 
-The x16 full-registry differential (tools/x4_differential.py with
-replicas=16) surfaced ONE new mismatch beyond the two long-adjudicated
+The x16 full-registry differential (tools/differential.py, regime
+x16) surfaced ONE new mismatch beyond the two long-adjudicated
 classes: window_rank_suite's cume_dist column flips a round(x, 6) when a
 rank ratio k/n lands EXACTLY on a half-way decimal (41/640 = 0.0640625 —
 per-user event streams grow 16x, so n picks up factors of 2 that make
