@@ -23,6 +23,7 @@ from __future__ import annotations
 from collections.abc import Callable, Iterator
 from typing import Any
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
@@ -40,16 +41,17 @@ def get_executor_resource(key: str, factory: Callable[[], Any]) -> Any:
     return _RESOURCE_CACHE[key]
 
 
-def broadcast_weights_factory(df: DataFrame, weights: Any, build: Callable[[Any], Any]):
-    """Torrent-broadcast big model weights once per EXECUTOR (not per task,
-    not via task-closure serialization): ship ``weights`` with
-    ``sc.broadcast`` and return a factory that builds the model from the
-    broadcast value inside the worker. The FLAME basis / checkpoint tensors
-    pattern (dpl/processor/nodes/flame.py:47-58's weights loading) at
-    cluster scale — closure pickling would re-send weights with every task.
-    """
-    bc = df.sparkSession.sparkContext.broadcast(weights)
-    return lambda: build(bc.value)
+def stack_column(col: pd.Series) -> np.ndarray:
+    """Stack an Arrow ``array<double>`` or ``array<array<double>>`` pandas
+    column into one float64 ndarray of shape (rows, ...) — how a batch
+    function turns its input into the arrays a batched model call takes.
+
+    Arrow hands a nested array over as an object array of arrays, which
+    ``np.asarray`` cannot convert, so each such row is stacked first.
+    Ragged rows raise ``ValueError``, and ``batched_inference`` quarantines
+    the batch."""
+    rows = [np.stack(v) if getattr(v, "dtype", None) == object else v for v in col]
+    return np.stack([np.asarray(v, dtype=np.float64) for v in rows])
 
 
 def batched_inference(

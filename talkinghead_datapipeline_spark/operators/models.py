@@ -159,7 +159,13 @@ class FlameLbsDecoder:
         exp: np.ndarray,
         pose: np.ndarray | None = None,
     ) -> tuple[np.ndarray, np.ndarray]:
-        """(B,ns), (B,ne), optional (B,6) → verts (B,V,3), landmarks (B,L,3)."""
+        """(B,ns), (B,ne), optional (B,6) → verts (B,V,3), landmarks (B,L,3).
+
+        Batch-invariant: row i of the result is bit-equal to ``decode`` on
+        row i, whatever B is, so a node may decode a whole pandas batch at
+        once without moving its outputs. That is why the pose correctives
+        are an einsum and not a ``@``: BLAS gemm picks its blocking, and so
+        its rounding, by B (``tests/test_flame_lbs.py`` fuzzes this)."""
         B = shape.shape[0]
         betas = np.concatenate(
             [shape[:, : self.n_shape], exp[:, : self.n_exp]], axis=1
@@ -176,7 +182,8 @@ class FlameLbsDecoder:
             B, self.N_JOINTS, 3, 3
         )
         pose_feature = (R[:, 1:] - np.eye(3)[None, None]).reshape(B, -1)
-        v_posed = v_shaped + (pose_feature @ self.posedirs).reshape(B, -1, 3)
+        correctives = np.einsum("bp,pk->bk", pose_feature, self.posedirs)
+        v_posed = v_shaped + correctives.reshape(B, -1, 3)
         A = self._rigid_transform(R, joints)
         T = np.einsum("vj,bjxy->bvxy", self.lbs_weights, A)
         verts = (
@@ -193,7 +200,7 @@ class FlameLbsDecoder:
         exp: np.ndarray,
         pose: np.ndarray | None = None,
     ) -> tuple[np.ndarray, np.ndarray]:
-        """Single-sample convenience wrapper over ``decode_batch``."""
+        """One row: ``decode_batch`` on a batch of one."""
         v, lm = self.decode_batch(
             np.asarray(shape)[None],
             np.asarray(exp)[None],
@@ -275,11 +282,6 @@ class FlameLbsDecoder:
         return lmk_aff[:, 0], lmk_aff[:, 1:]
 
 
-# Backwards-compatible alias: the honest-linear miniature grew into the
-# full LBS implementation; the old name remains the registry vocabulary.
-FlameDecoderStub = FlameLbsDecoder
-
-
 def batch_orth_proj(X: np.ndarray, cam: np.ndarray) -> np.ndarray:
     """N17 weak-perspective (orthographic) camera projection — REAL math
     (dpl/rendering/utils.py:135-145 ``batch_orth_proj``): translate x/y by
@@ -338,7 +340,7 @@ class ShapeRenderer:
     −0.05, renderer.py:193-194). Payload stays H·W uint8 bytes: the sink
     contract is unchanged.
 
-    Mode semantics (ADVICE r12): every channel follows ``SRenderY.forward``
+    Mode semantics: every channel follows ``SRenderY.forward``
     semantics APPLIED TO the gray 180/255 albedo — NOT the reference's
     separate ``render_shape`` mode. The two reference modes differ in
     exactly two places and this class deliberately keeps the forward-path

@@ -89,9 +89,7 @@ def write_npz_per_key(
         key = pdf[key_col].iloc[0]
         if "_row_idx" in pdf.columns:
             pdf = pdf.sort_values("_row_idx")
-        arrays = {
-            c: np.stack([np.asarray(v) for v in pdf[c]]) for c in array_cols
-        }
+        arrays = {c: np.stack(list(pdf[c])) for c in array_cols}
         path = os.path.join(out_dir, f"{key}.npz")
         np.savez(path, **arrays)
         return pd.DataFrame(

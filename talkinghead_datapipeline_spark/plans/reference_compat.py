@@ -369,32 +369,29 @@ def _flame(ctx: GraphContext, p: dict[str, Any]) -> None:
     pipeline (FlameLbsDecoder — blend shapes, Rodrigues, kinematic chain,
     skinning, barycentric landmarks; dpl/flame/flame.py:241-312).
     n_shape/n_exp params select the code slice widths; pose is the 6-dim
-    global+jaw axis-angle the reference feeds FLAME (flame.py:262-271)."""
+    global+jaw axis-angle the reference feeds FLAME (flame.py:262-271).
+    Like the reference's 64-frame FLAME calls, each pandas batch is one
+    ``decode_batch`` call; its batch invariance keeps every row bit-equal
+    to a one-row decode."""
     n_shape = int(p.get("n_shape", 8))
     n_exp = int(p.get("n_exp", 8))
 
     def infer(model, pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
+        from talkinghead_datapipeline_spark.operators.inference import stack_column
 
-        rows = []
-        for name, idx, sh, ex, po in zip(
-            pdf["clip_name"], pdf["frame_idx"], pdf["shape"], pdf["exp"],
-            pdf["pose"],
-        ):
-            verts, lmk = model.decode(
-                np.asarray(sh[:n_shape], dtype=np.float64),
-                np.asarray(ex[:n_exp], dtype=np.float64),
-                np.asarray(po[:6], dtype=np.float64),
-            )
-            rows.append(
-                {
-                    "clip_name": name,
-                    "frame_idx": idx,
-                    "verts": verts.tolist(),
-                    "landmarks3d": lmk.tolist(),
-                }
-            )
-        return pd.DataFrame(rows)
+        verts, lmk = model.decode_batch(
+            stack_column(pdf["shape"])[:, :n_shape],
+            stack_column(pdf["exp"])[:, :n_exp],
+            stack_column(pdf["pose"])[:, :6],
+        )
+        return pd.DataFrame(
+            {
+                "clip_name": pdf["clip_name"].to_numpy(),
+                "frame_idx": pdf["frame_idx"].to_numpy(),
+                "verts": verts.tolist(),
+                "landmarks3d": lmk.tolist(),
+            }
+        )
 
     def factory():
         from talkinghead_datapipeline_spark.operators.models import FlameLbsDecoder
@@ -429,8 +426,7 @@ def _rendering(ctx: GraphContext, p: dict[str, Any]) -> None:
     size = int(p.get("image_size", 16))
 
     def infer(renderers, pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
+        from talkinghead_datapipeline_spark.operators.inference import stack_column
         from talkinghead_datapipeline_spark.operators.models import (
             FlameLbsDecoder,
             ShapeRenderer,
@@ -444,12 +440,8 @@ def _rendering(ctx: GraphContext, p: dict[str, Any]) -> None:
             model = renderers[size] = ShapeRenderer(
                 size_hw=(size, size), faces=FlameLbsDecoder().faces
             )
-        # Arrow hands nested arrays over as object arrays of arrays;
-        # stack row-wise (asarray on the object array is ragged-unsafe).
-        verts = np.stack(
-            [np.stack([np.asarray(r, dtype=np.float64) for r in v]) for v in pdf["verts"]]
-        )
-        cams = np.stack([np.asarray(c, dtype=np.float64) for c in pdf["cam"]])
+        verts = stack_column(pdf["verts"])
+        cams = stack_column(pdf["cam"])
         out = model.render_batch(verts, view_transform(verts, cams), ("normal", "bary", "mask"))
         return pd.DataFrame(
             {

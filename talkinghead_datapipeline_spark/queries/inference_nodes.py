@@ -151,15 +151,17 @@ def flame_decode_landmarks(spark: SparkSession, sf_dir: str) -> DataFrame:
     linear blend skinning → barycentric landmarks, in numpy over synthetic
     seeded bases. Codes are embedding slices — the same column
     code-splitting the reference does on EMOCA output
-    (dpl/emoca/inference.py:95-105). Broadcast-weight pattern: the decoder
-    basis loads once per executor, not per row. Decoded at rest pose, where
+    (dpl/emoca/inference.py:95-105). The decoder basis loads once per
+    executor, not per row. Decoded at rest pose, where
     the pipeline provably reduces to an affine map of the betas — which is
     what the oracle recomputes, value-checking every LBS stage end-to-end
     (the pose path is exercised by flame_render_pipeline and pinned against
-    hand-computed rotations in tests)."""
+    hand-computed rotations in tests). Each pandas batch is one
+    ``decode_batch`` call."""
     from talkinghead_datapipeline_spark.operators.inference import (
         batched_inference,
         split_error_channel,
+        stack_column,
     )
 
     emb = load_table(spark, sf_dir, "embeddings").select(
@@ -169,23 +171,18 @@ def flame_decode_landmarks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def infer(model, pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
-        rows = []
-        for vec_id, sh, ex in zip(pdf["vec_id"], pdf["shape_code"], pdf["exp_code"]):
-            verts, lmks = model.decode(
-                np.asarray(sh, dtype=np.float64), np.asarray(ex, dtype=np.float64)
-            )
-            rows.append(
-                {
-                    "vec_id": vec_id,
-                    "n_verts": verts.shape[0],
-                    "n_landmarks": lmks.shape[0],
-                    "lmk0_x": round(float(lmks[0, 0]), 6),
-                    "lmk0_y": round(float(lmks[0, 1]), 6),
-                }
-            )
-        return pd.DataFrame(rows)
+        verts, lmks = model.decode_batch(
+            stack_column(pdf["shape_code"]), stack_column(pdf["exp_code"])
+        )
+        return pd.DataFrame(
+            {
+                "vec_id": pdf["vec_id"].to_numpy(),
+                "n_verts": verts.shape[1],
+                "n_landmarks": lmks.shape[1],
+                "lmk0_x": [round(float(x), 6) for x in lmks[:, 0, 0]],
+                "lmk0_y": [round(float(y), 6) for y in lmks[:, 0, 1]],
+            }
+        )
 
     def factory():
         from talkinghead_datapipeline_spark.operators.models import FlameLbsDecoder
@@ -221,7 +218,7 @@ def _flame_render_oracle() -> str:
     # metadata path.
     #
     # The proj_lmk_*_micro columns value-check the N17 orthographic
-    # projection (VERDICT r10 #2): the oracle recomputes
+    # projection: the oracle recomputes
     # batch_orth_proj + the renderer's y/z flip from the SAME 6-decimal
     # landmark doubles and raw cam floats through the shared expression
     # text of functions.geometry.orth_project_sql — three IEEE mul/add/
@@ -277,27 +274,28 @@ def flame_render_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     embedding), project it to view space with the REAL orthographic camera
     math, and render to binary frames inside ONE mapInPandas stage — the
     operator fusion the reference gets only by materializing crops to disk
-    between nodes (SURVEY §2.b N15). The oracled projection (VERDICT r4 #5 +
-    r10 #2): render payload size (sink contract), cam-metadata norm, a
-    landmark decoded at the fixed _PROBE_POSE whose affine-in-betas closed
-    form the DuckDB oracle recomputes — value-checking the
+    between nodes (SURVEY §2.b N15). The oracled projection: render payload
+    size (sink contract), cam-metadata norm, a landmark decoded at the
+    fixed _PROBE_POSE whose affine-in-betas closed form the DuckDB oracle
+    recomputes — value-checking the
     Rodrigues/kinematic-chain/skinning path end-to-end — and that landmark's
     N17 projection (dpl/rendering/utils.py:135-145 batch_orth_proj + the
     y/z flip of dpl/processor/nodes/rendering.py:101-106), computed as
     codegen'd COLUMN EXPRESSIONS (functions.geometry.orth_project) from the
     certified 6-decimal landmark and the raw cam floats, displayed
-    floor-to-micro. The renderer is now REAL through the rasterizer and
+    floor-to-micro. The renderer is REAL through the rasterizer and
     SH-lighting tiers (operators.rasterize: point-in-triangle + z-buffer on
     the view_transform(verts, cam) tensor, vertex normals, SH irradiance —
     the gray shape-overlay mode of renderer.py:107-117); only the
     textured-albedo tier stays out of scope (licensed FLAME uv space). The
     frame bytes are pinned by unit tests; the rasterizer itself is
-    value-oracled cross-engine by the staged n17_render_mask_zbuffer."""
+    value-oracled cross-engine by n17_render_mask_zbuffer."""
     from talkinghead_datapipeline_spark.catalog import rebalance_for_compute
     from talkinghead_datapipeline_spark.functions.geometry import orth_project
     from talkinghead_datapipeline_spark.operators.inference import (
         batched_inference,
         split_error_channel,
+        stack_column,
     )
 
     # compute-dense per-row work (LBS decode + rasterize + SH): spread the
@@ -327,10 +325,9 @@ def flame_render_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         probe_base, probe_coefs = flame.posed_landmark_affine(
             0, np.asarray(_PROBE_POSE, dtype=np.float64)
         )
-        sh = np.stack([np.asarray(x, dtype=np.float64) for x in pdf["shape_code"]])
-        ex = np.stack([np.asarray(x, dtype=np.float64) for x in pdf["exp_code"]])
-        po = np.stack([np.asarray(x, dtype=np.float64) for x in pdf["pose_code"]])
-        cams = np.stack([np.asarray(x, dtype=np.float64) for x in pdf["cam_code"]])
+        sh, ex, po, cams = (
+            stack_column(pdf[c]) for c in ("shape_code", "exp_code", "pose_code", "cam_code")
+        )
         # per-row pose drives the rendered frames (the real N15/N17 shape);
         # decode + projection + rasterize/SH run as ONE vectorized batch —
         # the per-row form measured 7.9x slower at sf0.1
@@ -338,9 +335,8 @@ def flame_render_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         frames = renderer.render_batch(verts, view_transform(verts, cams), ("shade",))["shade"]
         rows = []
         for i, (vec_id, cam) in enumerate(zip(pdf["vec_id"], cams)):
-            # fixed probe pose drives the oracle-checked landmark; kept as
-            # the per-row matvec so the certified round(,6) displays ride
-            # the exact same reduction order as every prior round
+            # fixed probe pose drives the oracle-checked landmark; a per-row
+            # matvec, so its reduction order does not depend on the batch
             probe_lmk = probe_base + probe_coefs @ np.concatenate([sh[i], ex[i]])
             rows.append(
                 {
@@ -397,47 +393,118 @@ def flame_render_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# STAGED for r13 registration — n17_render_mask_zbuffer (VERDICT r11 #6).
-#
-# The N17 rasterizer tier as a value-oracled query: decode every embedding's
-# mesh at the fixed _PROBE_POSE, project with the real orthographic camera
-# (batch_orth_proj + the rendering-node y/z flip + the pytorch3d x/y flip +
-# the renderer's z+10 shift), quantize to the 1/4096 integer grid, and
-# rasterize all 48 FLAME-topology faces against the 16x16 pixel grid with
-# exact int64 edge functions and a z-buffer. Emits per mesh: covered pixel
-# count (the render_mask channel's content), the sum of winning face ids
-# (certifies nearest-z-wins + lowest-id tie rule per pixel), and the
-# floor-micro min/max interpolated z over the frame (certifies the
-# barycentric z interpolation itself). The DuckDB oracle re-runs the WHOLE
-# chain as relational algebra: per-vertex affine-in-betas literals
-# (posed_verts_affine — constants of the same seeded basis the executor
-# loads) -> the identical IEEE projection/quantization expression text ->
-# a pixel-grid x faces join with the same integer edge functions -> an
-# argmin window. rasterize() bounds |num| <= 3*2^51 and |den| <= 2^35
-# (operators/rasterize.py module docstring), so the single num/den division
-# is an IEEE op on exactly-representable int64 operands — bit-identical
-# cross-engine; every downstream display (floor of z/4096*1e6) therefore
-# needs no rounding-boundary argument. Coverage ties on shared edges are
-# exact integer predicates — both engines agree by construction.
-#
-# Determinism of the INPUT tensor: the query evaluates the vertex affine
-# form left-to-right (acc = b; acc += c_k*e_k), exactly the SQL's
-# left-associated `b + c1*e1 + ... + c16*e16`, so the floats entering
-# quantization are bit-identical too (the affine form is proven == the full
-# LBS decode to ~7e-16 at the probe pose in tests/test_render_mask_staged.py,
-# the same identity flame_render_pipeline's landmark oracle rides).
-#
-# Scale shape: ONE mapInPandas over embeddings (map-only, no shuffle, no
-# join) — each mesh rasterizes in microseconds of vectorized int64 numpy;
-# at 100 TB this is embarrassingly parallel and Arrow-batched. The oracle's
-# pixel x face cross join is oracle-side only (DuckDB at sf<=0.1).
-# Verified by tests/test_render_mask_staged.py at three SFs + x4 replication
-# + the three-axis invariance contract; registration takes an r13 seat per
-# the house staging rule.
-# ---------------------------------------------------------------------------
-
 _RAS_IMG_SIZE = 16
+
+
+def _probe_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The input of the N17 raster-tier queries: each embedding's 16 betas
+    and 3 cam floats. Rasterizing is compute-dense and the local input is a
+    single file, so the rows are spread across cores first."""
+    from talkinghead_datapipeline_spark.catalog import rebalance_for_compute
+
+    return rebalance_for_compute(load_table(spark, sf_dir, "embeddings")).select(
+        "vec_id",
+        F.slice("embedding", 1, 16).alias("betas"),
+        F.slice("embedding", 23, 3).alias("cam_code"),
+    )
+
+
+def _probe_mesh() -> dict:
+    """The model of the N17 raster-tier queries: every FLAME vertex at
+    ``_PROBE_POSE`` as an affine map of the betas, (V, 3, 1 + n_betas), and
+    the faces."""
+    import numpy as np
+
+    from talkinghead_datapipeline_spark.operators.models import FlameLbsDecoder
+
+    m = FlameLbsDecoder()
+    return {
+        "aff": m.posed_verts_affine(np.asarray(_PROBE_POSE, dtype=np.float64)),
+        "faces": m.faces,
+    }
+
+
+def _rasterize_probe(model: dict, pdf: pd.DataFrame) -> tuple:
+    """Decode, project and rasterize a batch of ``_probe_embeddings`` rows.
+
+    Returns the world-space vertices (B, V, 3) and ``rasterize_batch``'s
+    dict. The affine map is evaluated left to right (acc = b; acc += c_k·e_k),
+    the association of the oracles' ``b + c1*e1 + ... + c16*e16``, and the
+    projection, flips and z+10 shift are the IEEE ops of
+    ``_screen_quant_exprs``, so the quantized vertices are bit-equal across
+    engines."""
+    import numpy as np
+
+    from talkinghead_datapipeline_spark.operators.inference import stack_column
+    from talkinghead_datapipeline_spark.operators.rasterize import (
+        quantize_verts,
+        rasterize_batch,
+    )
+
+    aff = model["aff"]
+    e = stack_column(pdf["betas"])
+    s, tx, ty = stack_column(pdf["cam_code"]).T[:, :, None]  # (B, 1) each
+    acc = np.broadcast_to(aff[..., 0], (len(e),) + aff.shape[:2]).copy()
+    for k in range(e.shape[1]):
+        acc = acc + aff[None, ..., k + 1] * e[:, k, None, None]
+    screen = np.empty_like(acc)
+    screen[..., 0] = -(s * (acc[..., 0] + tx))
+    screen[..., 1] = s * (acc[..., 1] + ty)
+    screen[..., 2] = (-(s * acc[..., 2])) + 10.0
+    return acc, rasterize_batch(quantize_verts(screen), model["faces"], _RAS_IMG_SIZE)
+
+
+def _winner_interp(ras: dict, faces, per_vert) -> list:
+    """Each component of a per-vertex value (B, V, D) at every pixel of a
+    ``rasterize_batch`` result, interpolated over the winning face as
+    ((b0·v0) + (b1·v1)) + (b2·v2), the oracles' association order.
+    Returns D arrays of (B, H, W); uncovered pixels read face 0."""
+    import numpy as np
+
+    corners = faces[np.where(ras["mask"], ras["pix_to_face"], 0)]  # (B, H, W, 3)
+    v = per_vert[np.arange(len(per_vert))[:, None, None, None], corners]
+    b0, b1, b2 = (ras["bary"][..., i] for i in range(3))
+    return [
+        ((b0 * v[..., 0, d]) + (b1 * v[..., 1, d])) + (b2 * v[..., 2, d])
+        for d in range(v.shape[-1])
+    ]
+
+
+def _pixel_normals(acc, faces, ras: dict) -> list:
+    """The unit vertex normals of the QUANTIZED world mesh (floor(v·4096),
+    symmetric clamp), interpolated at every pixel: [nx, ny, nz] of (B, H, W).
+    On the quantized mesh the corner crosses are exact int64 and integer sums
+    are order-free, so DuckDB's SUM over the same corners gives the same
+    normals; the float ``vertex_normals`` sum order is not expressible in
+    SQL."""
+    from talkinghead_datapipeline_spark.operators.rasterize import (
+        normalize_int_vectors,
+        quantize_symmetric,
+        quantized_vertex_normals_batch,
+    )
+
+    u = normalize_int_vectors(quantized_vertex_normals_batch(quantize_symmetric(acc), faces))
+    return _winner_interp(ras, faces, u)
+
+
+def _per_mesh_stats(vec_ids, mask, sums, extrema, columns: list[str]) -> pd.DataFrame:
+    """The per-mesh tail of the N17 raster-tier queries: covered-pixel
+    count, the int64 sum of ``sums`` and the min and max of ``extrema``
+    over the covered pixels. A mesh that covers no pixel gets 0, 0, null,
+    null, as the oracles' LEFT JOIN does."""
+    import numpy as np
+
+    rows = []
+    for bi, vec_id in enumerate(vec_ids):
+        m = mask[bi]
+        n_cov = int(m.sum())
+        if n_cov:
+            ext = extrema[bi][m].astype(np.int64)
+            total = sums[bi][m].astype(np.int64).sum()
+            rows.append((vec_id, n_cov, int(total), int(ext.min()), int(ext.max())))
+        else:
+            rows.append((vec_id, 0, 0, None, None))
+    return pd.DataFrame(rows, columns=columns)
 
 
 def _flame_affine_parts() -> dict:
@@ -615,133 +682,62 @@ N17_RENDER_MASK_ORACLE = _render_mask_oracle()
 )
 def n17_render_mask_zbuffer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """N17 rasterizer tier, value-oracled end-to-end: probe-pose mesh ->
-    orthographic projection -> integer-grid quantization -> exact edge-
-    function coverage + z-buffer over the 16x16 frame; per mesh the mask
-    pixel count, winning-face-id sum, and floor-micro z extrema. See the
-    staging block above for the determinism and scale contract."""
-    from talkinghead_datapipeline_spark.catalog import rebalance_for_compute
+    orthographic projection (batch_orth_proj, the rendering node's y/z flip,
+    pytorch3d's x/y flip, the renderer's z+10 shift) -> 1/4096 integer-grid
+    quantization -> exact int64 edge-function coverage + z-buffer of all
+    faces over the 16x16 frame. Per mesh: the covered pixel count (the
+    render_mask channel), the sum of winning face ids (nearest z wins, ties
+    to the lowest id) and the floor-micro min/max interpolated z (the
+    barycentric z interpolation).
+
+    The oracle re-runs the chain as relational algebra: per-vertex
+    affine-in-betas literals, the same projection/quantization text, a
+    pixel x face join with the same integer edge functions, and an argmin
+    window. Bit-equality rests on three conditions:
+
+    - the quantized vertices are bit-equal (``_rasterize_probe``);
+    - coverage is an exact integer predicate, so shared-edge ties agree
+      without a top-left rule;
+    - ``rasterize`` bounds |num| <= 3*2^51 and |den| <= 2^35 (module
+      docstring of operators/rasterize.py), so the one num/den division
+      is an IEEE op on exactly representable int64 operands and the
+      floor-micro display needs no rounding-boundary argument.
+
+    Map-only: one mapInPandas over embeddings, no shuffle or join. The
+    pixel x face cross join is oracle-side only."""
     from talkinghead_datapipeline_spark.operators.inference import (
         batched_inference,
         split_error_channel,
     )
 
-    # compute-dense per-row rasterization: spread the single-file local
-    # input across cores before the mapInPandas stage
-    emb = rebalance_for_compute(load_table(spark, sf_dir, "embeddings")).select(
-        "vec_id",
-        F.slice("embedding", 1, 16).alias("betas"),
-        F.slice("embedding", 23, 3).alias("cam_code"),
-    )
-
     def infer(model, pdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np
 
-        from talkinghead_datapipeline_spark.operators.rasterize import (
-            quantize_verts,
-            rasterize,
-        )
-
-        aff, faces, scale = model["aff"], model["faces"], model["scale"]
-        rows = []
-        for vec_id, betas, cam in zip(pdf["vec_id"], pdf["betas"], pdf["cam_code"]):
-            e = np.asarray(betas, dtype=np.float64)
-            s, tx, ty = (float(c) for c in np.asarray(cam, dtype=np.float64))
-            # left-to-right affine eval — the SQL's association order
-            acc = aff[..., 0].copy()
-            for k in range(e.shape[0]):
-                acc = acc + aff[..., k + 1] * e[k]
-            screen = np.empty_like(acc)
-            screen[:, 0] = -(s * (acc[:, 0] + tx))
-            screen[:, 1] = s * (acc[:, 1] + ty)
-            screen[:, 2] = (-(s * acc[:, 2])) + 10.0
-            ras = rasterize(quantize_verts(screen), faces, _RAS_IMG_SIZE)
-            mask = ras["mask"]
-            n_cov = int(mask.sum())
-            if n_cov:
-                zcov = ras["zbuf"][mask]
-                zmin = int(np.floor((zcov.min() / float(scale)) * 1000000.0))
-                zmax = int(np.floor((zcov.max() / float(scale)) * 1000000.0))
-                fsum = int(ras["pix_to_face"][mask].sum())
-            else:
-                zmin = zmax = None
-                fsum = 0
-            rows.append(
-                {
-                    "vec_id": vec_id,
-                    "mask_pixels": n_cov,
-                    "winner_face_sum": fsum,
-                    "zmin_micro": zmin,
-                    "zmax_micro": zmax,
-                }
-            )
-        return pd.DataFrame(rows)
-
-    def factory():
-        import numpy as np
-
-        from talkinghead_datapipeline_spark.operators.models import FlameLbsDecoder
         from talkinghead_datapipeline_spark.operators.rasterize import SCALE
 
-        m = FlameLbsDecoder()
-        return {
-            "aff": m.posed_verts_affine(np.asarray(_PROBE_POSE, dtype=np.float64)),
-            "faces": m.faces,
-            "scale": SCALE,
-        }
+        _, ras = _rasterize_probe(model, pdf)
+        # /SCALE, x1e6 and floor are monotone, so the min/max of the
+        # per-pixel values equal the oracle's floor of min/max
+        micro = np.floor((ras["zbuf"] / float(SCALE)) * 1000000.0)
+        return _per_mesh_stats(
+            pdf["vec_id"],
+            ras["mask"],
+            ras["pix_to_face"],
+            micro,
+            ["vec_id", "mask_pixels", "winner_face_sum", "zmin_micro", "zmax_micro"],
+        )
 
     out = batched_inference(
-        emb,
+        _probe_embeddings(spark, sf_dir),
         output_schema=(
             "vec_id bigint, mask_pixels bigint, winner_face_sum bigint, "
             "zmin_micro bigint, zmax_micro bigint"
         ),
         model_key="n17_rasterizer",
-        model_factory=factory,
+        model_factory=_probe_mesh,
         batch_fn=infer,
     )
     return split_error_channel(out)[0]
-
-
-# ---------------------------------------------------------------------------
-# STAGED for r14 registration — n17_render_shaded_checksum (VERDICT r12 #4).
-#
-# The SH-SHADED gray-overlay channel as a value-oracled query — the one N17
-# value tier n17_render_mask_zbuffer leaves uncertified. Per embedding:
-# decode the mesh at _PROBE_POSE (the same left-to-right affine eval), then
-#   * rasterize the VIEW mesh exactly as the mask query does (identical
-#     projection/quantization text, exact int64 edge functions, nearest-z
-#     lowest-id winner), and
-#   * shade each covered pixel with the reference's SH irradiance
-#     (renderer.py:232-262) of the barycentric-interpolated vertex normal
-#     (utils.py:80-132 corner-cross accumulation), on the gray 180/255
-#     albedo (renderer.py:107-117) with ShapeRenderer's seeded sh_coeff
-#     folded to gray weights (irradiance is linear in the coefficients).
-# Emits per mesh the covered-pixel count and the floor-micro sum/min/max of
-# the UNCLIPPED shaded gray value — a checksum over every lit pixel.
-#
-# Cross-engine exactness (the new argument this tier needed): the float
-# ``vertex_normals`` accumulates per-vertex cross products in einsum/BLAS
-# order, which SQL cannot pin — so the certified statistic computes normals
-# on the QUANTIZED WORLD mesh (floor(v·4096), symmetric clamp): the corner
-# crosses are then exact int64 and integer addition is ORDER-FREE, so
-# DuckDB's SUM over an unnest of the same three corner contributions is
-# bit-identical by construction. Everything downstream — sqrt-normalize
-# with the 1e-6 guard, barycentric weights E_i/den on exact operands, the
-# nine-term SH chain against literal gray weights, ×(180/255), ×1e6, floor
-# — is a pinned-association sequence of single correctly-rounded IEEE ops
-# (+ − × ÷ sqrt only, no libm-divergent ln/exp), so the WHOLE shade value
-# is bit-identical cross-engine and the floor needs no rounding-boundary
-# argument. tests/test_render_shade_staged.py additionally fuzzes the
-# numpy chain against DuckDB evaluating the same expression text on random
-# integer normals, and pins the quantized-normal shade against the float-
-# normal ShapeRenderer semantics within quantization tolerance.
-#
-# Scale shape: ONE mapInPandas over embeddings (map-only, no shuffle, no
-# join) — meshes rasterize and shade in vectorized numpy; at 100 TB this is
-# embarrassingly parallel and Arrow-batched. The oracle's pixel×face join
-# and per-vertex corner unnest are oracle-side only (DuckDB at sf≤0.1).
-# Whitelist: not needed (map-only — no join of any kind in the plan).
-# ---------------------------------------------------------------------------
 
 
 def _render_shade_oracle() -> str:
@@ -945,103 +941,50 @@ N17_RENDER_SHADE_ORACLE = _render_shade_oracle()
 )
 def n17_render_shaded_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """N17 shaded-channel tier, value-oracled end-to-end: probe-pose mesh ->
-    quantized-world-mesh vertex normals (exact int64 corner-cross sums) ->
-    rasterize the view mesh -> barycentric-interpolated normal per covered
-    pixel -> nine-term SH gray shade x 180/255 albedo -> floor-micro
-    count/sum/min/max per mesh. See the staging block above for the
-    cross-engine bit-exactness argument (only correctly-rounded IEEE ops in
-    a pinned association order). STAGED r13, REGISTERED r14."""
-    from talkinghead_datapipeline_spark.catalog import rebalance_for_compute
+    rasterize the view mesh as n17_render_mask_zbuffer does -> the
+    quantized world mesh's vertex normals (``_pixel_normals``) interpolated
+    per covered pixel -> the reference's nine-term SH irradiance
+    (renderer.py:232-262) with ShapeRenderer's seeded sh_coeff folded to
+    gray weights (irradiance is linear in the coefficients) -> x 180/255
+    gray albedo (renderer.py:107-117). Per mesh: covered-pixel count and
+    the floor-micro sum/min/max of the UNCLIPPED shaded value.
+
+    Bit-equality with the oracle holds because the normals are exact
+    integer sums and everything after them (sqrt-normalize with the 1e-6
+    guard, barycentric weights E_i/den on exact operands, the SH chain
+    against literal weights, x 180/255, x 1e6, floor) is a pinned-association
+    sequence of single correctly-rounded IEEE ops (+ - x / sqrt, no libm
+    ln/exp). Map-only: one mapInPandas over embeddings; the oracle's
+    pixel x face join and per-vertex corner unnest are oracle-side only."""
     from talkinghead_datapipeline_spark.operators.inference import (
         batched_inference,
         split_error_channel,
     )
 
-    emb = rebalance_for_compute(load_table(spark, sf_dir, "embeddings")).select(
-        "vec_id",
-        F.slice("embedding", 1, 16).alias("betas"),
-        F.slice("embedding", 23, 3).alias("cam_code"),
-    )
-
     def infer(model, pdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np
 
-        from talkinghead_datapipeline_spark.operators.rasterize import (
-            normalize_int_vectors,
-            quantize_symmetric,
-            quantize_verts,
-            quantized_vertex_normals_batch,
-            rasterize_batch,
-            sh_gray_chain,
-        )
+        from talkinghead_datapipeline_spark.operators.rasterize import sh_gray_chain
 
-        aff, faces, w, alb = (
-            model["aff"], model["faces"], model["weights"], model["albedo"],
-        )
-        e = np.stack([np.asarray(b, dtype=np.float64) for b in pdf["betas"]])
-        cam = np.stack(
-            [np.asarray(c, dtype=np.float64) for c in pdf["cam_code"]]
-        )
-        B = e.shape[0]
-        # left-to-right affine eval — the SQL's association order
-        acc = np.broadcast_to(aff[..., 0], (B,) + aff.shape[:2]).copy()
-        for k in range(e.shape[1]):
-            acc = acc + aff[None, ..., k + 1] * e[:, k, None, None]
-        s = cam[:, 0][:, None]
-        tx, ty = cam[:, 1][:, None], cam[:, 2][:, None]
-        screen = np.empty_like(acc)
-        screen[..., 0] = -(s * (acc[..., 0] + tx))
-        screen[..., 1] = s * (acc[..., 1] + ty)
-        screen[..., 2] = (-(s * acc[..., 2])) + 10.0
-        ras = rasterize_batch(quantize_verts(screen), faces, _RAS_IMG_SIZE)
-        mask, bary, p2f = ras["mask"], ras["bary"], ras["pix_to_face"]
-        # quantized WORLD mesh normals: exact int64 sums, order-free
-        u = normalize_int_vectors(
-            quantized_vertex_normals_batch(quantize_symmetric(acc), faces)
-        )  # (B, V, 3)
-        corners = faces[np.where(mask, p2f, 0)]  # (B, H, W, 3) vert ids
-        bidx = np.arange(B)[:, None, None, None]
-        uc = u[bidx, corners]  # (B, H, W, corner, comp)
-        b0, b1, b2 = bary[..., 0], bary[..., 1], bary[..., 2]
-        nxp = ((b0 * uc[..., 0, 0]) + (b1 * uc[..., 1, 0])) + (b2 * uc[..., 2, 0])
-        nyp = ((b0 * uc[..., 0, 1]) + (b1 * uc[..., 1, 1])) + (b2 * uc[..., 2, 1])
-        nzp = ((b0 * uc[..., 0, 2]) + (b1 * uc[..., 1, 2])) + (b2 * uc[..., 2, 2])
-        micro = np.floor((sh_gray_chain(nxp, nyp, nzp, w) * alb) * 1000000.0)
-        rows = []
-        for bi, vec_id in enumerate(pdf["vec_id"]):
-            m = mask[bi]
-            n_cov = int(m.sum())
-            if n_cov:
-                pm = micro[bi][m].astype(np.int64)
-                rows.append((vec_id, n_cov, int(pm.sum()), int(pm.min()), int(pm.max())))
-            else:
-                rows.append((vec_id, 0, 0, None, None))
-        return pd.DataFrame(
-            rows,
-            columns=[
-                "vec_id", "covered_pixels", "shade_sum_micro",
-                "shade_min_micro", "shade_max_micro",
-            ],
+        acc, ras = _rasterize_probe(model, pdf)
+        nxp, nyp, nzp = _pixel_normals(acc, model["faces"], ras)
+        shade = sh_gray_chain(nxp, nyp, nzp, model["weights"])
+        micro = np.floor((shade * (180.0 / 255.0)) * 1000000.0)
+        return _per_mesh_stats(
+            pdf["vec_id"],
+            ras["mask"],
+            micro,
+            micro,
+            ["vec_id", "covered_pixels", "shade_sum_micro", "shade_min_micro", "shade_max_micro"],
         )
 
     def factory():
-        import numpy as np
+        from talkinghead_datapipeline_spark.operators.rasterize import shade_gray_weights
 
-        from talkinghead_datapipeline_spark.operators.models import FlameLbsDecoder
-        from talkinghead_datapipeline_spark.operators.rasterize import (
-            shade_gray_weights,
-        )
-
-        m = FlameLbsDecoder()
-        return {
-            "aff": m.posed_verts_affine(np.asarray(_PROBE_POSE, dtype=np.float64)),
-            "faces": m.faces,
-            "weights": shade_gray_weights(),
-            "albedo": 180.0 / 255.0,
-        }
+        return {**_probe_mesh(), "weights": shade_gray_weights()}
 
     out = batched_inference(
-        emb,
+        _probe_embeddings(spark, sf_dir),
         output_schema=(
             "vec_id bigint, covered_pixels bigint, shade_sum_micro bigint, "
             "shade_min_micro bigint, shade_max_micro bigint"
@@ -1051,40 +994,6 @@ def n17_render_shaded_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
         batch_fn=infer,
     )
     return split_error_channel(out)[0]
-
-
-# ---------------------------------------------------------------------------
-# STAGED for r14 registration — n17_render_texture_checksum (r13: the FULL
-# textured forward pass, closing the last N17 value tier).
-#
-# With mask/z-buffer (registered r13) and the SH-shaded gray overlay
-# (staged above) certified, the one remaining N17 channel is ``texture`` —
-# the reference's complete forward composition (renderer.py:186-218):
-# barycentric uv interpolation (uv·2−1, y flipped, renderer.py:95-99) →
-# bilinear ``grid_sample`` of the albedo map (align_corners=False, zeros
-# padding, renderer.py:188) → per-channel SH shading → RGB mean. This
-# query certifies EXACTLY that composition per covered pixel (on the
-# seeded stand-in uv/albedo assets — the licensed FLAME textures drop in
-# field-for-field), emitting floor-micro count/sum/min/max of the
-# unclipped texel·shade product.
-#
-# Cross-engine exactness extends the shade query's argument: uv literals
-# and per-channel albedo/SH-weight literals are CONSTANTS embedded as
-# repr text (association irrelevant — both engines read the same
-# doubles); the grid_sample chain — ix = ((g+1)·W−1)/2, floor, the exact
-# fractional weights ix−floor(ix), the 4-tap weighted accumulation in the
-# reference's (x0y0, x1y0, x0y1, x1y1) order with zero out-of-range taps
-# (LEFT JOIN miss ≡ the valid mask), per-channel shade chains, and the
-# ((r+g)+b)/3 mean — is again a pinned-association sequence of single
-# correctly-rounded IEEE ops. The oracle REUSES the shade oracle's CTE
-# prefix verbatim (string-sliced from the generated text, so the two
-# staged rasterizer oracles cannot drift apart) and appends the
-# uv/albedo literal tables plus the tap joins.
-#
-# Scale shape: identical to the shade query — ONE map-only mapInPandas
-# over embeddings; the 4096-row albedo and 64-row uv literal tables are
-# oracle-side only. No whitelist entry needed.
-# ---------------------------------------------------------------------------
 
 
 def _texture_assets() -> dict:
@@ -1231,128 +1140,55 @@ N17_RENDER_TEXTURE_ORACLE = _render_texture_oracle()
 )
 def n17_render_texture_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """N17 texture tier, value-oracled end-to-end: the reference's FULL
-    textured forward composition — barycentric uv -> bilinear grid_sample
-    of the (stand-in) albedo -> per-channel SH shading -> RGB mean — per
-    covered pixel, floor-micro count/sum/min/max per mesh. See the staging
-    block above for the exactness argument and asset provenance. STAGED
-    r13, REGISTERED r14."""
-    from talkinghead_datapipeline_spark.catalog import rebalance_for_compute
+    textured forward composition (renderer.py:186-218) per covered pixel —
+    barycentric uv interpolation (uv·2−1, y flipped, renderer.py:95-99) ->
+    bilinear ``grid_sample`` of the albedo map (align_corners=False, zeros
+    padding, renderer.py:188; ``rasterize.grid_sample_bilinear``) ->
+    per-channel SH shading -> RGB mean. Per mesh: covered-pixel count and
+    the floor-micro sum/min/max of the unclipped texel·shade product. The
+    uv and albedo assets are seeded stand-ins (``_texture_assets``); the
+    licensed FLAME textures drop in field-for-field.
+
+    Bit-equality with the oracle extends the shade query's conditions: the
+    uv, albedo and per-channel SH weights are constants that both engines
+    read as the same repr literals, and the grid_sample chain (ix =
+    ((g+1)·W−1)/2, floor, the fractional weights, the 4-tap sum in the
+    reference's (x0y0, x1y0, x0y1, x1y1) order with zero out-of-range taps)
+    and the ((r+g)+b)/3 mean are pinned-association sequences of single
+    correctly-rounded IEEE ops. Map-only, like the shade query."""
     from talkinghead_datapipeline_spark.operators.inference import (
         batched_inference,
         split_error_channel,
-    )
-
-    emb = rebalance_for_compute(load_table(spark, sf_dir, "embeddings")).select(
-        "vec_id",
-        F.slice("embedding", 1, 16).alias("betas"),
-        F.slice("embedding", 23, 3).alias("cam_code"),
     )
 
     def infer(model, pdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np
 
         from talkinghead_datapipeline_spark.operators.rasterize import (
-            normalize_int_vectors,
-            quantize_symmetric,
-            quantize_verts,
-            quantized_vertex_normals_batch,
-            rasterize_batch,
+            grid_sample_bilinear,
             sh_gray_chain,
         )
 
-        aff, faces = model["aff"], model["faces"]
-        uv_ndc, albedo, w = model["uv_ndc"], model["albedo"], model["weights"]
-        e = np.stack([np.asarray(b, dtype=np.float64) for b in pdf["betas"]])
-        cam = np.stack(
-            [np.asarray(c, dtype=np.float64) for c in pdf["cam_code"]]
-        )
-        B = e.shape[0]
-        acc = np.broadcast_to(aff[..., 0], (B,) + aff.shape[:2]).copy()
-        for k in range(e.shape[1]):
-            acc = acc + aff[None, ..., k + 1] * e[:, k, None, None]
-        s = cam[:, 0][:, None]
-        tx, ty = cam[:, 1][:, None], cam[:, 2][:, None]
-        screen = np.empty_like(acc)
-        screen[..., 0] = -(s * (acc[..., 0] + tx))
-        screen[..., 1] = s * (acc[..., 1] + ty)
-        screen[..., 2] = (-(s * acc[..., 2])) + 10.0
-        ras = rasterize_batch(quantize_verts(screen), faces, _RAS_IMG_SIZE)
-        mask, bary, p2f = ras["mask"], ras["bary"], ras["pix_to_face"]
-        u = normalize_int_vectors(
-            quantized_vertex_normals_batch(quantize_symmetric(acc), faces)
-        )
-        corners = faces[np.where(mask, p2f, 0)]
-        bidx = np.arange(B)[:, None, None, None]
-        uc = u[bidx, corners]
-        gc = uv_ndc[corners]  # (B, H, W, corner, 2) — constants per vid
-        b0, b1, b2 = bary[..., 0], bary[..., 1], bary[..., 2]
-
-        def interp(comp):
-            return ((b0 * comp[..., 0]) + (b1 * comp[..., 1])) + (
-                b2 * comp[..., 2]
-            )
-
-        nxp = interp(uc[..., 0])
-        nyp = interp(uc[..., 1])
-        nzp = interp(uc[..., 2])
-        gxp = interp(gc[..., 0])
-        gyp = interp(gc[..., 1])
-        # grid_sample align_corners=False, zeros padding — the pinned twin
-        # of operators.rasterize.grid_sample_bilinear (order-equality is
-        # pinned in tests/test_render_texture_staged.py)
-        ix = (((gxp + 1.0) * 64.0) - 1.0) / 2.0
-        iy = (((gyp + 1.0) * 64.0) - 1.0) / 2.0
-        x0 = np.floor(ix)
-        y0 = np.floor(iy)
-        wx1 = ix - x0
-        wy1 = iy - y0
-        x0i, y0i = x0.astype(np.int64), y0.astype(np.int64)
-        texel = None
-        for c in range(3):
-            img = albedo[c]
-            acc_c = np.zeros_like(ix)
-            for xi, yi, wgt in (
-                (x0i, y0i, (1.0 - wx1) * (1.0 - wy1)),
-                (x0i + 1, y0i, wx1 * (1.0 - wy1)),
-                (x0i, y0i + 1, (1.0 - wx1) * wy1),
-                (x0i + 1, y0i + 1, wx1 * wy1),
-            ):
-                valid = (xi >= 0) & (xi < 64) & (yi >= 0) & (yi < 64)
-                tapv = img[np.clip(yi, 0, 63), np.clip(xi, 0, 63)]
-                acc_c = acc_c + tapv * (wgt * valid)
-            shade_c = sh_gray_chain(nxp, nyp, nzp, w[:, c])
-            term = acc_c * shade_c
-            texel = term if texel is None else texel + term
-        texel = texel / 3.0
-        micro = np.floor(texel * 1000000.0)
-        rows = []
-        for bi, vec_id in enumerate(pdf["vec_id"]):
-            m = mask[bi]
-            n_cov = int(m.sum())
-            if n_cov:
-                pm = micro[bi][m].astype(np.int64)
-                rows.append((vec_id, n_cov, int(pm.sum()), int(pm.min()), int(pm.max())))
-            else:
-                rows.append((vec_id, 0, 0, None, None))
-        return pd.DataFrame(
-            rows,
-            columns=["vec_id", "covered_pixels", "tex_sum_micro", "tex_min_micro", "tex_max_micro"],
+        acc, ras = _rasterize_probe(model, pdf)
+        normals = _pixel_normals(acc, model["faces"], ras)
+        uv = np.broadcast_to(model["uv_ndc"], (len(acc),) + model["uv_ndc"].shape)
+        grid = np.stack(_winner_interp(ras, model["faces"], uv), axis=-1)
+        texel = grid_sample_bilinear(model["albedo"], grid)  # (3, B, H, W)
+        r, g, b = (texel[c] * sh_gray_chain(*normals, model["weights"][:, c]) for c in range(3))
+        micro = np.floor((((r + g) + b) / 3.0) * 1000000.0)
+        return _per_mesh_stats(
+            pdf["vec_id"],
+            ras["mask"],
+            micro,
+            micro,
+            ["vec_id", "covered_pixels", "tex_sum_micro", "tex_min_micro", "tex_max_micro"],
         )
 
     def factory():
-        import numpy as np
-
-        from talkinghead_datapipeline_spark.operators.models import FlameLbsDecoder
-
-        m = FlameLbsDecoder()
-        return {
-            "aff": m.posed_verts_affine(np.asarray(_PROBE_POSE, dtype=np.float64)),
-            "faces": m.faces,
-            **_texture_assets(),
-        }
+        return {**_probe_mesh(), **_texture_assets()}
 
     out = batched_inference(
-        emb,
+        _probe_embeddings(spark, sf_dir),
         output_schema=(
             "vec_id bigint, covered_pixels bigint, tex_sum_micro bigint, "
             "tex_min_micro bigint, tex_max_micro bigint"

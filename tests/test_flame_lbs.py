@@ -92,11 +92,21 @@ def test_landmarks_are_barycentric_mix_of_face_corners(dec):
 
 
 def test_decode_batch_matches_single(dec):
-    shapes = rng.normal(size=(3, 8))
-    exps = rng.normal(size=(3, 8))
-    poses = rng.normal(size=(3, 6)) * 0.1
-    vb, lb = dec.decode_batch(shapes, exps, poses)
-    for i in range(3):
-        v, l = dec.decode(shapes[i], exps[i], poses[i])
-        np.testing.assert_allclose(vb[i], v, atol=0)
-        np.testing.assert_allclose(lb[i], l, atol=0)
+    """decode_batch is batch-invariant: on EMOCA-stub codes, every row of a
+    batch of any size, with and without pose, is bit-equal to ``decode`` on
+    that row alone. The FLAME node and flame_decode_landmarks decode whole
+    pandas batches and rely on it for outputs that do not depend on how
+    Arrow cut the batches."""
+    from talkinghead_datapipeline_spark.operators.models import EmocaEncoderStub
+
+    enc = EmocaEncoderStub()
+    seeds = np.random.default_rng(20261019)
+    for B in (1, 2, 3, 7, 13, 64, 257):
+        codes = [enc.encode(seeds.bytes(16)) for _ in range(B)]
+        shape, exp, pose = (np.stack([c[k] for c in codes]) for k in ("shape", "exp", "pose"))
+        for with_pose in (True, False):
+            p = pose if with_pose else None
+            vb, lb = dec.decode_batch(shape, exp, p)
+            for i in range(B):
+                v, lm = dec.decode(shape[i], exp[i], None if p is None else p[i])
+                assert np.array_equal(vb[i], v) and np.array_equal(lb[i], lm), (B, with_pose, i)

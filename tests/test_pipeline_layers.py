@@ -18,7 +18,7 @@ from talkinghead_datapipeline_spark.operators.inference import (
 )
 from talkinghead_datapipeline_spark.operators.models import (
     EmocaEncoderStub,
-    FlameDecoderStub,
+    FlameLbsDecoder,
     ShapeRenderer,
     Wav2vecStub,
     fake_decode_image,
@@ -215,7 +215,7 @@ def test_model_stubs_contracts():
     code2 = enc.encode(b"fake-crop-bytes")
     np.testing.assert_array_equal(code["shape"], code2["shape"])  # deterministic
 
-    flame = FlameDecoderStub()
+    flame = FlameLbsDecoder()
     verts, lmk = flame.decode(code["shape"][:8], code["exp"][:8])
     assert verts.shape == (64, 3) and lmk.shape == (12, 3)
     # linearity: decode(0,0) == template
@@ -253,7 +253,7 @@ def test_inference_pipeline_wav2vec_shape(spark):
     out = batched_inference(
         df,
         output_schema="name string, frame_idx long, feat array<double>",
-        model_key="wav2vec_stub",
+        model_key="wav2vec_stub_dim4",
         model_factory=lambda: Wav2vecStub(dim=4),
         batch_fn=batch_fn,
     ).toPandas()
@@ -511,38 +511,51 @@ def test_foreach_batch_upsert(spark, sf_dir, tmp_path):
     assert len(second) == spark.read.parquet(sink).select("user_id").distinct().count()
 
 
-def test_broadcast_weights_factory(spark):
-    """Weights broadcast once; model rebuilt from bc.value in workers."""
-    import numpy as np
-    import pandas as pd
+def _one_row_decodes(src: str) -> list[int]:
+    """Lines of ``x.decode(...)`` calls with a non-literal argument: a FLAME
+    decode takes arrays, a bytes decode takes literal codec names."""
+    import ast
 
-    from talkinghead_datapipeline_spark.operators.inference import (
-        batched_inference,
-        broadcast_weights_factory,
-        split_error_channel,
-    )
+    return [
+        node.lineno
+        for node in ast.walk(ast.parse(src))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "decode"
+        and not all(
+            isinstance(a, ast.Constant) and isinstance(a.value, str)
+            for a in [*node.args, *(k.value for k in node.keywords)]
+        )
+    ]
 
-    df = spark.createDataFrame([(i, float(i)) for i in range(100)], "id long, x double")
-    weights = np.arange(8, dtype=np.float64)  # stand-in for big tensors
 
-    class Linear:
-        def __init__(self, w):
-            self.w = w
+def test_model_steps_stack_and_decode_in_one_place():
+    """Arrow's nested arrays become ndarrays through
+    ``inference.stack_column`` only, and FLAME decodes through
+    ``decode_batch`` only. A package module other than
+    operators/inference.py that spells ``np.stack([np.asarray(``, or any
+    package module that calls a one-row ``.decode(``, fails here."""
+    import re
+    from pathlib import Path
 
-        def apply(self, x):
-            return float(self.w.sum()) * x
+    from talkinghead_datapipeline_spark.operators import inference
 
-    factory = broadcast_weights_factory(df, weights, Linear)
-
-    def fn(model, pdf: pd.DataFrame) -> pd.DataFrame:
-        return pd.DataFrame({"id": pdf["id"], "y": [model.apply(v) for v in pdf["x"]]})
-
-    res = batched_inference(df, "id long, y double", "bc_linear", factory, fn)
-    ok, _ = split_error_channel(res)
-    got = {r.id: r.y for r in ok.collect()}
-    assert got[3] == 28.0 * 3  # sum(0..7)=28
-    assert len(got) == 100
-
+    home = Path(inference.__file__).resolve()
+    package = home.parents[1]
+    stack = re.compile(r"np\.stack\(\s*\[\s*np\.asarray\(")
+    assert stack.search(home.read_text()), "the scan no longer matches the home module"
+    assert _one_row_decodes("v, lm = model.decode(sh, ex)\nb.decode('utf-8')") == [1]
+    offenders = []
+    for path in sorted(package.rglob("*.py")):
+        src = path.read_text()
+        rel = path.relative_to(package)
+        if path.resolve() != home:
+            offenders += [
+                f"{rel}: stacks at line {src.count(chr(10), 0, m.start()) + 1}"
+                for m in stack.finditer(src)
+            ]
+        offenders += [f"{rel}: one-row decode at line {n}" for n in _one_row_decodes(src)]
+    assert not offenders, offenders
 
 
 def _render_batch_fns(spark, monkeypatch, sizes):

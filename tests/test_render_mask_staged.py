@@ -1,4 +1,4 @@
-"""N17 rasterizer query n17_render_mask_zbuffer (STAGED for r13).
+"""N17 rasterizer query n17_render_mask_zbuffer.
 
 Oracle differential (tests/test_queries_oracle.py), the affine-eval ≡
 full-LBS-decode identity at the probe pose, an independent numpy recompute

@@ -1,4 +1,4 @@
-"""N17 shaded-channel query n17_render_shaded_checksum (STAGED for r14).
+"""N17 shaded-channel query n17_render_shaded_checksum.
 
 Oracle differential (tests/test_queries_oracle.py), a hypothesis fuzz of
 the pinned-order normalize + SH gray chain against DuckDB evaluating the

@@ -1,9 +1,9 @@
-"""N17 texture-channel query n17_render_texture_checksum (STAGED for r14).
+"""N17 texture-channel query n17_render_texture_checksum.
 
 Oracle differential (tests/test_queries_oracle.py), the inline-chain ≡
-grid_sample_bilinear operator identity (the query's pinned 4-tap
-accumulation must be bit-identical to the real operator function on random
-grids — connecting the certified statistic to the production code path),
+grid_sample_bilinear operator identity (the oracle's pinned 4-tap
+accumulation must be bit-identical to the operator the query calls, on
+random grids — connecting the certified statistic to the production code path),
 the per-channel-chain ≡ sh_irradiance closeness, a crafted corpus pinning
 the s=0 empty-coverage path and an out-of-range uv zero-padding case on
 both engines, and the three-axis invariance contract
@@ -22,10 +22,11 @@ from talkinghead_datapipeline_spark.queries.inference_nodes import (
 
 
 def test_inline_chain_matches_grid_sample_operator():
-    """The query's inline 4-tap chain must equal grid_sample_bilinear
-    BIT-FOR-BIT: same ix/iy mapping, same fractional weights, same
-    accumulation order, same zeros padding — fuzz on random grids
-    including out-of-range and exact-integer coordinates."""
+    """The oracle's 4-tap chain, in its association order, must equal
+    grid_sample_bilinear (which the query calls) BIT-FOR-BIT: same ix/iy
+    mapping, same fractional weights, same accumulation order, same zeros
+    padding — fuzz on random grids including out-of-range and exact-integer
+    coordinates."""
     from talkinghead_datapipeline_spark.operators.rasterize import (
         grid_sample_bilinear,
     )
