@@ -30,15 +30,32 @@ from pyspark.sql import DataFrame
 from talkinghead_datapipeline_spark.shipping import ensure_package_shipped, release_zip_finders
 
 # Per-python-worker resource cache (one model instance per executor process,
-# exactly the BaseResource lifetime re-expressed for Spark workers).
-_RESOURCE_CACHE: dict[str, Any] = {}
+# exactly the BaseResource lifetime re-expressed for Spark workers): key ->
+# (name of the factory that built it, resource).
+_RESOURCE_CACHE: dict[str, tuple[str, Any]] = {}
+
+
+def _factory_name(factory: Callable[[], Any]) -> str:
+    qualname = getattr(factory, "__qualname__", type(factory).__qualname__)
+    return f"{getattr(factory, '__module__', None)}.{qualname}"
 
 
 def get_executor_resource(key: str, factory: Callable[[], Any]) -> Any:
-    """Lazily build and cache an expensive resource in this worker process."""
+    """Lazily build and cache an expensive resource in this worker process.
+
+    A key names one resource: requesting it with a factory other than the
+    one that built it (by module and qualified name) raises ``ValueError``
+    rather than handing back the other caller's model."""
+    name = _factory_name(factory)
     if key not in _RESOURCE_CACHE:
-        _RESOURCE_CACHE[key] = factory()
-    return _RESOURCE_CACHE[key]
+        _RESOURCE_CACHE[key] = (name, factory())
+    built_by, resource = _RESOURCE_CACHE[key]
+    if built_by != name:
+        raise ValueError(
+            f"model_key {key!r} was built by {built_by}, not by {name}; "
+            "give each model factory its own key"
+        )
+    return resource
 
 
 def stack_column(col: pd.Series) -> np.ndarray:

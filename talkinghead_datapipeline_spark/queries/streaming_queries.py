@@ -17,7 +17,9 @@ emitted set exactly.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -25,7 +27,30 @@ from pyspark.sql import functions as F
 
 from talkinghead_datapipeline_spark.catalog import normalize_events_ts, table_path
 from talkinghead_datapipeline_spark.queries import register
-from talkinghead_datapipeline_spark.streaming.incremental import run_available_now
+from talkinghead_datapipeline_spark.streaming.incremental import (
+    replay_micro_batches,
+    run_available_now,
+)
+
+# Work dirs of every staged stream in this process (landing files, sink,
+# checkpoint). The queries return frames that read their sinks lazily, so
+# the dirs are removed at interpreter exit, not when the query returns.
+_WORK_DIRS: list[str] = []
+
+
+def _remove_work_dirs() -> None:
+    while _WORK_DIRS:
+        shutil.rmtree(_WORK_DIRS.pop(), ignore_errors=True)
+
+
+atexit.register(_remove_work_dirs)
+
+
+def _work_dir(name: str) -> str:
+    """A fresh work dir for one staged stream, removed at interpreter exit."""
+    work = tempfile.mkdtemp(prefix=f"thdp_stream_{name}_")
+    _WORK_DIRS.append(work)
+    return work
 
 
 def _events_stream_transform_base(stream: DataFrame) -> DataFrame:
@@ -38,11 +63,11 @@ def _symlink_landing_dir(table: str, src: str) -> None:
     """Expose a fixture table as a file-stream landing directory (zero
     copy). Handles BOTH fixture layouts: a single parquet file (the
     driver's testdata) and a DIRECTORY of part files (any re-written /
-    multi-split fixture — the layout every real corpus has). Round-8 fix:
-    the original single-file-only symlink made the stream silently ingest
-    ZERO files from a directory-layout table (the source lists the landing
-    dir non-recursively, and a symlinked subdirectory is not a file), so
-    the sink came back empty — the split-invariance sweep caught it."""
+    multi-split fixture — the layout every real corpus has). Each part
+    file is linked on its own: the file source lists the landing dir
+    non-recursively, and a symlinked subdirectory is not a file, so linking
+    the table directory itself would ingest ZERO files and leave the sink
+    empty."""
     if os.path.isdir(table):
         for i, f in enumerate(sorted(os.listdir(table))):
             if f.endswith(".parquet"):
@@ -60,7 +85,7 @@ def _run_events_stream(
     parquet sink + checkpoint, and return the materialized sink."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     schema = spark.read.parquet(table_path(sf_dir, "events")).schema
-    work = tempfile.mkdtemp(prefix=f"thdp_stream_{name}_")
+    work = _work_dir(name)
     # The file stream source requires a *directory* to monitor; expose the
     # fixture through a symlink dir — exactly how a growing landing
     # directory would look in prod.
@@ -76,7 +101,6 @@ def _run_events_stream(
         transform=lambda s: transform(_events_stream_transform_base(s)),
         sink_path=sink,
         checkpoint_dir=ckpt,
-        output_mode="append",
     )
     return spark.read.parquet(sink)
 
@@ -297,10 +321,10 @@ def _purchase_view_join(ev: DataFrame, how: str) -> DataFrame:
     tags=("streaming", "join", "watermark", "outer"),
 )
 def streaming_purchase_view_left(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LEFT-OUTER watermarked stream-stream join (VERDICT r5 #7) — the
-    watermark-expiry emission class: purchases with no view in their
-    preceding 30 minutes emit a null-padded row once the watermark proves
-    no matching view can still arrive. State stays bounded exactly as in
+    """LEFT-OUTER watermarked stream-stream join — the watermark-expiry
+    emission class: purchases with no view in their preceding 30 minutes
+    emit a null-padded row once the watermark proves no matching view can
+    still arrive. State stays bounded exactly as in
     the inner form; the extra semantics are WHEN the engine may emit the
     null row. Determinism contract, empirically pinned at sf0.01 (1960 of
     1961 unmatched purchases emitted) and mirrored in the oracle: the
@@ -508,15 +532,13 @@ def streaming_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame
     window argmax with the (ts DESC, event_id DESC) tiebreak — so the
     driver certifies the whole stream → merge → sink → read-back loop, not
     just a transformation."""
-    import tempfile
-
     from talkinghead_datapipeline_spark.streaming.incremental import (
         run_foreach_batch_upsert,
     )
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     schema = spark.read.parquet(table_path(sf_dir, "events")).schema
-    work = tempfile.mkdtemp(prefix="thdp_stream_upsert_")
+    work = _work_dir("upsert")
     src = os.path.join(work, "src")
     os.makedirs(src)
     _symlink_landing_dir(table_path(sf_dir, "events"), src)
@@ -626,55 +648,183 @@ def streaming_purchase_view_full(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# REGISTERED in r9 (staged + oracle-verified in r8 under the registry
-# freeze; tests/test_streaming_late_metrics.py pins the two-watermark lag,
-# window-not-row drop counting, and ms-floor semantics).
+# Late data: the staged straggler arrival. Two runs share it, each serving a
+# metrics query and a sink query from ONE streaming job: the 1h tumbling
+# count (tests/test_streaming_late_metrics.py pins the two-watermark lag,
+# window-not-row drop counting and ms-floor semantics) and the 30-minute
+# session count (tests/test_streaming_session_late.py).
+#
+# Late-drop determinism contract (empirically pinned by the boundary tests):
+# replay_micro_batches forms one micro-batch per landing file, in list
+# order, and Spark's watermark propagation gives each batch TWO watermarks
+# (SPARK-42376 shape): eviction/emission uses the CURRENT one (max event
+# time over batches <= k-1, minus delay), while the LATE-DATA FILTER uses
+# the PREVIOUS one — max over batches <= k-2, minus delay. For the tumbling
+# count the filter sits at the STATE OPERATOR, downstream of the
+# partial/merge aggregation, so its input is ONE merged row per window per
+# micro-batch: numRowsDroppedByWatermark counts DISTINCT LATE WINDOWS
+# (window end <= the lagged watermark, non-strict), NOT raw late rows —
+# verified layout-invariant under forced 16 KB file splits (many map-side
+# partials per window still merge to one row before the filter). Spark
+# tracks the watermark in whole milliseconds; with whole-millisecond window
+# ends and delays a floor-to-ms never changes the comparison (floor_ms(x) >=
+# E iff x >= E for whole-ms E), so the oracle can compare exact epoch micros.
 # ---------------------------------------------------------------------------
 
-# Late-drop determinism contract (empirically pinned, 2026-08-15, by the
-# boundary tests): with maxFilesPerTrigger=1 and strictly increasing landing
-# -file mtimes the file source forms one micro-batch per file in mtime
-# order, and Spark's watermark propagation gives each batch TWO watermarks
-# (SPARK-42376 shape): eviction/emission uses the CURRENT one
-# (max event time over batches <= k-1, minus delay), while the LATE-DATA
-# FILTER uses the PREVIOUS one — max over batches <= k-2, minus delay.
-# The filter sits at the STATE OPERATOR, downstream of the partial/merge
-# aggregation, so its input is ONE merged row per window per micro-batch:
-# numRowsDroppedByWatermark counts DISTINCT LATE WINDOWS (window end <=
-# the lagged watermark, non-strict), NOT raw late rows — verified
-# layout-invariant under forced 16 KB file splits (many map-side partials
-# per window still merge to one row before the filter). Spark tracks the
-# watermark in whole milliseconds; with whole-millisecond window ends and
-# delays a floor-to-ms never changes the comparison (floor_ms(x) >= E
-# iff x >= E for whole-ms E), so the oracle can compare exact epoch micros.
-STREAMING_LATE_METRICS_ORACLE = """
-WITH e AS (
-  SELECT epoch_us(ts) AS us, user_id FROM events
-),
+# The late runs' watermark delay, and the session run's gap (microseconds).
+_HALF_HOUR_US = 1_800_000_000
+
+# DuckDB side of the straggler split (_straggler_batches): every event's
+# (us, user_id) tagged with its landing batch — terciles of the [min, max]
+# span, straggler users shifted two files later.
+STRAGGLER_SPLIT_SQL = """
+e AS (SELECT epoch_us(ts) AS us, user_id FROM events),
 bounds AS (SELECT min(us) AS t0, max(us) AS t1 FROM e),
 b AS (
-  SELECT us,
+  SELECT us, user_id,
          least(2, least(2, ((us - t0) * 3) // (t1 - t0))
-                  + CASE WHEN user_id % 10 = 7 THEN 2 ELSE 0 END) AS batch,
-         (us // 3600000000) * 3600000000 + 3600000000 AS win_end_us
+                  + CASE WHEN user_id % 10 = 7 THEN 2 ELSE 0 END) AS batch
   FROM e, bounds
-),
+)"""
+
+# The late filter's watermark: ``pw.wm_us`` is the lagged watermark of batch
+# ``pw.tgt`` (max event time over batches <= tgt - 2, minus the delay).
+# Batches 0 and 1 have no row: their filter watermark is still the initial 0.
+LAGGED_WATERMARK_SQL = f"""
 mx AS (SELECT batch, max(us) AS mx_us FROM b GROUP BY 1),
 pw AS (
   SELECT batch + 2 AS tgt,
          max(mx_us) OVER (ORDER BY batch
                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-           - 1800000000 AS wm_us
+           - {_HALF_HOUR_US} AS wm_us
   FROM mx
+)"""
+
+STREAMING_LATE_METRICS_ORACLE = f"""
+WITH {STRAGGLER_SPLIT_SQL},
+{LAGGED_WATERMARK_SQL},
+w AS (
+  SELECT batch, (us // 3600000000) * 3600000000 + 3600000000 AS win_end_us
+  FROM b
 )
-SELECT b.batch AS batch_seq,
+SELECT w.batch AS batch_seq,
        CAST(count(*) AS BIGINT) AS n_input,
-       CAST(count(DISTINCT CASE WHEN b.win_end_us <= pw.wm_us
-                                THEN b.win_end_us END)
+       CAST(count(DISTINCT CASE WHEN w.win_end_us <= pw.wm_us
+                                THEN w.win_end_us END)
             AS BIGINT) AS n_late_dropped
-FROM b LEFT JOIN pw ON b.batch = pw.tgt
+FROM w LEFT JOIN pw ON w.batch = pw.tgt
 GROUP BY 1 ORDER BY 1
 """
+
+
+def _tumbling_late_transform(stream: DataFrame) -> DataFrame:
+    return (
+        stream.withWatermark("ts", "30 minutes")
+        .groupBy(F.window("ts", "1 hour").alias("win"))
+        .agg(F.count(F.lit(1)).alias("n_events"))
+        .select(F.col("win.start").alias("window_start"), "n_events")
+    )
+
+
+def _session_late_transform(stream: DataFrame) -> DataFrame:
+    return (
+        stream.withWatermark("ts", "30 minutes")
+        .groupBy(F.session_window("ts", "30 minutes").alias("win"), "user_id")
+        .agg(F.count(F.lit(1)).alias("n_events"))
+        .select(
+            "user_id",
+            F.col("win.start").alias("session_start"),
+            F.col("win.end").alias("session_end"),
+            "n_events",
+        )
+    )
+
+
+# Run name -> (landing-file stream schema, streaming transform).
+_LATE_RUNS = {
+    "late": ("ts timestamp", _tumbling_late_transform),
+    "sess": ("ts timestamp, user_id bigint", _session_late_transform),
+}
+
+# One streaming run serves both queries of a pair: the metrics query
+# discards the sink and the sink query discards the metrics. Keyed on
+# (run name, session, sf_dir, shuffle partitions, AQE), so the invariance
+# axes still force a genuine re-run; other confs share the run. A
+# run-to-run nondeterminism probe calls _staged_late_run_uncached.
+_STAGED_RUNS: dict = {}
+
+
+def _stream_run_key(spark: SparkSession, sf_dir: str) -> tuple:
+    # Typed confs validate their default against the conf's type, so pass
+    # type-correct defaults (the values only need to be stable within a
+    # session for the key to be sound).
+    return (
+        spark.sparkContext.applicationId,
+        os.path.abspath(sf_dir),
+        spark.conf.get("spark.sql.shuffle.partitions", "200"),
+        spark.conf.get("spark.sql.adaptive.enabled", "true"),
+    )
+
+
+def _staged_late_run(spark: SparkSession, sf_dir: str, name: str):
+    """(per-batch metrics, sink path) of the staged late run ``name``,
+    memoized in ``_STAGED_RUNS``."""
+    key = (name, *_stream_run_key(spark, sf_dir))
+    if key not in _STAGED_RUNS:
+        _STAGED_RUNS[key] = _staged_late_run_uncached(spark, sf_dir, name)
+    return _STAGED_RUNS[key]
+
+
+def _straggler_batches(
+    spark: SparkSession, sf_dir: str, cols: list[str]
+) -> list[DataFrame]:
+    """The events table's ``cols`` as the 3-batch straggler arrival: batch
+    k holds tercile k of the event-time span, except rows of straggler
+    users (user_id % 10 == 7), which arrive two batches later (capped at
+    the last batch)."""
+    from talkinghead_datapipeline_spark.catalog import load_table
+
+    ev = load_table(spark, sf_dir, "events").select(
+        F.unix_micros("ts").alias("us"), "user_id", F.col("ts")
+    )
+    t0, t1 = ev.agg(F.min("us"), F.max("us")).first()
+    # Exact BIGINT division (`div`), NOT `/`: double division's correct
+    # rounding can land an exact-integer quotient one ULP above the true
+    # value and flip the tercile vs DuckDB's integer `//` — the same
+    # float-at-boundary class as the money-cent flips.
+    tercile = F.least(F.lit(2), F.expr(f"((us - {t0}) * 3) div {t1 - t0}"))
+    # Stragglers are delayed TWO files, not one: the late filter lags the
+    # eviction watermark by one batch (pinned contract above), so a
+    # one-batch delay is always masked — tercile-0 stragglers must arrive
+    # in batch 2, where the filter watermark is max(batch 0) - 30min, for
+    # the queries to exercise real drops.
+    batch = F.least(
+        F.lit(2), tercile + 2 * (F.col("user_id") % 10 == 7).cast("bigint")
+    )
+    staged = ev.select(*cols, batch.alias("batch"))
+    return [staged.filter(F.col("batch") == k).select(*cols) for k in range(3)]
+
+
+def _staged_late_run_uncached(spark: SparkSession, sf_dir: str, name: str):
+    """Replay the straggler arrival through the late run ``name``'s
+    transform; return (per-batch metrics, sink path)."""
+    from pyspark.sql.types import StructType
+
+    schema, transform = _LATE_RUNS[name]
+    cols = StructType.fromDDL(schema).fieldNames()
+    return replay_micro_batches(
+        _straggler_batches(spark, sf_dir, cols), schema, transform, _work_dir(name)
+    )
+
+
+def _arrival_metrics(spark: SparkSession, metrics) -> DataFrame:
+    """Batches 0..2 are the three landing files; the trailing no-data batch
+    (state eviction pass) is engine bookkeeping, not an arrival, so it is
+    excluded from the arrival metrics."""
+    rows = [(b, n, d) for b, n, d in metrics if b <= 2]
+    return spark.createDataFrame(
+        rows, "batch_seq bigint, n_input bigint, n_late_dropped bigint"
+    )
 
 
 @register(
@@ -701,9 +851,8 @@ def streaming_late_data_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Determinism: batch membership is integer arithmetic on epoch micros
     (terciles of the [min, max] span) + the straggler shift, so the oracle
-    recomputes the same file assignment, replays the two-watermark
-    propagation (late filter lags eviction by one batch — see the pinned
-    contract above STREAMING_LATE_METRICS_ORACLE), and reproduces the
+    recomputes the same file assignment (STRAGGLER_SPLIT_SQL), replays the
+    two-watermark propagation (LAGGED_WATERMARK_SQL), and reproduces the
     engine's drop counts exactly.
 
     Scale shape: the metrics ride the state operator the aggregation
@@ -718,131 +867,8 @@ def streaming_late_data_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark 3.x/4.x behavior in tests/test_streaming_late_metrics.py — a
     Spark upgrade that changes the lag model fails those pins first.
     """
-    metrics, _sink = _staged_late_run(spark, sf_dir)
-    # Batches 0..2 are the three landing files (one per trigger); the
-    # trailing no-data batch (state eviction pass) is engine bookkeeping,
-    # not an arrival, so it is excluded from the arrival metrics.
-    rows = [(b, n, d) for b, n, d in metrics if b <= 2]
-    return spark.createDataFrame(
-        rows, "batch_seq bigint, n_input bigint, n_late_dropped bigint"
-    )
-
-
-# One streaming run serves BOTH late-data queries (ADVICE r8): the metrics
-# query discards the sink and the sink query discards the metrics, so
-# without memoization each correctness pass runs the full 3-batch job twice
-# and leaks two work dirs. Keyed on (session, sf_dir, shuffle-partitions,
-# AQE) so the invariance axes still trigger a genuine re-run; work dirs are
-# removed at interpreter exit.
-_LATE_RUN_CACHE: dict = {}
-
-
-def _stream_run_key(spark: SparkSession, sf_dir: str):
-    """Memoization key for the staged streaming runs. Keyed on the confs
-    the invariance axes vary (shuffle partitions, AQE) so those still
-    trigger a genuine re-run; other confs intentionally share the cached
-    run. Escape hatch (ADVICE r9): set SPARK_GRAFT_STREAMING_NO_CACHE=1
-    to force a fresh run every call — required for run-to-run
-    NONdeterminism probes, where the memo would silently turn the second
-    run into a replay of the first, or when varying a determinism-
-    relevant conf the key does not capture."""
-    if os.environ.get("SPARK_GRAFT_STREAMING_NO_CACHE", "").lower() not in (
-        "",
-        "0",
-        "false",
-        "no",
-    ):
-        return None
-    # Typed confs validate their default against the conf's type, so pass
-    # type-correct defaults (the values themselves only need to be stable
-    # within a session for the cache key to be sound).
-    return (
-        spark.sparkContext.applicationId,
-        os.path.abspath(sf_dir),
-        spark.conf.get("spark.sql.shuffle.partitions", "200"),
-        spark.conf.get("spark.sql.adaptive.enabled", "true"),
-    )
-
-
-def _staged_late_run(spark: SparkSession, sf_dir: str):
-    key = _stream_run_key(spark, sf_dir)
-    if key is None:
-        return _staged_late_run_uncached(spark, sf_dir)
-    if key not in _LATE_RUN_CACHE:
-        _LATE_RUN_CACHE[key] = _staged_late_run_uncached(spark, sf_dir)
-    return _LATE_RUN_CACHE[key]
-
-
-def _staged_late_run_uncached(spark: SparkSession, sf_dir: str):
-    """Shared machinery for the two staged late-data queries: stage events
-    as the deterministic 3-file straggler landing dir, run the watermarked
-    1h tumbling count through the streaming engine, and return
-    (per-batch metrics, sink path)."""
-    import atexit
-    import shutil
-
-    from talkinghead_datapipeline_spark.catalog import load_table
-    from talkinghead_datapipeline_spark.streaming.incremental import (
-        run_available_now_with_metrics,
-    )
-
-    ev = load_table(spark, sf_dir, "events").select(
-        F.unix_micros("ts").alias("us"), "user_id", F.col("ts")
-    )
-    t0, t1 = ev.agg(F.min("us"), F.max("us")).first()
-    span = t1 - t0
-    # Exact BIGINT division (`div`), NOT `/`: double division's correct
-    # rounding can land an exact-integer quotient one ULP above the true
-    # value and flip the tercile vs DuckDB's integer `//` — the same
-    # float-at-boundary class as the money-cent flips.
-    tercile = F.least(F.lit(2), F.expr(f"((us - {t0}) * 3) div {span}"))
-    # Stragglers are delayed TWO files, not one: the late filter lags the
-    # eviction watermark by one batch (pinned contract above), so a
-    # one-batch delay is always masked — tercile-0 stragglers must arrive
-    # in batch 2, where the filter watermark is max(batch 0) - 30min, for
-    # the query to exercise real drops.
-    batch_col = F.least(
-        F.lit(2), tercile + 2 * (F.col("user_id") % 10 == 7).cast("bigint")
-    )
-    staged = ev.select(F.col("ts"), batch_col.alias("batch"))
-
-    work = tempfile.mkdtemp(prefix="thdp_stream_late_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
-    src = os.path.join(work, "src")
-    os.makedirs(src)
-    # One landing file per batch, mtime-ordered so the file source forms
-    # the deterministic 3-batch sequence the oracle replays.
-    for k in range(3):
-        part_dir = os.path.join(work, f"b{k}")
-        staged.filter(F.col("batch") == k).select("ts").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(part_dir)
-        part = next(
-            f for f in sorted(os.listdir(part_dir)) if f.endswith(".parquet")
-        )
-        dst = os.path.join(src, f"batch-{k:05d}.parquet")
-        shutil.copy(os.path.join(part_dir, part), dst)
-        os.utime(dst, (1_000_000 + k, 1_000_000 + k))
-
-    def transform(stream: DataFrame) -> DataFrame:
-        return (
-            stream.withWatermark("ts", "30 minutes")
-            .groupBy(F.window("ts", "1 hour").alias("win"))
-            .agg(F.count(F.lit(1)).alias("n_events"))
-            .select(F.col("win.start").alias("window_start"), "n_events")
-        )
-
-    sink = os.path.join(work, "sink")
-    metrics = run_available_now_with_metrics(
-        spark,
-        source_dir=src,
-        schema="ts timestamp",
-        transform=transform,
-        sink_path=sink,
-        checkpoint_dir=os.path.join(work, "ckpt"),
-        max_files_per_trigger=1,
-    )
-    return metrics, sink
+    metrics, _sink = _staged_late_run(spark, sf_dir, "late")
+    return _arrival_metrics(spark, metrics)
 
 
 # Sink-side oracle for the same 3-batch straggler run: which windows the
@@ -860,31 +886,15 @@ def _staged_late_run_uncached(spark: SparkSession, sf_dir: str):
 #     them: row contributes iff win_end > lagged_wm(batch(row)).
 # The final no-data batch advances the watermark to max(all) - delay and
 # emits every window with end <= it.
-STREAMING_LATE_SINK_ORACLE = """
-WITH e AS (
-  SELECT epoch_us(ts) AS us, user_id FROM events
-),
-bounds AS (SELECT min(us) AS t0, max(us) AS t1 FROM e),
-b AS (
-  SELECT us,
-         least(2, least(2, ((us - t0) * 3) // (t1 - t0))
-                  + CASE WHEN user_id % 10 = 7 THEN 2 ELSE 0 END) AS batch,
-         (us // 3600000000) * 3600000000 AS win_start_us
-  FROM e, bounds
-),
-mx AS (SELECT batch, max(us) AS mx_us FROM b GROUP BY 1),
-pw AS (
-  SELECT batch + 2 AS tgt,
-         max(mx_us) OVER (ORDER BY batch
-                          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-           - 1800000000 AS wm_us
-  FROM mx
-),
-final_wm AS (SELECT max(us) - 1800000000 AS w FROM e),
+STREAMING_LATE_SINK_ORACLE = f"""
+WITH {STRAGGLER_SPLIT_SQL},
+{LAGGED_WATERMARK_SQL},
+w AS (SELECT batch, (us // 3600000000) * 3600000000 AS win_start_us FROM b),
+final_wm AS (SELECT max(us) - {_HALF_HOUR_US} AS w FROM e),
 kept AS (
-  SELECT b.win_start_us
-  FROM b LEFT JOIN pw ON b.batch = pw.tgt
-  WHERE pw.wm_us IS NULL OR b.win_start_us + 3600000000 > pw.wm_us
+  SELECT w.win_start_us
+  FROM w LEFT JOIN pw ON w.batch = pw.tgt
+  WHERE pw.wm_us IS NULL OR w.win_start_us + 3600000000 > pw.wm_us
 )
 SELECT make_timestamp(win_start_us) AS window_start,
        CAST(count(*) AS BIGINT) AS n_events
@@ -923,19 +933,18 @@ def streaming_late_sink_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     metrics.py, Spark 3.x/4.x) — a Spark upgrade that changes the lag
     model fails those pins first.
     """
-    _metrics, sink = _staged_late_run(spark, sf_dir)
+    _metrics, sink = _staged_late_run(spark, sf_dir, "late")
     return spark.read.parquet(sink).select(
         "window_start", F.col("n_events").cast("bigint").alias("n_events")
     )
 
 
 # ---------------------------------------------------------------------------
-# Registered round 10: session windows under late data — the
-# stateful-merge twin of the tumbling late-data pair above, over the same
-# 3-file straggler arrival. Session state is MERGED (not keyed by a fixed
-# window), so the late-data story is materially different; every contract
-# below was pinned EMPIRICALLY (tests/test_streaming_session_late.py)
-# before the oracle was written:
+# Session windows under late data: the stateful-merge twin of the tumbling
+# late-data pair above, over the same 3-file straggler arrival. Session
+# state is MERGED (not keyed by a fixed window), so the late-data story is
+# materially different; every contract below is pinned EMPIRICALLY
+# (tests/test_streaming_session_late.py):
 #
 # 1. The late filter judges RAW ROWS, each by its OWN horizon: row dropped
 #    iff ts + gap <= lagged_wm (non-strict), where lagged_wm is the
@@ -967,34 +976,12 @@ def streaming_late_sink_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # sessionize+evict levels plus the final no-data eviction.
 # ---------------------------------------------------------------------------
 
-_SESSION_RUN_CACHE: dict = {}
-
-# gap and watermark delay are both 30 minutes (microseconds)
-_SG_US = 1_800_000_000
-
-_SESSION_BATCH_SQL = f"""
-e AS (SELECT epoch_us(ts) AS us, user_id FROM events),
-bounds AS (SELECT min(us) AS t0, max(us) AS t1 FROM e),
-b AS (
-  SELECT us, user_id,
-         least(2, least(2, ((us - t0) * 3) // (t1 - t0))
-                  + CASE WHEN user_id % 10 = 7 THEN 2 ELSE 0 END) AS batch
-  FROM e, bounds
-)"""
-
 STREAMING_SESSION_LATE_METRICS_ORACLE = f"""
-WITH {_SESSION_BATCH_SQL},
-mx AS (SELECT batch, max(us) AS mx_us FROM b GROUP BY 1),
-pw AS (
-  SELECT batch + 2 AS tgt,
-         max(mx_us) OVER (ORDER BY batch
-                          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-           - {_SG_US} AS wm_us
-  FROM mx
-)
+WITH {STRAGGLER_SPLIT_SQL},
+{LAGGED_WATERMARK_SQL}
 SELECT b.batch AS batch_seq,
        CAST(count(*) AS BIGINT) AS n_input,
-       CAST(sum(CASE WHEN b.us + {_SG_US} <= pw.wm_us THEN 1 ELSE 0 END)
+       CAST(sum(CASE WHEN b.us + {_HALF_HOUR_US} <= pw.wm_us THEN 1 ELSE 0 END)
             AS BIGINT) AS n_late_dropped
 FROM b LEFT JOIN pw ON b.batch = pw.tgt
 GROUP BY 1 ORDER BY 1
@@ -1012,7 +999,7 @@ def _sessionize_sql(src: str, out: str) -> str:
 {out}f AS (
   SELECT us, user_id,
          CASE WHEN us - lag(us) OVER (PARTITION BY user_id ORDER BY us)
-                   > {_SG_US} THEN 1 ELSE 0 END AS new_s
+                   > {_HALF_HOUR_US} THEN 1 ELSE 0 END AS new_s
   FROM {src}
 ),
 {out}s AS (
@@ -1023,22 +1010,22 @@ def _sessionize_sql(src: str, out: str) -> str:
   FROM {out}f
 ),
 {out}e AS (
-  SELECT user_id, sid, min(us) AS s_us, max(us) + {_SG_US} AS e_us,
+  SELECT user_id, sid, min(us) AS s_us, max(us) + {_HALF_HOUR_US} AS e_us,
          count(*) AS n
   FROM {out}s GROUP BY 1, 2
 )"""
 
 
 STREAMING_SESSION_LATE_SINK_ORACLE = f"""
-WITH {_SESSION_BATCH_SQL},
+WITH {STRAGGLER_SPLIT_SQL},
 wm AS (
-  SELECT (SELECT max(us) FROM b WHERE batch <= 0) - {_SG_US} AS w1,
-         (SELECT max(us) FROM b WHERE batch <= 1) - {_SG_US} AS w2,
-         (SELECT max(us) FROM b) - {_SG_US} AS wf
+  SELECT (SELECT max(us) FROM b WHERE batch <= 0) - {_HALF_HOUR_US} AS w1,
+         (SELECT max(us) FROM b WHERE batch <= 1) - {_HALF_HOUR_US} AS w2,
+         (SELECT max(us) FROM b) - {_HALF_HOUR_US} AS wf
 ),
 acc AS (
   SELECT us, user_id, batch FROM b, wm
-  WHERE batch < 2 OR us + {_SG_US} > wm.w1
+  WHERE batch < 2 OR us + {_HALF_HOUR_US} > wm.w1
 ),
 l2 AS (SELECT us, user_id FROM acc WHERE batch <= 1),
 {_sessionize_sql("l2", "l2")},
@@ -1068,86 +1055,6 @@ FROM (SELECT user_id, s_us, e_us, n FROM emit2
 """
 
 
-def _staged_session_late_run(spark: SparkSession, sf_dir: str):
-    key = _stream_run_key(spark, sf_dir)
-    if key is None:
-        return _staged_session_late_run_uncached(spark, sf_dir)
-    if key not in _SESSION_RUN_CACHE:
-        _SESSION_RUN_CACHE[key] = _staged_session_late_run_uncached(
-            spark, sf_dir
-        )
-    return _SESSION_RUN_CACHE[key]
-
-
-def _staged_session_late_run_uncached(spark: SparkSession, sf_dir: str):
-    """Stage events as the same deterministic 3-file straggler landing dir
-    as _staged_late_run (keeping user_id this time), run a watermarked
-    30-minute session_window count per user, and return
-    (per-batch metrics, sink path)."""
-    import atexit
-    import shutil
-
-    from talkinghead_datapipeline_spark.catalog import load_table
-    from talkinghead_datapipeline_spark.streaming.incremental import (
-        run_available_now_with_metrics,
-    )
-
-    ev = load_table(spark, sf_dir, "events").select(
-        F.unix_micros("ts").alias("us"), "user_id", F.col("ts")
-    )
-    t0, t1 = ev.agg(F.min("us"), F.max("us")).first()
-    span = t1 - t0
-    # exact BIGINT `div` (not `/`): same boundary class as _staged_late_run
-    tercile = F.least(F.lit(2), F.expr(f"((us - {t0}) * 3) div {span}"))
-    batch_col = F.least(
-        F.lit(2), tercile + 2 * (F.col("user_id") % 10 == 7).cast("bigint")
-    )
-    staged = ev.select(F.col("ts"), F.col("user_id"), batch_col.alias("batch"))
-
-    work = tempfile.mkdtemp(prefix="thdp_stream_sess_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
-    src = os.path.join(work, "src")
-    os.makedirs(src)
-    for k in range(3):
-        part_dir = os.path.join(work, f"b{k}")
-        staged.filter(F.col("batch") == k).select("ts", "user_id").coalesce(
-            1
-        ).write.mode("overwrite").parquet(part_dir)
-        part = next(
-            f for f in sorted(os.listdir(part_dir)) if f.endswith(".parquet")
-        )
-        dst = os.path.join(src, f"batch-{k:05d}.parquet")
-        shutil.copy(os.path.join(part_dir, part), dst)
-        os.utime(dst, (1_000_000 + k, 1_000_000 + k))
-
-    def transform(stream: DataFrame) -> DataFrame:
-        return (
-            stream.withWatermark("ts", "30 minutes")
-            .groupBy(
-                F.session_window("ts", "30 minutes").alias("win"), "user_id"
-            )
-            .agg(F.count(F.lit(1)).alias("n_events"))
-            .select(
-                "user_id",
-                F.col("win.start").alias("session_start"),
-                F.col("win.end").alias("session_end"),
-                "n_events",
-            )
-        )
-
-    sink = os.path.join(work, "sink")
-    metrics = run_available_now_with_metrics(
-        spark,
-        source_dir=src,
-        schema="ts timestamp, user_id bigint",
-        transform=transform,
-        sink_path=sink,
-        checkpoint_dir=os.path.join(work, "ckpt"),
-        max_files_per_trigger=1,
-    )
-    return metrics, sink
-
-
 @register(
     "streaming_session_late_metrics",
     oracle=STREAMING_SESSION_LATE_METRICS_ORACLE,
@@ -1159,9 +1066,8 @@ def streaming_session_late_metrics(spark: SparkSession, sf_dir: str) -> DataFram
     (1) above: session-window late drops count raw rows, each judged by
     its own ts + gap horizon against the one-batch-lagged watermark.
 
-    MODELED DOMAIN (r12 x4 finding): the raw-row unit is proven on the
-    certified fixtures by the oracle match itself (green at sf0.001/0.01/
-    0.1 across rounds). Under heavy late-row COLLISIONS the engine's
+    MODELED DOMAIN: the raw-row unit is proven on the certified fixtures
+    by the oracle match itself (sf0.001, sf0.01 and sf0.1). Under heavy late-row COLLISIONS the engine's
     counter deviates from raw rows in ways no simple merged-unit model
     reproduces either — probed directly in
     tests/test_session_late_drop_units.py: 4 exact-duplicate late rows ->
@@ -1182,11 +1088,8 @@ def streaming_session_late_metrics(spark: SparkSession, sf_dir: str) -> DataFram
     upgrade that changes the session state operator fails those pins
     first.
     """
-    metrics, _sink = _staged_session_late_run(spark, sf_dir)
-    rows = [(b, n, d) for b, n, d in metrics if b <= 2]
-    return spark.createDataFrame(
-        rows, "batch_seq bigint, n_input bigint, n_late_dropped bigint"
-    )
+    metrics, _sink = _staged_late_run(spark, sf_dir, "sess")
+    return _arrival_metrics(spark, metrics)
 
 
 @register(
@@ -1209,7 +1112,7 @@ def streaming_session_late_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Engine-version coupling: see streaming_session_late_metrics.
     """
-    _metrics, sink = _staged_session_late_run(spark, sf_dir)
+    _metrics, sink = _staged_late_run(spark, sf_dir, "sess")
     return spark.read.parquet(sink).select(
         "user_id",
         "session_start",
@@ -1219,7 +1122,7 @@ def streaming_session_late_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Incremental view maintenance ≡ recompute (VERDICT r10 #3): a per-user
+# Incremental view maintenance ≡ recompute: a per-user
 # purchase aggregate maintained additively across three appended micro-batch
 # files — each append processed by a FRESH AvailableNow run against the same
 # checkpoint (so the demo also exercises restart/resume) — whose final sink
@@ -1272,9 +1175,6 @@ def incremental_recompute_equivalence(spark: SparkSession, sf_dir: str) -> DataF
     the sink swap is the only full rewrite — at 100 TB the swap becomes a
     Delta/Iceberg MERGE on the same combine expression and the partials
     pattern is unchanged. State lives in the sink, not the state store."""
-    import atexit
-    import shutil
-
     from talkinghead_datapipeline_spark.functions.geometry import round_half_away
     from talkinghead_datapipeline_spark.streaming.incremental import (
         run_foreach_batch_merge,
@@ -1292,10 +1192,7 @@ def incremental_recompute_equivalence(spark: SparkSession, sf_dir: str) -> DataF
         .select("user_id", "event_id", "value")
     )
 
-    work = tempfile.mkdtemp(prefix="thdp_stream_ivm_")
-    # ADVICE r11: reclaim the work dir (3 data copies + sink + checkpoint)
-    # at interpreter exit, matching streaming_session_late_*.
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
+    work = _work_dir("ivm")
     src = os.path.join(work, "src")
     os.makedirs(src)
     sink = os.path.join(work, "sink")

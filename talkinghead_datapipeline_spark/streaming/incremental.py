@@ -2,8 +2,7 @@
 (SURVEY §2.a E7/E11, §4 "incremental recompute").
 
 The reference skips a row when all its outputs already exist (``base.py:135``)
-and pipelines chunks through nodes (``engine.py:55-74``). Two Spark-native
-forms:
+and pipelines chunks through nodes (``engine.py:55-74``). Spark-native forms:
 
 - **Batch incremental** (``pending_keys``): LEFT ANTI join of candidate keys
   against the sink's existing keys. One shuffle on the key — or zero when
@@ -13,6 +12,14 @@ forms:
   incremental over growing directories, the principled version of the
   reference's file-existence memoization (no TOCTOU, no partial-output
   hazard). E11's chunk pipelining is the micro-batch itself.
+- **Micro-batch replay** (``replay_micro_batches``): an ordered list of
+  batch frames staged as one mtime-ordered landing file each and read one
+  file per trigger, returning the engine's per-batch input and
+  dropped-by-watermark counts — the one place the deterministic arrival
+  contract behind the late-data oracles is written.
+- **foreachBatch sinks** (``run_foreach_batch_upsert``,
+  ``run_foreach_batch_merge``): keyed upsert and additive merge into a
+  parquet sink.
 """
 
 from __future__ import annotations
@@ -76,25 +83,18 @@ def incremental_append(
 
 
 def _start_available_now(
-    spark: SparkSession,
-    source_dir: str,
-    schema: StructType | str,
+    stream: DataFrame,
     transform: Callable[[DataFrame], DataFrame],
     sink_path: str,
     checkpoint_dir: str,
-    output_mode: str,
-    max_files_per_trigger: int | None = None,
 ):
     """Single point of stream assembly for the AvailableNow parquet→parquet
-    runners (plain + metrics variant) — a sink-option or trigger fix lands
-    in both. Returns the started query."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(source_dir)
+    runners (``run_available_now`` and ``replay_micro_batches``): append
+    mode into a parquet sink, so a sink-option or trigger fix lands in
+    both. Returns the started query."""
     return (
         transform(stream)
-        .writeStream.outputMode(output_mode)
+        .writeStream.outputMode("append")
         .format("parquet")
         .option("path", sink_path)
         .option("checkpointLocation", checkpoint_dir)
@@ -110,44 +110,59 @@ def run_available_now(
     transform: Callable[[DataFrame], DataFrame],
     sink_path: str,
     checkpoint_dir: str,
-    output_mode: str = "append",
 ) -> None:
     """Process all currently-available files through ``transform`` with
     exactly-once checkpointing, then stop (Trigger.AvailableNow)."""
-    _start_available_now(
-        spark, source_dir, schema, transform, sink_path, checkpoint_dir, output_mode
-    ).awaitTermination()
+    stream = spark.readStream.schema(schema).parquet(source_dir)
+    _start_available_now(stream, transform, sink_path, checkpoint_dir).awaitTermination()
 
 
-def run_available_now_with_metrics(
-    spark: SparkSession,
-    source_dir: str,
+def replay_micro_batches(
+    batches: list[DataFrame],
     schema: StructType | str,
     transform: Callable[[DataFrame], DataFrame],
-    sink_path: str,
-    checkpoint_dir: str,
-    output_mode: str = "append",
-    max_files_per_trigger: int | None = None,
-) -> list[tuple[int, int, int]]:
-    """``run_available_now`` + per-micro-batch engine metrics.
+    work_dir: str,
+) -> tuple[list[tuple[int, int, int]], str]:
+    """Replay ``batches`` as an ordered micro-batch arrival through
+    ``transform`` and return ``(metrics, sink_path)``.
 
-    Returns ``[(batch_id, num_input_rows, num_rows_dropped_by_watermark)]``
-    for every micro-batch of THIS query (filtered by query id — other
-    streaming queries on the session are invisible), captured through a
-    ``StreamingQueryListener``: ``query.recentProgress`` alone is NOT a
-    reliable record (observed dropping a batch's entry under AvailableNow
-    multi-batch runs), while the listener receives one ``QueryProgressEvent``
-    per committed batch. Progress events are asynchronous, so the read
-    waits for this query's ``onQueryTerminated`` before returning.
+    The arrival contract: each batch is written as ONE landing file under
+    ``work_dir/src`` with a strictly increasing mtime, and the file source
+    reads them with ``maxFilesPerTrigger=1`` under ``Trigger.AvailableNow``,
+    so micro-batch ``k`` is exactly ``batches[k]``. The batch sequence, and
+    therefore every watermark advance, is deterministic, which is what lets
+    a SQL oracle reproduce late-drop counts exactly. ``schema`` is the
+    stream's explicit schema (the landing files' types cannot drift). The
+    transform's output is appended to the parquet sink ``work_dir/sink``.
 
-    ``max_files_per_trigger`` bounds each micro-batch's file intake —
-    with distinct landing-file mtimes this makes the batch sequence (and
-    therefore every watermark advance) deterministic, which is what lets
-    a SQL oracle reproduce late-drop counts exactly.
+    ``metrics`` is ``[(batch_id, num_input_rows,
+    num_rows_dropped_by_watermark)]`` for every micro-batch of THIS query,
+    trailing no-data (eviction) batches included. They are captured
+    through a ``StreamingQueryListener`` filtered by query id (other
+    streaming queries on the session are invisible):
+    ``query.recentProgress`` alone is NOT a reliable record (observed
+    dropping a batch's entry under AvailableNow multi-batch runs), while
+    the listener receives one ``QueryProgressEvent`` per committed batch.
     """
+    import glob
+    import shutil
     import threading
+    import time
 
     from pyspark.sql.streaming import StreamingQueryListener
+
+    spark = batches[0].sparkSession
+    src = os.path.join(work_dir, "src")
+    os.makedirs(src)
+    for k, batch in enumerate(batches):
+        staged = os.path.join(work_dir, f"b{k}")
+        batch.coalesce(1).write.parquet(staged)
+        part = next(f for f in sorted(os.listdir(staged)) if f.endswith(".parquet"))
+        landing = os.path.join(src, f"batch-{k:05d}.parquet")
+        shutil.move(os.path.join(staged, part), landing)
+        os.utime(landing, (1_000_000 + k, 1_000_000 + k))
+    sink = os.path.join(work_dir, "sink")
+    checkpoint_dir = os.path.join(work_dir, "ckpt")
 
     progress_rows: list[tuple[str, int, int, int]] = []
     terminated: dict[str, threading.Event] = {}
@@ -159,10 +174,9 @@ def run_available_now_with_metrics(
 
         def onQueryProgress(self, event):  # noqa: N802
             p = event.progress
-            # Sum across ALL state operators (ADVICE r8): a transform with
-            # more than one stateful stage (e.g. dedup + windowed agg)
-            # drops rows at each of them; reading only operator 0 would
-            # silently under-report.
+            # Sum across ALL state operators: a transform with more than
+            # one stateful stage (e.g. dedup + windowed agg) drops rows at
+            # each of them; reading only operator 0 would under-report.
             dropped = sum(
                 op.numRowsDroppedByWatermark for op in p.stateOperators
             )
@@ -181,52 +195,41 @@ def run_available_now_with_metrics(
     listener = _Capture()
     spark.streams.addListener(listener)
     try:
-        query = _start_available_now(
-            spark,
-            source_dir,
-            schema,
-            transform,
-            sink_path,
-            checkpoint_dir,
-            output_mode,
-            max_files_per_trigger,
+        stream = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(src)
         )
+        query = _start_available_now(stream, transform, sink, checkpoint_dir)
         qid = str(query.id)
         query.awaitTermination()
         # Progress events arrive on the Python listener bus asynchronously
         # and NOT reliably before the termination event (observed: a data
-        # batch's progress delivered after onQueryTerminated — or seemingly
-        # never ordered ahead of the read). The checkpoint's commits/ dir
-        # is the authoritative batch record, so poll until every committed
-        # batch id has a captured progress row; a missing-metrics return
-        # would silently corrupt a correctness-gated result, so time out
-        # LOUDLY instead.
-        import glob
-        import time as _time
-
+        # batch's progress delivered after onQueryTerminated). The
+        # checkpoint's commits/ dir is the authoritative batch record, so
+        # poll until every committed batch id has a captured progress row;
+        # a missing-metrics return would silently corrupt a
+        # correctness-gated result, so time out LOUDLY instead.
         with lock:
             ev = terminated.setdefault(qid, threading.Event())
         # awaitTermination() already returned, so the engine IS done; a
         # missing termination event within 60 s means the Python listener
-        # bus is slow or wedged. That alone is NOT fatal (ADVICE r9): the
-        # commits-dir poll below is the authoritative completeness check —
-        # if every committed batch's progress row arrived, the result is
-        # sound even if the termination event never shows. Remember the
-        # miss so the poll's failure message names the real cause instead
-        # of a confusing bare 'progress events missing' (ADVICE r8).
+        # bus is slow or wedged. That alone is NOT fatal: the commits-dir
+        # poll below is the completeness check. The miss is remembered so
+        # the poll's failure message names the real cause.
         term_delivered = ev.wait(timeout=60)
         committed = {
             int(os.path.basename(p))
             for p in glob.glob(os.path.join(checkpoint_dir, "commits", "*"))
             if os.path.basename(p).isdigit()
         }
-        deadline = _time.monotonic() + 60
+        deadline = time.monotonic() + 60
         while True:
             with lock:
                 have = {b for i, b, _n, _d in progress_rows if i == qid}
             if committed <= have:
                 break
-            if _time.monotonic() > deadline:
+            if time.monotonic() > deadline:
                 cause = (
                     " (listener bus also failed to deliver "
                     "onQueryTerminated within 60s — events are being "
@@ -238,11 +241,12 @@ def run_available_now_with_metrics(
                     "progress events missing for batches "
                     f"{sorted(committed - have)}{cause}"
                 )
-            _time.sleep(0.2)
+            time.sleep(0.2)
         with lock:
-            return sorted(
+            metrics = sorted(
                 (b, n, d) for i, b, n, d in progress_rows if i == qid
             )
+        return metrics, sink
     finally:
         spark.streams.removeListener(listener)
 
@@ -340,7 +344,7 @@ def merge_batch_into_sink(
     ``_applied_batch_id`` high-watermark column: batch ids are monotonic
     per checkpoint, so ``batch_id <= max(applied)`` identifies a replay
     exactly, and skipping it makes the at-least-once delivery effectively
-    exactly-once (ADVICE r11). Sinks written before this column existed
+    exactly-once. Sinks written before this column existed
     merge as before (watermark absent → never skip).
     """
     if _sink_exists(spark, sink_path):
@@ -392,7 +396,7 @@ def run_foreach_batch_merge(
     (count/sum/min/max over exact types) this is the same groupBy that
     produced the partials, so ``merge(batch_k ∪ ... ∪ batch_1)`` equals the
     from-scratch batch answer EXACTLY and the equivalence is certifiable by
-    hash (VERDICT r10 #3). At scale the body becomes a Delta/Iceberg MERGE
+    hash. At scale the body becomes a Delta/Iceberg MERGE
     with the same combine expression; state lives in the sink, not the
     state store.
 

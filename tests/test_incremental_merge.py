@@ -1,4 +1,4 @@
-"""Incremental view maintenance ≡ recompute (VERDICT r10 #3):
+"""Incremental view maintenance ≡ recompute:
 run_foreach_batch_merge across appended files + restarts must equal the
 from-scratch batch aggregate EXACTLY, and a restart with no new data must
 not change the sink (exactly-once file-source semantics).
@@ -8,7 +8,6 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 
 import pytest
 from pyspark.sql import functions as F
@@ -36,24 +35,16 @@ def _re_agg(df):
 
 
 @pytest.fixture()
-def work():
-    d = tempfile.mkdtemp(prefix="thdp_ivm_test_")
-    os.makedirs(os.path.join(d, "src"))
-    yield d
-    shutil.rmtree(d, ignore_errors=True)
+def work(tmp_path):
+    (tmp_path / "src").mkdir()
+    return str(tmp_path)
 
 
 def _append_file(spark, work: str, name: str, rows: list[tuple[int, int]]) -> None:
     stage = os.path.join(work, f"stage_{name}")
     spark.createDataFrame(rows, SCHEMA).coalesce(1).write.parquet(stage)
-    n = 0
-    for f in sorted(os.listdir(stage)):
-        if f.endswith(".parquet"):
-            shutil.move(
-                os.path.join(stage, f), os.path.join(work, "src", f"{name}-{n}.parquet")
-            )
-            n += 1
-    assert n == 1
+    (part,) = [f for f in os.listdir(stage) if f.endswith(".parquet")]
+    shutil.move(os.path.join(stage, part), os.path.join(work, "src", f"{name}-0.parquet"))
 
 
 def _run(spark, work: str) -> None:
@@ -150,7 +141,7 @@ def test_legacy_sink_without_watermark_still_merges(spark, work):
     assert "_applied_batch_id" in cols
 
 
-def test_registered_query_matches_spark_batch_recompute(spark):
+def test_registered_query_matches_spark_batch_recompute(spark, sf_dir):
     """The registered query's incremental sink equals Spark's OWN batch
     recompute bit-for-bit (the DuckDB oracle certifies the cross-engine
     half; this pins the incremental-vs-batch half inside one engine)."""
@@ -160,7 +151,6 @@ def test_registered_query_matches_spark_batch_recompute(spark):
         incremental_recompute_equivalence,
     )
 
-    sf_dir = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
     got = {
         tuple(r)
         for r in incremental_recompute_equivalence(spark, sf_dir).collect()

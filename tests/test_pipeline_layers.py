@@ -262,6 +262,25 @@ def test_inference_pipeline_wav2vec_shape(spark):
     assert counts["b"] == int(1.0 * 50 - 0.25)
 
 
+def test_executor_resource_key_names_one_factory(monkeypatch):
+    """One model key, two factories: the second request raises instead of
+    handing back the model the first factory built."""
+    from talkinghead_datapipeline_spark.operators import inference
+
+    monkeypatch.setattr(inference, "_RESOURCE_CACHE", {})
+
+    def wav2vec_dim4():
+        return Wav2vecStub(dim=4)
+
+    def wav2vec_dim8():
+        return Wav2vecStub(dim=8)
+
+    model = inference.get_executor_resource("wav2vec_probe", wav2vec_dim4)
+    assert inference.get_executor_resource("wav2vec_probe", wav2vec_dim4) is model
+    with pytest.raises(ValueError, match=r"'wav2vec_probe'.*wav2vec_dim4.*wav2vec_dim8"):
+        inference.get_executor_resource("wav2vec_probe", wav2vec_dim8)
+
+
 # ---------------------------------------------------------------------------
 # streaming.incremental
 # ---------------------------------------------------------------------------

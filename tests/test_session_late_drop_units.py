@@ -1,6 +1,6 @@
-"""Pin the session-window dropped-by-watermark counting unit (r12 finding).
+"""Pin the session-window dropped-by-watermark counting unit.
 
-The r12 full-registry x4 differential showed streaming_session_late_metrics'
+The full-registry x4 differential showed streaming_session_late_metrics'
 raw-row oracle diverging on duplicate-heavy data (engine 324 vs raw 1296).
 Direct probes show the engine's ``numRowsDroppedByWatermark`` for session
 aggregations is neither raw rows nor any simple merged-session unit when a
@@ -22,66 +22,45 @@ early-warning contract the other streaming pins carry.
 
 from __future__ import annotations
 
-import pytest
-
-import os
-import shutil
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
+
+from talkinghead_datapipeline_spark.streaming.incremental import (
+    replay_micro_batches,
+)
 
 # Heavy tier: skipped unless SPARK_GRAFT_SLOW=1 (see conftest; VERDICT r14 #3)
 pytestmark = pytest.mark.slow
 
 
 def _probe(spark, late_rows):
-    from talkinghead_datapipeline_spark.streaming.incremental import (
-        run_available_now_with_metrics,
-    )
-
-    work = tempfile.mkdtemp(prefix="thdp_latedrop_probe_")
-    try:
-        src = os.path.join(work, "src")
-        os.makedirs(src)
-        batches = [
-            [("2024-01-01 10:00:00", 1)],
-            [("2024-01-01 12:00:00", 1)],  # watermark after this = 11:30
-            late_rows,
-        ]
-        for k, rows in enumerate(batches):
-            d = os.path.join(work, f"b{k}")
-            spark.createDataFrame(rows, "ts string, user_id bigint").selectExpr(
-                "CAST(ts AS TIMESTAMP) AS ts", "user_id"
-            ).coalesce(1).write.mode("overwrite").parquet(d)
-            part = next(
-                f for f in sorted(os.listdir(d)) if f.endswith(".parquet")
-            )
-            dst = os.path.join(src, f"batch-{k:05d}.parquet")
-            shutil.copy(os.path.join(d, part), dst)
-            os.utime(dst, (1_000_000 + k,) * 2)
-
-        def transform(stream):
-            return (
-                stream.withWatermark("ts", "30 minutes")
-                .groupBy(
-                    F.session_window("ts", "30 minutes").alias("win"), "user_id"
-                )
-                .agg(F.count(F.lit(1)).alias("n"))
-            )
-
-        metrics = run_available_now_with_metrics(
-            spark,
-            source_dir=src,
-            schema="ts timestamp, user_id bigint",
-            transform=transform,
-            sink_path=os.path.join(work, "sink"),
-            checkpoint_dir=os.path.join(work, "ckpt"),
-            max_files_per_trigger=1,
+    batches = [
+        [("2024-01-01 10:00:00", 1)],
+        [("2024-01-01 12:00:00", 1)],  # watermark after this = 11:30
+        late_rows,
+    ]
+    frames = [
+        spark.createDataFrame(rows, "ts string, user_id bigint").selectExpr(
+            "CAST(ts AS TIMESTAMP) AS ts", "user_id"
         )
-        by_batch = {b: (n, d) for b, n, d in metrics}
-        return by_batch[2]
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        for rows in batches
+    ]
+
+    def transform(stream):
+        return (
+            stream.withWatermark("ts", "30 minutes")
+            .groupBy(F.session_window("ts", "30 minutes").alias("win"), "user_id")
+            .agg(F.count(F.lit(1)).alias("n"))
+        )
+
+    with tempfile.TemporaryDirectory(prefix="thdp_latedrop_probe_") as work:
+        metrics, _sink = replay_micro_batches(
+            frames, "ts timestamp, user_id bigint", transform, work
+        )
+    by_batch = {b: (n, d) for b, n, d in metrics}
+    return by_batch[2]
 
 
 def test_engine_drop_units_under_collisions(spark):

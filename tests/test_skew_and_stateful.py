@@ -4,7 +4,6 @@ the applyInPandasWithState custom stateful operator."""
 from __future__ import annotations
 
 import os
-import tempfile
 
 import pytest
 
@@ -185,8 +184,8 @@ def test_streaming_exact_dedup_drops_in_horizon_duplicates(spark, tmp_path):
             "ts": [base + pd.Timedelta(minutes=m) for m in range(6)],
         }
     )
-    # one file => one micro-batch under AvailableNow with maxFilesPerTrigger
-    # unset; duplicates both within and across rows are covered.
+    # one file => one micro-batch under AvailableNow with no per-trigger
+    # file limit; duplicates both within and across rows are covered.
     spark.createDataFrame(rows).coalesce(1).write.parquet(str(src / "batch"))
 
     stream = spark.readStream.schema(
@@ -209,12 +208,12 @@ def test_streaming_exact_dedup_drops_in_horizon_duplicates(spark, tmp_path):
     assert got == {"a": 1, "b": 2, "c": 4, "d": 6}
 
 
-def test_stateful_running_totals_available_now(spark, sf_dir):
+def test_stateful_running_totals_available_now(spark, sf_dir, tmp_path):
     from talkinghead_datapipeline_spark.streaming.stateful import running_user_totals
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     schema = spark.read.parquet(table_path(sf_dir, "events")).schema
-    work = tempfile.mkdtemp(prefix="thdp_stateful_")
+    work = str(tmp_path)
     src = os.path.join(work, "src")
     os.makedirs(src)
     os.symlink(table_path(sf_dir, "events"), os.path.join(src, "events.parquet"))
@@ -375,7 +374,6 @@ def test_full_outer_view_expiry_boundary_is_strict(spark, tmp_path):
         transform=transform,
         sink_path=str(tmp_path / "sink"),
         checkpoint_dir=str(tmp_path / "ckpt"),
-        output_mode="append",
     )
     got = {
         (r["any_user_id"], r["purchase_id"], r["view_id"])

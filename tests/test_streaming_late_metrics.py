@@ -1,8 +1,8 @@
-"""Watermark late-data metrics (STAGED for r9 registration).
+"""Watermark late-data metrics.
 
-Two layers, mirroring how the streaming family was built:
+Two layers:
 
-1. **Boundary pins** on a crafted 3-file corpus — the exact engine
+1. **Boundary pins** on a crafted 3-batch replay — the exact engine
    semantics the oracle replays, measured (not assumed) on this Spark:
 
    - the late-data filter in micro-batch k uses the watermark that was
@@ -20,66 +20,52 @@ Two layers, mirroring how the streaming family was built:
      agree; a ceiling would disagree — pinned so an engine upgrade that
      changes the rounding fails here, not at the driver).
 
-2. **Oracle differential** — the staged query vs its DuckDB SQL on the
-   real fixture, via the same harness the driver replica uses.
+2. **Fixture checks** — the staged queries on the real fixture exercise
+   real drops, discriminate the lag model and are layout-invariant.
 """
 
 from __future__ import annotations
 
-import os
-import shutil
 import tempfile
 
 import pytest
 from pyspark.sql import functions as F
 
 from talkinghead_datapipeline_spark.queries.streaming_queries import (
+    STRAGGLER_SPLIT_SQL,
     streaming_late_data_metrics,
     streaming_late_sink_counts,
 )
 from talkinghead_datapipeline_spark.streaming.incremental import (
-    run_available_now_with_metrics,
+    replay_micro_batches,
 )
 
 # Heavy tier: skipped unless SPARK_GRAFT_SLOW=1 (see conftest; VERDICT r14 #3)
 pytestmark = pytest.mark.slow
 
 
-def _run_crafted(spark, batches: list[list[str]]) -> list[tuple[int, int, int]]:
-    """Run the 1h-window/30min-watermark count agg over one landing file
-    per batch (mtime-ordered, maxFilesPerTrigger=1) and return the
-    per-batch (batch_id, n_input, n_dropped) engine metrics."""
-    work = tempfile.mkdtemp(prefix="thdp_late_pin_")
-    src = os.path.join(work, "src")
-    os.makedirs(src)
-    for k, stamps in enumerate(batches):
-        df = spark.createDataFrame(
-            [(s,) for s in stamps], "ts_s string"
-        ).select(F.col("ts_s").cast("timestamp").alias("ts"))
-        d = os.path.join(work, f"b{k}")
-        df.coalesce(1).write.mode("overwrite").parquet(d)
-        part = next(f for f in sorted(os.listdir(d)) if f.endswith(".parquet"))
-        dst = os.path.join(src, f"batch-{k:05d}.parquet")
-        shutil.copy(os.path.join(d, part), dst)
-        os.utime(dst, (1_000_000 + k, 1_000_000 + k))
-
-    def transform(stream):
-        return (
-            stream.withWatermark("ts", "30 minutes")
-            .groupBy(F.window("ts", "1 hour").alias("win"))
-            .agg(F.count(F.lit(1)).alias("n"))
-            .select(F.col("win.start").alias("ws"), "n")
-        )
-
-    return run_available_now_with_metrics(
-        spark,
-        source_dir=src,
-        schema="ts timestamp",
-        transform=transform,
-        sink_path=os.path.join(work, "sink"),
-        checkpoint_dir=os.path.join(work, "ckpt"),
-        max_files_per_trigger=1,
+def _transform(stream):
+    return (
+        stream.withWatermark("ts", "30 minutes")
+        .groupBy(F.window("ts", "1 hour").alias("win"))
+        .agg(F.count(F.lit(1)).alias("n"))
+        .select(F.col("win.start").alias("ws"), "n")
     )
+
+
+def _run_crafted(spark, batches: list[list[str]]) -> list[tuple[int, int, int]]:
+    """Replay the 1h-window/30min-watermark count agg over one micro-batch
+    per list of timestamps and return the per-batch (batch_id, n_input,
+    n_dropped) engine metrics."""
+    frames = [
+        spark.createDataFrame([(s,) for s in stamps], "ts_s string").select(
+            F.col("ts_s").cast("timestamp").alias("ts")
+        )
+        for stamps in batches
+    ]
+    with tempfile.TemporaryDirectory(prefix="thdp_late_pin_") as work:
+        metrics, _sink = replay_micro_batches(frames, "ts timestamp", _transform, work)
+    return metrics
 
 
 def test_late_filter_lags_eviction_by_one_batch(spark):
@@ -188,22 +174,17 @@ def test_lag_model_is_observable_not_vacuous(spark, sf_dir):
         % table_path(sf_dir, "events")
     )
     lag1, lag0 = con.execute(
-        """
-        WITH e AS (SELECT epoch_us(ts) AS us, user_id FROM events),
-        bounds AS (SELECT min(us) AS t0, max(us) AS t1 FROM e),
-        b AS (
-          SELECT us,
-                 least(2, least(2, ((us - t0) * 3) // (t1 - t0))
-                          + CASE WHEN user_id % 10 = 7 THEN 2 ELSE 0 END)
-                   AS batch,
-                 (us // 3600000000) * 3600000000 + 3600000000 AS win_end_us
-          FROM e, bounds
+        f"""
+        WITH {STRAGGLER_SPLIT_SQL},
+        w AS (
+          SELECT batch, (us // 3600000000) * 3600000000 + 3600000000 AS win_end_us
+          FROM b
         )
         SELECT
-          (SELECT count(DISTINCT win_end_us) FROM b
+          (SELECT count(DISTINCT win_end_us) FROM w
             WHERE batch = 2 AND win_end_us <=
               (SELECT max(us) FROM b WHERE batch <= 0) - 1800000000),
-          (SELECT count(DISTINCT win_end_us) FROM b
+          (SELECT count(DISTINCT win_end_us) FROM w
             WHERE batch = 2 AND win_end_us <=
               (SELECT max(us) FROM b WHERE batch <= 1) - 1800000000)
         """
@@ -222,8 +203,7 @@ def test_split_invariance(spark, sf_dir, tmp_path):
     arithmetic), the landing files are re-built per run, and the drop
     count is per-window post-merge — nothing may depend on the source
     table's physical layout. Also exercises the staged query's catalog
-    read against a DIRECTORY-layout table (the round-8 landing-dir bug
-    class)."""
+    read against a DIRECTORY-layout table."""
     from talkinghead_datapipeline_spark.catalog import load_table
 
     load_table(spark, sf_dir, "events").repartition(4).write.parquet(

@@ -18,7 +18,10 @@ import pandas as pd
 
 from pyspark.sql import functions as F
 
-from talkinghead_datapipeline_spark.streaming.incremental import tumbling_stream_agg
+from talkinghead_datapipeline_spark.streaming.incremental import (
+    run_available_now,
+    tumbling_stream_agg,
+)
 
 _SCHEMA = "event_id bigint, event_type string, value double, ts timestamp"
 
@@ -38,20 +41,13 @@ def _write_batch(spark, src, name, start_min, n, base):
     return rows
 
 
+def _transform(stream):
+    return tumbling_stream_agg(stream, window="10 minutes", watermark="10 minutes")
+
+
 def _run_once(spark, src, sink, ckpt):
-    stream = spark.readStream.schema(_SCHEMA).option(
-        "pathGlobFilter", "*.parquet"
-    ).parquet(str(src / "*"))
-    q = (
-        tumbling_stream_agg(stream, window="10 minutes", watermark="10 minutes")
-        .writeStream.format("parquet")
-        .outputMode("append")
-        .option("path", str(sink))
-        .option("checkpointLocation", str(ckpt))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    # each batch is a directory of part files; the glob reads them all
+    run_available_now(spark, str(src / "*"), _SCHEMA, _transform, str(sink), str(ckpt))
 
 
 def test_restart_from_checkpoint_is_exactly_once(spark, tmp_path):

@@ -1,15 +1,13 @@
-"""Session windows under late data (STAGED for r10 registration).
+"""Session windows under late data.
 
-Empirical pins for the four session-late contracts (see the staged block
+Empirical pins for the four session-late contracts (see the session block
 in queries/streaming_queries.py), each measured on crafted micro-batch
-sequences BEFORE the replay oracle was written, plus the oracle compare
-and the split-invariance axis over the real fixture.
+sequences, plus the real-drop and split-invariance checks over the real
+fixture.
 """
 
 from __future__ import annotations
 
-import os
-import shutil
 import tempfile
 
 import pytest
@@ -20,7 +18,7 @@ from talkinghead_datapipeline_spark.queries.streaming_queries import (
     streaming_session_late_sink,
 )
 from talkinghead_datapipeline_spark.streaming.incremental import (
-    run_available_now_with_metrics,
+    replay_micro_batches,
 )
 
 # Heavy tier: skipped unless SPARK_GRAFT_SLOW=1 (see conftest; VERDICT r14 #3)
@@ -28,57 +26,34 @@ pytestmark = pytest.mark.slow
 
 
 def _run_crafted(spark, batches, gap="30 minutes", delay="30 minutes"):
-    """Run a session_window count over hand-written micro-batches: one
-    mtime-ordered landing file per batch, maxFilesPerTrigger=1 (the
-    deterministic batch-sequence contract). Events are (hh, mm) times on
-    one day, one user. Returns (metrics, sorted sink rows)."""
-    work = tempfile.mkdtemp(prefix="thdp_sess_pin_")
-    try:
-        src = os.path.join(work, "src")
-        os.makedirs(src)
-        for k, evs in enumerate(batches):
-            rows = [(f"2024-01-01 {hh:02d}:{mm:02d}:00", 1) for hh, mm in evs]
-            df = spark.createDataFrame(rows, "s string, u bigint").select(
-                F.col("s").cast("timestamp").alias("ts"), "u"
-            )
-            part_dir = os.path.join(work, f"b{k}")
-            df.coalesce(1).write.mode("overwrite").parquet(part_dir)
-            part = next(
-                f for f in sorted(os.listdir(part_dir)) if f.endswith(".parquet")
-            )
-            dst = os.path.join(src, f"batch-{k:05d}.parquet")
-            shutil.copy(os.path.join(part_dir, part), dst)
-            os.utime(dst, (1_000_000 + k, 1_000_000 + k))
+    """Replay a session_window count over hand-written micro-batches.
+    Events are (hh, mm) times on one day, one user. Returns (metrics,
+    sorted sink rows)."""
+    frames = [
+        spark.createDataFrame(
+            [(f"2024-01-01 {hh:02d}:{mm:02d}:00", 1) for hh, mm in evs],
+            "s string, u bigint",
+        ).select(F.col("s").cast("timestamp").alias("ts"), "u")
+        for evs in batches
+    ]
 
-        def transform(stream):
-            return (
-                stream.withWatermark("ts", delay)
-                .groupBy(F.session_window("ts", gap).alias("win"), "u")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .select(
-                    F.col("win.start").alias("s"),
-                    F.col("win.end").alias("e"),
-                    "n",
-                )
-            )
+    def transform(stream):
+        return (
+            stream.withWatermark("ts", delay)
+            .groupBy(F.session_window("ts", gap).alias("win"), "u")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .select(F.col("win.start").alias("s"), F.col("win.end").alias("e"), "n")
+        )
 
-        sink = os.path.join(work, "sink")
-        metrics = run_available_now_with_metrics(
-            spark,
-            source_dir=src,
-            schema="ts timestamp, u bigint",
-            transform=transform,
-            sink_path=sink,
-            checkpoint_dir=os.path.join(work, "ckpt"),
-            max_files_per_trigger=1,
+    with tempfile.TemporaryDirectory(prefix="thdp_sess_pin_") as work:
+        metrics, sink = replay_micro_batches(
+            frames, "ts timestamp, u bigint", transform, work
         )
         out = sorted(
             (str(r.s)[11:16], str(r.e)[11:16], r.n)
             for r in spark.read.parquet(sink).collect()
         )
-        return metrics, out
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    return metrics, out
 
 
 # --- contract pins (crafted batches) ---------------------------------------

@@ -22,6 +22,8 @@ import pandas as pd
 
 from pyspark.sql import functions as F
 
+from talkinghead_datapipeline_spark.streaming.incremental import run_available_now
+
 _SCHEMA = "user_id bigint, ts timestamp"
 _GAP = "30 minutes"
 
@@ -48,21 +50,8 @@ def _transform(stream):
 
 
 def _run_once(spark, src, sink, ckpt):
-    stream = (
-        spark.readStream.schema(_SCHEMA)
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(str(src / "*"))
-    )
-    q = (
-        _transform(stream)
-        .writeStream.format("parquet")
-        .outputMode("append")
-        .option("path", str(sink))
-        .option("checkpointLocation", str(ckpt))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    # each batch is a directory of part files; the glob reads them all
+    run_available_now(spark, str(src / "*"), _SCHEMA, _transform, str(sink), str(ckpt))
 
 
 def test_open_session_merges_across_restart(spark, tmp_path):
