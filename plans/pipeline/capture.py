@@ -11,9 +11,10 @@ Builds, in one fresh Spark session and without running a job:
 
 or, with ``--registry``, every registered query over the tables in SF_DIR,
 in registry order (a query whose builder iterates on the driver runs those
-jobs). One file per table or query. Each holds its analyzed plan with the
-scratch directory replaced by ``<work>`` and every session-dependent name
-masked:
+jobs), plus each query's DuckDB oracle SQL text as ``oracle_<name>.sql``.
+One file per table or query. Each holds its analyzed plan (or oracle text)
+with the scratch directory replaced by ``<work>`` and every
+session-dependent name masked:
 
 - lambda variables are renumbered by the first appearance of their
   expression id (``lambda x_7#12`` and ``lambda x#40`` both become
@@ -25,8 +26,8 @@ masked:
   the ``<n>`` of its ``_pdbar_<tag>_<n>`` metrics and the DataFrame id that
   ends a ``CollectMetrics`` line.
 
-Two checkouts build byte-equal plans when ``diff -r`` of their OUT_DIRs is
-empty.
+Two checkouts build byte-equal plans (and, with ``--registry``, byte-equal
+oracle texts) when ``diff -r`` of their OUT_DIRs is empty.
 """
 
 import os
@@ -89,6 +90,9 @@ def main(repo: str, out: str, sf_dir: str, registry: bool = False) -> None:
 
             for name, spec in all_queries().items():
                 write("registry", {name: spec.spark(spark, sf_dir)})
+                if spec.oracle is not None:
+                    with open(os.path.join(out, f"oracle_{name}.sql"), "w") as f:
+                        f.write(spec.oracle.replace(work, "<work>") + "\n")
             return
 
         from talkinghead_datapipeline_spark import run as run_mod

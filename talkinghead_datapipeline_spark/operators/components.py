@@ -21,14 +21,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def connected_components(
-    edges: DataFrame,
-    src: str = "key_a",
-    dst: str = "key_b",
-    max_iter: int = 20,
-) -> DataFrame:
-    """(id, component) for every vertex in ``edges``; component = min vertex
-    id reachable. Deterministic.
+def connected_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
+    """(id, component) for every vertex of the (key_a, key_b) pairs
+    ``edges``; component = min vertex id reachable. Deterministic.
 
     Each round does one neighbor-min propagation PLUS one pointer-jumping
     hop (``comp ← label(comp)``), so label distance doubles per round and
@@ -45,8 +40,8 @@ def connected_components(
     if max_iter < 1:
         raise ValueError("max_iter must be >= 1")
     sym = (
-        edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"))
-        .unionAll(edges.select(F.col(dst).alias("_s"), F.col(src).alias("_d")))
+        edges.select(F.col("key_a").alias("_s"), F.col("key_b").alias("_d"))
+        .unionAll(edges.select(F.col("key_b").alias("_s"), F.col("key_a").alias("_d")))
         # Materialize the edge list ONCE: it is typically the output of a
         # whole dedup pipeline (LSH bands + Jaccard verify), and without
         # this checkpoint every propagation round would re-execute that

@@ -311,6 +311,18 @@ def view_transform(X: np.ndarray, cam: np.ndarray) -> np.ndarray:
     return t
 
 
+# ShapeRenderer's default frame (H, W); a frame is H·W uint8 bytes.
+FRAME_HW = (16, 16)
+
+
+def sh_lighting() -> np.ndarray:
+    """ShapeRenderer's (9, 3) SH lighting coefficients: seeded, with a
+    dominant ambient term that keeps the shading positive."""
+    sh = _seeded_rng("sh_lighting").normal(size=(9, 3)) * 0.3
+    sh[0] += 2.0
+    return sh
+
+
 class ShapeRenderer:
     """N17 renderer with the rasterizer / normals / SH-lighting tiers REAL
     (operators.rasterize — point-in-triangle + z-buffer on quantized view
@@ -360,17 +372,12 @@ class ShapeRenderer:
 
     def __init__(
         self,
-        size_hw: tuple[int, int] = (16, 16),
+        size_hw: tuple[int, int] = FRAME_HW,
         faces: np.ndarray | None = None,
-        sh_coeff: np.ndarray | None = None,
     ):
         self.size_hw = size_hw
         self.faces = None if faces is None else np.asarray(faces, dtype=np.int64)
-        if sh_coeff is None:
-            sh = _seeded_rng("sh_lighting").normal(size=(9, 3)) * 0.3
-            sh[0] += 2.0  # dominant ambient keeps shading positive
-            sh_coeff = sh
-        self.sh_coeff = np.asarray(sh_coeff, dtype=np.float64)
+        self.sh_coeff = sh_lighting()
 
     def _faces_for(self, n_verts: int) -> np.ndarray:
         if self.faces is not None:

@@ -318,9 +318,10 @@ def rasterize_batch(
 
 
 def rasterize(
-    q_verts: np.ndarray, faces: np.ndarray, size: int, scale: int = SCALE
+    q_verts: np.ndarray, faces: np.ndarray, size: int
 ) -> dict[str, np.ndarray]:
-    """Exact-integer barycentric rasterization with a z-buffer (one mesh).
+    """Exact-integer barycentric rasterization with a z-buffer (one mesh),
+    on the ``SCALE`` grid.
 
     Returns dict with:
     - ``mask``   (size, size) bool — any non-degenerate face covers the pixel
@@ -337,9 +338,7 @@ def rasterize(
     engines agree without a top-left tie rule. Delegates to
     ``rasterize_batch`` with a batch of one.
     """
-    out = rasterize_batch(
-        np.asarray(q_verts, dtype=np.int64)[None], faces, size, scale
-    )
+    out = rasterize_batch(np.asarray(q_verts, dtype=np.int64)[None], faces, size)
     return {k: v[0] for k, v in out.items()}
 
 
@@ -437,16 +436,16 @@ def vertex_normals_batch(
     return normals / np.maximum(norm, 1e-6)
 
 
-def quantize_symmetric(verts: np.ndarray, scale: int = SCALE) -> np.ndarray:
+def quantize_symmetric(verts: np.ndarray) -> np.ndarray:
     """Quantize WORLD-space verts (no z shift) to the integer grid:
-    floor(v·scale) with the symmetric ±COORD_CLAMP_UNITS clamp on all three
-    axes. scale is a power of two, so v·scale is an EXACT float op and the
+    floor(v·SCALE) with the symmetric ±COORD_CLAMP clamp on all three
+    axes. SCALE is a power of two, so v·SCALE is an EXACT float op and the
     floor/clamp chain is bit-identical to the SQL twin
     ``CAST(GREATEST(-hi, LEAST(hi, floor(v * scale))) AS BIGINT)``. Feeds
     the quantized-normal tier of the shaded-channel oracle
     (n17_render_shaded_checksum): normals of the quantized world mesh."""
-    f = np.floor(np.asarray(verts, dtype=np.float64) * float(scale))
-    hi = float(COORD_CLAMP_UNITS * scale)
+    f = np.floor(np.asarray(verts, dtype=np.float64) * float(SCALE))
+    hi = float(COORD_CLAMP)
     return np.maximum(-hi, np.minimum(hi, f)).astype(np.int64)
 
 
@@ -498,33 +497,27 @@ def normalize_int_vectors(n_int: np.ndarray) -> np.ndarray:
     return nd / np.maximum(norm, 1e-6)[..., None]
 
 
-def shade_gray_weights(sh_coeff: np.ndarray | None = None) -> np.ndarray:
+def shade_gray_weights() -> np.ndarray:
     """The 9 gray-channel SH weights of the shaded overlay: constant factor
-    × channel-mean coefficient. Irradiance is linear in the coefficients,
-    so the RGB-mean of ``sh_irradiance`` equals the contraction against
-    these folded weights — ONE shared source for the query factory and the
-    SQL oracle literals (repr round-trips exactly)."""
-    if sh_coeff is None:
-        from talkinghead_datapipeline_spark.operators.models import _seeded_rng
+    × channel-mean coefficient of ShapeRenderer's lighting. Irradiance is
+    linear in the coefficients, so the RGB-mean of ``sh_irradiance`` equals
+    the contraction against these folded weights — ONE shared source for
+    the query factory and the SQL oracle literals (repr round-trips
+    exactly)."""
+    from talkinghead_datapipeline_spark.operators.models import sh_lighting
 
-        sh = _seeded_rng("sh_lighting").normal(size=(9, 3)) * 0.3
-        sh[0] += 2.0  # ShapeRenderer's default: dominant ambient
-        sh_coeff = sh
-    return SH_CONSTANT_FACTOR * np.asarray(sh_coeff, dtype=np.float64).mean(axis=1)
+    return SH_CONSTANT_FACTOR * sh_lighting().mean(axis=1)
 
 
-def shade_channel_weights(sh_coeff: np.ndarray | None = None) -> np.ndarray:
-    """The (9, 3) PER-CHANNEL SH weights (constant factor × coefficient) of
-    the textured forward path — ``sh_gray_chain`` per channel against
-    column c reproduces ``sh_irradiance``'s channel c up to association.
-    One shared source for the texture query factory and its SQL literals."""
-    if sh_coeff is None:
-        from talkinghead_datapipeline_spark.operators.models import _seeded_rng
+def shade_channel_weights() -> np.ndarray:
+    """The (9, 3) PER-CHANNEL SH weights (constant factor × coefficient of
+    ShapeRenderer's lighting) of the textured forward path —
+    ``sh_gray_chain`` per channel against column c reproduces
+    ``sh_irradiance``'s channel c up to association. One shared source for
+    the texture query factory and its SQL literals."""
+    from talkinghead_datapipeline_spark.operators.models import sh_lighting
 
-        sh = _seeded_rng("sh_lighting").normal(size=(9, 3)) * 0.3
-        sh[0] += 2.0  # ShapeRenderer's default: dominant ambient
-        sh_coeff = sh
-    return SH_CONSTANT_FACTOR[:, None] * np.asarray(sh_coeff, dtype=np.float64)
+    return SH_CONSTANT_FACTOR[:, None] * sh_lighting()
 
 
 def sh_gray_chain(nx: np.ndarray, ny: np.ndarray, nz: np.ndarray, w) -> np.ndarray:

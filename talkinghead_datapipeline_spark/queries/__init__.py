@@ -84,38 +84,17 @@ _MODULES = (
     "stats_tests",
 )
 
-# The driver's correctness gate iterates ``queries()`` in insertion order
-# and (observed in round 1) checks a bounded prefix of ~50 entries.
-# Ordering is therefore coverage policy, ROTATED each round so every
-# registered query eventually receives a driver row (policy pinned by
-# tests/test_queries_oracle.py::test_driver_priority_rotation_policy).
-#
-# ROUND-15 WINDOW (optimization round 2/2 — no registrations; registry
-# stays 244). VERDICT r14 #1: the r14 optimization batches rewrote ~26
-# query plans AFTER the r14 window froze, so only 4 got a driver row —
-# the house rule (changed-code beats stale) makes every r14-rewritten
-# query a canary THIS round, joined by every query r15's own optimization
-# touches. Seat order:
-#  1. r14+r15 changed-code canaries (45): the r14 rewrites (bootstrap
-#     pair, JL, theil_sen two-level rank, driver-side IVF Lloyd, the
-#     PQ/simhash SQL trees, nb_lang single-shuffle trainer, psi, pagerank,
-#     basket, item_cf/triangle, sim_lsh_recall, bloom, logreg, dbscan,
-#     table_integrity, winsorized pair) — four of which (sim_ivf_probe,
-#     simhash pair, dbscan) already got r14 rows but were re-rewritten or
-#     share r15-touched machinery — plus the r15 rewrites: the
-#     range-partitioned exact-percentile rank (winsorized pair, psi), the
-#     folded NB trainer (nb pair), and every consumer of the r15 SQL-twin
-#     conversions (bm25/rrf, kfold, ewma, lineitem correlations, the
-#     minhash/shingle family incl. the edge-graph cluster consumers, the
-#     cosine-expression similarity family). Twin conversions are
-#     plan-identity-proven (normalized analyzed trees byte-equal,
-#     plans/r15 + parity tests), but the proof rides the canary seat, not
-#     the other way round.
-#  2. r10-era drain, oldest-first alphabetical (5 seats this round; the
-#     r10 tier entered r15 with 48 keys, 44 after the canaries above —
-#     the remainder drains in r16+ after this round's canary spike).
+# The external correctness gate iterates ``queries()`` in insertion order
+# and checks only a bounded prefix (~50 entries). ``_DRIVER_PRIORITY`` is
+# that prefix: which queries get a gate row is coverage policy, and the
+# prefix rotates so that every registered query eventually gets one.
+# tests/test_queries_oracle.py::test_driver_priority_rotation_policy pins
+# the rotation (never-certified queries lead the prefix; every family keeps
+# evidence). The tuple's groups are, in order: queries whose plans were
+# rewritten since their last gate row (changed code before stale code),
+# then the oldest-certified drain, alphabetical.
 _DRIVER_PRIORITY = (
-    # --- 1a. r14-rewritten canaries (VERDICT r14 #1) ---
+    # --- rewritten plans ---
     "bootstrap_ci_order_value",
     "bootstrap_ci_order_value_prod",
     "random_projection_jl",
@@ -135,14 +114,12 @@ _DRIVER_PRIORITY = (
     "triangle_count_copart",
     "basket_association_rules",
     "dbscan_grid_roles",
-    # --- 1b. rewritten in BOTH r14 and r15 ---
     "winsorized_price_stats",
     "winsorized_bounds_sketch_certified",
     "psi_snapshot_drift",
     "nb_lang_classifier_scores",
     "nb_lang_margin",
     "pagerank_trade_network",
-    # --- 1c. r15 SQL-twin conversion canaries (plan-identity proven) ---
     "bm25_topk_docs",
     "rrf_hybrid_topk",
     "kfold_linreg_cv",
@@ -163,7 +140,7 @@ _DRIVER_PRIORITY = (
     "sim_cosine_topk_per_label",
     "sim_sq8_quant_topk",
     "sim_lsh_bucket_topk",
-    # --- 2. r10-era drain (oldest tier, alphabetical; 5 seats) ---
+    # --- oldest-certified drain ---
     "approx_quantiles_certified",
     "bigram_lm_doc_scores",
     "bpe_top_merge_pairs",

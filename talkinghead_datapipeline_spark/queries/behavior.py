@@ -536,7 +536,7 @@ def rolling_mad_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact order statistics; at wider windows the approx handoff is a
     t-digest-style sketch).
 
-    Perf (VERDICT r6 #5): profiling attributed the 3.9s cost NOT to the
+    Perf: profiling attributed the 3.9s cost NOT to the
     window or the HOFs (scan 0.21s → +window+collect+sort+med 0.70s →
     +devs 0.82s) but to PREDICATE PUSHDOWN: Catalyst alias-substitutes the
     mad/robust_z filter through every projection and parks it directly
@@ -552,10 +552,10 @@ def rolling_mad_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     adds no shuffle and no sort (distribution already satisfied), nothing
     materializes. Cold A/B at sf0.1 (rebuilt-DF, clearCache inside timed
     reps, median-of-3, interleaved): 2.80s → 0.97-1.35s, rows identical.
-    The grouped-applyInPandas alternative VERDICT r6 #5 asked to A/B was
-    measured and rejected: 10.6-11.0s at sf0.1 (identical output) — the
-    per-window Python median lambda inside pandas ``rolling(...).apply``
-    dominates, 10x worse than this JVM form."""
+    The grouped-applyInPandas alternative was measured and rejected:
+    10.6-11.0s at sf0.1 (identical output) — the per-window Python median
+    lambda inside pandas ``rolling(...).apply`` dominates, 10x worse than
+    this JVM form."""
     ev = load_table(spark, sf_dir, "events")
     w = (
         W.partitionBy("user_id")
@@ -800,31 +800,46 @@ def diurnal_activity_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# REGISTERED r11 (staged r10): Nelson-Aalen hazard table of time to first
-# purchase — the survival-analysis class (the risk-set/censoring estimator
-# behind every "when do users convert/churn" curve; nothing in the
-# registry certifies a risk-set statistic). The event is a user's FIRST
+# Survival family: time to first purchase. The event is a user's FIRST
 # purchase, clocked in hours from their first event; users who never
 # purchase are right-censored at their last observed event — they count
-# in every risk set up to their observed time but never as events,
-# exactly the classical treatment. (A 7-day-inactivity churn event was
-# probed first and rejected: the events fixture spans ~29 days with <= 2
-# days of max inactivity, so that cutoff has ZERO events at every SF;
-# the purchase event yields ~75 distinct hour-grain steps at sf0.01.)
-# Verified by tests/test_survival_staged.py.
+# in every risk set up to their observed time but never as events, the
+# classical treatment. (A 7-day-inactivity churn event was rejected: the
+# events fixture spans ~29 days with <= 2 days of max inactivity, so that
+# cutoff has ZERO events at every SF; the purchase event yields ~75
+# distinct hour-grain steps at sf0.01.) nelson_aalen_conversion_hazard,
+# kaplan_meier_survival and logrank_segment_survival share the user-grain
+# observation and the risk set below, once per dialect. Verified by
+# tests/test_survival_staged.py, test_km_staged.py and
+# test_logrank_staged.py.
 #
-# Design for exactness: the classical Kaplan-Meier survival product
-# Π(1 − d_i/n_i) and the real-valued Nelson-Aalen cumulative hazard
-# Σ d_i/n_i are sequential folds over rationals — not associative in
-# doubles, so not certifiable bit-exactly. Instead each per-step hazard
-# is quantized FIRST to an exact integer (d_i*1e6 div n_i — floor-ppm of
-# a rational, deterministic), and the cumulative hazard is then an exact
-# associative BIGINT prefix sum of those integers: the standard estimator
-# up to 1e-6 quantization per step, with every column integer end-to-end.
+# Exactness: every column is an integer end-to-end. Event times are exact
+# integer-µs arithmetic floored to hours (`div`: the spans are
+# non-negative); the risk set is a total-minus-prefix of exact counts. The
+# classical Kaplan-Meier product Π(1 − d_i/n_i) and the real-valued
+# Nelson-Aalen cumulative hazard Σ d_i/n_i are sequential folds over
+# rationals — not associative in doubles, so not certifiable bit-exactly.
+# Instead each per-step hazard is quantized FIRST to an exact integer
+# (d_i*1e6 div n_i — floor-ppm of a rational, deterministic), and the
+# cumulative hazard is an exact associative BIGINT prefix sum of those
+# integers: the standard estimator up to 1e-6 quantization per step.
+#
+# Scale shape: one user-grain aggregation of the event stream (the only
+# data-sized shuffle), then an event-time-grain histogram whose windows
+# run over distinct-hour cardinality (bounded by corpus span, not rows).
 # ---------------------------------------------------------------------------
 
-NELSON_AALEN_ORACLE = """
-WITH u AS (
+
+def _at_risk_sql(col: str) -> str:
+    """The risk set of the per-hour counts ``col``: the total minus the
+    counts at earlier event times."""
+    return f"""CAST(sum({col}) OVER () AS BIGINT)
+           - CAST(COALESCE(sum({col}) OVER (ORDER BY t_hours
+                     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
+                   0) AS BIGINT)"""
+
+
+_RISK_SET_CTES = f"""u AS (
   SELECT user_id,
          min(epoch_us(ts)) AS first_us,
          max(epoch_us(ts)) AS last_us,
@@ -846,12 +861,55 @@ h AS (
 ),
 risk AS (
   SELECT t_hours, n_here, d_events,
-         CAST(sum(n_here) OVER () AS BIGINT)
-           - CAST(COALESCE(sum(n_here) OVER (ORDER BY t_hours
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                   0) AS BIGINT) AS n_at_risk
+         {_at_risk_sql("n_here")} AS n_at_risk
   FROM h
-),
+)"""
+
+
+def _first_purchase_obs(ev: DataFrame, *keys: str) -> DataFrame:
+    """One row per user (and group ``keys``): ``t_hours`` from the first
+    event to the first purchase, or to the last event for a never-buyer,
+    and ``event`` 1 for a purchase, 0 for a censored user."""
+    us = F.unix_micros("ts")
+    u = ev.groupBy("user_id", *keys).agg(
+        F.min(us).alias("first_us"),
+        F.max(us).alias("last_us"),
+        F.min(F.when(F.col("event_type") == "purchase", us)).alias(
+            "first_buy_us"
+        ),
+    )
+    return u.select(
+        *keys,
+        F.expr(
+            "(COALESCE(first_buy_us, last_us) - first_us) div 3600000000"
+        ).alias("t_hours"),
+        F.col("first_buy_us").isNotNull().cast("bigint").alias("event"),
+    )
+
+
+def _at_risk(col: str):
+    """The Column twin of ``_at_risk_sql``."""
+    w_before = W.orderBy("t_hours").rowsBetween(W.unboundedPreceding, -1)
+    return F.sum(col).over(W.partitionBy()).cast("bigint") - F.coalesce(
+        F.sum(col).over(w_before), F.lit(0)
+    ).cast("bigint")
+
+
+def _event_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(t_hours, d_events, n_at_risk) at every event time with an event:
+    the Column twin of ``_RISK_SET_CTES`` filtered to ``d_events > 0``."""
+    obs = _first_purchase_obs(load_table(spark, sf_dir, "events"))
+    h = obs.groupBy("t_hours").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_here"),
+        F.sum("event").cast("bigint").alias("d_events"),
+    )
+    return h.select(
+        "t_hours", "d_events", _at_risk("n_here").alias("n_at_risk")
+    ).filter(F.col("d_events") > 0)
+
+
+NELSON_AALEN_ORACLE = f"""
+WITH {_RISK_SET_CTES},
 steps AS (
   SELECT t_hours, d_events, n_at_risk,
          (d_events * 1000000) // n_at_risk AS hazard_ppm
@@ -879,52 +937,12 @@ def nelson_aalen_conversion_hazard(
     purchase), the number at risk, the conversion events, the per-step
     hazard, and the cumulative hazard — the survival curve behind "how
     long does intent take to convert", with users who never purchase
-    right-censored at their last observed event (in the risk set up to
-    their observed time, never an event — the classical treatment).
+    right-censored at their last observed event.
 
-    Scale shape: one user-grain aggregation of the event stream (the only
-    data-sized shuffle), then an event-time-grain histogram whose prefix
-    windows run over distinct-hour cardinality (bounded by corpus span,
-    not rows).
-
-    Determinism (fully exact, integers end-to-end): event times are exact
-    integer-µs arithmetic floored to hours (`div`: the spans are
-    non-negative); the risk set is a total-minus-prefix of exact counts;
-    each hazard step is the floor-ppm integer quotient of a rational (see
-    the staging comment for why the cumulative hazard sums these
-    quantized integers instead of folding raw rationals in doubles)."""
-    ev = load_table(spark, sf_dir, "events")
-    us = F.unix_micros("ts")
-    u = ev.groupBy("user_id").agg(
-        F.min(us).alias("first_us"),
-        F.max(us).alias("last_us"),
-        F.min(F.when(F.col("event_type") == "purchase", us)).alias(
-            "first_buy_us"
-        ),
-    )
-    obs = u.select(
-        F.expr(
-            "(COALESCE(first_buy_us, last_us) - first_us) div 3600000000"
-        ).alias("t_hours"),
-        F.col("first_buy_us").isNotNull().cast("bigint").alias("event"),
-    )
-    h = obs.groupBy("t_hours").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_here"),
-        F.sum("event").cast("bigint").alias("d_events"),
-    )
-    w_all = W.partitionBy()
-    w_before = W.orderBy("t_hours").rowsBetween(W.unboundedPreceding, -1)
-    risk = h.select(
-        "t_hours",
-        "d_events",
-        (
-            F.sum("n_here").over(w_all).cast("bigint")
-            - F.coalesce(F.sum("n_here").over(w_before), F.lit(0)).cast(
-                "bigint"
-            )
-        ).alias("n_at_risk"),
-    )
-    steps = risk.filter(F.col("d_events") > 0).withColumn(
+    Each hazard step is the floor-ppm integer quotient of a rational, and
+    the cumulative hazard sums these quantized integers (see the survival
+    family comment for why, and for the scale shape)."""
+    steps = _event_steps(spark, sf_dir).withColumn(
         "hazard_ppm", F.expr("(d_events * 1000000) div n_at_risk")
     )
     w_cum = W.orderBy("t_hours").rowsBetween(
@@ -942,16 +960,15 @@ def nelson_aalen_conversion_hazard(
 
 
 # ---------------------------------------------------------------------------
-# REGISTERED r12 (staged r11): sessionized first/last-touch revenue
-# attribution — the marketing-attribution class (VERDICT r10 #7; pairs with
+# attribution_first_last_touch: sessionized first/last-touch revenue
+# attribution — the marketing-attribution class (pairs with
 # session_funnel_conversion and sessionize_users: the funnel certifies the
 # path, this certifies WHO GETS CREDIT for the purchase at its end). Each
 # purchase attributes its exact cent value to (a) the FIRST and (b) the
 # LAST touch event (view/click) strictly before it inside its own session
 # (30-minute inactivity gap, the sessionize_users contract); purchases with
 # no prior touch in-session attribute to 'direct'. Verified by
-# tests/test_attribution_staged.py; registration takes an r12 seat per the
-# house staging rule.
+# tests/test_attribution_staged.py.
 #
 # Determinism (fully exact): sessions split on the same integer-µs gap and
 # (event_id) order as sessionize_users; the first/last-touch carries are
@@ -1031,7 +1048,7 @@ def attribution_first_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sessionized first/last-touch revenue attribution per channel: every
     purchase credits its exact cent value to the first and the last
     view/click strictly before it in its 30-minute-gap session ('direct'
-    when none). See the staging block above for the determinism and scale
+    when none). See the comment above for the determinism and scale
     contract."""
     from talkinghead_datapipeline_spark.functions.geometry import round_half_away
 
@@ -1104,8 +1121,8 @@ def attribution_first_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# STAGED FOR r13 REGISTRATION: CUPED variance-reduced A/B lift — the
-# experimentation-efficiency class (VERDICT r11 #4a; pairs with
+# cuped_adjusted_lift: CUPED variance-reduced A/B lift — the
+# experimentation-efficiency class (pairs with
 # ab_test_lift: that query certifies the raw two-cohort readout, this
 # certifies the industry-standard pre-period covariate adjustment that
 # shrinks its variance). Cohorts split by user_id parity as in ab_test_lift;
@@ -1113,8 +1130,7 @@ def attribution_first_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
 # of the event window (ts >= 2024-01-16, the midpoint of the fixed 30-day
 # corpus window, stable at every SF), the covariate X is the same user's
 # purchase cents in the FIRST half — the pre-experiment period. Verified by
-# tests/test_cuped_staged.py; registration takes an r13 seat per the house
-# staging rule.
+# tests/test_cuped_staged.py.
 #
 # CUPED (Deng et al., WSDM 2013, public): Y' = Y − θ(X − X̄) with
 # θ = cov(X,Y)/var(X) estimated POOLED across cohorts; the adjusted lift is
@@ -1200,7 +1216,7 @@ def cuped_adjusted_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     (covariate X) adjust the experiment-period cents (metric Y) via the
     pooled θ = cov(X,Y)/var(X); emits cohort sizes, θ, the raw and
     CUPED-adjusted lifts (dollars), and the achieved variance-reduction
-    factor ρ². See the staging block above for the determinism and scale
+    factor ρ². See the comment above for the determinism and scale
     contract."""
     from talkinghead_datapipeline_spark.functions.geometry import round_half_away
 
@@ -1281,7 +1297,7 @@ def cuped_adjusted_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# STAGED for r13 registration — basket_association_rules: market-basket
+# basket_association_rules: market-basket
 # association-rule mining (the Apriori/FP-growth OUTPUT contract: support /
 # confidence / lift over co-purchased item pairs) at brand grain. The class
 # the registry lacked: rfm_segments profiles customers and
@@ -1304,9 +1320,21 @@ def cuped_adjusted_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
 # pairs per order at 25 brands) and two combinable aggs over frames bounded
 # by brand cardinality squared (300 rows), not data. At 100 TB: one
 # broadcast, two order-keyed shuffles, brand-bounded reduce.
-# Verified by tests/test_basket_gini_staged.py; registration takes an r13
-# seat per the house staging rule.
+# Verified by tests/test_basket_gini_staged.py.
 # ---------------------------------------------------------------------------
+
+def _order_brands(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(o, b): every distinct (order, brand) pair of lineitem, persisted —
+    the basket machinery of basket_association_rules and
+    graph.triangle_count_brand_graph."""
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
+    pt = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
+    return persist_once(
+        li.join(F.broadcast(pt), li.l_partkey == pt.p_partkey)
+        .select(F.col("l_orderkey").alias("o"), F.col("p_brand").alias("b"))
+        .distinct()
+    )
+
 
 BASKET_RULES_ORACLE = """
 WITH ob AS (
@@ -1347,19 +1375,13 @@ def basket_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Market-basket association rules at brand grain: for co-purchased
     brand pairs past a 0.1% support gate, the exact integer support,
     directional confidences, and lift (all floor-ppm/micro), top-20 by
-    lift. See the staging block above for the determinism and scale
+    lift. See the comment above for the determinism and scale
     contract."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    pt = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    ob = persist_once(
-        li.join(F.broadcast(pt), li.l_partkey == pt.p_partkey)
-        .select(F.col("l_orderkey").alias("o"), F.col("p_brand").alias("b"))
-        .distinct()
-    )
+    ob = _order_brands(spark, sf_dir)
     n = ob.agg(F.countDistinct("o").cast("bigint").alias("n_orders"))
     singles = ob.groupBy("b").agg(F.count(F.lit(1)).cast("bigint").alias("n_b"))
-    # Map-side pair expansion instead of the o=o2 self-join (guide §2.1:
-    # the join shuffled the cached frame twice and re-materialized every
+    # Map-side pair expansion instead of the o=o2 self-join (the join
+    # shuffled the cached frame twice and re-materialized every
     # basket pair through an SMJ; one collect_list shuffle + an array
     # combination explode emits the identical (brand_a < brand_b) pair
     # multiset — brands are distinct within an order by the upstream
@@ -1411,7 +1433,7 @@ def basket_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# STAGED for r13 registration — gini_revenue_concentration: Gini
+# gini_revenue_concentration: Gini
 # coefficient + Lorenz decile table of customer revenue — the
 # inequality/concentration class (how concentrated is the order book on few
 # customers; the identical machinery measures source concentration when
@@ -1434,8 +1456,7 @@ def basket_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
 # data-sized shuffle), then a global sort/rank of the customer frame — a
 # distributed SortExec; the single-partition window is the local[32]
 # realization of rank assignment — and a 10-row decile rollup.
-# Verified by tests/test_basket_gini_staged.py; registration takes an r13
-# seat per the house staging rule.
+# Verified by tests/test_basket_gini_staged.py.
 # ---------------------------------------------------------------------------
 
 GINI_CONCENTRATION_ORACLE = """
@@ -1484,7 +1505,7 @@ def gini_revenue_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Customer-revenue concentration: the Lorenz decile table (exact
     dollar mass, floor-ppm share and cumulative share per rank decile) and
     the Gini coefficient (floor-ppm) of the per-customer revenue
-    distribution. See the staging block above for the determinism and
+    distribution. See the comment above for the determinism and
     scale contract."""
     o = load_table(spark, sf_dir, "orders")
     cust = o.groupBy("o_custkey").agg(
@@ -1549,63 +1570,30 @@ def gini_revenue_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# STAGED for r14 registration — kaplan_meier_survival (VERDICT r12 #6a).
-#
-# The Kaplan-Meier product-limit survival curve over the SAME risk-set
-# machinery as nelson_aalen_conversion_hazard (time to first purchase in
-# hours; never-buyers right-censored at their last observed event). The
-# nelson_aalen staging block called the KM product "not certifiable
-# bit-exactly" because Π(1 − d_i/n_i) is a sequential fold over rationals;
+# kaplan_meier_survival: the product-limit survival curve over the survival
+# family's risk set. Π(1 − d_i/n_i) is a sequential fold over rationals;
 # this query certifies it anyway by making the fold ITSELF integer: the
 # survival estimate is DEFINED as the exact integer recurrence
 #     S_0 = 10^9;  S_i = (S_{i-1} · (n_i − d_i)) div n_i
 # over event steps in time order — the classical estimator with a floor at
 # 1e-9 resolution per step, every intermediate an exact BIGINT (bound:
-# 10^9 · max(n_at_risk) < 2^63 holds through ~9.2e9 subjects — documented,
-# asserted cheap in the staged test). Spark evaluates the fold with the
-# SQL higher-order `aggregate` over the sorted steps array (the steps
-# frame is distinct-event-hours-bounded — calendar-scale, NOT data-scale —
-# so collecting it into one broadcast array row is exact and tiny); the
-# DuckDB oracle evaluates the identical recurrence as a recursive CTE.
+# 10^9 · max(n_at_risk) < 2^63 holds through ~9.2e9 subjects). Spark
+# evaluates the fold with the SQL higher-order `aggregate` over the sorted
+# steps array (the steps frame is distinct-event-hours-bounded —
+# calendar-scale, NOT data-scale — so collecting it into one broadcast
+# array row is exact and tiny); the DuckDB oracle evaluates the identical
+# recurrence as a recursive CTE.
 # Integer end-to-end: no float op anywhere, no rounding-boundary argument.
 #
-# Scale shape: one user-grain aggregation of the event stream (the only
-# data-sized shuffle, identical to nelson_aalen), then an event-time-grain
-# frame whose array fold is O(T²) on T = distinct event hours (~75 at
-# sf0.01, calendar-bounded at every SF). The 1-row sorted-steps array
-# crossJoin is a broadcast nested-loop by design — whitelist entry
-# pre-added at staging time (test_plans.py), per the r12 house rule.
+# Scale shape: the survival family's user-grain aggregation, then an
+# event-time-grain frame whose array fold is O(T²) on T = distinct event
+# hours (~75 at sf0.01, calendar-bounded at every SF). The 1-row
+# sorted-steps array crossJoin is a broadcast nested-loop by design
+# (whitelisted in tests/test_plans.py).
 # ---------------------------------------------------------------------------
 
-KAPLAN_MEIER_ORACLE = """
-WITH RECURSIVE u AS (
-  SELECT user_id,
-         min(epoch_us(ts)) AS first_us,
-         max(epoch_us(ts)) AS last_us,
-         min(CASE WHEN event_type = 'purchase' THEN epoch_us(ts) END)
-           AS first_buy_us
-  FROM events GROUP BY 1
-),
-obs AS (
-  SELECT (COALESCE(first_buy_us, last_us) - first_us) // 3600000000
-           AS t_hours,
-         CASE WHEN first_buy_us IS NOT NULL THEN 1 ELSE 0 END AS event
-  FROM u
-),
-h AS (
-  SELECT t_hours,
-         CAST(count(*) AS BIGINT) AS n_here,
-         CAST(sum(event) AS BIGINT) AS d_events
-  FROM obs GROUP BY 1
-),
-risk AS (
-  SELECT t_hours, n_here, d_events,
-         CAST(sum(n_here) OVER () AS BIGINT)
-           - CAST(COALESCE(sum(n_here) OVER (ORDER BY t_hours
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                   0) AS BIGINT) AS n_at_risk
-  FROM h
-),
+KAPLAN_MEIER_ORACLE = f"""
+WITH RECURSIVE {_RISK_SET_CTES},
 ordered AS (
   SELECT t_hours, d_events, n_at_risk,
          row_number() OVER (ORDER BY t_hours) AS rn
@@ -1636,47 +1624,13 @@ def kaplan_meier_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kaplan-Meier product-limit survival of time to first purchase: per
     event step (hour grain), the risk set, the events, and the survival
     estimate as the EXACT integer recurrence S_i = (S_{i-1}·(n_i−d_i)) div
-    n_i at 1e-9 resolution — the sequential product the nelson_aalen block
-    could not certify in doubles, made bit-exact by folding integers (see
-    the staging comment). Pairs with nelson_aalen_conversion_hazard on the
-    identical risk-set machinery. STAGED r13, REGISTERED r14."""
-    ev = load_table(spark, sf_dir, "events")
-    us = F.unix_micros("ts")
-    u = ev.groupBy("user_id").agg(
-        F.min(us).alias("first_us"),
-        F.max(us).alias("last_us"),
-        F.min(F.when(F.col("event_type") == "purchase", us)).alias(
-            "first_buy_us"
-        ),
-    )
-    obs = u.select(
-        F.expr(
-            "(COALESCE(first_buy_us, last_us) - first_us) div 3600000000"
-        ).alias("t_hours"),
-        F.col("first_buy_us").isNotNull().cast("bigint").alias("event"),
-    )
-    h = obs.groupBy("t_hours").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_here"),
-        F.sum("event").cast("bigint").alias("d_events"),
-    )
-    w_all = W.partitionBy()
-    w_before = W.orderBy("t_hours").rowsBetween(W.unboundedPreceding, -1)
+    n_i at 1e-9 resolution — the sequential product made bit-exact by
+    folding integers (see the comment above this query). Shares the risk
+    set of nelson_aalen_conversion_hazard."""
     # persist: steps feeds BOTH the curve rows and the collected fold array
     # — without it each branch would re-run the user-grain events
     # aggregation (the only data-sized stage) from the scan.
-    steps = persist_once(
-        h.select(
-            "t_hours",
-            "d_events",
-            (
-                F.sum("n_here").over(w_all).cast("bigint")
-                - F.coalesce(F.sum("n_here").over(w_before), F.lit(0)).cast(
-                    "bigint"
-                )
-            ).alias("n_at_risk"),
-        )
-        .filter(F.col("d_events") > 0)
-    )
+    steps = persist_once(_event_steps(spark, sf_dir))
     # steps is calendar-bounded (distinct event hours): one sorted broadcast
     # array row carries every (t, n, d) step; the per-row prefix fold is the
     # exact integer product-limit recurrence.
@@ -1704,25 +1658,21 @@ def kaplan_meier_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# STAGED for r14 registration — logrank_segment_survival (r13 extension of
-# VERDICT r12 #6a: the two-sample comparison on the same risk-set
-# machinery KM/Nelson-Aalen certify one-sample).
+# logrank_segment_survival: the two-sample comparison on the survival
+# family's machinery. Log-rank test of time-to-first-purchase between two
+# customer cohorts (c_mktsegment < 'F' — AUTOMOBILE/BUILDING — vs the
+# rest; a broadcast dim equi-join assigns groups). At each pooled event
+# step: per-group risk sets by the same total-minus-prefix construction,
+# the group-1 expectation E1 += d·n1/n and variance
+# V += d·n1·n2·(n−d)/(n²·(n−1)) each quantized FIRST to exact floor-ppm
+# integers (the sums are then associative BIGINT adds, order-free), and
+# the final chi-square (O1·1e6 − ΣE1_ppm)² / (ΣV_ppm·1e6) is ONE
+# fixed-order IEEE expression over exact integers, emitted floor-micro
+# (NULL when ΣV_ppm = 0 — a degenerate battery, e.g. one cohort empty at
+# every step — since engines disagree on casting the inf). n=1 steps
+# contribute zero variance by the explicit n>1 guard (both engines).
 #
-# Log-rank test of time-to-first-purchase between two customer cohorts
-# (c_mktsegment < 'F' — AUTOMOBILE/BUILDING — vs the rest; a broadcast dim
-# equi-join assigns groups, the first use of the events↔customer key link
-# in the survival family). At each pooled event step: per-group risk sets
-# by the same total-minus-prefix construction, the group-1 expectation
-# E1 += d·n1/n and variance V += d·n1·n2·(n−d)/(n²·(n−1)) each quantized
-# FIRST to exact floor-ppm integers (the nelson_aalen pattern — the sums
-# are then associative BIGINT adds, order-free), and the final chi-square
-# (O1·1e6 − ΣE1_ppm)² / (ΣV_ppm·1e6) is ONE fixed-order IEEE expression
-# over exact integers, emitted floor-micro (NULL when ΣV_ppm = 0 — a
-# degenerate battery, e.g. one cohort empty at every step — since
-# engines disagree on casting the inf). n=1 steps contribute zero
-# variance by the explicit n>1 guard (both engines).
-#
-# Overflow bound (documented + asserted in the staged test): the V-step
+# Overflow bound (asserted in tests/test_logrank_staged.py): the V-step
 # numerator d·n1·n2·(n−d)·1e6 stays under 2^63 through ~6e4 subjects at
 # the worst split; beyond that the quantization order would need the
 # factored form — the fixture maxes at 1.5e3.
@@ -1730,10 +1680,10 @@ def kaplan_meier_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Scale shape: one user-grain aggregation of events (the only data-sized
 # shuffle), a broadcast customer-dim join for the cohort, then an
 # event-hour-grain frame (calendar-bounded) reduced to ONE output row in
-# a single combinable aggregation. No crossJoin — no whitelist entry.
+# a single combinable aggregation. No crossJoin.
 # ---------------------------------------------------------------------------
 
-LOGRANK_ORACLE = """
+LOGRANK_ORACLE = f"""
 WITH u AS (
   SELECT e.user_id,
          CASE WHEN c.c_mktsegment < 'F' THEN 1 ELSE 0 END AS grp,
@@ -1761,14 +1711,8 @@ h AS (
 ),
 risk AS (
   SELECT t_hours, d1, d0,
-         CAST(sum(h1) OVER () AS BIGINT)
-           - CAST(COALESCE(sum(h1) OVER (ORDER BY t_hours
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                   0) AS BIGINT) AS n1,
-         CAST(sum(h0) OVER () AS BIGINT)
-           - CAST(COALESCE(sum(h0) OVER (ORDER BY t_hours
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                   0) AS BIGINT) AS n0
+         {_at_risk_sql("h1")} AS n1,
+         {_at_risk_sql("h0")} AS n0
   FROM h
 ),
 steps AS (
@@ -1808,32 +1752,13 @@ def logrank_segment_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor-ppm-quantized expectation and variance contributions (exact
     integer sums), and the final chi-square floor-micro — the two-sample
     companion of kaplan_meier_survival on identical machinery. See the
-    staging comment for quantization and overflow bounds. STAGED r13 ->
-    REGISTERED r14."""
+    comment above this query for quantization and overflow bounds."""
     ev = load_table(spark, sf_dir, "events")
     cust = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"),
         (F.col("c_mktsegment") < "F").cast("int").alias("grp"),
     )
-    us = F.unix_micros("ts")
-    u = (
-        ev.join(F.broadcast(cust), "user_id")
-        .groupBy("user_id", "grp")
-        .agg(
-            F.min(us).alias("first_us"),
-            F.max(us).alias("last_us"),
-            F.min(F.when(F.col("event_type") == "purchase", us)).alias(
-                "first_buy_us"
-            ),
-        )
-    )
-    obs = u.select(
-        "grp",
-        F.expr(
-            "(COALESCE(first_buy_us, last_us) - first_us) div 3600000000"
-        ).alias("t_hours"),
-        F.col("first_buy_us").isNotNull().cast("bigint").alias("event"),
-    )
+    obs = _first_purchase_obs(ev.join(F.broadcast(cust), "user_id"), "grp")
     h = obs.groupBy("t_hours").agg(
         F.sum(F.when(F.col("grp") == 1, 1).otherwise(0))
         .cast("bigint")
@@ -1848,22 +1773,13 @@ def logrank_segment_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("d0"),
     )
-    w_all = W.partitionBy()
-    w_before = W.orderBy("t_hours").rowsBetween(W.unboundedPreceding, -1)
-
-    def at_risk(col: str):
-        return (
-            F.sum(col).over(w_all).cast("bigint")
-            - F.coalesce(F.sum(col).over(w_before), F.lit(0)).cast("bigint")
-        )
-
     steps = (
         h.select(
             "t_hours",
             "d1",
             "d0",
-            at_risk("h1").alias("n1"),
-            at_risk("h0").alias("n0"),
+            _at_risk("h1").alias("n1"),
+            _at_risk("h0").alias("n0"),
         )
         .withColumn("d", F.expr("d1 + d0"))
         .withColumn("n", F.expr("n1 + n0"))

@@ -1,6 +1,6 @@
-"""Corpus-curation operators: the round-6 late batch of LLM-data-pipeline
-passes (north-star extensions; the reference has no analogue — these are
-the published data-curation recipes re-expressed Spark-first).
+"""Corpus-curation operators: LLM-data-pipeline passes (north-star
+extensions; the reference has no analogue — these are the published
+data-curation recipes re-expressed Spark-first).
 
 - `semdedup_prune_stats`   — SemDeDup (Abbas et al. 2023) semantic dedup
 - `rrf_hybrid_topk`        — reciprocal-rank fusion of two rankers
@@ -249,18 +249,11 @@ _DSIR_B = 64
 _DSIR_HASH_SQL = f"({md5_hash_sql('tok', 8)} % {_DSIR_B})"
 
 
-@register(
-    "dsir_importance_weights",
-    oracle=f"""
-    WITH toks AS (
-      SELECT doc_id, lang,
-             unnest(string_split_regex(lower(text), '\\s+')) AS tok
-      FROM documents WHERE length(text) > 0
-    ),
-    feats AS (
-      SELECT doc_id, lang, {_DSIR_HASH_SQL} AS bucket FROM toks
-    ),
-    raw_counts AS (
+def _dsir_sql(keys: str) -> str:
+    """The DSIR model over a ``feats`` CTE of (doc_id, lang, bucket) rows —
+    raw and target bucket counts, totals, add-1-smoothed log ratio — and
+    the per-``keys`` sum of each feature's log ratio."""
+    return f"""raw_counts AS (
       SELECT bucket, CAST(count(*) AS DOUBLE) AS c_raw
       FROM feats GROUP BY bucket
     ),
@@ -281,39 +274,31 @@ _DSIR_HASH_SQL = f"({md5_hash_sql('tok', 8)} % {_DSIR_B})"
       LEFT JOIN tgt_counts t ON t.bucket = r.bucket
       CROSS JOIN totals tot
     )
-    SELECT f.doc_id,
+    SELECT {keys},
            CAST(count(*) AS BIGINT) AS n_toks,
            round(sum(m.log_ratio), 6) AS dsir_logweight
     FROM feats f JOIN model m ON m.bucket = f.bucket
-    GROUP BY f.doc_id
-    """,
-    tags=("text", "sampling", "curation"),
-)
-def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DSIR importance log-weight per document: sum over the doc's hashed
-    unigram features of ln(p_target / p_raw), target = the 'en' slice,
-    add-1 smoothing over 64 hash buckets. Documents resembling the target
-    get high weights; importance RESAMPLING then draws by exp(weight) —
-    the weight table computed here is the expensive distributed part.
+    GROUP BY {keys}
+    """
 
-    Scale shape: feature extraction is a map-side explode + portable hash;
-    the two count tables reduce to at most 64 rows each, so the trained
-    model is a BROADCAST join back onto the feature stream; per-doc
-    summation is one doc-keyed agg. Hashing uses the same md5-prefix
-    portable hash as every dedup operator, so Spark and DuckDB bucket
-    identically."""
-    docs = load_table(spark, sf_dir, "documents").filter(F.length("text") > 0)
-    # persist_once: feats feeds FOUR consumers (raw counts, target counts,
-    # totals, and the final per-doc join) — unpersisted, Catalyst re-derives
-    # the scan+explode+hash chain for each, i.e. four corpus passes at
-    # 100 TB. One materialization of the slim (doc_id, lang, bucket) rows
-    # replaces them.
+
+def _dsir_logweights(docs: DataFrame, text: str, *keys: str) -> DataFrame:
+    """The Column twin of ``_dsir_sql``: hash each doc's lowercased
+    whitespace tokens of ``text`` into ``_DSIR_B`` buckets, train the model
+    on those features, and sum each feature's log ratio per ``keys``.
+
+    The feature frame is persisted once: it feeds four consumers (raw
+    counts, target counts, totals, and the final per-doc join), and
+    unpersisted Catalyst re-derives everything below it for each — the
+    scan + explode + hash chain, and in llm_curation_pipeline the whole
+    gate + redaction + dedup-window chain too (four FileScans of
+    documents in its executed plan before the persist)."""
     feats = persist_once(
         rebalance_for_compute(docs, "doc_id")
         .select(
             "doc_id",
             "lang",
-            F.explode(F.split(F.lower("text"), r"\s+")).alias("tok"),
+            F.explode(F.split(F.lower(text), r"\s+")).alias("tok"),
         )
         .select(
             "doc_id", "lang", (md5_hash(F.col("tok"), 8) % _DSIR_B).alias("bucket")
@@ -349,12 +334,43 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         feats.join(F.broadcast(model), "bucket")
-        .groupBy("doc_id")
+        .groupBy(*keys)
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_toks"),
             F.round(F.sum("log_ratio"), 6).alias("dsir_logweight"),
         )
     )
+
+
+@register(
+    "dsir_importance_weights",
+    oracle=f"""
+    WITH toks AS (
+      SELECT doc_id, lang,
+             unnest(string_split_regex(lower(text), '\\s+')) AS tok
+      FROM documents WHERE length(text) > 0
+    ),
+    feats AS (
+      SELECT doc_id, lang, {_DSIR_HASH_SQL} AS bucket FROM toks
+    ),
+    {_dsir_sql("f.doc_id")}""",
+    tags=("text", "sampling", "curation"),
+)
+def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """DSIR importance log-weight per document: sum over the doc's hashed
+    unigram features of ln(p_target / p_raw), target = the 'en' slice,
+    add-1 smoothing over 64 hash buckets. Documents resembling the target
+    get high weights; importance RESAMPLING then draws by exp(weight) —
+    the weight table computed here is the expensive distributed part.
+
+    Scale shape: feature extraction is a map-side explode + portable hash;
+    the two count tables reduce to at most 64 rows each, so the trained
+    model is a BROADCAST join back onto the feature stream; per-doc
+    summation is one doc-keyed agg. Hashing uses the same md5-prefix
+    portable hash as every dedup operator, so Spark and DuckDB bucket
+    identically."""
+    docs = load_table(spark, sf_dir, "documents").filter(F.length("text") > 0)
+    return _dsir_logweights(docs, "text", "doc_id")
 
 
 # ---------------------------------------------------------------------------
@@ -765,8 +781,8 @@ def ccnet_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# End-to-end curation pipeline — the production composition of this round's
-# operators as ONE lazy plan: Gopher quality gate -> PII redaction -> exact
+# End-to-end curation pipeline — the production composition of this
+# module's operators as ONE lazy plan: Gopher quality gate -> PII redaction -> exact
 # dedup keep-first (on the redacted text) -> DSIR importance weights
 # trained on the SURVIVING corpus. One oracle certifies the whole chain:
 # the row count proves the two filters, the weights prove the model.
@@ -817,33 +833,7 @@ def _curation_pipeline_oracle() -> str:
                    unnest(string_split_regex(lower(rtext), '\\s+')) AS tok
             FROM surv)
     ),
-    raw_counts AS (
-      SELECT bucket, CAST(count(*) AS DOUBLE) AS c_raw
-      FROM feats GROUP BY bucket
-    ),
-    tgt_counts AS (
-      SELECT bucket, CAST(count(*) AS DOUBLE) AS c_tgt
-      FROM feats WHERE lang = 'en' GROUP BY bucket
-    ),
-    totals AS (
-      SELECT CAST(count(*) AS DOUBLE) AS t_raw,
-             CAST(sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS DOUBLE) AS t_tgt
-      FROM feats
-    ),
-    model AS (
-      SELECT r.bucket,
-             ln((coalesce(t.c_tgt, 0.0) + 1.0) / (tot.t_tgt + {_DSIR_B}.0))
-               - ln((r.c_raw + 1.0) / (tot.t_raw + {_DSIR_B}.0)) AS log_ratio
-      FROM raw_counts r
-      LEFT JOIN tgt_counts t ON t.bucket = r.bucket
-      CROSS JOIN totals tot
-    )
-    SELECT f.doc_id, f.lang,
-           CAST(count(*) AS BIGINT) AS n_toks,
-           round(sum(m.log_ratio), 6) AS dsir_logweight
-    FROM feats f JOIN model m ON m.bucket = f.bucket
-    GROUP BY f.doc_id, f.lang
-    """
+    {_dsir_sql("f.doc_id, f.lang")}"""
 
 
 @register(
@@ -867,11 +857,7 @@ def llm_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame is persisted ONCE — it feeds four consumers, and without the
     persist Catalyst re-derives the whole gate+redact+dedup chain per
     consumer (four corpus scans, verified in the executed plan)."""
-    from talkinghead_datapipeline_spark.queries.textops import (
-        _PII_EMAIL,
-        _PII_IPV4,
-        _PII_PHONE,
-    )
+    from talkinghead_datapipeline_spark.queries.textops import _pii_redacted
 
     docs = load_table(spark, sf_dir, "documents").filter(F.length("text") > 0)
     toks = F.split(F.lower("text"), r"\s+")
@@ -894,71 +880,11 @@ def llm_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         & mwl.between(_GOPHER_MWL_LO, _GOPHER_MWL_HI)
         & (n_stop >= _GOPHER_MIN_STOP)
     )
-    rtext = F.regexp_replace(
-        F.regexp_replace(
-            F.regexp_replace(F.col("text"), _PII_EMAIL, "|||EMAIL|||"),
-            _PII_PHONE,
-            "|||PHONE|||",
-        ),
-        _PII_IPV4,
-        "|||IP|||",
-    )
-    red = keepq.select("doc_id", "lang", rtext.alias("rtext"))
+    red = keepq.select("doc_id", "lang", _pii_redacted(F.col("text")).alias("rtext"))
     w = W.partitionBy(F.md5("rtext")).orderBy("doc_id")
     surv = (
         red.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
         .drop("rn")
     )
-    # persist_once: same four-consumer reuse as dsir_importance_weights,
-    # but each re-derivation here would repeat the WHOLE gate + redaction
-    # + dedup-window chain over the corpus (verified in the executed plan
-    # before this fix: four FileScans of documents). One materialization
-    # of the slim feature rows is the 100 TB-correct shape.
-    feats = persist_once(
-        rebalance_for_compute(surv, "doc_id")
-        .select(
-            "doc_id",
-            "lang",
-            F.explode(F.split(F.lower("rtext"), r"\s+")).alias("tok"),
-        )
-        .select(
-            "doc_id", "lang", (md5_hash(F.col("tok"), 8) % _DSIR_B).alias("bucket")
-        )
-    )
-    raw_counts = feats.groupBy("bucket").agg(
-        F.count(F.lit(1)).cast("double").alias("c_raw")
-    )
-    tgt_counts = (
-        feats.filter(F.col("lang") == "en")
-        .groupBy("bucket")
-        .agg(F.count(F.lit(1)).cast("double").alias("c_tgt"))
-    )
-    totals = feats.agg(
-        F.count(F.lit(1)).cast("double").alias("t_raw"),
-        F.sum(F.when(F.col("lang") == "en", 1).otherwise(0))
-        .cast("double")
-        .alias("t_tgt"),
-    )
-    model = (
-        raw_counts.join(tgt_counts, "bucket", "left")
-        .crossJoin(F.broadcast(totals))
-        .select(
-            "bucket",
-            (
-                F.log(
-                    (F.coalesce("c_tgt", F.lit(0.0)) + 1.0)
-                    / (F.col("t_tgt") + float(_DSIR_B))
-                )
-                - F.log((F.col("c_raw") + 1.0) / (F.col("t_raw") + float(_DSIR_B)))
-            ).alias("log_ratio"),
-        )
-    )
-    return (
-        feats.join(F.broadcast(model), "bucket")
-        .groupBy("doc_id", "lang")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_toks"),
-            F.round(F.sum("log_ratio"), 6).alias("dsir_logweight"),
-        )
-    )
+    return _dsir_logweights(surv, "rtext", "doc_id", "lang")

@@ -449,7 +449,7 @@ def k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-anonymity audit of the (lang, source, n_chars // 100)
     quasi-identifier over documents: per policy threshold k, the count of
     equivalence classes below k and the rows inside them (raw + floor-ppm),
-    with the corpus totals and the smallest class. See the staging block
+    with the corpus totals and the smallest class. See the comment
     above for the determinism and scale contract."""
     docs = load_table(spark, sf_dir, "documents")
     # persist the equivalence-class frame: tot and ladder both derive from

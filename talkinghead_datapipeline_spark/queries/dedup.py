@@ -30,10 +30,14 @@ from talkinghead_datapipeline_spark.queries import register
 
 # Shared SQL fragments -------------------------------------------------------
 
-_SHINGLES_CTE = f"""
+
+def _shingles_cte(src: str) -> str:
+    """The ``toks`` and ``sh`` CTEs: each doc of ``src`` as its distinct
+    hashed 3-word shingles ``grams`` (docs under three words dropped)."""
+    return f"""
     toks AS (
       SELECT doc_id, string_split_regex(lower(text), '\\s+') AS t
-      FROM documents
+      FROM {src}
     ),
     sh AS (
       SELECT doc_id,
@@ -44,6 +48,9 @@ _SHINGLES_CTE = f"""
       FROM toks WHERE len(t) >= 3
     )
 """
+
+
+_SHINGLES_CTE = _shingles_cte("documents")
 
 _SIG_COLS_SQL = ", ".join(
     f"list_min(list_transform(grams, h -> ({a} * h + {b}) % {D.MINHASH_P})) AS mh{k}"
@@ -97,14 +104,17 @@ _BANDED_SQL = " UNION ALL ".join(
     f"SELECT doc_id, {_band_sql(b)} AS band FROM sigs" for b in range(_N_BANDS)
 )
 
-_MINHASH_PAIRS_ORACLE = f"""
-    WITH {_SHINGLES_CTE},
-    sigs AS (SELECT doc_id, {_SIG_COLS_SQL} FROM sh WHERE len(grams) >= 1),
+# The LSH candidate pairs of the ``sh`` shingle sets: signatures, band
+# keys, and every distinct (key_a < key_b) pair sharing a band.
+_PAIRS_CTES = f"""sigs AS (SELECT doc_id, {_SIG_COLS_SQL} FROM sh WHERE len(grams) >= 1),
     banded AS ({_BANDED_SQL}),
     pairs AS (
       SELECT DISTINCT a.doc_id AS key_a, b.doc_id AS key_b
       FROM banded a JOIN banded b ON a.band = b.band AND a.doc_id < b.doc_id
-    ),
+    )"""
+
+# _PAIRS_CTES plus each pair's exact Jaccard over its shingle sets.
+_SCORED_PAIRS_CTES = f"""{_PAIRS_CTES},
     scored AS (
       SELECT p.key_a, p.key_b,
              round(CAST(len(list_intersect(sa.grams, sb.grams)) AS DOUBLE)
@@ -113,7 +123,11 @@ _MINHASH_PAIRS_ORACLE = f"""
       FROM pairs p
       JOIN sh sa ON sa.doc_id = p.key_a
       JOIN sh sb ON sb.doc_id = p.key_b
-    )
+    )"""
+
+_MINHASH_PAIRS_ORACLE = f"""
+    WITH {_SHINGLES_CTE},
+    {_SCORED_PAIRS_CTES}
     SELECT key_a, key_b, jaccard FROM scored WHERE jaccard >= 0.2
 """
 
@@ -151,12 +165,7 @@ _MH_MATCHES_SQL = " + ".join(
 
 _MINHASH_EST_ORACLE = f"""
     WITH {_SHINGLES_CTE},
-    sigs AS (SELECT doc_id, {_SIG_COLS_SQL} FROM sh WHERE len(grams) >= 1),
-    banded AS ({_BANDED_SQL}),
-    pairs AS (
-      SELECT DISTINCT a.doc_id AS key_a, b.doc_id AS key_b
-      FROM banded a JOIN banded b ON a.band = b.band AND a.doc_id < b.doc_id
-    ),
+    {_PAIRS_CTES},
     scored AS (
       SELECT p.key_a, p.key_b,
              CAST({_MH_MATCHES_SQL} AS DOUBLE) / {D.N_PERM} AS est,
@@ -305,7 +314,7 @@ def simhash_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         # SQL twin of D.simhash32: identical resolved tree (pinned by
         # tests/test_simhash_sql_parity.py), one py4j round-trip instead of
-        # ~250 per build (guide §4 — builders run once per bench rep).
+        # ~250 per build.
         F.expr(D.simhash32_sql("text")).alias("simhash"),
         F.size(D.word_tokens(F.col("text"))).cast("bigint").alias("n_tokens"),
     )
@@ -367,10 +376,10 @@ def simhash_hamming_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster lands entirely in one bucket. Buckets beyond _MAX_BUCKET
     therefore emit star pairs to the bucket minimum (O(c)) — the cap never
     triggers at oracle scales (max observed bucket: 291 at sf0.1), so the
-    uncapped self-join oracle stays exact. ACTIVATION BOUNDARY (measured,
-    VERDICT r10 #5): the cap first fires between sf0.1 (max bucket 291)
-    and x4 adversarial data, where the r10 cross-engine probe recorded the
-    capped listing at 1,276,345 pairs vs the uncapped oracle's 1,951,296 —
+    uncapped self-join oracle stays exact. ACTIVATION BOUNDARY
+    (measured): the cap first fires between sf0.1 (max bucket 291) and x4
+    adversarial data, where a cross-engine probe recorded the capped
+    listing at 1,276,345 pairs vs the uncapped oracle's 1,951,296 —
     the registry's ONE query whose sf0.01 hash-match provably does NOT
     extend to arbitrarily large data, BY DESIGN. The boundary is
     machine-checked, not prose: tests/test_simhash_cap.py asserts the cap
@@ -378,8 +387,7 @@ def simhash_hamming_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     crafted oversized bucket (star listing is a SUBSET of the uncapped
     listing, and for the duplicate-cluster case that creates giant buckets
     at scale it preserves the uncapped connectivity exactly).
-    CAPPED-PATH CAVEAT (documented
-    per ADVICE r2): above _MAX_BUCKET this LISTING is approximate — a star
+    CAPPED-PATH CAVEAT: above _MAX_BUCKET this LISTING is approximate — a star
     pair can be suppressed by the band-0 check while band 0 itself only
     emitted its own minimum's pairs, and the hamming verify drops star
     edges to the bucket minimum. This query has no clustering consumer;
@@ -484,9 +492,9 @@ _NGRAM_ORACLE = f"""
 @register("ngram_jaccard_near_dups", oracle=_NGRAM_ORACLE, tags=("dedup", "ngram", "join", "lsh-recall"))
 def ngram_jaccard_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Char-trigram Jaccard ≥ 0.8 within (lang, n_chars/25) blocks, with a
-    MinHash-band PREFILTER composed ahead of the exact verify (VERDICT r3
-    #7). Trigrams are hashed to int32 via the portable md5 prefix; a K=8
-    signature over those hashes yields 2 bands of 4, and candidate pairs
+    MinHash-band PREFILTER composed ahead of the exact verify. Trigrams
+    are hashed to int32 via the portable md5 prefix; a K=8 signature over
+    those hashes yields 2 bands of 4, and candidate pairs
     must agree on the block key AND at least one band. The join key
     (lang, blk, band idx, band value) therefore buckets by content
     similarity: candidates scale with near-dup density, not with
@@ -499,7 +507,7 @@ def ngram_jaccard_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     collapsed by the corpus-clean pre-pass (dedup_edge_graph composes
     exact_dedup first); AQE skew-join splits any residual hot band key.
 
-    RECALL (ADVICE r4): this is an LSH-recall listing — a qualifying pair
+    RECALL: this is an LSH-recall listing — a qualifying pair
     becomes a candidate with P = 1 − (1 − j⁴)² (2 bands of 4), ≈ 65% at
     the registered j = 0.8 threshold and → 1 as j → 1 (exact duplicates
     always collide). Consumers needing every qualifying pair use
@@ -614,8 +622,8 @@ _NGRAM_EXACT_ORACLE = f"""
 )
 def ngram_jaccard_exact_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT char-trigram Jaccard ≥ 0.8 pair listing (100% recall) — the
-    precision tier ADVICE r4 asked to keep registered alongside the
-    LSH-recall ``ngram_jaccard_near_dups``.
+    precision tier registered alongside the LSH-recall
+    ``ngram_jaccard_near_dups``.
 
     Scale shape is PREFIX FILTERING (Bayardo et al. "Scaling Up All Pairs
     Similarity Search", WWW'07; the AllPairs/PPJoin family): sort each
@@ -627,8 +635,8 @@ def ngram_jaccard_exact_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (min·1 ≥ t·max — necessary for jaccard ≥ t) prunes cross-size
     candidates before the verify, and each pair is emitted exactly once
     by keeping only the join gram equal to that minimum common gram — no
-    DISTINCT shuffle. Unlike the quadratic block grid VERDICT r3 removed,
-    candidates scale with shared-prefix-gram frequency, not block².
+    DISTINCT shuffle. Unlike a quadratic block grid, candidates scale
+    with shared-prefix-gram frequency, not block².
 
     The global order here is the gram-hash value (md5-based, effectively a
     random permutation of the gram space). Canonical AllPairs orders
@@ -640,10 +648,10 @@ def ngram_jaccard_exact_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the order is a drop-in (any total order preserves exactness), and the
     oracle — the naive exact blocked self-join — is order-independent.
 
-    Round 6 restructure (measured 5.8s → 4.1s at sf0.1): the candidate
-    self-join runs on SLIM rows — (doc_id, lang, blk, size, position,
-    gram) scalars only, never the gram arrays. The previous shape carried
-    each doc's full gram array on every exploded prefix row, i.e.
+    The candidate self-join runs on SLIM rows — (doc_id, lang, blk, size,
+    position, gram) scalars only, never the gram arrays (measured 5.8s →
+    4.1s at sf0.1). Carrying each doc's full gram array on every exploded
+    prefix row would be
     O(prefix·|g|) ≈ O(0.2·|g|²) bytes per doc through the join shuffle;
     slim rows are O(|g|) per doc. Pair dedup (one emission per pair) is a
     groupBy on (key_a, key_b) — replacing the per-row prefix-intersect
@@ -664,9 +672,9 @@ def ngram_jaccard_exact_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     absorbs FP rounding at the boundary). Hashed grams are re-deduped
     (``array_distinct`` after the md5 transform, mirrored in the oracle)
     so the distinct-element precondition of D.jaccard survives 32-bit
-    hash collisions at corpus scale (ADVICE r5).
+    hash collisions at corpus scale.
 
-    Round-6 profiling (so the remaining 5s at sf0.1 isn't re-litigated):
+    Profile (so the remaining 5s at sf0.1 isn't re-litigated):
     candidates 148,626 pairs → 69 finals; the full-array verify dominates.
     The PPJoin+ AGGREGATED suffix bound — overlap ≤ n_common_prefix +
     min(sz−max_prefix_pos−1) per side, provably exact because any common
@@ -755,15 +763,14 @@ def ngram_jaccard_exact_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("key_a", "key_b")
         .agg(F.count(F.lit(1)).alias("_n_common_prefix"))
     )
-    # r14 (guide §2.5): the pair frame is ~1.4 MB at sf0.1, so AQE's
-    # parallelism-first coalescing (min partition size 1 MB) folds the
-    # groupBy output to ONE partition — and the downstream full-array
-    # Jaccard verify, which round-6 profiling showed DOMINATES this query,
-    # ran single-threaded (profiled r14: a 1-task 4.5-5.5s verify stage vs
-    # ~0.5s for everything else). Re-spread ROUND-ROBIN before the verify
-    # joins: a (key_a, key_b) hash respread is exactly the groupBy's own
-    # partitioning, so EnsureRequirements elides it as redundant and the
-    # coalesce returns (observed while staging this change); round-robin is
+    # The pair frame is ~1.4 MB at sf0.1, so AQE's parallelism-first
+    # coalescing (min partition size 1 MB) folds the groupBy output to ONE
+    # partition — and the downstream full-array Jaccard verify, which
+    # DOMINATES this query, would run single-threaded (profiled: a 1-task
+    # 4.5-5.5s verify stage vs ~0.5s for everything else). Re-spread
+    # ROUND-ROBIN before the verify joins: a (key_a, key_b) hash respread
+    # is exactly the groupBy's own partitioning, so EnsureRequirements
+    # elides it as redundant and the coalesce returns; round-robin is
     # never redundant, and the verify joins are broadcast-only so no
     # distribution requirement is lost. At production scale the pair frame
     # is large enough that AQE already yields full width and the underlying
@@ -830,7 +837,7 @@ _EMB_NEAR_DUP_ORACLE = f"""
 @register("emb_near_dup_pairs", oracle=_EMB_NEAR_DUP_ORACLE, tags=("dedup", "similarity", "join", "lsh-recall"))
 def emb_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup pairs within label blocks, prefiltered by
-    random-hyperplane LSH band agreement (VERDICT r3 #7). Each vector gets
+    random-hyperplane LSH band agreement. Each vector gets
     4 deterministic sign bits against fixed anchor rows (the same
     hyperplanes as sim_lsh_bucket_topk), split into 2 bands of 2 bits;
     candidates must share (label, band idx, band value), so the join
@@ -841,7 +848,7 @@ def emb_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     verifies candidates; sign bits are deterministic across engines
     because the dot products fold sequentially in DOUBLE on both.
 
-    RECALL (ADVICE r4): LSH-recall listing — per hyperplane a pair at
+    RECALL: LSH-recall listing — per hyperplane a pair at
     angle θ agrees with P = 1 − θ/π, so with 2 bands of 2 bits a pair at
     the cos = 0.4 (θ ≈ 66°) threshold is a candidate with
     P = 1 − (1 − (1 − θ/π)²)² ≈ 63%, rising steeply toward 1 for tighter
@@ -918,35 +925,35 @@ def emb_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (iterative min-label propagation vs a recursive-CTE transitive closure)
 # ---------------------------------------------------------------------------
 
-_CC_ORACLE = f"""
-    WITH RECURSIVE {_SHINGLES_CTE},
-    sigs AS (SELECT doc_id, {_SIG_COLS_SQL} FROM sh WHERE len(grams) >= 1),
-    banded AS ({_BANDED_SQL}),
-    cpairs AS (
-      SELECT DISTINCT a.doc_id AS key_a, b.doc_id AS key_b
-      FROM banded a JOIN banded b ON a.band = b.band AND a.doc_id < b.doc_id
-    ),
-    scored AS (
-      SELECT p.key_a, p.key_b,
-             round(CAST(len(list_intersect(sa.grams, sb.grams)) AS DOUBLE)
-                   / len(list_distinct(list_concat(sa.grams, sb.grams))), 6)
-               AS jaccard
-      FROM cpairs p
-      JOIN sh sa ON sa.doc_id = p.key_a
-      JOIN sh sb ON sb.doc_id = p.key_b
-    ),
-    fpairs AS (SELECT key_a, key_b FROM scored WHERE jaccard >= 0.2),
-    edges AS (
-      SELECT key_a AS s, key_b AS d FROM fpairs
+def _closure_ctes(a: str, b: str) -> str:
+    """The pairs (``a``, ``b``) of an ``fpairs`` CTE as symmetric ``edges``,
+    and their transitive closure ``reach``: (id, r) for every vertex r
+    reachable from id. A recursive CTE, so the query opens with
+    ``WITH RECURSIVE``."""
+    return f"""edges AS (
+      SELECT {a} AS s, {b} AS d FROM fpairs
       UNION
-      SELECT key_b AS s, key_a AS d FROM fpairs
+      SELECT {b} AS s, {a} AS d FROM fpairs
     ),
     verts AS (SELECT DISTINCT s AS id FROM edges),
     reach(id, r) AS (
       SELECT id, id FROM verts
       UNION
       SELECT re.id, e.d FROM reach re JOIN edges e ON re.r = e.s
-    )
+    )"""
+
+
+def _components_ctes(src: str) -> str:
+    """The near-duplicate graph of ``src`` (LSH candidates with Jaccard
+    >= 0.2) and its ``_closure_ctes``."""
+    return f"""{_shingles_cte(src)},
+    {_SCORED_PAIRS_CTES},
+    fpairs AS (SELECT key_a, key_b FROM scored WHERE jaccard >= 0.2),
+    {_closure_ctes("key_a", "key_b")}"""
+
+
+_CC_ORACLE = f"""
+    WITH RECURSIVE {_components_ctes("documents")}
     SELECT id AS doc_id, min(r) AS component FROM reach GROUP BY id
 """
 
@@ -999,7 +1006,7 @@ def decontaminate_against_benchmark(spark: SparkSession, sf_dir: str) -> DataFra
     distinct produces the flag — the big side never shuffles its text,
     and the only wide exchange is the final distinct on doc_id.
 
-    Plan note (round 7): each side filters on doc_id BEFORE building
+    Plan note: each side filters on doc_id BEFORE building
     shingles — written the other way (one shingle frame, doc_id filters
     above it) predicate pushdown re-ran the shingle chain inside a pushed
     ``size(_g) >= 1`` filter on both sides (the audit's worst offender: a
@@ -1042,44 +1049,7 @@ _CLEAN_ORACLE = f"""
              CAST(len(string_split_regex(text, '\\s+')) AS BIGINT) AS n_tok
       FROM documents
       WHERE length(text) > 0 AND {_QUALITY_SQL} >= 0.6
-    ),
-    toks AS (
-      SELECT doc_id, string_split_regex(lower(text), '\\s+') AS t FROM kept
-    ),
-    sh AS (
-      SELECT doc_id,
-             list_distinct(list_transform(
-               list_distinct(list_transform(range(1, len(t) - 1),
-                 i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])),
-               s -> {md5_hash_sql('s', 8)})) AS grams
-      FROM toks WHERE len(t) >= 3
-    ),
-    sigs AS (SELECT doc_id, {_SIG_COLS_SQL} FROM sh WHERE len(grams) >= 1),
-    banded AS ({_BANDED_SQL}),
-    cpairs AS (
-      SELECT DISTINCT a.doc_id AS key_a, b.doc_id AS key_b
-      FROM banded a JOIN banded b ON a.band = b.band AND a.doc_id < b.doc_id
-    ),
-    scored AS (
-      SELECT p.key_a, p.key_b,
-             CAST(len(list_intersect(sa.grams, sb.grams)) AS DOUBLE)
-               / len(list_distinct(list_concat(sa.grams, sb.grams))) AS jaccard
-      FROM cpairs p
-      JOIN sh sa ON sa.doc_id = p.key_a
-      JOIN sh sb ON sb.doc_id = p.key_b
-    ),
-    fpairs AS (SELECT key_a, key_b FROM scored WHERE jaccard >= 0.2),
-    edges AS (
-      SELECT key_a AS s, key_b AS d FROM fpairs
-      UNION
-      SELECT key_b AS s, key_a AS d FROM fpairs
-    ),
-    verts AS (SELECT DISTINCT s AS id FROM edges),
-    reach(id, r) AS (
-      SELECT id, id FROM verts
-      UNION
-      SELECT re.id, e.d FROM reach re JOIN edges e ON re.r = e.s
-    ),
+    ),{_components_ctes("kept")},
     comp AS (SELECT id, min(r) AS component FROM reach GROUP BY id)
     SELECT k.doc_id, k.lang, k.n_tok,
            CASE WHEN {_SPLIT_H_SQL} % 100 < 80 THEN 'train'
@@ -1419,34 +1389,7 @@ def shingle_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _KEEP_BEST_ORACLE = f"""
-    WITH RECURSIVE {_SHINGLES_CTE},
-    sigs AS (SELECT doc_id, {_SIG_COLS_SQL} FROM sh WHERE len(grams) >= 1),
-    banded AS ({_BANDED_SQL}),
-    cpairs AS (
-      SELECT DISTINCT a.doc_id AS key_a, b.doc_id AS key_b
-      FROM banded a JOIN banded b ON a.band = b.band AND a.doc_id < b.doc_id
-    ),
-    scored AS (
-      SELECT p.key_a, p.key_b,
-             round(CAST(len(list_intersect(sa.grams, sb.grams)) AS DOUBLE)
-                   / len(list_distinct(list_concat(sa.grams, sb.grams))), 6)
-               AS jaccard
-      FROM cpairs p
-      JOIN sh sa ON sa.doc_id = p.key_a
-      JOIN sh sb ON sb.doc_id = p.key_b
-    ),
-    fpairs AS (SELECT key_a, key_b FROM scored WHERE jaccard >= 0.2),
-    edges AS (
-      SELECT key_a AS s, key_b AS d FROM fpairs
-      UNION
-      SELECT key_b AS s, key_a AS d FROM fpairs
-    ),
-    verts AS (SELECT DISTINCT s AS id FROM edges),
-    reach(id, r) AS (
-      SELECT id, id FROM verts
-      UNION
-      SELECT re.id, e.d FROM reach re JOIN edges e ON re.r = e.s
-    ),
+    WITH RECURSIVE {_components_ctes("documents")},
     comp AS (SELECT id AS doc_id, min(r) AS comp FROM reach GROUP BY id),
     qual AS (
       SELECT doc_id,
@@ -1532,7 +1475,7 @@ def dedup_keep_best_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         "component",
         F.col("doc_id").alias("rep_doc_id"),
         "n_members",
-        # floor-to-BIGINT ppm (round-9 tie audit): quality is a per-row
+        # floor-to-BIGINT ppm (tools/round_tie_audit.py): quality is a per-row
         # expression — bit-identical cross-engine — and its sf0.01 minimum
         # margin from a round(,6) half-boundary measured 0.08 ulps of the
         # scaled value (the scaled double IS the tie representation, the
@@ -1550,34 +1493,7 @@ def dedup_keep_best_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _CSIZE_ORACLE = f"""
-    WITH RECURSIVE {_SHINGLES_CTE},
-    sigs AS (SELECT doc_id, {_SIG_COLS_SQL} FROM sh WHERE len(grams) >= 1),
-    banded AS ({_BANDED_SQL}),
-    cpairs AS (
-      SELECT DISTINCT a.doc_id AS key_a, b.doc_id AS key_b
-      FROM banded a JOIN banded b ON a.band = b.band AND a.doc_id < b.doc_id
-    ),
-    scored AS (
-      SELECT p.key_a, p.key_b,
-             round(CAST(len(list_intersect(sa.grams, sb.grams)) AS DOUBLE)
-                   / len(list_distinct(list_concat(sa.grams, sb.grams))), 6)
-               AS jaccard
-      FROM cpairs p
-      JOIN sh sa ON sa.doc_id = p.key_a
-      JOIN sh sb ON sb.doc_id = p.key_b
-    ),
-    fpairs AS (SELECT key_a, key_b FROM scored WHERE jaccard >= 0.2),
-    edges AS (
-      SELECT key_a AS s, key_b AS d FROM fpairs
-      UNION
-      SELECT key_b AS s, key_a AS d FROM fpairs
-    ),
-    verts AS (SELECT DISTINCT s AS id FROM edges),
-    reach(id, r) AS (
-      SELECT id, id FROM verts
-      UNION
-      SELECT re.id, e.d FROM reach re JOIN edges e ON re.r = e.s
-    ),
+    WITH RECURSIVE {_components_ctes("documents")},
     comp AS (SELECT id, min(r) AS c FROM reach GROUP BY id),
     labeled AS (
       SELECT d.doc_id, coalesce(cm.c, d.doc_id) AS component

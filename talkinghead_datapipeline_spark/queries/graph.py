@@ -451,9 +451,9 @@ def item_cf_top_recs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# STAGED for r14 registration — triangle_count_brand_graph (r13: the
-# triangle/motif-counting class — the third classical graph primitive next
-# to PageRank (value iteration) and the dedup clusters (connectivity)).
+# triangle_count_brand_graph: the triangle/motif-counting class — the
+# third classical graph primitive next to PageRank (value iteration) and
+# the dedup clusters (connectivity).
 #
 # Graph: the brand co-purchase graph — an edge between two brands that
 # appear together in at least 2.2% of orders (the basket machinery with a
@@ -472,7 +472,7 @@ def item_cf_top_recs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # bounded), and the triangle join runs over the GATED edge frame —
 # bounded by |brands|³ in the worst case but by Σ deg² in practice,
 # never by data size. The 1-row order-count / aggregate crossJoins are
-# broadcast nested-loops by design — whitelist entry pre-added.
+# broadcast nested-loops by design (whitelisted in tests/test_plans.py).
 # ---------------------------------------------------------------------------
 
 TRIANGLE_ORACLE = """
@@ -523,15 +523,11 @@ def triangle_count_brand_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact triangle count, wedge count, and global clustering coefficient
     of the support-gated brand co-purchase graph — one a<b<c edge-join per
     triangle, Σ deg·(deg−1)/2 wedges, 3T/W floor-ppm (NULL when no
-    wedges). See the staging comment for the shared basket machinery and
-    the vocabulary-bounded scale shape. STAGED r13, REGISTERED r14."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    pt = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    ob = persist_once(
-        li.join(F.broadcast(pt), li.l_partkey == pt.p_partkey)
-        .select(F.col("l_orderkey").alias("o"), F.col("p_brand").alias("b"))
-        .distinct()
-    )
+    wedges). See the comment above for the shared basket machinery and
+    the vocabulary-bounded scale shape."""
+    from talkinghead_datapipeline_spark.queries.behavior import _order_brands
+
+    ob = _order_brands(spark, sf_dir)
     n = ob.agg(F.countDistinct("o").cast("bigint").alias("n_orders"))
     a = ob.select("o", F.col("b").alias("ba"))
     c = ob.select(F.col("o").alias("o2"), F.col("b").alias("bb"))

@@ -214,8 +214,8 @@ def _flame_render_oracle() -> str:
     # through the exact decode_batch steps, so these literals value-check
     # Rodrigues + kinematics + skinning at a nonzero pose, which the
     # rest-pose oracle of flame_decode_landmarks cannot see. n_bytes pins
-    # the render sink contract (16·16 payload); cam_norm checks the cam
-    # metadata path.
+    # the render sink contract (FRAME_HW = 16·16 payload); cam_norm checks
+    # the cam metadata path.
     #
     # The proj_lmk_*_micro columns value-check the N17 orthographic
     # projection: the oracle recomputes
@@ -227,7 +227,10 @@ def _flame_render_oracle() -> str:
     import numpy as np
 
     from talkinghead_datapipeline_spark.functions.geometry import orth_project_sql
-    from talkinghead_datapipeline_spark.operators.models import FlameLbsDecoder
+    from talkinghead_datapipeline_spark.operators.models import (
+        FRAME_HW,
+        FlameLbsDecoder,
+    )
 
     m = FlameLbsDecoder()
     base, coefs = m.posed_landmark_affine(0, np.asarray(_PROBE_POSE))
@@ -252,7 +255,7 @@ def _flame_render_oracle() -> str:
       FROM embeddings
     )
     SELECT vec_id,
-           CAST(256 AS BIGINT) AS n_bytes,
+           CAST({FRAME_HW[0] * FRAME_HW[1]} AS BIGINT) AS n_bytes,
            cam_norm,
            posed_lmk_x,
            posed_lmk_y,
@@ -270,26 +273,28 @@ def _flame_render_oracle() -> str:
     tags=("inference", "N16", "N17", "udf"),
 )
 def flame_render_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """N16→N17 fused: decode codes to a mesh (per-row pose from the
-    embedding), project it to view space with the REAL orthographic camera
-    math, and render to binary frames inside ONE mapInPandas stage — the
-    operator fusion the reference gets only by materializing crops to disk
-    between nodes (SURVEY §2.b N15). The oracled projection: render payload
-    size (sink contract), cam-metadata norm, a landmark decoded at the
-    fixed _PROBE_POSE whose affine-in-betas closed form the DuckDB oracle
-    recomputes — value-checking the
-    Rodrigues/kinematic-chain/skinning path end-to-end — and that landmark's
-    N17 projection (dpl/rendering/utils.py:135-145 batch_orth_proj + the
-    y/z flip of dpl/processor/nodes/rendering.py:101-106), computed as
-    codegen'd COLUMN EXPRESSIONS (functions.geometry.orth_project) from the
-    certified 6-decimal landmark and the raw cam floats, displayed
-    floor-to-micro. The renderer is REAL through the rasterizer and
-    SH-lighting tiers (operators.rasterize: point-in-triangle + z-buffer on
-    the view_transform(verts, cam) tensor, vertex normals, SH irradiance —
-    the gray shape-overlay mode of renderer.py:107-117); only the
-    textured-albedo tier stays out of scope (licensed FLAME uv space). The
-    frame bytes are pinned by unit tests; the rasterizer itself is
-    value-oracled cross-engine by n17_render_mask_zbuffer."""
+    """N16→N17 fused: the FLAME decode and the N17 camera in ONE
+    mapInPandas stage over the embedding codes. What the oracle proves,
+    per row:
+
+    - decode: a landmark decoded at the fixed ``_PROBE_POSE`` from the
+      row's betas. At a fixed pose the LBS decode is affine in the betas,
+      and the DuckDB oracle recomputes that closed form, so the literals
+      value-check Rodrigues, the kinematic chain and the skinning at a
+      nonzero pose;
+    - projection: that landmark's N17 orthographic projection
+      (dpl/rendering/utils.py:135-145 batch_orth_proj + the y/z flip of
+      dpl/processor/nodes/rendering.py:101-106), computed as codegen'd
+      column expressions (functions.geometry.orth_project) from the
+      certified 6-decimal landmark and the raw cam floats, displayed
+      floor-to-micro;
+    - the cam-metadata norm, and ``n_bytes``, the render sink's payload
+      size (``FRAME_HW``: one uint8 per pixel of ShapeRenderer's frame).
+
+    The frames themselves are not rendered here: the renderer is
+    value-oracled cross-engine by n17_render_mask_zbuffer,
+    n17_render_shaded_checksum and n17_render_texture_checksum, and its
+    frame bytes are pinned by unit tests."""
     from talkinghead_datapipeline_spark.catalog import rebalance_for_compute
     from talkinghead_datapipeline_spark.functions.geometry import orth_project
     from talkinghead_datapipeline_spark.operators.inference import (
@@ -297,9 +302,14 @@ def flame_render_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         split_error_channel,
         stack_column,
     )
+    from talkinghead_datapipeline_spark.operators.models import (
+        FRAME_HW,
+        FlameLbsDecoder,
+    )
 
-    # compute-dense per-row work (LBS decode + rasterize + SH): spread the
-    # single-file local input across cores before the mapInPandas stage
+    # The input is the N16 node's code split; the batch body reads the
+    # betas and cam codes (the landmark is decoded at the fixed probe pose,
+    # not the row's pose_code).
     emb = rebalance_for_compute(load_table(spark, sf_dir, "embeddings")).select(
         "vec_id",
         F.slice("embedding", 1, 8).alias("shape_code"),
@@ -307,41 +317,33 @@ def flame_render_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.slice("embedding", 17, 6).alias("pose_code"),
         F.slice("embedding", 23, 3).alias("cam_code"),
     )
+    n_bytes = FRAME_HW[0] * FRAME_HW[1]
 
-    def infer(models, pdf: pd.DataFrame) -> pd.DataFrame:
+    def infer(flame, pdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np
 
-        from talkinghead_datapipeline_spark.operators.models import view_transform
-
-        flame, renderer = models
         # The probe-pose landmark is affine in the betas at a FIXED pose
-        # (the same fact the oracle exploits), so the second full LBS
-        # decode per row is unnecessary: push the affine representation
-        # once per batch (cheap, V·nb) and evaluate base + coefs·betas per
-        # row. Numerically this sits ~1e-15 from the decode path — four
-        # orders below the thinnest measured round(,6) margin of these
-        # columns (1.8e-11 at sf0.01, tie audit), so certified displays
-        # cannot move.
+        # (the same fact the oracle exploits): push the affine
+        # representation once per batch (cheap, V·nb) and evaluate
+        # base + coefs·betas per row. Numerically this sits ~1e-15 from the
+        # decode path — four orders below the thinnest measured round(,6)
+        # margin of these columns (1.8e-11 at sf0.01, tie audit), so
+        # certified displays cannot move.
         probe_base, probe_coefs = flame.posed_landmark_affine(
             0, np.asarray(_PROBE_POSE, dtype=np.float64)
         )
-        sh, ex, po, cams = (
-            stack_column(pdf[c]) for c in ("shape_code", "exp_code", "pose_code", "cam_code")
+        sh, ex, cams = (
+            stack_column(pdf[c]) for c in ("shape_code", "exp_code", "cam_code")
         )
-        # per-row pose drives the rendered frames (the real N15/N17 shape);
-        # decode + projection + rasterize/SH run as ONE vectorized batch —
-        # the per-row form measured 7.9x slower at sf0.1
-        verts, _ = flame.decode_batch(sh, ex, po)
-        frames = renderer.render_batch(verts, view_transform(verts, cams), ("shade",))["shade"]
         rows = []
         for i, (vec_id, cam) in enumerate(zip(pdf["vec_id"], cams)):
-            # fixed probe pose drives the oracle-checked landmark; a per-row
-            # matvec, so its reduction order does not depend on the batch
+            # a per-row matvec, so its reduction order does not depend on
+            # the batch
             probe_lmk = probe_base + probe_coefs @ np.concatenate([sh[i], ex[i]])
             rows.append(
                 {
                     "vec_id": vec_id,
-                    "n_bytes": len(frames[i]),
+                    "n_bytes": n_bytes,
                     "cam_norm": round(float(np.linalg.norm(cam)), 6),
                     "posed_lmk_x": round(float(probe_lmk[0]), 6),
                     "posed_lmk_y": round(float(probe_lmk[1]), 6),
@@ -353,15 +355,6 @@ def flame_render_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         return pd.DataFrame(rows)
 
-    def factory():
-        from talkinghead_datapipeline_spark.operators.models import (
-            FlameLbsDecoder,
-            ShapeRenderer,
-        )
-
-        flame = FlameLbsDecoder()
-        return (flame, ShapeRenderer(faces=flame.faces))
-
     out = batched_inference(
         emb,
         output_schema=(
@@ -370,7 +363,7 @@ def flame_render_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cam_s double, cam_tx double, cam_ty double"
         ),
         model_key="flame_render_stub",
-        model_factory=factory,
+        model_factory=FlameLbsDecoder,
         batch_fn=infer,
     )
     proj = orth_project(
@@ -511,9 +504,8 @@ def _flame_affine_parts() -> dict:
     """Shared oracle-text fragments for the N17 raster-tier oracles: the
     per-vertex affine-in-betas literals of the seeded FLAME basis at the
     probe pose (vb), the topology literals (fc), the embedding projection
-    (emb_cols), and the affine expression builder — used by both
-    ``_render_mask_oracle`` (mask/z-buffer) and ``_render_shade_oracle``
-    (SH-shaded gray overlay)."""
+    (emb_cols), and the affine expression builder — used by
+    ``_raster_ctes`` and ``_pixel_normal_ctes``."""
     import numpy as np
 
     from talkinghead_datapipeline_spark.operators.models import FlameLbsDecoder
@@ -582,30 +574,32 @@ def _screen_quant_exprs() -> tuple[str, str, str]:
     return qx, qy, qz
 
 
-def _render_mask_oracle() -> str:
+def _raster_ctes() -> str:
+    """The oracle front end shared by the three N17 raster-tier oracles:
+    ``emb`` (betas and cam per embedding), the vertex and face literals
+    ``vb``/``fc``, the quantized screen vertices ``verts``, the pixel
+    centres ``px``, the triangles ``tri``, every covered (face, pixel)
+    with its edge functions and interpolated z in ``hit``, and the z-buffer
+    ranking ``win`` (``rn = 1`` is the winner: nearest z, ties to the
+    lowest face id)."""
     from talkinghead_datapipeline_spark.operators.rasterize import SCALE
 
     parts = _flame_affine_parts()
-    emb_cols = parts["emb_cols"]
-    vb_cols_sql = parts["vb_cols_sql"]
-    vb_values = parts["vb_values"]
-    fc_values = parts["fc_values"]
     step = SCALE // _RAS_IMG_SIZE
     qx, qy, qz = _screen_quant_exprs()
-    return f"""
-    WITH emb AS (
+    return f"""emb AS (
       SELECT vec_id,
          CAST(embedding[23] AS DOUBLE) AS s,
          CAST(embedding[24] AS DOUBLE) AS tx,
          CAST(embedding[25] AS DOUBLE) AS ty,
-         {emb_cols}
+         {parts["emb_cols"]}
       FROM embeddings
     ),
-    vb({vb_cols_sql}) AS (VALUES
-      {vb_values}
+    vb({parts["vb_cols_sql"]}) AS (VALUES
+      {parts["vb_values"]}
     ),
     fc(fid, i0, i1, i2) AS (VALUES
-      {fc_values}
+      {parts["fc_values"]}
     ),
     verts AS (
       SELECT emb.vec_id, vb.vid,
@@ -621,7 +615,7 @@ def _render_mask_oracle() -> str:
       FROM range({_RAS_IMG_SIZE}) r1 CROSS JOIN range({_RAS_IMG_SIZE}) r2
     ),
     tri AS (
-      SELECT v0.vec_id, fc.fid,
+      SELECT v0.vec_id, fc.fid, fc.i0, fc.i1, fc.i2,
              v0.qx AS x0, v0.qy AS y0, v0.qz AS z0,
              v1.qx AS x1, v1.qy AS y1, v1.qz AS z1,
              v2.qx AS x2, v2.qy AS y2, v2.qz AS z2
@@ -631,8 +625,8 @@ def _render_mask_oracle() -> str:
       JOIN verts v2 ON v2.vid = fc.i2 AND v2.vec_id = v0.vec_id
     ),
     hit AS (
-      SELECT vec_id, fid, pi, pj, zpx FROM (
-        SELECT t.vec_id, t.fid, p.pi, p.pj,
+      SELECT vec_id, fid, i0, i1, i2, pi, pj, e0, e1, e2, den, zpx FROM (
+        SELECT t.vec_id, t.fid, t.i0, t.i1, t.i2, p.pi, p.pj,
                (t.x2-t.x1)*(p.qpy-t.y1) - (t.y2-t.y1)*(p.qpx-t.x1) AS e0,
                (t.x0-t.x2)*(p.qpy-t.y2) - (t.y0-t.y2)*(p.qpx-t.x2) AS e1,
                (t.x1-t.x0)*(p.qpy-t.y0) - (t.y1-t.y0)*(p.qpx-t.x0) AS e2,
@@ -649,11 +643,129 @@ def _render_mask_oracle() -> str:
                        OR (e0 <= 0 AND e1 <= 0 AND e2 <= 0))
     ),
     win AS (
-      SELECT vec_id, pi, pj, fid, zpx,
+      SELECT vec_id, pi, pj, fid, i0, i1, i2, e0, e1, e2, den, zpx,
              row_number() OVER (PARTITION BY vec_id, pi, pj
                                 ORDER BY zpx, fid) AS rn
       FROM hit
+    )"""
+
+
+def _pixel_normal_ctes() -> str:
+    """The quantized world mesh's unit vertex normals ``un`` (the SQL twin
+    of ``_pixel_normals``) and ``wn``: at every winning (face, pixel) of
+    ``_raster_ctes``, the face's corners ``i0..i2``, its barycentric
+    weights ``b0..b2`` = E_i/den and the interpolated normal
+    ``nxp``/``nyp``/``nzp``."""
+    from talkinghead_datapipeline_spark.operators.rasterize import (
+        COORD_CLAMP,
+        SCALE,
+    )
+
+    affine = _flame_affine_parts()["affine"]
+    hi = float(COORD_CLAMP)
+
+    def wq(axis: str) -> str:
+        # world-mesh quantization: floor(v * 4096) — ·2^12 is EXACT — with
+        # the symmetric clamp; twin of rasterize.quantize_symmetric
+        return (
+            f"CAST(GREATEST({-hi!r}, LEAST({hi!r}, "
+            f"floor((({affine(axis)})) * {float(SCALE)!r}))) AS BIGINT)"
+        )
+
+    # corner crosses of the quantized world mesh: at corner 1
+    # cross(v2-v1, v0-v1), corner 2 cross(v0-v2, v1-v2), corner 0
+    # cross(v1-v0, v2-v0) — utils.py:104-127 order (exact int64, order-free)
+    def cross_sql(p: str, b: str, q: str) -> str:
+        ax, ay, az = f"(w{p}.wx-w{b}.wx)", f"(w{p}.wy-w{b}.wy)", f"(w{p}.wz-w{b}.wz)"
+        bx, by, bz = f"(w{q}.wx-w{b}.wx)", f"(w{q}.wy-w{b}.wy)", f"(w{q}.wz-w{b}.wz)"
+        return (
+            f"w{b}.vid, {ay}*{bz} - {az}*{by} AS cx, "
+            f"{az}*{bx} - {ax}*{bz} AS cy, {ax}*{by} - {ay}*{bx} AS cz"
+        )
+
+    corner = "\n      UNION ALL\n".join(
+        f"""      SELECT w{b}.vec_id, {cross_sql(p, b, q)}
+      FROM fc
+      JOIN wverts w0 ON w0.vid = fc.i0
+      JOIN wverts w1 ON w1.vid = fc.i1 AND w1.vec_id = w0.vec_id
+      JOIN wverts w2 ON w2.vid = fc.i2 AND w2.vec_id = w0.vec_id"""
+        for p, b, q in (("2", "1", "0"), ("0", "2", "1"), ("1", "0", "2"))
+    )
+    return f"""wverts AS (
+      SELECT emb.vec_id, vb.vid,
+             {wq('x')} AS wx,
+             {wq('y')} AS wy,
+             {wq('z')} AS wz
+      FROM emb CROSS JOIN vb
     ),
+    corner AS (
+{corner}
+    ),
+    vn AS (
+      SELECT vec_id, vid,
+             CAST(SUM(cx) AS BIGINT) AS nx,
+             CAST(SUM(cy) AS BIGINT) AS ny,
+             CAST(SUM(cz) AS BIGINT) AS nz
+      FROM corner GROUP BY vec_id, vid
+    ),
+    un AS (
+      SELECT vec_id, vid,
+             CAST(nx AS DOUBLE) / gn AS ux,
+             CAST(ny AS DOUBLE) / gn AS uy,
+             CAST(nz AS DOUBLE) / gn AS uz
+      FROM (
+        SELECT vec_id, vid, nx, ny, nz,
+               GREATEST(sqrt(((CAST(nx AS DOUBLE)*CAST(nx AS DOUBLE))
+                            + (CAST(ny AS DOUBLE)*CAST(ny AS DOUBLE)))
+                            + (CAST(nz AS DOUBLE)*CAST(nz AS DOUBLE))),
+                        1e-06) AS gn
+        FROM vn
+      )
+    ),
+    wn AS (
+      SELECT w.vec_id, w.i0, w.i1, w.i2, b0, b1, b2,
+             ((b0*u0.ux) + (b1*u1.ux)) + (b2*u2.ux) AS nxp,
+             ((b0*u0.uy) + (b1*u1.uy)) + (b2*u2.uy) AS nyp,
+             ((b0*u0.uz) + (b1*u1.uz)) + (b2*u2.uz) AS nzp
+      FROM (
+        SELECT vec_id, i0, i1, i2,
+               CAST(e0 AS DOUBLE) / CAST(den AS DOUBLE) AS b0,
+               CAST(e1 AS DOUBLE) / CAST(den AS DOUBLE) AS b1,
+               CAST(e2 AS DOUBLE) / CAST(den AS DOUBLE) AS b2
+        FROM win WHERE rn = 1
+      ) w
+      JOIN un u0 ON u0.vec_id = w.vec_id AND u0.vid = w.i0
+      JOIN un u1 ON u1.vec_id = w.vec_id AND u1.vid = w.i1
+      JOIN un u2 ON u2.vec_id = w.vec_id AND u2.vid = w.i2
+    )"""
+
+
+def _pixel_stats_sql(src: str, name: str) -> str:
+    """The per-mesh tail of the shaded and textured oracles (the SQL twin
+    of ``_per_mesh_stats``): covered-pixel count and the sum, min and max
+    of ``src``'s ``pix_micro``, named ``{name}_sum_micro`` and so on; a
+    mesh that covers no pixel gets 0, 0, null, null."""
+    return f"""agg AS (
+      SELECT vec_id,
+             CAST(count(*) AS BIGINT) AS covered_pixels,
+             CAST(SUM(pix_micro) AS BIGINT) AS {name}_sum_micro,
+             CAST(MIN(pix_micro) AS BIGINT) AS {name}_min_micro,
+             CAST(MAX(pix_micro) AS BIGINT) AS {name}_max_micro
+      FROM {src} GROUP BY vec_id
+    )
+    SELECT e.vec_id,
+           COALESCE(a.covered_pixels, CAST(0 AS BIGINT)) AS covered_pixels,
+           COALESCE(a.{name}_sum_micro, CAST(0 AS BIGINT)) AS {name}_sum_micro,
+           a.{name}_min_micro, a.{name}_max_micro
+    FROM emb e LEFT JOIN agg a USING (vec_id)
+    """
+
+
+def _render_mask_oracle() -> str:
+    from talkinghead_datapipeline_spark.operators.rasterize import SCALE
+
+    return f"""
+    WITH {_raster_ctes()},
     agg AS (
       SELECT vec_id,
              CAST(count(*) AS BIGINT) AS mask_pixels,
@@ -740,195 +852,32 @@ def n17_render_mask_zbuffer(spark: SparkSession, sf_dir: str) -> DataFrame:
     return split_error_channel(out)[0]
 
 
-def _render_shade_oracle() -> str:
-    import numpy as np
-
-    from talkinghead_datapipeline_spark.operators.rasterize import (
-        COORD_CLAMP,
-        SCALE,
-        shade_gray_weights,
-    )
-
-    parts = _flame_affine_parts()
-    emb_cols = parts["emb_cols"]
-    vb_cols_sql = parts["vb_cols_sql"]
-    vb_values = parts["vb_values"]
-    fc_values = parts["fc_values"]
-    affine = parts["affine"]
-    step = SCALE // _RAS_IMG_SIZE
-    qx, qy, qz = _screen_quant_exprs()
-    hi = float(COORD_CLAMP)
-    w = [repr(float(v)) for v in shade_gray_weights()]
-    alb = repr(180.0 / 255.0)
-
-    def wq(axis: str) -> str:
-        # world-mesh quantization: floor(v * 4096) — ·2^12 is EXACT — with
-        # the symmetric clamp; twin of rasterize.quantize_symmetric
-        return (
-            f"CAST(GREATEST({-hi!r}, LEAST({hi!r}, "
-            f"floor((({affine(axis)})) * {float(SCALE)!r}))) AS BIGINT)"
-        )
-
-    # corner crosses of the quantized world mesh: at corner 1
-    # cross(v2-v1, v0-v1), corner 2 cross(v0-v2, v1-v2), corner 0
-    # cross(v1-v0, v2-v0) — utils.py:104-127 order (exact int64, order-free)
-    def cross_sql(p: str, b: str, q: str) -> str:
-        ax, ay, az = f"(w{p}.wx-w{b}.wx)", f"(w{p}.wy-w{b}.wy)", f"(w{p}.wz-w{b}.wz)"
-        bx, by, bz = f"(w{q}.wx-w{b}.wx)", f"(w{q}.wy-w{b}.wy)", f"(w{q}.wz-w{b}.wz)"
-        return (
-            f"w{b}.vid, {ay}*{bz} - {az}*{by} AS cx, "
-            f"{az}*{bx} - {ax}*{bz} AS cy, {ax}*{by} - {ay}*{bx} AS cz"
-        )
-
-    shade = (
+def _sh_chain_sql(weights) -> str:
+    """The SQL twin of ``rasterize.sh_gray_chain`` over the interpolated
+    normal ``nxp``/``nyp``/``nzp`` against the 9 ``weights``."""
+    w = [repr(float(v)) for v in weights]
+    return (
         f"(((((((({w[0]} + ({w[1]}*nxp)) + ({w[2]}*nyp)) + ({w[3]}*nzp)) "
         f"+ ({w[4]}*(nxp*nyp))) + ({w[5]}*(nxp*nzp))) + ({w[6]}*(nyp*nzp))) "
         f"+ ({w[7]}*((nxp*nxp) - (nyp*nyp)))) "
         f"+ ({w[8]}*((3.0*(nzp*nzp)) - 1.0)))"
     )
+
+
+def _render_shade_oracle() -> str:
+    from talkinghead_datapipeline_spark.operators.rasterize import shade_gray_weights
+
+    shade = _sh_chain_sql(shade_gray_weights())
+    alb = repr(180.0 / 255.0)
     return f"""
-    WITH emb AS (
-      SELECT vec_id,
-         CAST(embedding[23] AS DOUBLE) AS s,
-         CAST(embedding[24] AS DOUBLE) AS tx,
-         CAST(embedding[25] AS DOUBLE) AS ty,
-         {emb_cols}
-      FROM embeddings
-    ),
-    vb({vb_cols_sql}) AS (VALUES
-      {vb_values}
-    ),
-    fc(fid, i0, i1, i2) AS (VALUES
-      {fc_values}
-    ),
-    verts AS (
-      SELECT emb.vec_id, vb.vid,
-             {qx} AS qx,
-             {qy} AS qy,
-             {qz} AS qz
-      FROM emb CROSS JOIN vb
-    ),
-    wverts AS (
-      SELECT emb.vec_id, vb.vid,
-             {wq('x')} AS wx,
-             {wq('y')} AS wy,
-             {wq('z')} AS wz
-      FROM emb CROSS JOIN vb
-    ),
-    corner AS (
-      SELECT w1.vec_id, {cross_sql('2', '1', '0')}
-      FROM fc
-      JOIN wverts w0 ON w0.vid = fc.i0
-      JOIN wverts w1 ON w1.vid = fc.i1 AND w1.vec_id = w0.vec_id
-      JOIN wverts w2 ON w2.vid = fc.i2 AND w2.vec_id = w0.vec_id
-      UNION ALL
-      SELECT w2.vec_id, {cross_sql('0', '2', '1')}
-      FROM fc
-      JOIN wverts w0 ON w0.vid = fc.i0
-      JOIN wverts w1 ON w1.vid = fc.i1 AND w1.vec_id = w0.vec_id
-      JOIN wverts w2 ON w2.vid = fc.i2 AND w2.vec_id = w0.vec_id
-      UNION ALL
-      SELECT w0.vec_id, {cross_sql('1', '0', '2')}
-      FROM fc
-      JOIN wverts w0 ON w0.vid = fc.i0
-      JOIN wverts w1 ON w1.vid = fc.i1 AND w1.vec_id = w0.vec_id
-      JOIN wverts w2 ON w2.vid = fc.i2 AND w2.vec_id = w0.vec_id
-    ),
-    vn AS (
-      SELECT vec_id, vid,
-             CAST(SUM(cx) AS BIGINT) AS nx,
-             CAST(SUM(cy) AS BIGINT) AS ny,
-             CAST(SUM(cz) AS BIGINT) AS nz
-      FROM corner GROUP BY vec_id, vid
-    ),
-    un AS (
-      SELECT vec_id, vid,
-             CAST(nx AS DOUBLE) / gn AS ux,
-             CAST(ny AS DOUBLE) / gn AS uy,
-             CAST(nz AS DOUBLE) / gn AS uz
-      FROM (
-        SELECT vec_id, vid, nx, ny, nz,
-               GREATEST(sqrt(((CAST(nx AS DOUBLE)*CAST(nx AS DOUBLE))
-                            + (CAST(ny AS DOUBLE)*CAST(ny AS DOUBLE)))
-                            + (CAST(nz AS DOUBLE)*CAST(nz AS DOUBLE))),
-                        1e-06) AS gn
-        FROM vn
-      )
-    ),
-    px AS (
-      SELECT r1.range AS pi, r2.range AS pj,
-             {SCALE} - (2 * r2.range + 1) * {step} AS qpx,
-             {SCALE} - (2 * r1.range + 1) * {step} AS qpy
-      FROM range({_RAS_IMG_SIZE}) r1 CROSS JOIN range({_RAS_IMG_SIZE}) r2
-    ),
-    tri AS (
-      SELECT v0.vec_id, fc.fid, fc.i0, fc.i1, fc.i2,
-             v0.qx AS x0, v0.qy AS y0, v0.qz AS z0,
-             v1.qx AS x1, v1.qy AS y1, v1.qz AS z1,
-             v2.qx AS x2, v2.qy AS y2, v2.qz AS z2
-      FROM fc
-      JOIN verts v0 ON v0.vid = fc.i0
-      JOIN verts v1 ON v1.vid = fc.i1 AND v1.vec_id = v0.vec_id
-      JOIN verts v2 ON v2.vid = fc.i2 AND v2.vec_id = v0.vec_id
-    ),
-    hit AS (
-      SELECT vec_id, fid, i0, i1, i2, pi, pj, e0, e1, e2, den, zpx FROM (
-        SELECT t.vec_id, t.fid, t.i0, t.i1, t.i2, p.pi, p.pj,
-               (t.x2-t.x1)*(p.qpy-t.y1) - (t.y2-t.y1)*(p.qpx-t.x1) AS e0,
-               (t.x0-t.x2)*(p.qpy-t.y2) - (t.y0-t.y2)*(p.qpx-t.x2) AS e1,
-               (t.x1-t.x0)*(p.qpy-t.y0) - (t.y1-t.y0)*(p.qpx-t.x0) AS e2,
-               (t.x1-t.x0)*(t.y2-t.y0) - (t.y1-t.y0)*(t.x2-t.x0) AS den,
-               CAST(((t.x2-t.x1)*(p.qpy-t.y1) - (t.y2-t.y1)*(p.qpx-t.x1)) * t.z0
-                  + ((t.x0-t.x2)*(p.qpy-t.y2) - (t.y0-t.y2)*(p.qpx-t.x2)) * t.z1
-                  + ((t.x1-t.x0)*(p.qpy-t.y0) - (t.y1-t.y0)*(p.qpx-t.x0)) * t.z2
-                    AS DOUBLE)
-                 / CAST((t.x1-t.x0)*(t.y2-t.y0) - (t.y1-t.y0)*(t.x2-t.x0)
-                        AS DOUBLE) AS zpx
-        FROM tri t CROSS JOIN px p
-      )
-      WHERE den <> 0 AND ((e0 >= 0 AND e1 >= 0 AND e2 >= 0)
-                       OR (e0 <= 0 AND e1 <= 0 AND e2 <= 0))
-    ),
-    win AS (
-      SELECT vec_id, pi, pj, fid, i0, i1, i2, e0, e1, e2, den,
-             row_number() OVER (PARTITION BY vec_id, pi, pj
-                                ORDER BY zpx, fid) AS rn
-      FROM hit
-    ),
+    WITH {_raster_ctes()},
+    {_pixel_normal_ctes()},
     pxshade AS (
       SELECT vec_id,
              CAST(floor(({shade} * {alb}) * 1000000.0) AS BIGINT) AS pix_micro
-      FROM (
-        SELECT w.vec_id,
-               ((b0*u0.ux) + (b1*u1.ux)) + (b2*u2.ux) AS nxp,
-               ((b0*u0.uy) + (b1*u1.uy)) + (b2*u2.uy) AS nyp,
-               ((b0*u0.uz) + (b1*u1.uz)) + (b2*u2.uz) AS nzp
-        FROM (
-          SELECT vec_id, i0, i1, i2,
-                 CAST(e0 AS DOUBLE) / CAST(den AS DOUBLE) AS b0,
-                 CAST(e1 AS DOUBLE) / CAST(den AS DOUBLE) AS b1,
-                 CAST(e2 AS DOUBLE) / CAST(den AS DOUBLE) AS b2
-          FROM win WHERE rn = 1
-        ) w
-        JOIN un u0 ON u0.vec_id = w.vec_id AND u0.vid = w.i0
-        JOIN un u1 ON u1.vec_id = w.vec_id AND u1.vid = w.i1
-        JOIN un u2 ON u2.vec_id = w.vec_id AND u2.vid = w.i2
-      )
+      FROM wn
     ),
-    agg AS (
-      SELECT vec_id,
-             CAST(count(*) AS BIGINT) AS covered_pixels,
-             CAST(SUM(pix_micro) AS BIGINT) AS shade_sum_micro,
-             CAST(MIN(pix_micro) AS BIGINT) AS shade_min_micro,
-             CAST(MAX(pix_micro) AS BIGINT) AS shade_max_micro
-      FROM pxshade GROUP BY vec_id
-    )
-    SELECT e.vec_id,
-           COALESCE(a.covered_pixels, CAST(0 AS BIGINT)) AS covered_pixels,
-           COALESCE(a.shade_sum_micro, CAST(0 AS BIGINT)) AS shade_sum_micro,
-           a.shade_min_micro, a.shade_max_micro
-    FROM emb e LEFT JOIN agg a USING (vec_id)
-    """
+    {_pixel_stats_sql("pxshade", "shade")}"""
 
 
 N17_RENDER_SHADE_ORACLE = _render_shade_oracle()
@@ -1001,8 +950,6 @@ def _texture_assets() -> dict:
     the query factory and the oracle builder (ShapeRenderer._uv_for's
     exact recipe: uv_{V} per-vertex uv, albedo_map 3x64x64, uv_ndc =
     uv·2−1 with y negated)."""
-    import numpy as np
-
     from talkinghead_datapipeline_spark.operators.models import (
         FlameLbsDecoder,
         _seeded_rng,
@@ -1026,11 +973,6 @@ def _texture_assets() -> dict:
 def _render_texture_oracle() -> str:
     assets = _texture_assets()
     uv_ndc, albedo, w = assets["uv_ndc"], assets["albedo"], assets["weights"]
-    # Reuse the shade oracle's verified CTE prefix VERBATIM: everything up
-    # to the pxshade tail (emb/vb/fc/verts/wverts/corner/vn/un/px/tri/hit/
-    # win) is byte-identical between the two rasterizer oracles.
-    marker = "\n    pxshade AS ("
-    prefix = N17_RENDER_SHADE_ORACLE[: N17_RENDER_SHADE_ORACLE.index(marker)]
     uv_rows = ",\n      ".join(
         f"({vid}, {float(uv_ndc[vid, 0])!r}, {float(uv_ndc[vid, 1])!r})"
         for vid in range(uv_ndc.shape[0])
@@ -1042,15 +984,6 @@ def _render_texture_oracle() -> str:
         for x in range(64)
     )
 
-    def shade(c: int) -> str:
-        ws = [repr(float(w[k, c])) for k in range(9)]
-        return (
-            f"(((((((({ws[0]} + ({ws[1]}*nxp)) + ({ws[2]}*nyp)) + ({ws[3]}*nzp)) "
-            f"+ ({ws[4]}*(nxp*nyp))) + ({ws[5]}*(nxp*nzp))) + ({ws[6]}*(nyp*nzp))) "
-            f"+ ({ws[7]}*((nxp*nxp) - (nyp*nyp)))) "
-            f"+ ({ws[8]}*((3.0*(nzp*nzp)) - 1.0)))"
-        )
-
     def tap(c: str) -> str:
         # the reference's 4-tap order with zero out-of-range taps
         return (
@@ -1060,11 +993,11 @@ def _render_texture_oracle() -> str:
             f" + (COALESCE(a11.{c}, 0.0) * (wx1*wy1)))"
         )
 
-    texel = (
-        f"((({tap('r')} * {shade(0)}) + ({tap('g')} * {shade(1)}))"
-        f" + ({tap('b')} * {shade(2)})) / 3.0"
-    )
-    return f"""{prefix}
+    r, g, b = (f"({tap(c)} * {_sh_chain_sql(w[:, k])})" for k, c in enumerate("rgb"))
+    texel = f"(({r} + {g}) + {b}) / 3.0"
+    return f"""
+    WITH {_raster_ctes()},
+    {_pixel_normal_ctes()},
     uvt(vid, gx, gy) AS (VALUES
       {uv_rows}
     ),
@@ -1072,25 +1005,13 @@ def _render_texture_oracle() -> str:
       {alb_rows}
     ),
     wb AS (
-      SELECT w.vec_id,
-             ((b0*u0.ux) + (b1*u1.ux)) + (b2*u2.ux) AS nxp,
-             ((b0*u0.uy) + (b1*u1.uy)) + (b2*u2.uy) AS nyp,
-             ((b0*u0.uz) + (b1*u1.uz)) + (b2*u2.uz) AS nzp,
+      SELECT vec_id, nxp, nyp, nzp,
              ((b0*t0.gx) + (b1*t1.gx)) + (b2*t2.gx) AS gxp,
              ((b0*t0.gy) + (b1*t1.gy)) + (b2*t2.gy) AS gyp
-      FROM (
-        SELECT vec_id, i0, i1, i2,
-               CAST(e0 AS DOUBLE) / CAST(den AS DOUBLE) AS b0,
-               CAST(e1 AS DOUBLE) / CAST(den AS DOUBLE) AS b1,
-               CAST(e2 AS DOUBLE) / CAST(den AS DOUBLE) AS b2
-        FROM win WHERE rn = 1
-      ) w
-      JOIN un u0 ON u0.vec_id = w.vec_id AND u0.vid = w.i0
-      JOIN un u1 ON u1.vec_id = w.vec_id AND u1.vid = w.i1
-      JOIN un u2 ON u2.vec_id = w.vec_id AND u2.vid = w.i2
-      JOIN uvt t0 ON t0.vid = w.i0
-      JOIN uvt t1 ON t1.vid = w.i1
-      JOIN uvt t2 ON t2.vid = w.i2
+      FROM wn
+      JOIN uvt t0 ON t0.vid = wn.i0
+      JOIN uvt t1 ON t1.vid = wn.i1
+      JOIN uvt t2 ON t2.vid = wn.i2
     ),
     taps AS (
       SELECT vec_id, nxp, nyp, nzp,
@@ -1114,20 +1035,7 @@ def _render_texture_oracle() -> str:
       LEFT JOIN alb0 a01 ON a01.ay = t.y0 + 1 AND a01.ax = t.x0
       LEFT JOIN alb0 a11 ON a11.ay = t.y0 + 1 AND a11.ax = t.x0 + 1
     ),
-    agg AS (
-      SELECT vec_id,
-             CAST(count(*) AS BIGINT) AS covered_pixels,
-             CAST(SUM(pix_micro) AS BIGINT) AS tex_sum_micro,
-             CAST(MIN(pix_micro) AS BIGINT) AS tex_min_micro,
-             CAST(MAX(pix_micro) AS BIGINT) AS tex_max_micro
-      FROM texpx GROUP BY vec_id
-    )
-    SELECT e.vec_id,
-           COALESCE(a.covered_pixels, CAST(0 AS BIGINT)) AS covered_pixels,
-           COALESCE(a.tex_sum_micro, CAST(0 AS BIGINT)) AS tex_sum_micro,
-           a.tex_min_micro, a.tex_max_micro
-    FROM emb e LEFT JOIN agg a USING (vec_id)
-    """
+    {_pixel_stats_sql("texpx", "tex")}"""
 
 
 N17_RENDER_TEXTURE_ORACLE = _render_texture_oracle()

@@ -23,6 +23,7 @@ from talkinghead_datapipeline_spark.catalog import (
     rebalance_for_compute,
 )
 from talkinghead_datapipeline_spark.queries import register
+from talkinghead_datapipeline_spark.queries.dedup import _closure_ctes
 
 # ---------------------------------------------------------------------------
 # Fuzzy record linkage: near-identical entity names (typos, re-spellings)
@@ -445,17 +446,7 @@ def nb_lang_classifier_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _FUZZY_CLUSTERS_ORACLE = f"""
     WITH RECURSIVE {_FUZZY_CAND_CTES},
-    edges AS (
-      SELECT name_a AS s, name_b AS d FROM fpairs
-      UNION
-      SELECT name_b AS s, name_a AS d FROM fpairs
-    ),
-    verts AS (SELECT DISTINCT s AS id FROM edges),
-    reach(id, r) AS (
-      SELECT id, id FROM verts
-      UNION
-      SELECT re.id, e.d FROM reach re JOIN edges e ON re.r = e.s
-    ),
+    {_closure_ctes("name_a", "name_b")},
     comp AS (SELECT id, min(r) AS c FROM reach GROUP BY id)
     SELECT coalesce(cm.c, n.p_name) AS entity,
            CAST(count(*) AS BIGINT) AS n_names,

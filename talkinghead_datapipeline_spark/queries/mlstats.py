@@ -1010,7 +1010,7 @@ def pca_power_doc_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     Determinism (fully exact, no margin argument): every expression
     string is shared verbatim between the Spark plan (F.expr) and the
     DuckDB oracle, so given the exact-integer sufficient stats both
-    engines evaluate the SAME IEEE DAG — see the staging comment for the
+    engines evaluate the SAME IEEE DAG — see the comment above for the
     measured eigengap (~4e3) and the sign-anchor robustness."""
     docs = load_table(spark, sf_dir, "documents").filter(F.length("text") > 0)
     feats = docs.select(
@@ -1233,7 +1233,7 @@ def reliability_bins_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     per predicted-probability decile, the count, positives, mean predicted
     probability, empirical rate, calibration gap, Murphy reliability term
     n_k·(p̄_k − ō_k)², and Brier contribution — all as exact integer ppm.
-    See the staging block above for the determinism and scale contract."""
+    See the comment above for the determinism and scale contract."""
     docs = load_table(spark, sf_dir, "documents").filter(F.length("text") > 0)
     f = docs.select(
         (F.col("n_chars") % 100).alias("b"),
@@ -1338,7 +1338,7 @@ def isotonic_calibration_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Isotonic (PAV) calibration curve of the b = n_chars % 100 score for
     lang = 'en': per distinct score, the raw empirical rate and the
     monotone isotonic fit (both floor-ppm), via the minimax closed form
-    over the distinct-score frame. See the staging block above for the
+    over the distinct-score frame. See the comment above for the
     identity, determinism, and scale contract."""
     docs = load_table(spark, sf_dir, "documents").filter(F.length("text") > 0)
     s = docs.select(
@@ -1487,7 +1487,7 @@ def conformal_coverage_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor-mean predictor, exact conformal quantile q̂ at α = 0.1 via the
     distinct-nonconformity cumulative frame, and test-half coverage in
     floor ppm (guaranteed ≥ 900000 in expectation by the split-conformal
-    theorem). See the staging block above for the determinism and scale
+    theorem). See the comment above for the determinism and scale
     contract."""
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars"

@@ -1254,9 +1254,7 @@ def kcenter_coreset_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# STAGED for r14 registration — dbscan_grid_roles (VERDICT r12 #6c).
-#
-# DBSCAN-style density clustering (core / border / noise labeling) over the
+# dbscan_grid_roles: DBSCAN-style density clustering (core / border / noise labeling) over the
 # embedding table via integer-grid bucketing — the density-clustering class
 # the ANN ladder's bucketing machinery was built for. Points are a seeded
 # 2-D JL projection of the 64-dim embeddings (literal weights in both
@@ -1370,8 +1368,8 @@ def dbscan_grid_roles(spark: SparkSession, sf_dir: str) -> DataFrame:
     2-D projection -> 1/1024 quantization -> eps-cell bucketing -> 3x3
     adjacent-cell equi-join with the exact integer distance predicate ->
     self-inclusive neighbor counts (core >= 8) and core-adjacency border
-    promotion. See the staging comment for determinism and the 100 TB
-    shuffle shape. STAGED r13, REGISTERED r14."""
+    promotion. See the comment above for determinism and the 100 TB
+    shuffle shape."""
     q, eq, mp = _DBSCAN_Q, _DBSCAN_EPS_Q, _DBSCAN_MINPTS
     emb = load_table(spark, sf_dir, "embeddings")
     pts = persist_once(

@@ -529,13 +529,12 @@ def revenue_mom_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# REGISTERED r12 (staged r11): Kolmogorov-Smirnov two-sample statistic —
+# ks_two_sample_chars: Kolmogorov-Smirnov two-sample statistic —
 # the nonparametric distribution-shift test class (pairs with
 # psi_snapshot_drift, which needs pre-agreed bins, and chi2, which needs
 # categories: KS compares two FULL empirical CDFs with no binning choice —
 # "did the en corpus's length distribution drift from the rest"). Verified
-# by tests/test_ks_staged.py; registration takes an r12 seat per the house
-# staging rule.
+# by tests/test_ks_staged.py.
 #
 # Determinism (fully EXACT, no margin argument): the statistic is computed
 # as an INTEGER — D = max_x |F1(x)·n1·n2 − F2(x)·n1·n2| needs no division:
@@ -596,8 +595,8 @@ def ks_two_sample_chars(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact two-sample Kolmogorov-Smirnov statistic of n_chars for
     lang = 'en' vs the rest: the sup-distance of the two empirical CDFs as
     an exact integer (d_num = max |F1·n1·n2 − F2·n1·n2|), its witness
-    score (smallest on ties), and the floor-ppm statistic. See the staging
-    block above for the determinism and scale contract."""
+    score (smallest on ties), and the floor-ppm statistic. See the comment
+    above for the determinism and scale contract."""
     docs = load_table(spark, sf_dir, "documents")
     s = docs.groupBy(F.col("n_chars").alias("score")).agg(
         F.sum(F.when(F.col("lang") == "en", 1).otherwise(0))
@@ -640,9 +639,7 @@ def ks_two_sample_chars(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# STAGED for r14 registration — bh_fdr_lang_source (VERDICT r12 #6b).
-#
-# Benjamini-Hochberg FDR correction over a battery of per-cell
+# bh_fdr_lang_source: Benjamini-Hochberg FDR correction over a battery of per-cell
 # two-proportion z-tests — the multiple-testing layer every
 # experimentation suite needs on top of ab_test_lift / chi2_lang_source.
 # Battery: for each (lang, source) cell of documents, test the cell's
@@ -657,13 +654,14 @@ def ks_two_sample_chars(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Determinism: counts are exact; the z and A&S chains are fixed-order
 # +−×÷ sqrt plus ONE exp per cell (the only libm-divergent op — Spark JVM
 # Math.exp vs DuckDB libm may differ by 1 ulp, ~2e-16 relative, against a
-# 1e-9 display quantum; the staged test asserts every p_ppb sits > 1e-3
-# quanta from a floor boundary at each SF, the house tie-audit pattern).
+# 1e-9 display quantum; tests/test_bh_fdr_staged.py asserts every p_ppb
+# sits > 1e-3 quanta from a floor boundary at each SF, the tie-audit
+# pattern).
 # The BH decision itself is exact integer arithmetic given p_ppb.
 #
 # Scale shape: one (lang, source)-keyed count reduction over documents
 # (the only data-sized shuffle), a 1-row totals broadcast crossJoin
-# (whitelist entry pre-added at staging time), then windows over the
+# (whitelisted in tests/test_plans.py), then windows over the
 # |langs|×|sources| cell frame (~100 rows at every SF — vocabulary-
 # bounded, not data-bounded).
 # ---------------------------------------------------------------------------
@@ -736,8 +734,8 @@ def bh_fdr_lang_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     battery: per cell the long-doc-rate z statistic vs the rest of the
     corpus, the A&S 7.1.26 two-sided p-value (ppb-quantized), the p rank,
     the BH threshold (rank·q/m as an exact integer floor at q = 0.05),
-    and the step-up rejection flag. See the staging comment for the
-    determinism and scale contract. STAGED r13, REGISTERED r14."""
+    and the step-up rejection flag. See the comment above for the
+    determinism and scale contract."""
     docs = load_table(spark, sf_dir, "documents").filter(F.length("text") > 0)
     cells = persist_once(
         docs.groupBy("lang", "source").agg(

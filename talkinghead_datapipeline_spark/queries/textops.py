@@ -141,7 +141,7 @@ def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     (The standard pre-training quality-filter shape: cheap, fully pushed
     into one projection.)
 
-    The composite is floor-to-BIGINT ppm (round-9 tie audit): it is a
+    The composite is floor-to-BIGINT ppm (tools/round_tie_audit.py): it is a
     per-row expression — bit-identical cross-engine — whose sf0.01
     minimum margin from a round(,6) half-boundary measured 0.12 ulps of
     the scaled value, i.e. the scaled double sits ON the tie where the
@@ -429,8 +429,23 @@ _CMS_D = 3  # hash rows
 _CMS_W = 64  # buckets per row
 
 
-def _cms_bucket(token, j: int):
-    return md5_hash(F.concat_ws("|", F.lit(str(j)), token), 8) % _CMS_W
+def _cms_cells():
+    """The sketch cells of the ``token`` column, exploded as struct ``e``:
+    one (j, bucket) per hash row j."""
+    return F.explode(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(j).alias("j"),
+                    (
+                        md5_hash(F.concat_ws("|", F.lit(str(j)), F.col("token")), 8)
+                        % _CMS_W
+                    ).alias("bucket"),
+                )
+                for j in range(_CMS_D)
+            ]
+        )
+    ).alias("e")
 
 
 _CMS_BUCKET_SQL = (
@@ -500,38 +515,14 @@ def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(20)
     )
     sk = (
-        toks.select(
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(j).alias("j"),
-                            _cms_bucket(F.col("token"), j).alias("bucket"),
-                        )
-                        for j in range(_CMS_D)
-                    ]
-                )
-            ).alias("e")
-        )
+        toks.select(_cms_cells())
         .select("e.j", "e.bucket")
         .groupBy("j", "bucket")
         .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
     )
-    probes = top.select(
-        "token",
-        "true_cnt",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).alias("j"),
-                        _cms_bucket(F.col("token"), j).alias("bucket"),
-                    )
-                    for j in range(_CMS_D)
-                ]
-            )
-        ).alias("e"),
-    ).select("token", "true_cnt", "e.j", "e.bucket")
+    probes = top.select("token", "true_cnt", _cms_cells()).select(
+        "token", "true_cnt", "e.j", "e.bucket"
+    )
     return (
         probes.join(F.broadcast(sk), ["j", "bucket"])
         .groupBy("token", "true_cnt")
@@ -657,14 +648,29 @@ def paragraph_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register(
-    "gopher_repetition_signals",
-    oracle=r"""
+_GOPHER_BASE_CTE = r"""
     WITH base AS (
       SELECT doc_id, CAST(length(text) AS BIGINT) AS n_chars_actual,
              string_split_regex(lower(text), '\s+') AS toks
       FROM documents
-    ),
+    ),"""
+
+
+def _gopher_base(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, n_chars_actual, toks): each document's length and its
+    lowercased whitespace tokens — the Column twin of
+    ``_GOPHER_BASE_CTE``, shared by the two Gopher repetition queries."""
+    docs = load_table(spark, sf_dir, "documents")
+    return rebalance_for_compute(docs, "doc_id").select(
+        "doc_id",
+        F.length("text").cast("bigint").alias("n_chars_actual"),
+        F.split(F.lower(F.col("text")), r"\s+").alias("toks"),
+    )
+
+
+@register(
+    "gopher_repetition_signals",
+    oracle=_GOPHER_BASE_CTE + r"""
     grams AS (
       SELECT doc_id, n, gram, CAST(count(*) AS BIGINT) AS cnt
       FROM (
@@ -721,18 +727,13 @@ def gopher_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-doc reductions joined back to the doc spine — gram counting is
     the wordcount shape, uniform at any corpus size.
 
-    Floor-ppm outputs (round-9 tie audit): both fractions are single
+    Floor-ppm outputs (tools/round_tie_audit.py): both fractions are single
     double divisions of exact integers — bit-identical cross-engine — and
     the sf0.01 audit found values sitting EXACTLY on round(,6) half-
     boundaries (0.0546875 = 7/128 and friends: dyadic rationals land on
     .5 ties whenever the denominator exceeds 2^6), so round() is replaced
     by floor-to-BIGINT ppm, the same function in both engines."""
-    docs = load_table(spark, sf_dir, "documents")
-    base = rebalance_for_compute(docs, "doc_id").select(
-        "doc_id",
-        F.length("text").cast("bigint").alias("n_chars_actual"),
-        F.split(F.lower(F.col("text")), r"\s+").alias("toks"),
-    )
+    base = _gopher_base(spark, sf_dir)
 
     def ngrams(n: int):
         return F.when(
@@ -816,12 +817,7 @@ def gopher_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "gopher_dup_trigram_coverage",
-    oracle=r"""
-    WITH base AS (
-      SELECT doc_id, CAST(length(text) AS BIGINT) AS n_chars_actual,
-             string_split_regex(lower(text), '\s+') AS toks
-      FROM documents
-    ),
+    oracle=_GOPHER_BASE_CTE + r"""
     occ AS (
       SELECT doc_id, toks,
              CAST(unnest(range(1, len(toks) - 1)) AS BIGINT) AS i
@@ -855,7 +851,7 @@ def gopher_dup_trigram_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     Gopher semantics (each character position counted once no matter how
     many duplicated trigrams overlap it), closing the one documented
     divergence of ``gopher_repetition_signals``' occurrences×length
-    variant (VERDICT r5 #8). A token position is COVERED if any trigram
+    variant. A token position is COVERED if any trigram
     occurring ≥ 2× in the doc spans it; the metric is the summed length
     of covered tokens over the doc's character count (inter-token
     whitespace is never attributed — stated, and mirrored in the oracle).
@@ -866,12 +862,7 @@ def gopher_dup_trigram_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     length), one per-doc shuffle unions+dedups them, and the covered
     char sum is an array fold against the doc's own token array — no
     per-position join, no UDF."""
-    docs = load_table(spark, sf_dir, "documents")
-    base = rebalance_for_compute(docs, "doc_id").select(
-        "doc_id",
-        F.length("text").cast("bigint").alias("n_chars_actual"),
-        F.split(F.lower(F.col("text")), r"\s+").alias("toks"),
-    )
+    base = _gopher_base(spark, sf_dir)
     tri = base.select(
         "doc_id",
         F.explode(
@@ -937,6 +928,20 @@ _PII_PHONE = r"\+[0-9]{7,15}|\b[0-9]{3}-[0-9]{3}-[0-9]{4}\b"
 _PII_IPV4 = r"\b[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\b"
 
 
+def _pii_redacted(text):
+    """``text`` with every email, phone and IPv4 match replaced by its
+    sentinel, in that order (a sentinel must not be re-matched)."""
+    return F.regexp_replace(
+        F.regexp_replace(
+            F.regexp_replace(text, _PII_EMAIL, "|||EMAIL|||"),
+            _PII_PHONE,
+            "|||PHONE|||",
+        ),
+        _PII_IPV4,
+        "|||IP|||",
+    )
+
+
 @register(
     "pii_redact_stats",
     oracle=f"""
@@ -968,21 +973,12 @@ def pii_redact_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-engine behavior proof on PII-bearing text lives in
     tests/test_textops_extra.py (temp-dir differential vs DuckDB)."""
     docs = load_table(spark, sf_dir, "documents")
-    redacted = F.regexp_replace(
-        F.regexp_replace(
-            F.regexp_replace(F.col("text"), _PII_EMAIL, "|||EMAIL|||"),
-            _PII_PHONE,
-            "|||PHONE|||",
-        ),
-        _PII_IPV4,
-        "|||IP|||",
-    )
     return docs.select(
         "doc_id",
         F.regexp_count("text", F.lit(_PII_EMAIL)).cast("bigint").alias("n_emails"),
         F.regexp_count("text", F.lit(_PII_PHONE)).cast("bigint").alias("n_phones"),
         F.regexp_count("text", F.lit(_PII_IPV4)).cast("bigint").alias("n_ips"),
-        redacted.alias("text_redacted"),
+        _pii_redacted(F.col("text")).alias("text_redacted"),
     )
 
 
@@ -1097,7 +1093,7 @@ def bpe_apply_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     non-overlapping replace() is identical in Spark and DuckDB, so the
     symbol stream (and hence the token count) is engine-exact. Per-doc
     output: symbol count + compression ratio as floor-to-BIGINT ppm
-    (round-9 tie audit: chars/symbols is a division of exact integers —
+    (tools/round_tie_audit.py: chars/symbols is a division of exact integers —
     bit-identical cross-engine — and 1.0703125 = 137/128 at sf0.01 sits
     EXACTLY on a round(,6) half-boundary; floor is the same function in
     both engines).
@@ -1500,12 +1496,11 @@ def bm25_scored(docs: DataFrame) -> DataFrame:
     the shared scoring frame behind `bm25_topk_docs` and
     `curation.rrf_hybrid_topk` (mirrors the SQL `_bm25_scored_cte`).
 
-    r15 (guide §4): the per-term Column loops (tf filter lambdas, df CASE
-    sums, the 4-term score fold) are assembled as JVM-parsed strings — the
-    Column form cost ~3.6k py4j round-trips per build, paid once per bench
-    rep by BOTH consumers. Same trees: double literals use the ``D``
-    suffix, operand order matches the old fold exactly (plan normdiff
-    empty, plans/r15/{bm25_topk_docs,rrf_hybrid_topk}_{before,after})."""
+    The per-term loops (tf filter lambdas, df CASE sums, the 4-term score
+    fold) are assembled as JVM-parsed strings — a Column form costs ~3.6k
+    py4j round-trips per build, paid by BOTH consumers. They resolve to
+    the Column form's trees: double literals use the ``D`` suffix, and the
+    operand order is the Column fold's."""
     k1, b = repr(_BM25_K1), repr(_BM25_B)
     tf = docs.selectExpr(
         "doc_id",
@@ -1730,9 +1725,8 @@ def tokenizer_fertility_per_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Registered round 10 (staged in r9; tests/test_chunking_staged.py pins
-# reassembly, grid algebra, the map-only plan, and split invariance; seat
-# displaced from r9 by the tie-audit migrations).
+# Overlapping chunking (tests/test_chunking_staged.py pins reassembly, grid
+# algebra, the map-only plan, and split invariance).
 # ---------------------------------------------------------------------------
 
 # Chunk grid: 200-char windows, stride 150 (50-char overlap) — the standard

@@ -383,8 +383,8 @@ def variant_props_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q17_below_avg_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Small-lot revenue per brand: self-agg threshold join (Q17 shape).
     The per-part avg is an exact integer-sum average, so the `<` comparison
-    is order-independent across engines. Integer-cents revenue (round-9
-    money migration): the per-brand sum accumulates exact BIGINT cents —
+    is order-independent across engines. Integer-cents revenue: the
+    per-brand sum accumulates exact BIGINT cents —
     the /100.0-then-round(,2) display is tie-free because the true value
     has exactly 2 decimals."""
     li = load_table(spark, sf_dir, "lineitem")
@@ -856,7 +856,7 @@ _EWMA_COEFS = tuple((1.0 - _EWMA_ALPHA) ** k for k in range(_EWMA_K))
 
 def _ewma_oracle() -> str:
     # Same left-assoc summation order as the Spark expression: identical
-    # IEEE doubles on both engines, round-6 only as belt-and-braces.
+    # IEEE doubles on both engines, round(, 6) only as belt-and-braces.
     num = " + ".join(
         f"coalesce({c!r} * lag(value, {k}) OVER w, 0.0)"
         for k, c in enumerate(_EWMA_COEFS)
@@ -883,11 +883,10 @@ def ewma_user_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     lags over one shared window sort. No rescaled running sums (overflow-
     prone), no applyInPandas."""
     ev = load_table(spark, sf_dir, "events")
-    # r15 (guide §4): the 24-lag FIR fold is assembled as ONE JVM-parsed
-    # string — the Column loop cost ~3k py4j round-trips per build, paid
-    # per bench rep. Same tree: double literals with the D suffix, same
-    # left-associated num/den sums, same lag window (plan normdiff empty,
-    # plans/r15/ewma_user_values_{before,after}).
+    # The 24-lag FIR fold is assembled as ONE JVM-parsed string — a Column
+    # loop costs ~3k py4j round-trips per build. It resolves to the tree of
+    # that Column loop: double literals with the D suffix, left-associated
+    # num/den sums, one lag window.
     over = "OVER (PARTITION BY user_id ORDER BY event_id)"
     nterms, dterms = [], []
     for k, c in enumerate(_EWMA_COEFS):
@@ -1124,7 +1123,7 @@ def retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# REGISTERED r11 (staged r10): single-split changepoint detection (binary
+# changepoint_daily_revenue: single-split changepoint detection (binary
 # segmentation, first step) over the daily revenue series — the
 # distribution-shift / segmentation class (PSI certifies drift BETWEEN two
 # known snapshots; this finds WHERE a series breaks, the monitoring
@@ -1260,8 +1259,8 @@ def changepoint_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# STAGED FOR r13 REGISTRATION: day-of-week seasonal decomposition +
-# forecast backtest — the seasonality class (VERDICT r11 #4c; pairs with
+# seasonal_dow_backtest: day-of-week seasonal decomposition + forecast
+# backtest — the seasonality class (pairs with
 # changepoint_daily_revenue, which finds where the daily series BREAKS, and
 # q6_forecast_revenue: this certifies the series' periodic structure and
 # whether exploiting it beats the naive forecast). Per weekday over the
@@ -1270,8 +1269,7 @@ def changepoint_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the seasonal-naive forecast (floor mean of the previous 4 same-weekday
 # observations) against the naive forecast (previous observed day) by MAE
 # in exact cents, on the same evaluation rows. Verified by
-# tests/test_seasonal_staged.py; registration takes an r13 seat per the
-# house staging rule.
+# tests/test_seasonal_staged.py.
 #
 # Determinism (fully exact): daily totals are BIGINT cents (round-half-away
 # both engines); every derived statistic is an integer floor division of
@@ -1347,7 +1345,7 @@ def seasonal_dow_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     plus a walk-forward MAE backtest of the seasonal-naive forecast
     (floor mean of the prior 4 same-weekday days) against the naive
     previous-day forecast, in exact cents on shared evaluation rows. See
-    the staging block above for the determinism and scale contract."""
+    the comment above for the determinism and scale contract."""
     from talkinghead_datapipeline_spark.functions.geometry import round_half_away
 
     orders = load_table(spark, sf_dir, "orders")
@@ -1424,12 +1422,51 @@ def seasonal_dow_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# STAGED for r13 registration — mann_kendall_daily_trend: the
-# non-parametric monotone-trend test (Mann-Kendall) over the daily
-# order-revenue series. Pairs with changepoint_daily_revenue ("where did it
-# break") and seasonal_dow_backtest ("is it calendar structure"): this one
-# answers "is there a monotone drift at all", the test monitoring runs
-# BEFORE segmenting. Public formulas: S = sum_{i<j} sign(x_j - x_i);
+# Daily-revenue trend family: mann_kendall_daily_trend (direction) and
+# theil_sen_daily_slope (magnitude) over the same series of exact daily
+# cent totals, and the same all-pairs d1 < d2 self-join of the
+# DISTINCT-DAY frame — calendar-bounded (~2.4k days -> ~2.9M pairs at
+# every SF; days do not grow with rows), broadcast on purpose, whitelisted
+# as a deliberate nested-loop in tests/test_plans.py (same class as the
+# isotonic minimax pair frame). The date-grain aggregation of orders is
+# the only data-sized shuffle. Verified by
+# tests/test_mann_kendall_staged.py.
+# ---------------------------------------------------------------------------
+
+_DAILY_REVENUE_CTE = """daily AS (
+  SELECT CAST(o_orderdate AS DATE) AS d,
+         CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+           AS x
+  FROM orders GROUP BY 1
+)"""
+
+
+def _daily_revenue_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(d, x): each order date's revenue in exact BIGINT cents, persisted
+    (every consumer reads it more than once) — the Column twin of
+    ``_DAILY_REVENUE_CTE``."""
+    o = load_table(spark, sf_dir, "orders")
+    return persist_once(
+        o.groupBy(F.col("o_orderdate").cast("date").alias("d")).agg(
+            F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
+            .cast("bigint")
+            .alias("x")
+        )
+    )
+
+
+def _day_pairs(daily: DataFrame) -> DataFrame:
+    """(d1, x1, d2, x2) for every pair of days d1 < d2 of ``daily``."""
+    a = daily.select(F.col("d").alias("d1"), F.col("x").alias("x1"))
+    b = daily.select(F.col("d").alias("d2"), F.col("x").alias("x2"))
+    return a.join(F.broadcast(b), F.col("d1") < F.col("d2"))
+
+
+# mann_kendall_daily_trend: the non-parametric monotone-trend test over the
+# daily order-revenue series. Pairs with changepoint_daily_revenue ("where
+# did it break") and seasonal_dow_backtest ("is it calendar structure"):
+# this one answers "is there a monotone drift at all", the test monitoring
+# runs BEFORE segmenting. Public formulas: S = sum_{i<j} sign(x_j - x_i);
 # Var(S) = [n(n-1)(2n+5) - sum_t t(t-1)(2t+5)] / 18 over value-tie groups
 # t; z = (S -/+ 1)/sqrt(Var) with the standard continuity correction.
 #
@@ -1439,22 +1476,9 @@ def seasonal_dow_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
 # one divide — so z_micro needs no rounding-boundary argument. The
 # significance flag compares identical doubles to the same literal on
 # both engines.
-#
-# Scale shape: one date-grain aggregation of orders (the only data-sized
-# shuffle), then an all-pairs d1 < d2 self-join of the DISTINCT-DAY frame
-# — calendar-bounded (~2.4k days -> ~2.9M pairs at every SF; days do not
-# grow with rows), broadcast on purpose. Registration must whitelist the
-# deliberate nested-loop in tests/test_plans.py (same class as the
-# isotonic minimax pair frame). Verified by tests/test_mann_kendall_staged.py.
-# ---------------------------------------------------------------------------
 
-MANN_KENDALL_ORACLE = """
-WITH daily AS (
-  SELECT CAST(o_orderdate AS DATE) AS d,
-         CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-           AS x
-  FROM orders GROUP BY 1
-),
+MANN_KENDALL_ORACLE = f"""
+WITH {_DAILY_REVENUE_CTE},
 s AS (
   SELECT CAST(sum(CASE WHEN b.x > a.x THEN 1
                        WHEN b.x < a.x THEN -1 ELSE 0 END) AS BIGINT) AS s_stat,
@@ -1501,20 +1525,11 @@ def mann_kendall_daily_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mann-Kendall monotone-trend test on daily order revenue: the exact
     pairwise sign statistic S, the tie-corrected x18 variance numerator,
     the continuity-corrected z (floor-micro), the trend direction, and a
-    95% two-sided significance flag. See the staging block above for the
-    determinism and scale contract."""
-    o = load_table(spark, sf_dir, "orders")
-    daily = persist_once(
-        o.groupBy(F.col("o_orderdate").cast("date").alias("d")).agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
-            .cast("bigint")
-            .alias("x")
-        )
-    )
-    a = daily.select(F.col("d").alias("d1"), F.col("x").alias("x1"))
-    b = daily.select(F.col("d").alias("d2"), F.col("x").alias("x2"))
+    95% two-sided significance flag. See the comments above this query
+    and its family for the determinism and scale contract."""
+    daily = _daily_revenue_cents(spark, sf_dir)
     s = (
-        a.join(F.broadcast(b), F.col("d1") < F.col("d2"))
+        _day_pairs(daily)
         .agg(
             F.sum(
                 F.when(F.col("x2") > F.col("x1"), 1)
@@ -1578,12 +1593,11 @@ def mann_kendall_daily_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# STAGED for r13 registration — theil_sen_daily_slope: the robust
-# (median-of-pairwise-slopes) trend estimator over the same daily revenue
-# series — the magnitude companion to mann_kendall_daily_trend's direction
-# test (the classical Theil-Sen / Kendall pairing), robust to the outlier
-# days an OLS slope (q6_forecast_revenue's regression class) is dragged by.
+# theil_sen_daily_slope: the robust (median-of-pairwise-slopes) trend
+# estimator over the daily revenue series — the magnitude companion to
+# mann_kendall_daily_trend's direction test (the classical Theil-Sen /
+# Kendall pairing), robust to the outlier days an OLS slope
+# (q6_forecast_revenue's regression class) is dragged by.
 #
 # Exactness: every pairwise slope is ONE IEEE division of exact integers
 # (cent diff / day diff, both < 2^53) — bit-identical cross-engine; the
@@ -1592,28 +1606,19 @@ def mann_kendall_daily_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
 # row ambiguous but its VALUE unique, which is all the median reads. The
 # 2.5%/97.5% rank order statistics give a distribution-free slope band
 # (floor-micro like the point estimate). Both band endpoints carry the
-# same greatest(1, ·) degenerate-count guard (ADVICE r12): at m=1 the
-# unguarded hi rank (m*975) div 1000 = 0 selected no row and returned an
-# asymmetric NULL band — with the guard both endpoints collapse to the
-# single slope, matching the lo endpoint's semantics. Inactive at every
-# certified SF (m ≈ 2.9M pairs).
+# same greatest(1, ·) degenerate-count guard: at m=1 an unguarded hi rank
+# (m*975) div 1000 = 0 would select no row and return an asymmetric NULL
+# band — with the guard both endpoints collapse to the single slope,
+# matching the lo endpoint's semantics. Inactive at every certified SF
+# (m ≈ 2.9M pairs).
 #
-# Scale shape: identical to Mann-Kendall — date-grain aggregation, then
-# the calendar-bounded pair frame (~2.9M rows at every SF); since r14 the
+# Scale shape: the family's date-grain aggregation and pair frame; the
 # rank computation is a range-partitioned two-level row_number (parallel
 # per-partition sorts + a ≤P-row offset frame) instead of one global
 # single-partition sort — same rank function, same values at every rank.
-# Registration must whitelist the deliberate nested-loop join.
-# Verified by tests/test_mann_kendall_staged.py.
-# ---------------------------------------------------------------------------
 
-THEIL_SEN_ORACLE = """
-WITH daily AS (
-  SELECT CAST(o_orderdate AS DATE) AS d,
-         CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-           AS x
-  FROM orders GROUP BY 1
-),
+THEIL_SEN_ORACLE = f"""
+WITH {_DAILY_REVENUE_CTE},
 slopes AS (
   SELECT CAST(b.x - a.x AS DOUBLE)
            / CAST(date_diff('day', a.d, b.d) AS DOUBLE) AS slope
@@ -1650,30 +1655,19 @@ FROM med
 def theil_sen_daily_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Theil-Sen robust slope of daily order revenue (cents/day): the
     median pairwise slope, floor-micro, with distribution-free 2.5%/97.5%
-    rank-band endpoints. See the staging block above for the determinism
-    and scale contract."""
-    o = load_table(spark, sf_dir, "orders")
-    daily = persist_once(
-        o.groupBy(F.col("o_orderdate").cast("date").alias("d")).agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
-            .cast("bigint")
-            .alias("x")
-        )
-    )
-    a = daily.select(F.col("d").alias("d1"), F.col("x").alias("x1"))
-    b = daily.select(F.col("d").alias("d2"), F.col("x").alias("x2"))
+    rank-band endpoints. See the comments above this query and its family
+    for the determinism and scale contract."""
     slopes = persist_once(
-        a.join(F.broadcast(b), F.col("d1") < F.col("d2")).select(
+        _day_pairs(_daily_revenue_cents(spark, sf_dir)).select(
             (
                 (F.col("x2") - F.col("x1")).cast("double")
                 / F.datediff("d2", "d1").cast("double")
             ).alias("slope")
         )
     )
-    # r14 (guide §2.3/§2.5): the global row_number window moved all ~2.9M
-    # slopes into ONE partition and sorted them single-threaded (profiled:
-    # a 27 MB single-task window stage dominating the query). Replace it
-    # with the two-level rank over a RANGE partitioning: partitions are
+    # Two-level rank over a RANGE partitioning, not one global row_number
+    # window (which moves all ~2.9M slopes into ONE partition and sorts
+    # them single-threaded — a 27 MB single-task stage): partitions are
     # value-ordered, so (partition offset + within-partition row_number)
     # is a valid global row_number for the same ORDER BY slope — the value
     # at every rank, which is all the CASE selection below reads, is
@@ -1690,7 +1684,7 @@ def theil_sen_daily_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     # final rank join. Un-persisted, each branch plans its own
     # repartitionByRange whose bounds are sampled independently — the two
     # partitionings disagree and offset+lrn stops being a permutation
-    # (caught by the oracle diff while staging this rewrite). One shared
+    # (the oracle diff catches it). One shared
     # materialization pins a single partitioning for every consumer.
     loc = persist_once(
         sl.withColumn(
@@ -1749,9 +1743,8 @@ def theil_sen_daily_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# STAGED for r14 registration — acf_ljung_box_daily (r13: the
-# autocorrelation class — nothing in the registry measures serial
-# dependence; pairs with changepoint_daily_revenue / seasonal_dow_backtest
+# acf_ljung_box_daily: the autocorrelation class (serial dependence;
+# pairs with changepoint_daily_revenue / seasonal_dow_backtest
 # / mann_kendall_daily_trend on the same daily-revenue series).
 #
 # Sample autocorrelation r_k (lags 1..7) of daily order revenue on the
@@ -1773,7 +1766,7 @@ def theil_sen_daily_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
 # is an associative BIGINT prefix — lb_q_scaled = n·(n+2)·Σ t_j in
 # exact integers (units 1e-12 of the classical Q; Q ≈ lb_q_scaled/1e12).
 #
-# Overflow bound (asserted in the staged test): n·max|d|² < 2^63 holds
+# Overflow bound (asserted in tests/test_acf_staged.py): n·max|d|² < 2^63 holds
 # through max daily |deviation| ≈ 6.2e7 dollars at n≈2400 (sf0.1
 # measures 7.5e6 — 8x headroom; a larger corpus moves the unit to k$,
 # one constant).
@@ -1781,8 +1774,8 @@ def theil_sen_daily_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Scale shape: ONE data-sized aggregation (orders → daily cents), then
 # everything lives on the calendar-bounded grid (~2.4k rows): the lag
 # windows are single-partition by construction (same as nelson_aalen),
-# the 1-row stats crossJoin is a broadcast nested loop by design —
-# whitelist entry pre-added at staging time.
+# the 1-row stats crossJoin is a broadcast nested loop by design
+# (whitelisted in tests/test_plans.py).
 # ---------------------------------------------------------------------------
 
 ACF_LJUNG_BOX_ORACLE = """
@@ -1879,9 +1872,8 @@ def acf_ljung_box_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sample autocorrelation of daily revenue (lags 1..7, zero-filled
     calendar grid, floored-integer mean) with the Ljung-Box portmanteau
     accumulated over pre-quantized integer terms — exact int64 moment
-    sums, one correctly-rounded division per lag. See the staging comment
-    for the determinism tier and the overflow bound. STAGED r13 ->
-    REGISTERED r14."""
+    sums, one correctly-rounded division per lag. See the comment above
+    for the determinism tier and the overflow bound."""
     orders = load_table(spark, sf_dir, "orders")
     daily = orders.groupBy(
         F.col("o_orderdate").cast("date").alias("day")

@@ -39,30 +39,52 @@ def _sg_hat(w: int, o: int) -> list[list[float]]:
     return (V @ np.linalg.pinv(V)).tolist()
 
 
-def _sg_dot_sql(H: list[list[float]], row: int, base: str, arr: str) -> str:
+def _sg_dot_sql(H: list[list[float]], row: int, base: str) -> str:
     """Σ_j H[row][j] * arr[base + j] — ``base`` is a 1-based SQL index expr."""
     w = len(H)
     return " + ".join(
-        f"({H[row][j]!r} * {arr}[CAST({base} + {j} AS INT)])" for j in range(w)
+        f"({H[row][j]!r} * arr[CAST({base} + {j} AS INT)])" for j in range(w)
     )
 
 
-def _sg_case_sql(H: list[list[float]], arr: str = "arr") -> str:
+def _sg_case_sql(H: list[list[float]]) -> str:
     """Full savgol-with-edge-refit as one SQL CASE over a collected array
-    (requires columns ``i`` 0-based position and ``n`` series length)."""
+    (requires columns ``arr`` the series, ``i`` 0-based position and ``n``
+    series length)."""
     w, half = len(H), len(H) // 2
     head = " ".join(
-        f"WHEN i = {r} THEN {_sg_dot_sql(H, r, '1', arr)}" for r in range(half)
+        f"WHEN i = {r} THEN {_sg_dot_sql(H, r, '1')}" for r in range(half)
     )
     tail = " ".join(
-        f"WHEN n - i = {n_i} THEN {_sg_dot_sql(H, w - n_i, f'n - {w} + 1', arr)}"
+        f"WHEN n - i = {n_i} THEN {_sg_dot_sql(H, w - n_i, f'n - {w} + 1')}"
         for n_i in range(1, half + 1)
     )
-    interior = _sg_dot_sql(H, half, f"i - {half} + 1", arr)
+    interior = _sg_dot_sql(H, half, f"i - {half} + 1")
     return (
-        f"CASE WHEN n < {w} THEN {arr}[CAST(i + 1 AS INT)] {head} {tail} "
+        f"CASE WHEN n < {w} THEN arr[CAST(i + 1 AS INT)] {head} {tail} "
         f"ELSE {interior} END"
     )
+
+
+def _savgol_exact_oracle(H: list[list[float]]) -> str:
+    """The exact savgol of every user's value series by event_id, with the
+    hat matrix ``H``'s edge refit, over per-user collected arrays."""
+    return f"""
+    WITH per_user AS (
+      SELECT user_id,
+             list(value ORDER BY event_id) AS arr,
+             list(event_id ORDER BY event_id) AS ids
+      FROM events GROUP BY user_id
+    ),
+    idx AS (
+      SELECT user_id, arr, ids, len(arr) AS n,
+             CAST(unnest(range(0, len(arr))) AS BIGINT) AS i
+      FROM per_user
+    )
+    SELECT user_id, ids[CAST(i AS INT) + 1] AS event_id,
+           round({_sg_case_sql(H)}, 6) AS smoothed
+    FROM idx
+    """
 
 
 def _sg_case_col(H: list[list[float]], arr_col, i, n):
@@ -257,27 +279,9 @@ def s8_savgol_fir(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SG_H25 = _sg_hat(25, 3)
-
-
 @register(
     "s8_savgol_exact",
-    oracle=f"""
-    WITH per_user AS (
-      SELECT user_id,
-             list(value ORDER BY event_id) AS arr,
-             list(event_id ORDER BY event_id) AS ids
-      FROM events GROUP BY user_id
-    ),
-    idx AS (
-      SELECT user_id, arr, ids, len(arr) AS n,
-             CAST(unnest(range(0, len(arr))) AS BIGINT) AS i
-      FROM per_user
-    )
-    SELECT user_id, ids[CAST(i AS INT) + 1] AS event_id,
-           round({_sg_case_sql(_SG_H25)}, 6) AS smoothed
-    FROM idx
-    """,
+    oracle=_savgol_exact_oracle(_sg_hat(25, 3)),
     tags=("window", "S8", "udf"),
 )
 def s8_savgol_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -285,7 +289,7 @@ def s8_savgol_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     applyInPandas per user series (operators.rolling). The edge refit is a
     fixed linear map (hat-matrix rows), so the oracle expresses it as a SQL
     CASE over per-key collected arrays (same scheme as s8_savgol_exact_w7);
-    round-6 on both sides absorbs polyfit-vs-projector ULP noise. This entry
+    round(, 6) on both sides absorbs polyfit-vs-projector ULP noise. This entry
     driver-verifies the applyInPandas operator path itself."""
     from talkinghead_datapipeline_spark.operators.rolling import savgol_smooth
 
@@ -613,22 +617,7 @@ def n23_window_mean_edgepad(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "s8_savgol_exact_w7",
-    oracle=f"""
-    WITH per_user AS (
-      SELECT user_id,
-             list(value ORDER BY event_id) AS arr,
-             list(event_id ORDER BY event_id) AS ids
-      FROM events GROUP BY user_id
-    ),
-    idx AS (
-      SELECT user_id, arr, ids, len(arr) AS n,
-             CAST(unnest(range(0, len(arr))) AS BIGINT) AS i
-      FROM per_user
-    )
-    SELECT user_id, ids[CAST(i AS INT) + 1] AS event_id,
-           round({_sg_case_sql(_SG_H)}, 6) AS smoothed
-    FROM idx
-    """,
+    oracle=_savgol_exact_oracle(_SG_H),
     tags=("window", "S8", "savgol", "exact"),
 )
 def s8_savgol_exact_w7(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -3,7 +3,12 @@ incremental layer, and media sources (SURVEY §5 items 3-4)."""
 
 from __future__ import annotations
 
+import ast
+import io
 import json
+import os
+import tokenize
+from collections import defaultdict
 
 import numpy as np
 import pandas as pd
@@ -11,6 +16,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+import talkinghead_datapipeline_spark
 from talkinghead_datapipeline_spark.catalog import normalize_events_ts
 from talkinghead_datapipeline_spark.operators.inference import (
     batched_inference,
@@ -631,3 +637,82 @@ def test_batched_inference_skips_empty_batches(spark, monkeypatch):
     out = list(captured[0](iter([empty, pd.DataFrame({"x": [3]})])))
     assert seen == [1]
     assert [o.to_dict("records") for o in out] == [[{"x": 3, "y": 6, "error": None}]]
+
+
+_MIN_REPEAT = 10  # code lines
+
+
+def _code_lines(path: str) -> list[tuple[int, str]]:
+    """(line number, whitespace-normalized text) of each code line of
+    ``path``: imports, docstrings, comments and blank lines dropped. Lines
+    inside other string literals (SQL text) are code."""
+    with open(path) as f:
+        src = f.read()
+    drop: set[int] = set()
+    for node in ast.walk(ast.parse(src)):
+        if isinstance(node, (ast.Import, ast.ImportFrom)):
+            drop.update(range(node.lineno, node.end_lineno + 1))
+        body = getattr(node, "body", None)
+        if (
+            isinstance(node, (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef))
+            and body
+            and isinstance(body[0], ast.Expr)
+            and isinstance(body[0].value, ast.Constant)
+            and isinstance(body[0].value.value, str)
+        ):
+            drop.update(range(body[0].lineno, body[0].end_lineno + 1))
+    lines = src.splitlines()
+    for tok in tokenize.generate_tokens(io.StringIO(src).readline):
+        if tok.type == tokenize.COMMENT:
+            row, col = tok.start
+            lines[row - 1] = lines[row - 1][:col]
+    return [
+        (no, " ".join(line.split()))
+        for no, line in enumerate(lines, 1)
+        if line.strip() and no not in drop
+    ]
+
+
+def _repeated_blocks(root: str) -> list[str]:
+    """Every maximal run of at least ``_MIN_REPEAT`` identical consecutive
+    code lines that appears at two places under ``root``, as
+    ``"a.py:L == b.py:L (n lines)"``, one entry per pair of places."""
+    files = {}
+    for d, _, names in os.walk(root):
+        for name in sorted(names):
+            if name.endswith(".py"):
+                path = os.path.join(d, name)
+                files[os.path.relpath(path, root)] = _code_lines(path)
+    windows = defaultdict(list)
+    for f, lines in files.items():
+        for i in range(len(lines) - _MIN_REPEAT + 1):
+            windows[tuple(t for _, t in lines[i : i + _MIN_REPEAT])].append((f, i))
+    # a pair of places repeats along a diagonal: (fa, fb, offset) -> starts
+    diagonals = defaultdict(list)
+    for places in windows.values():
+        for k, (fa, ia) in enumerate(places):
+            for fb, ib in places[k + 1 :]:
+                diagonals[(fa, fb, ib - ia)].append(ia)
+    blocks = []
+    for (fa, fb, off), starts in sorted(diagonals.items()):
+        starts.sort()
+        run = [starts[0]]
+        for i in starts[1:] + [None]:
+            if i is not None and i == run[-1] + 1:
+                run.append(i)
+                continue
+            blocks.append(
+                f"{fa}:{files[fa][run[0]][0]} == {fb}:{files[fb][run[0] + off][0]}"
+                f" ({len(run) + _MIN_REPEAT - 1} lines)"
+            )
+            if i is not None:
+                run = [i]
+    return sorted(blocks)
+
+
+def test_no_repeated_code_blocks():
+    """A stage two queries share has one definition (a helper, a CTE
+    fragment) that both call: no run of ``_MIN_REPEAT`` or more code lines
+    appears twice in the package."""
+    root = os.path.dirname(talkinghead_datapipeline_spark.__file__)
+    assert _repeated_blocks(root) == []
