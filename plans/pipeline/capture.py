@@ -96,7 +96,6 @@ def main(repo: str, out: str, sf_dir: str, registry: bool = False) -> None:
             return
 
         from talkinghead_datapipeline_spark import run as run_mod
-        from talkinghead_datapipeline_spark.plans import graph as graph_mod
         from talkinghead_datapipeline_spark.plans import reference_compat
         from workloads import make_clips
 
@@ -106,11 +105,7 @@ def main(repo: str, out: str, sf_dir: str, registry: bool = False) -> None:
         mead = os.path.join(repo, "perfbench", "graphs", "mead_a2en_vid2vid.json")
         write("mead", reference_compat.run_reference_graph(spark, mead, bound).tables, bound)
 
-        graph = builtin_graph(sf_dir, work)
-        if hasattr(graph_mod, "Pipeline"):  # checkouts from before the single builder
-            ctx = graph_mod.Pipeline(graph).build(spark)
-        else:
-            ctx = reference_compat.run_reference_graph(spark, graph)
+        ctx = reference_compat.run_reference_graph(spark, builtin_graph(sf_dir, work))
         write("pipeline_end_to_end", ctx.tables)
     finally:
         spark.stop()

@@ -94,17 +94,14 @@ def pad_bbox(b: Bbox, pad: float) -> Bbox:
     )
 
 
-def to_integer(b: Bbox, preserve_size: bool = True) -> Bbox:
-    """S3 (utils.py:7-24): integer-round corners; preserve w/h exactly when
-    asked; score → round(score·100)."""
+def to_integer(b: Bbox) -> Bbox:
+    """S3 (utils.py:7-24, ``preserve_size=True``): integer-round the top-left
+    corner and the w/h, so w/h are preserved exactly; score →
+    round(score·100)."""
     x1i = round_half_even(b["x1"])
     y1i = round_half_even(b["y1"])
-    if preserve_size:
-        x2i = x1i + round_half_even(b["x2"] - b["x1"])
-        y2i = y1i + round_half_even(b["y2"] - b["y1"])
-    else:
-        x2i = round_half_even(b["x2"])
-        y2i = round_half_even(b["y2"])
+    x2i = x1i + round_half_even(b["x2"] - b["x1"])
+    y2i = y1i + round_half_even(b["y2"] - b["y1"])
     return make_bbox(
         x1=x1i, y1=y1i, x2=x2i, y2=y2i,
         score=round_half_even(b["score"] * 100),

@@ -195,8 +195,9 @@ def simhash32(text: Column) -> Column:
     return bind_once(F.transform(word_tokens(text), lambda t: md5_hash(t, 8)), build)
 
 
-def simhash32_sql(text_sql: str = "text") -> str:
-    """SQL-string twin of :func:`simhash32` — the IDENTICAL expression tree,
+def simhash32_sql() -> str:
+    """SQL-string twin of :func:`simhash32` over the ``text`` column — the
+    IDENTICAL expression tree,
     parsed JVM-side in ONE py4j round-trip instead of the ~250 round-trips
     the Column API pays to assemble 32 HOF vote folds (guide §4: the
     Python↔JVM boundary is a driver cost, and query builders run once per
@@ -214,21 +215,21 @@ def simhash32_sql(text_sql: str = "text") -> str:
         for j in range(SIMHASH_BITS)
     )
     return (
-        f"element_at(transform(array(transform(split(lower({text_sql}), '\\\\s+'), "
+        "element_at(transform(array(transform(split(lower(text), '\\\\s+'), "
         f"t -> {h})), hs -> (CAST(0 AS BIGINT) + {votes})), 1)"
     )
 
 
-def char_ngrams(text: Column, n: int = 3) -> Column:
-    """Distinct character n-grams (the classic near-dup shingling unit)."""
+def char_ngrams(text: Column) -> Column:
+    """Distinct character 3-grams (the classic near-dup shingling unit)."""
 
     def build(low: Column) -> Column:
         return F.when(
-            F.length(low) >= n,
+            F.length(low) >= 3,
             F.array_distinct(
                 F.transform(
-                    F.sequence(F.lit(1), F.length(low) - (n - 1)),
-                    lambda i: F.substr(low, i, F.lit(n)),
+                    F.sequence(F.lit(1), F.length(low) - 2),
+                    lambda i: F.substr(low, i, F.lit(3)),
                 )
             ),
         ).otherwise(F.array().cast("array<string>"))

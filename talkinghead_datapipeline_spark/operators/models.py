@@ -32,20 +32,22 @@ def _seeded_rng(name: str) -> np.random.Generator:
 
 
 class Wav2vecStub:
-    """N6 stand-in: waveform (float array) → (T, dim) features @ feature_fps.
+    """N6 stand-in: 16 kHz waveform (float array) → (T, dim) features @ 50 fps.
 
     Mirrors the contract of dpl/wav2vec/inference.py:64-92: output length
-    ``int(len(wav)/sr * fps - 0.25)``, plus the volume envelope
-    (mean |amp| per floor(sr/fps)-sample block, inference.py:94-106).
+    ``int(len(wav)/SR * FPS - 0.25)``, plus the volume envelope
+    (mean |amp| per floor(SR/FPS)-sample block, inference.py:94-106).
     """
 
-    def __init__(self, dim: int = 8, sr: int = 16000, fps: int = 50):
-        self.dim, self.sr, self.fps = dim, sr, fps
+    SR, FPS = 16000, 50
+
+    def __init__(self, dim: int = 8):
+        self.dim = dim
         self._proj = _seeded_rng("wav2vec_proj").normal(size=(1, dim))
 
     def features(self, wav: np.ndarray) -> np.ndarray:
-        n_frames = max(int(len(wav) / self.sr * self.fps - 0.25), 0)
-        spf = self.sr // self.fps
+        n_frames = max(int(len(wav) / self.SR * self.FPS - 0.25), 0)
+        spf = self.SR // self.FPS
         out = np.zeros((n_frames, self.dim))
         for t in range(n_frames):
             block = wav[t * spf : (t + 1) * spf]
@@ -53,7 +55,7 @@ class Wav2vecStub:
         return out
 
     def volume(self, wav: np.ndarray) -> np.ndarray:
-        spf = self.sr // self.fps
+        spf = self.SR // self.FPS
         n = len(wav) // spf
         return np.abs(wav[: n * spf]).reshape(n, spf).mean(axis=1)
 
@@ -104,13 +106,13 @@ class FlameLbsDecoder:
 
     PARENTS = (-1, 0, 1, 1, 1)
     N_JOINTS = len(PARENTS)
+    N_VERTS, N_SHAPE, N_EXP, N_LMK = 64, 8, 8, 12
 
-    def __init__(self, n_verts: int = 64, n_shape: int = 8, n_exp: int = 8, n_lmk: int = 12):
+    def __init__(self):
         rng = _seeded_rng("flame_lbs_basis")
-        V, J = n_verts, self.N_JOINTS
-        self.n_shape, self.n_exp = n_shape, n_exp
+        V, J, n_lmk = self.N_VERTS, self.N_JOINTS, self.N_LMK
         self.template = rng.normal(size=(V, 3))
-        self.shapedirs = rng.normal(size=(V, 3, n_shape + n_exp)) * 0.1
+        self.shapedirs = rng.normal(size=(V, 3, self.N_SHAPE + self.N_EXP)) * 0.1
         self.posedirs = rng.normal(size=((J - 1) * 9, V * 3)) * 0.01
         jr = rng.random(size=(J, V))
         self.j_regressor = jr / jr.sum(axis=1, keepdims=True)
@@ -168,7 +170,7 @@ class FlameLbsDecoder:
         its rounding, by B (``tests/test_flame_lbs.py`` fuzzes this)."""
         B = shape.shape[0]
         betas = np.concatenate(
-            [shape[:, : self.n_shape], exp[:, : self.n_exp]], axis=1
+            [shape[:, : self.N_SHAPE], exp[:, : self.N_EXP]], axis=1
         )
         full_pose = np.zeros((B, self.N_JOINTS, 3))
         if pose is not None:
@@ -234,7 +236,7 @@ class FlameLbsDecoder:
         rasterizer oracle of n17_render_mask_zbuffer embeds these literals
         per vertex to value-check decode → project → rasterize end-to-end.
         Returns (V, 3, 1 + n_betas)."""
-        nb = self.n_shape + self.n_exp
+        nb = self.N_SHAPE + self.N_EXP
         V, J = self.template.shape[0], self.N_JOINTS
 
         # v_shaped: (V, 3, 1+nb) affine
@@ -339,8 +341,8 @@ class ShapeRenderer:
     world-space verts drive the normals/shading, view-space (post
     ``view_transform``) verts drive the rasterization, and like the
     reference it rasterizes each mesh once and reads every requested
-    channel from that one pass. ``render(vertices, trans_verts, cam,
-    channel)`` is the one-mesh, one-channel wrapper. Channels
+    channel from that one pass. ``render(vertices, trans_verts, channel)``
+    is the one-mesh, one-channel wrapper. Channels
     (``CHANNELS``) — all real rasterizer outputs:
     ``shade`` (SH-lit gray, the default), ``mask`` (coverage 0/255),
     ``normal`` (winner-interpolated normal z, [-1,1] → [0,255]), ``bary``
@@ -516,7 +518,6 @@ class ShapeRenderer:
         self,
         vertices: np.ndarray,
         trans_verts: np.ndarray,
-        cam: np.ndarray | None = None,
         channel: str = "shade",
     ) -> bytes:
         """One mesh, one channel: ``render_batch`` on a batch of one."""

@@ -412,16 +412,14 @@ def corner_incidence(faces: np.ndarray, n_verts: int) -> np.ndarray:
 
 
 def vertex_normals_batch(
-    vertices: np.ndarray, faces: np.ndarray, incidence: np.ndarray | None = None
+    vertices: np.ndarray, faces: np.ndarray, incidence: np.ndarray
 ) -> np.ndarray:
     """Batched ``vertex_normals``: (B, V, 3) in → (B, V, 3) out, one
-    matmul-style contraction instead of per-mesh index_add_ loops. Pass the
-    precomputed ``corner_incidence`` when rendering many meshes of one
-    topology."""
+    matmul-style contraction instead of per-mesh index_add_ loops, through
+    the topology's precomputed ``corner_incidence`` (computed once for
+    many meshes of one topology)."""
     v = np.asarray(vertices, dtype=np.float64)
     f = np.asarray(faces, dtype=np.int64)
-    if incidence is None:
-        incidence = corner_incidence(f, v.shape[1])
     vf = v[:, f]  # (B, F, 3, 3)
     crosses = np.concatenate(
         [

@@ -23,11 +23,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 
-def with_frame_index(df: DataFrame, key: str, order: list[str], out: str = "idx") -> DataFrame:
-    """Assign the 0-based per-key frame index (the reference's implicit array
-    position, SURVEY §1.4 frame-grain mapping)."""
+def with_frame_index(df: DataFrame, key: str, order: list[str]) -> DataFrame:
+    """Assign the 0-based per-key frame index ``idx`` (the reference's
+    implicit array position, SURVEY §1.4 frame-grain mapping)."""
     w = W.partitionBy(key).orderBy(*order)
-    return df.withColumn(out, (F.row_number().over(w) - 1).cast("bigint"))
+    return df.withColumn("idx", (F.row_number().over(w) - 1).cast("bigint"))
 
 
 def resample_linear(
@@ -36,10 +36,10 @@ def resample_linear(
     value: str,
     num: Column,
     src_fps: float,
-    idx: str = "idx",
 ) -> DataFrame:
-    """Resample each key's series ``value`` (rows indexed 0..L-1 by ``idx``)
-    onto ``num`` target frames (a per-key Column), reference grid semantics.
+    """Resample each key's series ``value`` (rows indexed 0..L-1 by ``idx``,
+    as ``with_frame_index`` numbers them) onto ``num`` target frames (a
+    per-key Column), reference grid semantics.
 
     Returns one row per (key, tgt_idx) with column ``resampled``.
     Keys with L < 2 are dropped (the reference errors on empty audio,
@@ -80,13 +80,13 @@ def resample_linear(
     )
 
     # Lead-extend the source so each segment row carries (y_i, y_{i+1}).
-    wlead = W.partitionBy(key).orderBy(idx)
+    wlead = W.partitionBy(key).orderBy("idx")
     segs = src.select(
         key,
-        F.col(idx).alias("_seg_idx"),
+        F.col("idx").alias("_seg_idx"),
         F.col(value).alias("_y0"),
         F.lead(value, 1).over(wlead).alias("_y1"),
-        (x0 + F.col(idx) * dx).alias("_x0"),
+        (x0 + F.col("idx") * dx).alias("_x0"),
         dx.alias("_dx"),
     ).filter(F.col("_y1").isNotNull())
 

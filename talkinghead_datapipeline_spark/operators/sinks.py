@@ -34,7 +34,6 @@ def write_partitioned(
     df: DataFrame,
     path: str,
     partition_by: list[str],
-    mode: str = "overwrite",
     fmt: str = "parquet",
 ) -> None:
     """Partitioned columnar sink — partition values become directory keys,
@@ -43,25 +42,16 @@ def write_partitioned(
     consumers); layout and pruning semantics are identical."""
     if fmt not in COLUMNAR_FORMATS:
         raise ValueError(f"fmt must be one of {COLUMNAR_FORMATS}, got {fmt!r}")
-    df.write.mode(mode).partitionBy(*partition_by).format(fmt).save(path)
+    df.write.mode("overwrite").partitionBy(*partition_by).format(fmt).save(path)
 
 
-def write_bucketed(
-    df: DataFrame,
-    table_name: str,
-    bucket_cols: list[str],
-    n_buckets: int,
-    sort_cols: list[str] | None = None,
-    mode: str = "overwrite",
-) -> None:
+def write_bucketed(df: DataFrame, table_name: str, bucket_cols: list[str], n_buckets: int) -> None:
     """Bucketed managed table: rows are hash-distributed into ``n_buckets``
     files per partition by ``bucket_cols``. Joins/aggregations between
     tables bucketed the same way need no shuffle — the E7-style memoization
     anti-join and the repeated clip-key joins (N18/N21) become exchange-free.
     """
-    writer = df.write.mode(mode).bucketBy(n_buckets, *bucket_cols)
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
+    writer = df.write.mode("overwrite").bucketBy(n_buckets, *bucket_cols)
     writer.format("parquet").saveAsTable(table_name)
 
 
@@ -109,20 +99,15 @@ def write_hdf5_per_key(*_args, **_kwargs) -> None:
     raise NotImplementedError("h5py not available in this runtime; use parquet sinks")
 
 
-def write_image_folders(
-    df: DataFrame,
-    out_dir: str,
-    key_col: str = "clip_name",
-    frame_col: str = "frame_idx",
-    payload_col: str = "image",
-) -> DataFrame:
+def write_image_folders(df: DataFrame, out_dir: str) -> DataFrame:
     """The reference's frame-folder sink ({out}/{clip}/%06d.jpg —
     dpl/processor/datatype.py:42-57, written by N2/N13/N17): binary frame
-    rows land as files, one directory per clip, written inside executors
-    via foreachPartition semantics (applyInPandas per clip so each clip's
-    frames are colocated in one task). Pure byte pass-through — no codec
-    needed; whatever encoding the payload column carries is what lands.
-    Returns a (key, n_frames, dir) manifest.
+    rows ``(clip_name, frame_idx, image)`` land as files, one directory per
+    clip, written inside executors via foreachPartition semantics
+    (applyInPandas per clip so each clip's frames are colocated in one
+    task). Pure byte pass-through — no codec needed; whatever encoding the
+    payload column carries is what lands. Returns a (key, n_frames, dir)
+    manifest.
     """
     import pandas as pd
 
@@ -132,16 +117,16 @@ def write_image_folders(
     os.makedirs(out_dir, exist_ok=True)
 
     def write_clip(pdf: pd.DataFrame) -> pd.DataFrame:
-        key = str(pdf[key_col].iloc[0])
+        key = str(pdf["clip_name"].iloc[0])
         clip_dir = os.path.join(out_dir, key)
         os.makedirs(clip_dir, exist_ok=True)
-        for idx, payload in zip(pdf[frame_col], pdf[payload_col]):
+        for idx, payload in zip(pdf["frame_idx"], pdf["image"]):
             with open(os.path.join(clip_dir, f"{int(idx):06d}.jpg"), "wb") as f:
                 f.write(bytes(payload))
         return pd.DataFrame(
             {"key": [key], "n_frames": [len(pdf)], "dir": [clip_dir]}
         )
 
-    return df.groupBy(key_col).applyInPandas(
+    return df.groupBy("clip_name").applyInPandas(
         write_clip, schema="key string, n_frames bigint, dir string"
     )

@@ -11,7 +11,7 @@ skew, but two patterns still need explicit salting at 100 TB:
   across tasks, then a final aggregate merges the partials. Correct for any
   algebraic aggregate (sum/count/min/max — avg as sum+count).
 
-Salt values are derived from ``rand`` seeded per call — the salt only
+Salt values are derived from ``rand(42)`` — the salt only
 routes rows, it never appears in results, so determinism of outputs is
 preserved by construction.
 """
@@ -22,11 +22,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def with_salt(df: DataFrame, n_salts: int, seed: int = 42) -> DataFrame:
+def with_salt(df: DataFrame, n_salts: int) -> DataFrame:
     """Add a ``_salt`` column in [0, n_salts) routing each row uniformly."""
-    return df.withColumn(
-        "_salt", F.floor(F.rand(seed) * n_salts).cast("int")
-    )
+    return df.withColumn("_salt", F.floor(F.rand(42) * n_salts).cast("int"))
 
 
 def replicate_with_salt(df: DataFrame, n_salts: int) -> DataFrame:
@@ -43,12 +41,11 @@ def salted_join(
     on: list[str],
     n_salts: int = 8,
     how: str = "inner",
-    seed: int = 42,
 ) -> DataFrame:
     """Equi-join with the skewed side salted and ``other`` replicated
     ``n_salts``×. Result is identical to ``skewed.join(other, on, how)``;
     the hot keys' rows are spread over ``n_salts`` shuffle partitions."""
-    left = with_salt(skewed, n_salts, seed)
+    left = with_salt(skewed, n_salts)
     right = replicate_with_salt(other, n_salts)
     return left.join(right, [*on, "_salt"], how).drop("_salt")
 
@@ -58,14 +55,13 @@ def two_phase_sum(
     keys: list[str],
     sum_cols: dict[str, str],
     n_salts: int = 8,
-    seed: int = 42,
 ) -> DataFrame:
     """Skew-safe grouped sum: groupBy(keys + salt) partial-sum, then
     groupBy(keys) merge. ``sum_cols`` maps input column → output alias.
     (Spark's own partial aggregation covers this when maps fit in memory;
     explicit salting bounds the FINAL stage's per-key reduce fan-in, which
     partial agg cannot when one key dominates the whole dataset.)"""
-    salted = with_salt(df, n_salts, seed)
+    salted = with_salt(df, n_salts)
     partial = salted.groupBy(*keys, "_salt").agg(
         *[F.sum(src).alias(f"_p_{alias}") for src, alias in sum_cols.items()]
     )

@@ -38,8 +38,6 @@ from pyspark.sql import functions as F
 from talkinghead_datapipeline_spark.plans.graph import NODE_REGISTRY, GraphContext, node
 
 FRAME_BYTES = 256  # deterministic fake codec: one "frame" per 256 video bytes
-SAMPLE_RATE = 16000
-FEATURE_FPS = 50
 
 
 def load_reference_graph(graph: str | list[dict[str, Any]]) -> list[dict[str, Any]]:
@@ -197,7 +195,7 @@ def _wav2vec(ctx: GraphContext, p: dict[str, Any]) -> None:
     def factory():
         from talkinghead_datapipeline_spark.operators.models import Wav2vecStub
 
-        return Wav2vecStub(sr=SAMPLE_RATE, fps=FEATURE_FPS)
+        return Wav2vecStub()
 
     _infer(
         ctx,
@@ -585,10 +583,12 @@ def _resample_np(y, num: int):
     extrapolating linearly at the edges. Pure numpy, exact formula."""
     import numpy as np
 
+    from talkinghead_datapipeline_spark.operators.models import Wav2vecStub
+
     L = y.shape[0]
     if L == num:
         return y
-    src_fps = float(FEATURE_FPS)
+    src_fps = float(Wav2vecStub.FPS)
     duration = L / src_fps
     x = np.linspace(1 / (2 * src_fps), duration, L)
     tgt_fps = num / duration

@@ -50,7 +50,7 @@ from __future__ import annotations
 
 import importlib
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -153,23 +153,19 @@ class QuerySpec:
     name: str
     spark: SparkQuery
     oracle: str | None  # DuckDB SQL; None → driver runs rows-only check
-    doc: str = ""
-    tags: tuple[str, ...] = field(default_factory=tuple)
 
 
 _REGISTRY: dict[str, QuerySpec] = {}
 _LOADED = False
 
 
-def register(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
+def register(name: str, oracle: str | None = None):
     """Decorator: register a Spark query with its oracle SQL."""
 
     def deco(fn: SparkQuery) -> SparkQuery:
         if name in _REGISTRY:
             raise ValueError(f"duplicate query name: {name}")
-        _REGISTRY[name] = QuerySpec(
-            name=name, spark=fn, oracle=oracle, doc=fn.__doc__ or "", tags=tags
-        )
+        _REGISTRY[name] = QuerySpec(name=name, spark=fn, oracle=oracle)
         return fn
 
     return deco

@@ -53,7 +53,6 @@ _D_SQL_EYE = (
     JOIN emb_feats e ON e.vec_id = d.doc_id
     JOIN audio_feats a ON a.user_id = d.doc_id
     """,
-    tags=("assembly", "N18", "join"),
 )
 def a2en_feature_assembly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """N18's dataset assembly: three modality tables (text stats, geometry
@@ -135,7 +134,6 @@ def a2en_feature_assembly(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN region sr ON sn.n_regionkey = sr.r_regionkey
     WHERE l_shipdate >= TIMESTAMP '2001-06-01 00:00:00'
     """,
-    tags=("assembly", "N21", "join"),
 )
 def wide_source_assembly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """N21's 12-input source-sequence assembly as a 9-relation join: one

@@ -52,7 +52,7 @@ _RFM_ORACLE = """
 """
 
 
-@register("rfm_segments", oracle=_RFM_ORACLE, tags=("behavior", "window", "analytics"))
+@register("rfm_segments", oracle=_RFM_ORACLE)
 def rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RFM user segmentation: per purchasing user, recency (last purchase
     time), frequency (purchase count) and monetary (summed value) are
@@ -129,11 +129,7 @@ _ZSCORE_ORACLE = f"""
 """
 
 
-@register(
-    "trailing_zscore_anomalies",
-    oracle=_ZSCORE_ORACLE,
-    tags=("behavior", "window", "timeseries", "quality"),
-)
+@register("trailing_zscore_anomalies", oracle=_ZSCORE_ORACLE)
 def trailing_zscore_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user trailing z-score anomaly flags: each event's value scored
     against the mean/std of that user's previous 10 values (full frames
@@ -226,7 +222,7 @@ _AB_ORACLE = f"""
 """
 
 
-@register("ab_test_lift", oracle=_AB_ORACLE, tags=("behavior", "analytics", "stats"))
+@register("ab_test_lift", oracle=_AB_ORACLE)
 def ab_test_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-proportion z-test: users split into control/treatment by
     user_id parity, conversion = "heavy buyer" (>= 14 purchase events —
@@ -316,11 +312,7 @@ _KNN_ORACLE = f"""
 """
 
 
-@register(
-    "knn_mutual_edges",
-    oracle=_KNN_ORACLE,
-    tags=("similarity", "graph", "curation"),
-)
+@register("knn_mutual_edges", oracle=_KNN_ORACLE)
 def knn_mutual_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mutual top-5 cosine kNN graph within each embedding cluster:
     an edge (a, b) survives iff b is in a's top-5 neighbors AND a is in
@@ -435,11 +427,7 @@ _SEQ3_ORACLE = f"""
 """
 
 
-@register(
-    "frequent_event_trigrams",
-    oracle=_SEQ3_ORACLE,
-    tags=("behavior", "window", "analytics", "sequence"),
-)
+@register("frequent_event_trigrams", oracle=_SEQ3_ORACLE)
 def frequent_event_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-15 most frequent per-user event-type 3-grams with corpus
     support — second-order sequential pattern mining (what the transition
@@ -514,11 +502,7 @@ _ROBUST_ORACLE = f"""
 """
 
 
-@register(
-    "rolling_mad_anomalies",
-    oracle=_ROBUST_ORACLE,
-    tags=("behavior", "window", "quality", "robust"),
-)
+@register("rolling_mad_anomalies", oracle=_ROBUST_ORACLE)
 def rolling_mad_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Robust rolling anomalies: each event scored against the MEDIAN and
     MAD of its user's previous 10 values (|robust z| >= 3 with z =
@@ -651,11 +635,7 @@ _CUM_ORACLE = """
 """
 
 
-@register(
-    "cumulative_unique_users",
-    oracle=_CUM_ORACLE,
-    tags=("behavior", "window", "analytics"),
-)
+@register("cumulative_unique_users", oracle=_CUM_ORACLE)
 def cumulative_unique_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily new-user counts and the cumulative distinct-user curve: each
     user attributes to their FIRST active day (one user-keyed min), the
@@ -705,11 +685,7 @@ _CHURN_ORACLE = f"""
 """
 
 
-@register(
-    "churn_flags_by_cohort",
-    oracle=_CHURN_ORACLE,
-    tags=("behavior", "analytics", "agg"),
-)
+@register("churn_flags_by_cohort", oracle=_CHURN_ORACLE)
 def churn_flags_by_cohort(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Inactivity churn per parity cohort: a user is churned when their
     last event predates the corpus clock (max ts) by more than 7 days —
@@ -763,11 +739,7 @@ _DIURNAL_ORACLE = """
 """
 
 
-@register(
-    "diurnal_activity_profile",
-    oracle=_DIURNAL_ORACLE,
-    tags=("behavior", "timeseries", "analytics"),
-)
+@register("diurnal_activity_profile", oracle=_DIURNAL_ORACLE)
 def diurnal_activity_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hour-of-day activity profile: per hour, event count, summed value,
     corpus share, and busy-rank (count tiebroken by hour) — the diurnal
@@ -924,11 +896,7 @@ FROM steps ORDER BY t_hours
 """
 
 
-@register(
-    "nelson_aalen_conversion_hazard",
-    oracle=NELSON_AALEN_ORACLE,
-    tags=("behavior", "survival", "hazard"),
-)
+@register("nelson_aalen_conversion_hazard", oracle=NELSON_AALEN_ORACLE)
 def nelson_aalen_conversion_hazard(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1039,11 +1007,7 @@ FROM u GROUP BY channel
 """
 
 
-@register(
-    "attribution_first_last_touch",
-    oracle=ATTRIBUTION_ORACLE,
-    tags=("behavior", "attribution", "sessionization"),
-)
+@register("attribution_first_last_touch", oracle=ATTRIBUTION_ORACLE)
 def attribution_first_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sessionized first/last-touch revenue attribution per channel: every
     purchase credits its exact cent value to the first and the last
@@ -1206,11 +1170,7 @@ FROM d
 """
 
 
-@register(
-    "cuped_adjusted_lift",
-    oracle=CUPED_ORACLE,
-    tags=("behavior", "abtest", "cuped", "variance-reduction"),
-)
+@register("cuped_adjusted_lift", oracle=CUPED_ORACLE)
 def cuped_adjusted_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUPED variance-reduced A/B lift: per-user pre-period purchase cents
     (covariate X) adjust the experiment-period cents (metric Y) via the
@@ -1366,11 +1326,7 @@ LIMIT 20
 """
 
 
-@register(
-    "basket_association_rules",
-    oracle=BASKET_RULES_ORACLE,
-    tags=("behavior", "market-basket", "association-rules"),
-)
+@register("basket_association_rules", oracle=BASKET_RULES_ORACLE)
 def basket_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Market-basket association rules at brand grain: for co-purchased
     brand pairs past a 0.1% support gate, the exact integer support,
@@ -1496,11 +1452,7 @@ ORDER BY d.decile
 """
 
 
-@register(
-    "gini_revenue_concentration",
-    oracle=GINI_CONCENTRATION_ORACLE,
-    tags=("behavior", "concentration", "gini", "lorenz"),
-)
+@register("gini_revenue_concentration", oracle=GINI_CONCENTRATION_ORACLE)
 def gini_revenue_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Customer-revenue concentration: the Lorenz decile table (exact
     dollar mass, floor-ppm share and cumulative share per rank decile) and
@@ -1615,11 +1567,7 @@ FROM km ORDER BY t_hours
 """
 
 
-@register(
-    "kaplan_meier_survival",
-    oracle=KAPLAN_MEIER_ORACLE,
-    tags=("behavior", "survival", "product-limit"),
-)
+@register("kaplan_meier_survival", oracle=KAPLAN_MEIER_ORACLE)
 def kaplan_meier_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kaplan-Meier product-limit survival of time to first purchase: per
     event step (hour grain), the risk set, the events, and the survival
@@ -1741,11 +1689,7 @@ FROM agg
 """
 
 
-@register(
-    "logrank_segment_survival",
-    oracle=LOGRANK_ORACLE,
-    tags=("behavior", "survival", "logrank", "two-sample"),
-)
+@register("logrank_segment_survival", oracle=LOGRANK_ORACLE)
 def logrank_segment_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Log-rank test of time-to-first-purchase between the two
     c_mktsegment cohorts: per pooled event step the group risk sets,

@@ -48,11 +48,7 @@ _TEMP_ORACLE = f"""
 """
 
 
-@register(
-    "temperature_mixture_weights",
-    oracle=_TEMP_ORACLE,
-    tags=("sampling", "mixture", "curation"),
-)
+@register("temperature_mixture_weights", oracle=_TEMP_ORACLE)
 def temperature_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temperature-scaled language-mixture weights: sampling share per
     language p_l ∝ n_l^0.7 (the mT5/XLM-R recipe — alpha < 1 flattens the
@@ -113,11 +109,7 @@ _CARD_ORACLE = """
 """
 
 
-@register(
-    "dataset_card_stats",
-    oracle=_CARD_ORACLE,
-    tags=("profiling", "curation", "analytics"),
-)
+@register("dataset_card_stats", oracle=_CARD_ORACLE)
 def dataset_card_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source dataset card: doc/token counts, language spread, mean
     length, and the exact-duplicate rate (1 − distinct digests / docs) —
@@ -185,11 +177,7 @@ _OVERLAP_ORACLE = """
 """
 
 
-@register(
-    "source_overlap_matrix",
-    oracle=_OVERLAP_ORACLE,
-    tags=("dedup", "profiling", "curation"),
-)
+@register("source_overlap_matrix", oracle=_OVERLAP_ORACLE)
 def source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairwise word-trigram Jaccard between SOURCES — the provenance-level
     overlap audit (which subsets duplicate each other) run before mixing,
@@ -285,11 +273,7 @@ _MARGIN_ORACLE = f"""
 """
 
 
-@register(
-    "nb_lang_margin",
-    oracle=_MARGIN_ORACLE,
-    tags=("text", "classify", "quality"),
-)
+@register("nb_lang_margin", oracle=_MARGIN_ORACLE)
 def nb_lang_margin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Confidence-margin readout over the NB score matrix: per document,
     the argmax class, the top1−top2 score margin (the confidence signal a
@@ -366,11 +350,7 @@ _KL_ORACLE = """
 """
 
 
-@register(
-    "unigram_kl_per_source",
-    oracle=_KL_ORACLE,
-    tags=("profiling", "curation", "text"),
-)
+@register("unigram_kl_per_source", oracle=_KL_ORACLE)
 def unigram_kl_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KL(P_source || P_corpus) over unigram distributions — the
     domain-shift diagnostic behind domain-reweighting recipes (DoReMi-

@@ -64,7 +64,6 @@ _SEM_TAU = 0.2
     LEFT JOIN pruned p ON p.label = e.label AND p.vec_id = e.vec_id
     GROUP BY e.label
     """,
-    tags=("dedup", "similarity", "curation"),
 )
 def semdedup_prune_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup pruning summary: within each cluster (the fixture's `label`
@@ -83,14 +82,10 @@ def semdedup_prune_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     # Norms are precomputed per VECTOR before the pair join: inline
     # cosine_expr(ea, eb) evaluates three 64-dim folds per PAIR (dot + both
-    # norms) where one suffices. Controlled A/B at sf0.1 (one session,
-    # variants interleaved, median of 5): 1.89s inline -> 1.13s
-    # precomputed (1.67x) — less than the naive 3x because the
-    # cluster-keyed self-join + pruned-id distinct carry a fixed share.
-    # (Fresh-session single runs scatter 1.2-1.5s; the interleaved A/B is
-    # the attributable number.) The
-    # per-pair dot still folds sequentially in DOUBLE and each norm is
-    # the same fold it always was, so the division reproduces cosine_expr
+    # norms) where one suffices (1.67x at sf0.1; the cluster-keyed
+    # self-join and the pruned-id distinct carry a fixed share). The
+    # per-pair dot still folds sequentially in DOUBLE and each norm is the
+    # same fold cosine_expr runs, so the division reproduces cosine_expr
     # bit-for-bit and the oracle (which inlines the norms per pair)
     # stays hash-identical.
     # pushdown_barrier: the cosine threshold's inferred isnotnull(nrm)
@@ -181,7 +176,7 @@ def _rrf_oracle() -> str:
     """
 
 
-@register("rrf_hybrid_topk", oracle=_rrf_oracle(), tags=("text", "retrieval", "curation"))
+@register("rrf_hybrid_topk", oracle=_rrf_oracle())
 def rrf_hybrid_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hybrid retrieval via reciprocal-rank fusion: top-10 docs by
     RRF(d) = sum over rankers of 1/(60 + rank_i(d)), each ranker cut at its
@@ -354,7 +349,6 @@ def _dsir_logweights(docs: DataFrame, text: str, *keys: str) -> DataFrame:
       SELECT doc_id, lang, {_DSIR_HASH_SQL} AS bucket FROM toks
     ),
     {_dsir_sql("f.doc_id")}""",
-    tags=("text", "sampling", "curation"),
 )
 def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSIR importance log-weight per document: sum over the doc's hashed
@@ -424,7 +418,6 @@ _GOPHER_STOPS_SQL = ", ".join(f"'{w}'" for w in _GOPHER_STOPS)
            END AS first_fail_rule
     FROM sig
     """,
-    tags=("text", "quality", "curation"),
 )
 def gopher_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher rule-battery keep/drop decision with first-failing-rule
@@ -539,7 +532,6 @@ _ZIPF_TOP = 100
            END AS r2
     FROM sums
     """,
-    tags=("text", "analytics", "curation"),
 )
 def zipf_slope_per_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-language Zipf fit: token counts ranked within language, OLS of
@@ -636,7 +628,6 @@ _HARDNEG_K = 5
            CAST(rnk AS BIGINT) AS rnk
     FROM ranked WHERE rnk <= {_HARDNEG_K}
     """,
-    tags=("similarity", "sampling", "curation"),
 )
 def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-5 hard negatives per class anchor: the anchor is each label's
@@ -741,7 +732,6 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM bucketed
     GROUP BY lang, bucket
     """,
-    tags=("text", "quality", "curation"),
 )
 def ccnet_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet-style head/middle/tail tiers: per language, documents are
@@ -836,11 +826,7 @@ def _curation_pipeline_oracle() -> str:
     {_dsir_sql("f.doc_id, f.lang")}"""
 
 
-@register(
-    "llm_curation_pipeline",
-    oracle=_curation_pipeline_oracle(),
-    tags=("text", "curation", "pipeline"),
-)
+@register("llm_curation_pipeline", oracle=_curation_pipeline_oracle())
 def llm_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The composed curation pass a pretraining corpus actually runs, as a
     single lazy plan: Gopher rule gate, PII sentinel redaction, exact

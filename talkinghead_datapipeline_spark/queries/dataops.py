@@ -64,11 +64,7 @@ _PSI_ORACLE = f"""
 """
 
 
-@register(
-    "psi_snapshot_drift",
-    oracle=_PSI_ORACLE,
-    tags=("profiling", "versioning", "drift"),
-)
+@register("psi_snapshot_drift", oracle=_PSI_ORACLE)
 def psi_snapshot_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Population stability index between the orders snapshot and its
     derived v2 (snapshot_diff_summary's version rules): bin both versions
@@ -200,11 +196,7 @@ _FK_ORACLE = f"""
 """
 
 
-@register(
-    "fk_integrity_audit",
-    oracle=_FK_ORACLE,
-    tags=("integrity", "join", "audit"),
-)
+@register("fk_integrity_audit", oracle=_FK_ORACLE)
 def fk_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Referential-integrity audit: orphaned-child counts per FK relation.
     lineitem is checked against the DERIVED orders v2 (1/20 of parents
@@ -285,11 +277,7 @@ _ASOF_FWD_ORACLE = f"""
 """
 
 
-@register(
-    "asof_next_view_tolerance",
-    oracle=_ASOF_FWD_ORACLE,
-    tags=("timeseries", "window", "asof"),
-)
+@register("asof_next_view_tolerance", oracle=_ASOF_FWD_ORACLE)
 def asof_next_view_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Forward as-of join with tolerance (pd.merge_asof
     direction='forward', tolerance=30min): each purchase picks up the NEXT
@@ -357,11 +345,7 @@ _TRANS_ORACLE = """
 """
 
 
-@register(
-    "event_transition_matrix",
-    oracle=_TRANS_ORACLE,
-    tags=("behavior", "window", "analytics"),
-)
+@register("event_transition_matrix", oracle=_TRANS_ORACLE)
 def event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-order Markov transition matrix over event types: per-user
     lead() pairs, global (current → next) counts, and the conditional
@@ -440,11 +424,7 @@ ORDER BY k
 """
 
 
-@register(
-    "k_anonymity_audit",
-    oracle=K_ANONYMITY_ORACLE,
-    tags=("dataops", "privacy", "k-anonymity", "governance"),
-)
+@register("k_anonymity_audit", oracle=K_ANONYMITY_ORACLE)
 def k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-anonymity audit of the (lang, source, n_chars // 100)
     quasi-identifier over documents: per policy threshold k, the count of

@@ -53,7 +53,6 @@ _SPLIT_H_SQL = md5_hash_sql("'split|' || CAST(doc_id AS VARCHAR)", 8)
                 ELSE 'test' END AS split
     FROM documents
     """,
-    tags=("dataprep", "split"),
 )
 def split_train_val_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hash-bucket train/val/test assignment — the canonical leak-proof
@@ -106,7 +105,6 @@ _STRAT_ORACLE = f"""
     )
     SELECT doc_id, lang FROM ranked WHERE rn <= ceil(0.1 * n_lang)
     """,
-    tags=("dataprep", "sample", "window"),
 )
 def stratified_sample_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact 10% per-language sample (ceil, so tiny strata keep ≥1 row).
@@ -130,11 +128,7 @@ def stratified_sample_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "stratified_sample_scale_path",
-    oracle=_STRAT_ORACLE,
-    tags=("dataprep", "sample", "selection"),
-)
+@register("stratified_sample_scale_path", oracle=_STRAT_ORACLE)
 def stratified_sample_scale_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SAME exact 10%-per-language sample computed by distributed
     selection (operators.sampling.stratified_exact_sample): a per-(stratum,
@@ -180,11 +174,7 @@ _BALANCE_ORACLE = f"""
 """
 
 
-@register(
-    "class_balanced_downsample",
-    oracle=_BALANCE_ORACLE,
-    tags=("dataprep", "sample", "balance"),
-)
+@register("class_balanced_downsample", oracle=_BALANCE_ORACLE)
 def class_balanced_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Downsample every class to the minority-class size (hash-ranked, so
     the kept subset is deterministic). The cap is a 1-row aggregate
@@ -207,11 +197,7 @@ def class_balanced_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "class_balanced_scale_path",
-    oracle=_BALANCE_ORACLE,
-    tags=("dataprep", "sample", "balance", "selection"),
-)
+@register("class_balanced_scale_path", oracle=_BALANCE_ORACLE)
 def class_balanced_scale_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SAME minority-cap downsample via distributed selection
     (operators.sampling): label cardinality is fixed, so the window-rank
@@ -250,7 +236,6 @@ def class_balanced_scale_path(spark: SparkSession, sf_dir: str) -> DataFrame:
           < CAST(n_chars AS DOUBLE)
             / (SELECT max(n_chars) FROM documents)
     """,
-    tags=("dataprep", "sample"),
 )
 def weighted_sample_by_length(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Length-proportional Bernoulli sample: keep a document iff its
@@ -300,7 +285,6 @@ _PACK_RANK_SQL = md5_hash_sql("'pack|' || CAST(doc_id AS VARCHAR)", 8)
              / {_PACK_BUDGET}) AS BIGINT) AS bin_id
     FROM t
     """,
-    tags=("dataprep", "packing", "window"),
 )
 def pack_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Concat-and-cut sequence packing: documents are laid end-to-end in
@@ -367,7 +351,6 @@ def _profile_branch_sql(col: str, is_num: bool) -> str:
         [_profile_branch_sql(c, True) for c in _NUM_COLS]
         + [_profile_branch_sql(c, False) for c in _STR_COLS]
     ),
-    tags=("dataprep", "profile"),
 )
 def table_profile_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-column profile (rows, nulls, distinct, min/max) of `orders` in
@@ -444,11 +427,7 @@ _CHECKSUM_ORACLE = "\nUNION ALL\n".join(
 )
 
 
-@register(
-    "table_integrity_checksums",
-    oracle=_CHECKSUM_ORACLE,
-    tags=("integrity", "agg"),
-)
+@register("table_integrity_checksums", oracle=_CHECKSUM_ORACLE)
 def table_integrity_checksums(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Content checksums of three catalog tables: row count + XOR-fold of
     a 60-bit md5-prefix hash over the key columns (integers and enums
@@ -497,7 +476,6 @@ def table_integrity_checksums(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS total
     FROM ranked GROUP BY decile
     """,
-    tags=("profiling", "window", "histogram"),
 )
 def equi_depth_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Equi-depth decile histogram of order values — the feature-binning /
@@ -545,7 +523,6 @@ def equi_depth_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY es_key DESC, doc_id ASC
     LIMIT 50
     """,
-    tags=("sampling", "weighted", "topk"),
 )
 def weighted_topk_sample_es(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-size weighted sampling WITHOUT replacement via the
@@ -632,7 +609,7 @@ _MIX_ORACLE = f"""
 """
 
 
-@register("source_mixture_manifest", oracle=_MIX_ORACLE, tags=("sampling", "mixture"))
+@register("source_mixture_manifest", oracle=_MIX_ORACLE)
 def source_mixture_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mixture sampling manifest: fixed target weights per language and a
     token budget of half the corpus → per-language rate = min(1,
@@ -723,7 +700,6 @@ def source_mixture_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lineitem l JOIN bounds b ON l.l_returnflag = b.l_returnflag
     GROUP BY 1
     """,
-    tags=("profiling", "cleaning", "percentile"),
 )
 def winsorized_price_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-flag winsorized (p01/p99-clipped) price stats.
@@ -881,7 +857,6 @@ _AQ_ACCURACY = 10_000  # rank error <= n / accuracy
       )}
     ) AS t(p, exact_value, within_bounds)
     """,
-    tags=("profiling", "sketch", "percentile"),
 )
 def approx_quantiles_certified(spark: SparkSession, sf_dir: str) -> DataFrame:
     """percentile_approx(accuracy=10000) certified against exact ranks.
@@ -975,7 +950,6 @@ _GSPLIT_H_SQL = md5_hash_sql("'gsplit|' || CAST(source AS VARCHAR)", 8)
     FROM assigned
     GROUP BY split
     """,
-    tags=("dataprep", "split", "leakage"),
 )
 def group_split_no_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Group-wise 80/10/10 split keyed on the SOURCE (all of a source's
@@ -1056,11 +1030,7 @@ FROM lineitem GROUP BY 1
 _WS_ACCURACY = 10_000
 
 
-@register(
-    "winsorized_bounds_sketch_certified",
-    oracle=WINSORIZED_SKETCH_ORACLE,
-    tags=("dataprep", "percentile", "sketch", "certified"),
-)
+@register("winsorized_bounds_sketch_certified", oracle=WINSORIZED_SKETCH_ORACLE)
 def winsorized_bounds_sketch_certified(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PER-GROUP certified sketch bounds — the at-scale half of the
     winsorization adjudication, closed.

@@ -77,7 +77,6 @@ def _band_sql(b: int) -> str:
     SELECT doc_id, {", ".join(f"mh{k}" for k in range(D.N_PERM))}
     FROM (SELECT doc_id, {_SIG_COLS_SQL} FROM sh WHERE len(grams) >= 1)
     """,
-    tags=("dedup", "minhash"),
 )
 def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document K=8 MinHash signature over 3-word shingles — single scan,
@@ -132,7 +131,7 @@ _MINHASH_PAIRS_ORACLE = f"""
 """
 
 
-@register("minhash_lsh_near_dups", oracle=_MINHASH_PAIRS_ORACLE, tags=("dedup", "minhash", "join"))
+@register("minhash_lsh_near_dups", oracle=_MINHASH_PAIRS_ORACLE)
 def minhash_lsh_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate pairs: LSH band buckets (one shuffle, on band keys) →
     exact Jaccard verification ≥ 0.2 on candidates only. Mega-buckets
@@ -188,11 +187,7 @@ _MINHASH_EST_ORACLE = f"""
 """
 
 
-@register(
-    "minhash_estimate_error",
-    oracle=_MINHASH_EST_ORACLE,
-    tags=("dedup", "minhash", "sketch-certified"),
-)
+@register("minhash_estimate_error", oracle=_MINHASH_EST_ORACLE)
 def minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-vs-exact Jaccard certification over the LSH candidate pairs:
     per pair, the K=8 signature-agreement estimate, the exact
@@ -303,7 +298,7 @@ _SIMHASH_ORACLE = f"""
 """
 
 
-@register("simhash_fingerprint", oracle=_SIMHASH_ORACLE, tags=("dedup", "simhash"))
+@register("simhash_fingerprint", oracle=_SIMHASH_ORACLE)
 def simhash_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """32-bit SimHash per document (bit-vote fold over token hashes) —
     near-dup candidates at scale bucket on fingerprint bands; single scan."""
@@ -315,7 +310,7 @@ def simhash_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
         # SQL twin of D.simhash32: identical resolved tree (pinned by
         # tests/test_simhash_sql_parity.py), one py4j round-trip instead of
         # ~250 per build.
-        F.expr(D.simhash32_sql("text")).alias("simhash"),
+        F.expr(D.simhash32_sql()).alias("simhash"),
         F.size(D.word_tokens(F.col("text"))).cast("bigint").alias("n_tokens"),
     )
 
@@ -358,7 +353,7 @@ _SIMHASH_PAIRS_ORACLE = f"""
 """
 
 
-@register("simhash_hamming_near_dups", oracle=_SIMHASH_PAIRS_ORACLE, tags=("dedup", "simhash", "join"))
+@register("simhash_hamming_near_dups", oracle=_SIMHASH_PAIRS_ORACLE)
 def simhash_hamming_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs: two 32-bit fingerprints close in hamming
     distance tend to agree exactly on a 16-bit half, so candidates block on
@@ -398,7 +393,7 @@ def simhash_hamming_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.length("text") > 0)
     # SQL twin of D.simhash32 (identical tree, ~250 fewer py4j round-trips
     # per build — see simhash_fingerprint note).
-    f = docs.select("doc_id", F.expr(D.simhash32_sql("text")).alias("simhash"))
+    f = docs.select("doc_id", F.expr(D.simhash32_sql()).alias("simhash"))
     # posexplode, not union-of-projections: a union would recompute the
     # fingerprint fold once per branch (each branch re-plans the scan);
     # exploding [low16, high16] bands the corpus in ONE pass.
@@ -489,7 +484,7 @@ _NGRAM_ORACLE = f"""
 """
 
 
-@register("ngram_jaccard_near_dups", oracle=_NGRAM_ORACLE, tags=("dedup", "ngram", "join", "lsh-recall"))
+@register("ngram_jaccard_near_dups", oracle=_NGRAM_ORACLE)
 def ngram_jaccard_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Char-trigram Jaccard ≥ 0.8 within (lang, n_chars/25) blocks, with a
     MinHash-band PREFILTER composed ahead of the exact verify. Trigrams
@@ -615,11 +610,7 @@ _NGRAM_EXACT_ORACLE = f"""
 """
 
 
-@register(
-    "ngram_jaccard_exact_pairs",
-    oracle=_NGRAM_EXACT_ORACLE,
-    tags=("dedup", "ngram", "join", "exact", "prefix-filter"),
-)
+@register("ngram_jaccard_exact_pairs", oracle=_NGRAM_EXACT_ORACLE)
 def ngram_jaccard_exact_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT char-trigram Jaccard ≥ 0.8 pair listing (100% recall) — the
     precision tier registered alongside the LSH-recall
@@ -834,7 +825,7 @@ _EMB_NEAR_DUP_ORACLE = f"""
 """
 
 
-@register("emb_near_dup_pairs", oracle=_EMB_NEAR_DUP_ORACLE, tags=("dedup", "similarity", "join", "lsh-recall"))
+@register("emb_near_dup_pairs", oracle=_EMB_NEAR_DUP_ORACLE)
 def emb_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup pairs within label blocks, prefiltered by
     random-hyperplane LSH band agreement. Each vector gets
@@ -991,11 +982,7 @@ _DECON_ORACLE = f"""
 """
 
 
-@register(
-    "decontaminate_against_benchmark",
-    oracle=_DECON_ORACLE,
-    tags=("dedup", "text", "decontamination"),
-)
+@register("decontaminate_against_benchmark", oracle=_DECON_ORACLE)
 def decontaminate_against_benchmark(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark decontamination — the eval-leak guard every pre-training
     corpus needs: a training document is CONTAMINATED when it shares any
@@ -1060,11 +1047,7 @@ _CLEAN_ORACLE = f"""
 """
 
 
-@register(
-    "corpus_clean_pipeline",
-    oracle=_CLEAN_ORACLE,
-    tags=("dedup", "dataprep", "text", "pipeline", "flagship"),
-)
+@register("corpus_clean_pipeline", oracle=_CLEAN_ORACLE)
 def corpus_clean_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full LLM pre-training corpus-cleaning pass as ONE lazy plan:
     quality filter (capped length score + non-stopword ratio ≥ 0.6) →
@@ -1111,7 +1094,7 @@ def corpus_clean_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("dedup_cluster_assignments", oracle=_CC_ORACLE, tags=("dedup", "components", "iterative"))
+@register("dedup_cluster_assignments", oracle=_CC_ORACLE)
 def dedup_cluster_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate CLUSTERS, not just pairs: connected components over the
     scale-safe near-dup edge graph (operators.dedup.dedup_edge_graph —
@@ -1178,11 +1161,7 @@ _INC_DEDUP_ORACLE = f"""
 """
 
 
-@register(
-    "incremental_dedup_against_index",
-    oracle=_INC_DEDUP_ORACLE,
-    tags=("dedup", "minhash", "incremental"),
-)
+@register("incremental_dedup_against_index", oracle=_INC_DEDUP_ORACLE)
 def incremental_dedup_against_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ASYMMETRIC LSH dedup: flag each incoming-batch document (doc_id ≥
     250) whose MinHash band signature collides with the existing corpus
@@ -1283,11 +1262,7 @@ _CONT_ORACLE = f"""
 """
 
 
-@register(
-    "shingle_containment_pairs",
-    oracle=_CONT_ORACLE,
-    tags=("dedup", "containment", "join", "exact", "prefix-filter"),
-)
+@register("shingle_containment_pairs", oracle=_CONT_ORACLE)
 def shingle_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT (100% recall) directional containment pairs over 5-token
     shingles, t=0.8 — finds docs embedded in other docs (quotes, partial
@@ -1418,11 +1393,7 @@ _KEEP_BEST_ORACLE = f"""
 """
 
 
-@register(
-    "dedup_keep_best_quality",
-    oracle=_KEEP_BEST_ORACLE,
-    tags=("dedup", "components", "quality", "curation"),
-)
+@register("dedup_keep_best_quality", oracle=_KEEP_BEST_ORACLE)
 def dedup_keep_best_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality-aware near-dup collapse (the FineWeb/RefinedWeb keep-best
     policy): cluster near-duplicates with the scale-safe edge graph
@@ -1512,11 +1483,7 @@ _CSIZE_ORACLE = f"""
 """
 
 
-@register(
-    "dedup_cluster_size_histogram",
-    oracle=_CSIZE_ORACLE,
-    tags=("dedup", "components", "iterative", "profiling"),
-)
+@register("dedup_cluster_size_histogram", oracle=_CSIZE_ORACLE)
 def dedup_cluster_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup cluster-size histogram: per size, how many clusters, how
     many docs they hold, and how many a keep-one policy removes

@@ -33,7 +33,6 @@ from talkinghead_datapipeline_spark.queries import register
     FROM orders
     WHERE o_orderkey < 500
     """,
-    tags=("functions", "date"),
 )
 def date_functions_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Date/timestamp extraction + truncation + arithmetic (time in the
@@ -69,7 +68,6 @@ def date_functions_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM documents
     WHERE length(text) > 0
     """,
-    tags=("functions", "string"),
 )
 def string_functions_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """String kernel family: length/case/pad/edit-distance/search/translate
@@ -103,7 +101,6 @@ def string_functions_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(len(embedding) AS BIGINT)                           AS dim
     FROM embeddings
     """,
-    tags=("functions", "array", "hof"),
 )
 def array_hof_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Array higher-order-function family: filter/exists/forall/aggregate/
@@ -146,7 +143,6 @@ def array_hof_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE user_id < 20
     WINDOW w AS (PARTITION BY user_id ORDER BY event_id)
     """,
-    tags=("functions", "window", "rank"),
 )
 def window_rank_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ranking-window family beyond row_number: rank/dense_rank/ntile/

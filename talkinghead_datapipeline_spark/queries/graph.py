@@ -113,7 +113,7 @@ def _trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("pagerank_trade_network", oracle=_pagerank_oracle(), tags=("graph", "iterative"))
+@register("pagerank_trade_network", oracle=_pagerank_oracle())
 def pagerank_trade_network(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank (damping 0.85, 3 fixed iterations) over the bidirectional
     customer↔supplier trade graph derived from orders⨝lineitem; top-20
@@ -203,7 +203,6 @@ def pagerank_trade_network(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM (SELECT key, max(depth) AS depth FROM walk GROUP BY key)
     GROUP BY root_depth
     """,
-    tags=("graph", "recursive", "sql"),
 )
 def recursive_cte_key_depths(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WITH RECURSIVE on the Spark side (new in Spark 4): walk every
@@ -276,7 +275,6 @@ _TRI_TOPK = 15
     ORDER BY n_triangles DESC, p_partkey
     LIMIT {_TRI_TOPK}
     """,
-    tags=("graph", "triangle"),
 )
 def triangle_count_copart(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-15 parts by triangle participation in the co-purchase graph.
@@ -379,7 +377,6 @@ def triangle_count_copart(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY jaccard DESC, p_partkey
     LIMIT 25
     """,
-    tags=("graph", "recommendation", "similarity"),
 )
 def item_cf_top_recs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Jaccard-weighted item-item CF: for each part, its single best
@@ -514,11 +511,7 @@ FROM agg a CROSS JOIN ecnt e CROSS JOIN tri t
 """
 
 
-@register(
-    "triangle_count_brand_graph",
-    oracle=TRIANGLE_ORACLE,
-    tags=("graph", "triangles", "clustering-coefficient"),
-)
+@register("triangle_count_brand_graph", oracle=TRIANGLE_ORACLE)
 def triangle_count_brand_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact triangle count, wedge count, and global clustering coefficient
     of the support-gated brand co-purchase graph — one a<b<c edge-join per

@@ -51,11 +51,7 @@ def _wav2vec_oracle() -> str:
     """
 
 
-@register(
-    "wav2vec_features_stub",
-    oracle=_wav2vec_oracle(),
-    tags=("inference", "N6", "udf"),
-)
+@register("wav2vec_features_stub", oracle=_wav2vec_oracle())
 def wav2vec_features_stub(spark: SparkSession, sf_dir: str) -> DataFrame:
     """N6 wav2vec: waveform → (T, dim) features @50 fps + frame count.
 
@@ -140,11 +136,7 @@ def _flame_oracle() -> str:
     """
 
 
-@register(
-    "flame_decode_landmarks",
-    oracle=_flame_oracle(),
-    tags=("inference", "N16", "udf"),
-)
+@register("flame_decode_landmarks", oracle=_flame_oracle())
 def flame_decode_landmarks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """N16 FLAME decode with the REAL LBS math (dpl/flame/flame.py:241-312,
     dpl/flame/lbs.py:148-250): blend shapes → Rodrigues → kinematic chain →
@@ -267,11 +259,7 @@ def _flame_render_oracle() -> str:
     """
 
 
-@register(
-    "flame_render_pipeline",
-    oracle=_flame_render_oracle(),
-    tags=("inference", "N16", "N17", "udf"),
-)
+@register("flame_render_pipeline", oracle=_flame_render_oracle())
 def flame_render_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """N16→N17 fused: the FLAME decode and the N17 camera in ONE
     mapInPandas stage over the embedding codes. What the oracle proves,
@@ -307,14 +295,13 @@ def flame_render_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         FlameLbsDecoder,
     )
 
-    # The input is the N16 node's code split; the batch body reads the
-    # betas and cam codes (the landmark is decoded at the fixed probe pose,
-    # not the row's pose_code).
+    # The input is the N16 node's code split, less the pose: the landmark
+    # is decoded at the fixed probe pose, so the batch body reads only the
+    # betas and the cam codes.
     emb = rebalance_for_compute(load_table(spark, sf_dir, "embeddings")).select(
         "vec_id",
         F.slice("embedding", 1, 8).alias("shape_code"),
         F.slice("embedding", 9, 8).alias("exp_code"),
-        F.slice("embedding", 17, 6).alias("pose_code"),
         F.slice("embedding", 23, 3).alias("cam_code"),
     )
     n_bytes = FRAME_HW[0] * FRAME_HW[1]
@@ -787,11 +774,7 @@ def _render_mask_oracle() -> str:
 N17_RENDER_MASK_ORACLE = _render_mask_oracle()
 
 
-@register(
-    "n17_render_mask_zbuffer",
-    oracle=N17_RENDER_MASK_ORACLE,
-    tags=("inference", "N17", "rasterizer", "zbuffer"),
-)
+@register("n17_render_mask_zbuffer", oracle=N17_RENDER_MASK_ORACLE)
 def n17_render_mask_zbuffer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """N17 rasterizer tier, value-oracled end-to-end: probe-pose mesh ->
     orthographic projection (batch_orth_proj, the rendering node's y/z flip,
@@ -883,11 +866,7 @@ def _render_shade_oracle() -> str:
 N17_RENDER_SHADE_ORACLE = _render_shade_oracle()
 
 
-@register(
-    "n17_render_shaded_checksum",
-    oracle=N17_RENDER_SHADE_ORACLE,
-    tags=("inference", "N17", "rasterizer", "shading"),
-)
+@register("n17_render_shaded_checksum", oracle=N17_RENDER_SHADE_ORACLE)
 def n17_render_shaded_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """N17 shaded-channel tier, value-oracled end-to-end: probe-pose mesh ->
     rasterize the view mesh as n17_render_mask_zbuffer does -> the
@@ -1041,11 +1020,7 @@ def _render_texture_oracle() -> str:
 N17_RENDER_TEXTURE_ORACLE = _render_texture_oracle()
 
 
-@register(
-    "n17_render_texture_checksum",
-    oracle=N17_RENDER_TEXTURE_ORACLE,
-    tags=("inference", "N17", "rasterizer", "texture"),
-)
+@register("n17_render_texture_checksum", oracle=N17_RENDER_TEXTURE_ORACLE)
 def n17_render_texture_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """N17 texture tier, value-oracled end-to-end: the reference's FULL
     textured forward composition (renderer.py:186-218) per covered pixel —

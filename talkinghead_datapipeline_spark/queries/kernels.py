@@ -70,7 +70,7 @@ _N10_ORACLE = f"""
 """
 
 
-@register("n10_bbox_transform_chain", oracle=_N10_ORACLE, tags=("kernel", "N10"))
+@register("n10_bbox_transform_chain", oracle=_N10_ORACLE)
 def n10_bbox_transform_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S1→S2→S3 kernel chain (bboxes.py:31: to_integer(pad_bbox(to_square(b))))
     as one fused column-expression projection — single scan, zero shuffles."""
@@ -89,7 +89,7 @@ def n10_bbox_transform_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     df, b = G.stage_bbox(li, raw, keep)
     df, b = G.stage_bbox(df, G.to_square(b), keep)
     df, b = G.stage_bbox(df, G.pad_bbox(b, 0.1), keep)
-    out = G.to_integer(b, preserve_size=True)
+    out = G.to_integer(b)
     return df.select(
         "l_orderkey",
         "l_linenumber",
@@ -138,7 +138,7 @@ def _lm(k: int) -> tuple[F.Column, F.Column]:
     )
 
 
-@register("s5_blink_features", oracle=_S5_ORACLE, tags=("kernel", "S4", "S5"))
+@register("s5_blink_features", oracle=_S5_ORACLE)
 def s5_blink_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Blink EAR features (utils.py:57-65) over pseudo-landmarks packed in the
     embedding array — S4 L2 distances + S5 ratio, all codegen'd expressions."""
@@ -174,7 +174,6 @@ def s5_blink_features(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(len(embedding) AS BIGINT) AS code_dim
     FROM embeddings
     """,
-    tags=("kernel", "N14", "array"),
 )
 def n14_code_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Packed-code slicing (emoca/inference.py:95-105; jaw = pose[:,3] at

@@ -83,7 +83,7 @@ _ZORDER_ORACLE = f"""
 """
 
 
-@register("zorder_data_skipping", oracle=_ZORDER_ORACLE, tags=("layout", "scale"))
+@register("zorder_data_skipping", oracle=_ZORDER_ORACLE)
 def zorder_data_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Z-order (Morton) clustering key over orders(o_custkey, o_orderdate)
     and the per-bucket min/max extents that certify 2-D data skipping:

@@ -92,11 +92,7 @@ def _name_tok(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "fuzzy_part_match_pairs",
-    oracle=_FUZZY_ORACLE,
-    tags=("linkage", "join", "dedup"),
-)
+@register("fuzzy_part_match_pairs", oracle=_FUZZY_ORACLE)
 def fuzzy_part_match_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Entity resolution over part names: distinct-name pairs within
     Levenshtein distance <= 3, found by TWO blocking passes (first-token
@@ -223,11 +219,7 @@ _TAGS_ORACLE = f"""
 """
 
 
-@register(
-    "keyword_domain_tags",
-    oracle=_TAGS_ORACLE,
-    tags=("text", "classify", "map-only"),
-)
+@register("keyword_domain_tags", oracle=_TAGS_ORACLE)
 def keyword_domain_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keyword-taxonomy document tagging: count occurrences of each
     domain's keyword list in every document and assign the argmax domain
@@ -333,11 +325,7 @@ _NB_ORACLE = f"""
 """
 
 
-@register(
-    "nb_lang_classifier_scores",
-    oracle=_NB_ORACLE,
-    tags=("text", "classify", "lm"),
-)
+@register("nb_lang_classifier_scores", oracle=_NB_ORACLE)
 def nb_lang_classifier_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multinomial Naive Bayes scores, trained in-engine: class = `lang`,
     features = token counts, Laplace alpha=1. Emits one row per (doc,
@@ -456,11 +444,7 @@ _FUZZY_CLUSTERS_ORACLE = f"""
 """
 
 
-@register(
-    "fuzzy_name_clusters",
-    oracle=_FUZZY_CLUSTERS_ORACLE,
-    tags=("linkage", "components", "iterative"),
-)
+@register("fuzzy_name_clusters", oracle=_FUZZY_CLUSTERS_ORACLE)
 def fuzzy_name_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Entity-resolution clusters: the fuzzy match pairs become edges,
     pointer-jumping components collapse transitive chains ("red bolt" ~
@@ -521,11 +505,7 @@ _FUZZY_RECALL_ORACLE = f"""
 """
 
 
-@register(
-    "fuzzy_blocking_recall_certified",
-    oracle=_FUZZY_RECALL_ORACLE,
-    tags=("linkage", "certification"),
-)
+@register("fuzzy_blocking_recall_certified", oracle=_FUZZY_RECALL_ORACLE)
 def fuzzy_blocking_recall_certified(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Certified recall of the two-pass blocking vs the unblocked
     all-pairs edit-distance join (1.0 on this corpus — the measured claim

@@ -29,10 +29,10 @@ from talkinghead_datapipeline_spark.queries import register
 # y = l_extendedprice, x1 = l_quantity, x2 = l_discount.
 # ---------------------------------------------------------------------------
 
-# Exact integer-unit moment sums (round 8): the sf0.01 invariance sweep
-# caught a coefficient's 6th decimal flipping with input file layout —
-# double moment sums are merge-order-dependent and beta sits near a
-# round(,6) boundary at that data. l_quantity is integer-valued and
+# Exact integer-unit moment sums: double moment sums are
+# merge-order-dependent, and beta sits near a round(,6) boundary at sf0.01,
+# so a double sum flips its 6th decimal with the input file layout.
+# l_quantity is integer-valued and
 # l_discount / l_extendedprice are 2-decimal by construction, so every
 # moment accumulates an exact associative BIGINT (quantity units, discount
 # cents, price cents; products scale by the product of the factors'
@@ -86,11 +86,7 @@ _OLS_ORACLE = f"""
 """
 
 
-@register(
-    "ols_normal_equations",
-    oracle=_OLS_ORACLE,
-    tags=("mlstats", "agg", "regression"),
-)
+@register("ols_normal_equations", oracle=_OLS_ORACLE)
 def ols_normal_equations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-pass distributed OLS: fit l_extendedprice ~ 1 + l_quantity +
     l_discount by accumulating the nine moment sums in a single map-side-
@@ -99,14 +95,12 @@ def ols_normal_equations(spark: SparkSession, sf_dir: str) -> DataFrame:
     train-inside-the-engine regression primitive: at 100 TB "training" is
     one scan + one 9-number reduce, and the model is a row.
 
-    Determinism (round 8): the moment sums accumulate EXACT BIGINT units
-    (quantity integer, discount cents, price cents — all exact decimals
-    by construction) and convert to double once via a correctly-rounded
+    Determinism: the moment sums accumulate EXACT BIGINT units (quantity
+    integer, discount cents, price cents — all exact decimals by
+    construction) and convert to double once via a correctly-rounded
     power-of-ten division, so the sums — and therefore the Cramer scalar
     arithmetic — are identical across engines, input layouts, and merge
-    orders. The earlier all-double accumulation was caught by the sf0.01
-    split-invariance sweep flipping a coefficient's 6th decimal with the
-    input file layout (see _OLS_SUMS_SQL comment)."""
+    orders (see the _OLS_SUMS_SQL comment)."""
     li = load_table(spark, sf_dir, "lineitem")
     q_i = F.round(F.col("l_quantity")).cast("bigint")
     d_c = F.round(F.col("l_discount") * 100).cast("bigint")
@@ -156,16 +150,12 @@ _COV_ORACLE = """
 """
 
 
-@register(
-    "emb_covariance_upper",
-    oracle=_COV_ORACLE,
-    tags=("mlstats", "similarity", "agg"),
-)
+@register("emb_covariance_upper", oracle=_COV_ORACLE)
 def emb_covariance_upper(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Upper-triangle covariance matrix of the embedding table (64x64 →
-    2080 cells) via per-partition partial outer products (VERDICT r6 #7):
-    each Arrow batch stacks its vectors into an (n, 64) float64 block and
-    emits 2080 partial-sum rows (count, Σx_i, Σx_j, Σx_i·x_j from one
+    2080 cells) via per-partition partial outer products: each Arrow batch
+    stacks its vectors into an (n, 64) float64 block and emits 2080
+    partial-sum rows (count, Σx_i, Σx_j, Σx_i·x_j from one
     BLAS X^T X), then one 2080-key aggregation combines the partials;
     cov = (Σxy − ΣxΣy/n)/(n−1). Distributed PCA is this query + a
     driver-side eigensolve of the driver-sized result (mirroring how
@@ -205,9 +195,8 @@ def emb_covariance_upper(spark: SparkSession, sf_dir: str) -> DataFrame:
                 }
             )
 
-    # np.stack raises on a NULL cell where the pre-r7 posexplode form
-    # silently dropped null-array rows; keep the old null semantics (the
-    # fixtures carry none — this is robustness, not a result change).
+    # np.stack raises on a NULL cell, so null-array rows are dropped
+    # before the batch body (the fixtures carry none).
     partials = emb.select("embedding").where(
         F.col("embedding").isNotNull()
     ).mapInPandas(
@@ -266,11 +255,7 @@ _TTC_ORACLE = """
 """
 
 
-@register(
-    "time_to_convert_stats",
-    oracle=_TTC_ORACLE,
-    tags=("behavior", "window", "analytics"),
-)
+@register("time_to_convert_stats", oracle=_TTC_ORACLE)
 def time_to_convert_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conversion-latency stats: per purchase, the gap to that user's most
     recent prior view (the backward as-of pairing), rolled up into count /
@@ -279,10 +264,10 @@ def time_to_convert_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     accumulation); the percentiles interpolate over exact integer
     microsecond deltas, identical on both engines.
 
-    Floor-to-microseconds display (round-10): the r9 tie audit measured
-    median_sec 0.27 ulps (sf0.001) / 0.40 ulps (sf0.1) from a round(,6)
-    half-boundary — interpolated midpoints of integer microseconds land
-    exactly on .5 µs, the cross-engine round() divergence class. The
+    Floor-to-microseconds display: interpolated midpoints of integer
+    microseconds land exactly on .5 µs (median_sec sits 0.27 ulps from a
+    round(,6) half-boundary at sf0.001, 0.40 at sf0.1), the cross-engine
+    round() divergence class. The
     µs-precision doubles are bit-identical cross-engine by construction
     (same IEEE division of exact integers), so each stat is floor()ed to
     whole µs (floor is the same function on both engines, negatives
@@ -336,10 +321,8 @@ def time_to_convert_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Registered round 10 (staged + fully verified in r8/r9: tests/
-# test_logreg_staged.py pins the closed-form optimum and the round(,6)
-# boundary margins; its planned r9 seat was displaced by the round-tie-
-# audit migrations under the changed-code-beats-registration rule).
+# Newton-step logistic regression (tests/test_logreg_staged.py pins the
+# closed-form optimum and the round(,6) boundary margins).
 # ---------------------------------------------------------------------------
 
 # Cross-engine float contract: every Newton update is the SAME IEEE-double
@@ -347,7 +330,7 @@ def time_to_convert_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the only divergence source is the 5 per-iteration aggregate sums
 # (accumulation order) and exp() last-ulp differences — measured <= 1e-12
 # relative after 3 iterations, while the fixtures' round(,6) boundary
-# margins are >= 4.2e-8 (sf0.001/0.01/0.1, audited 2026-08-15): four
+# margins are >= 4.2e-8 (sf0.001/0.01/0.1): four
 # orders of safety, the covariance-margin convention.
 LOGREG_NEWTON_ORACLE = """
 WITH d AS (
@@ -395,11 +378,7 @@ FROM i3
 """
 
 
-@register(
-    "logreg_newton_lang",
-    oracle=LOGREG_NEWTON_ORACLE,
-    tags=("mlstats", "iterative", "regression"),
-)
+@register("logreg_newton_lang", oracle=LOGREG_NEWTON_ORACLE)
 def logreg_newton_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Logistic regression trained IN the engine by 3 Newton-Raphson (IRLS)
     steps: P(lang = 'en' | n_chars), the distributed iterative-optimization
@@ -424,16 +403,15 @@ def logreg_newton_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
         # when/otherwise, NOT (lang == 'en').cast: a NULL lang must map to
         # y = 0.0 exactly like the oracle's CASE ELSE — a NULL y would be
         # silently skipped by the gradient sums but not the x-only Hessian
-        # sums, computing the two over different row sets (latent: fixtures
-        # carry no NULL langs today, code-review r8 finding)
+        # sums, computing the two over different row sets (the fixtures
+        # carry no NULL langs)
         F.when(F.col("lang") == "en", 1.0).otherwise(0.0).alias("y"),
         (F.col("n_chars") / 1000.0).alias("x"),
     )
-    # persist_once, the house convention (r14): the per-call
-    # persist()+unpersist() pair re-materialized the projection on every
-    # builder invocation — three reps re-paid the scan each time while
-    # every sibling iterative query keeps its training frame cached for
-    # the session (the bench clears cache between queries).
+    # persist_once, as every iterative query keeps its training frame
+    # cached for the session: a per-call persist()+unpersist() pair would
+    # re-materialize the projection on every builder invocation (the bench
+    # clears cache between queries).
     docs = persist_once(docs)
     # n_docs rides the first iteration's aggregation (which also
     # materializes the persisted projection) instead of a separate
@@ -472,9 +450,8 @@ def logreg_newton_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Registered round 10 (staged in r9; tests/test_bootstrap_staged.py pins
-# weights, dtypes, split invariance, and cross-engine quantile
-# interpolation bits; seat displaced from r9 by the tie-audit migrations).
+# Poisson bootstrap CI (tests/test_bootstrap_staged.py pins weights, dtypes,
+# split invariance, and cross-engine quantile interpolation bits).
 # ---------------------------------------------------------------------------
 
 # Poisson(1) inverse-CDF thresholds (cumulative e^-1/k!), written as exact
@@ -495,11 +472,9 @@ def poisson_bootstrap_weight(b_col, key_col, source: str = "md5"):
     """Deterministic Poisson(1) weight for one (replicate, key) draw —
     a uniform hash of (replicate, key) pushed through the fixed CDF
     literals. Module-level so the sanity test exercises the PRODUCTION
-    expression rather than a private re-implementation (code-review r8
-    finding).
+    expression rather than a private re-implementation.
 
-    ``source`` picks the uniform generator (VERDICT r11 #7 — the swap is
-    a flag, not a prose instruction):
+    ``source`` picks the uniform generator:
 
     - ``"md5"`` (default): portable md5-prefix hash — DuckDB-replicable,
       so the replicate means are value-hash certifiable against the
@@ -507,7 +482,7 @@ def poisson_bootstrap_weight(b_col, key_col, source: str = "md5"):
       query uses.
     - ``"xxhash64"``: Spark's native 64-bit hash folded to the same
       32-bit uniform domain — measured ~95x faster at sf0.1 (the md5
-      cost IS the query cost; SCALING.md round 10), distributionally
+      cost IS the query cost; SCALING.md), distributionally
       identical Poisson(1) weights, IDENTICAL plan shape (the swap
       changes one projection expression, nothing else —
       tests/test_bootstrap_staged.py pins plan equality and the weight
@@ -584,11 +559,7 @@ FROM base JOIN (
 """
 
 
-@register(
-    "bootstrap_ci_order_value",
-    oracle=BOOTSTRAP_CI_ORACLE,
-    tags=("mlstats", "bootstrap", "resampling"),
-)
+@register("bootstrap_ci_order_value", oracle=BOOTSTRAP_CI_ORACLE)
 def bootstrap_ci_order_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Poisson-bootstrap confidence interval of mean order value per
     priority — the standard one-pass distributed resampling estimator
@@ -604,8 +575,8 @@ def bootstrap_ci_order_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     integers — bit-identical on both engines under any layout — and the
     CI percentiles interpolate over that identical 32-value multiset.
     Outputs are BIGINT micro-dollars via floor, not round(,6): identical
-    bits through the same function — see the inline note for the exact
-    .5-tie the margin audit caught.
+    bits through the same function — see the inline note for the CI cell
+    that lands exactly on a .5 tie.
 
     Scale shape: a x32 map-side fan-out (sequence + explode, no shuffle)
     into ONE grouped aggregation on (priority, replicate) — 5x32 = 160
@@ -613,31 +584,24 @@ def bootstrap_ci_order_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     read, not shuffled bytes (the agg is map-side combinable down to 160
     rows per partition); B tunes cost vs CI resolution.
 
-    Cost adjudication (round 10, measured): ~6.6s of the ~6.6s sf0.1
-    steady state is the portable md5 weight hash (4.8M string md5s); the
-    SAME plan with F.xxhash64 integer weights runs 0.07s — ~95x. The md5
-    stays because it is what makes the weights DuckDB-replicable and the
-    replicate means value-hash certifiable (the exactness contract
-    above); at production scale swap poisson_bootstrap_weight's uniform
-    source to xxhash64 — distributionally identical estimator, same plan,
-    no longer oracle-replicable (the exact-percentile vs
-    percentile_approx adjudication pattern, SCALING.md round 10).
+    Cost (measured): ~6.6s of the ~6.6s sf0.1 steady state is the portable md5
+    weight hash (4.8M string md5s); the SAME plan with F.xxhash64 integer
+    weights runs 0.07s — ~95x. The md5 stays because it is what makes the
+    weights DuckDB-replicable and the replicate means value-hash certifiable
+    (the exactness contract above); at production scale swap
+    poisson_bootstrap_weight's uniform source to xxhash64 — distributionally
+    identical estimator, same plan, no longer oracle-replicable (the
+    exact-percentile vs percentile_approx adjudication pattern, SCALING.md).
     """
     return _bootstrap_ci_plan(spark, sf_dir, source="md5")
 
 
-@register(
-    "bootstrap_ci_order_value_prod",
-    oracle=None,  # xxhash64 weights are not DuckDB-replicable — rows-only
-    tags=("mlstats", "bootstrap", "resampling", "production"),
-)
+@register("bootstrap_ci_order_value_prod", oracle=None)
 def bootstrap_ci_order_value_prod(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PRODUCTION path of ``bootstrap_ci_order_value`` — identical plan
-    with ``poisson_bootstrap_weight(source="xxhash64")`` (VERDICT r12 #5a:
-    publish BOTH timings in the bench HEADLINE so the headline total stops
-    being dominated by the deliberately-slow md5 certification artifact;
-    measured ~95x faster at sf0.1 because the md5 string hash IS the md5
-    query's cost).
+    with ``poisson_bootstrap_weight(source="xxhash64")``, timed next to it
+    in the bench HEADLINE: ~95x faster at sf0.1, because the md5 string
+    hash IS the md5 query's cost.
 
     Certification story (why rows-only is the honest gate here): the
     xxhash64 uniform source is Spark-native and has no DuckDB twin, so the
@@ -661,11 +625,10 @@ def _bootstrap_ci_plan(
     # The ×B explode multiplies ROWS but not PARTITIONS, and the
     # single-row-group fixture scan is one task — so without an explicit
     # redistribution every (replicate, key) weight hash runs single-threaded
-    # (measured r14: 8.46s isolated, vs the bench's own md5 anchor pricing
-    # the 4.8M hashes at ~0.3s of 8-way work). One cheap shuffle of the
-    # 3-column pre-explode rows buys full-width hashing; no-op on
-    # many-split production inputs (guide §2.5/§4 — spread compute-dense
-    # per-row work). Weights are per (b, o_orderkey) so results are
+    # (8.46s at sf0.1, where the bench's md5 anchor prices the 4.8M hashes
+    # at ~0.3s of 8-way work). One cheap shuffle of the 3-column
+    # pre-explode rows buys full-width hashing; it is a no-op on many-split
+    # inputs. Weights are per (b, o_orderkey) so results are
     # layout-invariant by construction.
     rep = rebalance_for_compute(o).withColumn(
         "b", F.explode(F.sequence(F.lit(1), F.lit(_BOOT_B)))
@@ -687,10 +650,10 @@ def _bootstrap_ci_plan(
     )
     # BIGINT micro-dollars via floor(x * 1e6), NOT round(x, 6): the doubles
     # are bit-identical on both engines, but Spark F.round and DuckDB round
-    # are DIFFERENT FUNCTIONS at exact .5 ties — and the r8 margin audit
-    # found a CI cell landing exactly ON a 1e-6 half boundary
-    # (263222.4119375 at sf0.001). floor is the same function everywhere,
-    # so identical input bits give identical integers, no margin argument.
+    # are DIFFERENT FUNCTIONS at exact .5 ties, and a CI cell lands
+    # exactly ON a 1e-6 half boundary (263222.4119375 at sf0.001). floor
+    # is the same function everywhere, so identical input bits give
+    # identical integers, no margin argument.
     def micro(col: F.Column) -> F.Column:
         return F.floor(col * F.lit(1000000.0)).cast("bigint")
 
@@ -710,11 +673,10 @@ def _bootstrap_ci_plan(
 
 
 # ---------------------------------------------------------------------------
-# REGISTERED r11 (staged r10): k-fold cross-validation of in-engine linear
-# regression — the model-selection class (every curation pipeline that
-# trains a quality filter on its own corpus needs held-out validation of
-# that filter). Verified by tests/test_kfold_staged.py; registration takes
-# an r11 seat per the house registration rule.
+# k-fold cross-validation of in-engine linear regression — the
+# model-selection class (every curation pipeline that trains a quality
+# filter on its own corpus needs held-out validation of that filter).
+# Verified by tests/test_kfold_staged.py.
 # ---------------------------------------------------------------------------
 
 KFOLD_LINREG_ORACLE = f"""
@@ -766,11 +728,7 @@ FROM scored ORDER BY fold
 """
 
 
-@register(
-    "kfold_linreg_cv",
-    oracle=KFOLD_LINREG_ORACLE,
-    tags=("mlstats", "cross-validation", "regression"),
-)
+@register("kfold_linreg_cv", oracle=KFOLD_LINREG_ORACLE)
 def kfold_linreg_cv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """5-fold cross-validated linear regression y = b0 + b1*x trained IN
     the engine (x = n_chars, y = whitespace token count): per fold, fit on
@@ -799,12 +757,10 @@ def kfold_linreg_cv(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_chars").cast("bigint").alias("x"),
         F.size(F.split(F.col("text"), r"\s+")).cast("bigint").alias("y"),
     )
-    # r15 (guide §4): the 13-column total-minus-fold window block, the
-    # Cramer-style fit arithmetic and the expanded-quadratic MSE are
-    # assembled as JVM-parsed strings — the Column form cost ~5.9k py4j
-    # round-trips per build. Identical association to the oracle's
-    # fit/fit2/scored CTEs (and to the Column fold it replaces: plan
-    # normdiff empty, plans/r15/kfold_linreg_cv_{before,after}).
+    # The 13-column total-minus-fold window block, the Cramer-style fit
+    # arithmetic and the expanded-quadratic MSE are assembled as
+    # JVM-parsed strings — a Column form costs ~5.9k py4j round-trips per
+    # build. Identical association to the oracle's fit/fit2/scored CTEs.
     per = base.groupBy("fold").agg(
         F.expr("CAST(count(1) AS BIGINT) AS n"),
         F.expr("sum(x) AS sx"),
@@ -852,24 +808,22 @@ def kfold_linreg_cv(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# REGISTERED r11 (staged r10): distributed PCA top component by in-engine
-# power iteration — the spectral class. emb_covariance_upper's docstring
-# names "covariance + driver eigensolve" as the distributed-PCA recipe;
-# this query closes the loop ENTIRELY inside the engine for a small
-# feature space: one exact-sufficient-stat scan, then the covariance and
-# three unrolled power-iteration steps as a scalar expression DAG on the
-# 1-row aggregate (the logreg/OLS pattern). Verified by
-# tests/test_pca_staged.py.
+# Distributed PCA top component by in-engine power iteration — the spectral
+# class. emb_covariance_upper's docstring names "covariance + driver
+# eigensolve" as the distributed-PCA recipe; this query closes the loop
+# ENTIRELY inside the engine for a small feature space: one
+# exact-sufficient-stat scan, then the covariance and three unrolled
+# power-iteration steps as a scalar expression DAG on the 1-row aggregate (the
+# logreg/OLS pattern). Verified by tests/test_pca_staged.py.
 #
-# Feature space (all exact integers per doc): x1 = n_chars, x2 =
-# whitespace token count, x3 = space count, x4 = non-space chars. The
-# spectrum is dominated (lambda1/lambda2 ~ 4e3 at every fixture SF —
-# measured before staging), so 3 iterations from v0 = (0.5,)*4 converge
-# to |<v, u1>| = 1.0 to double precision; the same probe on the 64-dim
-# embedding table measured lambda1/lambda2 ~ 1.07 (near-isotropic
-# synthetic data), where power iteration does NOT converge — which is
-# why the spectral demo lives on the feature table and the embedding
-# covariance stays a separate certified query.
+# Feature space (all exact integers per doc): x1 = n_chars, x2 = whitespace
+# token count, x3 = space count, x4 = non-space chars. The spectrum is
+# dominated (lambda1/lambda2 ~ 4e3 at every fixture SF), so 3 iterations from
+# v0 = (0.5,)*4 converge to |<v, u1>| = 1.0 to double precision; the same probe
+# on the 64-dim embedding table measured lambda1/lambda2 ~ 1.07 (near-isotropic
+# synthetic data), where power iteration does NOT converge — which is why the
+# spectral demo lives on the feature table and the embedding covariance stays a
+# separate certified query.
 #
 # Every expression below is built from ONE string template used verbatim
 # by both engines (F.expr on the Spark side, CTE interpolation in the
@@ -992,11 +946,7 @@ SELECT CAST(n AS BIGINT) AS n_docs, {finals} FROM v3
 PCA_POWER_ORACLE = _pca_oracle_sql()
 
 
-@register(
-    "pca_power_doc_features",
-    oracle=PCA_POWER_ORACLE,
-    tags=("mlstats", "pca", "power-iteration"),
-)
+@register("pca_power_doc_features", oracle=PCA_POWER_ORACLE)
 def pca_power_doc_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top principal component of the 4-dim document feature space
     (n_chars, token count, space count, non-space chars) by three
@@ -1061,7 +1011,7 @@ def pca_power_doc_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# REGISTERED r11 (staged r10): AUC / Mann-Whitney U — the ranking-metric
+# AUC / Mann-Whitney U — the ranking-metric
 # model-evaluation class (every learned curation filter is judged by AUC
 # before it gates data; nothing in the registry certifies a rank
 # statistic). Verified by tests/test_auc_staged.py.
@@ -1102,11 +1052,7 @@ FROM agg
 """
 
 
-@register(
-    "auc_mann_whitney_lang",
-    oracle=AUC_MANN_WHITNEY_ORACLE,
-    tags=("mlstats", "auc", "ranking-metric"),
-)
+@register("auc_mann_whitney_lang", oracle=AUC_MANN_WHITNEY_ORACLE)
 def auc_mann_whitney_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     """AUC of n_chars as a ranker for lang = 'en', via the exact
     tie-corrected Mann-Whitney U statistic — the model-evaluation metric
@@ -1166,15 +1112,14 @@ def auc_mann_whitney_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# REGISTERED r12 (staged r11): calibration / reliability bins — the
-# model-calibration class (VERDICT r10 #7; pairs with auc_mann_whitney_lang:
+# Calibration / reliability bins — the model-calibration class (pairs
+# with auc_mann_whitney_lang:
 # AUC certifies a ranker's DISCRIMINATION, this certifies whether its scores
 # read as probabilities). Per predicted-probability decile: count, positive
 # count, mean predicted probability, empirical positive rate, the
 # calibration gap, the bin's reliability term (n_k·(p̄_k − ō_k)², the Murphy
 # decomposition's reliability summand), and the bin's Brier contribution.
-# Verified by tests/test_reliability_staged.py; registration takes an r12
-# seat per the house staging rule.
+# Verified by tests/test_reliability_staged.py.
 #
 # The "model" is a deterministic integer score b = n_chars % 100 read as a
 # predicted probability b/100 of lang = 'en' — the certification target is
@@ -1223,11 +1168,7 @@ FROM g ORDER BY bin
 """
 
 
-@register(
-    "reliability_bins_lang",
-    oracle=RELIABILITY_BINS_ORACLE,
-    tags=("mlstats", "calibration", "reliability", "brier"),
-)
+@register("reliability_bins_lang", oracle=RELIABILITY_BINS_ORACLE)
 def reliability_bins_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reliability (calibration) bins for a probability-scored binary label:
     per predicted-probability decile, the count, positives, mean predicted
@@ -1262,13 +1203,12 @@ def reliability_bins_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# REGISTERED r12 (staged r11): isotonic regression calibration curve — the
+# Isotonic regression calibration curve — the
 # monotone-calibration class (pairs with reliability_bins_lang: the bins
 # AUDIT calibration, isotonic regression FIXES it — sklearn's
 # IsotonicRegression / Zadrozny-Elkan calibration, the standard
 # post-processor for any learned quality scorer). Verified by
-# tests/test_isotonic_staged.py; registration takes an r12 seat per the
-# house staging rule.
+# tests/test_isotonic_staged.py.
 #
 # Algorithm: the pool-adjacent-violators fit at score i equals the minimax
 # identity iso(i) = max_{j<=i} min_{k>=i} avg(y over scores j..k) — a
@@ -1329,11 +1269,7 @@ ORDER BY score
 """
 
 
-@register(
-    "isotonic_calibration_lang",
-    oracle=ISOTONIC_CALIBRATION_ORACLE,
-    tags=("mlstats", "calibration", "isotonic", "pav"),
-)
+@register("isotonic_calibration_lang", oracle=ISOTONIC_CALIBRATION_ORACLE)
 def isotonic_calibration_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Isotonic (PAV) calibration curve of the b = n_chars % 100 score for
     lang = 'en': per distinct score, the raw empirical rate and the
@@ -1401,9 +1337,8 @@ def isotonic_calibration_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# STAGED FOR r13 REGISTRATION: split-conformal prediction-interval
-# calibration — the distribution-free uncertainty-quantification class
-# (VERDICT r11 #4b; completes the calibration suite with
+# Split-conformal prediction-interval calibration — the distribution-free
+# uncertainty-quantification class (completes the calibration suite with
 # reliability_bins_lang / isotonic_calibration_lang: those certify
 # probability calibration, this certifies INTERVAL coverage). Mondrian
 # (per-lang) split conformal over documents: the calibration half
@@ -1412,8 +1347,7 @@ def isotonic_calibration_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
 # nonconformity |n_chars − pred|; the disjoint test half then measures
 # empirical coverage of pred ± q̂, which the split-conformal theorem
 # (Vovk et al.; Papadopoulos et al. 2002 — public) guarantees ≥ 1−α in
-# expectation. α = 0.1. Verified by tests/test_conformal_staged.py;
-# registration takes an r13 seat per the house staging rule.
+# expectation. α = 0.1. Verified by tests/test_conformal_staged.py.
 #
 # Determinism (fully exact): the predictor is an integer floor division,
 # nonconformities are absolute integer differences, q̂ is an exact order
@@ -1477,11 +1411,7 @@ ORDER BY p.lang
 """
 
 
-@register(
-    "conformal_coverage_lang",
-    oracle=CONFORMAL_ORACLE,
-    tags=("mlstats", "conformal", "calibration", "uncertainty"),
-)
+@register("conformal_coverage_lang", oracle=CONFORMAL_ORACLE)
 def conformal_coverage_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-lang split-conformal interval calibration: calibration-half
     floor-mean predictor, exact conformal quantile q̂ at α = 0.1 via the

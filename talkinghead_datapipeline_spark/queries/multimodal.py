@@ -46,7 +46,6 @@ _DIGEST_MEAN_SQL = (
     FROM documents
     WHERE octet_length(encode(text)) > 0
     """,
-    tags=("multimodal", "binary", "udf"),
 )
 def multimodal_binary_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Opaque-binary feature extraction through the real inference path:
@@ -95,7 +94,6 @@ def multimodal_binary_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM documents
     WHERE length(text) > 0
     """,
-    tags=("multimodal", "image", "udf"),
 )
 def multimodal_image_channel_means(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Image feature extraction with the deterministic fake decoder: binary
@@ -160,7 +158,6 @@ def multimodal_image_channel_means(spark: SparkSession, sf_dir: str) -> DataFram
     WHERE frame_idx % 4 = 0
     GROUP BY doc_id
     """,
-    tags=("multimodal", "frames", "explode"),
 )
 def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """N2's video→frames as a UDTF shape: chunk the payload into fixed-size

@@ -46,7 +46,6 @@ from talkinghead_datapipeline_spark.queries import register
     WHERE l_shipdate <= TIMESTAMP '2000-09-02 00:00:00'
     GROUP BY l_returnflag, l_linestatus
     """,
-    tags=("agg", "flagship"),
 )
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pricing summary: filtered scan + hash aggregate (8 aggs, 2 keys).
@@ -130,7 +129,6 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM per_cust
     ) WHERE rnk <= 5
     """,
-    tags=("flagship", "join", "window"),
 )
 def flagship_segment_leaders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-5 revenue customers per market segment: filtered scan, 3-way join,
@@ -208,7 +206,6 @@ def flagship_segment_leaders(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE c_custkey IN (SELECT o_custkey FROM orders)
       AND c_custkey IN (SELECT o_custkey FROM orders WHERE o_orderstatus = 'O')
     """,
-    tags=("join", "E3"),
 )
 def e3_key_intersection_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keys present in every input (engine.py:108-109) → chained LEFT SEMI joins."""
@@ -234,7 +231,6 @@ def e3_key_intersection_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM customer
     WHERE c_custkey NOT IN (SELECT o_custkey FROM orders WHERE o_custkey IS NOT NULL)
     """,
-    tags=("join", "E7"),
 )
 def e7_memoization_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rows whose outputs don't exist yet (base.py:135) → LEFT ANTI join."""
@@ -258,7 +254,6 @@ def e7_memoization_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE EXISTS (SELECT 1 FROM lineitem l
                   WHERE l.l_orderkey = o.o_orderkey AND l.l_quantity > 45)
     """,
-    tags=("join", "E6"),
 )
 def e6_exists_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keep rows whose qualifying input exists → semi join with pushed filter."""
@@ -292,7 +287,6 @@ def e6_exists_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
       AND o_orderdate <  TIMESTAMP '1998-01-01 00:00:00'
     GROUP BY n_name
     """,
-    tags=("join", "N18"),
 )
 def q5_join_chain_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """6-way join (a2en.py's multi-input assembly shape) + agg; dims broadcast.
@@ -353,7 +347,6 @@ def q5_join_chain_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY revenue DESC, l_orderkey ASC
     LIMIT 10
     """,
-    tags=("join", "topk"),
 )
 def q3_top_revenue_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Join + agg + deterministic global top-k (rounded key then tiebreak).
@@ -407,7 +400,6 @@ def q3_top_revenue_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM events
     ) WHERE rn = 1
     """,
-    tags=("window", "N7"),
 )
 def n7_argmax_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-scoring candidate per group (fa.py:21-24) → rank-1 window row."""
@@ -435,7 +427,6 @@ def n7_argmax_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM orders
     ) WHERE rn <= 3
     """,
-    tags=("window", "topk"),
 )
 def topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-k per group via window rank (single shuffle on the group key)."""
@@ -472,7 +463,6 @@ def topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lineitem
     GROUP BY l_orderkey
     """,
-    tags=("agg", "N11"),
 )
 def n11_group_extent(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Whole-clip min/max extent → square side (bboxes.py:57-76 formula)."""
@@ -512,7 +502,6 @@ def n11_group_extent(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lineitem
     GROUP BY l_returnflag
     """,
-    tags=("agg", "S10"),
 )
 def s10_quantile_per_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact linear-interpolated quantile (np.quantile parity, bboxes.py:186)."""
@@ -535,7 +524,6 @@ def s10_quantile_per_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
     INTERSECT
     SELECT o_custkey AS custkey FROM orders WHERE o_orderstatus = 'F'
     """,
-    tags=("setop", "E3"),
 )
 def set_intersect_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Key-set intersection (engine.py:108-109) as INTERSECT."""
@@ -556,7 +544,6 @@ def set_intersect_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     EXCEPT
     SELECT o_custkey AS custkey FROM orders
     """,
-    tags=("setop", "E9"),
 )
 def set_except_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Missing-key difference (base.py:190-200 schema diff) as EXCEPT."""
@@ -588,7 +575,6 @@ def set_except_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN region   ON n_regionkey = r_regionkey
     GROUP BY ROLLUP (r_name, n_name)
     """,
-    tags=("agg", "rollup"),
 )
 def rollup_nation_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hierarchical totals via ROLLUP; dims broadcast into the fact join."""
@@ -630,7 +616,6 @@ def rollup_nation_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lineitem
     GROUP BY CUBE (l_returnflag, l_linestatus)
     """,
-    tags=("agg", "cube"),
 )
 def cube_flag_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All grouping-set combinations via CUBE."""
@@ -664,7 +649,6 @@ def cube_flag_status(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(length(p_name) AS BIGINT) AS name_len
     FROM part
     """,
-    tags=("string", "E2"),
 )
 def e2_name_derivation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Path→name key derivation (engine.py:97-98): join parts with '_'."""
@@ -693,7 +677,6 @@ def e2_name_derivation(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE o_orderstatus <> 'P'
     GROUP BY 1, 2
     """,
-    tags=("date", "agg"),
 )
 def date_orders_by_month(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Calendar rollup with date part extraction."""
@@ -751,11 +734,7 @@ _CORR_ORACLE = f"""
 """
 
 
-@register(
-    "lineitem_measure_correlations",
-    oracle=_CORR_ORACLE,
-    tags=("profiling", "agg"),
-)
+@register("lineitem_measure_correlations", oracle=_CORR_ORACLE)
 def lineitem_measure_correlations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairwise Pearson correlation matrix of the four lineitem measures in
     ONE aggregation pass: every r is assembled from Σx, Σx², Σxy computed
@@ -835,7 +814,7 @@ def _bloom_bucket(i: int, key: Column) -> Column:
     return md5_hash(F.concat(F.lit(f"bf{i}|"), key.cast("string")), 8) % _BLOOM_M
 
 
-@register("bloom_filter_semi_join", oracle=_BLOOM_ORACLE, tags=("join", "bloom", "scale"))
+@register("bloom_filter_semi_join", oracle=_BLOOM_ORACLE)
 def bloom_filter_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bloom-filter probe pruning, certified end to end: the build side
     (BUILDING-segment customers) populates a k=3, m=1024 filter; the probe

@@ -44,7 +44,6 @@ _EMB_DIM = 64  # every vector column in the fixture schema (embeddings,
     FROM embeddings
     GROUP BY label
     """,
-    tags=("similarity", "array"),
 )
 def emb_norms_per_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L2-norm statistics per label — array fold + hash agg, no UDF."""
@@ -76,7 +75,6 @@ def emb_norms_per_label(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(count(*) AS BIGINT) AS n_vecs
     FROM cells GROUP BY label, pos
     """,
-    tags=("similarity", "array", "agg"),
 )
 def emb_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-label centroid (element-wise vector mean) — the k-means/IVF
@@ -111,7 +109,6 @@ def emb_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY cos_sim DESC, vec_id ASC
     LIMIT 10
     """,
-    tags=("similarity", "topk"),
 )
 def sim_brute_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-10 neighbors of vec_id=0. The query vector is a
@@ -203,7 +200,6 @@ def _lsh_bucket_sql(vec: str) -> str:
     ORDER BY cos_sim DESC, b.vec_id ASC
     LIMIT 10
     """,
-    tags=("similarity", "ann", "lsh"),
 )
 def sim_lsh_bucket_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Random-hyperplane LSH ANN — the 100 TB scale path for cosine search.
@@ -269,7 +265,6 @@ def sim_lsh_bucket_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY cos_sim DESC, a.vec_id ASC
     LIMIT 10
     """,
-    tags=("similarity", "ann", "ivf"),
 )
 def sim_ivf_probe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF coarse-quantizer ANN: assign every vector to its nearest of 8
@@ -461,7 +456,6 @@ def _ivf_train_sql_ctes() -> str:
     ORDER BY cos_sim DESC, a.vec_id ASC
     LIMIT 10
     """,
-    tags=("similarity", "ann", "ivf", "kmeans"),
 )
 def sim_ivf_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF with a TRAINED coarse quantizer: 2 deterministic Lloyd's k-means
@@ -613,7 +607,6 @@ def _pq_code_sql(vec: str, m: int) -> str:
     ORDER BY adc_dist ASC, e.vec_id ASC
     LIMIT 10
     """,
-    tags=("similarity", "ann", "pq"),
 )
 def sim_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ANN with asymmetric distance computation:
@@ -707,7 +700,6 @@ def sim_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY adc_dist ASC, e.vec_id ASC
     LIMIT 10
     """,
-    tags=("similarity", "ann", "ivf", "pq"),
 )
 def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ composite (the faiss ``IndexIVFPQ`` shape with
@@ -785,7 +777,6 @@ def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM scored
     ) WHERE rn <= 3
     """,
-    tags=("similarity", "topk", "window"),
 )
 def sim_cosine_topk_per_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-label top-3 nearest neighbors — grouped ANN evaluation shape
@@ -891,7 +882,7 @@ def _sq8_reconstruct(vec: Column, mins: Column, maxs: Column) -> Column:
     return F.transform(vec, cell)
 
 
-@register("sim_sq8_quant_topk", oracle=_SQ8_ORACLE, tags=("similarity", "quantization"))
+@register("sim_sq8_quant_topk", oracle=_SQ8_ORACLE)
 def sim_sq8_quant_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-10 neighbors of vec_id=0 under SQ8 scalar quantization, each row
     flagged ``in_exact_top10`` against the uncompressed brute-force answer —
@@ -1011,11 +1002,7 @@ def _jl_oracle() -> str:
     """
 
 
-@register(
-    "random_projection_jl",
-    oracle=_jl_oracle(),
-    tags=("similarity", "projection", "jl"),
-)
+@register("random_projection_jl", oracle=_jl_oracle())
 def random_projection_jl(spark: SparkSession, sf_dir: str) -> DataFrame:
     """64→16 JL projection with a deterministic Achlioptas ±1/√k matrix;
     emits the 16 components and each vector's squared-norm preservation
@@ -1096,11 +1083,7 @@ def _recall_oracle() -> str:
     """
 
 
-@register(
-    "sim_lsh_recall_certified",
-    oracle=_recall_oracle(),
-    tags=("similarity", "ann", "recall-certified"),
-)
+@register("sim_lsh_recall_certified", oracle=_recall_oracle())
 def sim_lsh_recall_certified(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@10 of sim_lsh_bucket_topk vs sim_brute_cosine_topk, as one
     certified summary row — the number an ANN rollout is gated on. Both
@@ -1186,11 +1169,7 @@ def _kcenter_oracle() -> str:
     """
 
 
-@register(
-    "kcenter_coreset_selection",
-    oracle=_kcenter_oracle(),
-    tags=("similarity", "curation", "iterative", "coreset"),
-)
+@register("kcenter_coreset_selection", oracle=_kcenter_oracle())
 def kcenter_coreset_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Greedy k-center (farthest-first) coreset selection over the
     embedding table: seed = lowest vec_id, then 5 greedy picks of the
@@ -1358,11 +1337,7 @@ def _dbscan_oracle() -> str:
 DBSCAN_GRID_ORACLE = _dbscan_oracle()
 
 
-@register(
-    "dbscan_grid_roles",
-    oracle=DBSCAN_GRID_ORACLE,
-    tags=("similarity", "clustering", "dbscan"),
-)
+@register("dbscan_grid_roles", oracle=DBSCAN_GRID_ORACLE)
 def dbscan_grid_roles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DBSCAN-style core/border/noise labeling on the integer grid: seeded
     2-D projection -> 1/1024 quantization -> eps-cell bucketing -> 3x3

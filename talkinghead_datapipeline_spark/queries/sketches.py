@@ -130,7 +130,7 @@ def hll_estimate(registers: DataFrame, group: str) -> DataFrame:
     )
 
 
-@register("hll_distinct_users", oracle=_HLL_ORACLE, tags=("sketch", "agg"))
+@register("hll_distinct_users", oracle=_HLL_ORACLE)
 def hll_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HyperLogLog(p=9) distinct-user estimate per event_type, certified
     row-by-row against exact count(DISTINCT) — the oracle builds the SAME

@@ -46,11 +46,7 @@ _CHI2_ORACLE = """
 """
 
 
-@register(
-    "chi2_lang_source_cells",
-    oracle=_CHI2_ORACLE,
-    tags=("stats", "analytics", "agg"),
-)
+@register("chi2_lang_source_cells", oracle=_CHI2_ORACLE)
 def chi2_lang_source_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Chi-square independence cells for lang × source: observed counts,
     expected counts under independence (row·col/total), and each cell's
@@ -116,11 +112,7 @@ _BENFORD_ORACLE = """
 """
 
 
-@register(
-    "benford_first_digit",
-    oracle=_BENFORD_ORACLE,
-    tags=("stats", "profiling", "audit"),
-)
+@register("benford_first_digit", oracle=_BENFORD_ORACLE)
 def benford_first_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benford's-law first-digit audit of order totals: per leading digit,
     the observed share vs log10(1 + 1/d) and the signed deviation — the
@@ -190,11 +182,7 @@ _HIST_ORACLE = f"""
 """
 
 
-@register(
-    "histogram_fixed_width",
-    oracle=_HIST_ORACLE,
-    tags=("profiling", "histogram", "agg"),
-)
+@register("histogram_fixed_width", oracle=_HIST_ORACLE)
 def histogram_fixed_width(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-width 20-bin histogram of order totals with a DENSE bin
     spine: every bin appears even at count 0 (sequence() spine + left
@@ -287,11 +275,7 @@ _MODE_ORACLE = """
 """
 
 
-@register(
-    "mode_nation_per_segment",
-    oracle=_MODE_ORACLE,
-    tags=("stats", "agg", "window"),
-)
+@register("mode_nation_per_segment", oracle=_MODE_ORACLE)
 def mode_nation_per_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic per-group mode: the most common customer nation per
     market segment, ties broken by lowest nation key. Engine-native mode()
@@ -346,11 +330,7 @@ _IAT_ORACLE = """
 """
 
 
-@register(
-    "order_interarrival_by_segment",
-    oracle=_IAT_ORACLE,
-    tags=("stats", "analytics", "window"),
-)
+@register("order_interarrival_by_segment", oracle=_IAT_ORACLE)
 def order_interarrival_by_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Order inter-arrival profile: days between each customer's
     consecutive orders (lag over (o_orderdate, o_orderkey) — the key
@@ -424,11 +404,7 @@ _BAYES_ORACLE = f"""
 """
 
 
-@register(
-    "bayes_smoothed_part_scores",
-    oracle=_BAYES_ORACLE,
-    tags=("stats", "analytics", "agg"),
-)
+@register("bayes_smoothed_part_scores", oracle=_BAYES_ORACLE)
 def bayes_smoothed_part_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-25 parts by Bayesian-smoothed mean order quantity: smoothed =
     (Σq + m·global_mean)/(n + m) with m=20 pseudo-observations — the
@@ -485,11 +461,7 @@ _MOM_ORACLE = """
 """
 
 
-@register(
-    "revenue_mom_growth",
-    oracle=_MOM_ORACLE,
-    tags=("stats", "analytics", "window", "timeseries"),
-)
+@register("revenue_mom_growth", oracle=_MOM_ORACLE)
 def revenue_mom_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Monthly revenue with month-over-month growth rate (lag window over
     the month-grain rollup; first month emits NULL growth, zero-revenue
@@ -586,11 +558,7 @@ LIMIT 1
 """
 
 
-@register(
-    "ks_two_sample_chars",
-    oracle=KS_TWO_SAMPLE_ORACLE,
-    tags=("stats", "ks", "two-sample", "drift"),
-)
+@register("ks_two_sample_chars", oracle=KS_TWO_SAMPLE_ORACLE)
 def ks_two_sample_chars(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact two-sample Kolmogorov-Smirnov statistic of n_chars for
     lang = 'en' vs the rest: the sup-distance of the two empirical CDFs as
@@ -724,11 +692,7 @@ FROM thr
 """
 
 
-@register(
-    "bh_fdr_lang_source",
-    oracle=BH_FDR_ORACLE,
-    tags=("stats", "fdr", "multiple-testing"),
-)
+@register("bh_fdr_lang_source", oracle=BH_FDR_ORACLE)
 def bh_fdr_lang_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benjamini-Hochberg FDR over the (lang, source) two-proportion-test
     battery: per cell the long-doc-rate z statistic vs the rest of the

@@ -121,7 +121,6 @@ def _run_events_stream(
     FROM agg, mx
     WHERE window_start + INTERVAL 1 HOUR <= max_ts
     """,
-    tags=("streaming", "window", "watermark"),
 )
 def streaming_hourly_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S9's tumbling agg on the real streaming path: file stream → watermark
@@ -181,7 +180,6 @@ def streaming_hourly_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame
     FROM rolled, mx
     WHERE session_end <= max_ts
     """,
-    tags=("streaming", "session", "watermark"),
 )
 def streaming_user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based sessionization on the streaming path: ``session_window``
@@ -224,7 +222,6 @@ def streaming_user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
      AND p.event_type = 'purchase' AND v.event_type = 'view'
      AND v.ts >= p.ts - INTERVAL 30 MINUTE AND v.ts <= p.ts
     """,
-    tags=("streaming", "join", "watermark"),
 )
 def streaming_purchase_view_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermarked STREAM-STREAM inner join — the one Structured Streaming
@@ -318,7 +315,6 @@ def _purchase_view_join(ev: DataFrame, how: str) -> DataFrame:
     )
     SELECT * FROM matched UNION ALL SELECT * FROM unmatched
     """,
-    tags=("streaming", "join", "watermark", "outer"),
 )
 def streaming_purchase_view_left(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LEFT-OUTER watermarked stream-stream join — the watermark-expiry
@@ -357,7 +353,6 @@ def streaming_purchase_view_left(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events
     GROUP BY user_id
     """,
-    tags=("streaming", "stateful", "applyInPandasWithState"),
 )
 def streaming_stateful_user_extents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUSTOM stateful operator on the real streaming path —
@@ -381,7 +376,6 @@ def streaming_stateful_user_extents(spark: SparkSession, sf_dir: str) -> DataFra
     oracle="""
     SELECT DISTINCT user_id, event_type FROM events
     """,
-    tags=("streaming", "dedup", "watermark"),
 )
 def streaming_dedup_event_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming exact dedup on the driver surface:
@@ -417,7 +411,6 @@ def streaming_dedup_event_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(c.c_nationkey AS BIGINT) AS nation_key
     FROM events e JOIN customer c ON c.c_custkey = e.user_id
     """,
-    tags=("streaming", "join", "broadcast"),
 )
 def streaming_enrich_static_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-STATIC join — the remaining Structured Streaming join class
@@ -471,7 +464,6 @@ def streaming_enrich_static_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE window_start + INTERVAL 2 HOUR <= max_ts
     GROUP BY window_start, event_type
     """,
-    tags=("streaming", "window", "sliding"),
 )
 def streaming_sliding_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SLIDING windows (2 h length, 30 min slide) on the streaming path —
@@ -520,7 +512,6 @@ def streaming_sliding_event_counts(spark: SparkSession, sf_dir: str) -> DataFram
       FROM events WHERE event_type = 'purchase'
     ) WHERE rn = 1
     """,
-    tags=("streaming", "foreachBatch", "upsert"),
 )
 def streaming_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """foreachBatch UPSERT sink — the remaining Structured Streaming SINK
@@ -621,7 +612,6 @@ def streaming_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame
     UNION ALL SELECT * FROM p_unmatched
     UNION ALL SELECT * FROM v_unmatched
     """,
-    tags=("streaming", "join", "watermark", "outer"),
 )
 def streaming_purchase_view_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FULL-OUTER watermarked stream-stream join — both sides' expiry
@@ -827,11 +817,7 @@ def _arrival_metrics(spark: SparkSession, metrics) -> DataFrame:
     )
 
 
-@register(
-    "streaming_late_data_metrics",
-    oracle=STREAMING_LATE_METRICS_ORACLE,
-    tags=("streaming", "watermark", "late-data", "metrics"),
-)
+@register("streaming_late_data_metrics", oracle=STREAMING_LATE_METRICS_ORACLE)
 def streaming_late_data_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermark late-data observability: per-micro-batch input and
     dropped-by-watermark counts from the STREAMING ENGINE's own state
@@ -904,11 +890,7 @@ GROUP BY 1
 """
 
 
-@register(
-    "streaming_late_sink_counts",
-    oracle=STREAMING_LATE_SINK_ORACLE,
-    tags=("streaming", "watermark", "late-data", "exactly-once"),
-)
+@register("streaming_late_sink_counts", oracle=STREAMING_LATE_SINK_ORACLE)
 def streaming_late_sink_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SINK side of the staged late-data run: the windows the
     append-mode aggregation emitted across the 3-batch straggler arrival,
@@ -1055,11 +1037,7 @@ FROM (SELECT user_id, s_us, e_us, n FROM emit2
 """
 
 
-@register(
-    "streaming_session_late_metrics",
-    oracle=STREAMING_SESSION_LATE_METRICS_ORACLE,
-    tags=("streaming", "watermark", "session"),
-)
+@register("streaming_session_late_metrics", oracle=STREAMING_SESSION_LATE_METRICS_ORACLE)
 def streaming_session_late_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-micro-batch input and dropped-by-watermark counts for a SESSION
     aggregation under the 3-batch straggler arrival — certifying contract
@@ -1092,11 +1070,7 @@ def streaming_session_late_metrics(spark: SparkSession, sf_dir: str) -> DataFram
     return _arrival_metrics(spark, metrics)
 
 
-@register(
-    "streaming_session_late_sink",
-    oracle=STREAMING_SESSION_LATE_SINK_ORACLE,
-    tags=("streaming", "watermark", "session"),
-)
+@register("streaming_session_late_sink", oracle=STREAMING_SESSION_LATE_SINK_ORACLE)
 def streaming_session_late_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SINK side of the staged session-late run: which merged sessions
     the append-mode session aggregation emitted, batch by batch, while
@@ -1147,7 +1121,6 @@ def streaming_session_late_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events WHERE event_type = 'purchase'
     GROUP BY user_id
     """,
-    tags=("streaming", "incremental", "foreachBatch", "maintenance"),
 )
 def incremental_recompute_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental maintenance certified equivalent to recompute: per-user

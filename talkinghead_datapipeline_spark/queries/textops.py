@@ -35,7 +35,6 @@ from talkinghead_datapipeline_spark.queries import register
     GROUP BY 1
     HAVING count(*) > 1
     """,
-    tags=("dedup", "text"),
 )
 def dedup_exact_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact duplicate groups by content md5 — one shuffle on the digest
@@ -61,7 +60,6 @@ def dedup_exact_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM documents
     ) WHERE rn = 1
     """,
-    tags=("dedup", "text"),
 )
 def dedup_exact_keep_first(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup keeping the lowest doc_id per content group (the usual
@@ -96,7 +94,6 @@ _SW_SQL = ", ".join(f"'{w}'" for w in _STOPWORDS)
     FROM documents
     WHERE length(text) > 0
     """,
-    tags=("text",),
 )
 def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Whitespace tokenization + stopword counting — all built-in array ops."""
@@ -134,7 +131,6 @@ def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM documents
     WHERE length(text) > 0
     """,
-    tags=("text",),
 )
 def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Composite quality score: capped length score + non-stopword ratio.
@@ -180,7 +176,6 @@ def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
            substr(md5(text), 1, 8) AS fp_hex
     FROM documents
     """,
-    tags=("text", "dedup"),
 )
 def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic 60-bit fingerprint = first 15 hex chars of content md5 —
@@ -227,7 +222,7 @@ _LANGID_ORACLE = f"""
 """
 
 
-@register("lang_id_heuristic", oracle=_LANGID_ORACLE, tags=("text",))
+@register("lang_id_heuristic", oracle=_LANGID_ORACLE)
 def lang_id_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Marker-stopword language scoring (the n-gram-free fallback tier of a
     language-ID stack); argmax over per-language marker densities."""
@@ -273,7 +268,6 @@ _BPE_RE = "'[a-z]{1,2}| ?[a-zA-Z]+| ?[0-9]+| ?[^ a-zA-Z0-9]+"
     FROM documents
     WHERE length(text) > 0
     """,
-    tags=("text", "tokenize"),
 )
 def text_bpe_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token budgeting with a BPE-style pre-tokenizer regex (the GPT-2
@@ -313,7 +307,6 @@ def text_bpe_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY cnt DESC, pair ASC
     LIMIT 20
     """,
-    tags=("text", "tokenize", "bpe-train"),
 )
 def bpe_top_merge_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The BPE TRAINING primitive (Sennrich et al. 2016): corpus-global
@@ -373,7 +366,6 @@ def bpe_top_merge_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM grouped
     GROUP BY doc_id
     """,
-    tags=("text", "quality", "gopher"),
 )
 def gopher_dup_line_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher's duplicate-LINE repetition signals (table A1 rows 1-2 of
@@ -485,7 +477,6 @@ _CMS_BUCKET_SQL = (
     FROM tp JOIN sk ON tp.j = sk.j AND tp.bucket = sk.bucket
     GROUP BY tp.token, tp.true_cnt
     """,
-    tags=("text", "sketch", "cms", "heavy-hitters"),
 )
 def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-min sketch over corpus token frequencies, certified against
@@ -550,7 +541,6 @@ def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM documents
     GROUP BY source
     """,
-    tags=("text", "profiling"),
 )
 def profile_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source corpus profile: row counts, empty-text rate, language
@@ -600,7 +590,6 @@ def profile_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
                                ORDER BY para_idx), '') AS text_dedup
     FROM r GROUP BY doc_id
     """,
-    tags=("dedup", "text", "paragraph"),
 )
 def paragraph_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-document paragraph dedup, keep-first-occurrence: split each doc
@@ -711,7 +700,6 @@ def _gopher_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     LEFT JOIN top2 t ON b.doc_id = t.doc_id
     LEFT JOIN dup3 d ON b.doc_id = d.doc_id
     """,
-    tags=("text", "quality", "gopher"),
 )
 def gopher_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document repetition quality signals in the Gopher family:
@@ -844,7 +832,6 @@ def gopher_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
                  / b.n_chars_actual, 6) AS dup_trigram_char_frac_exact
     FROM base b LEFT JOIN covdoc c ON b.doc_id = c.doc_id
     """,
-    tags=("text", "quality", "gopher", "coverage"),
 )
 def gopher_dup_trigram_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """POSITION-ONCE duplicate-trigram character fraction — the exact
@@ -956,7 +943,6 @@ def _pii_redacted(text):
              '{_PII_IPV4}', '|||IP|||', 'g') AS text_redacted
     FROM documents
     """,
-    tags=("text", "pii", "privacy"),
 )
 def pii_redact_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PII anonymization pass: count and redact emails, phone numbers
@@ -1010,7 +996,6 @@ def pii_redact_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM cnt c JOIN tot USING (doc_id)
     GROUP BY c.doc_id
     """,
-    tags=("text", "quality"),
 )
 def text_unigram_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document unigram Shannon entropy (bits) and type-token ratio.
@@ -1085,7 +1070,7 @@ _BPE_APPLY_ORACLE = f"""
 """
 
 
-@register("bpe_apply_merges", oracle=_BPE_APPLY_ORACLE, tags=("text", "tokenize"))
+@register("bpe_apply_merges", oracle=_BPE_APPLY_ORACLE)
 def bpe_apply_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Greedy BPE ENCODE with a fixed ordered merge table: lowercase, mark
     spaces '▁' (SentencePiece), explode to space-separated symbols, then
@@ -1165,7 +1150,7 @@ _BIGRAM_LM_ORACLE = f"""
 """
 
 
-@register("bigram_lm_doc_scores", oracle=_BIGRAM_LM_ORACLE, tags=("text", "quality", "lm"))
+@register("bigram_lm_doc_scores", oracle=_BIGRAM_LM_ORACLE)
 def bigram_lm_doc_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document bigram cross-entropy under the corpus's own MLE bigram
     model: H(doc) = avg(−log2 c(w1,w2)/c(w1)). Low scores flag boilerplate
@@ -1253,7 +1238,7 @@ _TFIDF_ORACLE = rf"""
 """
 
 
-@register("tfidf_top_terms", oracle=_TFIDF_ORACLE, tags=("text", "retrieval"))
+@register("tfidf_top_terms", oracle=_TFIDF_ORACLE)
 def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 TF-IDF terms per document (smoothed idf = ln((N+1)/(df+1))+1,
     sklearn's convention). Wordcount-shaped: tf is a (doc, term) hash agg
@@ -1338,7 +1323,7 @@ _PMI_ORACLE = f"""
 """
 
 
-@register("pmi_top_collocations", oracle=_PMI_ORACLE, tags=("text", "collocation"))
+@register("pmi_top_collocations", oracle=_PMI_ORACLE)
 def pmi_top_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 bigram collocations by pointwise mutual information
     (pmi = log2(p(w1,w2) / p(w1)p(w2)), min support 5) — the
@@ -1468,7 +1453,7 @@ def _bm25_oracle() -> str:
     """
 
 
-@register("bm25_topk_docs", oracle=_bm25_oracle(), tags=("text", "retrieval"))
+@register("bm25_topk_docs", oracle=_bm25_oracle())
 def bm25_topk_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Okapi BM25 (k1=1.2, b=0.75) top-10 docs for a fixed 4-term query.
 
@@ -1586,11 +1571,7 @@ def _substr_dup_oracle() -> str:
     """
 
 
-@register(
-    "substring_dup_coverage",
-    oracle=_substr_dup_oracle(),
-    tags=("text", "dedup", "coverage"),
-)
+@register("substring_dup_coverage", oracle=_substr_dup_oracle())
 def substring_dup_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc duplicated-token coverage under corpus-global exact-substring
     duplication (Lee et al. 2022 ExactSubstr, k=8 tokens): a position is
@@ -1678,7 +1659,6 @@ _SUBWORD_MAX = 4  # max subword piece length: fertility(word) = ceil(len/4)
     FROM per_doc
     GROUP BY lang
     """,
-    tags=("text", "tokenize", "analytics"),
 )
 def tokenizer_fertility_per_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-weighted tokenizer fertility per language under a
@@ -1752,11 +1732,7 @@ WHERE d.n_chars > 0
 """
 
 
-@register(
-    "doc_chunk_overlap",
-    oracle=DOC_CHUNK_ORACLE,
-    tags=("text", "chunking", "explode"),
-)
+@register("doc_chunk_overlap", oracle=DOC_CHUNK_ORACLE)
 def doc_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Overlapping document chunking (200-char windows, stride 150) — the
     retrieval/context-packing preprocessing pass, emitted WITH the chunk

@@ -63,7 +63,7 @@ _S7_ORACLE = """
 """
 
 
-@register("s7_resample_linear", oracle=_S7_ORACLE, tags=("timeseries", "S7"))
+@register("s7_resample_linear", oracle=_S7_ORACLE)
 def s7_resample_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Resample each user's 'view' series from 50 fps onto ceil(0.6·L) frames
     (wav2vec/utils.py:5-21 grid semantics) via operators.resample — closed-form
@@ -109,7 +109,6 @@ def s7_resample_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(max(event_id) AS BIGINT) AS last_hit
     FROM hits GROUP BY user_id, alert_id
     """,
-    tags=("timeseries", "rangejoin", "join"),
 )
 def range_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Point-in-interval join at scale: per-user P95 spikes open 10-minute
@@ -168,7 +167,6 @@ def range_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events
     QUALIFY event_type = 'purchase'
     """,
-    tags=("timeseries", "asof", "window"),
 )
 def asof_prior_view_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of join expressed as an ignore-nulls carry-forward window — O(N)
@@ -222,7 +220,6 @@ def asof_prior_view_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM sessions
     GROUP BY user_id, session_id
     """,
-    tags=("timeseries", "session"),
 )
 def sessionize_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sessionization: lag-gap flag + running sum = session id, then per-
@@ -265,7 +262,6 @@ def sessionize_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders JOIN customer ON o_custkey = c_custkey
     GROUP BY c_mktsegment
     """,
-    tags=("agg", "pivot"),
 )
 def pivot_status_by_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pivot order status → columns via groupBy().pivot() (Catalyst rewrites
@@ -309,7 +305,6 @@ def pivot_status_by_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events
     GROUP BY event_type
     """,
-    tags=("json", "agg"),
 )
 def json_props_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Typed extraction from the JSON props string + rollup (the reference's
@@ -335,7 +330,6 @@ def json_props_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events
     GROUP BY event_type
     """,
-    tags=("json", "variant", "agg"),
 )
 def variant_props_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semi-structured extraction through Spark 4's native VariantType:
@@ -378,7 +372,6 @@ def variant_props_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE l_quantity < half_avg_qty
     GROUP BY p_brand
     """,
-    tags=("join", "subquery", "agg"),
 )
 def q17_below_avg_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Small-lot revenue per brand: self-agg threshold join (Q17 shape).
@@ -434,7 +427,6 @@ def q17_below_avg_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM changes
     WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
     """,
-    tags=("cdc", "window"),
 )
 def scd2_user_value_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SCD-2 interval table from a change stream: each purchase event opens
@@ -494,7 +486,6 @@ def scd2_user_value_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM dev d JOIN mad m ON m.user_id = d.user_id
     GROUP BY d.user_id
     """,
-    tags=("cleaning", "quantile", "agg"),
 )
 def robust_outlier_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user robust outlier counts: median + MAD (scaled by the normal
@@ -553,7 +544,6 @@ def robust_outlier_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     FULL OUTER JOIN last_ev c ON c.user_id = b.key
     WHERE NOT (c.user_id IS NOT NULL AND c.event_type = 'error')
     """,
-    tags=("cdc", "merge", "join"),
 )
 def merge_upsert_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MERGE INTO with all three WHEN branches: the latest event per user
@@ -635,7 +625,6 @@ def snap_hash20(key) -> "F.Column":
     FROM v1 FULL OUTER JOIN v2 ON v2.key = v1.key
     GROUP BY 1
     """,
-    tags=("versioning", "join", "agg"),
 )
 def snapshot_diff_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Diff two snapshot versions of orders (v2 = v1 with 1/20 of rows
@@ -701,7 +690,6 @@ def snapshot_diff_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts)
                  RANGE BETWEEN 1800000000 PRECEDING AND CURRENT ROW)
     """,
-    tags=("timeseries", "window", "range-frame"),
 )
 def range_frame_trailing_30min(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trailing-30-minute rolling count/sum per user via a RANGE window
@@ -781,7 +769,6 @@ def range_frame_trailing_30min(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS click_to_purchase
     FROM funnel
     """,
-    tags=("timeseries", "funnel", "session"),
 )
 def session_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered funnel (view → later click → later purchase) within 30-min
@@ -873,7 +860,7 @@ def _ewma_oracle() -> str:
     """
 
 
-@register("ewma_user_values", oracle=_ewma_oracle(), tags=("timeseries", "window"))
+@register("ewma_user_values", oracle=_ewma_oracle())
 def ewma_user_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trailing EWMA (alpha=0.2) per user series, truncated at 24 lags —
     pandas ``ewm(alpha=.2, adjust=True)`` up to a <0.5% weight tail.
@@ -931,7 +918,6 @@ def ewma_user_values(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(CASE WHEN s.v IS NULL THEN 1 ELSE 0 END AS BIGINT) AS is_gap
     FROM grid g LEFT JOIN sparse s ON g.user_id = s.user_id AND g.h = s.h
     """,
-    tags=("timeseries", "gapfill"),
 )
 def gap_fill_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hourly gap fill with forward fill per user: sparse hourly means ->
@@ -1001,7 +987,6 @@ _BAR_US = 6 * 3600 * 1_000_000  # 6h in microseconds
     FROM events
     GROUP BY 1, 2
     """,
-    tags=("timeseries", "ohlc", "agg"),
 )
 def ohlc_6h_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OHLC + volume per (event_type, 6h bar): open/close via min_by/max_by
@@ -1070,7 +1055,6 @@ _WEEK_US = 7 * 24 * 3600 * 1_000_000
     FROM active a JOIN sizes s ON s.cohort_week = a.cohort_week
     GROUP BY a.cohort_week, a.week_idx, s.cohort_size
     """,
-    tags=("timeseries", "analytics", "cohort"),
 )
 def retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weekly retention matrix over PURCHASE activity: cohort = a user's
@@ -1177,11 +1161,7 @@ LIMIT 1
 """
 
 
-@register(
-    "changepoint_daily_revenue",
-    oracle=CHANGEPOINT_ORACLE,
-    tags=("timeseries", "changepoint", "segmentation"),
-)
+@register("changepoint_daily_revenue", oracle=CHANGEPOINT_ORACLE)
 def changepoint_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Single best changepoint of the daily order-revenue series (binary
     segmentation, first split): the date that maximizes the between-
@@ -1335,11 +1315,7 @@ ORDER BY idx.dow
 """
 
 
-@register(
-    "seasonal_dow_backtest",
-    oracle=SEASONAL_DOW_ORACLE,
-    tags=("timeseries", "seasonality", "backtest"),
-)
+@register("seasonal_dow_backtest", oracle=SEASONAL_DOW_ORACLE)
 def seasonal_dow_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Day-of-week seasonal index (floor ppm of dow mean vs grand mean)
     plus a walk-forward MAE backtest of the seasonal-naive forecast
@@ -1516,11 +1492,7 @@ FROM z
 """
 
 
-@register(
-    "mann_kendall_daily_trend",
-    oracle=MANN_KENDALL_ORACLE,
-    tags=("timeseries", "trend", "mann-kendall", "nonparametric"),
-)
+@register("mann_kendall_daily_trend", oracle=MANN_KENDALL_ORACLE)
 def mann_kendall_daily_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mann-Kendall monotone-trend test on daily order revenue: the exact
     pairwise sign statistic S, the tie-corrected x18 variance numerator,
@@ -1647,11 +1619,7 @@ FROM med
 """
 
 
-@register(
-    "theil_sen_daily_slope",
-    oracle=THEIL_SEN_ORACLE,
-    tags=("timeseries", "trend", "theil-sen", "robust"),
-)
+@register("theil_sen_daily_slope", oracle=THEIL_SEN_ORACLE)
 def theil_sen_daily_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Theil-Sen robust slope of daily order revenue (cents/day): the
     median pairwise slope, floor-micro, with distribution-free 2.5%/97.5%
@@ -1863,11 +1831,7 @@ FROM terms ORDER BY lag
 """
 
 
-@register(
-    "acf_ljung_box_daily",
-    oracle=ACF_LJUNG_BOX_ORACLE,
-    tags=("timeseries", "acf", "ljung-box", "serial-dependence"),
-)
+@register("acf_ljung_box_daily", oracle=ACF_LJUNG_BOX_ORACLE)
 def acf_ljung_box_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sample autocorrelation of daily revenue (lags 1..7, zero-filled
     calendar grid, floored-integer mean) with the Ljung-Box portmanteau

@@ -48,7 +48,6 @@ def _rev_units():
                   WHERE l_orderkey = o_orderkey AND l_discount > 0.08)
     GROUP BY o_orderpriority
     """,
-    tags=("join", "semi", "agg"),
 )
 def q4_priority_order_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q4 shape: EXISTS → left-semi join (never multiplies rows), then a
@@ -78,7 +77,6 @@ def q4_priority_order_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
       AND l_discount BETWEEN 0.05 AND 0.07
       AND l_quantity < 24
     """,
-    tags=("agg", "pushdown"),
 )
 def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q6: the canonical pushdown probe — every predicate reaches the
@@ -129,7 +127,6 @@ def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY revenue DESC, c_custkey ASC
     LIMIT 20
     """,
-    tags=("join", "agg", "topk"),
 )
 def q10_returned_item_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q10: lost-revenue ranking. Facts join on pruned date/returnflag
@@ -178,7 +175,6 @@ def q10_returned_item_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
       AND l_shipdate <  TIMESTAMP '1999-01-01 00:00:00'
     GROUP BY l_linestatus
     """,
-    tags=("join", "agg", "conditional"),
 )
 def q12_priority_by_linestatus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q12 shape: conditional aggregation — CASE-sum fan-out computed in one
@@ -215,7 +211,6 @@ def q12_priority_by_linestatus(spark: SparkSession, sf_dir: str) -> DataFrame:
         AND l_shipdate <  TIMESTAMP '1998-04-01 00:00:00'
     )
     """,
-    tags=("join", "agg", "broadcast"),
 )
 def q14_promo_revenue_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q14: ratio-of-sums over a broadcast dim join — part stays on the map
@@ -264,7 +259,6 @@ def q14_promo_revenue_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY totalprice DESC, o_orderkey ASC
     LIMIT 20
     """,
-    tags=("join", "agg", "subquery", "topk"),
 )
 def q18_large_volume_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q18: HAVING-subquery membership — the qualifying key set is itself an
@@ -311,7 +305,6 @@ def q18_large_volume_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
        OR (p_brand = 'Brand#15' AND p_size BETWEEN 1 AND 35
            AND l_quantity BETWEEN 20 AND 30)
     """,
-    tags=("join", "agg", "pushdown"),
 )
 def q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q19: OR-of-ANDs across both join sides. Catalyst factors the
@@ -366,7 +359,6 @@ def q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
                         AND o_orderdate >= TIMESTAMP '2001-01-01 00:00:00')
     GROUP BY c_nationkey
     """,
-    tags=("join", "anti", "subquery", "agg"),
 )
 def q22_dormant_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q22 shape: scalar-subquery threshold (1-row broadcast cross join) +
@@ -415,7 +407,6 @@ def q22_dormant_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders
     GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
     """,
-    tags=("agg", "grouping-sets"),
 )
 def grouping_sets_order_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit GROUPING SETS (beyond the rollup/cube queries): three
@@ -443,7 +434,6 @@ def grouping_sets_order_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT p_partkey, 'size' AS measure, round(CAST(p_size AS DOUBLE), 2) AS value
     FROM part
     """,
-    tags=("unpivot", "reshape"),
 )
 def unpivot_part_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unpivot (wide → long melt) — the inverse of pivot_status_by_segment;
@@ -470,7 +460,6 @@ def unpivot_part_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
     GROUP BY s_nationkey
     """,
-    tags=("join", "skew", "salting"),
 )
 def skew_salted_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SALTED equi-join (operators.skew.salted_join): the skewed fact side
@@ -505,7 +494,6 @@ def skew_salted_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lineitem
     GROUP BY l_returnflag, l_linestatus
     """,
-    tags=("agg", "skew", "salting"),
 )
 def skew_salted_quantity_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-phase SALTED aggregation (operators.skew): groupBy(keys + salt)

@@ -62,7 +62,6 @@ from talkinghead_datapipeline_spark.queries.tpch_extra import _rev_units
     ORDER BY acctbal DESC, c.s_suppkey ASC, c.p_partkey ASC
     LIMIT 100
     """,
-    tags=("join", "subquery", "correlated-min", "topk"),
 )
 def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q2 shape (min-cost supplier). The reference schema has no partsupp,
@@ -143,7 +142,6 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) shipping
     GROUP BY supp_nation, cust_nation, l_year
     """,
-    tags=("join", "agg", "self-dim"),
 )
 def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q7: bilateral trade volume. The nation dim joins twice (supplier side
@@ -220,7 +218,6 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) all_nations
     GROUP BY o_year
     """,
-    tags=("join", "agg", "conditional", "ratio"),
 )
 def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q8: one nation's share of regional revenue per year — a 7-relation
@@ -292,7 +289,6 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) profit
     GROUP BY nation, o_year
     """,
-    tags=("join", "agg", "broadcast"),
 )
 def q9_product_type_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q9 shape (profit by supplier nation and order year). partsupp's
@@ -350,7 +346,6 @@ def q9_product_type_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE value > (SELECT avg(value) * 2.0 FROM vals)
     ORDER BY part_value DESC, p_partkey ASC
     """,
-    tags=("agg", "subquery", "having-threshold"),
 )
 def q11_important_part_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q11 shape: flag parts whose traded value (quantity x retail price,
@@ -397,7 +392,6 @@ def q11_important_part_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY c_count
     ORDER BY custdist DESC, c_count DESC
     """,
-    tags=("outer-join", "agg", "distribution"),
 )
 def q13_customer_order_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q13: order-count histogram. The priority filter lives in the OUTER
@@ -439,7 +433,6 @@ def q13_customer_order_distribution(spark: SparkSession, sf_dir: str) -> DataFra
     WHERE rev4 = (SELECT max(rev4) FROM revenue)
     ORDER BY supplier.s_suppkey ASC
     """,
-    tags=("agg", "subquery", "argmax"),
 )
 def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q15: the revenue view is computed ONCE (persisted) and reused for
@@ -499,7 +492,6 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY p_brand, p_type, p_size
     ORDER BY supplier_cnt DESC, p_brand ASC, p_type ASC, p_size ASC
     """,
-    tags=("join", "anti", "count-distinct"),
 )
 def q16_supplier_part_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q16 shape: how many suppliers can supply each (brand, type, size),
@@ -554,7 +546,6 @@ def q16_supplier_part_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ORDER BY s_suppkey ASC
     """,
-    tags=("join", "semi", "nested-subquery"),
 )
 def q20_excess_share_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q20 shape: suppliers holding an outsized share of a part's flow —
@@ -612,7 +603,6 @@ def q20_excess_share_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY numwait DESC, s_name ASC
     LIMIT 100
     """,
-    tags=("join", "semi", "anti", "correlated-nonequi"),
 )
 def q21_lone_blamed_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q21 shape: the supplier solely at fault on a multi-supplier order.

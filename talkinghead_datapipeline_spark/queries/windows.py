@@ -160,7 +160,6 @@ _N12_LO, _N12_HI = centered_frame_bounds(5)  # (-2, 2): w//2 preceding/following
     WINDOW w AS (PARTITION BY user_id ORDER BY event_id
                  ROWS BETWEEN {-_N12_LO} PRECEDING AND {_N12_HI} FOLLOWING)
     """,
-    tags=("window", "N12"),
 )
 def n12_rolling_extent(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rolling extent over w=5 neighbor frames (bboxes.py:123-145), O(N) via
@@ -198,7 +197,6 @@ _S6_LO, _S6_HI = as_windowed_bounds(16)  # (-8, 7)
     WINDOW w AS (PARTITION BY user_id ORDER BY event_id
                  ROWS BETWEEN {-_S6_LO} PRECEDING AND {_S6_HI} FOLLOWING)
     """,
-    tags=("window", "S6", "N23"),
 )
 def s6_sliding_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     """`average_features` sliding mean, w=16 (dpl/processor/nodes/h5.py:235-237
@@ -220,9 +218,9 @@ def s6_sliding_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _savgol_fir_sql(window: int = 7, order: int = 3) -> str:
-    coefs = savgol_coefficients(window, order)
-    half = window // 2
+def _savgol_fir_sql() -> str:
+    coefs = savgol_coefficients(7, 3)
+    half = 3
     terms = []
     for k, c in enumerate(coefs):
         off = k - half
@@ -242,11 +240,11 @@ def _savgol_fir_sql(window: int = 7, order: int = 3) -> str:
                             ROWS BETWEEN {half} PRECEDING AND {half} FOLLOWING) AS n_in
       FROM events
       WINDOW w AS (PARTITION BY user_id ORDER BY event_id)
-    ) WHERE n_in = {window}
+    ) WHERE n_in = 7
     """
 
 
-@register("s8_savgol_fir", oracle=_savgol_fir_sql(7, 3), tags=("window", "S8"))
+@register("s8_savgol_fir", oracle=_savgol_fir_sql())
 def s8_savgol_fir(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Savgol(w=7, o=3) smoothing (callers: bboxes.py:159-162, emoca.py:91-97)
     as a fixed-coefficient FIR over lag/lead columns; interior rows only
@@ -279,11 +277,7 @@ def s8_savgol_fir(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "s8_savgol_exact",
-    oracle=_savgol_exact_oracle(_sg_hat(25, 3)),
-    tags=("window", "S8", "udf"),
-)
+@register("s8_savgol_exact", oracle=_savgol_exact_oracle(_sg_hat(25, 3)))
 def s8_savgol_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact scipy-parity savgol(w=25, o=3) incl. 'interp' edge refit —
     applyInPandas per user series (operators.rolling). The edge refit is a
@@ -350,11 +344,7 @@ def _n12_oracle() -> str:
     """
 
 
-@register(
-    "n12_emoca_bbox_pipeline",
-    oracle=_n12_oracle(),
-    tags=("window", "N12", "savgol", "pipeline"),
-)
+@register("n12_emoca_bbox_pipeline", oracle=_n12_oracle())
 def n12_emoca_bbox_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full EmocaLikeBboxes chain (bboxes.py:84-195), ALL stages oracle-
     checked: rolling extent w=5 (O(N) window frame) → exact savgol(25,3)
@@ -435,7 +425,6 @@ def n12_emoca_bbox_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events
     GROUP BY 1, 2
     """,
-    tags=("agg", "S9"),
 )
 def s9_tumbling_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Volume envelope: mean |amp| per fixed-count block
@@ -460,7 +449,6 @@ def s9_tumbling_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events
     GROUP BY 1, 2
     """,
-    tags=("agg", "S9", "date"),
 )
 def s9_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-based tumbling window (the streaming `window()` analog in batch)."""
@@ -489,7 +477,6 @@ def s9_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS frame_idx
     FROM events WHERE event_type = 'purchase'
     """,
-    tags=("window",),
 )
 def running_sum_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cumulative sum + frame index assignment (the engine's ordinal frame_idx
@@ -515,7 +502,6 @@ def running_sum_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events
     WINDOW w AS (PARTITION BY user_id ORDER BY event_id)
     """,
-    tags=("window",),
 )
 def lag_delta_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frame-to-frame delta (lag) + inter-event gap in whole seconds."""
@@ -564,7 +550,6 @@ _N23_W = 16
                  / {_N23_W}.0, 6) AS win_mean
     FROM idx
     """,
-    tags=("window", "S6", "N23", "edgepad"),
 )
 def n23_window_mean_edgepad(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT reference sliding mean, edge-replicated: window i averages
@@ -615,11 +600,7 @@ def n23_window_mean_edgepad(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 
-@register(
-    "s8_savgol_exact_w7",
-    oracle=_savgol_exact_oracle(_SG_H),
-    tags=("window", "S8", "savgol", "exact"),
-)
+@register("s8_savgol_exact_w7", oracle=_savgol_exact_oracle(_SG_H))
 def s8_savgol_exact_w7(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact savgol(7,3) INCLUDING the polynomial edge refit, as pure SQL:
     per-key collected series + per-position hat-matrix dot products

@@ -65,19 +65,14 @@ def clip_name_from_path(path: Column, root: str) -> Column:
     return F.regexp_replace(no_suffix, "/", "_")
 
 
-def scan_binary_dir(
-    spark: SparkSession,
-    root: str,
-    glob: str = "*",
-    recursive: bool = True,
-) -> DataFrame:
+def scan_binary_dir(spark: SparkSession, root: str, glob: str = "*") -> DataFrame:
     """E1 source scan: one row per file with clip_name key + binary payload
     + metadata struct. Deterministic order comes from orderBy(path) at the
     consumer (E4), never from listing order."""
     df = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", glob)
-        .option("recursiveFileLookup", str(recursive).lower())
+        .option("recursiveFileLookup", "true")
         .load(root)
     )
     return df.select(
@@ -91,12 +86,12 @@ def scan_binary_dir(
     )
 
 
-def image_frames_from_dir(spark: SparkSession, root: str, glob: str = "*.jpg") -> DataFrame:
+def image_frames_from_dir(spark: SparkSession, root: str) -> DataFrame:
     """FolderType image-sequence ingest (datatype.py:42-57): frame rows keyed
     (clip_name, frame_idx) — frame_idx parsed from the %06d filename."""
     files = (
         spark.read.format("binaryFile")
-        .option("pathGlobFilter", glob)
+        .option("pathGlobFilter", "*.jpg")
         .option("recursiveFileLookup", "true")
         .load(root)
     )
@@ -158,14 +153,9 @@ def _read_frames(target: str) -> list[tuple[int, bytes]]:
     return frames
 
 
-def video_to_frames(
-    df: DataFrame,
-    video_col: str = "content",
-    key_col: str = "clip_name",
-    ext: str = ".jpg",
-    ffmpeg_exe: str | None = None,
-) -> DataFrame:
-    """N2 demux: video binary → one row per frame (key, frame_idx, image).
+def video_to_frames(df: DataFrame, ext: str = ".jpg", ffmpeg_exe: str | None = None) -> DataFrame:
+    """N2 demux: ``(clip_name, content)`` video binaries → one row per frame
+    ``(clip_name, frame_idx, image)``.
 
     The reference shells out per clip with FFMPEG_TO_IMG_CMD
     (dpl/processor/nodes/ffmpeg.py:18-21,114-133: ``-start_number 0
@@ -177,13 +167,13 @@ def video_to_frames(
     A failed clip yields one error row (see ``_run_ffmpeg``)."""
     exe = _resolve_ffmpeg(ffmpeg_exe)
     ensure_package_shipped(df.sparkSession)
-    cols = [key_col, "frame_idx", "image", "error"]
-    out_schema = f"{key_col} string, frame_idx bigint, image binary, error string"
+    cols = ["clip_name", "frame_idx", "image", "error"]
+    out_schema = "clip_name string, frame_idx bigint, image binary, error string"
 
     def demux(batches):
         try:
             for pdf in batches:
-                for name, blob in zip(pdf[key_col], pdf[video_col]):
+                for name, blob in zip(pdf["clip_name"], pdf["content"]):
                     frames, err = _run_ffmpeg(
                         exe, [("in.video", blob)], "in.video",
                         _FFMPEG_TO_IMG_ARGS, f"frames/%06d{ext}", _read_frames,
@@ -200,16 +190,9 @@ def video_to_frames(
     return df.mapInPandas(demux, schema=out_schema)
 
 
-def frames_to_video(
-    df: DataFrame,
-    image_col: str = "image",
-    key_col: str = "clip_name",
-    idx_col: str = "frame_idx",
-    ext: str = ".jpg",
-    target_suffix: str = ".mp4",
-    ffmpeg_exe: str | None = None,
-) -> DataFrame:
-    """N3 mux: frame rows → one video binary per clip (ToVideoBaseNode).
+def frames_to_video(df: DataFrame, ffmpeg_exe: str | None = None) -> DataFrame:
+    """N3 mux: ``(clip_name, frame_idx, image)`` jpg frame rows → one mp4
+    binary per clip (ToVideoBaseNode).
 
     The reference's FFMPEG_TO_VIDEO_CMD (dpl/processor/nodes/ffmpeg.py:23-26,
     136-143: ``-i {source}/%6d{ext} -start_number 0 -qscale:v 3 {target}
@@ -222,8 +205,8 @@ def frames_to_video(
     every frame-grain operator uses, so Exchange reuse applies."""
     exe = _resolve_ffmpeg(ffmpeg_exe)
     ensure_package_shipped(df.sparkSession)
-    cols = [key_col, "video", "n_frames", "error"]
-    out_schema = f"{key_col} string, video binary, n_frames bigint, error string"
+    cols = ["clip_name", "video", "n_frames", "error"]
+    out_schema = "clip_name string, video binary, n_frames bigint, error string"
 
     def mux(pdf: pd.DataFrame) -> pd.DataFrame:
         def frame_files():
@@ -231,45 +214,39 @@ def frames_to_video(
             # f"{index:06d}.jpg" writer (dpl/processor/nodes/ffmpeg.py:18-21)
             # and ffmpeg's image2 demuxer, which reads %6d as zero-padded
             # (av_get_frame_filename expands it to %06d).
-            for n, blob in enumerate(pdf.sort_values(idx_col)[image_col]):
-                yield "frames/%06d%s" % (n, ext), blob
+            for n, blob in enumerate(pdf.sort_values("frame_idx")["image"]):
+                yield "frames/%06d.jpg" % n, blob
 
         video, err = _run_ffmpeg(
-            exe, frame_files(), f"frames/%06d{ext}",
-            _FFMPEG_TO_IMG_ARGS, f"out{target_suffix}", _read_bytes,
+            exe, frame_files(), "frames/%06d.jpg",
+            _FFMPEG_TO_IMG_ARGS, "out.mp4", _read_bytes,
         )
-        return pd.DataFrame([(pdf[key_col].iloc[0], video, len(pdf), err)], columns=cols)
+        return pd.DataFrame([(pdf["clip_name"].iloc[0], video, len(pdf), err)], columns=cols)
 
-    return df.groupBy(key_col).applyInPandas(mux, schema=out_schema)
+    return df.groupBy("clip_name").applyInPandas(mux, schema=out_schema)
 
 
-def transcode_media(
-    df: DataFrame,
-    content_col: str = "content",
-    key_col: str = "clip_name",
-    target_suffix: str = ".wav",
-    out_col: str = "media",
-    ffmpeg_exe: str | None = None,
-) -> DataFrame:
-    """N1/N4/N5 convert: media binary → transcoded binary, one row per clip.
+def transcode_media(df: DataFrame, ffmpeg_exe: str | None = None) -> DataFrame:
+    """N1/N4/N5 convert: ``(clip_name, content)`` media binaries → one
+    ``(clip_name, media)`` wav binary per clip.
 
     The reference's FFMPEG_CONVERT_CMD (dpl/processor/nodes/ffmpeg.py:13-16,
     146-156: ``ffmpeg -i {source} {target} -y``) — VideoToWav and AacToWav
-    are this with ``target_suffix='.wav'`` (the suffix selects the muxer,
-    exactly as the reference's target path does). Same mapInPandas shape
-    and error containment as ``video_to_frames``."""
+    are this with a ``.wav`` target (the suffix selects the muxer, exactly
+    as the reference's target path does). Same mapInPandas shape and error
+    containment as ``video_to_frames``."""
     exe = _resolve_ffmpeg(ffmpeg_exe)
     ensure_package_shipped(df.sparkSession)
-    cols = [key_col, out_col, "error"]
-    out_schema = f"{key_col} string, {out_col} binary, error string"
+    cols = ["clip_name", "media", "error"]
+    out_schema = "clip_name string, media binary, error string"
 
     def convert(batches):
         try:
             for pdf in batches:
-                for name, blob in zip(pdf[key_col], pdf[content_col]):
+                for name, blob in zip(pdf["clip_name"], pdf["content"]):
                     media, err = _run_ffmpeg(
                         exe, [("in.media", blob)], "in.media",
-                        (), f"out{target_suffix}", _read_bytes,
+                        (), "out.wav", _read_bytes,
                     )
                     yield pd.DataFrame([(name, media, err)], columns=cols)
         finally:

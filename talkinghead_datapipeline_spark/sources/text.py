@@ -80,13 +80,10 @@ def read_jsonl(
 
 
 def read_csv(
-    spark: SparkSession,
-    path: str,
-    schema: StructType,
-    header: bool = True,
-    sep: str = ",",
+    spark: SparkSession, path: str, schema: StructType
 ) -> tuple[DataFrame, DataFrame]:
-    """CSV twin of read_jsonl — same (good, errors) contract."""
+    """CSV twin of read_jsonl — same (good, errors) contract, for
+    comma-separated shards that each start with a header line."""
     # from_csv takes a DDL string, not a StructType (unlike from_json)
     ddl = ", ".join(
         f"`{f.name}` {f.dataType.simpleString()}"
@@ -95,21 +92,18 @@ def read_csv(
     parsed = F.from_csv(
         F.col("value"),
         ddl,
-        {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": CORRUPT_COL, "sep": sep},
+        {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": CORRUPT_COL},
     )
-    header_line = sep.join(f.name for f in schema.fields) if header else None
+    header_line = ",".join(f.name for f in schema.fields)
     return _split(spark, path, schema, parsed, skip_line=header_line)
 
 
-def write_jsonl(df: DataFrame, path: str, compression: str | None = None) -> None:
-    """Line-delimited JSON writer (one shard per task; compression=gzip
-    makes shards non-splittable on re-read — see module docstring)."""
-    w = df.write.mode("overwrite")
-    if compression:
-        w = w.option("compression", compression)
-    w.json(path)
+def write_jsonl(df: DataFrame, path: str) -> None:
+    """Line-delimited JSON writer, one uncompressed (splittable) shard per
+    task."""
+    df.write.mode("overwrite").json(path)
 
 
-def write_csv(df: DataFrame, path: str, header: bool = True) -> None:
-    w = df.write.mode("overwrite").option("header", header)
-    w.csv(path)
+def write_csv(df: DataFrame, path: str) -> None:
+    """CSV writer, one shard per task, each with a header line."""
+    df.write.mode("overwrite").option("header", True).csv(path)

@@ -252,18 +252,15 @@ def replay_micro_batches(
 
 
 def tumbling_stream_agg(
-    events: DataFrame,
-    ts_col: str = "ts",
-    window: str = "1 hour",
-    watermark: str = "2 hours",
+    events: DataFrame, window: str = "1 hour", watermark: str = "2 hours"
 ) -> DataFrame:
-    """S9's tumbling mean as a watermarked streaming aggregation — the
-    streaming twin of queries.windows.s9_tumbling_hourly."""
+    """S9's tumbling mean as a watermarked streaming aggregation over ``ts``
+    — the streaming twin of queries.windows.s9_tumbling_hourly."""
     from pyspark.sql import functions as F
 
     return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.window(ts_col, window).alias("win"), "event_type")
+        events.withWatermark("ts", watermark)
+        .groupBy(F.window("ts", window).alias("win"), "event_type")
         .agg(F.count(F.lit(1)).alias("n_events"), F.sum("value").alias("sum_value"))
         .select(
             F.col("win.start").alias("window_start"),

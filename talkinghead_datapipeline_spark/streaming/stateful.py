@@ -19,14 +19,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 
-def streaming_exact_dedup(
-    docs: DataFrame,
-    key_col: str = "content_hash",
-    ts_col: str = "ts",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Streaming exact dedup: keep the FIRST row per content hash within
-    the watermark horizon — ``dropDuplicatesWithinWatermark``, the
+def streaming_exact_dedup(docs: DataFrame) -> DataFrame:
+    """Streaming exact dedup: keep the FIRST row per ``content_hash`` within
+    a one-hour ``ts`` watermark horizon — ``dropDuplicatesWithinWatermark``, the
     streaming twin of ``operators.dedup.exact_dedup`` and the ingest-side
     guard of the corpus dedup stack (duplicates that arrive within the
     horizon never reach the sink; state for a hash is evicted once the
@@ -34,9 +29,7 @@ def streaming_exact_dedup(
     arrival volume — the property that makes it safe on an unbounded
     crawl firehose, where a plain ``dropDuplicates`` would grow state
     forever)."""
-    return docs.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
-        [key_col]
-    )
+    return docs.withWatermark("ts", "1 hour").dropDuplicatesWithinWatermark(["content_hash"])
 
 
 def running_user_totals(events: DataFrame) -> DataFrame:

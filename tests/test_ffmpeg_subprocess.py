@@ -85,9 +85,7 @@ def test_video_to_frames_subprocess(spark, stub_ffmpeg):
 
 
 def test_transcode_media_subprocess(spark, stub_ffmpeg):
-    out = transcode_media(
-        _clips(spark), target_suffix=".wav", ffmpeg_exe=stub_ffmpeg
-    ).collect()
+    out = transcode_media(_clips(spark), ffmpeg_exe=stub_ffmpeg).collect()
     got = {r.clip_name: bytes(r.media) for r in out}
     assert got == {"a": b"TRANSCODED:AAA", "b": b"TRANSCODED:BBB"}
     assert all(r.error is None for r in out)

@@ -19,6 +19,13 @@ from talkinghead_datapipeline_spark.queries.behavior import (
 )
 
 
+def _assert_no_overflow(rows):
+    """The bound kaplan_meier_survival's comment states: every fold
+    intermediate S·(n − d) is below 10^9 · n_at_risk, so it fits a BIGINT.
+    A corpus without event steps runs no fold (max over no steps is 0)."""
+    assert 10**9 * max((r["n_at_risk"] for r in rows), default=0) < 2**63
+
+
 def test_matches_independent_python_fold(spark, sf_dir):
     """Recompute the whole estimator from the raw events fixture in plain
     Python (pandas groupby + explicit loop fold) and demand bit-equality
@@ -56,10 +63,9 @@ def test_matches_independent_python_fold(spark, sf_dir):
         if d > 0:
             s = (s * (n_at_risk - d)) // n_at_risk
             expect.append((int(t), int(d), int(n_at_risk), int(s)))
-    got = [
-        (r["t_hours"], r["d_events"], r["n_at_risk"], r["km_survival_ppb"])
-        for r in kaplan_meier_survival(spark, sf_dir).collect()
-    ]
+    rows = kaplan_meier_survival(spark, sf_dir).collect()
+    _assert_no_overflow(rows)
+    got = [(r["t_hours"], r["d_events"], r["n_at_risk"], r["km_survival_ppb"]) for r in rows]
     assert got == expect
 
 
@@ -87,6 +93,7 @@ def test_crafted_boundaries(spark, tmp_path):
         [(i, i, "purchase", 1.0, t0) for i in range(5)],
     )
     rows = kaplan_meier_survival(spark, str(tmp_path)).collect()
+    _assert_no_overflow(rows)
     assert len(rows) == 1
     assert rows[0]["t_hours"] == 0
     assert rows[0]["n_at_risk"] == 5 and rows[0]["d_events"] == 5
@@ -105,7 +112,9 @@ def test_crafted_boundaries(spark, tmp_path):
         spark, tmp_path,
         [(i, i, "view", 1.0, t0 + dt.timedelta(hours=i)) for i in range(5)],
     )
-    assert kaplan_meier_survival(spark, str(tmp_path)).count() == 0
+    rows = kaplan_meier_survival(spark, str(tmp_path)).collect()
+    _assert_no_overflow(rows)
+    assert rows == []
     con = duckdb.connect()
     con.execute(
         "CREATE VIEW events AS SELECT * FROM read_parquet("

@@ -63,8 +63,8 @@ def test_renderer_consumes_projection():
     X = rng.normal(size=(16, 3))
     r = ShapeRenderer((4, 4))
     cam_a, cam_b = np.array([1.0, 0.0, 0.0]), np.array([2.0, 0.0, 0.0])
-    fa = r.render(X, view_transform(X, cam_a), cam_a)
-    fb = r.render(X, view_transform(X, cam_b), cam_b)
+    fa = r.render(X, view_transform(X, cam_a))
+    fb = r.render(X, view_transform(X, cam_b))
     assert len(fa) == len(fb) == 16
     assert fa != fb
 

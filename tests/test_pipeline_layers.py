@@ -229,9 +229,7 @@ def test_model_stubs_contracts():
     np.testing.assert_allclose(v0, flame.template)
 
     cam = np.array([1.0, 0.0, 0.0])
-    img = ShapeRenderer((4, 4), faces=flame.faces).render(
-        verts, view_transform(verts, cam), cam
-    )
+    img = ShapeRenderer((4, 4), faces=flame.faces).render(verts, view_transform(verts, cam))
     assert len(img) == 16
 
     arr = fake_decode_image(b"imgbytes", (8, 8))
@@ -716,3 +714,77 @@ def test_no_repeated_code_blocks():
     appears twice in the package."""
     root = os.path.dirname(talkinghead_datapipeline_spark.__file__)
     assert _repeated_blocks(root) == []
+
+
+# Trees whose calls count as uses of a package option.
+_CALLER_TREES = (
+    "talkinghead_datapipeline_spark", "tests", "tools", "bench.py", "perfbench", "plans/pipeline"
+)
+# get_spark's deployment settings: set per box, not per call.
+_OPTION_EXEMPT = {"session.py get_spark(master)", "session.py get_spark(shuffle_partitions)"}
+
+
+def _unused_options(repo: str) -> list[str]:
+    """Every defaulted parameter of a package function or method that no
+    call under ``_CALLER_TREES`` passes, by keyword or by position, as
+    ``"module.py:L Class.fn(param)"``. Calls match by callee name (a class
+    name for ``__init__``), so a same-named callee passing it counts as a
+    use, and a ``*args`` / ``**kwargs`` call passes everything."""
+    pkg = os.path.join(repo, "talkinghead_datapipeline_spark")
+    trees = {}
+    for top in _CALLER_TREES:
+        top = os.path.join(repo, top)
+        walk = [("", [], [top])] if top.endswith(".py") else os.walk(top)
+        for d, _, names in walk:
+            for name in names:
+                if name.endswith(".py"):
+                    path = os.path.join(d, name)
+                    with open(path) as fh:
+                        trees[path] = ast.parse(fh.read())
+    calls = defaultdict(list)
+    for tree in trees.values():
+        for n in ast.walk(tree):
+            if isinstance(n, ast.Call):
+                f = n.func
+                calls[getattr(f, "id", None) or getattr(f, "attr", None)].append(n)
+    unused = []
+    for path, tree in trees.items():
+        if not path.startswith(pkg + os.sep):
+            continue
+        methods = {
+            id(m): c.name
+            for c in ast.walk(tree)
+            if isinstance(c, ast.ClassDef)
+            for m in c.body
+            if isinstance(m, (ast.FunctionDef, ast.AsyncFunctionDef))
+            and not any(getattr(d, "id", None) == "staticmethod" for d in m.decorator_list)
+        }
+        for fn in ast.walk(tree):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            a, self_arg = fn.args, int(id(fn) in methods)
+            pos = a.posonlyargs + a.args
+            first = len(pos) - len(a.defaults)
+            defaulted = [(p.arg, i - self_arg) for i, p in enumerate(pos) if i >= first]
+            defaulted += [(p.arg, None) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d]
+            callee = methods[id(fn)] if fn.name == "__init__" else fn.name
+            mod = os.path.relpath(path, pkg)
+            name = f"{methods[id(fn)]}.{fn.name}" if self_arg else fn.name
+            for param, i in defaulted:
+                passed = any(
+                    any(k.arg in (param, None) for k in c.keywords)
+                    or any(isinstance(x, ast.Starred) for x in c.args)
+                    or (i is not None and len(c.args) > i)
+                    for c in calls[callee]
+                )
+                if not passed and f"{mod} {name}({param})" not in _OPTION_EXEMPT:
+                    unused.append(f"{mod}:{fn.lineno} {name}({param})")
+    return sorted(unused)
+
+
+def test_no_unused_options():
+    """An option is a parameter some caller sets: a defaulted parameter
+    that every call leaves at its default is a constant, so it is written
+    as one."""
+    repo = os.path.dirname(os.path.dirname(talkinghead_datapipeline_spark.__file__))
+    assert _unused_options(repo) == []

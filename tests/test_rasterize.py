@@ -258,7 +258,7 @@ def test_shape_renderer_channels_and_mask_consistency():
     cam = np.array([0.9, -0.1, 0.3])
     tv = view_transform(verts, cam)
     r = ShapeRenderer((16, 16), faces=m.faces)
-    frames = {ch: r.render(verts, tv, cam, channel=ch) for ch in
+    frames = {ch: r.render(verts, tv, channel=ch) for ch in
               ("shade", "mask", "normal", "bary")}
     assert all(len(b) == 256 for b in frames.values())
     mask_img = np.frombuffer(frames["mask"], dtype=np.uint8).reshape(16, 16)
@@ -269,7 +269,7 @@ def test_shape_renderer_channels_and_mask_consistency():
         img = np.frombuffer(frames[ch], dtype=np.uint8).reshape(16, 16)
         assert (img[~ras["mask"]] == 0).all()
     # deterministic
-    assert r.render(verts, tv, cam) == r.render(verts, tv, cam)
+    assert r.render(verts, tv) == r.render(verts, tv)
 
 
 def test_shape_renderer_default_fan_topology():
@@ -277,7 +277,7 @@ def test_shape_renderer_default_fan_topology():
 
     r = ShapeRenderer((4, 4))
     tv = rng.normal(size=(5, 3)) * 0.5
-    out = r.render(tv, tv, None, channel="mask")
+    out = r.render(tv, tv, channel="mask")
     assert len(out) == 16  # 3 fan faces over 5 verts, any vert count works
 
 
@@ -321,9 +321,9 @@ def test_shape_renderer_texture_and_pos_mask_channels():
     cam = np.array([1.1, 0.05, -0.02])
     tv = view_transform(verts, cam)
     r = ShapeRenderer((16, 16), faces=m.faces)
-    tex = np.frombuffer(r.render(verts, tv, cam, "texture"), dtype=np.uint8)
-    pos = np.frombuffer(r.render(verts, tv, cam, "pos_mask"), dtype=np.uint8)
-    msk = np.frombuffer(r.render(verts, tv, cam, "mask"), dtype=np.uint8)
+    tex = np.frombuffer(r.render(verts, tv, "texture"), dtype=np.uint8)
+    pos = np.frombuffer(r.render(verts, tv, "pos_mask"), dtype=np.uint8)
+    msk = np.frombuffer(r.render(verts, tv, "mask"), dtype=np.uint8)
     assert len(tex) == len(pos) == 256
     # both live strictly inside the coverage mask
     assert (tex[msk == 0] == 0).all() and (pos[msk == 0] == 0).all()
@@ -334,10 +334,10 @@ def test_shape_renderer_texture_and_pos_mask_channels():
     r0 = ShapeRenderer((16, 16), faces=m.faces)
     r0.albedo = np.zeros((3, 8, 8))
     assert np.frombuffer(
-        r0.render(verts, tv, cam, "texture"), dtype=np.uint8
+        r0.render(verts, tv, "texture"), dtype=np.uint8
     ).max() == 0
     # deterministic
-    assert r.render(verts, tv, cam, "texture") == r.render(verts, tv, cam, "texture")
+    assert r.render(verts, tv, "texture") == r.render(verts, tv, "texture")
 
 
 # --- arithmetic-tier guard (ADVICE r12 medium) -----------------------------
@@ -460,7 +460,7 @@ def test_render_batch_bit_identical_to_per_mesh_render(size, monkeypatch):
     batched = r.render_batch(verts, view_transform(verts, cams), channels)
 
     per_mesh = {
-        ch: [r.render(v, view_transform(v, c), c, channel=ch) for v, c in zip(verts, cams)]
+        ch: [r.render(v, view_transform(v, c), channel=ch) for v, c in zip(verts, cams)]
         for ch in channels
     }
     assert batched == per_mesh

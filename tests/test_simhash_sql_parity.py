@@ -28,7 +28,7 @@ def test_simhash_sql_twin_tree_identical(spark, sf_dir):
         "doc_id", "text"
     )
     col_form = docs.select(D.simhash32(F.col("text")).alias("s"))
-    sql_form = docs.select(F.expr(D.simhash32_sql("text")).alias("s"))
+    sql_form = docs.select(F.expr(D.simhash32_sql()).alias("s"))
     assert _normalized_analyzed(col_form) == _normalized_analyzed(sql_form)
 
 
@@ -45,7 +45,7 @@ def test_simhash_sql_twin_results_bit_equal(spark, sf_dir):
     sql_rows = {
         r.doc_id: r.s
         for r in docs.select(
-            "doc_id", F.expr(D.simhash32_sql("text")).alias("s")
+            "doc_id", F.expr(D.simhash32_sql()).alias("s")
         ).collect()
     }
     assert col_rows == sql_rows

@@ -192,7 +192,7 @@ def test_streaming_exact_dedup_drops_in_horizon_duplicates(spark, tmp_path):
         "doc_id bigint, content_hash string, ts timestamp"
     ).parquet(str(src / "batch"))
     query = (
-        streaming_exact_dedup(stream, watermark="1 hour")
+        streaming_exact_dedup(stream)
         .writeStream.format("memory")
         .queryName("stream_dedup")
         .outputMode("append")
