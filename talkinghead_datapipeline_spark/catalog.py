@@ -12,6 +12,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TPCH_TABLES = (
     "region",
@@ -31,56 +32,30 @@ def table_path(sf_dir: str, name: str) -> str:
 
 
 def normalize_events_ts(df: DataFrame) -> DataFrame:
-    """Normalize ``events.ts`` to TimestampType regardless of how the
-    fixture's parquet physical type arrives:
+    """Normalize a frame read with :func:`scan_schema`'s ``events`` schema
+    to a TimestampType ``ts``:
 
-    - parquet TIMESTAMP(NANOS) read as epoch-nanos LongType (via
+    - parquet TIMESTAMP(NANOS) arrives as epoch-nanos LongType (via
       ``spark.sql.legacy.parquet.nanosAsLong``) → exact integer ``div 1000``
       then ``timestamp_micros`` (a double division would lose precision on
       int64 epoch-nanos);
-    - parquet ``timestamp[us]`` with isAdjustedToUTC=false → TimestampNTZType
-      → the naive-UTC wall clock becomes an instant WITHOUT touching the
-      session timezone (ADVICE r4: mutating ``spark.sql.session.timeZone``
-      inside a table loader changed timestamp semantics for every later
-      query in an externally-created session). Epoch micros are rebuilt
-      arithmetically from the NTZ wall-clock fields — ``CAST(ts AS DATE)``
-      and ``date_part`` on an NTZ value never consult a timezone, so the
-      conversion is exact under ANY session zone. (A
-      ``convert_timezone('UTC', current_timezone(), …)`` round-trip is NOT:
-      instants landing in a DST fall-back hour collapse to the wrong
-      offset — pinned by tests/test_catalog_ts.py.) ``date_part('SECOND')``
-      is DECIMAL(8,6), so the ×1e6 keeps fractional micros exactly;
-    - TimestampType → passthrough.
+    - TimestampType (a UTC-adjusted footer, or an NTZ one that
+      ``scan_schema`` forced) → passthrough.
     """
     from pyspark.sql import functions as F
-    from pyspark.sql.types import LongType, TimestampNTZType
+    from pyspark.sql.types import LongType
 
-    if "ts" not in df.columns:
-        return df
-    dt = df.schema["ts"].dataType
-    if isinstance(dt, LongType):
+    if "ts" in df.columns and isinstance(df.schema["ts"].dataType, LongType):
         return df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    if isinstance(dt, TimestampNTZType):
-        return df.withColumn(
-            "ts",
-            F.expr(
-                "timestamp_micros("
-                "  CAST(unix_date(CAST(ts AS DATE)) AS BIGINT) * 86400000000"
-                "  + (CAST(date_part('HOUR', ts) AS BIGINT) * 3600"
-                "     + CAST(date_part('MINUTE', ts) AS BIGINT) * 60) * 1000000"
-                "  + CAST(date_part('SECOND', ts) * 1000000 AS BIGINT))"
-            ),
-        )
     return df
 
 
 # Scan-schema memo: (path, mtime_ns, size) -> the StructType this catalog
-# reads that file with (post events-ts forcing). Schema inference re-reads
-# the parquet footer on the DRIVER for every ``spark.read.parquet`` —
-# measured 254ms/call vs 46ms with a supplied schema at sf0.1 — and query
-# builders run once per bench rep, so the footer was re-read hundreds of
-# times per bench. A real deployment pins schemas in a catalog (metastore /
-# Iceberg manifest) for exactly this reason (guide §6: listing/planning is
+# reads that file with. Schema inference re-reads the parquet footer on the
+# DRIVER for every ``spark.read.parquet`` — measured 254ms/call vs 46ms
+# with a supplied schema at sf0.1 — and query builders run once per bench
+# rep. A real deployment pins schemas in a catalog (metastore / Iceberg
+# manifest) for exactly this reason (guide §6: listing/planning is
 # driver-side, single-threaded). This memoizes METADATA only — every run
 # still computes results from the parquet bytes — and the stat-key
 # invalidates the entry whenever the file (or split directory) changes, so
@@ -93,64 +68,54 @@ def _schema_key(path: str):
     return (path, st.st_mtime_ns, st.st_size)
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Lazy parquet scan for one catalog table; ``events.ts`` is normalized
-    to TimestampType whatever the parquet footer says (see
-    :func:`normalize_events_ts`).
+def scan_schema(spark: SparkSession, sf_dir: str, name: str) -> StructType:
+    """The schema catalog table ``name`` is read with, by a batch scan or a
+    file stream alike; the one place that decides how a table is read.
 
-    NTZ fast path: when the footer says ``timestamp[us]`` NTZ, re-open the
-    scan with the SAME schema except ``ts`` forced to TimestampType — the
-    vectorized reader then decodes the stored micros directly as instant
-    micros (naive-UTC semantics, independent of the session timezone, no
-    zone math anywhere). This costs one driver-side footer read and keeps
-    the per-row cost at zero, where the expression-based rewrite measurably
-    dragged every events window query (bench r5: s9_tumbling_volume 3.5×);
-    it also keeps ts filters eligible for parquet pushdown, which any
-    wrapping expression forfeits. The footer read happens once per file
-    version per process (see ``_SCHEMA_CACHE``); ``normalize_events_ts``
-    stays in the cached path and passes TimestampType through untouched,
-    so both events branches behave identically on a cache hit.
-    """
-    from pyspark.sql.types import StructField, StructType, TimestampNTZType, TimestampType
+    For ``events`` it sets ``nanosAsLong`` at runtime, so a session this
+    engine did not build (an external driver's) reads a TIMESTAMP(NANOS)
+    footer too; the setting is harmless when the footer stores micros. A
+    ``timestamp[us]`` NTZ ``ts`` is forced to TimestampType: the vectorized
+    reader then decodes the stored micros directly as instant micros —
+    naive-UTC semantics with no zone math, so neither the session timezone
+    is consulted nor mutated — and ``ts`` filters stay eligible for parquet
+    pushdown, which any wrapping expression forfeits. The footer is read
+    once per file version per process (``_SCHEMA_CACHE``)."""
+    from pyspark.sql.types import StructField, TimestampNTZType, TimestampType
 
     if name == "events":
-        # Runtime-set so externally-created sessions (the driver's) can read
-        # a nanos-typed fixture too — harmless when the footer stores micros.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = table_path(sf_dir, name)
     try:
         key = _schema_key(path)
     except OSError:
         key = None
-    cached = _SCHEMA_CACHE.get(key) if key is not None else None
-    if cached is not None:
-        df = spark.read.schema(cached).parquet(path)
-        return normalize_events_ts(df) if name == "events" else df
-    df = spark.read.parquet(path)
-    scan_schema = df.schema
-    if name == "events":
-        if "ts" in df.columns and isinstance(
-            df.schema["ts"].dataType, TimestampNTZType
+    schema = _SCHEMA_CACHE.get(key)
+    if schema is None:
+        schema = spark.read.parquet(path).schema
+        if name == "events" and "ts" in schema.names and isinstance(
+            schema["ts"].dataType, TimestampNTZType
         ):
-            forced = StructType(
+            schema = StructType(
                 [
                     StructField(
                         f.name,
                         TimestampType() if f.name == "ts" else f.dataType,
                         f.nullable,
                     )
-                    for f in df.schema.fields
+                    for f in schema.fields
                 ]
             )
-            scan_schema = forced
-            df = spark.read.schema(forced).parquet(path)
-        else:
-            # cache the pre-normalization SCAN schema; the hit path
-            # re-applies normalize_events_ts to rebuild the expression.
-            df = normalize_events_ts(df)
-    if key is not None:
-        _SCHEMA_CACHE[key] = scan_schema
-    return df
+        if key is not None:
+            _SCHEMA_CACHE[key] = schema
+    return schema
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Lazy parquet scan for one catalog table with its :func:`scan_schema`;
+    ``events.ts`` comes out TimestampType (see :func:`normalize_events_ts`)."""
+    df = spark.read.schema(scan_schema(spark, sf_dir, name)).parquet(table_path(sf_dir, name))
+    return normalize_events_ts(df) if name == "events" else df
 
 
 def rebalance_for_compute(

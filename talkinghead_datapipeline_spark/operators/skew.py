@@ -70,7 +70,7 @@ def two_phase_sum(
     )
 
 
-def top_frequent_keys(df: DataFrame, key: Column | str, k: int = 10) -> DataFrame:
+def top_frequent_keys(df: DataFrame, key: Column | str, k: int) -> DataFrame:
     """Skew diagnosis: the k heaviest keys with counts (run on a sample at
     scale). Feed the result into AQE expectations or a manual salt list."""
     return (

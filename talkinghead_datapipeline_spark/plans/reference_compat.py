@@ -35,6 +35,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from talkinghead_datapipeline_spark.functions.geometry import eye_aspect_ratio
 from talkinghead_datapipeline_spark.plans.graph import NODE_REGISTRY, GraphContext, node
 
 FRAME_BYTES = 256  # deterministic fake codec: one "frame" per 256 video bytes
@@ -482,9 +483,22 @@ def _a2en(ctx: GraphContext, p: dict[str, Any]) -> None:
             ["clip_name", "frame_idx"],
         )
     )
-    blink = _blink_cols(F.col("landmarks3d"))
+    # S5 eye-aspect-ratio blinks (utils.py:57-65) on the 3D landmarks. The
+    # reference indexes the 68-point layout (37-48 for the eyes); the FLAME
+    # stand-in emits 12 landmarks, so the same 6-point EAR formula is
+    # applied to the stub's 1..6 / 7..12 point groups — identical math,
+    # remapped indices (the real decoder restores the 68-point indices).
+    def pt(k):
+        xy = F.element_at(F.col("landmarks3d"), k)
+        return F.element_at(xy, 1), F.element_at(xy, 2)
+
     per_frame = frames.select(
-        "clip_name", "frame_idx", "jaw", "exp", *blink
+        "clip_name",
+        "frame_idx",
+        "jaw",
+        "exp",
+        eye_aspect_ratio(pt(1), pt(4), pt(2), pt(6), pt(3), pt(5)).alias("left_blink"),
+        eye_aspect_ratio(pt(7), pt(10), pt(8), pt(12), pt(9), pt(11)).alias("right_blink"),
     )
     audio = ctx.get("wav2vec_volume")
     joined = per_frame.groupBy("clip_name").agg(
@@ -555,27 +569,6 @@ def _vid2vid(ctx: GraphContext, p: dict[str, Any]) -> None:
             ["clip_name", "frame_idx"],
         ),
     )
-
-
-def _blink_cols(lmk3d):
-    """S5 eye-aspect-ratio blinks (utils.py:57-65) on the 3D landmarks.
-
-    The reference indexes the 68-point layout (37-48 for the eyes); the
-    FLAME stand-in emits 12 landmarks, so the same 6-point EAR formula is
-    applied to the stub's 1..6 / 7..12 point groups — identical math,
-    remapped indices (the real decoder restores the 68-point indices)."""
-
-    def pt(k):
-        return F.element_at(lmk3d, k)
-
-    def d(i, j):
-        dx = F.element_at(pt(i), 1) - F.element_at(pt(j), 1)
-        dy = F.element_at(pt(i), 2) - F.element_at(pt(j), 2)
-        return F.sqrt(dx * dx + dy * dy)
-
-    left = (d(2, 6) + d(3, 5)) / (2 * d(1, 4))
-    right = (d(8, 12) + d(9, 11)) / (2 * d(7, 10))
-    return [left.alias("left_blink"), right.alias("right_blink")]
 
 
 def _resample_np(y, num: int):

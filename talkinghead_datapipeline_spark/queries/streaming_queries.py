@@ -25,7 +25,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from talkinghead_datapipeline_spark.catalog import normalize_events_ts, table_path
+from talkinghead_datapipeline_spark.catalog import normalize_events_ts, scan_schema, table_path
 from talkinghead_datapipeline_spark.queries import register
 from talkinghead_datapipeline_spark.streaming.incremental import (
     replay_micro_batches,
@@ -53,12 +53,6 @@ def _work_dir(name: str) -> str:
     return work
 
 
-def _events_stream_transform_base(stream: DataFrame) -> DataFrame:
-    """ts normalization — the same single seam as catalog.load_table, so the
-    streaming source tracks whatever physical type the fixture uses."""
-    return normalize_events_ts(stream)
-
-
 def _symlink_landing_dir(table: str, src: str) -> None:
     """Expose a fixture table as a file-stream landing directory (zero
     copy). Handles BOTH fixture layouts: a single parquet file (the
@@ -78,27 +72,29 @@ def _symlink_landing_dir(table: str, src: str) -> None:
         os.symlink(table, os.path.join(src, "events.parquet"))
 
 
+def _events_landing(sf_dir: str, name: str) -> tuple[str, str, str]:
+    """``(src, sink, ckpt)`` of a fresh work dir whose ``src`` exposes the
+    events table as a file-stream landing directory. The file stream source
+    requires a *directory* to monitor; a symlink dir is exactly how a
+    growing landing directory would look in prod."""
+    work = _work_dir(name)
+    src = os.path.join(work, "src")
+    os.makedirs(src)
+    _symlink_landing_dir(table_path(sf_dir, "events"), src)
+    return src, os.path.join(work, "sink"), os.path.join(work, "ckpt")
+
+
 def _run_events_stream(
     spark: SparkSession, sf_dir: str, transform, name: str
 ) -> DataFrame:
     """Run an AvailableNow streaming job over events.parquet into a fresh
     parquet sink + checkpoint, and return the materialized sink."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(table_path(sf_dir, "events")).schema
-    work = _work_dir(name)
-    # The file stream source requires a *directory* to monitor; expose the
-    # fixture through a symlink dir — exactly how a growing landing
-    # directory would look in prod.
-    src = os.path.join(work, "src")
-    os.makedirs(src)
-    _symlink_landing_dir(table_path(sf_dir, "events"), src)
-    sink = os.path.join(work, "sink")
-    ckpt = os.path.join(work, "ckpt")
+    src, sink, ckpt = _events_landing(sf_dir, name)
     run_available_now(
         spark,
         source_dir=src,
-        schema=schema,
-        transform=lambda s: transform(_events_stream_transform_base(s)),
+        schema=scan_schema(spark, sf_dir, "events"),
+        transform=lambda s: transform(normalize_events_ts(s)),
         sink_path=sink,
         checkpoint_dir=ckpt,
     )
@@ -527,19 +523,12 @@ def streaming_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame
         run_foreach_batch_upsert,
     )
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(table_path(sf_dir, "events")).schema
-    work = _work_dir("upsert")
-    src = os.path.join(work, "src")
-    os.makedirs(src)
-    _symlink_landing_dir(table_path(sf_dir, "events"), src)
-    sink = os.path.join(work, "sink")
-    ckpt = os.path.join(work, "ckpt")
+    src, sink, ckpt = _events_landing(sf_dir, "upsert")
 
     def transform(batch: DataFrame) -> DataFrame:
         from pyspark.sql.window import Window as W
 
-        ev = _events_stream_transform_base(batch).filter(
+        ev = normalize_events_ts(batch).filter(
             F.col("event_type") == "purchase"
         )
         w = W.partitionBy("user_id").orderBy(F.desc("ts"), F.desc("event_id"))
@@ -556,7 +545,7 @@ def streaming_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame
     run_foreach_batch_upsert(
         spark,
         source_dir=src,
-        schema=schema,
+        schema=scan_schema(spark, sf_dir, "events"),
         transform=transform,
         sink_path=sink,
         checkpoint_dir=ckpt,

@@ -23,8 +23,11 @@ Differences by design (Spark owns physical execution):
 - ``--chunk_size`` is accepted and recorded in the report but does not
   change semantics: the reference chunks to bound single-machine memory
   (run.py:24, engine.py:55-74); Spark's task scheduler owns batching.
-- ``--test_run`` forces one row through every bound table (E12) instead of
-  materializing outputs — same fail-fast intent as the reference's flag.
+- ``--test_run`` runs the same per-node loop but, in place of each node's
+  write, forces one row through every table the node bound (and through
+  every input) with ``limit(1)`` (E12): nothing is materialized, and later
+  nodes read the lazy lineage — same fail-fast intent as the reference's
+  flag.
 - The graph runs one node at a time, like the reference's
   materialize-every-intermediate engine (SURVEY §3.1 step 5): build the
   node, write every table it bound or re-bound to
@@ -127,6 +130,15 @@ def _write_node(ctx: GraphContext, keys: list[str], output_dir: str) -> Iterator
         }
 
 
+def _smoke(tables: dict[str, DataFrame], keys: list[str]) -> Iterator[tuple]:
+    """Force one row through each table ``keys`` of ``tables`` (E12
+    fail-fast smoke). Yields ``(key, df, report fields)`` per table."""
+    for key in keys:
+        t0 = time.perf_counter()
+        n = len(tables[key].limit(1).collect())
+        yield key, tables[key], {"total": n, "sec": time.perf_counter() - t0}
+
+
 def run(
     spark: SparkSession,
     graph_path: str,
@@ -161,22 +173,18 @@ def run(
             print(json.dumps(entries[key]))
 
     if test_run:
-        ctx = reference_compat.run_reference_graph(spark, graph_path, tables)
-        for key, df in ctx.tables.items():
-            t0 = time.perf_counter()
-            n = len(df.limit(1).collect())  # E12 fail-fast smoke
-            record(key, df, "test_run", n, time.perf_counter() - t0)
+        for key, df, fields in _smoke(tables, list(tables)):
+            record(key, df, "test_run", **fields)
     else:
         for key, df in tables.items():
             record(key, df, "input", -1, 0.0)  # inputs are not re-materialized
-        for spec in reference_compat.load_reference_graph(graph_path):
-            ctx = reference_compat.run_reference_graph(spark, [spec], tables)
-            bound = [
-                k for k, df in ctx.tables.items() if k not in inputs and tables.get(k) is not df
-            ]
-            for key, df, fields in _write_node(ctx, bound, output_dir):
-                record(key, df, "written", **fields)
-            tables = ctx.tables
+    for spec in reference_compat.load_reference_graph(graph_path):
+        ctx = reference_compat.run_reference_graph(spark, [spec], tables)
+        bound = [k for k, df in ctx.tables.items() if k not in inputs and tables.get(k) is not df]
+        step = _smoke(ctx.tables, bound) if test_run else _write_node(ctx, bound, output_dir)
+        for key, df, fields in step:
+            record(key, df, "test_run" if test_run else "written", **fields)
+        tables = ctx.tables
 
     report = list(entries.values())
     with open(os.path.join(output_dir, report_name), "w") as f:

@@ -153,6 +153,35 @@ def _read_frames(target: str) -> list[tuple[int, bytes]]:
     return frames
 
 
+def _per_clip_ffmpeg(df, ffmpeg_exe, src, out_args, tgt, read, out_schema):
+    """``mapInPandas`` over ``(clip_name, content)``: one ``_run_ffmpeg``
+    per clip, with the clip's bytes written to ``src``. A clip's output
+    rows are ``(clip_name, *row, None)`` for each ``row`` that ``read``
+    returns, or one ``(clip_name, None, …, error)`` row when it failed.
+    Each clip runs inside its own generator step, so one giant clip never
+    holds a whole batch's outputs in memory."""
+    exe = _resolve_ffmpeg(ffmpeg_exe)
+    ensure_package_shipped(df.sparkSession)
+    cols = [c.split()[0] for c in out_schema.split(",")]
+    nulls = (None,) * (len(cols) - 2)
+
+    def per_clip(batches):
+        try:
+            for pdf in batches:
+                for name, blob in zip(pdf["clip_name"], pdf["content"]):
+                    out, err = _run_ffmpeg(exe, [(src, blob)], src, out_args, tgt, read)
+                    data = (
+                        [(name, *row, None) for row in out]
+                        if err is None
+                        else [(name, *nulls, err)]
+                    )
+                    yield pd.DataFrame(data, columns=cols)
+        finally:
+            release_zip_finders()
+
+    return df.mapInPandas(per_clip, schema=out_schema)
+
+
 def video_to_frames(df: DataFrame, ext: str = ".jpg", ffmpeg_exe: str | None = None) -> DataFrame:
     """N2 demux: ``(clip_name, content)`` video binaries → one row per frame
     ``(clip_name, frame_idx, image)``.
@@ -162,32 +191,12 @@ def video_to_frames(df: DataFrame, ext: str = ".jpg", ffmpeg_exe: str | None = N
     -qscale:v 3 {target}/%6d{ext} -y``) under a joblib process pool; here
     the pool is the executor fleet — ``mapInPandas`` writes each video to
     a task-local temp file, runs the same command, and yields the produced
-    frame files as rows. Each clip demuxes inside its own generator step,
-    so one giant video never holds a whole batch's frames in memory.
-    A failed clip yields one error row (see ``_run_ffmpeg``)."""
-    exe = _resolve_ffmpeg(ffmpeg_exe)
-    ensure_package_shipped(df.sparkSession)
-    cols = ["clip_name", "frame_idx", "image", "error"]
-    out_schema = "clip_name string, frame_idx bigint, image binary, error string"
-
-    def demux(batches):
-        try:
-            for pdf in batches:
-                for name, blob in zip(pdf["clip_name"], pdf["content"]):
-                    frames, err = _run_ffmpeg(
-                        exe, [("in.video", blob)], "in.video",
-                        _FFMPEG_TO_IMG_ARGS, f"frames/%06d{ext}", _read_frames,
-                    )
-                    rows = (
-                        [(name, idx, image, None) for idx, image in frames]
-                        if err is None
-                        else [(name, None, None, err)]
-                    )
-                    yield pd.DataFrame(rows, columns=cols)
-        finally:
-            release_zip_finders()
-
-    return df.mapInPandas(demux, schema=out_schema)
+    frame files as rows (see ``_per_clip_ffmpeg``). A failed clip yields
+    one error row (see ``_run_ffmpeg``)."""
+    return _per_clip_ffmpeg(
+        df, ffmpeg_exe, "in.video", _FFMPEG_TO_IMG_ARGS, f"frames/%06d{ext}", _read_frames,
+        "clip_name string, frame_idx bigint, image binary, error string",
+    )
 
 
 def frames_to_video(df: DataFrame, ffmpeg_exe: str | None = None) -> DataFrame:
@@ -235,21 +244,7 @@ def transcode_media(df: DataFrame, ffmpeg_exe: str | None = None) -> DataFrame:
     are this with a ``.wav`` target (the suffix selects the muxer, exactly
     as the reference's target path does). Same mapInPandas shape and error
     containment as ``video_to_frames``."""
-    exe = _resolve_ffmpeg(ffmpeg_exe)
-    ensure_package_shipped(df.sparkSession)
-    cols = ["clip_name", "media", "error"]
-    out_schema = "clip_name string, media binary, error string"
-
-    def convert(batches):
-        try:
-            for pdf in batches:
-                for name, blob in zip(pdf["clip_name"], pdf["content"]):
-                    media, err = _run_ffmpeg(
-                        exe, [("in.media", blob)], "in.media",
-                        (), "out.wav", _read_bytes,
-                    )
-                    yield pd.DataFrame([(name, media, err)], columns=cols)
-        finally:
-            release_zip_finders()
-
-    return df.mapInPandas(convert, schema=out_schema)
+    return _per_clip_ffmpeg(
+        df, ffmpeg_exe, "in.media", (), "out.wav", lambda target: [(_read_bytes(target),)],
+        "clip_name string, media binary, error string",
+    )

@@ -1,12 +1,10 @@
-"""Regression pins for the events-timestamp catalog seam (VERDICT r4 #9).
+"""Pins for the events-timestamp catalog seam.
 
-The driver's ``events.parquet`` fixture has already changed physical type
-once (TIMESTAMP(NANOS) → timestamp[us] NTZ), costing a round of red
-CORRECTNESS rows. These tests write each physical variant the fixture
-could plausibly arrive as and assert ``unix_micros`` parity with DuckDB's
-``epoch_us`` on the same file — under a NON-UTC session timezone, so the
-normalization provably does not lean on ``spark.sql.session.timeZone``
-(ADVICE r4: the loader must not mutate session state either).
+``events.parquet`` may arrive in any of several physical timestamp types.
+These tests write each variant and assert ``unix_micros`` parity with
+DuckDB's ``epoch_us`` on the same file, for a batch scan and a file stream
+alike, under a NON-UTC session timezone too: the conversion must not lean
+on ``spark.sql.session.timeZone``, and the loader must not mutate it.
 """
 
 from __future__ import annotations
@@ -19,7 +17,8 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from talkinghead_datapipeline_spark.catalog import load_table
+from talkinghead_datapipeline_spark.catalog import load_table, normalize_events_ts, scan_schema
+from talkinghead_datapipeline_spark.streaming.incremental import run_available_now
 
 _TS = [
     datetime.datetime(2021, 3, 4, 5, 6, 7, 123456),
@@ -47,9 +46,46 @@ def _write_variant(tmp_path, variant: str) -> str:
     return path
 
 
-@pytest.mark.parametrize("variant", ["nanos_long", "micros_ntz", "micros_utc"])
+def _micros(spark, tmp_path, reader: str) -> list[int]:
+    """``unix_micros(ts)`` per row in ``user_id`` order, read from the
+    events table in ``tmp_path`` by ``reader``."""
+    sf_dir = str(tmp_path)
+    if reader == "batch":
+        df = load_table(spark, sf_dir, "events")
+        assert df.schema["ts"].dataType.typeName() == "timestamp"
+    else:
+        src = tmp_path / "src"
+        src.mkdir()
+        (src / "events.parquet").symlink_to(tmp_path / "events.parquet")
+        sink = str(tmp_path / "sink")
+        run_available_now(
+            spark,
+            str(src),
+            scan_schema(spark, sf_dir, "events"),
+            normalize_events_ts,
+            sink,
+            str(tmp_path / "ckpt"),
+        )
+        df = spark.read.parquet(sink)
+    return [
+        r["um"]
+        for r in df.select("user_id", F.unix_micros("ts").alias("um"))
+        .orderBy("user_id")
+        .collect()
+    ]
+
+
+# The batch reader's cases keep the bare variant as their id.
+@pytest.mark.parametrize(
+    "variant,reader",
+    [
+        pytest.param(v, r, id=v if r == "batch" else f"{v}-{r}")
+        for r in ("batch", "stream")
+        for v in ("nanos_long", "micros_ntz", "micros_utc")
+    ],
+)
 @pytest.mark.parametrize("session_tz", ["UTC", "America/New_York"])
-def test_events_ts_micros_match_duckdb(spark, tmp_path, variant, session_tz):
+def test_events_ts_micros_match_duckdb(spark, tmp_path, variant, session_tz, reader):
     path = _write_variant(tmp_path, variant)
     want = [
         r[0]
@@ -60,22 +96,15 @@ def test_events_ts_micros_match_duckdb(spark, tmp_path, variant, session_tz):
     prev_tz = spark.conf.get("spark.sql.session.timeZone")
     try:
         spark.conf.set("spark.sql.session.timeZone", session_tz)
-        df = load_table(spark, str(tmp_path), "events")
-        assert df.schema["ts"].dataType.typeName() == "timestamp"
-        got = [
-            r["um"]
-            for r in df.select("user_id", F.unix_micros("ts").alias("um"))
-            .orderBy("user_id")
-            .collect()
-        ]
+        got = _micros(spark, tmp_path, reader)
     finally:
         spark.conf.set("spark.sql.session.timeZone", prev_tz)
-    assert got == want, f"{variant} under {session_tz}"
+    assert got == want, f"{variant} under {session_tz} ({reader})"
 
 
 def test_loader_does_not_mutate_session_timezone(spark, tmp_path):
-    """ADVICE r4 (low): normalize_events_ts must not set
-    spark.sql.session.timeZone as a side effect of reading a table."""
+    """Reading a table must not set spark.sql.session.timeZone as a side
+    effect."""
     path = _write_variant(tmp_path, "micros_ntz")
     assert path
     prev_tz = spark.conf.get("spark.sql.session.timeZone")
@@ -85,36 +114,3 @@ def test_loader_does_not_mutate_session_timezone(spark, tmp_path):
         assert spark.conf.get("spark.sql.session.timeZone") == "Asia/Tokyo"
     finally:
         spark.conf.set("spark.sql.session.timeZone", prev_tz)
-
-
-def test_normalize_events_ts_ntz_arithmetic_fallback(spark, tmp_path):
-    """The loader's forced-schema fast path bypasses normalize_events_ts
-    for NTZ scans; direct callers still hit its arithmetic branch — pin it
-    against DuckDB epoch_us under a non-UTC session timezone too."""
-    from pyspark.sql import functions as F
-
-    from talkinghead_datapipeline_spark.catalog import normalize_events_ts
-
-    path = _write_variant(tmp_path, "micros_ntz")
-    want = [
-        r[0]
-        for r in duckdb.sql(
-            f"SELECT epoch_us(ts) FROM read_parquet('{path}') ORDER BY user_id"
-        ).fetchall()
-    ]
-    prev_tz = spark.conf.get("spark.sql.session.timeZone")
-    try:
-        spark.conf.set("spark.sql.session.timeZone", "America/New_York")
-        ntz = spark.read.parquet(path)
-        assert ntz.schema["ts"].dataType.typeName() == "timestamp_ntz"
-        out = normalize_events_ts(ntz)
-        assert out.schema["ts"].dataType.typeName() == "timestamp"
-        got = [
-            r["um"]
-            for r in out.select("user_id", F.unix_micros("ts").alias("um"))
-            .orderBy("user_id")
-            .collect()
-        ]
-    finally:
-        spark.conf.set("spark.sql.session.timeZone", prev_tz)
-    assert got == want

@@ -279,3 +279,34 @@ def test_failed_node_write_leaves_no_temp_directory(spark, tmp_path, sf_dir):
     assert os.listdir(out) == ["ok_tbl.parquet"]
     nation = load_table(spark, sf_dir, "nation")
     assert _digest(spark.read.parquet(os.path.join(out, "ok_tbl.parquet"))) == _digest(nation)
+
+
+# Digest (``perfbench/workloads._digest``) of each table a ``mead_ref``
+# pass writes: the 11-node MEAD graph over one seed-0 clip of two frames.
+_MEAD_REF_DIGESTS = {
+    "images": "6675005ce2d829c86dae2f43ebdad333",
+    "wav": "00c3a2ed9c9b781a0c72133c6310482a",
+    "wav2vec_volume": "67cd6456b6525022c95116bb3973e0cb",
+    "landmarks": "50e15a14634f8468557a8996201fb804",
+    "bboxes": "5735352f04ef5df35659c937119b0340",
+    "crops": "333e686b9ffb3cb48cf98743b64c9961",
+    "emoca_codes": "1660e96a9399cf6f6eb0b68ef134f213",
+    "flame_out": "2bdb2799811a2ffe18379e9fe49f7b48",
+    "renders": "09e809834c25f40c15c58e5f47092c1d",
+    "a2en": "907a83eb1fada5cac34d4f6d181deeea",
+    "vid2vid": "ba19aeb4c0bf96b8828bb1b1e21351a3",
+}
+
+
+def test_mead_ref_table_digests(spark, tmp_path, monkeypatch):
+    # the paper's graph output, pinned table by table
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    monkeypatch.syspath_prepend(os.path.join(repo, "perfbench"))
+    import workloads
+
+    clips = str(tmp_path / "clips")
+    workloads.make_clips(clips, 0, 1, 2)
+    out = str(tmp_path / "out")
+    run(spark, os.path.join(workloads.GRAPHS, "mead_a2en_vid2vid.json"), {"video": clips}, out)
+    got = {t: workloads._digest(spark, os.path.join(out, f"{t}.parquet")) for t in workloads.TABLES}
+    assert got == _MEAD_REF_DIGESTS

@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 import talkinghead_datapipeline_spark
-from talkinghead_datapipeline_spark.catalog import normalize_events_ts
+from talkinghead_datapipeline_spark.catalog import normalize_events_ts, scan_schema
 from talkinghead_datapipeline_spark.operators.inference import (
     batched_inference,
     split_error_channel,
@@ -329,12 +329,9 @@ def test_streaming_available_now_tumbling(spark, sf_dir, tmp_path):
     src = tmp_path / "stream_src"
     src.mkdir()
     sh.copy(f"{sf_dir}/events.parquet", src / "events.parquet")
-    # Read the stream with whatever schema the fixture's footer declares
-    # (nanos-as-long, timestamp[us]/NTZ, or utc-adjusted timestamp) and let
-    # the shared catalog normalizer produce TimestampType — the same seam
-    # production queries go through.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    # Read the stream with the catalog's scan schema and normalizer — the
+    # same seam production queries go through.
+    schema = scan_schema(spark, sf_dir, "events")
 
     def transform(stream):
         return tumbling_stream_agg(normalize_events_ts(stream))
@@ -510,8 +507,7 @@ def test_foreach_batch_upsert(spark, sf_dir, tmp_path):
         run_foreach_batch_upsert,
     )
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(table_path(sf_dir, "events")).schema
+    schema = scan_schema(spark, sf_dir, "events")
     src = str(tmp_path / "src")
     os.makedirs(src)
     os.symlink(table_path(sf_dir, "events"), os.path.join(src, "events.parquet"))
@@ -727,9 +723,11 @@ _OPTION_EXEMPT = {"session.py get_spark(master)", "session.py get_spark(shuffle_
 def _unused_options(repo: str) -> list[str]:
     """Every defaulted parameter of a package function or method that no
     call under ``_CALLER_TREES`` passes, by keyword or by position, as
-    ``"module.py:L Class.fn(param)"``. Calls match by callee name (a class
-    name for ``__init__``), so a same-named callee passing it counts as a
-    use, and a ``*args`` / ``**kwargs`` call passes everything."""
+    ``"module.py:L Class.fn(param)"``, and every one that each call passes
+    as the same literal, as ``"module.py:L Class.fn(param) always <value>"``.
+    Calls match by callee name (a class name for ``__init__``), so a
+    same-named callee passing it counts as a use, and a ``*args`` /
+    ``**kwargs`` call passes everything, as no literal."""
     pkg = os.path.join(repo, "talkinghead_datapipeline_spark")
     trees = {}
     for top in _CALLER_TREES:
@@ -771,20 +769,33 @@ def _unused_options(repo: str) -> list[str]:
             mod = os.path.relpath(path, pkg)
             name = f"{methods[id(fn)]}.{fn.name}" if self_arg else fn.name
             for param, i in defaulted:
-                passed = any(
-                    any(k.arg in (param, None) for k in c.keywords)
-                    or any(isinstance(x, ast.Starred) for x in c.args)
-                    or (i is not None and len(c.args) > i)
-                    for c in calls[callee]
-                )
-                if not passed and f"{mod} {name}({param})" not in _OPTION_EXEMPT:
+                # per call, the argument node it passes for ``param``, a
+                # non-literal stand-in for a splat, or None when it leaves
+                # the default
+                passed = []
+                for c in calls[callee]:
+                    kw = [k for k in c.keywords if k.arg in (param, None)]
+                    if kw:
+                        passed.append(kw[0].value if kw[0].arg else c)
+                    elif any(isinstance(x, ast.Starred) for x in c.args):
+                        passed.append(c)
+                    else:
+                        passed.append(c.args[i] if i is not None and len(c.args) > i else None)
+                if f"{mod} {name}({param})" in _OPTION_EXEMPT:
+                    continue
+                if not any(passed):
                     unused.append(f"{mod}:{fn.lineno} {name}({param})")
+                elif all(isinstance(x, ast.Constant) for x in passed):
+                    values = {repr(x.value) for x in passed}
+                    if len(values) == 1:
+                        unused.append(f"{mod}:{fn.lineno} {name}({param}) always {values.pop()}")
     return sorted(unused)
 
 
 def test_no_unused_options():
-    """An option is a parameter some caller sets: a defaulted parameter
-    that every call leaves at its default is a constant, so it is written
+    """An option is a parameter some callers set to different values: a
+    defaulted parameter that every call leaves at its default, or that
+    every call sets to the same literal, is a constant, so it is written
     as one."""
     repo = os.path.dirname(os.path.dirname(talkinghead_datapipeline_spark.__file__))
     assert _unused_options(repo) == []

@@ -9,7 +9,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from talkinghead_datapipeline_spark.catalog import load_table, table_path
+from talkinghead_datapipeline_spark.catalog import load_table, normalize_events_ts, scan_schema, table_path
 from talkinghead_datapipeline_spark.operators import skew
 
 
@@ -211,8 +211,7 @@ def test_streaming_exact_dedup_drops_in_horizon_duplicates(spark, tmp_path):
 def test_stateful_running_totals_available_now(spark, sf_dir, tmp_path):
     from talkinghead_datapipeline_spark.streaming.stateful import running_user_totals
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(table_path(sf_dir, "events")).schema
+    schema = scan_schema(spark, sf_dir, "events")
     work = str(tmp_path)
     src = os.path.join(work, "src")
     os.makedirs(src)
@@ -327,7 +326,6 @@ def test_full_outer_view_expiry_boundary_is_strict(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from talkinghead_datapipeline_spark.queries.streaming_queries import (
-        _events_stream_transform_base,
         _purchase_view_join,
     )
     from talkinghead_datapipeline_spark.streaming.incremental import (
@@ -359,9 +357,7 @@ def test_full_outer_view_expiry_boundary_is_strict(spark, tmp_path):
     schema = spark.read.parquet(src + "/events.parquet").schema
 
     def transform(ev):
-        return _purchase_view_join(
-            _events_stream_transform_base(ev), "fullOuter"
-        ).select(
+        return _purchase_view_join(normalize_events_ts(ev), "fullOuter").select(
             F.coalesce("user_id", "v_user_id").alias("any_user_id"),
             "purchase_id",
             "view_id",
