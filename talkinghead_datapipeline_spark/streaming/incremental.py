@@ -281,10 +281,16 @@ def run_foreach_batch_upsert(
     key: str | list[str],
 ) -> None:
     """Keyed UPSERT sink via foreachBatch: each micro-batch's rows replace
-    same-key rows in the parquet sink (read → anti-join old → union → atomic
+    same-key rows in the parquet sink (read → anti-join old → union →
     overwrite). The E7 memoization pattern inverted — recompute wins instead
     of skip — and the standard route to MERGE semantics on plain parquet
-    (Delta/Iceberg replace this body with a real MERGE at scale)."""
+    (Delta/Iceberg replace this body with a real MERGE at scale).
+
+    The overwrite is not atomic: ``mode("overwrite")`` deletes the sink's
+    files before its write job runs, so a reader during the write sees no
+    rows, and a crash mid-write leaves a partial sink: the rows of earlier
+    batches that were not yet rewritten are gone, and the re-delivered batch
+    cannot restore them. An atomic swap is ROADMAP item 5."""
     keys = [key] if isinstance(key, str) else list(key)
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
@@ -298,7 +304,9 @@ def run_foreach_batch_upsert(
             merged = kept.unionByName(out)
         else:  # first batch: no sink yet
             merged = out
-        # Stage then swap: the sink must stay readable mid-rewrite.
+        # Materialize before the overwrite: merged reads sink_path, whose
+        # files the overwrite deletes before its job runs. This keeps the
+        # plan from reading the path it overwrites; it is no atomic swap.
         staged = merged.localCheckpoint(eager=True)
         staged.write.mode("overwrite").parquet(sink_path)
 
@@ -314,10 +322,10 @@ def run_foreach_batch_upsert(
 
 
 # Metadata column carried in the merge sink: the highest micro-batch id
-# already merged. Written atomically WITH the data (same parquet commit),
-# so the sink is always either entirely pre-batch or entirely post-batch —
-# a sidecar marker file could not give that (a crash between data write
-# and marker write would desynchronize them).
+# already merged. It is written in the same files as the data, so it can
+# never disagree with them the way a sidecar marker file could (a crash
+# between data write and marker write would desynchronize the two). The
+# overwrite itself is not atomic, though (see merge_batch_into_sink).
 _BATCH_ID_COL = "_applied_batch_id"
 
 
@@ -343,6 +351,13 @@ def merge_batch_into_sink(
     exactly, and skipping it makes the at-least-once delivery effectively
     exactly-once. Sinks written before this column existed
     merge as before (watermark absent → never skip).
+
+    The overwrite is not atomic: ``mode("overwrite")`` deletes the sink's
+    files before its write job runs, so a reader during the write sees no
+    rows, and a crash mid-write leaves a partial sink. If some of the new
+    files were committed, they carry this ``batch_id``, so the re-delivered
+    batch is skipped as a replay and the sink stays partial. An atomic swap
+    is ROADMAP item 5.
     """
     if _sink_exists(spark, sink_path):
         existing = spark.read.parquet(sink_path).persist()
@@ -357,8 +372,10 @@ def merge_batch_into_sink(
             merged = re_agg(
                 existing.drop(_BATCH_ID_COL).unionByName(batch_agg(batch_df))
             )
-            # Stage then swap: materialize BEFORE the overwrite (merged
-            # reads sink_path itself) so the sink stays readable mid-plan.
+            # Materialize before the overwrite: merged reads sink_path,
+            # whose files the overwrite deletes before its job runs. This
+            # keeps the plan from reading the path it overwrites; it is no
+            # atomic swap.
             staged = merged.withColumn(
                 _BATCH_ID_COL, F.lit(batch_id).cast("bigint")
             ).localCheckpoint(eager=True)

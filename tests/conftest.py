@@ -11,24 +11,6 @@ if REPO_ROOT not in sys.path:
 
 TEST_SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
-# Two-tier suite: the full battery takes ~41 min. Tests marked `slow`
-# (invariance sweeps over the representative set, end-to-end streaming
-# contracts and the heaviest crafted cases) are skipped unless
-# SPARK_GRAFT_SLOW is set. The oracle gate is not slow: every default run
-# diffs every registered query against DuckDB
-# (tests/test_queries_oracle.py::test_query_matches_oracle).
-
-
-def pytest_collection_modifyitems(config, items):
-    if os.environ.get("SPARK_GRAFT_SLOW"):
-        return
-    skip = pytest.mark.skip(
-        reason="slow tier: set SPARK_GRAFT_SLOW=1 to run the full battery"
-    )
-    for item in items:
-        if item.get_closest_marker("slow"):
-            item.add_marker(skip)
-
 
 @pytest.fixture(scope="session")
 def spark():
@@ -41,3 +23,18 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return TEST_SF_DIR
+
+
+@pytest.fixture(scope="session")
+def query_builds(spark, sf_dir):
+    from tests.oracle_harness import QueryBuilds
+
+    return QueryBuilds(spark, sf_dir)
+
+
+@pytest.fixture(scope="session")
+def mead_graphs() -> str:
+    """Directory of the committed MEAD graph declarations, read-only: the
+    published config (``mead_a2en_vid2vid.json``) and its twin that
+    renders at 32 px (``mead_a2en_vid2vid_s32.json``)."""
+    return os.path.join(REPO_ROOT, "perfbench", "graphs")

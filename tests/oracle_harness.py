@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import math
 import os
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 from decimal import Decimal
 from typing import Any
@@ -19,7 +20,33 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-from talkinghead_datapipeline_spark.catalog import TPCH_TABLES, table_path
+from talkinghead_datapipeline_spark.catalog import TPCH_TABLES, load_table, table_path
+from talkinghead_datapipeline_spark.queries import all_queries
+
+
+class QueryBuilds:
+    """Registered queries built on one fixture. A plan check builds a query
+    with ``planned`` and keeps it; the test that runs it takes it with
+    ``take``. The DataFrame it executes is then the one already planned,
+    whose one QueryExecution serves the plan check and the collect, so a
+    full run builds and plans each registered query once. ``take`` builds
+    afresh when no plan check ran first."""
+
+    def __init__(self, spark, sf_dir: str):
+        self.spark, self.sf_dir = spark, sf_dir
+        self._kept: dict = {}
+
+    def _build(self, name: str):
+        return all_queries()[name].spark(self.spark, self.sf_dir)
+
+    def planned(self, name: str):
+        if name not in self._kept:
+            self._kept[name] = self._build(name)
+        return self._kept[name]
+
+    def take(self, name: str):
+        df = self._kept.pop(name, None)
+        return self._build(name) if df is None else df
 
 
 def duckdb_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
@@ -127,36 +154,60 @@ def _canon_frame(pdf):
     return pdf[cols].sort_values(cols).reset_index(drop=True)
 
 
+SPLIT_FILES = 4
+
+
+def write_split_layout(spark, sf_dir: str, out_dir: str, tables) -> None:
+    """Re-write each of ``tables`` into ``out_dir`` as SPLIT_FILES
+    round-robin parquet files: different per-file row sets and a different
+    within-file order than the single-file source."""
+    for name in tables:
+        load_table(spark, sf_dir, name).repartition(SPLIT_FILES).write.parquet(
+            table_path(out_dir, name)
+        )
+
+
+@contextmanager
+def session_conf(spark, settings: dict[str, str]):
+    """Set each SQL conf of ``settings`` for the block and restore the old
+    values on exit, also when the block raises: a leaked setting would skew
+    every later user of the shared session."""
+    old = {key: spark.conf.get(key) for key in settings}
+    try:
+        for key, value in settings.items():
+            spark.conf.set(key, value)
+        yield
+    finally:
+        for key, value in old.items():
+            spark.conf.set(key, value)
+
+
+def conf_axes(spark) -> dict[str, dict[str, str]]:
+    """The two conf axes of the invariance contract: a second
+    shuffle-partition count, and AQE flipped from the session's setting."""
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    return {
+        "partitions": {"spark.sql.shuffle.partitions": "7"},
+        "aqe": {"spark.sql.adaptive.enabled": "false" if aqe == "true" else "true"},
+    }
+
+
 def assert_split_invariance(spark, sf_dir, tmp_path, query_fn, table):
     """Axis 1 of the three-axis invariance contract for a staged query:
     a 4-file re-layout of its input table must reproduce the frame
     bit-for-bit (canonical column/row order; exact value equality)."""
-    from talkinghead_datapipeline_spark.catalog import load_table
-
-    load_table(spark, sf_dir, table).repartition(4).write.parquet(
-        str(tmp_path / f"{table}.parquet")
-    )
+    write_split_layout(spark, sf_dir, str(tmp_path), [table])
     base = _canon_frame(query_fn(spark, sf_dir).toPandas())
     split = _canon_frame(query_fn(spark, str(tmp_path)).toPandas())
     assert base.equals(split), f"{table}: layout-dependent result"
 
 
 def assert_conf_axis_invariance(spark, sf_dir, query_fn):
-    """Axes 2+3: shuffle-partition count and AQE toggle must reproduce the
-    frame exactly — partial-merge order cannot move an exact pipeline.
-    Restores both confs even on failure (a leaked setting would skew every
-    later test in the shared session)."""
+    """Axes 2+3 together: a second shuffle-partition count under the other
+    AQE setting must reproduce the frame exactly — partial-merge order
+    cannot move an exact pipeline."""
     base = _canon_frame(query_fn(spark, sf_dir).toPandas())
-    sp = spark.conf.get("spark.sql.shuffle.partitions")
-    aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "7")
-        spark.conf.set(
-            "spark.sql.adaptive.enabled",
-            "false" if aqe == "true" else "true",
-        )
+    axes = conf_axes(spark)
+    with session_conf(spark, {**axes["partitions"], **axes["aqe"]}):
         alt = _canon_frame(query_fn(spark, sf_dir).toPandas())
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", sp)
-        spark.conf.set("spark.sql.adaptive.enabled", aqe)
     assert base.equals(alt), "conf-axis-dependent result"

@@ -12,10 +12,8 @@ import os
 from talkinghead_datapipeline_spark.plans.reference_compat import FRAME_BYTES
 from talkinghead_datapipeline_spark.run import run
 
-_REF_CONFIG = "/root/reference/configs/mead_a2en_vid2vid.json"
 
-
-def _write_clips(root: str, n_clips: int = 2, n_frames: int = 8) -> None:
+def _write_clips(root: str, n_clips: int, n_frames: int) -> None:
     import hashlib
 
     for i in range(n_clips):
@@ -30,56 +28,12 @@ def _write_clips(root: str, n_clips: int = 2, n_frames: int = 8) -> None:
             f.write(payload)
 
 
-def _graph_path(tmp_path) -> str:
-    if os.path.exists(_REF_CONFIG):
-        return _REF_CONFIG
-    graph = [
-        {"name": "VideoToImagesNode", "params": {"ext": ".jpg"}},
-        {"name": "VideoToWavNode", "params": {}},
-        {"name": "Wav2vecNode", "params": {}},
-        {"name": "FaceAlignmentNode", "params": {}},
-        {"name": "FixedBboxesNode", "params": {"scale": 1.25}},
-        {"name": "CropNode", "params": {"size_hw": [320, 320]}},
-        {"name": "EmocaNode", "params": {}},
-        {"name": "FlameNode", "params": {}},
-        {"name": "RenderingNode", "params": {}},
-        {"name": "A2enDatasetNode", "params": {}},
-        {"name": "Vid2vidDatasetNode", "params": {}},
-    ]
-    p = str(tmp_path / "graph.json")
-    with open(p, "w") as f:
-        json.dump(graph, f)
-    return p
-
-
-@pytest.mark.slow  # heavy tier (see conftest; VERDICT r14 #3)
-def test_cli_reference_config_end_to_end(spark, tmp_path):
-    media = str(tmp_path / "media")
-    out = str(tmp_path / "out")
-    _write_clips(media)
-    report = run(
-        spark,
-        _graph_path(tmp_path),
-        {"video": media},
-        out,
-        verbose=False,
-    )
-    by_name = {r["name"]: r for r in report}
-    assert by_name["a2en"]["status"] == "written"
-    assert by_name["a2en"]["total"] > 0
-    assert by_name["video"]["status"] == "input"
-    assert os.path.exists(os.path.join(out, "a2en.parquet"))
-    assert os.path.exists(os.path.join(out, "report.json"))
-    a2en = spark.read.parquet(os.path.join(out, "a2en.parquet"))
-    assert "clip_name" in a2en.columns
-
-
-def test_cli_test_run_smoke(spark, tmp_path):
+def test_cli_test_run_smoke(spark, tmp_path, mead_graphs):
     media = str(tmp_path / "media")
     _write_clips(media, n_clips=1, n_frames=4)
     report = run(
         spark,
-        _graph_path(tmp_path),
+        os.path.join(mead_graphs, "mead_a2en_vid2vid.json"),
         {"video": media},
         str(tmp_path / "out"),
         test_run=True,
@@ -177,7 +131,7 @@ _MODEL_TABLES = {
 }
 
 
-def test_run_feeds_each_model_node_once(spark, tmp_path, monkeypatch):
+def test_run_feeds_each_model_node_once(spark, tmp_path, monkeypatch, mead_graphs):
     # Each node's tables are written before the next node is built, so a
     # model node's batch_fn sees every row exactly once per run, and the
     # written tables equal those of one lazy whole-graph build.
@@ -185,22 +139,7 @@ def test_run_feeds_each_model_node_once(spark, tmp_path, monkeypatch):
     from talkinghead_datapipeline_spark.plans.reference_compat import run_reference_graph
     from talkinghead_datapipeline_spark.run import bind_input
 
-    graph = [
-        {"name": "VideoToImagesNode", "params": {}},
-        {"name": "VideoToWavNode", "params": {}},
-        {"name": "Wav2vecNode", "params": {}},
-        {"name": "FaceAlignmentNode", "params": {}},
-        {"name": "FixedBboxesNode", "params": {"scale": 1.25}},
-        {"name": "CropNode", "params": {"size_hw": [320, 320]}},
-        {"name": "EmocaNode", "params": {}},
-        {"name": "FlameNode", "params": {"n_shape": 100, "n_exp": 50}},
-        {"name": "RenderingNode", "params": {"image_size": 32}},
-        {"name": "A2enDatasetNode", "params": {}},
-        {"name": "Vid2vidDatasetNode", "params": {}},
-    ]
-    gp = str(tmp_path / "graph.json")
-    with open(gp, "w") as f:
-        json.dump(graph, f)
+    gp = os.path.join(mead_graphs, "mead_a2en_vid2vid_s32.json")
     media = str(tmp_path / "media")
     _write_clips(media, n_clips=2, n_frames=3)
 

@@ -66,7 +66,6 @@ def _sink_rows(spark, work: str) -> set[tuple]:
     }
 
 
-@pytest.mark.slow  # heavy tier (see conftest; VERDICT r14 #3)
 def test_merge_across_appends_equals_recompute(spark, work):
     b1 = [(1, 10), (1, 20), (2, 5)]
     b2 = [(1, 1), (3, 7)]

@@ -100,19 +100,15 @@ _NESTED_LOOP_OK = {
 }
 
 
-def test_nested_loop_whitelist_names_registered_queries():
-    """Every exemption names a query the plan gate actually runs."""
-    assert _NESTED_LOOP_OK <= set(_SPECS), sorted(_NESTED_LOOP_OK - set(_SPECS))
-
-
 @pytest.mark.parametrize("name", sorted(_SPECS))
-def test_no_accidental_nested_loop_or_cartesian(spark, sf_dir, name):
+def test_no_accidental_nested_loop_or_cartesian(query_builds, name):
     """Global plan-quality net: NO query may plan a CartesianProduct, and
     BroadcastNestedLoopJoin is allowed only where the broadcast side is
     provably tiny (whitelist above). A refactor that drops an equi-join
     key silently degenerates to one of these — at 100 TB that is the
     difference between a join and a job that never finishes."""
-    plan = _plan(spark, sf_dir, name)
+    df = query_builds.planned(name)
+    plan = df._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan, f"{name} plans a cartesian product"
     if name not in _NESTED_LOOP_OK:
         assert (
@@ -134,7 +130,7 @@ _HEAVY_FILTER_RE = __import__("re").compile(
 
 
 @pytest.mark.parametrize("name", sorted(_SPECS))
-def test_no_pushed_filter_reevaluates_heavy_projection(spark, sf_dir, name):
+def test_no_pushed_filter_reevaluates_heavy_projection(query_builds, name):
     """Global net for the round-7 pushdown pathology: when a query filters
     on a column built from heavy array/HOF expressions, PushDownPredicates
     alias-substitutes the column's WHOLE defining expression into the
@@ -146,7 +142,7 @@ def test_no_pushed_filter_reevaluates_heavy_projection(spark, sf_dir, name):
     OPTIMIZED plan whose Filter condition carries a large substituted HOF
     chain, so the pathology cannot silently return with a new query or a
     Catalyst upgrade."""
-    df = _SPECS[name].spark(spark, sf_dir)
+    df = query_builds.planned(name)
     plan = df._jdf.queryExecution().optimizedPlan().toString()
     offenders = [
         line.strip()[:120]
@@ -160,6 +156,14 @@ def test_no_pushed_filter_reevaluates_heavy_projection(spark, sf_dir, name):
             f"{name}: pushed filter re-evaluates a heavy projection "
             f"(wrap the projection in catalog.pushdown_barrier): {offenders}"
         )
+
+
+@pytest.mark.parametrize(
+    "whitelist", [_NESTED_LOOP_OK, _HEAVY_FILTER_OK], ids=["nested_loop", "heavy_filter"]
+)
+def test_nested_loop_whitelist_names_registered_queries(whitelist):
+    """Every exemption names a query the plan nets actually run."""
+    assert whitelist <= set(_SPECS), sorted(whitelist - set(_SPECS))
 
 
 def test_q6_filters_pushed_to_scan(spark, sf_dir):

@@ -2,9 +2,12 @@
 
 This is the local replica of the external correctness check (the contract
 in ``__spark_entry__.py``), and the only test that diffs a registered query
-on the shared fixture. Each case builds its query once, checks that every
-top-level output column is scalar, then compares row count, column names
-and values with the oracle SQL run on the same parquet tables. sf0.001 by
+on the shared fixture. Each case runs its query from one build, checks
+that every top-level output column is scalar, then compares row count,
+column names and values with the oracle SQL run on the same parquet
+tables. The build is the one the plan nets of ``test_plans.py`` already
+planned when they ran first in the session (``oracle_harness.QueryBuilds``),
+so a full run builds and plans each registered query once. sf0.001 by
 default; point SPARK_GRAFT_TEST_SF_DIR at the sf0.01 fixture for the
 certification scale. Other tests compare against DuckDB only on crafted
 inputs (``test_no_test_repeats_a_registry_compare`` keeps it that way).
@@ -46,21 +49,20 @@ def _assert_scalar_columns(name, df):
 
 
 @pytest.mark.parametrize("name", _WITH_ORACLE)
-def test_query_matches_oracle(spark, sf_dir, name):
-    spec = _SPECS[name]
-    df = spec.spark(spark, sf_dir)
+def test_query_matches_oracle(spark, sf_dir, query_builds, name):
+    df = query_builds.take(name)
     _assert_scalar_columns(name, df)
-    result = run_compare(spark, sf_dir, name, lambda *_: df, spec.oracle)
+    result = run_compare(spark, sf_dir, name, lambda *_: df, _SPECS[name].oracle)
     assert result.ok, str(result)
 
 
-def test_rows_only_queries_run(spark, sf_dir):
+def test_rows_only_queries_run(query_builds):
     """The query without an oracle (the one pinned exception of
     test_all_queries_oracled) must still return rows with a scalar-only
     schema; a plain loop, so an empty list is a trivial pass, not a
     parametrize skip."""
     for name in _ROWS_ONLY:
-        df = _SPECS[name].spark(spark, sf_dir)
+        df = query_builds.take(name)
         _assert_scalar_columns(name, df)
         assert df.count() > 0, name
 

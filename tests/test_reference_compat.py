@@ -1,6 +1,7 @@
-"""E2E: run the reference's OWN graph config (configs/mead_a2en_vid2vid.json)
-through the compat layer on synthetic clips — validating that a reference
-user's pipeline declaration executes on this engine end to end."""
+"""E2E: run the reference's own graph config (mead_a2en_vid2vid.json, as
+committed under perfbench/graphs) through the compat layer on synthetic
+clips — validating that a reference user's pipeline declaration executes
+on this engine end to end."""
 
 from __future__ import annotations
 
@@ -16,33 +17,14 @@ from talkinghead_datapipeline_spark.plans.reference_compat import (
     synthetic_clips,
 )
 
-# Heavy tier: skipped unless SPARK_GRAFT_SLOW=1 (see conftest; VERDICT r14 #3)
-pytestmark = pytest.mark.slow
 
-_REF_CONFIG = "/root/reference/configs/mead_a2en_vid2vid.json"
-
-
-def _graph():
-    if os.path.exists(_REF_CONFIG):
-        return _REF_CONFIG
-    # Self-contained fallback mirroring the published config's node list.
-    return [
-        {"name": "VideoToImagesNode", "params": {"ext": ".jpg", "num_jobs": 32}},
-        {"name": "VideoToWavNode", "params": {"num_jobs": 32}},
-        {"name": "Wav2vecNode", "params": {"device": "cuda:0"}},
-        {"name": "FaceAlignmentNode", "params": {"batch_size": 8}},
-        {"name": "FixedBboxesNode", "params": {"scale": 1.25}},
-        {"name": "CropNode", "params": {"size_hw": [320, 320]}},
-        {"name": "EmocaNode", "params": {"batch_size": 8}},
-        {"name": "FlameNode", "params": {"n_shape": 100, "n_exp": 50}},
-        {"name": "RenderingNode", "params": {"image_size": 320}},
-        {"name": "A2enDatasetNode", "params": {}},
-        {"name": "Vid2vidDatasetNode", "params": {"jpeg_quality": 95}},
-    ]
+@pytest.fixture(scope="module")
+def graph(mead_graphs) -> str:
+    return os.path.join(mead_graphs, "mead_a2en_vid2vid.json")
 
 
-def test_reference_config_parses():
-    specs = load_reference_graph(_graph())
+def test_reference_config_parses(graph):
+    specs = load_reference_graph(graph)
     assert [s["name"] for s in specs][:2] == ["VideoToImagesNode", "VideoToWavNode"]
 
 
@@ -51,10 +33,10 @@ def test_unknown_node_rejected():
         load_reference_graph([{"name": "NoSuchNode", "params": {}}])
 
 
-def test_mead_graph_end_to_end(spark):
+def test_mead_graph_end_to_end(spark, graph):
     n_clips, n_frames = 3, 6
     video = synthetic_clips(spark, n_clips=n_clips, n_frames=n_frames)
-    ctx = run_reference_graph(spark, _graph(), {"video": video})
+    ctx = run_reference_graph(spark, graph, {"video": video})
 
     # Every DataType table the graph promises exists and is populated.
     images = ctx.get("images")
@@ -99,10 +81,10 @@ def test_mead_graph_end_to_end(spark):
     assert {"crop", "render_uv", "render_normal"} <= set(vid2vid.columns)
 
 
-def test_mead_graph_deterministic(spark):
+def test_mead_graph_deterministic(spark, graph):
     video = synthetic_clips(spark, n_clips=2, n_frames=4)
-    a = run_reference_graph(spark, _graph(), {"video": video}).get("a2en")
-    b = run_reference_graph(spark, _graph(), {"video": video}).get("a2en")
+    a = run_reference_graph(spark, graph, {"video": video}).get("a2en")
+    b = run_reference_graph(spark, graph, {"video": video}).get("a2en")
     ra = sorted(a.collect(), key=lambda r: r.clip_name)
     rb = sorted(b.collect(), key=lambda r: r.clip_name)
     assert ra == rb

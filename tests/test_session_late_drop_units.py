@@ -24,15 +24,11 @@ from __future__ import annotations
 
 import tempfile
 
-import pytest
 from pyspark.sql import functions as F
 
 from talkinghead_datapipeline_spark.streaming.incremental import (
     replay_micro_batches,
 )
-
-# Heavy tier: skipped unless SPARK_GRAFT_SLOW=1 (see conftest; VERDICT r14 #3)
-pytestmark = pytest.mark.slow
 
 
 def _probe(spark, late_rows):

@@ -13,21 +13,25 @@ IDENTICAL frame (values after the convention rounding, not just rows).
 A failure here means a query's output depends on partial-agg order —
 driver-green today on one file, red on the real cluster layout.
 
-The representative sweeps are the heavy tier. The per-query tables below
-(``_SPLIT_CASES``, ``_CONF_CASES``) run by default: each re-lays out one
-input table, or re-runs under a second shuffle-partition count and the
-other AQE setting, and needs the frame bit-for-bit."""
+The per-query tables below (``_SPLIT_CASES``, ``_CONF_CASES``) each
+re-lay out one input table, or re-run under a second shuffle-partition
+count and the other AQE setting, and need the frame bit-for-bit. Each
+representative computes its base frame once and compares it with every
+axis on its own."""
 
 from __future__ import annotations
 
 import pytest
 
-from talkinghead_datapipeline_spark.catalog import TPCH_TABLES, load_table
+from talkinghead_datapipeline_spark.catalog import TPCH_TABLES
 from talkinghead_datapipeline_spark.queries import all_queries
 from tests.oracle_harness import (
     _canon_frame,
     assert_conf_axis_invariance,
     assert_split_invariance,
+    conf_axes,
+    session_conf,
+    write_split_layout,
 )
 
 _SPECS = all_queries()
@@ -76,8 +80,8 @@ _CONF_CASES = (
     "kaplan_meier_survival",
     "ks_two_sample_chars",
     "logrank_segment_survival",
-    pytest.param("mann_kendall_daily_trend", marks=pytest.mark.slow),
-    pytest.param("theil_sen_daily_slope", marks=pytest.mark.slow),
+    "mann_kendall_daily_trend",
+    "theil_sen_daily_slope",
     "pca_power_doc_features",
     "reliability_bins_lang",
     "n17_render_mask_zbuffer",
@@ -182,67 +186,28 @@ def test_query_conf_axis_invariance(spark, sf_dir, name):
 
 @pytest.fixture(scope="module")
 def split_sf_dir(spark, sf_dir, tmp_path_factory):
-    out = tmp_path_factory.mktemp("sf_split")
-    for name in TPCH_TABLES:
-        df = load_table(spark, sf_dir, name)
-        # Round-robin into 4 files: different per-file row sets AND a
-        # different within-file order than the source.
-        df.repartition(4).write.parquet(str(out / f"{name}.parquet"))
-    return str(out)
+    out = str(tmp_path_factory.mktemp("sf_split"))
+    write_split_layout(spark, sf_dir, out, TPCH_TABLES)
+    return out
 
 
-@pytest.mark.slow  # heavy tier (see conftest)
 @pytest.mark.parametrize("name", _REPRESENTATIVES)
-def test_result_is_invariant_to_input_splits(spark, sf_dir, split_sf_dir, name):
-    base = _canon_frame(_SPECS[name].spark(spark, sf_dir).toPandas())
-    split = _canon_frame(_SPECS[name].spark(spark, split_sf_dir).toPandas())
-    assert base.equals(split), (
-        f"{name}: output depends on input file layout\n"
-        f"single-file rows={len(base)} 4-split rows={len(split)}"
-    )
+def test_representative_is_invariant_on_each_axis(spark, sf_dir, split_sf_dir, name):
+    """One base frame, three axes, each on its own: every table laid out
+    as 4 files; a second shuffle-partition count (AQE re-plans partition
+    counts at runtime, so partial-aggregate merge order varies run to run
+    on a cluster even with a fixed layout); and AQE flipped (runtime
+    coalescing, skew-join splitting and broadcast demotion change merge
+    order and join shape). Each must reproduce the frame exactly."""
+    query = _SPECS[name].spark
 
+    def frame(data_dir):
+        return _canon_frame(query(spark, data_dir).toPandas())
 
-def _run_representatives(spark, sf_dir):
-    return {
-        name: _canon_frame(_SPECS[name].spark(spark, sf_dir).toPandas())
-        for name in _REPRESENTATIVES
-    }
-
-
-@pytest.mark.slow  # heavy tier (see conftest)
-def test_result_is_invariant_to_shuffle_partition_count(spark, sf_dir):
-    """The partner axis: AQE re-plans shuffle partition counts at runtime,
-    so partial-aggregate MERGE order varies run to run on a cluster even
-    with a fixed file layout. Re-running the representative set with
-    spark.sql.shuffle.partitions=7 (vs the session's core-count default)
-    must reproduce every frame exactly. Restores the conf even on failure
-    — a leaked setting would skew every later test in the shared session."""
-    default = spark.conf.get("spark.sql.shuffle.partitions")
-    base = _run_representatives(spark, sf_dir)
-    spark.conf.set("spark.sql.shuffle.partitions", "7")
-    try:
-        alt = _run_representatives(spark, sf_dir)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", default)
-    diverged = [n for n in _REPRESENTATIVES if not base[n].equals(alt[n])]
-    assert not diverged, f"shuffle-count-dependent results: {diverged}"
-
-
-@pytest.mark.slow  # heavy tier (see conftest)
-def test_result_is_invariant_to_aqe_toggle(spark, sf_dir):
-    """Third axis (round 8): AQE itself — runtime coalescing, skew-join
-    splitting, and broadcast demotion all change partial-merge order and
-    join physical shape, and a cluster flips between these plans run to
-    run. Toggling spark.sql.adaptive.enabled must reproduce every
-    representative frame exactly (probed clean over the full pinned set
-    before pinning). Restores the conf even on failure."""
-    default = spark.conf.get("spark.sql.adaptive.enabled")
-    flipped = "false" if default == "true" else "true"
-    base = _run_representatives(spark, sf_dir)
-    spark.conf.set("spark.sql.adaptive.enabled", flipped)
-    try:
-        alt = _run_representatives(spark, sf_dir)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", default)
-    diverged = [n for n in _REPRESENTATIVES if not base[n].equals(alt[n])]
-    assert not diverged, f"AQE-dependent results: {diverged}"
+    base = frame(sf_dir)
+    alt = {"split": frame(split_sf_dir)}
+    for axis, settings in conf_axes(spark).items():
+        with session_conf(spark, settings):
+            alt[axis] = frame(sf_dir)
+    diverged = [axis for axis, other in alt.items() if not base.equals(other)]
+    assert not diverged, f"{name}: result depends on {diverged}"

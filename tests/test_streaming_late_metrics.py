@@ -40,9 +40,6 @@ from talkinghead_datapipeline_spark.streaming.incremental import (
     replay_micro_batches,
 )
 
-# Heavy tier: skipped unless SPARK_GRAFT_SLOW=1 (see conftest; VERDICT r14 #3)
-pytestmark = pytest.mark.slow
-
 
 def _transform(stream):
     return (

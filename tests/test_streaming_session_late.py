@@ -21,9 +21,6 @@ from talkinghead_datapipeline_spark.streaming.incremental import (
     replay_micro_batches,
 )
 
-# Heavy tier: skipped unless SPARK_GRAFT_SLOW=1 (see conftest; VERDICT r14 #3)
-pytestmark = pytest.mark.slow
-
 
 def _run_crafted(spark, batches, gap="30 minutes", delay="30 minutes"):
     """Replay a session_window count over hand-written micro-batches.

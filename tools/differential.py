@@ -40,11 +40,17 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from talkinghead_datapipeline_spark.catalog import TPCH_TABLES, load_table
+from talkinghead_datapipeline_spark.catalog import TPCH_TABLES, load_table, table_path
 from talkinghead_datapipeline_spark.queries import all_queries
 from talkinghead_datapipeline_spark.session import get_spark
+from tests.oracle_harness import (
+    SPLIT_FILES,
+    conf_axes,
+    run_compare,
+    session_conf,
+    write_split_layout,
+)
 from tests.oracle_harness import _canon_frame as canon
-from tests.oracle_harness import run_compare
 
 # fact table -> columns to key-shift per replica (joins within the fact
 # family stay consistent; FK columns to x1 dims are NOT shifted)
@@ -56,14 +62,13 @@ SHIFT = {
     "embeddings": ["vec_id"],
 }
 OFFSET = 1_000_000_000
-SPLIT_FILES = 4
 INVARIANCE = ("split", "partitions", "aqe")
 
 
-def build_fixture(spark, sf_dir: str, out_dir: str, scheme: dict, make) -> None:
-    """Write ``make(df, name)`` of every table into ``out_dir``. Cached
-    tables are reused only while MANIFEST.json records the same source
-    sf_dir and scheme; otherwise they are rebuilt."""
+def build_fixture(spark, sf_dir: str, out_dir: str, scheme: dict, write) -> None:
+    """Call ``write(name)`` for every table of ``out_dir`` not yet built.
+    Cached tables are reused only while MANIFEST.json records the same
+    source sf_dir and scheme; otherwise they are rebuilt."""
     os.makedirs(out_dir, exist_ok=True)
     manifest_path = os.path.join(out_dir, "MANIFEST.json")
     manifest = {"sf_dir": os.path.abspath(sf_dir), "scheme": scheme}
@@ -74,7 +79,7 @@ def build_fixture(spark, sf_dir: str, out_dir: str, scheme: dict, make) -> None:
         stale = True
     if stale:
         for name in TPCH_TABLES:
-            dst = os.path.join(out_dir, f"{name}.parquet")
+            dst = table_path(out_dir, name)
             if os.path.isdir(dst):
                 shutil.rmtree(dst)
             elif os.path.exists(dst):
@@ -82,13 +87,12 @@ def build_fixture(spark, sf_dir: str, out_dir: str, scheme: dict, make) -> None:
         with open(manifest_path, "w") as fh:
             json.dump(manifest, fh, indent=1)
     for name in TPCH_TABLES:
-        dst = os.path.join(out_dir, f"{name}.parquet")
-        if not os.path.exists(dst):
-            make(load_table(spark, sf_dir, name), name).write.mode("overwrite").parquet(dst)
+        if not os.path.exists(table_path(out_dir, name)):
+            write(name)
             print(f"built {os.path.basename(out_dir)}/{name}", flush=True)
 
 
-def replicate(replicas: int):
+def replicate(spark, sf_dir: str, out_dir: str, replicas: int):
     from pyspark.sql import functions as F
 
     def make(df, name):
@@ -115,16 +119,10 @@ def replicate(replicas: int):
             return df.orderBy("ts", "event_id").coalesce(1)
         return df.repartition(8)
 
-    return make
+    def write(name):
+        make(load_table(spark, sf_dir, name), name).write.parquet(table_path(out_dir, name))
 
-
-def with_conf(spark, key: str, value: str, fn):
-    old = spark.conf.get(key)
-    spark.conf.set(key, value)
-    try:
-        return fn()
-    finally:
-        spark.conf.set(key, old)
+    return write
 
 
 def main() -> None:
@@ -146,24 +144,24 @@ def main() -> None:
         if r == "split":
             dirs[r] = os.path.join(args.work, "split")
             build_fixture(spark, args.sf_dir, dirs[r], {"files": SPLIT_FILES},
-                          lambda df, _: df.repartition(SPLIT_FILES))
+                          lambda name: write_split_layout(spark, args.sf_dir, dirs["split"], [name]))
         elif r[0] == "x":
             n = int(r[1:])
             dirs[r] = os.path.join(args.work, r)
             build_fixture(spark, args.sf_dir, dirs[r],
-                          {"shift": SHIFT, "offset": OFFSET, "replicas": n}, replicate(n))
+                          {"shift": SHIFT, "offset": OFFSET, "replicas": n},
+                          replicate(spark, args.sf_dir, dirs[r], n))
 
-    def frame(fn, sf_dir):
-        return canon(fn(spark, sf_dir).toPandas())
+    axes = conf_axes(spark)
 
-    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    def frame(fn, sf_dir, settings=None):
+        with session_conf(spark, settings or {}):
+            return canon(fn(spark, sf_dir).toPandas())
+
     variants = {
         "split": lambda fn: frame(fn, dirs["split"]),
-        "partitions": lambda fn: with_conf(
-            spark, "spark.sql.shuffle.partitions", "7", lambda: frame(fn, args.sf_dir)),
-        "aqe": lambda fn: with_conf(
-            spark, "spark.sql.adaptive.enabled", "false" if aqe == "true" else "true",
-            lambda: frame(fn, args.sf_dir)),
+        "partitions": lambda fn: frame(fn, args.sf_dir, axes["partitions"]),
+        "aqe": lambda fn: frame(fn, args.sf_dir, axes["aqe"]),
     }
 
     specs = {n: s for n, s in all_queries().items() if n.startswith(args.prefix)}
