@@ -97,6 +97,10 @@ class FlameLbsDecoder:
     flame.py:262-271). Bases are synthetic seeded draws — the MPG weights
     file is licensed and out of scope — so the math is exact while the
     numbers are reproducible; the real basis npz drops in field-for-field.
+    Every product is an ``np.einsum``, never a ``@``: no step goes through
+    BLAS, so the bits depend neither on the batch size nor on the kernel
+    the host's OpenBLAS picks for its CPU (an FMA kernel rounds a
+    multiply-add once, an SSE3 one twice).
 
     At rest pose every A_j is the identity, so the whole pipeline must
     reduce to the affine map ``rest_landmark_affine`` — which is exactly
@@ -136,7 +140,8 @@ class FlameLbsDecoder:
             [z, -d[:, 2], d[:, 1], d[:, 2], z, -d[:, 0], -d[:, 1], d[:, 0], z],
             axis=1,
         ).reshape(-1, 3, 3)
-        return np.eye(3)[None] + s * K + (1 - c) * (K @ K)
+        K2 = np.einsum("nxy,nyz->nxz", K, K)
+        return np.eye(3)[None] + s * K + (1 - c) * K2
 
     def _rigid_transform(self, R: np.ndarray, joints: np.ndarray) -> np.ndarray:
         """World transforms down the parent chain, relative to rest pose:
@@ -150,7 +155,9 @@ class FlameLbsDecoder:
         local[:, :, 3, 3] = 1.0
         world = [local[:, 0]]
         for j in range(1, J):
-            world.append(world[self.PARENTS[j]] @ local[:, j])
+            world.append(
+                np.einsum("bxy,byz->bxz", world[self.PARENTS[j]], local[:, j])
+            )
         A = np.stack(world, axis=1)
         A[:, :, :3, 3] -= np.einsum("bjxy,bjy->bjx", A[:, :, :3, :3], joints)
         return A
@@ -165,9 +172,12 @@ class FlameLbsDecoder:
 
         Batch-invariant: row i of the result is bit-equal to ``decode`` on
         row i, whatever B is, so a node may decode a whole pandas batch at
-        once without moving its outputs. That is why the pose correctives
-        are an einsum and not a ``@``: BLAS gemm picks its blocking, and so
-        its rounding, by B (``tests/test_flame_lbs.py`` fuzzes this)."""
+        once without moving its outputs. That is why every product here is
+        an einsum and not a ``@``: BLAS gemm picks its blocking, and so its
+        rounding, by B, and OpenBLAS picks its kernel (with or without fused
+        multiply-add) by the host's CPU. With no step in BLAS, the output
+        depends neither on the batch size nor on the host's OpenBLAS kernel
+        (``tests/test_flame_lbs.py`` checks both)."""
         B = shape.shape[0]
         betas = np.concatenate(
             [shape[:, : self.N_SHAPE], exp[:, : self.N_EXP]], axis=1
@@ -216,7 +226,7 @@ class FlameLbsDecoder:
         landmark[c] = base[c] + coefs[c] · betas — the oracle's literals."""
         corner_verts = self.faces[self.lmk_faces_idx[lmk]]
         b = self.lmk_bary[lmk]
-        base = b @ self.template[corner_verts]
+        base = np.einsum("f,fc->c", b, self.template[corner_verts])
         coefs = np.einsum("f,fck->ck", b, self.shapedirs[corner_verts])
         return base, coefs
 
@@ -249,9 +259,10 @@ class FlameLbsDecoder:
         full_pose[0] = np.asarray(pose, dtype=np.float64)[:3]
         full_pose[2] = np.asarray(pose, dtype=np.float64)[3:6]
         R = self._rodrigues(full_pose)  # (J,3,3) constants
-        pose_feature = (R[1:] - np.eye(3)[None]).reshape(1, -1)
+        pose_feature = (R[1:] - np.eye(3)[None]).reshape(-1)
         v_posed = v_shaped.copy()
-        v_posed[..., 0] += (pose_feature @ self.posedirs).reshape(V, 3)
+        correctives = np.einsum("p,pk->k", pose_feature, self.posedirs)
+        v_posed[..., 0] += correctives.reshape(V, 3)
 
         # Kinematic chain on (R const, t affine) rigid transforms.
         rel = joints.copy()
@@ -260,7 +271,7 @@ class FlameLbsDecoder:
         world_t = [rel[0]]  # (3, 1+nb)
         for j in range(1, J):
             p = self.PARENTS[j]
-            world_R.append(world_R[p] @ R[j])
+            world_R.append(np.einsum("xy,yz->xz", world_R[p], R[j]))
             world_t.append(np.einsum("xy,yk->xk", world_R[p], rel[j]) + world_t[p])
         A_R = np.stack(world_R)  # (J,3,3)
         A_t = np.stack(world_t)  # (J,3,1+nb)

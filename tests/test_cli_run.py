@@ -230,7 +230,7 @@ _MEAD_REF_DIGESTS = {
     "bboxes": "5735352f04ef5df35659c937119b0340",
     "crops": "333e686b9ffb3cb48cf98743b64c9961",
     "emoca_codes": "1660e96a9399cf6f6eb0b68ef134f213",
-    "flame_out": "2bdb2799811a2ffe18379e9fe49f7b48",
+    "flame_out": "e693f8ae301c734135d244293ed4be45",
     "renders": "09e809834c25f40c15c58e5f47092c1d",
     "a2en": "907a83eb1fada5cac34d4f6d181deeea",
     "vid2vid": "ba19aeb4c0bf96b8828bb1b1e21351a3",

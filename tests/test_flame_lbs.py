@@ -5,6 +5,10 @@ analytically — no torch or reference import, just geometry identities.
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+
 import numpy as np
 import pytest
 
@@ -110,3 +114,55 @@ def test_decode_batch_matches_single(dec):
             for i in range(B):
                 v, lm = dec.decode(shape[i], exp[i], None if p is None else p[i])
                 assert np.array_equal(vb[i], v) and np.array_equal(lb[i], lm), (B, with_pose, i)
+
+
+# Decodes 64 EMOCA-stub codes and writes the bytes of (verts, landmarks) to
+# argv[1]; prints the kernel the bundled OpenBLAS runs ("" if none is found).
+_KERNEL_CHILD = r"""
+import ctypes, glob, os, sys
+import numpy as np
+from talkinghead_datapipeline_spark.operators.models import (
+    EmocaEncoderStub, FlameLbsDecoder)
+
+libs = glob.glob(os.path.join(os.path.dirname(np.__file__), "..", "numpy.libs",
+                              "libopenblas*"))
+core = ""
+for name in ("openblas_get_corename64_", "openblas_get_corename"):
+    fn = getattr(ctypes.CDLL(libs[0]), name, None) if libs else None
+    if fn is not None:
+        fn.argtypes, fn.restype = [], ctypes.c_char_p
+        core = fn().decode()
+        break
+enc = EmocaEncoderStub()
+seeds = np.random.default_rng(20261019)
+codes = [enc.encode(seeds.bytes(16)) for _ in range(64)]
+shape, exp, pose = (np.stack([c[k] for c in codes]) for k in ("shape", "exp", "pose"))
+v, lm = FlameLbsDecoder().decode_batch(shape, exp, pose)
+with open(sys.argv[1], "wb") as f:
+    f.write(v.tobytes() + lm.tobytes())
+print(core)
+"""
+
+
+def test_decode_batch_same_bits_on_every_blas_kernel(tmp_path):
+    """decode_batch gives the same bytes whichever kernel OpenBLAS picks for
+    the host's CPU: an SSE3 kernel (Prescott) rounds a multiply-add twice,
+    an FMA kernel (Haswell) once, and a ``@`` left in the decoder would
+    tell the two apart."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = {}
+    for kernel in ("Prescott", "Haswell"):
+        path = tmp_path / kernel
+        done = subprocess.run(
+            [sys.executable, "-c", _KERNEL_CHILD, str(path)],
+            cwd=repo,
+            env={**os.environ, "OPENBLAS_CORETYPE": kernel},
+            capture_output=True,
+            text=True,
+            check=True,
+        )
+        got = done.stdout.strip()
+        if got != kernel:
+            pytest.skip(f"OPENBLAS_CORETYPE={kernel} ran OpenBLAS kernel {got!r}")
+        out[kernel] = path.read_bytes()
+    assert out["Prescott"] == out["Haswell"]
